@@ -1,17 +1,25 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  // Cross-query hygiene: `clearCache()` alone does not free
+  // localCheckpoint RDD blocks, so the dedup family's checkpointed
+  // signature RDDs stayed resident and inflated later measurements by
+  // 3-5x (dedup_jaccard_3gram 4.20 s in-suite vs 1.09 s isolated on
+  // identical code). Before every timed run: drop ALL persisted RDD
+  // blocks (covers caches and local checkpoints), then GC-quiesce so
+  // the timed region starts with a quiet heap. Runs outside the timed
+  // region, so its own cost never lands in a measurement.
+  private[graft] def quiesce(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(rdd => try rdd.unpersist(blocking = true) catch { case _: Throwable => () })
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = engine.Sessions.local(cpus.toInt)
     // Warm the session (codegen, parquet footer cache, JIT) so the first
     // measured query doesn't absorb fixed startup cost.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -36,20 +44,6 @@ object Bench {
     // the two fields plus the name-prefix rule fully determine every
     // query's run count.
     val runsHeavy = math.max(runs, 3)
-    // Cross-query hygiene (r5 verdict): `clearCache()` alone does not free
-    // localCheckpoint RDD blocks, so the dedup family's checkpointed
-    // signature RDDs stayed resident and inflated later measurements by
-    // 3-5x (dedup_jaccard_3gram 4.20 s in-suite vs 1.09 s isolated on
-    // identical code). Before every timed run: drop ALL persisted RDD
-    // blocks (covers caches and local checkpoints), then GC-quiesce so
-    // the timed region starts with a quiet heap. Runs outside the timed
-    // region, so its own cost never lands in a measurement.
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(rdd => try rdd.unpersist(blocking = true) catch { case _: Throwable => () })
-      System.gc()
-    }
     // Throwaway execution of one REAL query before any timing: the
     // generic warmup above doesn't touch the aggregate/shuffle codegen
     // paths, so the first timed query absorbed ~1.6 s of residual
@@ -58,21 +52,30 @@ object Bench {
     // the driver runs with SPARK_GRAFT_RUNS=1.
     selected.headOption.foreach { case (_, fn) =>
       try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
-      quiesce()
+      quiesce(spark)
     }
-    val results = selected.map { case (name, fn) =>
+    // A query that throws is never a measurement: it is named in the
+    // top-level `failed` array and left out of queries, spread and total.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val results = selected.flatMap { case (name, fn) =>
       // The dedup/ANN family is the most GC/cache-sensitive (checkpointed
       // signatures, broadcast candidate sets); give it one extra run so a
       // single perturbed execution can't define the reported minimum.
       val heavyFamily = name.startsWith("dedup_") || name.startsWith("ann_")
       val perQueryRuns = if (heavyFamily) math.max(runsHeavy, runs) else runs
-      val times = (1 to perQueryRuns).map { _ =>
-        quiesce()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
+      try {
+        val times = (1 to perQueryRuns).map { _ =>
+          quiesce(spark)
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        }
+        Some(name -> ((times.min, times.max)))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        None
       }
-      name -> ((times.min, times.max))
     }
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v._1) }
@@ -88,6 +91,7 @@ object Bench {
       "\"" + k + "\":" + fmt(if (v._1 > 0) v._2 / v._1 else 1.0)
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val failedField = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // ann_pq_build phase attribution (train vs encode) from the build's
     // driver-side receipt — a separate top-level field, NOT a queries
     // entry (its two phases are already inside ann_pq_build's total).
@@ -132,7 +136,7 @@ object Bench {
       round.map(r => s"bench_out_r$r$cpuSuffix.json") else None
     val mapField = benchMap.map(f => s""","bench_map":"$f"""").getOrElse("")
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"runs_heavy":$runsHeavy,"heavy_prefixes":["dedup_","ann_"],"queries":$qs,"spread":$spreads,"sf":"$sfDir"$buildSplit$mapField}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"runs_heavy":$runsHeavy,"heavy_prefixes":["dedup_","ann_"],"queries":$qs,"spread":$spreads,"failed":$failedField,"sf":"$sfDir"$buildSplit$mapField}"""
     spark.stop()
     // The full per-query line is >2 KB (150+ queries), so a 2000-char
     // stdout tail cannot hold it whole. Survival strategy:

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps formatted physical plans of EVERY declared query to a markdown
@@ -95,13 +94,7 @@ object Plans {
       if (args.length > 2 && args(2) == "headline") headline
       else if (args.length > 2) args(2).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = engine.Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb ++= s"# ${out.stripSuffix(".md")} — physical plans of headline queries ($sfDir, local)\n\n"

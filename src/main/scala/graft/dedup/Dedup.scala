@@ -60,28 +60,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Shingle sets with each shingle replaced by its xxhash64 — all
-    * downstream distinct/join/aggregate work runs on fixed-width longs
-    * instead of ~20-byte strings (cheaper shuffles, branchless
-    * comparisons). A 64-bit collision would take ~10¹⁰ distinct shingles
-    * to matter; counts are otherwise identical to the string form.
-    */
-  def shingleHashes(docs: DataFrame, n: Int = 3, dedup: Boolean = true): DataFrame = {
-    val words = col("__words")
-    val exploded = docs
-      .select(col("doc_id"), split(lower(col("text")), " ").as("__words"))
-      .filter(size(words) >= n)
-      .select(
-        col("doc_id"),
-        explode(
-          transform(words, (w, i) => {
-            val parts = w +: (1 until n).map(j => element_at(words, i + lit(j + 1)))
-            when(i <= size(words) - n, xxhash64(concat_ws(" ", parts: _*)))
-          })).as("shingle"))
-      .filter(col("shingle").isNotNull)
-    if (dedup) exploded.distinct() else exploded
-  }
-
   /** Exact n-gram Jaccard near-duplicate pairs via inverted shingle
     * index: join on shingle → shared counts → |A∩B|/(|A|+|B|−|A∩B|).
     * `maxShingleDocs` drops shingles occurring in more than that many
@@ -302,56 +280,11 @@ object Dedup {
           d => d >= 0L)).as("edit_dist"))
   }
 
-  /** MinHash signature: per doc, the minimum of k independent 64-bit
-    * hashes of its shingle set (xxhash64 seeded by the function index —
-    * codegen'd, no string materialization). One aggregation pass over
-    * the shingle index; signature size k is constant per doc. The
-    * signatures are internal (candidates are re-verified exactly), so
-    * the hash needs determinism, not engine portability.
-    */
-  def minhashSignatures(sh: DataFrame, k: Int): DataFrame = {
-    val aggs = (0 until k).map { i =>
-      min(xxhash64(lit(i), col("shingle"))).as(s"mh$i")
-    }
-    sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH banding: split the k-signature into `bands` bands of k/bands
-    * rows; docs colliding on any full band become candidate pairs.
-    * The groupBy-band self-join only materializes colliding pairs —
-    * this is the 100 TB-safe candidate generation.
-    */
-  def lshCandidatePairs(sig: DataFrame, k: Int, bands: Int): DataFrame = {
-    val rows = k / bands
-    // band key = xxhash64 of the band's signature slice: an 8-byte join
-    // key instead of a ~rows×20-char string — cheaper shuffle and
-    // comparison; a 64-bit collision only adds a candidate the exact
-    // verify pass discards
-    val bandCols = (0 until bands).map { b =>
-      xxhash64((lit(b) +: (b * rows until (b + 1) * rows).map(i => col(s"mh$i"))): _*)
-    }
-    // materialize once: the k-aggregate signature pipeline shuffles per
-    // side, and this variant's sig comes from a groupBy, so the sides
-    // are not exchange-reusable. Lazy localCheckpoint (cleaner-managed)
-    // instead of cache() so repeated calls don't pin cache entries.
-    val banded = sig.select(
-      col("doc_id"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "key")))
-      .localCheckpoint(eager = false)
-    // never broadcast a self-join of identical exploded sides (see
-    // lshCandidatePairsFromSig)
-    banded.as("a").hint("shuffle_merge")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-  }
-
   /** (band, key) explosion of an array signature — the shared banding
     * step of the self-join and cross-corpus LSH variants. 8-byte hashed
-    * band keys (see lshCandidatePairs); false candidates from 64-bit
-    * collisions are removed by exact verification.
+    * band keys (cheaper shuffle and comparison than the signature
+    * slice); false candidates from 64-bit collisions are removed by
+    * exact verification.
     */
   private def bandExplode(sig: DataFrame, k: Int, bands: Int): DataFrame = {
     val rows = k / bands
@@ -883,7 +816,7 @@ object Dedup {
       shardFps, Seq(bandIndex)) {
       val all = shardDirs.map(load).reduce(_ union _)
       // full mine reuses the published per-shard indexes for candidate
-      // generation (lshCandidatePairs over the flat band table), so
+      // generation (a band self-join over the flat band table), so
       // even the full path signature-hashes each shard exactly once —
       // at publish time
       val cand = bandsOf(shardDirs).as("a").hint("shuffle_merge")

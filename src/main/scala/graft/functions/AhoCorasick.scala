@@ -324,7 +324,6 @@ final class AcAutomaton(val patterns: Array[String], layout: Int)
     if (dfa ne null) shared + 4L * dfa.length else shared
   }
 
-  def nodeCount: Int = nNodes
   def isFlat: Boolean = dfa ne null
 }
 

@@ -533,14 +533,13 @@ case class BpeDecodeTokens(child: Expression, vocab: Seq[String])
   * interpreted aggregate() fold: training runs this once per word per
   * merge step over the vocabulary table.
   */
-case class BpeMergeApply(child: Expression, a: String, b: String,
-    merged: Option[String] = None)
+case class BpeMergeApply(child: Expression, a: String, b: String)
     extends UnaryExpression {
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.StringType, containsNull = false)
 
-  private def m: String = merged.getOrElse(a + b)
+  private def m: String = a + b
 
   override def nullSafeEval(v: Any): Any = {
     val in = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
@@ -568,13 +567,6 @@ object BpeMergeApply {
   def apply_merge(syms: Column, a: String, b: String): Column =
     org.apache.spark.sql.graftshim.exprToColumn(
       BpeMergeApply(org.apache.spark.sql.graftshim.columnToExpr(syms), a, b))
-
-  /** Merge with an explicit merged-symbol text — the WordPiece trainer
-    * strips the continuation marker (merged = a + b minus '##'). */
-  def apply_merge_as(syms: Column, a: String, b: String, m: String): Column =
-    org.apache.spark.sql.graftshim.exprToColumn(
-      BpeMergeApply(org.apache.spark.sql.graftshim.columnToExpr(syms), a, b,
-        Some(m)))
 
   /** Static so generated code can call it: left-to-right scan, merged
     * element never re-merges within the same step. */

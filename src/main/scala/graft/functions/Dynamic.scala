@@ -50,7 +50,6 @@ object DynamicUdf {
   }
 
   def registered: Set[String] = exprs.keySet.toSet
-  def unregister(name: String): Unit = exprs.remove(name)
 
   /** Escape hatch for logic SQL cannot express: a genuine Scala closure
     * registered into the session's function registry (usable from

@@ -82,10 +82,6 @@ object JsGesture {
       while (i < src.length && isIdent(src(i))) i += 1
       src.substring(s, i)
     }
-    def tryIdent(): Option[String] = {
-      ws()
-      if (i < src.length && isIdentStart(src(i))) Some(ident()) else None
-    }
     def stringLit(q: Char): String = {
       val sb = new StringBuilder
       i += 1

@@ -46,11 +46,6 @@ object DistinctAndFrequency {
     items.map(v => (v, cms.estimateCount(v))).toDF(column, "est_count")
   }
 
-  /** NIThresholdSketch: "more than 2^t distinct values?" gate. */
-  def distinctExceeds(df: DataFrame, column: String, threshold: Long): Boolean =
-    df.agg(approx_count_distinct(col(column)).as("d"))
-      .head().getLong(0) > threshold
-
   /** Exact heavy hitters over a column tuple: groupBy + HAVING count ≥
     * ε·N. One scan: the total N is the sum of the group counts, taken by
     * a window over the O(#groups) aggregate result (driver-sized frame —
@@ -125,11 +120,6 @@ object DistinctAndFrequency {
     broadcast(cand).join(counts, cols, "left")
       .select(cols.map(col) :+ coalesce(col("cnt"), lit(0L)).as("cnt"): _*)
   }
-
-  /** SampleDistinctRowsSketch: uniform sample of the distinct rows. */
-  def sampleDistinctRows(df: DataFrame, cols: Seq[String], fraction: Double,
-      seed: Long = 42L): DataFrame =
-    df.select(cols.map(col): _*).distinct().sample(withReplacement = false, fraction, seed)
 
   /** Exact distinct values of a small-cardinality tuple
     * (DistinctStringsSketch — bounded result).

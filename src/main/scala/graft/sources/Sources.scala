@@ -212,9 +212,6 @@ object Sources {
   /** Newline-delimited JSON (JsonFileLoader). */
   def readJson(spark: SparkSession, path: String): DataFrame = spark.read.json(path)
 
-  def readOrc(spark: SparkSession, path: String): DataFrame = spark.read.orc(path)
-  def readParquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
-
   /** Grok-ish log loader (storage/GrokLogs.java): text lines + regex
     * with named groups → typed columns. The pattern runs distributed per
     * line (regexp_extract is codegen'd).
@@ -230,10 +227,6 @@ object Sources {
   /** SaveAsFileSketch equivalents: distributed per-partition writers. */
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   /** FileSizeSketch (sketches/FileSizeSketch.java): count + total bytes
     * of the files a glob would load — a driver-side metadata operation,
@@ -245,15 +238,6 @@ object Sources {
     val statuses = Option(fs.globStatus(path)).getOrElse(Array.empty)
     (statuses.length.toLong, statuses.map(_.getLen).sum)
   }
-
-  /** JDBC table load (LoadDatabaseTableMap / JdbcDatabase.java) — thin
-    * wrapper; Spark's DSv2 JDBC already pushes filters/aggregates down,
-    * covering the reference's federated histogram/distinct-count mode
-    * for supported dialects. Untestable in this offline environment.
-    */
-  def readJdbc(spark: SparkSession, url: String, table: String,
-      props: java.util.Properties = new java.util.Properties()): DataFrame =
-    spark.read.jdbc(url, table, props)
 
   /** Fixed scratch directory per purpose (overwritten on reuse) — the
     * round-trip helpers run once per bench iteration, so per-invocation

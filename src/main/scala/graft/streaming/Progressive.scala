@@ -1,39 +1,22 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 /** Progressive result refinement — the reference's signature interaction
   * model (dataset/api/PartialResult.java, ParallelDataSet.java:133-173:
   * every sketch streams monotonically improving partials to the UI).
   *
-  * Spark translation: tag rows with spark_partition_id(), run the same
-  * aggregation over growing partition prefixes, and emit each partial.
-  * Because all our aggregations are monoid-shaped (partial+final
-  * HashAggregate), each step is a correct partial result and the last
-  * step equals the one-shot answer. Cancellation = cancelJobGroup.
+  * Spark translation: aggregate growing ranges of partitions (each
+  * partition exactly once), merge the per-partition buffers into a
+  * running monoid accumulator, and emit each partial. Because the
+  * aggregations are monoid-shaped, each step is a correct partial
+  * result and the last step equals the one-shot answer. Cancellation =
+  * cancelJobGroup.
   */
 object Progressive {
 
   final case class Partial[T](fractionDone: Double, value: T)
-
-  /** Run `agg` over increasing partition prefixes in `steps` chunks,
-    * invoking `emit` with each partial. Returns the final full result.
-    */
-  def run(df: DataFrame, steps: Int)(
-      agg: DataFrame => DataFrame)(
-      emit: Partial[Array[org.apache.spark.sql.Row]] => Unit): Array[org.apache.spark.sql.Row] = {
-    val nParts = df.rdd.getNumPartitions
-    val tagged = df.withColumn("__pid", spark_partition_id())
-    val cuts = (1 to steps).map(i => math.max(1, nParts * i / steps)).distinct
-    var last: Array[org.apache.spark.sql.Row] = Array.empty
-    cuts.foreach { cut =>
-      last = agg(tagged.filter(col("__pid") < cut).drop("__pid")).collect()
-      emit(Partial(cut.toDouble / nParts, last))
-    }
-    last
-  }
 
   /** True incremental progressive execution — the faithful analog of the
     * reference's sketch protocol (ISketch.create per leaf + monoid add up
@@ -41,9 +24,9 @@ object Progressive {
     * partition is aggregated exactly ONCE via `runJob` over partition
     * ranges, per-partition buffers are merged into a running monoid
     * accumulator, and a partial is emitted after each chunk. Cumulative
-    * cost = one full pass over the data (unlike `run`, which re-reads
-    * each prefix), so progressive mode costs the same as one-shot mode
-    * plus `steps` job launches.
+    * cost = one full pass over the data (never a re-read of a prefix),
+    * so progressive mode costs the same as one-shot mode plus `steps`
+    * job launches.
     *
     * `zero` is a thunk so mutable buffers are never shared across
     * partitions; `seqOp`/`merge` mirror ISketch.increment/add.

@@ -1330,7 +1330,7 @@ object TextAnalysis {
   def winnowPairs(docs: DataFrame, k: Int = 4, w: Int = 5,
       maxDf: Int = 1000): DataFrame = {
     // three consumers (df-cut agg + both self-join sides): materialize
-    // the exploded print list once (the lshCandidatePairs precedent)
+    // the exploded print list once
     val e = winnowFingerprints(docs, k, w)
       .select(col("doc_id"), explode(col("fps")).as("fp"))
       .localCheckpoint(eager = false)
@@ -1851,6 +1851,29 @@ object TextAnalysis {
     transform(sequence(lit(1), size(ws) - lit(w - 1)),
       i => xxhash64(slice(ws, i, lit(w))))
 
+  /** Keys of `df` that occur in ≥ `minDocs` distinct documents, with
+    * their keeper (the lowest doc_id): `(key, __keeper)`. The shared
+    * detection step of the dup-span and dup-line family. For
+    * `minDocs == 2`, "≥2 distinct docs" ⇔ min(doc_id) ≠ max(doc_id):
+    * plain min/max partial-aggregate map-side into ONE exchange of
+    * (key, min, max) partials, where count_distinct plans as TWO — the
+    * first shipping the whole (key, doc_id)-deduped index (the q21
+    * min≠max precedent; doc_id is non-null, so the predicates are
+    * equivalent). Other thresholds keep the exact distinct count.
+    */
+  private def dupKeys(df: DataFrame, key: String, minDocs: Int = 2): DataFrame = {
+    val byKey = df.groupBy(col(key))
+    val dup =
+      if (minDocs == 2)
+        byKey.agg(min(col("doc_id")).as("__keeper"), max(col("doc_id")).as("__dmax"))
+          .filter(col("__keeper") =!= col("__dmax"))
+      else
+        byKey.agg(count_distinct(col("doc_id")).as("__nd"),
+            min(col("doc_id")).as("__keeper"))
+          .filter(col("__nd") >= minDocs)
+    dup.select(col(key), col("__keeper"))
+  }
+
   def dupPassages(docs: DataFrame, w: Int = 5): DataFrame = {
     // project the token array to an attribute BEFORE the window lambda:
     // lambda bodies get no common-subexpression elimination, so
@@ -1864,19 +1887,8 @@ object TextAnalysis {
     // removeDupSpans' grams)
     val perDoc = pre.select(col("doc_id"), explode(windows).as("ghash"))
       .localCheckpoint(eager = false)
-    // "occurs in ≥2 distinct docs" ⇔ min(doc_id) ≠ max(doc_id): plain
-    // min/max partial-aggregate map-side into ONE exchange of (ghash,
-    // min, max) partials, where count_distinct planned as TWO exchanges
-    // — the first shipping the whole (ghash, doc_id)-deduped gram index
-    // (the q21 min≠max precedent; doc_id is non-null, so the predicates
-    // are equivalent and the surviving ghash set is identical)
-    val dupHashes = perDoc
-      .groupBy(col("ghash"))
-      .agg(min(col("doc_id")).as("__d0"), max(col("doc_id")).as("__d1"))
-      .filter(col("__d0") =!= col("__d1"))
-      .select(col("ghash"))
     perDoc
-      .join(dupHashes, Seq("ghash"), "left_semi")
+      .join(dupKeys(perDoc, "ghash"), Seq("ghash"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_dup_windows"))
       .join(pre
         .select(col("doc_id"), (size(ws) - lit(w - 1)).cast("long").as("n_windows")),
@@ -1930,17 +1942,9 @@ object TextAnalysis {
       .select(col("doc_id"), posexplode(windows))
       .toDF("doc_id", "pos0", "ghash")
       .localCheckpoint(eager = false)
-    // ≥2 distinct docs ⇔ min ≠ max (the dupPassages rewrite): one
-    // partial-aggregated exchange instead of count_distinct's two, and
-    // the keeper IS the min — no extra aggregate
-    val dup = grams
-      .groupBy(col("ghash"))
-      .agg(min(col("doc_id")).as("__keeper"), max(col("doc_id")).as("__dmax"))
-      .filter(col("__keeper") =!= col("__dmax"))
-      .select(col("ghash"), col("__keeper"))
     // 1-based start positions of windows to cut, per non-keeper document
     val starts = grams
-      .join(dup, Seq("ghash"))
+      .join(dupKeys(grams, "ghash"), Seq("ghash"))
       .filter(col("doc_id") =!= col("__keeper"))
       .groupBy(col("doc_id"))
       .agg(collect_list(col("pos0") + lit(1)).as("__ps"))
@@ -2017,15 +2021,8 @@ object TextAnalysis {
         TokenGramHashes(graftshim.columnToExpr(col("text")), w))))
       .toDF("doc_id", "pos0", "gh")
       .localCheckpoint(eager = false)
-    // ≥2 distinct docs ⇔ min ≠ max (the dupPassages rewrite): one
-    // partial-aggregated exchange instead of count_distinct's two
-    val dup = grams
-      .groupBy(col("gh"))
-      .agg(min(col("doc_id")).as("__d0"), max(col("doc_id")).as("__d1"))
-      .filter(col("__d0") =!= col("__d1"))
-      .select(col("gh"))
     val starts = grams
-      .join(dup, Seq("gh"), "left_semi")
+      .join(dupKeys(grams, "gh"), Seq("gh"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(collect_list(col("pos0") + lit(1)).as("__ps"))
     // merge overlapping/touching cut windows into disjoint maximal
@@ -2112,13 +2109,7 @@ object TextAnalysis {
           TokenGramHashes(graftshim.columnToExpr(col("text")), width))))
         .toDF("doc_id", "pos0", "gh")
         .localCheckpoint(eager = false)
-      // ≥2 distinct docs ⇔ min ≠ max (the dupPassages rewrite) — ×3
-      // tiers, so this saves an exchange per tier
-      val dup = grams.groupBy(col("gh"))
-        .agg(min(col("doc_id")).as("__d0"), max(col("doc_id")).as("__d1"))
-        .filter(col("__d0") =!= col("__d1"))
-        .select(col("gh"))
-      grams.join(dup, Seq("gh"), "left_semi")
+      grams.join(dupKeys(grams, "gh"), Seq("gh"), "left_semi")
         .groupBy(col("doc_id"))
         .agg(array_sort(collect_list(col("pos0") + lit(1))).as(out))
     }
@@ -3328,21 +3319,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("x.p").as("p"),
         struct(col("x.h1").as("h1"), col("x.h2").as("h2")).as("lh"))
       .localCheckpoint(eager = false)
-    // minDocs == 2 (every declared caller): ≥2 distinct docs ⇔ min ≠
-    // max — one partial-aggregated exchange instead of count_distinct's
-    // two; other thresholds keep the exact distinct count
-    val dup = (if (minDocs == 2)
-        lines.groupBy(col("lh"))
-          .agg(min(col("doc_id")).as("__keeper"),
-            max(col("doc_id")).as("__dmax"))
-          .filter(col("__keeper") =!= col("__dmax"))
-      else
-        lines.groupBy(col("lh"))
-          .agg(count_distinct(col("doc_id")).as("__nd"),
-            min(col("doc_id")).as("__keeper"))
-          .filter(col("__nd") >= minDocs))
-      .select(col("lh"), col("__keeper"))
-    val cuts = lines.join(dup, Seq("lh"))
+    val cuts = lines.join(dupKeys(lines, "lh", minDocs), Seq("lh"))
       .filter(col("doc_id") =!= col("__keeper"))
       .groupBy(col("doc_id")).agg(collect_list(col("p")).as("__ps"))
     val ps = coalesce(col("__ps"), array().cast("array<int>"))

@@ -899,6 +899,21 @@ class PipelineSpec extends SparkSpec {
     assert(b(0).getLong(1) == 3L && b(0).getLong(2) == 4L && b(0).getLong(3) == 0L)
   }
 
+  test("line dedup minDocs=3: distinct-doc threshold, not occurrence count") {
+    val d = docsDF(Seq(
+      "tri\npair\nunique zero", // doc0: keeper of 'tri' and 'pair'
+      "tri\npair",               // doc1: loses 'tri' (3 docs), keeps 'pair' (2 docs)
+      "tri\ntri\nunique two",   // doc2: both copies of 'tri' go
+      "rep\nrep\nrep"))         // doc3: 3 occurrences but 1 doc → kept
+    val r = TextAnalysis.removeDupLines(d, 3).orderBy("doc_id").collect()
+    assert(r.map(_.getString(3)).toSeq ==
+      Seq("tri\npair\nunique zero", "pair", "unique two", "rep\nrep\nrep"))
+    assert(r.map(_.getLong(2)).toSeq == Seq(3L, 1L, 1L, 3L))
+    // the same corpus at the default threshold also cuts doc1's 'pair'
+    val r2 = TextAnalysis.removeDupLines(d, 2).orderBy("doc_id").collect()
+    assert(r2(1).getString(3) == "" && r2(3).getString(3) == "rep\nrep\nrep")
+  }
+
   test("boilerplate state merges exactly across disjoint shards, any fold order") {
     val d = docsDF(Seq(
       "boiler\nunique zero\nboiler",

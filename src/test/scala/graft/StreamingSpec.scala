@@ -165,15 +165,6 @@ class StreamingSpec extends SparkSpec {
     assert(st.forall(r => r.getLong(1) >= 1 && r.getLong(1) <= r.getLong(2)))
   }
 
-  test("progressive partials converge to the one-shot result") {
-    val li = Tables.lineitem(spark, sf).repartition(8)
-    var partials = List.empty[Double]
-    val fin = Progressive.run(li, 4)(df => df.agg(count(lit(1))))(p =>
-      partials ::= p.fractionDone)
-    assert(partials.head == 1.0)
-    assert(fin.head.getLong(0) == li.count())
-  }
-
   test("incremental progressive: one pass, monotone partials, exact final") {
     val li = Tables.lineitem(spark, sf).repartition(8)
     val expected = li.groupBy("l_returnflag").count().collect()
