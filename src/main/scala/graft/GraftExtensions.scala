@@ -5,26 +5,24 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{FloatVecDot, FloatVecNorm, SimHash60}
 
-/** SparkSessionExtensions registering the engine's custom Catalyst
-  * pieces for any session configured with them: expressions as SQL
-  * functions (`spark.sql("SELECT vec_dot(a, b) ...")`), the GroupTopK
-  * planner strategy, and the IntervalHistogram rewrite rule:
+/** SparkSessionExtensions registering the engine's custom expressions
+  * as SQL functions (`spark.sql("SELECT vec_dot(a, b) ...")`) for any
+  * session configured with them:
   *
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions) ...
   * // or: spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * (The DataFrame-level APIs in graft.plans also self-inject via
-  * ExperimentalMethods, so they work without session configuration.)
+  * The GroupTopK planner strategy is not registered here: its logical
+  * node is only built by `graft.plans.GroupTopK.groupTopK`, which
+  * injects the strategy into the session at call time.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => graft.plans.GroupTopKStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.IntervalHistogramRule)
     ext.injectFunction((
       new FunctionIdentifier("vec_dot"),
       info("vec_dot", "vec_dot(a, b) - dot product of two float arrays"),

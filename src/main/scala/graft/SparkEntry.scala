@@ -2725,9 +2725,6 @@ object SparkEntry {
     "interval_hist" -> ((s, d) =>
       Intervals.histogram(li(s, d),
         Intervals.make(col("l_discount"), col("l_tax")), 0.0, 0.25, 10)),
-    "interval_hist_plan" -> ((s, d) =>
-      graft.plans.IntervalHistogram.histogram(
-        li(s, d), "l_discount", "l_tax", 0.0, 0.25, 10)),
     "col_date_roundtrip" -> ((s, d) =>
       li(s, d).select(col("l_orderkey"), col("l_linenumber"),
         to_timestamp(date_format(col("l_shipdate"), "yyyy-MM-dd"), "yyyy-MM-dd")
@@ -3775,10 +3772,6 @@ object SparkEntry {
       graft.ann.PqIndex.foldedIndexServe(s, name, shards,
         Seq(0L, 1L, 2L, 3L, 4L), 10, nprobe = 6)
     }),
-    "ann_topk_agg" -> ((s, d) =>
-      graft.ann.Similarity.bruteForceTopKAgg(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10)),
-    "ann_topk_plan" -> ((s, d) =>
-      graft.ann.Similarity.bruteForceTopKPlan(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10)),
     // search over the int8 codes: integer-exact scores, so fully oracled
     "ann_topk_quantized" -> ((s, d) =>
       graft.ann.Similarity.quantizedTopK(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10)),
@@ -6763,14 +6756,6 @@ object SparkEntry {
         |  FROM lineitem
         |  WHERE NOT (GREATEST(l_discount, l_tax) < 0.0 OR LEAST(l_discount, l_tax) > 0.25))
         |GROUP BY 1""".stripMargin,
-    "interval_hist_plan" ->
-      """SELECT bucket, count(*) AS cnt FROM (
-        |  SELECT unnest(generate_series(
-        |    LEAST(CAST(FLOOR((GREATEST(LEAST(l_discount, l_tax), 0.0) - 0.0) / ((0.25 - 0.0) / 10.0)) AS INT), 9),
-        |    LEAST(CAST(FLOOR((LEAST(GREATEST(l_discount, l_tax), 0.25) - 0.0) / ((0.25 - 0.0) / 10.0)) AS INT), 9))) AS bucket
-        |  FROM lineitem
-        |  WHERE NOT (GREATEST(l_discount, l_tax) < 0.0 OR LEAST(l_discount, l_tax) > 0.25))
-        |GROUP BY 1""".stripMargin,
     "col_date_roundtrip" ->
       """SELECT l_orderkey, l_linenumber,
         |strptime(strftime(CAST(l_shipdate AS TIMESTAMP), '%Y-%m-%d'), '%Y-%m-%d') AS ship_day
@@ -8146,15 +8131,6 @@ object SparkEntry {
         |SELECT anchor_id, pos_id, round(pc, 4) AS pos_cos,
         |  neg_id, round(nc, 4) AS neg_cos, round(pc - nc, 4) AS margin
         |FROM p JOIN n USING (anchor_id)""".stripMargin,
-    "ann_topk_agg" ->
-      """SELECT query_id, rank, neighbor_id, cos FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS cos,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS INT) AS rank
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-        |  WHERE a.vec_id IN (0, 1, 2, 3, 4))
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
     // build receipt: corpus size under the index (zero vectors drop in
     // normalization) + the declared compression geometry
     "ann_pq_build" ->
@@ -8164,15 +8140,6 @@ object SparkEntry {
     "nextk_start_position" ->
       """SELECT count(*) AS start_position FROM lineitem
         |WHERE NOT ((l_returnflag, l_linestatus) >= ('N', 'F'))""".stripMargin,
-    "ann_topk_plan" ->
-      """SELECT query_id, rank, neighbor_id, cos FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS cos,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS INT) AS rank
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-        |  WHERE a.vec_id IN (0, 1, 2, 3, 4))
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
     // exact 1e-4 integer-grid ratios (num*10^4 // den), widened to double
     // once — mirrors TextAnalysis.quality's divE4 bit-for-bit
     "text_rarity" ->

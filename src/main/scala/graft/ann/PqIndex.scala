@@ -173,11 +173,7 @@ object PqIndex {
       .join(broadcast(q), "query_id")
       .select(col("query_id"), col("neighbor_id"),
         Similarity.dot(col("q_emb"), col("embedding")).as("cos"))
-    graft.plans.GroupTopK.groupTopK(exact, Seq("query_id"),
-        Seq(("cos", false), ("neighbor_id", true)), k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    Similarity.rankNeighbors(exact, k)
   }
 
   /** Build the index under `dir`: train coarse centroids + PQ

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the brute-force path broadcasts the (small) query set
   * and scans the corpus once — embarrassingly parallel, no shuffle of
-  * the corpus; top-k per query is a windowed rank over per-query
-  * candidate rows (bounded by corpus size per query; at real scale the
+  * the corpus; top-k per query is bounded per-partition heaps over the
+  * per-query candidate rows ([[rankNeighbors]]; at real scale the
   * LSH-bucketed path cuts candidates first, same top-k tail).
   * All vector math is higher-order array expressions in double — no
   * UDFs, deterministic, oracle-reproducible.
@@ -31,10 +31,6 @@ object Similarity {
   def cosinePre(a: Column, b: Column, na: Column, nb: Column): Column =
     dot(a, b) / (na * nb)
 
-  /** Brute-force exact top-k cosine neighbors for a query-id set.
-    * Queries are broadcast; per-query ranking via row_number window
-    * (partitions = queries, so parallelism = #queries × corpus splits).
-    */
   /** Embedding-space domain scoring (the embedding twin of the text
     * DSIR weights): cosine of every vector to the TARGET label group's
     * centroid — select/route data by how close it sits to a curated
@@ -97,6 +93,28 @@ object Similarity {
       .agg(count(lit(1)).as("n_hits"), max(col("__cos")).as("max_cos"))
   }
 
+  /** Per-query top-k of a scored neighbour frame `(query_id,
+    * neighbor_id, cos)`: cos descending, ties to the lower neighbor_id.
+    * Every ANN path ranks here, through the GroupTopK operator: bounded
+    * per-partition heaps below the exchange ship at most k rows per
+    * (partition, query), so no query's full candidate list is shuffled
+    * or sorted. Output `(query_id, rank, neighbor_id, cos)` with cos
+    * rounded to 4 places, ordered by (query_id, rank). `cos` must be
+    * non-null (GroupTopK ranks a null score first); every caller
+    * scores non-null vectors, and a zero norm throws under ANSI
+    * division rather than yielding null.
+    */
+  def rankNeighbors(scored: DataFrame, k: Int): DataFrame =
+    graft.plans.GroupTopK.groupTopK(scored, Seq("query_id"),
+        Seq(("cos", false), ("neighbor_id", true)), k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        round(col("cos"), 4).as("cos"))
+      .orderBy(col("query_id"), col("rank"))
+
+  /** Brute-force exact top-k cosine neighbors for a query-id set:
+    * queries are broadcast and the corpus is scanned once, with no
+    * shuffle of the corpus itself.
+    */
   def bruteForceTopK(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     val q = emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -104,15 +122,7 @@ object Similarity {
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("q_emb"), col("embedding")).as("cos"))
-    scored
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    rankNeighbors(scored, k)
   }
 
   /** k-center coreset selection (farthest-point greedy — Gonzalez
@@ -304,11 +314,7 @@ object Similarity {
     val scored = emb.join(broadcast(q), col("label") =!= col("q_label"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("q_emb"), col("embedding")).as("cos"))
-    graft.functions.TopKByKey.topKPerKey(scored, "query_id", "cos",
-        "neighbor_id", k)
-      .select(col("key").as("query_id"), col("rank"),
-        col("id").as("neighbor_id"), round(col("score"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    rankNeighbors(scored, k)
   }
 
   /** Triplet mining — assemble (anchor, positive, negative) training
@@ -344,40 +350,6 @@ object Similarity {
         round(col("pos_cos"), 4).as("pos_cos"),
         col("neg_id"), round(col("neg_cos"), 4).as("neg_cos"),
         round(col("pos_cos") - col("neg_cos"), 4).as("margin"))
-  }
-
-  /** bruteForceTopK with the bounded-heap aggregator instead of a
-    * window: identical output, but each partition ships at most k
-    * candidates per query to the shuffle instead of sorting every
-    * query's full candidate list (see functions.TopKByKey).
-    */
-  def bruteForceTopKAgg(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val q = emb.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    graft.functions.TopKByKey.topKPerKey(scored, "query_id", "cos", "neighbor_id", k)
-      .select(col("key").as("query_id"), col("rank"),
-        col("id").as("neighbor_id"), round(col("score"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** bruteForceTopK through the GroupTopK custom operator (graft.plans):
-    * bounded per-partition heaps below the exchange — the plan the
-    * reference's MonoidTopK dataflow corresponds to.
-    */
-  def bruteForceTopKPlan(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val q = emb.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"))
-    graft.plans.GroupTopK.groupTopK(scored, Seq("query_id"),
-        Seq(("cos", false), ("neighbor_id", true)), k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** Hyperplane count that holds expected bucket occupancy ~flat as the
@@ -450,15 +422,7 @@ object Similarity {
         col("bucket") === col("q_bucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("q_emb"), col("embedding")).as("cos"))
-    scored
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    rankNeighbors(scored, k)
   }
 
   // ── product quantization (Jégou, Douze, Schmid 2011) ───────────────
@@ -935,15 +899,7 @@ object Similarity {
         col("cell") === col("q_cell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("q_emb"), col("embedding")).as("cos"))
-    scored
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    rankNeighbors(scored, k)
   }
 
   /** Embedding-cosine near-duplicate pairs above a threshold. Exact
@@ -1157,11 +1113,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (vec_dot_int(col("q_emb"), col("qe")) /
           (vec_norm_int(col("q_emb")) * vec_norm_int(col("qe")))).as("cos"))
-    graft.plans.GroupTopK.groupTopK(scored, Seq("query_id"),
-        Seq(("cos", false), ("neighbor_id", true)), k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-      .orderBy(col("query_id"), col("rank"))
+    rankNeighbors(scored, k)
   }
 
   /** Quantization report per vector: the scale plus summary stats of the

@@ -3614,11 +3614,10 @@ object TextAnalysis {
   /** Per-source document capping (the FineWeb/C4 per-host quota): keep
     * only the K highest-quality documents of each source, ranked on
     * the exact 1e-4 quality grid with doc_id-ascending ties. Runs on
-    * the bounded-heap per-key aggregator
-    * ([[graft.functions.TopKByKey]]): map-side partials ship at most K
-    * rows per (partition, key) to the shuffle — the window/row_number
-    * formulation sorts every key's FULL candidate set, the thing that
-    * dies first at 100 TB.
+    * the GroupTopK operator ([[graft.plans.GroupTopK]]): map-side
+    * heaps ship at most K rows per (partition, key) to the shuffle —
+    * the window/row_number formulation sorts every key's FULL
+    * candidate set, the thing that dies first at 100 TB.
     */
   def sourceCap(docs: DataFrame, k: Int): DataFrame = {
     val q = quality(docs).select(col("doc_id"),
@@ -3626,10 +3625,10 @@ object TextAnalysis {
       // round(·*10000) recovers the integer grid value exactly
       round(col("quality_score") * 10000).cast("long").as("qe4"))
     val scored = docs.select(col("doc_id"), col("source")).join(q, Seq("doc_id"))
-    graft.functions.TopKByKey
-      .topKPerStrKey(scored, "source", "qe4", "doc_id", k)
-      .select(col("key").as("source"), col("rank"), col("id").as("doc_id"),
-        (col("score") / lit(10000.0)).as("quality_score"))
+    graft.plans.GroupTopK.groupTopK(scored, Seq("source"),
+        Seq(("qe4", false), ("doc_id", true)), k)
+      .select(col("source"), col("rank"), col("doc_id"),
+        (col("qe4") / lit(10000.0)).as("quality_score"))
   }
 
   /** HTML → text extraction with link-density (the boilerplate signal

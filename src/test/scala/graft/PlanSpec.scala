@@ -248,20 +248,27 @@ class PlanSpec extends SparkSpec {
     assert(p.indexOf("GroupTopKPartial") > p.indexOf("Exchange"), p)
   }
 
-  test("IntervalHistogram rule rewrites the custom node to pruned agg") {
+  test("neighbour rankings run on GroupTopK partial heaps, never a window") {
+    Seq("ann_topk", "ann_lsh_topk", "ann_ivf_topk", "ann_hard_negatives",
+        "source_cap").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("GroupTopKPartial") && p.contains("Exchange"), s"$name\n$p")
+      // the partial heap runs BELOW the exchange (map-side pruning)
+      assert(p.indexOf("GroupTopKPartial") > p.indexOf("Exchange"), s"$name\n$p")
+      assert(!p.contains("Window"), s"$name\n$p")
+    }
+  }
+
+  test("interval histogram prunes the scan to the two endpoint columns") {
     val li = Tables.lineitem(spark, sf)
-    val custom = graft.plans.IntervalHistogram.histogram(
-      li, "l_discount", "l_tax", 0.0, 0.25, 10)
-    val combinator = Intervals.histogram(li,
+    val df = Intervals.histogram(li,
       Intervals.make(col("l_discount"), col("l_tax")), 0.0, 0.25, 10)
-    val a = custom.collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    val b = combinator.collect().map(r => (r.getInt(0), r.getLong(1))).toMap
-    assert(a == b && a.nonEmpty)
-    val opt = custom.queryExecution.optimizedPlan.toString
-    assert(!opt.contains("IntervalHistogramNode"), opt)
-    val p = plan(custom)
-    // the rewrite projects only the bucket array → scan reads just the
-    // two endpoint columns
+    assert(df.collect().nonEmpty)
+    val p = plan(df)
+    // only the bucket array is projected before the explode, so the
+    // scan reads just the two endpoint columns
     assert(p.contains("ReadSchema: struct<l_discount:double,l_tax:double>"), p)
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
   }
@@ -823,10 +830,10 @@ class PlanSpec extends SparkSpec {
   test("source cap: heap aggregator, no window and no sort of the corpus") {
     val df = graft.text.TextAnalysis.sourceCap(Tables.documents(spark, sf), 5)
     val p = plan(df)
-    // the per-key top-K rides the bounded-heap Aggregator (object hash
-    // aggregate with partial_topkaggstr below the exchange), NEVER a
-    // row_number window (which would sort every key's full set)
-    assert(p.toLowerCase.contains("topkaggstr"), p)
+    // the per-key top-K rides the GroupTopK bounded heaps (partial heap
+    // below the exchange), NEVER a row_number window (which would sort
+    // every key's full set)
+    assert(p.contains("GroupTopKPartial"), p)
     assert(!p.contains("Window"), p)
     assert(!p.contains("CartesianProduct"), p)
   }

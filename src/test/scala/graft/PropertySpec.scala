@@ -132,21 +132,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("TopKByKey equals sort-take per key on random data") {
-    val gen = Gen.listOfN(200, Gen.zip(Gen.chooseNum(0L, 5L), Gen.chooseNum(0.0, 1.0)))
-    samples(gen, 5).foreach { rows =>
-      val data = rows.zipWithIndex.map { case ((k, s), i) => (k, s, i.toLong) }
-      val df = data.toDF("key", "score", "id")
-      val got = graft.functions.TopKByKey.topKPerKey(df, "key", "score", "id", 3)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val expect = data.groupBy(_._1).flatMap { case (k, grp) =>
-        grp.sortBy(t => (-t._2, t._3)).take(3).zipWithIndex
-          .map { case (t, idx) => (k, idx + 1, t._3) }
-      }.toSet
-      assert(got == expect)
-    }
-  }
-
   test("GroupTopK equals sort-take per key on random data") {
     samples(Gen.listOfN(150, Gen.zip(Gen.chooseNum(0L, 4L), Gen.chooseNum(0.0, 1.0))), 3)
       .foreach { rows =>
