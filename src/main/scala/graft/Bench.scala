@@ -36,7 +36,7 @@ object Bench {
     // and the minimum is reported. Spark's data cache is cleared between
     // runs — only code paths (codegen, JIT) stay warm, the data is
     // re-read every run.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
+    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     // The dedup_/ann_ family actually executes max(runs, 3) runs (see
     // perQueryRuns below), so a top-level "runs" alone would misstate
     // the denominator behind min/spread for exactly the noisiest family

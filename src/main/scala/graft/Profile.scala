@@ -1,17 +1,20 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 /** Measurement tooling (guide §1): per-query breakdown of where the
   * bench seconds go — analysis+optimization+physical planning ("plan"),
-  * execution ("exec"), and per-stage task metrics (task count, executor
-  * run/CPU time, shuffle read/write bytes, spill) from a listener.
+  * execution ("exec"), per-stage task metrics (task count, executor
+  * run/CPU time, shuffle read/write bytes, spill) from a listener, and
+  * the number of generated classes Janino compiled (a codegen cache
+  * miss each).
   *
   * Usage: runMain graft.Profile <sfDir> q1,q2,... [runs]
   * Prints one line per query:
-  *   name plan=S exec=S stages=N tasks=N shufW=MB shufR=MB cpu=S run=S
+  *   name plan=S exec=S stages=N tasks=N shufW=MB shufR=MB cpu=S run=S compiles=N
   * and optionally a per-stage table with -Dgraft.profile.stages=true.
   *
   * Pure diagnostics — never part of the driver contract, writes nothing.
@@ -33,6 +36,7 @@ object Profile {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
       .config("spark.ui.enabled", "false")
+      .withExtensions(graft.plans.ParamLiterals.inject)
     // ad-hoc conf overrides for A/B experiments: GRAFT_PROFILE_CONF="k=v;k=v"
     sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); builder.config(k, v)
@@ -85,6 +89,7 @@ object Profile {
           val measured = (1 to runs).map { _ =>
             quiesce()
             stages.clear(); jobs.clear(); jobStarts.clear()
+            val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
             val t0 = System.nanoTime()
             val df = fn(spark, sfDir)
             val tC = System.nanoTime()
@@ -95,17 +100,18 @@ object Profile {
             val t2 = System.nanoTime()
             val rows = stages.toArray(Array.empty[StageRow])
             val js = jobs.toArray(Array.empty[(Int, Long, Long)]).sortBy(_._1)
-            ((tC - t0) / 1e9, (t1 - tC) / 1e9, (t2 - t1) / 1e9, rows, js)
+            val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+            ((tC - t0) / 1e9, (t1 - tC) / 1e9, (t2 - t1) / 1e9, rows, js, compiles)
           }
-          val best = measured.minBy { case (c, p, e, _, _) => c + p + e }
-          val (ctor, plan, exec, rows, js) = best
+          val best = measured.minBy { case (c, p, e, _, _, _) => c + p + e }
+          val (ctor, plan, exec, rows, js, compiles) = best
           val tasks = rows.map(_.tasks).sum
           val shufW = rows.map(_.shufWriteB).sum / 1e6
           val shufR = rows.map(_.shufReadB).sum / 1e6
           val cpu = rows.map(_.cpuMs).sum / 1e3
           val run = rows.map(_.runMs).sum / 1e3
           val spill = rows.map(_.spillB).sum / 1e6
-          println(f"$name%-34s ctor=$ctor%6.3f plan=$plan%6.3f exec=$exec%6.3f stages=${rows.length}%3d tasks=$tasks%4d shufW=$shufW%8.2fMB shufR=$shufR%8.2fMB cpu=$cpu%7.2fs run=$run%7.2fs spill=$spill%6.1fMB")
+          println(f"$name%-34s ctor=$ctor%6.3f plan=$plan%6.3f exec=$exec%6.3f stages=${rows.length}%3d tasks=$tasks%4d shufW=$shufW%8.2fMB shufR=$shufR%8.2fMB cpu=$cpu%7.2fs run=$run%7.2fs spill=$spill%6.1fMB compiles=$compiles%3d")
           if (js.nonEmpty) {
             val inJob = js.map(j => j._3 - j._2).sum / 1e3
             val gaps = js.sliding(2).collect {

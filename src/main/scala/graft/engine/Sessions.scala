@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.plans.ParamLiterals
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with scale-appropriate defaults.
@@ -10,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * vmware/hillview's engine never shuffles (sketch monoids merge at the
   * root); our Spark translation leans on AQE + partial aggregation to get
   * the same "bounded data to the driver" property.
+  *
+  * Both factories register [[ParamLiterals]], so whole-stage code does
+  * not depend on literal values and a repeated gesture shape reuses
+  * Spark's codegen cache.
   */
 object Sessions {
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
@@ -32,6 +37,7 @@ object Sessions {
       // fallback still protects memory.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
       .config("spark.ui.enabled", "false")
+      .withExtensions(ParamLiterals.inject)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -73,6 +79,7 @@ object Sessions {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
       .config("spark.ui.enabled", "false")
+      .withExtensions(ParamLiterals.inject)
       .getOrCreate()
     // scheduler mode is frozen at SparkContext creation: if another
     // session already exists, getOrCreate silently reuses it and the

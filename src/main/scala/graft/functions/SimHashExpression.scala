@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,9 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * provider lookup + allocation (it is what `DigestUtils.md5Hex` inside
   * Spark's `md5()` does on every call). Codegen reference objects are
   * shared across concurrent task threads, so the scratch digest must be
-  * ThreadLocal (the repo-wide kernel rule).
+  * ThreadLocal (the repo-wide kernel rule). Generated code calls the
+  * kernels below as static methods.
   */
-private[functions] object Md5Scratch {
+object Md5Scratch {
   val md: ThreadLocal[java.security.MessageDigest] =
     new ThreadLocal[java.security.MessageDigest] {
       override def initialValue(): java.security.MessageDigest =
@@ -40,6 +41,25 @@ private[functions] object Md5Scratch {
     while (i < 7) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
     (h << 4) | ((d(7) & 0xf0L) >> 4)
   }
+  def h60(bytes: Array[Byte]): Long = h60(bytes, 0, bytes.length)
+  def h60(s: UTF8String): Long = h60(s.getBytes)
+
+  /** [[RollingFp60]] of one lowercased text. */
+  def rollingFp60(s: UTF8String): Long = {
+    val text = s.toString
+    var acc = 0L
+    var start = 0
+    val n = text.length
+    while (start <= n) {
+      var end = text.indexOf(' ', start)
+      if (end < 0) end = n
+      val h = h60(text.substring(start, end)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      acc = (acc * 1000003L + h) % 2147483647L
+      start = end + 1
+    }
+    acc
+  }
 }
 
 /** `conv(substring(md5(x), 1, 15), 16, 10)::long` — the engine-portable
@@ -50,8 +70,7 @@ private[functions] object Md5Scratch {
   * every hash-sample / hash-split / shuffle-rank consumer and its
   * DuckDB oracle are unchanged.
   */
-case class Md5Long60(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+case class Md5Long60(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
 
   override def checkInputDataTypes()
@@ -65,13 +84,14 @@ case class Md5Long60(child: Expression)
           s"md5_long60 expects string or binary, got ${other.sql}")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input match {
-      case s: UTF8String => s.getBytes
-      case b: Array[Byte] => b
-    }
-    Md5Scratch.h60(bytes, 0, bytes.length)
+  override def nullSafeEval(input: Any): Any = input match {
+    case s: UTF8String => Md5Scratch.h60(s)
+    case b: Array[Byte] => Md5Scratch.h60(b)
   }
+
+  // the overload follows the child's Java type (UTF8String or byte[])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Scratch.h60($c)")
 
   override def prettyName: String = "md5_long60"
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -89,28 +109,14 @@ case class Md5Long60(child: Expression)
   * must already be lowercased (callers pass `lower(text)` so case
   * folding stays in Catalyst — no engine/locale divergence).
   */
-case class RollingFp60(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+case class RollingFp60(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    var acc = 0L
-    var start = 0
-    val n = text.length
-    while (start <= n) {
-      var end = text.indexOf(' ', start)
-      if (end < 0) end = n
-      val h = {
-        val b = text.substring(start, end)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        Md5Scratch.h60(b, 0, b.length)
-      }
-      acc = (acc * 1000003L + h) % 2147483647L
-      start = end + 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    Md5Scratch.rollingFp60(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Scratch.rollingFp60($c)")
 
   override def prettyName: String = "rolling_fp60"
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -186,6 +186,33 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("GreaterThanOrEqual(l_extendedprice,1000.0"), p)
   }
 
+  test("parameterized literals stay out of the scan: pushed filters keep their values") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import graft.plans.ParamLiteral
+    val df = Tables.lineitem(spark, sf).filter(expr("l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'" +
+      " AND l_quantity <= 24 AND l_linenumber <= 3"))
+      .select((col("l_extendedprice") * 0.9).as("v"))
+    assert(df.collect().nonEmpty)
+    // the final adaptive plan: the rule runs as its query stages are built
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val root = df.queryExecution.executedPlan
+    val scans = helper.collect(root) { case s: FileSourceScanExec => s }
+    val filters = helper.collect(root) { case f: FilterExec => f }
+    assert(scans.size == 1 && filters.size == 1, root)
+    val pushed = scans.head.metadata("PushedFilters")
+    Seq("GreaterThanOrEqual(l_shipdate,1996-03-01", "LessThanOrEqual(l_quantity,24.0)",
+      "LessThanOrEqual(l_linenumber,3)").foreach(f => assert(pushed.contains(f), pushed))
+    val scanExprs = scans.head.expressions ++ scans.head.dataFilters
+    assert(scanExprs.exists(_.exists(_.isInstanceOf[Literal])), scans.head)
+    assert(!scanExprs.exists(_.exists(_.isInstanceOf[ParamLiteral])), scans.head)
+    // the filter above the scan holds parameters and prints as before
+    val cond = filters.head.condition
+    assert(cond.collect { case p: ParamLiteral => p }.size == 3, cond)
+    assert(cond.toString.contains("(l_quantity#") && cond.toString.contains("<= 24.0)"), cond)
+    assert(cond.toString.contains("<= 3)"), cond)
+  }
+
   test("projection prunes the read schema") {
     val df = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_quantity"))
     val p = plan(df)

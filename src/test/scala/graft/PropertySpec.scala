@@ -149,6 +149,101 @@ class PropertySpec extends SparkSpec {
       }
   }
 
+  test("parameterized literals: filter, projection and grouping equal a Scala " +
+      "evaluation on random and edge values") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // Spark's double/float order: NaN equals NaN and sorts last, -0.0 == 0.0
+    def cmpD(x: Double, y: Double) = if (x == y) 0 else java.lang.Double.compare(x, y)
+    def cmpF(x: Float, y: Float) = if (x == y) 0 else java.lang.Float.compare(x, y)
+    val edgeI = Seq(Int.MinValue, Int.MaxValue, 0, -1)
+    val edgeL = Seq(Long.MinValue, Long.MaxValue, 0L, 1L)
+    val edgeD = Seq(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, Double.MaxValue, Double.MinPositiveValue)
+    val edgeF = Seq(Float.NaN, 0.0f, -0.0f, Float.PositiveInfinity, Float.NegativeInfinity)
+    // (i, l, d, f, b, ts micros, date days)
+    type P = (Int, Long, Double, Float, Boolean, Long, Int)
+    val gen: Gen[P] = for {
+      i <- Gen.frequency(3 -> Gen.chooseNum(-50, 50), 1 -> Gen.oneOf(edgeI))
+      l <- Gen.frequency(3 -> Gen.chooseNum(-50L, 50L), 1 -> Gen.oneOf(edgeL))
+      d <- Gen.frequency(3 -> Gen.chooseNum(-5.0, 5.0), 1 -> Gen.oneOf(edgeD))
+      f <- Gen.frequency(3 -> Gen.chooseNum(-5.0f, 5.0f), 1 -> Gen.oneOf(edgeF))
+      b <- Gen.oneOf(true, false)
+      ts <- Gen.chooseNum(-2000000000000000L, 4000000000000000L)
+      dt <- Gen.chooseNum(-20000, 40000)
+    } yield (i, l, d, f, b, ts, dt)
+    val data = samples(gen, 300)
+    val schema = StructType(Seq("i" -> IntegerType, "l" -> LongType, "d" -> DoubleType,
+      "f" -> FloatType, "b" -> BooleanType, "tsm" -> LongType, "days" -> IntegerType)
+      .map { case (n, t) => StructField(n, t, nullable = false) })
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+        data.map(p => Row(p.productIterator.toSeq: _*)), 3), schema)
+      .withColumn("ts", timestamp_micros(col("tsm")))
+      .withColumn("dt", date_from_unix_date(col("days")))
+    val paramCount = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def params(q: org.apache.spark.sql.DataFrame): Int =
+      paramCount.collect(q.queryExecution.executedPlan) { case n =>
+        n.expressions.map(_.collect { case x: graft.plans.ParamLiteral => x }.size).sum
+      }.sum
+    // edge parameters first, then random ones; some equal a row value
+    val edgeParams: Seq[P] = Seq(
+      (Int.MinValue, Long.MaxValue, Double.NaN, Float.NaN, true, data(0)._6, data(0)._7),
+      (Int.MaxValue, Long.MinValue, -0.0, -0.0f, false, data(1)._6, data(1)._7),
+      (0, 0L, 0.0, 0.0f, true, 0L, 0),
+      (-1, 1L, Double.PositiveInfinity, Float.NegativeInfinity, false, Long.MaxValue / 4, 1),
+      (data(2)._1, data(2)._2, Double.NegativeInfinity, Float.PositiveInfinity, true,
+        -1L, -1),
+      (data(3)._1, data(3)._2, Double.MinPositiveValue, data(3)._4, false, data(3)._6, 0))
+    // a seeded expression reads its parameterized seed through eval
+    val seeded = df.select(col("i"), rand(7) + lit(1.5))
+    assert(seeded.collect().toSeq == seeded.collect().toSeq)
+    (edgeParams ++ samples(gen, 6)).foreach { case (pi, pl, pd, pf, pb, pts, pdt) =>
+      val ctx = s"params ($pi, $pl, $pd, $pf, $pb, $pts, $pdt)"
+      val tsLit = timestamp_micros(lit(pts))
+      val dtLit = date_from_unix_date(lit(pdt))
+      def keep(r: P): Boolean = r._1 <= pi && r._2 >= pl &&
+        (cmpD(r._3, pd) >= 0 || cmpF(r._4, pf) < 0) &&
+        (r._5 == pb || r._6 < pts || r._7 >= pdt)
+      val filtered = df.filter(col("i") <= lit(pi) && col("l") >= lit(pl) &&
+        (col("d") >= lit(pd) || col("f") < lit(pf)) &&
+        (col("b") === lit(pb) || col("ts") < tsLit || col("dt") >= dtLit))
+      val got = filtered.select("i", "l", "d", "f", "b", "tsm", "days").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getFloat(3), r.getBoolean(4),
+          r.getLong(5), r.getInt(6)))
+      // compared as text: tuple == is numeric (NaN != NaN, 0.0 == -0.0)
+      assert(got.map(_.toString).sorted.toSeq == data.filter(keep).map(_.toString).sorted, ctx)
+      assert(params(filtered) > 0, ctx)
+
+      val projected = df.select(col("i") === lit(pi), col("l") < lit(pl), col("d") * lit(pd),
+        col("f") + lit(pf), col("ts") >= tsLit, col("dt") < dtLit, col("b") =!= lit(pb),
+        lit(pd), lit(pl), lit(pf))
+      val proj = projected.collect().map(_.toSeq).toSeq
+      val expect = data.map(r => Seq[Any](r._1 == pi, r._2 < pl, r._3 * pd, r._4 + pf,
+        r._6 >= pts, r._7 < pdt, r._5 != pb, pd, pl, pf))
+      // boxed equals: value-exact (NaN equals NaN, 0.0 differs from -0.0)
+      assert(proj.size == expect.size && proj.zip(expect).forall { case (a, b) =>
+        a.zip(b).forall { case (x, y) => java.util.Objects.equals(x, y) } }, ctx)
+      assert(params(projected) > 0, ctx)
+
+      val grouped = df.groupBy((col("d") < lit(pd)).as("k"))
+        .agg(count(lit(1)), sum(when(col("l") > lit(pl), 1).otherwise(0)),
+          max(greatest(col("i"), lit(pi))), max(col("d")) + lit(pd))
+      val groups = grouped.collect()
+        .map(r => r.getBoolean(0) -> (r.getLong(1), r.getLong(2), r.getInt(3), r.getDouble(4)))
+        .toMap
+      val expectGroups = data.groupBy(r => cmpD(r._3, pd) < 0).map { case (k, rs) =>
+        k -> (rs.size.toLong, rs.count(_._2 > pl).toLong, rs.map(r => math.max(r._1, pi)).max,
+          rs.map(_._3).reduce((x, y) => if (cmpD(x, y) >= 0) x else y) + pd)
+      }
+      assert(groups.keySet == expectGroups.keySet, ctx)
+      groups.foreach { case (k, (n, c, m, s)) =>
+        val (en, ec, em, es) = expectGroups(k)
+        assert(n == en && c == ec && m == em && java.lang.Double.compare(s, es) == 0, s"$ctx, $k")
+      }
+      assert(params(grouped) > 0, ctx)
+    }
+  }
+
   test("laplace noise: zero scale is exact; nonzero is deterministic") {
     val df = (1 to 10).toDF("k")
     val zero = df.select(graft.functions.Quantization.laplaceNoise(col("k"), 0.0).as("n"))

@@ -153,6 +153,32 @@ class TargetsSpec extends SparkSpec {
     assert(Memo.hits == hitsBefore + 2)
   }
 
+  test("a repeated gesture shape with new literals compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val reg = new TargetRegistry(spark)
+    val root = reg.loadTable(sf, "lineitem")
+    // one round of the gesture session's shapes: a timestamp window and
+    // a quantity cap filter a target; data range, histogram+CDF (double
+    // bounds, int bucket count) and a nextK seek (double and long pivot)
+    // run over it. Every round has new literals, so the memo misses.
+    def round(day: Int, cap: Int, buckets: Int, pivot: Double, key: Long): Unit = {
+      val from = java.time.LocalDate.of(1995, 1, 2).plusDays(day)
+      val f = reg.filter(root.id, expr(s"l_shipdate >= TIMESTAMP '$from 00:00:00' AND " +
+        s"l_shipdate < TIMESTAMP '${from.plusYears(3)} 00:00:00' AND l_quantity <= $cap"))
+      val range = reg.dataRange(f.id, "l_extendedprice").head
+      val (lo, hi) = (range.getDouble(0), range.getDouble(1))
+      assert(reg.histogramCdf(f.id,
+        Histograms.numericBucket(col("l_extendedprice"), lo, hi, buckets)).nonEmpty)
+      assert(reg.nextK(f.id, Seq(Order("l_extendedprice"), Order("l_orderkey")), 10,
+        Some(Seq[Any](pivot, key))).nonEmpty)
+    }
+    round(0, 30, 20, 20000.5, 0L)
+    round(90, 33, 24, 25000.25, 7L)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    round(400, 37, 31, 31234.75, 11L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles)
+  }
+
   test("redo log: save → replay in a fresh registry → same ids, memo-served sketch") {
     Memo.clear()
     val reg = new TargetRegistry(spark)
