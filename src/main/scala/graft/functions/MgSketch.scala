@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -70,33 +70,35 @@ object MgSketch {
     m
   }
 
-  /** Streaming MG update (bounded map, decrement-all on overflow). */
-  private[functions] def add(m: mutable.HashMap[String, Long], v: String, cap: Int): Unit =
-    m.get(v) match {
-      case Some(c)              => m.update(v, c + 1L)
-      case None if m.size < cap => m.update(v, 1L)
-      case None =>
-        val it = m.iterator.toArray
-        it.foreach { case (key, c) =>
-          if (c <= 1L) m.remove(key) else m.update(key, c - 1L)
-        }
+  /** The Misra-Gries core, shared by every MG summary in the engine
+    * (the aggregates here, [[MisraGries.MGAggregator]] and the streaming
+    * heavy hitters): the streaming update over a bounded key → count map. A key already counted gains one; a new key takes a
+    * free slot; with all `cap` slots taken, the row is dropped and every
+    * counter loses one (zeros leave). `own` runs only on an inserted key,
+    * so a key backed by a reused buffer is copied once per insert.
+    */
+  private[graft] def add[K](m: mutable.HashMap[K, Long], v: K, cap: Int)(own: K => K): Unit = {
+    val c = m.getOrElse(v, 0L)
+    if (c > 0L) m.update(v, c + 1L)
+    else if (m.size < cap) m.update(own(v), 1L)
+    else {
+      m.filterInPlace((_, c) => c > 1L)
+      m.mapValuesInPlace((_, c) => c - 1L)
     }
+  }
 
   /** Mergeable-summaries combine: add counts, subtract the (cap+1)-th
-    * largest, keep positives.
+    * largest, keep positives. Merges `b` into `a` and returns `a`.
     */
-  private[functions] def combine(
-      a: mutable.HashMap[String, Long],
-      b: mutable.HashMap[String, Long],
-      cap: Int): mutable.HashMap[String, Long] = {
+  private[graft] def combine[K](
+      a: mutable.HashMap[K, Long],
+      b: mutable.HashMap[K, Long],
+      cap: Int): mutable.HashMap[K, Long] = {
     b.foreach { case (key, c) => a.update(key, a.getOrElse(key, 0L) + c) }
     if (a.size > cap) {
       val cut = a.values.toArray.sorted(Ordering[Long].reverse).apply(cap)
-      val dead = mutable.ArrayBuffer[String]()
-      a.foreach { case (key, c) =>
-        if (c - cut <= 0L) dead += key else a.update(key, c - cut)
-      }
-      dead.foreach(a.remove)
+      a.filterInPlace((_, c) => c > cut)
+      a.mapValuesInPlace((_, c) => c - cut)
     }
     a
   }
@@ -121,7 +123,7 @@ case class MgBuildAgg(
   override def update(
       buf: mutable.HashMap[String, Long], input: InternalRow): mutable.HashMap[String, Long] = {
     val v = child.eval(input)
-    if (v != null) MgSketch.add(buf, v.toString, cap)
+    if (v != null) MgSketch.add(buf, v.toString, cap)(identity)
     buf
   }
 
@@ -190,6 +192,93 @@ case class MgMergeAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): MgMergeAgg =
     copy(child = newChild)
+}
+
+/** Misra-Gries over a key TUPLE, the one-pass half of heavy hitters:
+  * `children` are the key columns, and the buffer maps each key tuple
+  * to its count, at most `cap` entries. The tuple is an UnsafeRow,
+  * projected per row and copied only on insert. Keys group exactly as
+  * `groupBy(children)` does: float and double keys are normalized
+  * (NaN = NaN, -0.0 = 0.0), the caller keeps every key type
+  * binary-stable (`UnsafeRowUtils.isBinaryStable`), and a null inside the
+  * tuple is a key value.
+  *
+  * The counts sum to the input row count exactly when no decrement or
+  * merge cut ever ran, and then every count is exact.
+  *
+  * Result and wire format: [n:int]([len:int row-bytes count:long])*n,
+  * read back with [[MgTupleAgg.decode]].
+  */
+case class MgTupleAgg(
+    children: Seq[Expression],
+    cap: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[mutable.HashMap[UnsafeRow, Long]] {
+
+  require(cap >= 1, s"mg cap=$cap must be positive")
+
+  @transient private lazy val keyOf =
+    UnsafeProjection.create(children.map(graftshim.normalizeFloats))
+
+  override def createAggregationBuffer(): mutable.HashMap[UnsafeRow, Long] =
+    mutable.HashMap.empty
+
+  override def update(
+      buf: mutable.HashMap[UnsafeRow, Long], input: InternalRow): mutable.HashMap[UnsafeRow, Long] = {
+    MgSketch.add(buf, keyOf(input), cap)(_.copy())
+    buf
+  }
+
+  override def merge(
+      a: mutable.HashMap[UnsafeRow, Long],
+      b: mutable.HashMap[UnsafeRow, Long]): mutable.HashMap[UnsafeRow, Long] =
+    MgSketch.combine(a, b, cap)
+
+  override def eval(buf: mutable.HashMap[UnsafeRow, Long]): Any = serialize(buf)
+  override def serialize(buf: mutable.HashMap[UnsafeRow, Long]): Array[Byte] =
+    MgTupleAgg.encode(buf)
+  override def deserialize(bytes: Array[Byte]): mutable.HashMap[UnsafeRow, Long] =
+    mutable.HashMap.from(MgTupleAgg.decode(bytes, children.size))
+
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  override def prettyName: String = "mg_tuple"
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): MgTupleAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): MgTupleAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): MgTupleAgg =
+    copy(children = newChildren)
+}
+
+object MgTupleAgg {
+  def encode(m: mutable.HashMap[UnsafeRow, Long]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(
+      4 + m.keysIterator.map(_.getSizeInBytes + 12).sum)
+    bb.putInt(m.size)
+    m.foreach { case (k, c) =>
+      bb.putInt(k.getSizeInBytes)
+      bb.put(k.getBytes)
+      bb.putLong(c)
+    }
+    bb.array()
+  }
+
+  /** The (key tuple, count) entries of an encoded summary whose tuples
+    * have `numFields` columns. */
+  def decode(bytes: Array[Byte], numFields: Int): Array[(UnsafeRow, Long)] = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    Array.fill(bb.getInt) {
+      val k = new Array[Byte](bb.getInt)
+      bb.get(k)
+      val row = new UnsafeRow(numFields)
+      row.pointTo(k, k.length)
+      (row, bb.getLong)
+    }
+  }
 }
 
 /** `mg_entries(sketch)` → array<struct<key string, lower_count long>>,

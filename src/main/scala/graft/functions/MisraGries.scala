@@ -1,21 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import scala.collection.mutable
 
-/** Misra-Gries heavy-hitter summary as a Spark typed Aggregator —
-  * re-expression of hillview's MGFreqKSketch
+/** Misra-Gries heavy-hitter summary as a Spark typed Aggregator over
+  * string keys — re-expression of hillview's MGFreqKSketch
   * (sketches/MGFreqKSketch.java:49-175; merge at 110-125, Agarwal et al.
   * "Mergeable Summaries", TODS). The buffer is a bounded k-entry mutable
   * map (kryo-serialized only at partition boundaries; `reduce` mutates
   * in place, so the per-row cost is O(1) amortized — the immutable-Map
   * formulation copies k entries per row and is ~10× slower at 600k
-  * rows). `reduce` is the streaming MG update; `merge` is the
-  * mergeable-summary combine (add counts, subtract the (k+1)-th largest,
-  * drop non-positives). Bounded state per partition + commutative merge
-  * = Spark's partial/final aggregation contract: scales to any number of
-  * executors with an O(k) driver result.
+  * rows). `reduce` and `merge` are the shared MG core
+  * ([[MgSketch.add]], [[MgSketch.combine]]). Bounded state per partition
+  * + commutative merge = Spark's partial/final aggregation contract:
+  * scales to any number of executors with an O(k) driver result.
   */
 object MisraGries {
 
@@ -26,32 +25,12 @@ object MisraGries {
     override def zero: MGBuffer = new MGBuffer(mutable.HashMap.empty)
 
     override def reduce(b: MGBuffer, v: String): MGBuffer = {
-      val m = b.counts
-      m.get(v) match {
-        case Some(c) => m.update(v, c + 1L)
-        case None if m.size < k => m.update(v, 1L)
-        case None =>
-          // decrement-all step; drop zeros
-          val it = m.iterator.toArray
-          it.foreach { case (key, c) =>
-            if (c <= 1L) m.remove(key) else m.update(key, c - 1L)
-          }
-      }
+      MgSketch.add(b.counts, v, k)(identity)
       b
     }
 
     override def merge(a: MGBuffer, b: MGBuffer): MGBuffer = {
-      val m = a.counts
-      b.counts.foreach { case (key, c) => m.update(key, m.getOrElse(key, 0L) + c) }
-      if (m.size > k) {
-        // subtract the (k+1)-th largest count from all, keep positives
-        val cut = m.values.toArray.sorted(Ordering[Long].reverse).apply(k)
-        val dead = mutable.ArrayBuffer[String]()
-        m.foreach { case (key, c) =>
-          if (c - cut <= 0) dead += key else m.update(key, c - cut)
-        }
-        dead.foreach(m.remove)
-      }
+      MgSketch.combine(a.counts, b.counts, k)
       a
     }
 
@@ -59,22 +38,5 @@ object MisraGries {
     override def bufferEncoder: Encoder[MGBuffer] = Encoders.kryo[MGBuffer]
     override def outputEncoder: Encoder[Map[String, Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-  }
-
-  /** Run MG over a string key column; returns candidate keys (≤ k). */
-  def run(df: DataFrame, keyCol: String, k: Int): Seq[String] =
-    runWithTotal(df, keyCol, k)._1
-
-  /** MG candidates plus the exact row total from the SAME pass (the
-    * total rides along as a second aggregate in one multi-agg job — no
-    * separate count scan, mirroring ConcurrentSketch).
-    */
-  def runWithTotal(df: DataFrame, keyCol: String, k: Int): (Seq[String], Long) = {
-    import org.apache.spark.sql.functions.{count, lit, udaf, col}
-    val mg = udaf(new MGAggregator(k))
-    val row = df
-      .agg(mg(col(keyCol)).as("mg"), count(lit(1)).as("n"))
-      .head()
-    (row.getAs[Map[String, Long]](0).keys.toSeq, row.getLong(1))
   }
 }

@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.MgTupleAgg
+import org.apache.spark.sql.{Column, DataFrame, graftshim}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, CreateStruct,
+  Descending, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Distinct-count and heavy-hitter family (sketches/HLogLogSketch.java,
   * MGFreqKSketch.java:49-175, ExactFreqSketch.java,
@@ -60,28 +67,57 @@ object DistinctAndFrequency {
       .drop("__n")
       .orderBy(col("cnt").desc, struct(cols.map(col): _*).asc)
 
-  /** Misra-Gries heavy hitters with exact verification pass — the
-    * reference's production path (MGFreqKSketch → ExactFreqSketch,
-    * web RPC `checkHeavy`). Pass 1 runs the mergeable MG summary as a
-    * typed Aggregator (bounded k-entry state per partition, merged like
-    * any sketch); pass 2 recounts the ≤k candidates exactly with a
-    * broadcast isin filter. MG guarantees no false negatives above ε·N,
-    * so the verified output equals the exact heavy hitters — DuckDB
+  /** Misra-Gries heavy hitters — the reference's production path
+    * (MGFreqKSketch → ExactFreqSketch, web RPC `checkHeavy`). One
+    * aggregation runs the tuple-keyed MG summary ([[MgTupleAgg]],
+    * bounded state per partition, merged like any sketch) beside the
+    * exact row count n. When the summary's counts sum to n, no counter
+    * was ever cut, so the summary IS the exact frequency table: the
+    * result is built on the driver from its ≤cap entries, with no second
+    * scan, and collecting it starts no Spark job. Only a saturated
+    * summary (more distinct keys than cap) pays for the verify scan,
+    * which recounts the candidates exactly through a broadcast
+    * null-safe semi-join. MG guarantees no false negatives above ε·n,
+    * so both paths equal [[heavyHittersExact]] row for row — DuckDB
     * oracle-checkable while exercising the custom sketch.
     */
   def heavyHittersMG(df: DataFrame, cols: Seq[String], epsilon: Double): DataFrame = {
-    import graft.functions.MisraGries
-    val k = math.max(16, math.ceil(2.0 / epsilon).toInt)
-    val keyed = df.select(concat_ws("\u0001", cols.map(col): _*).as("k"))
-    // candidates AND the exact total from one multi-aggregate pass
-    // (ConcurrentSketch shape) — the verify scan below is then the
-    // second and last pass over the data
-    val (candidates, n) = MisraGries.runWithTotal(keyed, "k", k)
-    df.filter(concat_ws("\u0001", cols.map(col): _*).isin(candidates: _*))
-      .groupBy(cols.map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= lit(math.ceil(epsilon * n)))
-      .orderBy(col("cnt").desc, struct(cols.map(col): _*).asc)
+    val spark = df.sparkSession
+    val cap = math.max(16, math.ceil(2.0 / epsilon).toInt)
+    val keys = df.select(cols.map(col): _*)
+    val keyAttrs = graftshim.analyzedPlan(keys).output
+    keyAttrs.foreach { a =>
+      require(UnsafeRowUtils.isBinaryStable(a.dataType),
+        s"heavy hitters key `${a.name}` has type ${a.dataType.catalogString}, " +
+          "whose equal values can differ in bytes; cast it to a binary-stable type")
+    }
+    val mg = MgTupleAgg(keyAttrs, cap).toAggregateExpression()
+    val summary = keys.agg(graftshim.exprToColumn(mg), count(lit(1))).head()
+    val entries = MgTupleAgg.decode(summary.getAs[Array[Byte]](0), cols.size)
+    val n = summary.getLong(1)
+    val minCnt = math.ceil(epsilon * n).toLong
+    if (entries.iterator.map(_._2).sum == n) {
+      // exact: the entries are the whole frequency table
+      val out = keyAttrs.map(_.newInstance()) :+
+        AttributeReference("cnt", LongType, nullable = false)()
+      val order = new InterpretedOrdering(Seq(
+        SortOrder(out.last, Descending), SortOrder(CreateStruct(out.init), Ascending)), out)
+      val keyTypes = keyAttrs.map(_.dataType)
+      val rows = entries.collect { case (k, c) if c >= minCnt =>
+        InternalRow.fromSeq(k.toSeq(keyTypes) :+ c)
+      }
+      graftshim.ofRows(spark, LocalRelation(out, rows.sorted(order).toSeq))
+    } else {
+      val candAttrs = keyAttrs.indices.map(i =>
+        AttributeReference(s"__mg$i", keyAttrs(i).dataType, keyAttrs(i).nullable)())
+      val cand = graftshim.ofRows(spark, LocalRelation(candAttrs, entries.map(_._1).toSeq))
+      val on = cols.indices.map(i => df.col(cols(i)) <=> cand.col(s"__mg$i")).reduce(_ && _)
+      df.join(broadcast(cand), on, "left_semi")
+        .groupBy(cols.map(col): _*)
+        .agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") >= lit(minCnt))
+        .orderBy(col("cnt").desc, struct(cols.map(col): _*).asc)
+    }
   }
 
   /** Sampled heavy hitters (SampleHeavyHittersSketch.java): group-count

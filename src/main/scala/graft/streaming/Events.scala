@@ -601,24 +601,15 @@ object Events {
       .flatMapGroupsWithState[MGState, MGOut](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (shard, rows, state: GroupState[MGState]) =>
-          var st = state.getOption.getOrElse(MGState(Map.empty, 0L))
-          var counters = st.counters
+          val st = state.getOption.getOrElse(MGState(Map.empty, 0L))
+          val counters = scala.collection.mutable.HashMap.from(st.counters)
           var seen = st.seen
           rows.foreach { r =>
             seen += 1
-            counters.get(r.user_id) match {
-              case Some(c) => counters = counters.updated(r.user_id, c + 1)
-              case None if counters.size < k =>
-                counters = counters.updated(r.user_id, 1L)
-              case None =>
-                // decrement-all step; drop zeroed counters
-                counters = counters.collect {
-                  case (id, c) if c > 1 => id -> (c - 1)
-                }
-            }
+            graft.functions.MgSketch.add(counters, r.user_id, k)(identity)
           }
           val version = seen // cumulative row count: monotone per shard
-          state.update(MGState(counters, version))
+          state.update(MGState(counters.toMap, version))
           counters.iterator.map { case (id, c) => MGOut(shard, id, c, version) }
       }
   }

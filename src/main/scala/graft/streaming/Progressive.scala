@@ -1,6 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, OneRowRelation, Range => RangeRelation}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import scala.collection.mutable
 
 /** Progressive result refinement — the reference's signature interaction
@@ -112,7 +116,8 @@ object Progressive {
     spark.sparkContext.cancelJobGroup(group)
 }
 
-/** Result memoization keyed by canonicalized plan — the Spark analog of
+/** Result memoization keyed by canonicalized plan plus the identity of
+  * the data under each leaf (see [[Memo.fingerprint]]) — the Spark analog of
   * HillviewServer's MemoizedResults (dataset/remoting/HillviewServer
   * .java:105-120, MemoizedResults.java:31-90): repeated gestures over the
   * same view hit the cache instead of the cluster.
@@ -136,8 +141,48 @@ object Memo {
   // the reference, which toggles lookup, not retention.
   @volatile private var enabled = true
 
+  /** The memo key of `df`, or the bare plan text for a frame that is
+    * never memoized (see [[key]]). */
   def fingerprint(df: DataFrame): String =
-    df.queryExecution.optimizedPlan.canonicalized.toString
+    key(df).getOrElse(df.queryExecution.optimizedPlan.canonicalized.toString)
+
+  /** The canonicalized optimized plan names the operators but not the
+    * data under them (a parquet scan prints without its path, a local
+    * relation without its rows), so the key appends one identity per
+    * leaf: a file scan's files with size and modification time, a local
+    * relation's row digest, an RDD's id. None when a leaf holds data the
+    * key cannot name; such a frame is collected without memoizing.
+    */
+  private def key(df: DataFrame): Option[String] = {
+    val plan = df.queryExecution.optimizedPlan
+    val ids = plan.collectWithSubqueries { case leaf: LeafNode => leafId(leaf) }
+    if (ids.forall(_.isDefined))
+      Some((plan.canonicalized.toString +: ids.flatten).mkString("\n"))
+    else None
+  }
+
+  private def leafId(leaf: LeafNode): Option[String] = leaf match {
+    case l: LogicalRelation => l.relation match {
+      case fs: HadoopFsRelation => Some(fs.location.listFiles(Nil, Nil).flatMap(_.files)
+        .map(f => s"${f.getPath} ${f.getLen} ${f.getModificationTime}")
+        .sorted.mkString("files ", ", ", ""))
+      case _ => None
+    }
+    case r: LocalRelation =>
+      val toUnsafe = UnsafeProjection.create(r.output.map(_.dataType).toArray)
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      r.data.foreach { row =>
+        val u = toUnsafe(row)
+        md.update(java.nio.ByteBuffer.allocate(4).putInt(u.getSizeInBytes).array())
+        md.update(u.getBytes)
+      }
+      Some(r.output.map(_.dataType.catalogString).mkString("rows (", ", ", ") ") +
+        md.digest().map(b => f"$b%02x").mkString)
+    case r: LogicalRDD => Some(s"rdd ${r.rdd.id}")
+    // every input of these is in the plan text
+    case _: OneRowRelation | _: RangeRelation => Some("")
+    case _ => None
+  }
 
   // sampled estimate (first 32 rows extrapolated): JVM object overheads
   // approximated, not measured — the budget bounds growth, it is not an
@@ -164,8 +209,10 @@ object Memo {
     }
 
   def collectMemoized(df: DataFrame): Array[org.apache.spark.sql.Row] = {
-    if (!enabled) return df.collect()
-    val key = fingerprint(df)
+    val key = (if (enabled) this.key(df) else None) match {
+      case Some(k) => k
+      case None => return df.collect()
+    }
     cache.synchronized {
       cache.remove(key) match {
         case Some(e) => // LRU touch: reinsert at the tail

@@ -25,6 +25,12 @@ package object graftshim {
   def analyzedPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
+  /** `e` with float and double values normalized the way grouping
+    * keys are (NaN = NaN, -0.0 = 0.0), recursively through structs and
+    * arrays. */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   def experimentalStrategies(spark: SparkSession): ExperimentalMethods =
     spark.asInstanceOf[classic.SparkSession].experimental
 }

@@ -320,6 +320,46 @@ class OperatorSpec extends SparkSpec {
     assert(mg == exact)
   }
 
+  test("heavy hitters MG reads its input once when the summary is exact, twice when saturated") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+    import org.apache.spark.scheduler._
+    val li = Tables.lineitem(spark, sf)
+    val n = li.count()
+    val sc = spark.sparkContext
+    // input records over every task `body` runs; a marker job posted
+    // after it ends the count, since the listener bus delivers in order
+    def inputRecords(body: => Unit): Long = {
+      val read = new AtomicLong
+      val markerJob = new AtomicLong(-1L)
+      val done = new AtomicBoolean
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == "scan-gate"))
+            markerJob.set(j.jobId)
+        override def onJobEnd(j: SparkListenerJobEnd): Unit =
+          if (j.jobId == markerJob.get) done.set(true)
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        sc.setJobGroup("scan-gate", "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.currentTimeMillis() + 30000
+        while (!done.get && System.currentTimeMillis() < deadline) Thread.sleep(10)
+        assert(done.get, "marker job never ended")
+        read.get
+      } finally sc.removeSparkListener(listener)
+    }
+    // 3 distinct (returnflag, linestatus) keys, cap 40: exact summary
+    assert(inputRecords(DistinctAndFrequency.heavyHittersMG(
+      li, Seq("l_returnflag", "l_linestatus"), 0.05).collect()) == n)
+    // far more orderkeys than cap 200: the verify scan runs
+    assert(inputRecords(DistinctAndFrequency.heavyHittersMG(
+      li, Seq("l_orderkey"), 0.01).collect()) == 2 * n)
+  }
+
   test("set ops view algebra consistent with except/intersect") {
     val o = Tables.orders(spark, sf)
     val p1 = col("o_orderpriority") === "1-URGENT"

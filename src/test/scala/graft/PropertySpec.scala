@@ -121,6 +121,34 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("tuple MG heavy hitters equal exact heavy hitters row for row, exact and saturated") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("s", StringType), StructField("i", IntegerType),
+      StructField("d", DoubleType)))
+    val rowGen = for {
+      s <- Gen.frequency(6 -> Gen.const("a"), 3 -> Gen.oneOf("b", "c"), 1 -> Gen.const(null))
+      i <- Gen.frequency(6 -> Gen.const(1), 3 -> Gen.oneOf(2, 3, 4), 1 -> Gen.const(null))
+      d <- Gen.frequency(3 -> Gen.const(0.0), 2 -> Gen.const(-0.0), 2 -> Gen.const(Double.NaN),
+        2 -> Gen.oneOf(1.5, -2.25), 1 -> Gen.const(null))
+    } yield Row(s, i, d)
+    // the exact path answers on the driver as a local relation; the
+    // saturated one verifies against the data
+    val exactPaths = scala.collection.mutable.Set.empty[Boolean]
+    samples(Gen.listOfN(400, rowGen), 5).foreach { rows =>
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+      for (cols <- Seq(Seq("s", "i", "d"), Seq("d", "s")); eps <- Seq(0.01, 0.05, 0.3)) {
+        val exact = DistinctAndFrequency.heavyHittersExact(df, cols, eps)
+        val mg = DistinctAndFrequency.heavyHittersMG(df, cols, eps)
+        exactPaths += mg.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+        assert(mg.schema == exact.schema)
+        assert(mg.collect().toSeq == exact.collect().toSeq, s"cols=$cols eps=$eps")
+      }
+    }
+    assert(exactPaths == Set(true, false))
+  }
+
   test("histogram counts are repartition-invariant on random data") {
     samples(Gen.listOfN(200, Gen.chooseNum(0.0, 100.0)), 5).foreach { vs =>
       val df = vs.toDF("v")

@@ -451,6 +451,39 @@ class TargetsSpec extends SparkSpec {
     } finally { Memo.setBudget(old); Memo.clear() }
   }
 
+  test("memo keys name their files: same-schema parquet dirs do not share an entry") {
+    import spark.implicits._
+    Memo.clear()
+    val dirs = Seq(Seq(1L, 2L, 3L), Seq(1L, 2L, 3L, 4L, 5L)).map { xs =>
+      val d = java.nio.file.Files.createTempDirectory("graft_memo").resolve("t").toString
+      xs.toDF("x").write.parquet(d)
+      d
+    }
+    def gesture(d: String) =
+      spark.read.parquet(d).filter(col("x") > 1L).agg(count(lit(1)))
+    val got = dirs.map(d => Memo.collectMemoized(gesture(d)).head.getLong(0))
+    assert(got == dirs.map(d => gesture(d).collect().head.getLong(0)))
+    assert(got == Seq(2L, 4L) && Memo.size == 2)
+    // a fresh read of unchanged files is the same key
+    Memo.collectMemoized(gesture(dirs.head))
+    assert(Memo.hits == 1)
+  }
+
+  test("memo keys name their rows: same-shape local frames do not share an entry") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    Memo.clear()
+    val frames = Seq(Seq((1, "a")), Seq((2, "b")), Seq((1, "a"))).map(_.toDF("k", "v"))
+    val got = frames.map(f => Memo.collectMemoized(f.filter(col("k") > 0)).toSeq)
+    assert(got == Seq(Seq(Row(1, "a")), Seq(Row(2, "b")), Seq(Row(1, "a"))))
+    // the third frame holds the first one's rows: a hit
+    assert(Memo.size == 2 && Memo.hits == 1)
+    // a cached frame reads the cache, which the key cannot name
+    val cached = frames(1).cache()
+    try assert(Memo.collectMemoized(cached).toSeq == Seq(Row(2, "b")) && Memo.size == 2)
+    finally cached.unpersist()
+  }
+
   test("full-program JS gestures (loops/functions) replay through the redo log") {
     Memo.clear()
     val reg = new TargetRegistry(spark)
