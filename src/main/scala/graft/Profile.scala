@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.util.concurrent.ConcurrentLinkedQueue
 
@@ -30,13 +29,7 @@ object Profile {
                 else Seq("f_range")
     val runs = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(graft.plans.ParamLiterals.inject)
+    val builder = engine.Sessions.builder(cpus.toInt)
     // ad-hoc conf overrides for A/B experiments: GRAFT_PROFILE_CONF="k=v;k=v"
     sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); builder.config(k, v)

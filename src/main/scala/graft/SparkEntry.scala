@@ -72,50 +72,6 @@ object SparkEntry {
   private def embCount(s: SparkSession, d: String): Long =
     embCounts.computeIfAbsent(d, _ => emb(s, d).count()).longValue
 
-  // Planted high-cosine near-dup fixture for the θ=0.7 headline LSH
-  // entry: a 4% slice (vec_id % 25 == 3) re-ided +10M with every 4th
-  // coordinate zeroed — cos(v, v') = sqrt(1 - E₀/E) ≈ 0.87 for the
-  // synthetic energy profile, deterministic in any engine.
-  private[graft] def plantedEmb(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val e = emb(s, d)
-    val planted = e.filter(pmod(col("vec_id"), lit(25L)) === 3L)
-      .withColumn("vec_id", col("vec_id") + 10000000L)
-      .withColumn("embedding",
-        expr("transform(embedding, (x, i) -> IF(i % 4 == 0, CAST(0.0 AS FLOAT), x))"))
-    e.unionByName(planted)
-  }
-
-  // Planted MULTILINGUAL rows (CJK, Cyrillic, Hangul, combining marks,
-  // astral emoji + math alphanumerics), including near-dup pairs — the
-  // driver corpus is 100% ASCII, so the UTF-8 byte-trie tokenizer and
-  // the multilingual trainer path are oracled END-TO-END only through
-  // this augmentation (identical literals on the Spark and DuckDB
-  // sides). All text is pre-lowercased and quote-free so `lower()` and
-  // SQL literal escaping cannot diverge; doc_ids start at 9_000_001,
-  // far above any corpus id.
-  private[graft] val mlRows: Seq[(Long, String, String, String, Long)] = Seq(
-    (9000001L, "spark 加速向量计算引擎 merge join 去重", "zh", "planted_ml"),
-    (9000002L, "spark 加速向量计算引擎 merge join 去重 再次", "zh", "planted_ml"),
-    (9000003L, "café déjà vu naïve café rosé", "fr", "planted_ml"),
-    // the COMBINING-MARK twin of 9000003: same visual text, decomposed
-    // e+U+0301 etc. — codepoint-distinct near-dup of the precomposed row
-    (9000004L, "café déjà vu naïve café rosé", "fr", "planted_ml"),
-    (9000005L, "🚀 rocket 🚀 query engine 🧪 test 𝕊𝕡𝕒𝕣𝕜 bench", "en", "planted_ml"),
-    (9000006L, "быстрый поиск дубликатов в корпусе данных", "ru", "planted_ml"),
-    (9000007L, "한국어 토큰 분석 테스트 문서 집합", "ko", "planted_ml"),
-    // long (12-word) mixed-script near-dup pair differing only in the
-    // LAST word: long enough for winnowing (≥ 8 words) and sharing
-    // 11-word runs, so the pair must surface in every similarity
-    // family — jaccard (9/11), minhash-LSH, edit distance (1 codepoint
-    // substitution: 완 → 종), and winnowing (4 shared 5-gram windows).
-    // Words 3–7 deliberately repeat 9000006's interior run, planting a
-    // true cross-doc shared window WITHOUT near-dup-level similarity.
-    (9000008L, "спарк движок поиск дубликатов в корпусе данных merge join 去重 테스트 완료", "ru", "planted_ml"),
-    (9000009L, "спарк движок поиск дубликатов в корпусе данных merge join 去重 테스트 종료", "ru", "planted_ml")
-  ).map { case (id, t, lang, src) =>
-    (id, t, lang, src, t.codePointCount(0, t.length).toLong)
-  }
-
   /** The blocklist lexicon for `text_blocklist*`: fixture-vocabulary
     * terms chosen to exercise the automaton — prefix-nested pairs
     * ("low" ⊂ "slow", "can" ⊂ "scan": dictionary-suffix emission), a
@@ -126,24 +82,6 @@ object SparkEntry {
   private[graft] val blocklistTerms: Seq[String] = Seq(
     "a", "agg", "can", "data", "join", "key", "low", "merge", "order",
     "scan", "slow", "slow join", "stream", "qqq", "café", "去重", "🚀")
-
-  /** documents ∪ planted multilingual rows — the corpus the UTF-8 BPE
-    * queries run over. */
-  private def docsMl(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(
-      mlRows.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  /** The augmented relation as a DuckDB SELECT (identical literals to
-    * [[mlRows]]) — becomes the `dml` CTE of the ml-flavored oracles. */
-  private val mlDocsSelect: String = {
-    val vals = mlRows.map { case (id, t, lang, src, nch) =>
-      s"($id, '$t', '$lang', '$src', $nch)"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
 
   /** Injective codepoint → single-ASCII-byte map over the planted
     * multilingual alphabet. DuckDB's `levenshtein` is BYTE-based while
@@ -157,7 +95,7 @@ object SparkEntry {
     * alphabet (space + lowercase ascii after lower()), the SQL quote,
     * backslash, and '|' (stripMargin). */
   private[graft] val mlLevTranslate: (String, String) = {
-    val cps = mlRows.flatMap(_._2.codePoints().toArray.toSeq)
+    val cps = Fixtures.ml.rows.flatMap(_._2.codePoints().toArray.toSeq)
       .filter(_ > 127).distinct.sorted
     val pool = "0123456789" + ('A' to 'Z').mkString +
       "!#$%&()*+,-./:;<=>?@[]^_{}~"
@@ -189,7 +127,7 @@ object SparkEntry {
   /** Batch langid-count oracle, shared by `langid_model_incremental`
     * and `langid_model_folded` (same fold ≡ batch-counting claim). */
   private def langidModelTrainSql: String =
-    s"""WITH dml AS MATERIALIZED ($mlDocsSelect),
+    s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
        |g AS (SELECT lang AS lang2,
        |    unnest([substr(lower(text), CAST(i AS INTEGER), 2)
        |      for i in range(1, length(lower(text)))]) AS g
@@ -201,41 +139,8 @@ object SparkEntry {
     * whose table references were pointed at `dml`. */
   private def withMlDocs(sql: String): String = {
     require(sql.startsWith("WITH RECURSIVE "), "expected a recursive-CTE oracle")
-    "WITH RECURSIVE dml AS MATERIALIZED (" + mlDocsSelect + "),\n" +
+    "WITH RECURSIVE dml AS MATERIALIZED (" + Fixtures.ml.sql + "),\n" +
       sql.substring("WITH RECURSIVE ".length)
-  }
-
-  // Planted MULTI-LINE docs — the web-ingest line-dedup fixture. The
-  // driver corpus has no newlines (every doc is one line), so the
-  // cross-document line-dedup family is exercised end-to-end only
-  // through this augmentation. Coverage: a boilerplate line repeated
-  // across 4 docs (twice within the keeper), a second 2-doc footer, a
-  // MULTIBYTE boilerplate line, a doc that is 100% boilerplate (must
-  // come out erased, not dropped), a within-doc-only repeat (df = 1 ⇒
-  // kept), blank lines (always kept), and a digit-twin pair ("page 1
-  // of 10" / "page 2 of 10") that dedups ONLY under the CCNet
-  // normalized key. No quotes/backslashes, so SQL literals are exact.
-  private[graft] val nlRows: Seq[(Long, Seq[String])] = {
-    val b1 = "accept all cookies to continue browsing"
-    val b2 = "copyright all rights reserved"
-    val b3 = "去重 boilerplate 테스트 줄"
-    Seq(
-      9200001L -> Seq(b1, "alpha unique content about spark engines", b2, "", b1),
-      9200002L -> Seq(b1, b3, "bravo unique thoughts on merge join order", b2),
-      9200003L -> Seq(b3, "charlie unique line describing dedup", b1),
-      9200004L -> Seq(b1, b3),
-      9200005L -> Seq("echo repeated line stays", "echo repeated line stays",
-        "", "echo unique closing line"),
-      9200006L -> Seq("page 1 of 10", "foxtrot unique body text"),
-      9200007L -> Seq("page 2 of 10", "golf unique body text"))
-  }
-
-  private def docsNl(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(nlRows.map { case (id, lines) =>
-      val t = lines.mkString("\n")
-      (id, t, "en", "planted_nl", t.codePointCount(0, t.length).toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
   }
 
   /** Deterministic CDC feed over the orders snapshot, staged key-modulo
@@ -261,81 +166,6 @@ object SparkEntry {
     u1.unionByName(u2).unionByName(del).unionByName(ins)
   }
 
-  /** A planted-fixture corpus materialized ONCE as a scratch
-    * `documents.parquet` input dir, so folded-artifact queries can
-    * SHARD it (ensureDocShards reads a directory). Fingerprint = the
-    * source table's listing + this query layer's bytecode (the planted
-    * fixtures live in this class, so editing them re-materializes);
-    * marker-last publish, stable across runs. */
-  private def materializedInputDir(prefix: String, d: String)(
-      build: => DataFrame): String = {
-    import java.nio.file.{Files, Paths}
-    val root = graft.engine.Artifacts.lineageDir(prefix, d)
-    val fp = graft.engine.Artifacts.md5Hex("v1|" +
-      graft.engine.Artifacts.classStamp(Seq("/graft/SparkEntry$.class")) + "|" +
-      graft.engine.Artifacts.tableListing(
-        new java.io.File(d, "documents.parquet")))
-    val setDir = Paths.get(root, s"set_$fp")
-    this.synchronized {
-      val marker = Paths.get(root, "_FINGERPRINT")
-      val fresh = Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8") == fp &&
-        Files.exists(setDir)
-      if (!fresh) {
-        Files.createDirectories(setDir)
-        graft.engine.Artifacts.publishDataset(root,
-          Paths.get(setDir.toString, "documents.parquet"), build)
-        graft.engine.Artifacts.publishMarker(root, fp)
-      }
-    }
-    setDir.toString
-  }
-
-  /** Two orders shards materialized ONCE under EVOLVING schemas — v1
-    * (even keys): o_custkey narrowed to INT, o_totalprice to FLOAT; v2
-    * (odd keys): the wide originals plus a NEW o_channel column. The
-    * evolved-read query widens them back into one table. Fingerprint =
-    * orders listing + this class's bytecode; marker-last publish. */
-  private def evolvedShards(s: SparkSession, d: String): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    val root = graft.engine.Artifacts.lineageDir("evolved_orders", d)
-    val fp = graft.engine.Artifacts.md5Hex("v1|" +
-      graft.engine.Artifacts.classStamp(Seq("/graft/SparkEntry$.class")) + "|" +
-      graft.engine.Artifacts.tableListing(
-        new java.io.File(d, "orders.parquet")))
-    val setDir = Paths.get(root, s"set_$fp")
-    this.synchronized {
-      val marker = Paths.get(root, "_FINGERPRINT")
-      val fresh = Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8") == fp &&
-        Files.exists(setDir)
-      if (!fresh) {
-        Files.createDirectories(setDir)
-        val o = ord(s, d)
-        graft.engine.Artifacts.publishDataset(root,
-          Paths.get(setDir.toString, "shard_v1.parquet"),
-          o.filter(col("o_orderkey") % 2 === 0)
-            .select(col("o_orderkey"), col("o_custkey").cast("int"),
-              col("o_totalprice").cast("float")))
-        graft.engine.Artifacts.publishDataset(root,
-          Paths.get(setDir.toString, "shard_v2.parquet"),
-          o.filter(col("o_orderkey") % 2 === 1)
-            .select(col("o_orderkey"), col("o_custkey"),
-              col("o_totalprice"), lit("web").as("o_channel")))
-        graft.engine.Artifacts.publishMarker(root, fp)
-      }
-    }
-    Seq(s"$setDir/shard_v1.parquet", s"$setDir/shard_v2.parquet")
-  }
-
-  /** [[docsNl]] as a materialized input dir (the line-dedup folds). */
-  private def nlInputDir(s: SparkSession, d: String): String =
-    materializedInputDir("docs_nl", d)(docsNl(s, d))
-
-  /** [[docsMl]] as a materialized input dir (the langid fold). */
-  private def mlInputDir(s: SparkSession, d: String): String =
-    materializedInputDir("docs_ml", d)(docsMl(s, d))
-
   /** The trusted-seed predicate of the langid model, as SQL — part of
     * the folded langid artifact's identity (changing the trust contract
     * re-mines). Must match the `text_langid_nb` seed Column. */
@@ -347,187 +177,29 @@ object SparkEntry {
     * ([[graft.text.TextAnalysis.boilerplateLines]] over the nl-planted
     * corpus) runs once per (input, params, build) and the strip/gate
     * consumers serve the published parquet. The fingerprint's build
-    * stamp covers BOTH the detection code (TextAnalysis) and this
-    * query layer's bytecode — the nl fixture lives here, so editing
-    * the planted rows re-mines (the same "recompile conservatively
-    * re-mines" contract as the cluster map).
+    * stamp covers BOTH the detection code (TextAnalysis) and the
+    * fixture classes ([[Fixtures.buildStamp]]), so editing the planted
+    * rows re-mines (the same "recompile conservatively re-mines"
+    * contract as the cluster map).
     */
+  private[graft] val boilerplateStamp: Seq[String] = Seq(
+    "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class") ++
+    Fixtures.buildStamp
+
   private def boilerplateListArtifact(s: SparkSession, d: String): DataFrame = {
     val dir = graft.engine.Artifacts.lineageDir("boilerplate_list",
       d + "|min2-raw")
-    val stamp = graft.engine.Artifacts.classStamp(Seq(
-      "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class",
-      "/graft/SparkEntry$.class"))
+    val stamp = graft.engine.Artifacts.classStamp(boilerplateStamp)
     val fp = graft.engine.Artifacts.md5Hex("min2-raw|" + stamp + "|" +
       graft.engine.Artifacts.tableListing(
         new java.io.File(d, "documents.parquet")))
     graft.engine.Artifacts.serveOrBuild(s, dir, fp)(
-      graft.text.TextAnalysis.boilerplateLines(docsNl(s, d), 2))
+      graft.text.TextAnalysis.boilerplateLines(Fixtures.nl.df(s, d), 2))
   }
 
-  /** The line fixture as a DuckDB CTE body (newlines via chr(10) so the
-    * VALUES literals stay one-line). */
-  private val nlDocsSelect: String = {
-    val vals = nlRows.map { case (id, lines) =>
-      val t = lines.map(l => s"'$l'").mkString(" || chr(10) || ")
-      val nch = lines.mkString("\n").codePoints().count()
-      s"($id, $t, 'en', 'planted_nl', $nch)"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  // Planted URL-bearing docs (the C4 URL-filter fixture; base docs
-  // carry zero URLs and flow through as negatives)
-  private[graft] val urlRows: Seq[(Long, String)] = Seq(
-    9300001L -> ("visit https://spam.example.com/offer now and also " +
-      "http://news.site.org/article today"),
-    9300002L -> ("double https://spam.example.com/a then " +
-      "https://spam.example.com/b mention plus https://good.example.net"),
-    9300003L -> ("mixed https://good.example.net/page and " +
-      "https://tracker.adsite.io/pixel inline"))
+  // the domains `text_url_filter` blocks in the planted url fixture
   private[graft] val blockedDomains =
     Seq("spam.example.com", "tracker.adsite.io")
-
-  // Planted LINE-RULE rows (bullets / ellipses): the Rae A1.1 line
-  // tests need multi-line docs straddling both thresholds — 75% bullets
-  // (pass), 100% bullets (fail), 66% ellipses (fail), 25% ellipses
-  // (pass). Base docs are single plain lines and pass trivially.
-  private[graft] val bulletRows: Seq[(Long, Seq[String])] = Seq(
-    9950001L -> Seq("- item one", "- item two", "* item three", "intro line"),
-    9950002L -> Seq("- a", "- b", "- c", "- d", "- e",
-      "- f", "- g", "- h", "- i", "- j"),
-    9950003L -> Seq("thought trails off...", "another one trails...",
-      "solid line"),
-    9950004L -> Seq("normal line", "quiet end", "one dots line...",
-      "closing"))
-
-  private def docsBullets(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(bulletRows.map { case (id, lines) =>
-      val t = lines.mkString("\n")
-      (id, t, "en", "planted_bul", t.codePointCount(0, t.length).toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val bulletDocsSelect: String = {
-    val vals = bulletRows.map { case (id, lines) =>
-      val t = lines.map(l => s"'$l'").mkString(" || chr(10) || ")
-      val nch = lines.mkString("\n").codePoints().count()
-      s"($id, $t, 'en', 'planted_bul', $nch)"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  // Planted URL-CANONICALIZATION rows: mixed-case scheme/host, default
-  // ports, tracking params, fragments, and trailing slashes — raw
-  // spellings that must collapse to shared canonical URLs (the
-  // crawl-side URL dedup key). URLs are space-delimited (the extractor
-  // pattern is [^ ]+), no quotes.
-  private[graft] val urlCanonRows: Seq[(Long, String)] = Seq(
-    9900001L -> ("see HTTPS://Example.COM:443/Article/?utm_source=x&utm_campaign=y#frag " +
-      "and more text"),
-    9900002L -> ("see https://example.com/Article and " +
-      "http://News.Site.org:80/a/b/?gclid=123 now"),
-    9900003L -> ("plain http://news.site.org/a/b and dup " +
-      "https://example.com/Article/ here"),
-    9900004L -> ("tracked https://example.com/Article?id=7&utm_medium=z&fbclid=q " +
-      "end"))
-
-  private def docsUrlCanon(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(urlCanonRows.map { case (id, t) =>
-      (id, t, "en", "planted_urlc", t.codePointCount(0, t.length).toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val urlCanonDocsSelect: String = {
-    val vals = urlCanonRows.map { case (id, t) =>
-      s"($id, '$t', 'en', 'planted_urlc', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  private def docsUrl(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(urlRows.map { case (id, t) =>
-      (id, t, "en", "planted_url", t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val urlDocsSelect: String = {
-    val vals = urlRows.map { case (id, t) =>
-      s"($id, '$t', 'en', 'planted_url', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  // Planted CONTAINMENT pair: an excerpt fully inside a long doc —
-  // containment(excerpt) = 1.0 while symmetric Jaccard ≈ 0.28 stays
-  // under every near-dup threshold (the case containment exists for).
-  private[graft] val contRows: Seq[(Long, String)] = Seq(
-    9850001L -> ("alpha beta gamma delta epsilon zeta eta theta iota " +
-      "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"),
-    9850002L -> "zeta eta theta iota kappa lambda mu")
-
-  private def docsCont(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(contRows.map { case (id, t) =>
-      (id, t, "en", "planted_cont", t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val contDocsSelect: String = {
-    val vals = contRows.map { case (id, t) =>
-      s"($id, '$t', 'en', 'planted_cont', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  /** The accepted-instruction POOL for `text_rouge_dedup` — the
-    * Self-Instruct / Alpaca admission filter's comparison set (tiny,
-    * driver-side, broadcasts). Lowercase, quote-free, ≤ 9 tokens (the
-    * oracle unrolls one DP stage per pool-token position). */
-  private[graft] val instPool: Seq[(Int, String)] = Seq(
-    1 -> "write a short poem about the spark engine",
-    2 -> "summarize the given document in one sentence",
-    3 -> "translate the following text into french",
-    4 -> "list three benefits of columnar storage formats",
-    5 -> "explain how a merge join works",
-    6 -> "classify the sentiment of this review",
-    7 -> "generate a sql query that counts rows per group",
-    8 -> "rewrite the paragraph to be more concise")
-
-  // Planted CANDIDATE instructions: an exact pool copy (F1 = 1), a
-  // one-word substitution (8333 ≥ θ), a one-word insertion (9333 ≥ θ),
-  // a word-REORDERED twin of pool #1 (same bag, LCS halves → 5000 < θ:
-  // the order-sensitivity ROUGE-L has and Jaccard lacks), and a novel
-  // instruction. Base corpus docs flow through as low-score negatives.
-  private[graft] val instRows: Seq[(Long, String)] = Seq(
-    9400001L -> "translate the following text into french",
-    9400002L -> "explain how a hash join works",
-    9400003L -> "about the spark engine write a short poem",
-    9400004L -> "summarize the given document in exactly one sentence",
-    9400005L -> "compute the average latency per region from logs")
-
-  private def docsInst(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(instRows.map { case (id, t) =>
-      (id, t, "en", "planted_inst", t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val instDocsSelect: String = {
-    val vals = instRows.map { case (id, t) =>
-      s"($id, '$t', 'en', 'planted_inst', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
 
   /** ROUGE-L oracle: the LCS DP mechanically unrolled over pool-token
     * positions (one stage per position, the unigramDpBlock pattern).
@@ -557,7 +229,7 @@ object SparkEntry {
     s"""WITH pool AS MATERIALIZED (SELECT pool_id,
        |    list_filter(string_split(ptext, ' '), x -> x <> '') AS ptoks
        |  FROM (VALUES $poolVals) p(pool_id, ptext)),
-       |di AS MATERIALIZED ($instDocsSelect),
+       |di AS MATERIALIZED (${Fixtures.inst.sql}),
        |cand AS MATERIALIZED (SELECT doc_id, list_slice(l, 1, $cap) AS toks
        |  FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '),
        |    x -> x <> '') AS l FROM di)),
@@ -581,257 +253,6 @@ object SparkEntry {
        |  s.f1 AS rouge_f1, s.f1 >= $thetaGrid AS is_dup
        |FROM pick p JOIN scored s
        |  ON s.doc_id = p.doc_id AND s.pool_id = p.bp""".stripMargin
-  }
-
-  // Planted CODE docs — the Stack/StarCoder filter fixture: a clean
-  // snippet (passes), a minified 143-char line (max-line fail), an
-  // auto-generated header (marker fail), symbol soup (alnum fail),
-  // and an all-comments file (comment-share fail). Base corpus docs
-  // flow through the same rules (single-line prose: most fail the
-  // max-line bound — they are not code). No quotes/backslashes.
-  private[graft] val codeRows: Seq[(Long, Seq[String])] = Seq(
-    9700001L -> Seq("def add(a, b):", "    # sum two values",
-      "    return a + b", "total = add(2, 3)", "print(total)"),
-    9700002L -> Seq(("let v0 = 0; " * 12).trim, "export default v0;"),
-    9700003L -> Seq("# auto-generated do not edit", "def gen():",
-      "    return 42"),
-    9700004L -> Seq("(((((", ")))))", "===== ;;;;;"),
-    9700005L -> Seq("# only comments here", "# nothing else",
-      "// and more"))
-
-  private def docsCode(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(codeRows.map { case (id, lines) =>
-      val t = lines.mkString("\n")
-      (id, t, "en", "planted_code", t.codePointCount(0, t.length).toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val codeDocsSelect: String = {
-    val vals = codeRows.map { case (id, lines) =>
-      val t = lines.map(l => s"'$l'").mkString(" || chr(10) || ")
-      val nch = lines.mkString("\n").codePoints().count()
-      s"($id, $t, 'en', 'planted_code', $nch)"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  /** documents ∪ a planted fixture — the ONE builder every planted
-    * family shares: the Spark frame and the DuckDB VALUES literal
-    * derive from the same rows, and the SQL side always escapes
-    * single quotes (doubling), so an apostrophe-bearing fixture can
-    * never silently break its oracle. */
-  private def plantedDocs(s: SparkSession, d: String,
-      rows: Seq[(Long, String)], tag: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(rows.map { case (id, t) =>
-      (id, t, "en", tag, t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private def plantedSelect(rows: Seq[(Long, String)], tag: String): String = {
-    val vals = rows.map { case (id, t) =>
-      s"($id, '${t.replace("'", "''")}', 'en', '$tag', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  // Planted DPO candidate groups ("prompt ### completion", several
-  // completions per prompt). Coverage: a clear quality spread (group
-  // elects by score), a chosen-side TIE (→ lowest doc_id), a
-  // rejected-side TIE (→ highest doc_id), an all-equal group (zero
-  // margin → dropped), a singleton group (dropped), and an
-  // empty-prompt row (slicing edge, singleton → dropped). Base docs
-  // carry no separator and are filtered before the group-by.
-  private[graft] val dpoRows: Seq[(Long, String)] = Seq(
-    9910001L -> ("explain the tides ### the moon pulls ocean water into" +
-      " two bulges as the earth rotates beneath them"),
-    9910002L -> ("explain the tides ### tides rise and tides fall" +
-      " because tides follow the moon and the sun"),
-    9910003L -> "explain the tides ### water water water goes up and down and up and down",
-    9910004L -> "name a prime number ### seven is prime",
-    9910005L -> "name a prime number ### two is prime",
-    9910006L -> "name a prime number ### prime prime prime",
-    9910007L -> "pick a color ### blue is calm and deep",
-    9910008L -> "pick a color ### red red red red",
-    9910009L -> "pick a color ### green green green green",
-    9910010L -> "say hello ### hello there friend",
-    9910011L -> "say hello ### greetings kind stranger",
-    9910012L -> "lonely prompt ### only one answer here",
-    9910013L -> "### orphan completion with no prompt")
-
-  private def docsDpo(s: SparkSession, d: String): DataFrame =
-    plantedDocs(s, d, dpoRows, "planted_dpo")
-
-  private val dpoDocsSelect: String =
-    plantedSelect(dpoRows, "planted_dpo")
-
-  // Planted multi-turn CHAT transcripts. Coverage: a 2×2-turn dialog,
-  // an assistant-first transcript with a trailing user turn, a
-  // user-only doc (has_dialog = false), a system preamble before any
-  // marker (masked 0), and adjacent markers (an empty assistant turn
-  // contributing zero train tokens). Base docs carry no markers →
-  // all-zero masks.
-  private[graft] val chatRows: Seq[(Long, String)] = Seq(
-    9920001L -> ("<user> how do i sort a list <assistant> use the sorted" +
-      " builtin <user> and in place <assistant> call the sort method"),
-    9920002L -> "<assistant> unprompted greeting <user> silence",
-    9920003L -> "<user> question with no reply",
-    9920004L -> "system preamble text <user> hi <assistant> hello there",
-    9920005L -> "<assistant> <user> empty assistant turn")
-
-  private def docsChat(s: SparkSession, d: String): DataFrame =
-    plantedDocs(s, d, chatRows, "planted_chat")
-
-  private val chatDocsSelect: String =
-    plantedSelect(chatRows, "planted_chat")
-
-  // Planted MOJIBAKE docs (UTF-8 mis-decoded as CP1252). Coverage:
-  // a 2-byte repair (Ã© → é), CP1252-special + sloppy-C1 quotes
-  // (â€œ/â€ → curly quotes), a 3-byte euro (â‚¬ → €), genuine
-  // Latin-1 prose whose bytes are NOT valid UTF-8 (untouched), a lone
-  // CP1252 special mapping to a bare continuation byte (untouched), an
-  // unmappable CJK char (conservative whole-doc no-touch), and a
-  // truncated mojibake tail (invalid → untouched). ASCII base docs are
-  // identity by construction.
-  private[graft] val mojiRows: Seq[(Long, String)] = Seq(
-    9930001L -> "cafÃ© latte",
-    9930002L -> ("he said â€œfineâ€" +
-      "\u009d ok"), // the sloppy-C1 slot, spelled as an escape
-    9930003L -> "price â‚¬ 5",
-    9930004L -> "genuine café unchanged",
-    9930005L -> "€ only euro",
-    9930006L -> "mixed Ã© and real 中 text",
-    9930007L -> "truncated moji â€ end")
-
-  private def docsMoji(s: SparkSession, d: String): DataFrame =
-    plantedDocs(s, d, mojiRows, "planted_moji")
-
-  private val mojiDocsSelect: String =
-    plantedSelect(mojiRows, "planted_moji")
-
-  // Planted REPETITION docs (the base corpus has dup 2-grams but zero
-  // dup 5-grams — verified — so the n ≥ 5 coverage side needs plants).
-  // Coverage: a 5-token phrase repeated 3× (periodicity makes every
-  // n ≤ 15 window duplicated), a 2-token loop (top-2gram), an
-  // all-distinct control (all signals 0), and a 7× single-token run
-  // whose top-2gram char mass EXCEEDS total chars (the documented
-  // uncapped case: overlapping occurrences).
-  private[graft] val repRows: Seq[(Long, String)] = Seq(
-    9940001L -> ("click here to read more click here to read more" +
-      " click here to read more now"),
-    9940002L -> ("subscribe newsletter subscribe newsletter subscribe" +
-      " newsletter footer"),
-    9940003L -> "one two three four five six seven eight nine ten all distinct words",
-    9940004L -> "spam spam spam spam spam spam spam eggs")
-
-  private def docsRep(s: SparkSession, d: String): DataFrame =
-    plantedDocs(s, d, repRows, "planted_rep")
-
-  private val repDocsSelect: String =
-    plantedSelect(repRows, "planted_rep")
-
-  // Planted INVISIBLE-CHAR docs: a ZWSP-split word (dedup evasion — a
-  // byte-distinct twin of visible text), a bidi-RLO reordering attack
-  // (Trojan Source), an isolate pair, a BOM-prefixed doc, and a clean
-  // control. All chars spelled as escapes — nothing invisible in the
-  // source.
-  private[graft] val invisRows: Seq[(Long, String)] = Seq(
-    9970001L -> "pay\u200bload split by zwsp",
-    9970002L -> "access\u202eelbasid\u202c the rlo trick",
-    9970003L -> "alpha \u2066isolated\u2069 beta",
-    9970004L -> "\ufeffbom prefixed doc",
-    9970005L -> "perfectly clean text")
-
-  private def docsInvis(s: SparkSession, d: String): DataFrame =
-    plantedDocs(s, d, invisRows, "planted_invis")
-
-  private val invisDocsSelect: String =
-    plantedSelect(invisRows, "planted_invis")
-
-  // Planted IBAN docs: two genuine checksums (the ISO example pair), a
-  // one-digit corruption (shape-identical, mod-97 fails), a lookalike
-  // (matches the candidate regex, wrong checksum), and a lowercase
-  // spelling (never a candidate). Base docs are lowercase — no
-  // accidental candidates.
-  private[graft] val ibanRows: Seq[(Long, String)] = Seq(
-    9960001L -> "pay to DE89370400440532013000 today",
-    9960002L -> "ref GB82WEST12345698765432 thanks",
-    9960003L -> "fake DE89370400440532013001 checksum",
-    9960004L -> "short XX00ABCD123456789 maybe",
-    9960005L -> "lowercase de89370400440532013000 ignored")
-
-  private def docsIban(s: SparkSession, d: String): DataFrame =
-    plantedDocs(s, d, ibanRows, "planted_iban")
-
-  private val ibanDocsSelect: String =
-    plantedSelect(ibanRows, "planted_iban")
-
-  // Planted PRE-TOKENIZATION docs — the GPT-2 regex edge cases the
-  // base corpus lacks: lowercase contractions (incl. an UPPER-case
-  // non-match and a bare apostrophe), multi-space runs + trailing
-  // spaces (the lookahead's space-donation), tabs, Unicode letters and
-  // a CJK year+number mix, and other-runs containing an apostrophe
-  // mid-run. The ONLY fixture with single quotes: the SQL side escapes
-  // them by doubling.
-  private[graft] val preRows: Seq[(Long, String)] = Seq(
-    9980001L -> "it's the user's code we'll've refactored",
-    9980002L -> "price is 42 dollars and 3.14 approx",
-    9980003L -> "hello   world trailing  ",
-    9980004L -> "tabs\there and\t\tdouble",
-    9980005L -> "émigré café 北京 2024年",
-    9980006L -> "symbols !!! then ') quote",
-    9980007L -> "don'T 'S 'x x'")
-
-  private def docsPre(s: SparkSession, d: String): DataFrame =
-    plantedDocs(s, d, preRows, "planted_pre")
-
-  private val preDocsSelect: String =
-    plantedSelect(preRows, "planted_pre")
-
-  // Planted MULTI-SENTENCE docs (the base corpus has no ". " anywhere
-  // — verified — so sentence-aligned chunking needs plants). Coverage:
-  // ten 10-token sentences (boundaries at the straddle: a chunk runs
-  // to 70 tokens before closing), a single 70-token sentence (one
-  // whole-chunk overrun), and a tiny 3-sentence doc (single chunk).
-  private[graft] val sentRows: Seq[(Long, String)] = {
-    def sent(tag: String, n: Int) =
-      (tag +: (1 until n).map(i => s"w$i")).mkString(" ")
-    Seq(
-      9950001L -> (1 to 10).map(i => sent(s"s$i", 10)).mkString(". "),
-      9950002L -> Seq(sent("long", 70), sent("tail", 8)).mkString(". "),
-      9950003L -> "alpha beta. gamma. delta epsilon zeta")
-  }
-
-  private def docsSent(s: SparkSession, d: String): DataFrame =
-    plantedDocs(s, d, sentRows, "planted_sent")
-
-  private val sentDocsSelect: String =
-    plantedSelect(sentRows, "planted_sent")
-
-  // Planted SFT pairs ("prompt ### completion") — base docs carry no
-  // separator and flow through as has_pair = false all-zero masks.
-  private[graft] val sftRows: Seq[(Long, String)] = Seq(
-    9450001L -> "write a haiku about joins ### silent merge of streams",
-    9450002L -> "name three sort algorithms ### quick merge heap",
-    9450003L -> "### completion with empty prompt",
-    9450004L -> "trailing separator only ###")
-
-  private def docsSft(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(sftRows.map { case (id, t) =>
-      (id, t, "en", "planted_sft", t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val sftDocsSelect: String = {
-    val vals = sftRows.map { case (id, t) =>
-      s"($id, '$t', 'en', 'planted_sft', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
   }
 
   /** k-center greedy replayed as unrolled SQL stages: each round is a
@@ -909,7 +330,7 @@ object SparkEntry {
     * [[graft.text.TextAnalysis.gopherRepetition]] arithmetic on the
     * 1e-4 grid. */
   private def gopherRepSql: String =
-    s"""WITH dd AS MATERIALIZED ($repDocsSelect),
+    s"""WITH dd AS MATERIALIZED (${Fixtures.rep.sql}),
        |t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
        |    w -> w <> '') AS ws FROM dd),
        |tok AS MATERIALIZED (SELECT doc_id, j,
@@ -1023,7 +444,7 @@ object SparkEntry {
       "|ed[89][0-9a-f][89ab][0-9a-f]|e[ef]([89ab][0-9a-f]){2}" +
       "|f0[9ab][0-9a-f]([89ab][0-9a-f]){2}|f[1-3]([89ab][0-9a-f]){3}" +
       "|f48[0-9a-f]([89ab][0-9a-f]){2})"
-    s"""WITH dd AS MATERIALIZED ($mojiDocsSelect),
+    s"""WITH dd AS MATERIALIZED (${Fixtures.moji.sql}),
        |cp1252 AS (SELECT * FROM (VALUES (8364,128),(8218,130),(402,131),
        |  (8222,132),(8230,133),(8224,134),(8225,135),(710,136),(8240,137),
        |  (352,138),(8249,139),(338,140),(381,142),(8216,145),(8217,146),
@@ -1073,38 +494,6 @@ object SparkEntry {
        |FROM dd d LEFT JOIN fixed f ON f.doc_id = d.doc_id""".stripMargin
   }
 
-  // Planted LINK-GRAPH docs: each doc's `source` is a SITE and its text
-  // links to other sites in the set — the fixture behind domain
-  // PageRank. Coverage: a hub receiving from three sites, a duplicate
-  // in-text link (edge dedup), two docs from one site (cross-doc edge
-  // dedup), a spam island fed by one site, and a cycle (hub → alpha →
-  // hub). Base corpus docs carry no URLs: their sources rank at the
-  // teleport base, keeping the query corpus-coupled.
-  private[graft] val urlGraphRows: Seq[(Long, String, String)] = Seq(
-    (9500001L, "alpha.site",
-      "see https://hub.site/a then https://hub.site/b plus https://beta.site/x"),
-    (9500002L, "beta.site", "read https://hub.site/c today"),
-    (9500003L, "gamma.site",
-      "both https://hub.site/d and https://alpha.site/e linked"),
-    (9500004L, "delta.site", "shady https://spam.farm/z offer"),
-    (9500005L, "hub.site", "back to https://alpha.site/f now"),
-    (9500006L, "alpha.site", "more https://gamma.site/g content"))
-
-  private def docsUrlGraph(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(urlGraphRows.map { case (id, site, t) =>
-      (id, t, "en", site, t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val urlGraphDocsSelect: String = {
-    val vals = urlGraphRows.map { case (id, site, t) =>
-      s"($id, '$t', 'en', '$site', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
   /** The K-iteration integer PageRank oracle, mechanically unrolled
     * (same arithmetic as [[graft.graph.LinkGraph.domainRank]]). */
   private def linkRankSql(iterations: Int): String = {
@@ -1117,7 +506,7 @@ object SparkEntry {
          |    CAST(150000 + COALESCE(c$k.cin, 0) AS BIGINT) AS r
          |  FROM n LEFT JOIN c$k USING (node))""".stripMargin
     }.mkString(",\n")
-    s"""WITH du AS ($urlGraphDocsSelect),
+    s"""WITH du AS (${Fixtures.urlGraph.sql}),
        |e AS (SELECT DISTINCT source AS src, split_part(u, '//', 2) AS dst
        |  FROM (SELECT source,
        |      unnest(regexp_extract_all(text, 'https?://[a-z0-9.-]+')) AS u
@@ -1148,7 +537,7 @@ object SparkEntry {
          |    GREATEST(1, COALESCE((SELECT MAX(s) FROM hr$k), 1)) AS BIGINT) AS h
          |  FROM n LEFT JOIN hr$k USING (node))""".stripMargin
     }.mkString(",\n")
-    s"""WITH du AS ($urlGraphDocsSelect),
+    s"""WITH du AS (${Fixtures.urlGraph.sql}),
        |e AS (SELECT DISTINCT source AS src, split_part(u, '//', 2) AS dst
        |  FROM (SELECT source,
        |      unnest(regexp_extract_all(text, 'https?://[a-z0-9.-]+')) AS u
@@ -1497,84 +886,6 @@ object SparkEntry {
        |FROM vrp v LEFT JOIN cntp c USING (piece)""".stripMargin
   }
 
-  // Planted LM-SERVE rows: the base corpus is also the training corpus,
-  // so every one of its trigrams scores at level 3 — these rows remix
-  // base-vocabulary words into novel orders and add unseen words, the
-  // only way the stupid-backoff chain (level 2/1/OOV) is exercised
-  // end-to-end. All-lowercase ASCII, quote-free.
-  private[graft] val lmRows: Seq[(Long, String)] = Seq(
-    9700001L -> "spark zzz join qqq merge zzz",
-    9700002L -> "window sort the big table scan join merge",
-    9700003L -> "zzz yyy xxx zzz yyy")
-
-  /** documents ∪ planted LM-serve rows — the scoring corpus for
-    * `text_lm_backoff` (training stays on the base table). */
-  private def docsLm(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(lmRows.map { case (id, t) =>
-      (id, t, "en", "planted_lm", t.codePointCount(0, t.length).toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val lmDocsSelect: String = {
-    val vals = lmRows.map { case (id, t) =>
-      s"($id, '$t', 'en', 'planted_lm', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  // Planted PII docs (email/phone/IP occurrences plus digit runs where
-  // ONLY the Luhn-valid one may count as a card; the all-letter base
-  // corpus flows through as 500 zero rows)
-  private[graft] val piiRows: Seq[(Long, String)] = Seq(
-    9600001L -> "contact user@example.com or call 555-867-5309 now",
-    9600002L -> ("card 4111111111111111 works but 4111111111111112 fails " +
-      "and 79927398713 is short"),
-    9600003L -> "server at 10.0.0.1 and 192.168.1.255 plus order 1234567890123 id")
-
-  private def docsPii(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(piiRows.map { case (id, t) =>
-      (id, t, "en", "planted_pii", t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val piiDocsSelect: String = {
-    val vals = piiRows.map { case (id, t) =>
-      s"($id, '$t', 'en', 'planted_pii', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
-  // Planted HTML docs (tag strip + entity unescape + link density; the
-  // tag-free base corpus must flow through htmlExtract UNCHANGED —
-  // single-space ASCII text is its own fixed point)
-  private[graft] val htmlRows: Seq[(Long, String)] = Seq(
-    9400001L -> ("<html><head><title>t</title></head><body>" +
-      "<h1>spark engine guide</h1><p>learn about merge join and dedup</p>" +
-      "<a href=\"https://x.example.com\">read more</a></body></html>"),
-    9400002L -> ("<div><a href=\"/a\">home</a> <a href=\"/b\">about us</a> " +
-      "<a href=\"/c\">contact page</a></div>"),
-    9400003L -> ("<p>a &amp; b &lt;tag&gt; &quot;quoted&quot; " +
-      "it&#39;s fine</p><!-- hidden comment -->"))
-
-  private def docsHtml(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    docs(s, d).unionByName(htmlRows.map { case (id, t) =>
-      (id, t, "en", "planted_html", t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars"))
-  }
-
-  private val htmlDocsSelect: String = {
-    val vals = htmlRows.map { case (id, t) =>
-      s"($id, '${t.replace("'", "''")}', 'en', 'planted_html', ${t.length})"
-    }.mkString(", ")
-    s"SELECT * FROM documents UNION ALL SELECT * FROM (VALUES $vals)" +
-      " AS v(doc_id, text, lang, source, n_chars)"
-  }
-
   // learned BPE merges memoized per corpus dir (the train/serve split:
   // bpe_train_merges declares the training cost; encode queries serve
   // from the learned table — deterministic, so oracles that retrain
@@ -1584,7 +895,7 @@ object SparkEntry {
     String, Seq[(String, String)]]()
   private def trainedMerges(s: SparkSession, d: String): Seq[(String, String)] =
     bpeMerges.computeIfAbsent(d,
-      _ => graft.text.BpeTrainer.trainMerges(docsMl(s, d), 8))
+      _ => graft.text.BpeTrainer.trainMerges(Fixtures.ml.df(s, d), 8))
 
   // Greenplum dump fixture: two aligned column dumps of a 1-in-10
   // lineitem slice, written once per (JVM, corpus dir) — the round-trip
@@ -2957,10 +2268,10 @@ object SparkEntry {
     // hive-partitioned by lang in ~8 small files per partition, then
     // each file is assigned a compaction bin of ~8 KiB by cumulative
     // size in name order — metadata-only (no data page read). Fully
-    // ORACLED: the dump-time oracle reads the SAME listing via
-    // DuckDB's read_blob and replays the offset binning
+    // ORACLED: the dump-time oracle carries the sink's on-disk listing
+    // and replays the offset binning in DuckDB
     "sink_compaction_plan" -> ((s, d) => {
-      val dir = graft.engine.Artifacts.lineageDir("compaction_sink", d)
+      val dir = compactionSink
       docs(s, d).repartition(8, col("doc_id")).write.partitionBy("lang")
         .mode("overwrite").parquet(dir)
       compactionSinkDir = Some(dir)
@@ -3193,7 +2504,7 @@ object SparkEntry {
     // planted decomposed/precomposed fr twin pair collapses into one
     // group with n_raw_forms = 2, which byte-exact dedup cannot see
     "dedup_exact_nfc" -> ((s, d) =>
-      docsMl(s, d)
+      Fixtures.ml.df(s, d)
         .groupBy(md5(graft.text.TextAnalysis.nfcNormalize(col("text"))
           .cast("binary")).as("h"))
         .agg(min(col("doc_id")).as("keep_id"),
@@ -3259,21 +2570,21 @@ object SparkEntry {
     // surface while the precomposed/decomposed fr twins (no identical
     // words) must NOT produce false pairs (gated in PropertySpec)
     "dedup_jaccard_3gram_ml" -> ((s, d) =>
-      graft.dedup.Dedup.jaccardPairs(docsMl(s, d), 3, 0.5)),
+      graft.dedup.Dedup.jaccardPairs(Fixtures.ml.df(s, d), 3, 0.5)),
     "dedup_minhash_lsh_ml" -> ((s, d) =>
-      graft.dedup.Dedup.minhashLshPairs(docsMl(s, d), 3, 64, 32, 0.5)),
+      graft.dedup.Dedup.minhashLshPairs(Fixtures.ml.df(s, d), 3, 64, 32, 0.5)),
     // edit-distance unit on multilingual text: ONE CODEPOINT = one
     // edit (Spark's levenshtein; the oracle byte-matches it through an
     // injective codepoint→ascii-byte translate — see mlLevTranslate)
     "dedup_edit_distance_ml" -> ((s, d) =>
-      graft.dedup.Dedup.editDistancePairs(docsMl(s, d), 5, 64)),
+      graft.dedup.Dedup.editDistancePairs(Fixtures.ml.df(s, d), 5, 64)),
     "text_winnow_pairs_ml" -> ((s, d) =>
-      graft.text.TextAnalysis.winnowPairs(docsMl(s, d))),
+      graft.text.TextAnalysis.winnowPairs(Fixtures.ml.df(s, d))),
     // span offsets over mixed-script text: gram md5 runs over UTF-8
     // bytes in BOTH engines and offsets count WORDS, so the planted
     // ru/zh/ko shared runs must surface with identical boundaries
     "text_dup_spans_ml" -> ((s, d) =>
-      graft.text.TextAnalysis.dupSpans(docsMl(s, d), 5)),
+      graft.text.TextAnalysis.dupSpans(Fixtures.ml.df(s, d), 5)),
     // fuzzy dedup with an exact edit-distance verify: shared-window
     // candidates (never all-pairs), band-limited levenshtein ≤ 64
     "dedup_edit_distance" -> ((s, d) =>
@@ -3364,7 +2675,7 @@ object SparkEntry {
     // n_docs >= 2. Fold ≡ batch scan, which is exactly what the oracle
     // replays (the text_boilerplate_lines census verbatim).
     "text_boilerplate_folded" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, nlInputDir(s, d), 3)
+      val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.nl.inputDir(s, d), 3)
       val name = "docsnl_mod3_" + Integer.toHexString(d.hashCode)
       if (!graft.text.TextAnalysis.boilerplateFoldedExists(name))
         graft.text.TextAnalysis.boilerplateStateArtifactFolded(
@@ -3393,7 +2704,7 @@ object SparkEntry {
     // containment (asymmetric Jaccard): the excerpt/quote-inclusion
     // dedup symmetric near-dup misses — θ=0.9 on either direction
     "dedup_containment" -> ((s, d) =>
-      graft.dedup.Dedup.containmentPairs(docsCont(s, d), 3, 9000L)),
+      graft.dedup.Dedup.containmentPairs(Fixtures.cont.df(s, d), 3, 9000L)),
     // FineWeb-style survivor election: within each near-dup cluster
     // keep the HIGHEST-QUALITY copy (ties → lowest doc_id), not the
     // accidentally-first one
@@ -3446,7 +2757,7 @@ object SparkEntry {
     // skips the hot-cut valve — bucket sizes are bounded by
     // construction here; the stress entry keeps the valve on.
     "dedup_embedding_lsh" -> ((s, d) =>
-      graft.ann.Similarity.nearDupPairsLsh(plantedEmb(s, d), 0.7,
+      graft.ann.Similarity.nearDupPairsLsh(Fixtures.plantedEmb(s, d), 0.7,
         nEstimate = embCount(s, d) * 26L / 25L,
         targetBucket = 16L, maxBucket = 0)),
     // the θ=0.4 low-threshold form kept as the declared STRESS entry:
@@ -3642,7 +2953,7 @@ object SparkEntry {
     // real redaction pipeline applies (digit runs alone are mostly
     // order ids — planted 4111111111111111 passes, ...1112 fails)
     "pii_stats" -> ((s, d) =>
-      graft.text.TextAnalysis.piiStats(docsPii(s, d))),
+      graft.text.TextAnalysis.piiStats(Fixtures.pii.df(s, d))),
     "pii_redact" -> ((s, d) =>
       // inject deterministic PII so the redaction provably fires, then
       // scrub it; the oracle applies the same regexes to the same text
@@ -3817,16 +3128,14 @@ object SparkEntry {
     // corpus snapshot diff (dataset versioning): v2 = v1 with %37==11
     // removed, %37==5 edited, three added — classify by content hash
     "corpus_diff" -> ((s, d) => {
-      import s.implicits._
       val v1 = docs(s, d)
       val v2 = v1.filter(pmod(col("doc_id"), lit(37L)) =!= 11L)
         .withColumn("text", when(pmod(col("doc_id"), lit(37L)) === 5L,
           concat(col("text"), lit(" v2 edit"))).otherwise(col("text")))
-        .unionByName(Seq(
-          (9990001L, "brand new doc one", "en", "added", 17L),
-          (9990002L, "brand new doc two", "en", "added", 17L),
-          (9990003L, "brand new doc three", "en", "added", 19L))
-          .toDF("doc_id", "text", "lang", "source", "n_chars"))
+        .unionByName(Fixtures.Fixture("added", Seq(
+          (9990001L, "brand new doc one", "en", "added"),
+          (9990002L, "brand new doc two", "en", "added"),
+          (9990003L, "brand new doc three", "en", "added"))).planted(s))
       graft.pipeline.Pipeline.corpusDiff(v1, v2)
     }),
     // shard-balance audit: md5-hash sharding into 16 output shards,
@@ -3846,7 +3155,7 @@ object SparkEntry {
     // end shares with the paper's 0.9 / 0.3 removal thresholds) over
     // planted multi-line docs straddling both thresholds
     "text_gopher_lines" -> ((s, d) =>
-      graft.text.TextAnalysis.gopherLineRules(docsBullets(s, d))),
+      graft.text.TextAnalysis.gopherLineRules(Fixtures.bullets.df(s, d))),
     // the cleaning-pipeline survivor dashboard: ingested → gopher →
     // language → blocklist → exact-dedup survivor, prefix conjunctions
     // of one-scan flags; the only data-sized exchange is the dedup
@@ -3858,13 +3167,13 @@ object SparkEntry {
     // cross-doc boilerplate-line detection over the newline-planted
     // corpus: one explode, one groupBy on the line
     "text_boilerplate_lines" -> ((s, d) =>
-      graft.text.TextAnalysis.boilerplateLines(docsNl(s, d), 2)),
+      graft.text.TextAnalysis.boilerplateLines(Fixtures.nl.df(s, d), 2)),
     // INCREMENTAL detection: per-shard line states (even/odd doc_id
     // split plays two ingest shards) merged by (sum, sum, min), list
     // derived from the merged state — exact, so it shares the batch
     // oracle VERBATIM
     "text_boilerplate_incremental" -> ((s, d) => {
-      val dnl = docsNl(s, d)
+      val dnl = Fixtures.nl.df(s, d)
       graft.text.TextAnalysis.mergeBoilerplateStates(Seq(
           graft.text.TextAnalysis.boilerplateState(
             dnl.filter(pmod(col("doc_id"), lit(2L)) === 0L)),
@@ -3875,12 +3184,12 @@ object SparkEntry {
     // the destructive CCNet/RefinedWeb pass: boilerplate lines cut from
     // every non-keeper doc, text reassembled; 128-bit line keys
     "text_remove_dup_lines" -> ((s, d) =>
-      graft.text.TextAnalysis.removeDupLines(docsNl(s, d), 2)),
+      graft.text.TextAnalysis.removeDupLines(Fixtures.nl.df(s, d), 2)),
     // same transform under the CCNet NORMALIZED key (digit/punct-blind
     // hash): the planted "page 1 of 10"/"page 2 of 10" twin collapses
     // here and ONLY here; reassembled text keeps the raw lines
     "text_remove_dup_lines_norm" -> ((s, d) =>
-      graft.text.TextAnalysis.removeDupLines(docsNl(s, d), 2, normalized = true)),
+      graft.text.TextAnalysis.removeDupLines(Fixtures.nl.df(s, d), 2, normalized = true)),
     // the serve half of the line-dedup loop: strip EVERY occurrence
     // against the FROZEN list (no keeper survival — the ingest-gate
     // semantics; the list side broadcasts). r15: the list comes from
@@ -3892,19 +3201,19 @@ object SparkEntry {
     // detection stays observable as text_boilerplate_lines. Oracle
     // unchanged: the stored list IS boilerplateLines' output.
     "text_strip_boilerplate" -> ((s, d) =>
-      graft.text.TextAnalysis.stripKnownBoilerplate(docsNl(s, d),
+      graft.text.TextAnalysis.stripKnownBoilerplate(Fixtures.nl.df(s, d),
         boilerplateListArtifact(s, d))),
     // the strip consumer served from the FOLDED line state: folded
     // (sum,sum,min) census ≡ whole-corpus census, so the frozen list
     // (n_docs >= 2) and therefore the strip output are identical —
     // the oracle is the text_strip_boilerplate replay verbatim
     "text_strip_boilerplate_folded" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, nlInputDir(s, d), 3)
+      val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.nl.inputDir(s, d), 3)
       val name = "docsnl_mod3_" + Integer.toHexString(d.hashCode)
       if (!graft.text.TextAnalysis.boilerplateFoldedExists(name))
         graft.text.TextAnalysis.boilerplateStateArtifactFolded(
           s, name, shards.take(2)).count()
-      graft.text.TextAnalysis.stripKnownBoilerplate(docsNl(s, d),
+      graft.text.TextAnalysis.stripKnownBoilerplate(Fixtures.nl.df(s, d),
         graft.text.TextAnalysis.boilerplateStateArtifactFolded(s, name, shards)
           .filter(col("n_docs") >= 2))
     }),
@@ -3922,23 +3231,23 @@ object SparkEntry {
         .select(col("doc_id").as("node"), col("cluster_id").as("component"))
     }),
     "link_domain_rank" -> ((s, d) =>
-      graft.graph.LinkGraph.domainRank(docsUrlGraph(s, d), 4)),
+      graft.graph.LinkGraph.domainRank(Fixtures.urlGraph.df(s, d), 4)),
     // HITS hubs/authorities over the SAME link graph — the two roles
     // PageRank folds together (directory sites vs trusted targets);
     // exact-integer mutual recursion with max-normalization on the
     // 1e-6 grid, unrolled-CTE replayable like link_domain_rank
     "link_hits" -> ((s, d) =>
-      graft.graph.LinkGraph.hits(docsUrlGraph(s, d), 3)),
+      graft.graph.LinkGraph.hits(Fixtures.urlGraph.df(s, d), 3)),
     // C4 URL filter over in-text links: narrow regex map + literal
     // blocklist, zero shuffle
     "text_url_filter" -> ((s, d) =>
-      graft.text.TextAnalysis.urlFilter(docsUrl(s, d), blockedDomains)),
+      graft.text.TextAnalysis.urlFilter(Fixtures.url.df(s, d), blockedDomains)),
     // URL canonicalization + URL-level dedup (the crawl-side dedup
     // key): lowercase authority, fragment/tracking-param/default-port/
     // trailing-slash stripping, then group by the canonical form —
     // the planted raw spellings must collapse
     "url_canonicalize" -> ((s, d) =>
-      graft.text.TextAnalysis.urlDedup(docsUrlCanon(s, d))),
+      graft.text.TextAnalysis.urlDedup(Fixtures.urlCanon.df(s, d))),
     // per-source quota (the FineWeb/C4 per-host cap): top-K docs per
     // source by exact-grid quality via the bounded-heap aggregator —
     // never a per-key full sort
@@ -3947,7 +3256,7 @@ object SparkEntry {
     // HTML → text with link density (the jusText/trafilatura signal);
     // tag-free base docs are fixed points
     "text_html_extract" -> ((s, d) =>
-      graft.text.TextAnalysis.htmlTextStats(docsHtml(s, d))),
+      graft.text.TextAnalysis.htmlTextStats(Fixtures.html.df(s, d))),
     "text_tokens" -> ((s, d) => graft.text.TextAnalysis.tokenStats(docs(s, d))),
     // REAL subword tokenization (greedy longest-match over the literal
     // vocab, one codegen trie walk per row — BpeTokenizer): per-doc
@@ -4005,7 +3314,7 @@ object SparkEntry {
         graft.text.BpeTrainer.wordpieceVocabFromMerges(merges))
     }),
     "text_tokens_bpe" -> ((s, d) =>
-      graft.text.TextAnalysis.bpeTokenStats(docsMl(s, d))),
+      graft.text.TextAnalysis.bpeTokenStats(Fixtures.ml.df(s, d))),
     // tokenizer bake-off: corpus totals + bytes/piece under the THREE
     // vocab families side by side — the comparison a tokenizer choice
     // is made against (caveats differ: unigram counts OOV words as 0
@@ -4034,7 +3343,7 @@ object SparkEntry {
     // same generated greedy-match oracle, grouped by lang; ratio on
     // the exact 1e-4 integer grid (frac4)
     "text_tokens_fertility" -> ((s, d) =>
-      docsMl(s, d).select(col("lang"),
+      Fixtures.ml.df(s, d).select(col("lang"),
           octet_length(col("text")).cast("long").as("bytes"),
           graft.text.TextAnalysis.bpeTokenCount(col("text")).as("toks"))
         .groupBy(col("lang"))
@@ -4063,7 +3372,7 @@ object SparkEntry {
     // for fr); both engines implement Unicode canonical composition,
     // so the op is fully oracled
     "text_normalize_nfc" -> ((s, d) =>
-      docsMl(s, d)
+      Fixtures.ml.df(s, d)
         .select(col("lang"), col("text"),
           graft.text.TextAnalysis.nfcNormalize(col("text")).as("nfc"))
         .groupBy(col("lang"))
@@ -4097,13 +3406,13 @@ object SparkEntry {
       val (s3, s2, s1, oov) =
         graft.text.TextAnalysis.trigramModelArtifact(s, d)
       graft.text.TextAnalysis.scoreTrigramBackoff(
-        docsLm(s, d), s3, s2, s1, oov)
+        Fixtures.lm.df(s, d), s3, s2, s1, oov)
     }),
     // training-cost observability twin (the dedup_cluster_mine pattern):
     // ALWAYS trains the trigram LM from the corpus — no artifact — so
     // the bench keeps pricing the model build round over round.
     "text_lm_backoff_mine" -> ((s, d) =>
-      graft.text.TextAnalysis.trigramBackoff(docs(s, d), docsLm(s, d))),
+      graft.text.TextAnalysis.trigramBackoff(docs(s, d), Fixtures.lm.df(s, d))),
     // storable LM count state: per-shard bigram tables (sharded by
     // doc_id mod 3 here) merge by exact sum in a SHUFFLED order, then
     // the shared derivation emits the model — bit-equal to training on
@@ -4200,16 +3509,16 @@ object SparkEntry {
     // boundaries, CJK/emoji patterns hitting the planted multilingual
     // rows, and a zero-hit term that must stay in the output
     "text_blocklist" -> ((s, d) =>
-      graft.text.TextAnalysis.blocklistTermStats(docsMl(s, d), blocklistTerms)),
+      graft.text.TextAnalysis.blocklistTermStats(Fixtures.ml.df(s, d), blocklistTerms)),
     // the cleaning DECISION view of the same one-pass scan: per-source
     // share of documents containing ANY lexicon term, exact 1e-4 grid
     "text_blocklist_share" -> ((s, d) =>
-      graft.text.TextAnalysis.blocklistDocShare(docsMl(s, d), blocklistTerms)),
+      graft.text.TextAnalysis.blocklistDocShare(Fixtures.ml.df(s, d), blocklistTerms)),
     // WORD-BOUNDARY blocklist (the C4 badwords semantic): whole tokens
     // only — the nested substring plants ("low"⊂"slow", "can"⊂"scan")
     // must score ZERO here while the substring scan counts them
     "text_blocklist_words" -> ((s, d) =>
-      graft.text.TextAnalysis.blocklistWordStats(docsMl(s, d),
+      graft.text.TextAnalysis.blocklistWordStats(Fixtures.ml.df(s, d),
         blocklistTerms.filterNot(_.contains(' ')))),
     // the packing operator budgeting in SUBWORD tokens — same two-level
     // prefix-sum plan, the count column is the BPE encode
@@ -4251,7 +3560,7 @@ object SparkEntry {
     // vocabulary table + driver argmax + one codegen merge map;
     // deterministic ⇒ fully ORACLED by replaying the 8 stages in SQL
     "bpe_train_merges" -> ((s, d) =>
-      graft.text.BpeTrainer.trainedMergesFrame(docsMl(s, d), 8)),
+      graft.text.BpeTrainer.trainedMergesFrame(Fixtures.ml.df(s, d), 8)),
     // INCREMENTAL vocabulary update: train 4 merges, then CONTINUE
     // with 4 more. r16: the continuation resumes from the first
     // training's LIVE state (word table + pair-count map) instead of
@@ -4263,7 +3572,7 @@ object SparkEntry {
     // continue(train(4), +4) == train(8)
     "bpe_train_continue" -> ((s, d) =>
       graft.text.BpeTrainer.mergesFrame(s,
-        graft.text.BpeTrainer.trainThenContinueMerges(docsMl(s, d), 4, 4))),
+        graft.text.BpeTrainer.trainThenContinueMerges(Fixtures.ml.df(s, d), 4, 4))),
     // TRUE merge-order BPE encode under the TRAINED vocabulary: apply
     // the 8 learned merges in rank order (chained codegen maps over
     // the distinct-word table), count final symbols per word, sum per
@@ -4274,7 +3583,7 @@ object SparkEntry {
     // `bpe_train_merges` entry, this one times the ENCODE (merges are
     // deterministic, so the always-training oracle still matches).
     "bpe_encode_merge_order" -> ((s, d) =>
-      graft.text.BpeTrainer.mergeOrderTokenStats(docsMl(s, d),
+      graft.text.BpeTrainer.mergeOrderTokenStats(Fixtures.ml.df(s, d),
         trainedMerges(s, d))),
     // the train→encode→budget loop CLOSED: packing bins budgeted in
     // tokens of the in-query-TRAINED vocabulary (merge-order encode
@@ -4283,9 +3592,9 @@ object SparkEntry {
     // end-to-end, not a shipped literal
     "pack_sequences_trained" -> ((s, d) => {
       val counts = graft.text.BpeTrainer
-        .mergeOrderTokenStats(docsMl(s, d), trainedMerges(s, d))
+        .mergeOrderTokenStats(Fixtures.ml.df(s, d), trainedMerges(s, d))
         .select(col("doc_id"), col("n_tokens_merge_order"))
-      val budgeted = docsMl(s, d).select(col("doc_id"), col("source"))
+      val budgeted = Fixtures.ml.df(s, d).select(col("doc_id"), col("source"))
         .join(counts, Seq("doc_id"), "left")
         .select(col("doc_id"), col("source"),
           coalesce(col("n_tokens_merge_order"), lit(0L)).as("n_tokens"))
@@ -4298,7 +3607,7 @@ object SparkEntry {
     // greedy ids (argmax-length vocab index; byte-fallback block) and
     // replays the rolling hash
     "text_tokens_ids" -> ((s, d) =>
-      docsMl(s, d).select(col("doc_id"),
+      Fixtures.ml.df(s, d).select(col("doc_id"),
           graft.text.TextAnalysis.bpeEncodeIds(col("text")).as("ids"))
         .select(col("doc_id"), size(col("ids")).cast("long").as("n_tokens"),
           graft.text.TextAnalysis.idsFingerprint(col("ids")).as("ids_fp"))),
@@ -4308,7 +3617,7 @@ object SparkEntry {
     // rows near zero); same generated-CTE oracle as text_tokens_ids
     "text_oov_rate" -> ((s, d) => {
       val v = graft.functions.BpeTokenizer.defaultVocab.size
-      docsMl(s, d).select(col("doc_id"), col("lang"),
+      Fixtures.ml.df(s, d).select(col("doc_id"), col("lang"),
           graft.text.TextAnalysis.bpeEncodeIds(col("text")).as("ids"))
         .select(col("doc_id"), col("lang"),
           size(col("ids")).cast("long").as("n_tokens"),
@@ -4323,7 +3632,7 @@ object SparkEntry {
     // the round trip equals the input minus the spaces encode drops —
     // the oracle needs no token knowledge at all
     "text_detokenize" -> ((s, d) =>
-      docsMl(s, d).select(col("doc_id"),
+      Fixtures.ml.df(s, d).select(col("doc_id"),
         graft.functions.BpeTokenizer.bpe_decode(
           graft.functions.BpeTokenizer.bpe_encode(lower(col("text"))))
           .as("detok"))),
@@ -4334,7 +3643,7 @@ object SparkEntry {
     // invertibility contract every byte-level stack relies on; the
     // oracle needs no token knowledge at all.
     "text_detokenize_bytes" -> ((s, d) =>
-      docsMl(s, d).select(col("doc_id"),
+      Fixtures.ml.df(s, d).select(col("doc_id"),
         graft.functions.BpeTokenizer.byte_unicode_decode(
           graft.functions.BpeTokenizer.bpe_decode(
             graft.functions.BpeTokenizer.bpe_encode(
@@ -4375,16 +3684,16 @@ object SparkEntry {
     // integer surrogate sums; planted zh/fr/ru/ko rows must
     // self-classify and mislabeled ASCII docs must flag label_ok=false
     "text_langid_nb" -> ((s, d) =>
-      graft.text.TextAnalysis.langidNb(docsMl(s, d),
+      graft.text.TextAnalysis.langidNb(Fixtures.ml.df(s, d),
         col("lang") === "en" || col("source") === "planted_ml")),
     // Unicode script-mix profile (routing prior): literal codepoint
     // ranges read identically by Java regex and RE2; zero shuffle
     "text_scripts" -> ((s, d) =>
-      graft.text.TextAnalysis.scriptMix(docsMl(s, d))),
+      graft.text.TextAnalysis.scriptMix(Fixtures.ml.df(s, d))),
     // storable langid model: 3 disjoint seed shards fold by exact sum
     // into the batch-equal count table (no rescan of old shards)
     "langid_model_incremental" -> ((s, d) => {
-      val dm = docsMl(s, d)
+      val dm = Fixtures.ml.df(s, d)
       val seed = col("lang") === "en" || col("source") === "planted_ml"
       val shards = (0 to 2).map(i => graft.text.TextAnalysis
         .langidCountState(dm.filter(pmod(col("doc_id"), lit(3)) === i), seed))
@@ -4398,7 +3707,7 @@ object SparkEntry {
     // (changing the trust contract re-mines). Fold ≡ batch counting,
     // the langid_model_incremental oracle verbatim
     "langid_model_folded" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, mlInputDir(s, d), 3)
+      val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.ml.inputDir(s, d), 3)
       val name = "docsml_mod3_" + Integer.toHexString(d.hashCode)
       if (!graft.text.TextAnalysis.langidFoldedExists(name, langidSeedSql))
         graft.text.TextAnalysis.langidStateArtifactFolded(s, name,
@@ -4413,7 +3722,7 @@ object SparkEntry {
     // SFT loss-mask prep: 0 through "prompt ### ", 1 over the
     // completion; separator-free docs flag has_pair=false
     "sft_loss_mask" -> ((s, d) =>
-      graft.text.TextAnalysis.sftLossMask(docsSft(s, d))),
+      graft.text.TextAnalysis.sftLossMask(Fixtures.sft.df(s, d))),
     // functional-dependency discovery (TANE level-1 profiling): all
     // ordered pairs from ONE distinct-count pass
     "fd_discovery" -> ((s, d) =>
@@ -4525,14 +3834,14 @@ object SparkEntry {
     // the lookahead-free decision procedure as a codegen kernel, one
     // walk + narrow explode, zero shuffle
     "text_pretokenize" -> ((s, d) =>
-      graft.text.TextAnalysis.pretokenize(docsPre(s, d))),
+      graft.text.TextAnalysis.pretokenize(Fixtures.pre.df(s, d))),
     // the AUTHENTIC GPT-2 composition: BPE token counts over the
     // pretoken stream (contractions and leading-space units tokenize
     // separately, exactly as the real tokenizer segments them);
     // whitespace-only pretokens carry 0 trie tokens — the word-level
     // trie's documented simplification vs byte-level space encoding
     "text_tokens_bpe_pretok" -> ((s, d) =>
-      graft.text.TextAnalysis.pretokenize(docsPre(s, d))
+      graft.text.TextAnalysis.pretokenize(Fixtures.pre.df(s, d))
         .withColumn("__n",
           graft.text.TextAnalysis.bpeTokenCount(col("pretoken")))
         .groupBy(col("doc_id"))
@@ -4545,7 +3854,7 @@ object SparkEntry {
     // (Ġ/Ċ fallback units) instead of the word path's documented 0-token
     // deviation — every byte of the corpus is accounted for.
     "text_tokens_bpe_bytes" -> ((s, d) =>
-      graft.text.TextAnalysis.pretokenize(docsPre(s, d))
+      graft.text.TextAnalysis.pretokenize(Fixtures.pre.df(s, d))
         .withColumn("__n",
           graft.functions.BpeTokenizer.bpe_count_bytes(col("pretoken")))
         .groupBy(col("doc_id"))
@@ -4555,39 +3864,39 @@ object SparkEntry {
     // zero-width + bidi-control counts and the stripped text, one
     // regexp pass per class, zero shuffle
     "text_sanitize_invisible" -> ((s, d) =>
-      graft.text.TextAnalysis.sanitizeInvisible(docsInvis(s, d))),
+      graft.text.TextAnalysis.sanitizeInvisible(Fixtures.invis.df(s, d))),
     // IBAN detection with the real mod-97 checksum (the Luhn posture
     // for bank accounts): one regexp scan, fold only over candidates
     "pii_iban" -> ((s, d) =>
-      graft.text.TextAnalysis.piiIban(docsIban(s, d))),
+      graft.text.TextAnalysis.piiIban(Fixtures.iban.df(s, d))),
     // sentence-aligned chunking (RAG splitter): fixed-budget
     // cumulative rule, boundaries only between sentences; per-doc
     // windows, no global sort
     "chunk_sentences" -> ((s, d) =>
-      graft.text.TextAnalysis.chunkSentences(docsSent(s, d))),
+      graft.text.TextAnalysis.chunkSentences(Fixtures.sent.df(s, d))),
     // the FULL Gopher repetition table (Rae et al. Table A1): top
     // 2/3/4-gram char fraction + duplicated 5..10-gram char coverage,
     // paper thresholds on the exact grid; one count shuffle total
     "text_rep_gopher" -> ((s, d) =>
-      graft.text.TextAnalysis.gopherRepetition(docsRep(s, d))),
+      graft.text.TextAnalysis.gopherRepetition(Fixtures.rep.df(s, d))),
     // mojibake detect+repair (the ftfy CP1252 double-encoding fix):
     // one codegen walk per row, zero shuffle; conservative no-touch
     // on anything not strictly-valid reinterpreted UTF-8
     "text_mojibake" -> ((s, d) =>
-      graft.text.TextAnalysis.mojibakeRepair(docsMoji(s, d))),
+      graft.text.TextAnalysis.mojibakeRepair(Fixtures.moji.df(s, d))),
     // multi-turn chat loss masks (train-on-assistant-turns): the
     // running-role fold is a codegen kernel, every count a codegen
     // builtin; zero shuffle; marker-free corpus docs flow through as
     // all-zero masks
     "chat_loss_mask" -> ((s, d) =>
-      graft.text.TextAnalysis.chatLossMask(docsChat(s, d))),
+      graft.text.TextAnalysis.chatLossMask(Fixtures.chat.df(s, d))),
     // DPO preference-pair election (UltraFeedback binarization):
     // completions grouped by exact prompt, scored on the 1e-4
     // diversity grid, chosen/rejected elected by struct min/max
     // aggregates — map-side partials, no window; tie rules and
     // zero-margin drops pinned by the planted groups
     "dpo_pairs" -> ((s, d) =>
-      graft.pipeline.Pipeline.dpoPairs(docsDpo(s, d))),
+      graft.pipeline.Pipeline.dpoPairs(Fixtures.dpo.df(s, d))),
     "text_fingerprint" -> ((s, d) => graft.text.TextAnalysis.fingerprints(docs(s, d))),
     "text_rolling_fp" -> ((s, d) => graft.text.TextAnalysis.rollingFingerprints(docs(s, d))),
     // winnowing (MOSS) fingerprint candidate pairs: window-min selected
@@ -4617,7 +3926,7 @@ object SparkEntry {
     // bounds, alnum fraction, comment share, autogen marker — all on
     // the exact 1e-4 grid, zero shuffle
     "code_quality_rules" -> ((s, d) =>
-      graft.text.TextAnalysis.codeQualityRules(docsCode(s, d))),
+      graft.text.TextAnalysis.codeQualityRules(Fixtures.code.df(s, d))),
     // ROUGE-L instruction-pool dedup (the Self-Instruct/Alpaca
     // admission filter): max 2·LCS/(n+m) vs a broadcast pool on the
     // exact 1e-4 grid, θ=0.7 verdict; candidates capped at 24 tokens
@@ -4625,7 +3934,7 @@ object SparkEntry {
     // The codegen LCS kernel runs per (candidate × pool) pair — one
     // corpus scan, no shuffle beyond the per-doc argmax agg.
     "text_rouge_dedup" -> ((s, d) =>
-      graft.text.TextAnalysis.rougeDedup(docsInst(s, d), instPool, 24)),
+      graft.text.TextAnalysis.rougeDedup(Fixtures.inst.df(s, d), Fixtures.instPool, 24)),
     // fastText-style linear quality model over a literal vocab: weights
     // are exact dyadic rationals so the fold is bit-identical on any
     // engine (no float-association or libm divergence in the gate)
@@ -5209,7 +4518,7 @@ object SparkEntry {
     // read back as ONE widened table (int→long, float→double, missing
     // column null-fills); Spark's own mergeSchema rejects this read
     "schema_evolution_read" -> ((s, d) =>
-      graft.sources.Sources.evolvedUnionRead(s, evolvedShards(s, d))),
+      graft.sources.Sources.evolvedUnionRead(s, Fixtures.evolvedShards(s, d))),
     // full pipeline composition: quality gate → language gate → exact
     // dedup (keep lowest doc_id per content hash) → hash split → pack.
     // One dataflow, three shuffles (dedup window, split-free, pack
@@ -5466,7 +4775,7 @@ object SparkEntry {
     * serve paths (the folded (sum,sum,min) census ≡ the whole-corpus
     * census, so both serve the same frozen line list). */
   private lazy val stripBoilerplateSql: String =
-    s"""WITH dnl AS ($nlDocsSelect),
+    s"""WITH dnl AS (${Fixtures.nl.sql}),
       |l0 AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM dnl),
       |e0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ls)),
       |    i -> {'p': i, 'line': ls[i]})) AS u FROM l0),
@@ -5539,7 +4848,7 @@ object SparkEntry {
       |WHERE round(shared / (sa.sz + sb.sz - shared), 4) >= 0.5""".stripMargin
   private val shingleCte = "WITH " + shingleCteFor("documents")
   private lazy val shingleCteMl =
-    s"WITH dml AS MATERIALIZED ($mlDocsSelect),\n" + shingleCteFor("dml")
+    s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),\n" + shingleCteFor("dml")
 
   /** Inference-lattice oracle, generated per column: None → Integer →
     * Double → Date → String. The Date rung mirrors guessSchema's
@@ -5661,22 +4970,39 @@ object SparkEntry {
   }
 
   /** The compaction sink dir of this session's `sink_compaction_plan`
-    * run — the dump-time oracle reads the SAME file listing (names and
-    * sizes) through DuckDB's read_blob and replays the offset binning,
-    * so the plan is value-checked against the actual on-disk layout. */
-  @volatile private var compactionSinkDir: Option[String] = None
+    * run. The sink is deleted when the JVM exits, before any DuckDB
+    * compare can read it, so the oracle carries the on-disk listing
+    * (names and sizes, read off the directory when the oracle is
+    * rendered, not taken from the plan) and replays the offset binning
+    * over it. */
+  @volatile private[graft] var compactionSinkDir: Option[String] = None
+
+  /** Where `sink_compaction_plan` writes: one temp dir per JVM, outside
+    * the artifact root, so runs from another checkout on the host can
+    * never rewrite the files between a run and its oracle. Every run
+    * overwrites it (repeated runs leak nothing); removed at JVM exit. */
+  private lazy val compactionSink: String = {
+    val root = java.nio.file.Files.createTempDirectory("graft_compaction_")
+    sys.addShutdownHook(graft.engine.Artifacts.deleteRecursively(root.toFile))
+    root.resolve("sink").toString
+  }
 
   private def compactionOracle: Map[String, String] =
     compactionSinkDir match {
       case None => Map.empty
       case Some(dir) =>
+        def ls(f: java.io.File) = Option(f.listFiles).toSeq.flatten
+        val files = for {
+          p <- ls(new java.io.File(dir))
+          if p.isDirectory && p.getName.startsWith("lang=")
+          f <- ls(p)
+          if f.isFile && f.getName.endsWith(".parquet") &&
+            !f.getName.startsWith(".")
+        } yield s"('${p.getName}', '${f.getName}', ${f.length})"
+        require(files.nonEmpty, s"compaction sink $dir holds no parquet files")
         Map("sink_compaction_plan" ->
-          s"""WITH f AS (SELECT filename, size
-             |    FROM read_blob('$dir/lang=*/*.parquet')),
-             |p AS (SELECT regexp_extract(filename, 'lang=[^/]+', 0)
-             |      AS part_dir,
-             |    regexp_extract(filename, '[^/]+$$', 0) AS file,
-             |    CAST(size AS BIGINT) AS bytes FROM f),
+          s"""WITH p AS (SELECT part_dir, file, CAST(bytes AS BIGINT) AS bytes
+             |  FROM (VALUES ${files.mkString(", ")}) AS t(part_dir, file, bytes)),
              |c AS (SELECT part_dir, file, bytes,
              |    COALESCE(SUM(bytes) OVER (PARTITION BY part_dir
              |      ORDER BY file ROWS BETWEEN UNBOUNDED PRECEDING
@@ -6256,7 +5582,7 @@ object SparkEntry {
         |  CAST(length(substring(text, CAST(start AS INT), 128)) AS INT) AS chunk_len
         |FROM (SELECT doc_id, text, unnest(generate_series(1, length(text), 64)) AS start
         |  FROM documents WHERE length(text) > 0)""".stripMargin,
-    "text_rouge_dedup" -> rougeSql(instPool, 24, 7000L),
+    "text_rouge_dedup" -> rougeSql(Fixtures.instPool, 24, 7000L),
     "dsir_select" ->
       """WITH toks AS (
         |  SELECT doc_id, lang, list_filter(string_split(lower(text), ' '),
@@ -6388,7 +5714,7 @@ object SparkEntry {
         |    CAST(least(start + 31, len(ws)) AS INTEGER)), ' ') AS chunk_text
         |FROM c""".stripMargin,
     "code_quality_rules" ->
-      s"""WITH dc AS MATERIALIZED ($codeDocsSelect),
+      s"""WITH dc AS MATERIALIZED (${Fixtures.code.sql}),
          |t AS (SELECT doc_id, text, string_split(text, chr(10)) AS ls FROM dc),
          |m AS (SELECT doc_id,
          |    CAST(len(ls) AS BIGINT) AS n_lines,
@@ -6413,7 +5739,7 @@ object SparkEntry {
     // scores → argmax with lang-asc ties; DuckDB range(1, n) is empty
     // when n ≤ 1, so the short-doc guard is implicit on this side
     "text_langid_nb" ->
-      s"""WITH dml AS MATERIALIZED ($mlDocsSelect),
+      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
          |g AS MATERIALIZED (SELECT doc_id, lang,
          |    (lang = 'en' OR source = 'planted_ml') AS seed,
          |    unnest([substr(lower(text), CAST(i AS INTEGER), 2)
@@ -6490,7 +5816,7 @@ object SparkEntry {
     // the engine's codepoint distance exactly (see mlLevTranslate)
     "dedup_edit_distance_ml" -> {
       val (frm, to) = mlLevTranslate
-      s"""WITH dml AS MATERIALIZED ($mlDocsSelect),
+      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
         |w AS (SELECT doc_id, lower(text) AS t, string_split(lower(text), ' ') AS ws FROM dml),
         |g AS (SELECT DISTINCT doc_id, gram FROM (
         |  SELECT doc_id, unnest([array_to_string(ws[i:i+4], ' ') for i in range(1, len(ws)-3)]) AS gram
@@ -7170,7 +6496,7 @@ object SparkEntry {
         |  min(doc_id) AS keep_id, count(*) AS n_copies,
         |  CAST(count(DISTINCT text) AS BIGINT) AS n_raw_forms
         |FROM dml GROUP BY 1""".stripMargin
-      s"WITH dml AS MATERIALIZED ($mlDocsSelect)\n$body"
+      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql})\n$body"
     },
     "dedup_jaccard_3gram" -> shingleCte,
     "dedup_jaccard_3gram_ml" -> shingleCteMl,
@@ -7397,7 +6723,7 @@ object SparkEntry {
         |    AS bucket_bits FROM w)
         |GROUP BY bucket_bits""".stripMargin,
     "sft_loss_mask" ->
-      s"""WITH ds AS MATERIALIZED ($sftDocsSelect),
+      s"""WITH ds AS MATERIALIZED (${Fixtures.sft.sql}),
          |t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
          |    w -> w <> '') AS ws FROM ds),
          |b AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
@@ -7623,13 +6949,13 @@ object SparkEntry {
         |FROM c""".stripMargin,
     "text_pretokenize" ->
       s"""WITH RECURSIVE
-         |dd AS MATERIALIZED ($preDocsSelect),
+         |dd AS MATERIALIZED (${Fixtures.pre.sql}),
          |${pretokCtes("dd")}
          |SELECT doc_id, idx - 1 AS idx, tok AS pretoken FROM toks
          |WHERE tok IS NOT NULL""".stripMargin,
     "text_tokens_bpe_pretok" ->
       s"""WITH RECURSIVE
-         |dd AS MATERIALIZED ($preDocsSelect),
+         |dd AS MATERIALIZED (${Fixtures.pre.sql}),
          |${pretokCtes("dd")},
          |ptk AS MATERIALIZED (SELECT doc_id, idx, tok FROM toks
          |  WHERE tok IS NOT NULL),
@@ -7654,7 +6980,7 @@ object SparkEntry {
       val bv = graft.functions.BpeTokenizer.vocabSqlList(
         graft.functions.BpeTokenizer.byteVocab)
       s"""WITH RECURSIVE
-         |dd AS MATERIALIZED ($preDocsSelect),
+         |dd AS MATERIALIZED (${Fixtures.pre.sql}),
          |${pretokCtes("dd")},
          |ptk AS MATERIALIZED (SELECT doc_id, idx, tok FROM toks
          |  WHERE tok IS NOT NULL),
@@ -7684,7 +7010,7 @@ object SparkEntry {
          |FROM bm b JOIN wt ON wt.w = b.bw GROUP BY 1""".stripMargin
     },
     "text_sanitize_invisible" ->
-      s"""WITH dd AS MATERIALIZED ($invisDocsSelect)
+      s"""WITH dd AS MATERIALIZED (${Fixtures.invis.sql})
          |SELECT doc_id,
          |  CAST(len(regexp_extract_all(text,
          |    '[\\x{200B}-\\x{200F}\\x{2060}-\\x{2064}\\x{FEFF}]'))
@@ -7699,7 +7025,7 @@ object SparkEntry {
          |    AS text_clean
          |FROM dd""".stripMargin,
     "pii_iban" ->
-      s"""WITH dd AS MATERIALIZED ($ibanDocsSelect)
+      s"""WITH dd AS MATERIALIZED (${Fixtures.iban.sql})
          |SELECT doc_id,
          |  CAST(len(regexp_extract_all(text,
          |    '[A-Z]{2}[0-9]{2}[A-Z0-9]{11,30}')) AS BIGINT)
@@ -7718,7 +7044,7 @@ object SparkEntry {
          |        END + e % 10000) % 97) = 1)) AS BIGINT) AS n_iban_valid
          |FROM dd""".stripMargin,
     "chunk_sentences" ->
-      s"""WITH dd AS MATERIALIZED ($sentDocsSelect),
+      s"""WITH dd AS MATERIALIZED (${Fixtures.sent.sql}),
          |t AS (SELECT doc_id, list_filter(string_split(text, '. '),
          |    x -> x <> '') AS ss FROM dd),
          |s AS (SELECT doc_id, j, ss[CAST(j AS INTEGER)] AS sent,
@@ -7739,7 +7065,7 @@ object SparkEntry {
     "text_rep_gopher" -> gopherRepSql,
     "text_mojibake" -> mojibakeSql,
     "chat_loss_mask" ->
-      s"""WITH dd AS MATERIALIZED ($chatDocsSelect),
+      s"""WITH dd AS MATERIALIZED (${Fixtures.chat.sql}),
          |t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
          |    w -> w <> '') AS ws FROM dd),
          |e AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n, ws,
@@ -7766,7 +7092,7 @@ object SparkEntry {
          |    THEN '1' ELSE '0' END, '' ORDER BY j) AS loss_mask
          |FROM r GROUP BY doc_id""".stripMargin,
     "dpo_pairs" ->
-      s"""WITH dd AS MATERIALIZED ($dpoDocsSelect),
+      s"""WITH dd AS MATERIALIZED (${Fixtures.dpo.sql}),
          |t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
          |    w -> w <> '') AS ws FROM dd),
          |b AS (SELECT doc_id, ws,
@@ -7953,7 +7279,7 @@ object SparkEntry {
         |  list_min(qs) AS q_min, list_max(qs) AS q_max FROM q""".stripMargin,
     // the Luhn fold replayed as the same right-indexed list fold
     "pii_stats" ->
-      s"""WITH dp AS ($piiDocsSelect)
+      s"""WITH dp AS (${Fixtures.pii.sql})
         |SELECT doc_id,
         |  CAST(len(regexp_extract_all(text,
         |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}')) AS BIGINT) AS n_emails,
@@ -7997,7 +7323,7 @@ object SparkEntry {
     // double-counted shard, lost (sum,sum,min) merge key, stale stored
     // state — breaks the hash
     "text_boilerplate_folded" ->
-      s"""WITH dnl AS ($nlDocsSelect),
+      s"""WITH dnl AS (${Fixtures.nl.sql}),
         |e AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM dnl)
         |SELECT line, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
         |  CAST(count(*) AS BIGINT) AS n_occurrences, min(doc_id) AS keeper
@@ -8019,7 +7345,7 @@ object SparkEntry {
       |SELECT sz, CAST(count(*) AS BIGINT) AS n_clusters
       |FROM szs GROUP BY 1""".stripMargin),
     "dedup_containment" ->
-      s"""WITH dc AS MATERIALIZED ($contDocsSelect),
+      s"""WITH dc AS MATERIALIZED (${Fixtures.cont.sql}),
          |w AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
          |    x -> x <> '') AS ws FROM dc),
          |sh AS (SELECT DISTINCT doc_id, shingle FROM
@@ -8182,7 +7508,7 @@ object SparkEntry {
          |  % 10000 < r.cut
          |GROUP BY 1""".stripMargin,
     "text_scripts" ->
-      s"""WITH dml AS MATERIALIZED ($mlDocsSelect),
+      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
          |b AS (SELECT doc_id, lower(text) AS t FROM dml),
          |c AS (SELECT doc_id, CAST(length(t) AS BIGINT) AS n_chars,
          |    CAST(length(t) - length(regexp_replace(t, '[a-z]', '', 'g'))
@@ -8337,14 +7663,14 @@ object SparkEntry {
     // the incremental merge is exact on disjoint shards, so the same
     // batch SQL is its oracle verbatim
     "text_boilerplate_incremental" ->
-      s"""WITH dnl AS ($nlDocsSelect),
+      s"""WITH dnl AS (${Fixtures.nl.sql}),
         |e AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM dnl)
         |SELECT line, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
         |  CAST(count(*) AS BIGINT) AS n_occurrences, min(doc_id) AS keeper
         |FROM e WHERE line <> ''
         |GROUP BY line HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
     "text_boilerplate_lines" ->
-      s"""WITH dnl AS ($nlDocsSelect),
+      s"""WITH dnl AS (${Fixtures.nl.sql}),
         |e AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM dnl)
         |SELECT line, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
         |  CAST(count(*) AS BIGINT) AS n_occurrences, min(doc_id) AS keeper
@@ -8353,7 +7679,7 @@ object SparkEntry {
     // the destructive pass replayed positionally: keeper keeps all its
     // copies, every other doc loses all of them, blanks always survive
     "text_remove_dup_lines" ->
-      s"""WITH dnl AS ($nlDocsSelect),
+      s"""WITH dnl AS (${Fixtures.nl.sql}),
         |l0 AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM dnl),
         |e0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ls)),
         |    i -> {'p': i, 'line': ls[i]})) AS u FROM l0),
@@ -8374,7 +7700,7 @@ object SparkEntry {
     // spells ASCII punctuation as explicit ranges (Java∩RE2) and the
     // reassembled text keeps RAW lines
     "text_remove_dup_lines_norm" ->
-      s"""WITH dnl AS ($nlDocsSelect),
+      s"""WITH dnl AS (${Fixtures.nl.sql}),
         |l0 AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM dnl),
         |e0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ls)),
         |    i -> {'p': i, 'line': ls[i]})) AS u FROM l0),
@@ -8419,7 +7745,7 @@ object SparkEntry {
     "link_hits" -> linkHitsSql(3),
     // C4 URL filter: same scheme+host regex, domain = after the '//'
     "text_url_filter" ->
-      s"""WITH du AS ($urlDocsSelect),
+      s"""WITH du AS (${Fixtures.url.sql}),
         |p AS (SELECT doc_id, list_transform(
         |    regexp_extract_all(text, 'https?://[a-z0-9.-]+'),
         |    u -> split_part(u, '//', 2)) AS doms FROM du)
@@ -8433,7 +7759,7 @@ object SparkEntry {
     // fragment, param filter, default ports, trailing slash); DuckDB
     // backrefs are \1 where Spark's are $1 — same RE2-safe patterns
     "url_canonicalize" ->
-      s"""WITH du AS ($urlCanonDocsSelect),
+      s"""WITH du AS (${Fixtures.urlCanon.sql}),
         |r AS (SELECT u.url FROM du,
         |  UNNEST(regexp_extract_all(text, '(?i)https?://[^ ]+')) AS u(url)),
         |c1 AS (SELECT url,
@@ -8480,7 +7806,7 @@ object SparkEntry {
     // HTML extraction replayed transform by transform (DuckDB needs the
     // explicit 'g' flag; Spark regexp_replace is global by default)
     "text_html_extract" ->
-      s"""WITH dh AS ($htmlDocsSelect),
+      s"""WITH dh AS (${Fixtures.html.sql}),
         |c AS (SELECT doc_id,
         |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
         |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
@@ -8640,7 +7966,7 @@ withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
         |  CAST(count(DISTINCT nfc_normalize(text)) AS BIGINT) AS distinct_nfc,
         |  CAST(SUM(length(nfc_normalize(text))) AS BIGINT) AS nfc_codepoints
         |FROM dml GROUP BY 1""".stripMargin
-      s"WITH dml AS MATERIALIZED ($mlDocsSelect)\n$body"
+      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql})\n$body"
     },
     "source_similarity" ->
       """WITH toks AS (SELECT source, u.w AS tok FROM documents,
@@ -8785,7 +8111,7 @@ withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
     // verbatim; the serve side is the planted-augmented corpus while
     // every model CTE reads only `documents`
     "text_lm_backoff" ->
-      s"""WITH dlm AS MATERIALIZED ($lmDocsSelect),
+      s"""WITH dlm AS MATERIALIZED (${Fixtures.lm.sql}),
         |tw AS MATERIALIZED (SELECT doc_id,
         |  list_filter(string_split(lower(text), ' '), w -> w <> '') AS ws
         |  FROM documents),
@@ -8848,7 +8174,7 @@ withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
         |SELECT term, CAST(count(*) FILTER (WHERE cnt > 0) AS BIGINT) AS n_docs,
         |  CAST(SUM(cnt) AS BIGINT) AS n_occurrences
         |FROM h GROUP BY term ORDER BY term""".stripMargin
-      s"WITH dml AS MATERIALIZED ($mlDocsSelect),\n$body"
+      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),\n$body"
     },
     "text_blocklist_share" -> {
       val lst = blocklistTerms.map(t =>
@@ -8861,7 +8187,7 @@ withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
         |      p -> contains(lower(d.text), p))) > 0 THEN 1 ELSE 0 END)
         |    AS BIGINT) * 10000 // count(*)) / 10000.0 AS flagged_share
         |FROM dml d GROUP BY source ORDER BY source""".stripMargin
-      s"WITH dml AS MATERIALIZED ($mlDocsSelect)\n$body"
+      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql})\n$body"
     },
     // whole-token matching: explode tokens, join the lexicon, restore
     // zero-hit terms — the nested plants score 0 here by construction
@@ -8878,12 +8204,12 @@ withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
         |SELECT t.term, COALESCE(h.nd, CAST(0 AS BIGINT)) AS n_docs,
         |  COALESCE(h.no, CAST(0 AS BIGINT)) AS n_occurrences
         |FROM t LEFT JOIN h USING (term) ORDER BY term""".stripMargin
-      s"WITH dml AS MATERIALIZED ($mlDocsSelect),\n$body"
+      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),\n$body"
     },
     // the line rules replayed on the same 1e-4 grid over the planted
     // multi-line fixture
     "text_gopher_lines" ->
-      s"""WITH db AS MATERIALIZED ($bulletDocsSelect),
+      s"""WITH db AS MATERIALIZED (${Fixtures.bullets.sql}),
         |l AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM db),
         |e AS (SELECT doc_id, CAST(len(ls) AS BIGINT) AS n,
         |  CAST(len(list_filter(ls, x -> x LIKE '- %' OR x LIKE '* %'))
@@ -8934,11 +8260,11 @@ withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
     "pack_sequences_trained" ->
       withMlDocs(graft.text.BpeTrainer.packTrainedOracleSql(8, 2048L, "dml")),
     "text_detokenize" ->
-      (s"WITH dml AS ($mlDocsSelect) " +
+      (s"WITH dml AS (${Fixtures.ml.sql}) " +
         "SELECT doc_id, replace(lower(text), ' ', '') AS detok FROM dml"),
     // the byte-level round trip is the IDENTITY — the whole point
     "text_detokenize_bytes" ->
-      (s"WITH dml AS ($mlDocsSelect) " +
+      (s"WITH dml AS (${Fixtures.ml.sql}) " +
         "SELECT doc_id, text AS detok FROM dml"),
     "text_tokens_ids" ->
       withMlDocs(s"""WITH RECURSIVE ${bpeIdsCte("dml")}
@@ -9023,7 +8349,7 @@ withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
     // engines, so the window-min selection replays unchanged over the
     // mixed-script corpus
     "text_winnow_pairs_ml" ->
-      s"""WITH dml AS MATERIALIZED ($mlDocsSelect),
+      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
         |t AS (SELECT doc_id,
         |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
         |  FROM dml),
@@ -9050,7 +8376,7 @@ withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
     // gram hashes its UTF-8 bytes in both engines and positions count
     // words, so mixed-script boundaries replay unchanged
     "text_dup_spans_ml" ->
-      s"""WITH dml AS MATERIALIZED ($mlDocsSelect),
+      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
         |t AS (SELECT doc_id,
         |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
         |  FROM dml),

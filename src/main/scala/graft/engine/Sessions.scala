@@ -17,8 +17,11 @@ import org.apache.spark.sql.SparkSession
   * Spark's codegen cache.
   */
 object Sessions {
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
+
+  /** The conf every graft session shares; `local`, `interactive` and
+    * `graft.Profile` all start from this builder. */
+  def builder(cores: Int = 32, appName: String = "graft"): SparkSession.Builder =
+    SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -38,7 +41,9 @@ object Sessions {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
       .config("spark.ui.enabled", "false")
       .withExtensions(ParamLiterals.inject)
-      .getOrCreate()
+
+  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+    val spark = builder(cores, appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -67,19 +72,8 @@ object Sessions {
             "FAIR scheduling cannot be enabled after context creation — " +
             "create the interactive session before any other session")
       }
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
+    val spark = builder(cores, appName)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(ParamLiterals.inject)
       .getOrCreate()
     // scheduler mode is frozen at SparkContext creation: if another
     // session already exists, getOrCreate silently reuses it and the

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
 /** Min-K-hash distinct-value sampler — hillview's
@@ -51,20 +50,5 @@ object MinKHash {
     override def bufferEncoder: Encoder[KMVBuffer] = Encoders.kryo[KMVBuffer]
     override def outputEncoder: Encoder[Seq[String]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
-  }
-
-  /** Sampled equi-depth boundaries over the distinct values of a string
-    * column: KMV sample of size `sampleK`, then every (sampleK/nBounds)-th
-    * sorted sample value.
-    */
-  def stringBoundaries(df: DataFrame, column: String, nBounds: Int,
-      sampleK: Int = 1024): Seq[String] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sample = df.select(col(column)).as[String]
-      .select(new MinKAggregator(sampleK).toColumn).head()
-    if (sample.isEmpty) Seq.empty
-    else (1 to nBounds).map(i =>
-      sample(math.min(sample.size - 1, i * sample.size / nBounds)))
   }
 }

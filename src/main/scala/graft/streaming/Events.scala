@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.engine.Num
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -614,37 +614,43 @@ object Events {
       }
   }
 
-  /** Drive heavyHittersStream over the events parquet staged as several
-    * files with maxFilesPerTrigger=1 — real multi-batch state, not a
-    * single-batch degenerate run. Returns the final (latest-version)
-    * candidate set per shard.
+  /** The driver every streaming sketch twin shares: stage the events
+    * parquet as 4 files so AvailableNow + maxFilesPerTrigger=1 yields 4
+    * micro-batches carrying state across triggers (real multi-batch
+    * state, not a single-batch degenerate run), stream (shard, `value`)
+    * rows through `stream` into the memory sink `sink`, and return each
+    * shard's latest-version output rows.
     */
-  def runHeavyHittersStream(
-      spark: SparkSession, dir: String, k: Int, shards: Int): DataFrame =
+  private def runShardedStream(spark: SparkSession, dir: String, shards: Int,
+      value: Column, sink: String)(stream: DataFrame => DataFrame): DataFrame =
     withNanosAsLong(spark) {
-      import spark.implicits._
       val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = java.nio.file.Files.createTempDirectory("graft_mg_stream")
-      // stage as 4 files so AvailableNow + maxFilesPerTrigger=1 yields
-      // 4 micro-batches carrying state across triggers
+      val streamDir = java.nio.file.Files.createTempDirectory(s"${sink}_stream")
       spark.read.parquet(s"$dir/events.parquet")
         .repartition(4).write.mode("overwrite").parquet(streamDir.toString)
       val raw = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-      val typed = raw
-        .select(pmod(hash(col("user_id")), lit(shards)).cast("int").as("shard"),
-          col("user_id"))
-        .as[MGRow]
-      val q = heavyHittersStream(typed, k).writeStream
-        .outputMode("update").format("memory").queryName("graft_mg")
+      val q = stream(raw.select(
+          pmod(hash(col("user_id")), lit(shards)).cast("int").as("shard"), value))
+        .writeStream.outputMode("update").format("memory").queryName(sink)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      val all = spark.table("graft_mg")
+      val all = spark.table(sink)
       val latest = all.groupBy(col("shard").as("s"))
         .agg(max(col("version")).as("v"))
       all.join(latest, col("shard") === col("s") && col("version") === col("v"))
-        .select(col("shard"), col("user_id"), col("lower_bound"))
     }
+
+  /** Drive heavyHittersStream through [[runShardedStream]]. Returns the
+    * final (latest-version) candidate set per shard.
+    */
+  def runHeavyHittersStream(
+      spark: SparkSession, dir: String, k: Int, shards: Int): DataFrame = {
+    import spark.implicits._
+    runShardedStream(spark, dir, shards, col("user_id"), "graft_mg")(
+      rows => heavyHittersStream(rows.as[MGRow], k).toDF())
+      .select(col("shard"), col("user_id"), col("lower_bound"))
+  }
 
   final case class HllRow(shard: Int, key: Long)
   final case class HllState(regs: Array[Byte], seen: Long)
@@ -682,38 +688,20 @@ object Events {
       }
   }
 
-  /** Drive distinctStream over the events parquet staged as 4 files
-    * (AvailableNow + maxFilesPerTrigger=1 → real multi-batch state) and
-    * return the final merged register array.
+  /** Drive distinctStream through [[runShardedStream]] and return the
+    * final merged register array.
     */
   def runDistinctStream(
-      spark: SparkSession, dir: String, p: Int, shards: Int): Array[Byte] =
-    withNanosAsLong(spark) {
-      import spark.implicits._
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = java.nio.file.Files.createTempDirectory("graft_hll_stream")
-      spark.read.parquet(s"$dir/events.parquet")
-        .repartition(4).write.mode("overwrite").parquet(streamDir.toString)
-      val raw = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-      val typed = raw
-        .select(pmod(hash(col("user_id")), lit(shards)).cast("int").as("shard"),
-          col("user_id").as("key"))
-        .as[HllRow]
-      val q = distinctStream(typed, p).writeStream
-        .outputMode("update").format("memory").queryName("graft_hll")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val all = spark.table("graft_hll")
-      val latest = all.groupBy(col("shard").as("s"))
-        .agg(max(col("version")).as("v"))
-      val finals = all
-        .join(latest, col("shard") === col("s") && col("version") === col("v"))
-        .select(col("regs")).collect().map(_.getAs[Array[Byte]](0))
-      finals.reduce { (a, b) =>
-        graft.functions.HllSketch.maxMerge(a.clone(), b)
-      }
+      spark: SparkSession, dir: String, p: Int, shards: Int): Array[Byte] = {
+    import spark.implicits._
+    val finals = runShardedStream(spark, dir, shards,
+        col("user_id").as("key"), "graft_hll")(
+        rows => distinctStream(rows.as[HllRow], p).toDF())
+      .select(col("regs")).collect().map(_.getAs[Array[Byte]](0))
+    finals.reduce { (a, b) =>
+      graft.functions.HllSketch.maxMerge(a.clone(), b)
     }
+  }
 
   final case class ThetaRow(shard: Int, key: Long)
   final case class ThetaState(blob: Array[Byte], seen: Long)
@@ -751,40 +739,23 @@ object Events {
       }
   }
 
-  /** Drive thetaStream over the events parquet staged as 4 files (real
-    * multi-batch state) and return the final canonical merged blob. */
+  /** Drive thetaStream through [[runShardedStream]] and return the
+    * final canonical merged blob. */
   def runThetaStream(
-      spark: SparkSession, dir: String, k: Int, shards: Int): Array[Byte] =
-    withNanosAsLong(spark) {
-      import spark.implicits._
-      import graft.functions.ThetaSketch
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = java.nio.file.Files.createTempDirectory("graft_theta_stream")
-      spark.read.parquet(s"$dir/events.parquet")
-        .repartition(4).write.mode("overwrite").parquet(streamDir.toString)
-      val raw = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-      val typed = raw
-        .select(pmod(hash(col("user_id")), lit(shards)).cast("int").as("shard"),
-          col("user_id").as("key"))
-        .as[ThetaRow]
-      val q = thetaStream(typed, k).writeStream
-        .outputMode("update").format("memory").queryName("graft_theta")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val all = spark.table("graft_theta")
-      val latest = all.groupBy(col("shard").as("s"))
-        .agg(max(col("version")).as("v"))
-      val finals = all
-        .join(latest, col("shard") === col("s") && col("version") === col("v"))
-        .select(col("blob")).collect().map(_.getAs[Array[Byte]](0))
-      val acc = ThetaSketch.deserToBuf(finals.head)
-      finals.tail.foreach { b =>
-        val blob = ThetaSketch.deser(b)
-        ThetaSketch.foldInto(acc, blob.k, blob.theta, blob.vs.iterator)
-      }
-      ThetaSketch.canonical(acc)
+      spark: SparkSession, dir: String, k: Int, shards: Int): Array[Byte] = {
+    import spark.implicits._
+    import graft.functions.ThetaSketch
+    val finals = runShardedStream(spark, dir, shards,
+        col("user_id").as("key"), "graft_theta")(
+        rows => thetaStream(rows.as[ThetaRow], k).toDF())
+      .select(col("blob")).collect().map(_.getAs[Array[Byte]](0))
+    val acc = ThetaSketch.deserToBuf(finals.head)
+    finals.tail.foreach { b =>
+      val blob = ThetaSketch.deser(b)
+      ThetaSketch.foldInto(acc, blob.k, blob.theta, blob.vs.iterator)
     }
+    ThetaSketch.canonical(acc)
+  }
 
   final case class KllRow(shard: Int, v: Double)
   final case class KllState(blob: Array[Byte], seen: Long)
@@ -817,37 +788,19 @@ object Events {
       }
   }
 
-  /** Drive quantileStream over the events parquet staged as 4 files and
-    * return the final shard-merged KLL buffer.
+  /** Drive quantileStream through [[runShardedStream]] and return the
+    * final shard-merged KLL buffer.
     */
   def runQuantileStream(
-      spark: SparkSession, dir: String, k: Int, shards: Int): graft.functions.KllSketch.Buf =
-    withNanosAsLong(spark) {
-      import spark.implicits._
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = java.nio.file.Files.createTempDirectory("graft_kll_stream")
-      spark.read.parquet(s"$dir/events.parquet")
-        .repartition(4).write.mode("overwrite").parquet(streamDir.toString)
-      val raw = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-      val typed = raw
-        .select(pmod(hash(col("user_id")), lit(shards)).cast("int").as("shard"),
-          col("value").cast("double").as("v"))
-        .filter(col("v").isNotNull)
-        .as[KllRow]
-      val q = quantileStream(typed, k).writeStream
-        .outputMode("update").format("memory").queryName("graft_kll")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val all = spark.table("graft_kll")
-      val latest = all.groupBy(col("shard").as("s"))
-        .agg(max(col("version")).as("v"))
-      val finals = all
-        .join(latest, col("shard") === col("s") && col("version") === col("v"))
-        .select(col("blob")).collect()
-        .map(r => graft.functions.KllSketch.deserialize(r.getAs[Array[Byte]](0)))
-      finals.reduce(graft.functions.KllSketch.mergeBufs)
-    }
+      spark: SparkSession, dir: String, k: Int, shards: Int): graft.functions.KllSketch.Buf = {
+    import spark.implicits._
+    val finals = runShardedStream(spark, dir, shards,
+        col("value").cast("double").as("v"), "graft_kll")(
+        rows => quantileStream(rows.filter(col("v").isNotNull).as[KllRow], k).toDF())
+      .select(col("blob")).collect()
+      .map(r => graft.functions.KllSketch.deserialize(r.getAs[Array[Byte]](0)))
+    finals.reduce(graft.functions.KllSketch.mergeBufs)
+  }
 
   /** Streaming exact dedup: first occurrence of each content hash passes
     * through, later duplicates are dropped — `dropDuplicates` keeps

@@ -37,6 +37,23 @@ class LayoutSpec extends SparkSpec {
       ("k=b", "part-1.parquet", 20000L, 0L)), plan)
   }
 
+  test("sink_compaction_plan reuses one per-JVM sink outside the artifact root") {
+    def run(): String = {
+      SparkEntry.queries("sink_compaction_plan")(spark, sf).collect()
+      SparkEntry.compactionSinkDir.get
+    }
+    val first = run()
+    assert(run() == first)
+    val sink = java.nio.file.Paths.get(first)
+    assert(!sink.startsWith(java.nio.file.Paths.get(graft.sources.Sources.rtDir(""))),
+      first)
+    // the oracle carries the listing, so it outlives the sink
+    val oracle = SparkEntry.oracleSql("sink_compaction_plan")
+    val files = sink.toFile.listFiles.filter(_.getName.startsWith("lang="))
+      .flatMap(_.listFiles).filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty && files.forall(f => oracle.contains(f.getName)))
+  }
+
   test("bucketed tables join without a shuffle") {
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val o = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")

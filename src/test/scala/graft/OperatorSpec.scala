@@ -497,7 +497,8 @@ class OperatorSpec extends SparkSpec {
 
   test("min-K-hash boundaries are sorted distinct sample values") {
     val c = Tables.customer(spark, sf)
-    val bounds = graft.functions.MinKHash.stringBoundaries(c, "c_name", 8, 256)
+    val bounds = Quantiles.stringBoundaries(c, "c_name", 8, sampleK = 256)
+      .orderBy("tile").collect().map(_.getString(1)).toSeq
     assert(bounds.nonEmpty && bounds.size <= 8)
     assert(bounds == bounds.sorted)
   }

@@ -918,7 +918,7 @@ class PlanSpec extends SparkSpec {
 
   test("rouge dedup: pool broadcasts, LCS kernel in plan, argmax is an agg not a window") {
     val df = graft.text.TextAnalysis.rougeDedup(
-      Tables.documents(spark, sf), SparkEntry.instPool, 24)
+      Tables.documents(spark, sf), Fixtures.instPool, 24)
     val p = plan(df)
     // candidates × pool is a BROADCAST nested-loop of a literal 8-row
     // local relation (the one sanctioned BNLJ shape: broadcast side is

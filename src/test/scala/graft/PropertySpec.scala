@@ -857,7 +857,7 @@ class PropertySpec extends SparkSpec {
     // the production-threshold headline fixture: planted copies sit at
     // cos≈0.87, so exact pairs at θ=0.7 are exactly the planted ones
     // (natural pairs top out at cos≈0.60 in this corpus)
-    val emb = SparkEntry.plantedEmb(spark, sf)
+    val emb = Fixtures.plantedEmb(spark, sf)
     val exact = graft.ann.Similarity.nearDupPairs(emb, 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "planted fixture produced no θ=0.7 pairs")
@@ -1970,7 +1970,7 @@ class PropertySpec extends SparkSpec {
     // non-ASCII coverage on the oracled path — gate their presence and
     // their script spread (CJK, combining marks, astral) so a fixture
     // regression can't silently re-ASCII-fy the UTF-8 trie's oracle
-    val texts = SparkEntry.mlRows.map(_._2)
+    val texts = Fixtures.ml.rows.map(_._2)
     assert(texts.count(_.exists(_ > 127)) >= 5, "non-ASCII rows planted")
     assert(texts.exists(_.codePoints().toArray.exists(_ > 0xFFFF)), "astral")
     assert(texts.exists(_.contains('\u0301')), "combining marks")
@@ -1980,13 +1980,13 @@ class PropertySpec extends SparkSpec {
     val ids = SparkEntry.queries("text_tokens_ids")(spark, sf)
       .filter(org.apache.spark.sql.functions.col("doc_id") >= 9000001L)
       .collect()
-    assert(ids.length == SparkEntry.mlRows.size)
+    assert(ids.length == Fixtures.ml.rows.size)
     assert(ids.forall(_.getLong(1) > 0L), "planted docs tokenized")
     // detokenize round-trips the multilingual text (space-stripped)
     val detok = SparkEntry.queries("text_detokenize")(spark, sf)
       .filter(org.apache.spark.sql.functions.col("doc_id") >= 9000001L)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    SparkEntry.mlRows.foreach { case (id, t, _, _, _) =>
+    Fixtures.ml.rows.foreach { case (id, t, _, _) =>
       assert(detok(id) == t.toLowerCase.replace(" ", ""), s"roundtrip $id")
     }
   }

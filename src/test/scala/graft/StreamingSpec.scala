@@ -995,8 +995,7 @@ class StreamingSpec extends SparkSpec {
   test("langid gate: streamed predictions bit-equal the batch scorer") {
     import spark.implicits._
     val base = graft.engine.Tables.documents(spark, sf)
-    val seedDocs = base.unionByName(SparkEntry.mlRows
-      .toDF("doc_id", "text", "lang", "source", "n_chars"))
+    val seedDocs = Fixtures.ml.df(spark, sf)
     val (model, den) = graft.text.TextAnalysis.langidNbModel(
       seedDocs, col("lang") === "en" || col("source") === "planted_ml")
     Seq(model, den).foreach { m => m.cache(); m.count() }
