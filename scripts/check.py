@@ -32,7 +32,9 @@ for qdir in sorted(OUT.iterdir()):
         spark_df = pd.concat([pd.read_parquet(p) for p in qdir.glob("*.parquet")],
                              ignore_index=True)
     except ValueError:
-        failed.append((name, "no spark output"))
+        marker = qdir / "_FAILED"
+        why = f": {marker.read_text()}" if marker.exists() else ""
+        failed.append((name, f"no spark output{why}"))
         continue
     if name not in oracle:
         rows_only.append((name, len(spark_df)))

@@ -99,7 +99,7 @@ object Bench {
     // outlives JVMs, and a stale receipt must not pose as this run's.
     val buildSplit = try {
       val p = java.nio.file.Paths.get(
-        SparkEntry.pqScratch(sfDir), "build_receipt.json")
+        queries.Hygiene.pqScratch(sfDir), "build_receipt.json")
       if (selected.contains("ann_pq_build") && java.nio.file.Files.exists(p)) {
         // parse before splicing: a truncated/corrupt receipt must not
         // break the whole bench JSON line — splice the re-serialized

@@ -121,8 +121,7 @@ object ScaleProbe {
     val spark = engine.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val wanted = if (args.isEmpty) names else args.toSeq
-    val root = java.nio.file.Files.createTempDirectory("graft_scale_").toFile
-    sys.addShutdownHook(engine.Artifacts.deleteRecursively(root))
+    val root = engine.Artifacts.scratchDir("graft_scale_").toFile
     tiers.foreach { n =>
       val dir = s"$root/x$n"
       writeTier(spark, sf, n, dir)

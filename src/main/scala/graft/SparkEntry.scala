@@ -1,14 +1,15 @@
 package graft
 
-import graft.engine.{Num, Tables}
-import graft.operators._
-import graft.operators.NextK.{AggSpec, AvgAgg, MaxAgg, MinAgg, Order, SumAgg}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.queries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the training-data-pipeline layer), each with a DuckDB
-  * oracle twin in `oracleSql`. Column names/aliases match pairwise.
+/** The query contract — the named queries, one per implemented operator
+  * from SURVEY.md §2 (+ the training-data-pipeline layer). Each is
+  * declared once, as a [[graft.queries.QuerySpec]] holding its builder
+  * and its check, in the family object under `graft.queries` that its
+  * section belongs to; this object holds the three views that Verify,
+  * Bench, Plans and the tests read. Column names/aliases match the
+  * oracle's pairwise.
   *
   * Numeric policy (see graft.engine.Num): counts/min/max exact; sums of
   * ≤2-decimal columns via exact decimal aggregation cast back to double;
@@ -21,9182 +22,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  private def li(s: SparkSession, d: String)   = Tables.lineitem(s, d)
-  private def ord(s: SparkSession, d: String)  = Tables.orders(s, d)
-  private def cust(s: SparkSession, d: String) = Tables.customer(s, d)
-  private def prt(s: SparkSession, d: String)  = Tables.part(s, d)
-  private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
-  private def emb(s: SparkSession, d: String)  = Tables.embeddings(s, d)
-  private def ev(s: SparkSession, d: String)   = Tables.events(s, d)
-
-  /** Two filtered-then-projected VIEWS of orders combined through the
-    * TargetRegistry's row-identity set algebra. The projection to
-    * (o_custkey, o_orderstatus) manufactures duplicate-VALUED rows from
-    * distinct physical rows — the case where membership-set and
-    * value-set semantics diverge. */
-  private def setOpDups(s: SparkSession, d: String, kind: String): DataFrame = {
-    val reg = new graft.engine.TargetRegistry(s)
-    val root = reg.loadTable(d, "orders")
-    val keep = Seq("o_custkey", "o_orderstatus")
-    val a = reg.project(
-      reg.filter(root.id, col("o_totalprice") > 200000.0).id, keep)
-    val b = reg.project(
-      reg.filter(root.id, col("o_orderpriority") === "1-URGENT").id, keep)
-    reg.setOp(a.id, b.id, kind).df
-  }
-
-  // PQ / IVF-PQ build-vs-serve split: `ann_pq_build` times the one-time
-  // index build (train + encode + persist); the `ann_*pq_topk` queries
-  // are the SERVE path over the prebuilt persisted index — the number
-  // production pays per query batch. Built once per corpus dir and
-  // memoized (the hillview load-once / sketch-per-gesture posture).
-  private val pqIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // a FIXED per-corpus scratch dir (mode=overwrite inside build), so
-  // repeated builds reuse the same path instead of leaking a fresh
-  // temp tree per bench iteration
-  private[graft] def pqScratch(d: String): String =
-    graft.engine.Artifacts.lineageDir("pq_index", d)
-  private def pqIndexDir(s: SparkSession, d: String): String =
-    pqIndexDirs.computeIfAbsent(d, _ => {
-      val dir = pqScratch(d)
-      graft.ann.PqIndex.build(emb(s, d), dir)
-      dir
-    })
-
-  // memoized corpus vector count per dir: sizes the LSH auto-tuning
-  // without an eager count() job inside every serve (production knows
-  // its corpus scale; the first call pays one count)
-  private val embCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def embCount(s: SparkSession, d: String): Long =
-    embCounts.computeIfAbsent(d, _ => emb(s, d).count()).longValue
-
-  /** The blocklist lexicon for `text_blocklist*`: fixture-vocabulary
-    * terms chosen to exercise the automaton — prefix-nested pairs
-    * ("low" ⊂ "slow", "can" ⊂ "scan": dictionary-suffix emission), a
-    * multi-word phrase, CJK / precomposed-accent / emoji patterns
-    * hitting the planted multilingual rows (the byte-level UTF-8 walk;
-    * the decomposed twin row must NOT match 'café'), a single-letter
-    * high-frequency term, and one term absent from the corpus. */
-  private[graft] val blocklistTerms: Seq[String] = Seq(
-    "a", "agg", "can", "data", "join", "key", "low", "merge", "order",
-    "scan", "slow", "slow join", "stream", "qqq", "café", "去重", "🚀")
-
-  /** Injective codepoint → single-ASCII-byte map over the planted
-    * multilingual alphabet. DuckDB's `levenshtein` is BYTE-based while
-    * the engine's (Spark's) is CODEPOINT-based — the documented unit
-    * choice for `dedup_edit_distance*`: one edit = one codepoint, so a
-    * CJK substitution costs 1, not 3. An injective per-codepoint
-    * renaming preserves codepoint edit distance exactly, and renaming
-    * into single bytes makes DuckDB's byte distance EQUAL it — the
-    * oracle translates, the engine does not (the engine must prove its
-    * unit on raw UTF-8). The substitute pool avoids the corpus
-    * alphabet (space + lowercase ascii after lower()), the SQL quote,
-    * backslash, and '|' (stripMargin). */
-  private[graft] val mlLevTranslate: (String, String) = {
-    val cps = Fixtures.ml.rows.flatMap(_._2.codePoints().toArray.toSeq)
-      .filter(_ > 127).distinct.sorted
-    val pool = "0123456789" + ('A' to 'Z').mkString +
-      "!#$%&()*+,-./:;<=>?@[]^_{}~"
-    require(cps.size <= pool.length,
-      s"substitute pool too small for ${cps.size} planted codepoints")
-    (cps.map(cp => new String(Character.toChars(cp))).mkString,
-      pool.take(cps.size))
-  }
-
-  /** Batch bigram-LM training oracle, shared by `lm_model_incremental`
-    * and `lm_model_folded`: exact-sum state folds ≡ training on the
-    * union, so the oracle trains on the whole table directly — the
-    * equality IS the storable-state claim. */
-  private val lmModelTrainSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id, list_filter(string_split(lower(text), ' '),
-      |    w -> w <> '') AS ws FROM documents),
-      |big AS (
-      |  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-      |  FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-      |  WHERE len(ws) >= 2),
-      |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS n2
-      |  FROM big GROUP BY 1, 2),
-      |c1 AS (SELECT w1, CAST(SUM(n2) AS BIGINT) AS n1 FROM c2 GROUP BY 1)
-      |SELECT c2.w1, c2.w2,
-      |  CAST(length(bin(n1)) - length(bin(n2)) AS BIGINT) AS surp
-      |FROM c2 JOIN c1 USING (w1)""".stripMargin
-
-  /** Batch langid-count oracle, shared by `langid_model_incremental`
-    * and `langid_model_folded` (same fold ≡ batch-counting claim). */
-  private def langidModelTrainSql: String =
-    s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
-       |g AS (SELECT lang AS lang2,
-       |    unnest([substr(lower(text), CAST(i AS INTEGER), 2)
-       |      for i in range(1, length(lower(text)))]) AS g
-       |  FROM dml WHERE lang = 'en' OR source = 'planted_ml')
-       |SELECT lang2, g, CAST(count(*) AS BIGINT) AS c
-       |FROM g GROUP BY 1, 2""".stripMargin
-
-  /** Inject the `dml` CTE into a generated `WITH RECURSIVE …` oracle
-    * whose table references were pointed at `dml`. */
-  private def withMlDocs(sql: String): String = {
-    require(sql.startsWith("WITH RECURSIVE "), "expected a recursive-CTE oracle")
-    "WITH RECURSIVE dml AS MATERIALIZED (" + Fixtures.ml.sql + "),\n" +
-      sql.substring("WITH RECURSIVE ".length)
-  }
-
-  /** Deterministic CDC feed over the orders snapshot, staged key-modulo
-    * so the DuckDB oracle derives the identical log: keys ≡1 (mod 7)
-    * get two updates (latest wins), ≡2 a tombstone, ≡3 an insert of a
-    * fresh key. (key, seq) is unique by construction — the [[Cdc]]
-    * contract. */
-  private def cdcFeed(s: SparkSession, d: String): DataFrame = {
-    val o = ord(s, d)
-    val u1 = o.filter(col("o_orderkey") % 7 === 1)
-      .withColumn("o_orderstatus", lit("U1"))
-      .withColumn("op", lit("U")).withColumn("seq", lit(1L))
-    val u2 = o.filter(col("o_orderkey") % 7 === 1)
-      .withColumn("o_orderstatus", lit("U2"))
-      .withColumn("o_totalprice", col("o_totalprice") + 10.0)
-      .withColumn("op", lit("U")).withColumn("seq", lit(2L))
-    val del = o.filter(col("o_orderkey") % 7 === 2)
-      .withColumn("op", lit("D")).withColumn("seq", lit(1L))
-    val ins = o.filter(col("o_orderkey") % 7 === 3)
-      .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
-      .withColumn("o_orderstatus", lit("N"))
-      .withColumn("op", lit("I")).withColumn("seq", lit(1L))
-    u1.unionByName(u2).unionByName(del).unionByName(ins)
-  }
-
-  /** The trusted-seed predicate of the langid model, as SQL — part of
-    * the folded langid artifact's identity (changing the trust contract
-    * re-mines). Must match the `text_langid_nb` seed Column. */
-  private val langidSeedSql = "lang = 'en' OR source = 'planted_ml'"
-
-  /** The boilerplate line list as a stored artifact — the second
-    * decision-layer model on the [[graft.engine.Artifacts]] pattern
-    * (after the dedup cluster map): detection
-    * ([[graft.text.TextAnalysis.boilerplateLines]] over the nl-planted
-    * corpus) runs once per (input, params, build) and the strip/gate
-    * consumers serve the published parquet. The fingerprint's build
-    * stamp covers BOTH the detection code (TextAnalysis) and the
-    * fixture classes ([[Fixtures.buildStamp]]), so editing the planted
-    * rows re-mines (the same "recompile conservatively re-mines"
-    * contract as the cluster map).
-    */
-  private[graft] val boilerplateStamp: Seq[String] = Seq(
-    "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class") ++
-    Fixtures.buildStamp
-
-  private def boilerplateListArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.engine.Artifacts.lineageDir("boilerplate_list",
-      d + "|min2-raw")
-    val stamp = graft.engine.Artifacts.classStamp(boilerplateStamp)
-    val fp = graft.engine.Artifacts.md5Hex("min2-raw|" + stamp + "|" +
-      graft.engine.Artifacts.tableListing(
-        new java.io.File(d, "documents.parquet")))
-    graft.engine.Artifacts.serveOrBuild(s, dir, fp)(
-      graft.text.TextAnalysis.boilerplateLines(Fixtures.nl.df(s, d), 2))
-  }
-
-  // the domains `text_url_filter` blocks in the planted url fixture
-  private[graft] val blockedDomains =
-    Seq("spam.example.com", "tracker.adsite.io")
-
-  /** ROUGE-L oracle: the LCS DP mechanically unrolled over pool-token
-    * positions (one stage per position, the unigramDpBlock pattern).
-    * The classic row recurrence dp[i][j] = max(dp[i-1][j],
-    * dp[i][j-1], dp[i-1][j-1] + match) untangles into pure SQL because
-    * dp[i][·] is non-decreasing in j: with e[j] = max(dp[i-1][j],
-    * dp[i-1][j-1] + match(i,j)), dp[i][j] is the RUNNING MAX of e —
-    * one lag() + one cumulative-max window per stage. Stages past a
-    * pool row's length are automatically the identity (out-of-range
-    * list index → NULL token → match 0, and the running max of a
-    * monotone row is itself). */
-  private def rougeSql(pool: Seq[(Int, String)], cap: Int,
-      thetaGrid: Long): String = {
-    val stages = pool.map(_._2.split(" ").length).max
-    val poolVals = pool.map { case (id, t) => s"($id, '$t')" }.mkString(", ")
-    val stageCtes = (1 to stages).map { i =>
-      s"""s${i}a AS (SELECT doc_id, pool_id, n, m, ptoks, j, tok,
-         |  CASE WHEN j = 0 THEN 0 ELSE greatest(dp,
-         |    lag(dp) OVER (PARTITION BY doc_id, pool_id ORDER BY j)
-         |      + CASE WHEN tok = ptoks[$i] THEN 1 ELSE 0 END) END AS e
-         |  FROM s${i - 1}),
-         |s$i AS (SELECT doc_id, pool_id, n, m, ptoks, j, tok,
-         |  max(e) OVER (PARTITION BY doc_id, pool_id ORDER BY j
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dp
-         |  FROM s${i}a)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pool AS MATERIALIZED (SELECT pool_id,
-       |    list_filter(string_split(ptext, ' '), x -> x <> '') AS ptoks
-       |  FROM (VALUES $poolVals) p(pool_id, ptext)),
-       |di AS MATERIALIZED (${Fixtures.inst.sql}),
-       |cand AS MATERIALIZED (SELECT doc_id, list_slice(l, 1, $cap) AS toks
-       |  FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-       |    x -> x <> '') AS l FROM di)),
-       |base AS MATERIALIZED (SELECT c.doc_id, p.pool_id,
-       |    len(c.toks) AS n, len(p.ptoks) AS m, p.ptoks AS ptoks,
-       |    unnest(generate_series(0, len(c.toks))) AS j, c.toks AS toks
-       |  FROM cand c CROSS JOIN pool p),
-       |s0 AS (SELECT doc_id, pool_id, n, m, ptoks, j,
-       |    CASE WHEN j = 0 THEN NULL ELSE toks[CAST(j AS INTEGER)] END AS tok,
-       |    0 AS dp FROM base),
-       |$stageCtes,
-       |scored AS MATERIALIZED (SELECT doc_id, pool_id, n,
-       |    CAST(dp AS BIGINT) AS lcs,
-       |    CAST(2 * dp * 10000 // (n + m) AS BIGINT) AS f1
-       |  FROM s$stages WHERE j = n),
-       |best AS (SELECT doc_id, max(f1) AS bf FROM scored GROUP BY 1),
-       |pick AS (SELECT s.doc_id, min(s.pool_id) AS bp FROM scored s
-       |  JOIN best b ON s.doc_id = b.doc_id AND s.f1 = b.bf GROUP BY 1)
-       |SELECT s.doc_id, CAST(s.n AS BIGINT) AS n_toks,
-       |  CAST(s.pool_id AS BIGINT) AS best_pool_id, s.lcs,
-       |  s.f1 AS rouge_f1, s.f1 >= $thetaGrid AS is_dup
-       |FROM pick p JOIN scored s
-       |  ON s.doc_id = p.doc_id AND s.pool_id = p.bp""".stripMargin
-  }
-
-  /** k-center greedy replayed as unrolled SQL stages: each round is a
-    * 1-row argmax CTE (dist DESC, vec_id ASC) crossed into a running
-    * min-distance CTE — distances are exact ≤2^53 integers on the 2^16
-    * grid, so the whole selection sequence is bit-pinned. */
-  private def kcenterSql(k: Int): String = {
-    def dist(a: String, b: String) =
-      s"($a.vv - 2 * CAST(list_sum(list_transform(generate_series(1, " +
-        s"len($a.qe)), i -> $a.qe[i] * $b.qe[i])) AS BIGINT) + $b.vv)"
-    val stages = (2 to k).map { i =>
-      val body =
-        if (i == 2)
-          s"""m1 AS (SELECT a.vec_id, a.qe, a.vv, ${dist("a", "b")} AS md
-             |  FROM qq a CROSS JOIN s1 b WHERE a.vec_id <> b.vec_id)"""
-        else
-          s"""m${i - 1} AS (SELECT a.vec_id, a.qe, a.vv,
-             |    least(a.md, ${dist("a", "b")}) AS md
-             |  FROM m${i - 2} a CROSS JOIN s${i - 1} b
-             |  WHERE a.vec_id <> b.vec_id)"""
-      s"""$body,
-         |s$i AS (SELECT vec_id, qe, vv, md FROM m${i - 1}
-         |  ORDER BY md DESC, vec_id LIMIT 1)""".stripMargin
-    }.mkString(",\n")
-    val out = (1 to k).map { i =>
-      if (i == 1)
-        "SELECT CAST(1 AS BIGINT) AS rank, vec_id, CAST(NULL AS BIGINT) AS min_dist FROM s1"
-      else s"SELECT CAST($i AS BIGINT), vec_id, md FROM s$i"
-    }.mkString("\n UNION ALL ")
-    s"""WITH q AS (SELECT vec_id,
-       |    [CAST(floor(CAST(x AS DOUBLE) * 65536) AS BIGINT) for x in embedding] AS qe
-       |  FROM embeddings),
-       |qq AS MATERIALIZED (SELECT vec_id, qe,
-       |    CAST(list_sum([x * x for x in qe]) AS BIGINT) AS vv FROM q),
-       |s1 AS (SELECT vec_id, qe, vv FROM qq ORDER BY vec_id LIMIT 1),
-       |$stages
-       |$out""".stripMargin
-  }
-
-  /** The ICP greedy-hop oracle: stage i is a 1-row argmax CTE (dot to
-    * the PREVIOUS selection, DESC, vec_id ASC) over the not-yet-visited
-    * set — dots are exact ≤2^53 integers on the 2^16 grid, so the hop
-    * sequence is bit-pinned (the kcenterSql pattern with a last-pick
-    * metric instead of a running min). */
-  private def icpSql(k: Int): String = {
-    val stages = (2 to k).map { i =>
-      val visited = (1 until i)
-        .map(j => s"a.vec_id <> (SELECT vec_id FROM s$j)").mkString(" AND ")
-      s"""s$i AS (SELECT a.vec_id, a.qe,
-         |    CAST(list_sum(list_transform(generate_series(1, len(a.qe)),
-         |      ii -> a.qe[ii] * b.qe[ii])) AS BIGINT) AS d
-         |  FROM qq a CROSS JOIN s${i - 1} b
-         |  WHERE $visited
-         |  ORDER BY d DESC, a.vec_id LIMIT 1)""".stripMargin
-    }.mkString(",\n")
-    val out = (1 to k).map { i =>
-      if (i == 1)
-        "SELECT CAST(1 AS BIGINT) AS position, vec_id, CAST(NULL AS BIGINT) AS dot_prev FROM s1"
-      else s"SELECT CAST($i AS BIGINT), vec_id, d FROM s$i"
-    }.mkString("\n UNION ALL ")
-    s"""WITH q AS (SELECT vec_id,
-       |    [CAST(floor(CAST(x AS DOUBLE) * 65536) AS BIGINT) for x in embedding] AS qe
-       |  FROM embeddings),
-       |qq AS MATERIALIZED (SELECT vec_id, qe FROM q),
-       |s1 AS (SELECT vec_id, qe FROM qq ORDER BY vec_id LIMIT 1),
-       |$stages
-       |$out""".stripMargin
-  }
-
-  /** The Gopher-repetition oracle: positional gram STRINGS as the
-    * count key (exact equality, like the kernel's bytewise map),
-    * row_number election by (ct DESC, first-occurrence ASC — a total
-    * order: one gram starts at each position), generate_series
-    * coverage union for dup grams — the full
-    * [[graft.text.TextAnalysis.gopherRepetition]] arithmetic on the
-    * 1e-4 grid. */
-  private def gopherRepSql: String =
-    s"""WITH dd AS MATERIALIZED (${Fixtures.rep.sql}),
-       |t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-       |    w -> w <> '') AS ws FROM dd),
-       |tok AS MATERIALIZED (SELECT doc_id, j,
-       |    CAST(length(ws[CAST(j AS INTEGER)]) AS BIGINT) AS clen
-       |  FROM t, UNNEST(generate_series(1, len(ws))) AS tt(j)
-       |  WHERE len(ws) > 0),
-       |tot AS (SELECT doc_id, SUM(clen) AS total_chars FROM tok
-       |  GROUP BY doc_id),
-       |g AS MATERIALIZED (SELECT doc_id, n, j,
-       |    array_to_string(
-       |      ws[CAST(j AS INTEGER):CAST(j + n - 1 AS INTEGER)], ' ') AS gm
-       |  FROM t, (VALUES (2),(3),(4),(5),(6),(7),(8),(9),(10)) nn(n),
-       |    UNNEST(generate_series(1, len(ws))) AS tt(j)
-       |  WHERE j + n - 1 <= len(ws)),
-       |c AS MATERIALIZED (SELECT doc_id, n, gm, count(*) AS ct,
-       |    min(j) AS p0 FROM g GROUP BY 1, 2, 3),
-       |tsel AS (SELECT doc_id, n, ct, p0, row_number() OVER (
-       |    PARTITION BY doc_id, n ORDER BY ct DESC, p0 ASC) AS rn
-       |  FROM c WHERE n <= 4),
-       |tlen AS (SELECT s.doc_id, s.n, s.ct * SUM(k.clen) AS chars
-       |  FROM tsel s JOIN tok k ON k.doc_id = s.doc_id
-       |    AND k.j BETWEEN s.p0 AND s.p0 + s.n - 1
-       |  WHERE s.rn = 1 GROUP BY s.doc_id, s.n, s.ct),
-       |dups AS (SELECT doc_id, n, gm FROM c WHERE n >= 5 AND ct >= 2),
-       |cov AS (SELECT DISTINCT g.doc_id, g.n, ii AS idx
-       |  FROM g JOIN dups d ON d.doc_id = g.doc_id AND d.n = g.n
-       |    AND d.gm = g.gm,
-       |    UNNEST(generate_series(g.j, g.j + g.n - 1)) AS u(ii)),
-       |covc AS (SELECT v.doc_id, v.n, SUM(k.clen) AS chars
-       |  FROM cov v JOIN tok k ON k.doc_id = v.doc_id AND k.j = v.idx
-       |  GROUP BY 1, 2),
-       |uni AS (SELECT DISTINCT doc_id, n FROM c),
-       |res AS (
-       |  SELECT u.doc_id, u.n, 'top' AS metric,
-       |      COALESCE(tl.chars, 0) AS chars
-       |    FROM uni u LEFT JOIN tlen tl
-       |      ON tl.doc_id = u.doc_id AND tl.n = u.n
-       |    WHERE u.n <= 4
-       |  UNION ALL
-       |  SELECT u.doc_id, u.n, 'dup', COALESCE(cc.chars, 0)
-       |    FROM uni u LEFT JOIN covc cc
-       |      ON cc.doc_id = u.doc_id AND cc.n = u.n
-       |    WHERE u.n >= 5)
-       |SELECT r.doc_id, CAST(r.n AS BIGINT) AS n, r.metric,
-       |  (r.chars * 10000 // o.total_chars) / 10000.0 AS char_frac,
-       |  r.chars * 10000 // o.total_chars > CASE r.n
-       |    WHEN 2 THEN 2000 WHEN 3 THEN 1800 WHEN 4 THEN 1600
-       |    WHEN 5 THEN 1500 WHEN 6 THEN 1400 WHEN 7 THEN 1300
-       |    WHEN 8 THEN 1200 WHEN 9 THEN 1100 ELSE 1000 END AS flagged
-       |FROM res r JOIN tot o ON o.doc_id = r.doc_id""".stripMargin
-
-  /** The GPT-2 pre-tokenizer CTE chain (per-char classes, run-end
-    * windows, one recursion step per token) over source CTE `src` —
-    * shared by the pretokenize oracle and the BPE-over-pretokens
-    * composition. Emits `toks` (1-based idx; NULL-token seed rows). */
-  private def pretokCtes(src: String): String =
-    s"""ch AS (SELECT doc_id, j, substr(text, CAST(j AS INTEGER), 1) AS c
-       |  FROM $src, UNNEST(generate_series(1, length(text))) t(j)
-       |  WHERE length(text) > 0),
-       |cc AS (SELECT doc_id, j, CASE
-       |    WHEN c IN (' ', chr(9), chr(10), chr(11), chr(12), chr(13))
-       |      THEN 0
-       |    WHEN regexp_matches(c, '^\\pL$$') THEN 1
-       |    WHEN regexp_matches(c, '^\\pN$$') THEN 2
-       |    ELSE 3 END AS cl FROM ch),
-       |r1 AS (SELECT doc_id, j, cl,
-       |    CASE WHEN lead(cl) OVER (PARTITION BY doc_id ORDER BY j)
-       |      IS DISTINCT FROM cl THEN j + 1 END AS eend FROM cc),
-       |r2 AS (SELECT doc_id, j, cl,
-       |    min(eend) OVER (PARTITION BY doc_id ORDER BY j
-       |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS re
-       |  FROM r1),
-       |arrs AS (SELECT doc_id, list(cl ORDER BY j) AS cls,
-       |    list(re ORDER BY j) AS res FROM r2 GROUP BY doc_id),
-       |base AS (SELECT d.doc_id, d.text, length(d.text) AS n,
-       |    a.cls, a.res
-       |  FROM $src d JOIN arrs a USING (doc_id)),
-       |toks AS (
-       |  SELECT doc_id, text, n, cls, res, CAST(1 AS BIGINT) AS pos,
-       |    CAST(0 AS BIGINT) AS idx, CAST(NULL AS VARCHAR) AS tok
-       |  FROM base
-       |  UNION ALL
-       |  SELECT doc_id, text, n, cls, res, e, idx + 1,
-       |    substr(text, CAST(pos AS INTEGER), CAST(e - pos AS INTEGER))
-       |  FROM (SELECT *, CASE
-       |      WHEN substr(text, CAST(pos AS INTEGER), 1) = chr(39)
-       |        AND substr(text, CAST(pos + 1 AS INTEGER), 2)
-       |          IN ('re', 've', 'll') THEN pos + 3
-       |      WHEN substr(text, CAST(pos AS INTEGER), 1) = chr(39)
-       |        AND substr(text, CAST(pos + 1 AS INTEGER), 1)
-       |          IN ('s', 't', 'm', 'd') THEN pos + 2
-       |      WHEN cls[CAST(pos AS INTEGER)] != 0
-       |        THEN res[CAST(pos AS INTEGER)]
-       |      WHEN res[CAST(pos AS INTEGER)] > n
-       |        THEN res[CAST(pos AS INTEGER)]
-       |      WHEN res[CAST(pos AS INTEGER)] - pos = 1
-       |        AND substr(text, CAST(pos AS INTEGER), 1) = ' '
-       |        THEN res[CAST(res[CAST(pos AS INTEGER)] AS INTEGER)]
-       |      WHEN res[CAST(pos AS INTEGER)] - pos = 1
-       |        THEN res[CAST(pos AS INTEGER)]
-       |      ELSE res[CAST(pos AS INTEGER)] - 1 END AS e
-       |    FROM toks WHERE pos <= n))""".stripMargin
-
-  /** The mojibake oracle: per-char CP1252 byte mapping (26 specials +
-    * the ≤0xFF identity), strict UTF-8 validity as a hex-pair grammar
-    * regex, and arithmetic re-decoding of the extracted sequences —
-    * the whole [[graft.text.MojibakeKernel]] decision replayed in SQL. */
-  private def mojibakeSql: String = {
-    val sq = "([0-7][0-9a-f]|(c[2-9a-f]|d[0-9a-f])[89ab][0-9a-f]" +
-      "|e0[ab][0-9a-f][89ab][0-9a-f]|e[1-9a-c]([89ab][0-9a-f]){2}" +
-      "|ed[89][0-9a-f][89ab][0-9a-f]|e[ef]([89ab][0-9a-f]){2}" +
-      "|f0[9ab][0-9a-f]([89ab][0-9a-f]){2}|f[1-3]([89ab][0-9a-f]){3}" +
-      "|f48[0-9a-f]([89ab][0-9a-f]){2})"
-    s"""WITH dd AS MATERIALIZED (${Fixtures.moji.sql}),
-       |cp1252 AS (SELECT * FROM (VALUES (8364,128),(8218,130),(402,131),
-       |  (8222,132),(8230,133),(8224,134),(8225,135),(710,136),(8240,137),
-       |  (352,138),(8249,139),(338,140),(381,142),(8216,145),(8217,146),
-       |  (8220,147),(8221,148),(8226,149),(8211,150),(8212,151),(732,152),
-       |  (8482,153),(353,154),(8250,155),(339,156),(382,158),(376,159))
-       |  m(cp, b)),
-       |chars AS (SELECT doc_id, j,
-       |    unicode(substr(text, CAST(j AS INTEGER), 1)) AS cp
-       |  FROM dd, UNNEST(generate_series(1, length(text))) AS t(j)),
-       |mapped AS (SELECT c.doc_id, c.j,
-       |    COALESCE(m.b, CASE WHEN c.cp <= 255 THEN c.cp END) AS b
-       |  FROM chars c LEFT JOIN cp1252 m ON m.cp = c.cp),
-       |hexed AS (SELECT doc_id, bool_and(b IS NOT NULL) AS all_mapped,
-       |    COALESCE(string_agg(CASE WHEN b IS NOT NULL
-       |      THEN lower(lpad(to_hex(b), 2, '0')) END, '' ORDER BY j), '')
-       |      AS hx
-       |  FROM mapped GROUP BY doc_id),
-       |flagged AS (SELECT doc_id, hx,
-       |    all_mapped AND regexp_matches(hx, '^$sq*$$') AS valid
-       |  FROM hexed),
-       |seqs AS (SELECT doc_id, regexp_extract_all(hx, '$sq') AS ss
-       |  FROM flagged WHERE valid),
-       |dec AS (SELECT doc_id, i, ss[CAST(i AS INTEGER)] AS sq
-       |  FROM seqs, UNNEST(generate_series(1, len(ss))) AS t(i)),
-       |cps AS (SELECT doc_id, i, CASE len(sq)
-       |    WHEN 2 THEN ('0x' || sq)::INTEGER
-       |    WHEN 4 THEN (('0x' || substr(sq,1,2))::INTEGER - 192) * 64
-       |      + (('0x' || substr(sq,3,2))::INTEGER - 128)
-       |    WHEN 6 THEN (('0x' || substr(sq,1,2))::INTEGER - 224) * 4096
-       |      + (('0x' || substr(sq,3,2))::INTEGER - 128) * 64
-       |      + (('0x' || substr(sq,5,2))::INTEGER - 128)
-       |    ELSE (('0x' || substr(sq,1,2))::INTEGER - 240) * 262144
-       |      + (('0x' || substr(sq,3,2))::INTEGER - 128) * 4096
-       |      + (('0x' || substr(sq,5,2))::INTEGER - 128) * 64
-       |      + (('0x' || substr(sq,7,2))::INTEGER - 128)
-       |  END AS cp FROM dec),
-       |fixed AS (SELECT doc_id, string_agg(chr(cp), '' ORDER BY i)
-       |    AS ftext FROM cps GROUP BY doc_id)
-       |SELECT d.doc_id AS doc_id,
-       |  COALESCE(f.ftext IS NOT NULL AND f.ftext <> d.text, false)
-       |    AS is_mojibake,
-       |  CAST(length(d.text) AS BIGINT) AS n_chars_in,
-       |  CAST(length(CASE WHEN f.ftext IS NOT NULL THEN f.ftext
-       |    ELSE d.text END) AS BIGINT) AS n_chars_fixed,
-       |  CASE WHEN f.ftext IS NOT NULL THEN f.ftext ELSE d.text END
-       |    AS text_fixed
-       |FROM dd d LEFT JOIN fixed f ON f.doc_id = d.doc_id""".stripMargin
-  }
-
-  /** The K-iteration integer PageRank oracle, mechanically unrolled
-    * (same arithmetic as [[graft.graph.LinkGraph.domainRank]]). */
-  private def linkRankSql(iterations: Int): String = {
-    val steps = (1 to iterations).map { k =>
-      s"""c$k AS (SELECT e.dst AS node,
-         |    SUM((85 * r${k - 1}.r) // (100 * o.od)) AS cin
-         |  FROM e JOIN r${k - 1} ON e.src = r${k - 1}.node
-         |    JOIN o ON e.src = o.src GROUP BY 1),
-         |r$k AS (SELECT n.node,
-         |    CAST(150000 + COALESCE(c$k.cin, 0) AS BIGINT) AS r
-         |  FROM n LEFT JOIN c$k USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH du AS (${Fixtures.urlGraph.sql}),
-       |e AS (SELECT DISTINCT source AS src, split_part(u, '//', 2) AS dst
-       |  FROM (SELECT source,
-       |      unnest(regexp_extract_all(text, 'https?://[a-z0-9.-]+')) AS u
-       |    FROM du)),
-       |n AS (SELECT DISTINCT source AS node FROM du
-       |  UNION SELECT DISTINCT dst FROM e),
-       |o AS (SELECT src, CAST(count(*) AS BIGINT) AS od FROM e GROUP BY 1),
-       |r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM n),
-       |$steps
-       |SELECT node, r AS rank_micro FROM r$iterations""".stripMargin
-  }
-
-  /** The K-iteration integer HITS oracle, mechanically unrolled (same
-    * arithmetic as [[graft.graph.LinkGraph.hits]]): per round, raw
-    * authority sums over in-edges of the previous hubs, max-normalize,
-    * raw hub sums over out-edges of the NEW authorities, max-normalize.
-    */
-  private def linkHitsSql(iterations: Int): String = {
-    val steps = (1 to iterations).map { k =>
-      s"""ar$k AS (SELECT e.dst AS node, SUM(h${k - 1}.h) AS s
-         |  FROM e JOIN h${k - 1} ON e.src = h${k - 1}.node GROUP BY 1),
-         |a$k AS (SELECT n.node, CAST(COALESCE(ar$k.s, 0) * 1000000 //
-         |    GREATEST(1, COALESCE((SELECT MAX(s) FROM ar$k), 1)) AS BIGINT) AS a
-         |  FROM n LEFT JOIN ar$k USING (node)),
-         |hr$k AS (SELECT e.src AS node, SUM(a$k.a) AS s
-         |  FROM e JOIN a$k ON e.dst = a$k.node GROUP BY 1),
-         |h$k AS (SELECT n.node, CAST(COALESCE(hr$k.s, 0) * 1000000 //
-         |    GREATEST(1, COALESCE((SELECT MAX(s) FROM hr$k), 1)) AS BIGINT) AS h
-         |  FROM n LEFT JOIN hr$k USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH du AS (${Fixtures.urlGraph.sql}),
-       |e AS (SELECT DISTINCT source AS src, split_part(u, '//', 2) AS dst
-       |  FROM (SELECT source,
-       |      unnest(regexp_extract_all(text, 'https?://[a-z0-9.-]+')) AS u
-       |    FROM du)),
-       |n AS (SELECT DISTINCT source AS node FROM du
-       |  UNION SELECT DISTINCT dst FROM e),
-       |h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM n),
-       |$steps
-       |SELECT h$iterations.node, h$iterations.h AS hub_micro,
-       |  a$iterations.a AS auth_micro
-       |FROM h$iterations JOIN a$iterations USING (node)""".stripMargin
-  }
-
-  /** The integer-Lloyd k-means CTE chain, mechanically unrolled (same
-    * arithmetic as [[graft.ann.Similarity.kmeansExactCentroids]]):
-    * `kq` = 2^16-grid vectors, `kc0` = the k smallest-vec_id seeds,
-    * step t = assign under kc(t−1) (exact d², ties → smallest cell) →
-    * per-dim truncating integer means → kct (empty cells carry over).
-    */
-  private def kmeansSqlCtes(k: Int, iters: Int): String = {
-    val steps = (1 to iters).map { t =>
-      s"""ka$t AS MATERIALIZED (SELECT vec_id, qe, cell FROM (
-         |  SELECT q.vec_id, q.qe, c.cell, ROW_NUMBER() OVER (
-         |      PARTITION BY q.vec_id ORDER BY list_sum(list_transform(
-         |        generate_series(1, len(q.qe)),
-         |        i -> (q.qe[i] - c.cent[i]) * (q.qe[i] - c.cent[i]))),
-         |      c.cell) AS rn
-         |  FROM kq q CROSS JOIN kc${t - 1} c) WHERE rn = 1),
-         |km$t AS (SELECT cell, i, CAST(SUM(qe[i]) AS BIGINT) // count(*) AS m
-         |  FROM ka$t, UNNEST(generate_series(1, len(qe))) AS u(i)
-         |  GROUP BY cell, i),
-         |kc$t AS MATERIALIZED (SELECT p.cell, COALESCE(
-         |    (SELECT list(m ORDER BY i) FROM km$t m WHERE m.cell = p.cell),
-         |    p.cent) AS cent FROM kc${t - 1} p)""".stripMargin
-    }.mkString(",\n")
-    s"""kq AS MATERIALIZED (SELECT vec_id,
-       |    [CAST(floor(CAST(x AS DOUBLE) * 65536) AS BIGINT) for x in embedding] AS qe
-       |  FROM embeddings),
-       |kc0 AS MATERIALIZED (SELECT cell, cent FROM (
-       |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) AS INT) - 1 AS cell,
-       |    qe AS cent FROM kq) WHERE cell < $k),
-       |$steps""".stripMargin
-  }
-
-  /** Final assignment under the step-`iters` centroids, with the exact
-    * integer squared distance (the engine's cc−2·dot argmin plus the
-    * per-row qq constant orders identically). */
-  private def kmeansFinalAssignCte(iters: Int): String =
-    s"""kfin AS MATERIALIZED (SELECT vec_id, qe, cell, d2 FROM (
-       |  SELECT q.vec_id, q.qe, c.cell, list_sum(list_transform(
-       |      generate_series(1, len(q.qe)),
-       |      i -> (q.qe[i] - c.cent[i]) * (q.qe[i] - c.cent[i]))) AS d2,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-       |      list_sum(list_transform(generate_series(1, len(q.qe)),
-       |        i -> (q.qe[i] - c.cent[i]) * (q.qe[i] - c.cent[i]))),
-       |      c.cell) AS rn
-       |  FROM kq q CROSS JOIN kc$iters c) WHERE rn = 1)""".stripMargin
-
-  /** The integer batch-perceptron CTE chain, mechanically unrolled
-    * (same arithmetic as [[graft.pipeline.Pipeline.perceptronTrainServe]]
-    * with the quality_perceptron_train feature set): epoch t explodes
-    * the `dims` feature slots, sums `y·x_i` over rows with margin
-    * `y·(w·x) ≤ 0` under the epoch-(t−1) weights, and folds the update
-    * back into a weight list. */
-  private def perceptronSqlCtes(epochs: Int, dims: Int): String = {
-    val steps = (1 to epochs).map { t =>
-      s"""pw$t AS MATERIALIZED (SELECT list(wi + gi ORDER BY i) AS w FROM (
-         |  SELECT i, ANY_VALUE(wi) AS wi,
-         |    CAST(COALESCE(SUM(CASE WHEN m <= 0 THEN y * xi END), 0) AS BIGINT) AS gi
-         |  FROM (
-         |    SELECT f.y, u.i, f.x[u.i] AS xi, w.w[u.i] AS wi,
-         |      f.y * list_sum(list_transform(generate_series(1, $dims),
-         |        j -> w.w[j] * f.x[j])) AS m
-         |    FROM pf f CROSS JOIN pw${t - 1} w,
-         |      UNNEST(generate_series(1, $dims)) AS u(i))
-         |  GROUP BY i))""".stripMargin
-    }.mkString(",\n")
-    s"""pf AS MATERIALIZED (SELECT doc_id, y,
-       |    [CAST(1 AS BIGINT), mk, (nw - 40) // 16] AS x FROM (
-       |  SELECT doc_id,
-       |    CAST(len(list_filter(string_split(lower(text), ' '),
-       |      w -> w = 'slow' OR w = 'dup')) AS BIGINT) AS mk,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nw,
-       |    CASE WHEN len(list_filter(string_split(lower(text), ' '),
-       |      w -> w = 'slow' OR w = 'dup')) > 0
-       |      THEN CAST(1 AS BIGINT) ELSE -1 END AS y
-       |  FROM documents)),
-       |pw0 AS (SELECT [CAST(0 AS BIGINT), 0, 0] AS w),
-       |$steps""".stripMargin
-  }
-
-  /** Unigram (SentencePiece) piece vocabulary with integer costs: all
-    * 26 single letters (coverage guarantee) plus multi-char pieces
-    * cheap enough that Viterbi prefers them, including a deliberate
-    * exact TIE on the fixture word "data" — "da|ta" (14+14) vs
-    * "dat|a" (18+10) both cost 28 — pinning the (min cost, min seg)
-    * stage tie-break on both engines. */
-  private[graft] val unigramVocab: Seq[(String, Long)] =
-    ('a' to 'z').map(c => c.toString -> 10L) ++ Seq(
-      "spark" -> 30L, "join" -> 24L, "jo" -> 13L, "in" -> 14L,
-      "merge" -> 30L, "er" -> 14L, "da" -> 14L, "ta" -> 14L,
-      "dat" -> 18L, "qu" -> 14L, "ery" -> 20L, "sc" -> 13L,
-      "an" -> 14L, "st" -> 13L, "re" -> 13L, "am" -> 14L,
-      "or" -> 13L, "der" -> 19L, "ble" -> 20L, "tab" -> 18L,
-      "va" -> 14L, "ue" -> 14L, "cus" -> 18L, "tom" -> 18L,
-      "key" -> 24L, "row" -> 24L, "fast" -> 28L, "slow" -> 28L,
-      "win" -> 18L, "dow" -> 18L, "col" -> 18L, "umn" -> 18L,
-      "li" -> 13L, "ne" -> 13L, "ha" -> 13L, "sh" -> 13L,
-      "gr" -> 13L, "oup" -> 20L, "ve" -> 13L, "ct" -> 14L,
-      "fil" -> 18L, "ter" -> 18L, "ba" -> 13L, "tch" -> 18L,
-      "par" -> 18L, "the" -> 20L, "lu" -> 14L, "ag" -> 13L)
-        .map { case (p, c) => (p, c) }
-
-  /** One unigram Viterbi DP block as mechanically-unrolled MATERIALIZED
-    * SQL stages (the linkRankSql pattern; unmaterialized CTE chains
-    * re-expand exponentially in DuckDB): stage i keeps, per word, the
-    * (min cost, then min '|'-joined seg in binary order) candidate over
-    * all (kept prefix at j < i) × (piece covering j..i) — exactly the
-    * engine DP's per-position selection. `pfx` names the block,
-    * `vocabCte` the (piece, cost) relation it segments under; emits
-    * `${pfx}res` = (word, cost, seg) for fully-covered words. */
-  private def unigramDpBlock(pfx: String, vocabCte: String,
-      maxPiece: Int, maxLen: Int): String = {
-    val stages = (1 to maxLen).map { i =>
-      s"""${pfx}c$i AS MATERIALIZED (SELECT d.word, d.cost + v.cost AS cost,
-         |    CASE WHEN d.pos = 0 THEN v.piece
-         |      ELSE d.seg || '|' || v.piece END AS seg
-         |  FROM ${pfx}a${i - 1} d JOIN $vocabCte v
-         |    ON d.pos >= ${math.max(0, i - maxPiece)} AND d.pos < $i
-         |    AND substr(d.word, d.pos + 1, $i - d.pos) = v.piece
-         |  WHERE length(d.word) >= $i),
-         |${pfx}b$i AS (SELECT word, min(cost) AS mc FROM ${pfx}c$i GROUP BY 1),
-         |${pfx}s$i AS MATERIALIZED (SELECT c.word, $i AS pos, b.mc AS cost,
-         |    min(c.seg) AS seg
-         |  FROM ${pfx}c$i c JOIN ${pfx}b$i b ON c.word = b.word AND c.cost = b.mc
-         |  GROUP BY 1, 2, 3),
-         |${pfx}a$i AS MATERIALIZED (SELECT * FROM ${pfx}a${i - 1}
-         |  UNION ALL SELECT * FROM ${pfx}s$i)""".stripMargin
-    }.mkString(",\n")
-    s"""${pfx}a0 AS MATERIALIZED (SELECT word, 0 AS pos, CAST(0 AS BIGINT) AS cost,
-       |    '' AS seg FROM w),
-       |$stages,
-       |${pfx}res AS MATERIALIZED (SELECT word, cost, seg FROM ${pfx}a$maxLen
-       |  WHERE pos = length(word) AND pos > 0)""".stripMargin
-  }
-
-  private def unigramVocabValues(vocab: Seq[(String, Long)]): String =
-    vocab.map { case (p, c) => s"('$p', $c)" }.mkString(", ")
-
-  private def unigramSql(vocab: Seq[(String, Long)], maxLen: Int): String = {
-    val maxPiece = vocab.map(_._1.length).max
-    s"""WITH v AS MATERIALIZED (SELECT * FROM
-       |    (VALUES ${unigramVocabValues(vocab)}) t(piece, cost)),
-       |e AS MATERIALIZED (SELECT doc_id,
-       |    unnest(list_filter(string_split(lower(text), ' '),
-       |    x -> x <> '')) AS word FROM documents),
-       |w AS MATERIALIZED (SELECT DISTINCT word FROM e),
-       |${unigramDpBlock("", "v", maxPiece, maxLen)}
-       |SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       |  CAST(count(*) FILTER (WHERE r.word IS NULL) AS BIGINT) AS n_oov_words,
-       |  CAST(COALESCE(SUM(len(string_split(r.seg, '|'))), 0) AS BIGINT) AS n_pieces,
-       |  CAST(COALESCE(SUM(r.cost), 0) AS BIGINT) AS cost_sum
-       |FROM e LEFT JOIN res r ON e.word = r.word GROUP BY 1""".stripMargin
-  }
-
-  /** Viterbi-EM (hard-EM) unigram TRAINING replayed end-to-end: each
-    * round re-segments the distinct words under the previous round's
-    * costs (a full DP block) and re-derives every piece's cost from
-    * its corpus-weighted count via the exact bit-length surrogate —
-    * the same all-integer staging as the engine loop, so the final
-    * (piece, n_count, cost) table is bit-identical. */
-  /** The shared training prelude + per-round CTE chain (DP block →
-    * weighted piece counts → derived cost table `vr{r}`). */
-  private def unigramTrainCtes(vocab: Seq[(String, Long)], maxLen: Int,
-      rounds: Int): String = {
-    val maxPiece = vocab.map(_._1.length).max
-    val roundCtes = (1 to rounds).map { r =>
-      val pfx = s"r$r"
-      val vcte = if (r == 1) "vr0" else s"vr${r - 1}"
-      s"""${unigramDpBlock(pfx, vcte, maxPiece, maxLen)},
-         |cnt$r AS MATERIALIZED (SELECT piece, CAST(SUM(wcnt) AS BIGINT) AS cnt
-         |  FROM (SELECT unnest(string_split(r.seg, '|')) AS piece, wc.wcnt AS wcnt
-         |    FROM ${pfx}res r JOIN wc USING (word)) GROUP BY 1),
-         |tot$r AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM cnt$r),
-         |vr$r AS MATERIALIZED (SELECT v0.piece,
-         |    CAST(CASE WHEN c.cnt IS NULL THEN 10 + 4 * (length(bin(t.t)) + 1)
-         |      ELSE 10 + 4 * (length(bin(t.t)) - length(bin(c.cnt)))
-         |      END AS BIGINT) AS cost
-         |  FROM vr0 v0 LEFT JOIN cnt$r c USING (piece) CROSS JOIN tot$r t)""".stripMargin
-    }.mkString(",\n")
-    s"""vr0 AS MATERIALIZED (SELECT * FROM
-       |    (VALUES ${unigramVocabValues(vocab)}) t(piece, cost)),
-       |e0 AS MATERIALIZED (SELECT doc_id,
-       |    unnest(list_filter(string_split(lower(text), ' '),
-       |    x -> x <> '')) AS word FROM documents),
-       |wc AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS wcnt
-       |  FROM e0 GROUP BY 1),
-       |w AS MATERIALIZED (SELECT word FROM wc),
-       |$roundCtes""".stripMargin
-  }
-
-  private def unigramTrainSql(vocab: Seq[(String, Long)], maxLen: Int,
-      rounds: Int): String =
-    s"""WITH ${unigramTrainCtes(vocab, maxLen, rounds)}
-       |SELECT v.piece, CAST(COALESCE(c.cnt, 0) AS BIGINT) AS n_count, v.cost
-       |FROM vr$rounds v LEFT JOIN cnt$rounds c USING (piece)""".stripMargin
-
-  /** Train→serve: a further DP block segments the corpus under the
-    * TRAINED `vr{rounds}` costs, then aggregates per doc. */
-  private def unigramTrainedServeSql(vocab: Seq[(String, Long)],
-      maxLen: Int, rounds: Int): String = {
-    val maxPiece = vocab.map(_._1.length).max
-    s"""WITH ${unigramTrainCtes(vocab, maxLen, rounds)},
-       |${unigramDpBlock("sv", s"vr$rounds", maxPiece, maxLen)}
-       |SELECT e0.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       |  CAST(count(*) FILTER (WHERE r.word IS NULL) AS BIGINT) AS n_oov_words,
-       |  CAST(COALESCE(SUM(len(string_split(r.seg, '|'))), 0) AS BIGINT) AS n_pieces,
-       |  CAST(COALESCE(SUM(r.cost), 0) AS BIGINT) AS cost_sum
-       |FROM e0 LEFT JOIN svres r ON e0.word = r.word GROUP BY 1""".stripMargin
-  }
-
-  /** WordPiece (BERT) piece vocabulary over the 31-word corpus, with
-    * the semantics-pinning plants: "bat" beats "ba" on "batch"
-    * (longest INITIAL), "##ream" beats "##re" on "stream" (longest
-    * CONTINUATION), "customer" needs three pieces (multi-step
-    * restart), and "window" is the NO-BACKTRACK trap — greedy takes
-    * "wind" (4 > "win") into a dead end and must emit [UNK] even
-    * though win|##dow covers, exactly the published WordPiece
-    * behavior; "sort" is plainly uncoverable. */
-  private[graft] val wordpieceVocab: Seq[String] = Seq(
-    "a", "the", "join", "spark", "data", "key", "row", "scan", "dup",
-    "merge", "agg", "part", "big", "slow",
-    "s", "cu", "val", "li", "so", "qu", "gr", "ba", "bat", "col",
-    "fil", "ha", "ta", "st", "ve", "or", "fa", "win", "wind",
-    "##mall", "##st", "##omer", "##umn", "##ter", "##ue", "##ne",
-    "##ery", "##oup", "##der", "##tch", "##ch", "##sh", "##ble",
-    "##ream", "##re", "##ctor", "##dow")
-
-  /** WordPiece greedy replay as mechanically-unrolled MATERIALIZED
-    * stages (the unigramDpBlock pattern): stage i advances every
-    * in-flight word by its single longest matching piece (initial at
-    * pos 0, '##' continuation after) or terminates it as [UNK] when
-    * nothing matches — the engine's no-backtracking loop verbatim.
-    * Every stage consumes ≥ 1 char, so maxLen stages terminate every
-    * word of length ≤ maxLen; longer words skip the loop and fall to
-    * [UNK] at the final join. A piece's text at a fixed (position,
-    * length) is unique, so max(length) picks a unique piece — greedy
-    * has no ties to break. */
-  /** The greedy-replay CTE chain from word list to per-doc aggregation
-    * (assumes a `wv(body, cont)` relation is already in scope — literal
-    * VALUES for the shipped vocab, DERIVED from the training stages for
-    * the trained one; stage names gm/g avoid the trainer's m_k). */
-  private def wordpieceGreedyTail(docsRel: String, maxLen: Int): String = {
-    val stages = (1 to maxLen).map { i =>
-      s"""gm$i AS MATERIALIZED (SELECT s.word, s.pos, s.seg,
-         |    max(length(v.body)) AS bl
-         |  FROM g${i - 1} s JOIN wv v
-         |    ON v.cont = CASE WHEN s.pos = 0 THEN 0 ELSE 1 END
-         |    AND v.body = substr(s.word, s.pos + 1, length(v.body))
-         |  WHERE NOT s.unk AND s.pos < length(s.word)
-         |  GROUP BY 1, 2, 3),
-         |g$i AS MATERIALIZED (
-         |  SELECT m.word, m.pos + m.bl AS pos,
-         |    CASE WHEN m.pos = 0 THEN substr(m.word, 1, m.bl)
-         |      ELSE m.seg || '|##' || substr(m.word, m.pos + 1, m.bl) END AS seg,
-         |    FALSE AS unk
-         |  FROM gm$i m
-         |  UNION ALL
-         |  SELECT s.word, length(s.word) AS pos, '[UNK]' AS seg, TRUE AS unk
-         |  FROM g${i - 1} s LEFT JOIN gm$i m ON s.word = m.word
-         |  WHERE NOT s.unk AND s.pos < length(s.word) AND m.word IS NULL
-         |  UNION ALL
-         |  SELECT word, pos, seg, unk FROM g${i - 1}
-         |  WHERE unk OR pos >= length(word))""".stripMargin
-    }.mkString(",\n")
-    s"""e AS MATERIALIZED (SELECT doc_id,
-       |    unnest(list_filter(string_split(lower(text), ' '),
-       |    x -> x <> '')) AS word FROM $docsRel),
-       |wq AS MATERIALIZED (SELECT DISTINCT word FROM e
-       |  WHERE length(word) <= $maxLen),
-       |g0 AS MATERIALIZED (SELECT word, 0 AS pos, '' AS seg, FALSE AS unk
-       |  FROM wq),
-       |$stages,
-       |res AS MATERIALIZED (SELECT word, unk,
-       |    CAST(CASE WHEN unk THEN 1 ELSE len(string_split(seg, '|')) END
-       |      AS BIGINT) AS np
-       |  FROM g$maxLen)
-       |SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       |  CAST(count(*) FILTER (WHERE r.word IS NULL OR r.unk) AS BIGINT)
-       |    AS n_unk_words,
-       |  CAST(SUM(CASE WHEN r.word IS NULL THEN 1 ELSE r.np END) AS BIGINT)
-       |    AS n_pieces
-       |FROM e LEFT JOIN res r USING (word) GROUP BY 1""".stripMargin
-  }
-
-  private def wordpieceSql(vocab: Seq[String], maxLen: Int): String = {
-    val vals = vocab.map { p =>
-      val cont = if (p.startsWith("##")) 1 else 0
-      val body = if (cont == 1) p.drop(2) else p
-      s"('$body', $cont)"
-    }.mkString(", ")
-    s"""WITH wv AS MATERIALIZED (SELECT * FROM (VALUES $vals) t(body, cont)),
-       |${wordpieceGreedyTail("documents", maxLen)}""".stripMargin
-  }
-
-  /** Train→serve oracle: the WordPiece training stages, the piece set
-    * derived from m0..m{n-1}, then the same greedy replay under it. */
-  private def wordpieceTrainedServeSql(nMerges: Int, maxLen: Int): String = {
-    val full = graft.text.BpeTrainer.wordpieceTrainingOracleSql(nMerges)
-    val body = full.substring(0, full.lastIndexOf('\n'))
-    val pieces = (0 until nMerges).map(k =>
-      s"SELECT a AS piece FROM m$k UNION ALL SELECT b AS piece FROM m$k" +
-        s" UNION ALL SELECT m AS piece FROM m$k").mkString(" UNION ALL ")
-    s"""$body,
-       |wv AS MATERIALIZED (SELECT DISTINCT
-       |    CASE WHEN piece LIKE '##%' THEN substr(piece, 3) ELSE piece END
-       |      AS body,
-       |    CASE WHEN piece LIKE '##%' THEN 1 ELSE 0 END AS cont
-       |  FROM ($pieces)),
-       |${wordpieceGreedyTail("documents", maxLen)}""".stripMargin
-  }
-
-  /** The prune step replayed: restrict the trained cost table to the
-    * survivors (singles always, multi-char pieces by count threshold),
-    * then one more full EM round — DP block, weighted recount, cost
-    * re-derivation — under the pruned relation. */
-  private def unigramTrainPrunedSql(vocab: Seq[(String, Long)],
-      maxLen: Int, rounds: Int, minCount: Long): String = {
-    val maxPiece = vocab.map(_._1.length).max
-    s"""WITH ${unigramTrainCtes(vocab, maxLen, rounds)},
-       |vp AS MATERIALIZED (SELECT v.piece, v.cost FROM vr$rounds v
-       |  LEFT JOIN cnt$rounds c USING (piece)
-       |  WHERE length(v.piece) = 1 OR COALESCE(c.cnt, 0) >= $minCount),
-       |${unigramDpBlock("pp", "vp", maxPiece, maxLen)},
-       |cntp AS MATERIALIZED (SELECT piece, CAST(SUM(wcnt) AS BIGINT) AS cnt
-       |  FROM (SELECT unnest(string_split(r.seg, '|')) AS piece,
-       |      wc.wcnt AS wcnt
-       |    FROM ppres r JOIN wc USING (word)) GROUP BY 1),
-       |totp AS (SELECT CAST(SUM(cnt) AS BIGINT) AS t FROM cntp),
-       |vrp AS MATERIALIZED (SELECT v0.piece,
-       |    CAST(CASE WHEN c.cnt IS NULL THEN 10 + 4 * (length(bin(t.t)) + 1)
-       |      ELSE 10 + 4 * (length(bin(t.t)) - length(bin(c.cnt)))
-       |      END AS BIGINT) AS cost
-       |  FROM vp v0 LEFT JOIN cntp c USING (piece) CROSS JOIN totp t)
-       |SELECT v.piece, CAST(COALESCE(c.cnt, 0) AS BIGINT) AS n_count, v.cost
-       |FROM vrp v LEFT JOIN cntp c USING (piece)""".stripMargin
-  }
-
-  // learned BPE merges memoized per corpus dir (the train/serve split:
-  // bpe_train_merges declares the training cost; encode queries serve
-  // from the learned table — deterministic, so oracles that retrain
-  // still agree). Trained over the ML-AUGMENTED corpus: the merge
-  // algebra itself is exercised on multilingual symbols.
-  private val bpeMerges = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, String)]]()
-  private def trainedMerges(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeMerges.computeIfAbsent(d,
-      _ => graft.text.BpeTrainer.trainMerges(Fixtures.ml.df(s, d), 8))
-
-  // Greenplum dump fixture: two aligned column dumps of a 1-in-10
-  // lineitem slice, written once per (JVM, corpus dir) — the round-trip
-  // query gates dump-file layout, positional identity, and incremental
-  // attach; rewriting the dump per bench run was fixture IO inside the
-  // timed region
-  private val gpDumpDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def gpDumpDir(s: SparkSession, d: String): String =
-    gpDumpDirs.computeIfAbsent(d, _ => {
-      val dir = graft.sources.Sources.rtDir("gpdump_" +
-        java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(d).toLong & 0xffffffffL))
-      val keys = Seq("l_orderkey", "l_linenumber")
-      val lif = li(s, d).filter(pmod(col("l_orderkey"), lit(10L)) === 0L)
-      graft.sources.Greenplum.writeDump(
-        lif.select(col("l_orderkey"), col("l_linenumber"), col("l_quantity")),
-        s"$dir/b1", keys, 4)
-      graft.sources.Greenplum.writeDump(
-        lif.select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag")),
-        s"$dir/b2", keys, 4, lineCols = Seq("l_returnflag"))
-      dir
-    })
-
-  // Geo shapefile fixtures are STATIC bytes: written once per JVM so
-  // the timed geo queries measure the tag join, not temp-shapefile IO
-  // (the r7 bench drift on geo_polygon_holes was fixture-write variance)
-  private lazy val shpTagBase: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shp")
-    val base = dir.resolve("features").toString
-    graft.geo.Shapefile.writePolygons(base, Seq(
-      ("southwest", Seq((0.0, 0.0), (48.0, 0.0), (0.0, 48.0))),
-      ("east", Seq((49.0, 0.0), (96.0, 0.0), (96.0, 96.0), (49.0, 96.0))),
-      ("north", Seq((0.0, 49.0), (48.0, 49.0), (24.0, 96.0)))))
-    base
-  }
-  private lazy val shpHolesBase: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shp_holes")
-    val base = dir.resolve("features").toString
-    // features reach y=0: at sf0.001 the custkey grid only occupies
-    // py ∈ {0,1}, so a feature starting higher would tag nothing
-    graft.geo.Shapefile.writeFeatures(base, Seq(
-      ("donut", Seq(
-        Seq((5.0, 0.0), (90.0, 0.0), (90.0, 90.0), (5.0, 90.0)),
-        Seq((30.0, 5.0), (60.0, 5.0), (60.0, 40.0), (30.0, 40.0)))),
-      ("plate", Seq(
-        Seq((92.0, 0.0), (96.0, 0.0), (96.0, 96.0), (92.0, 96.0))))))
-    base
-  }
-
-  // Linear quality-model vocabulary: all weights are exact dyadic
-  // rationals (k/64) so Σweights is bit-identical in any IEEE engine
-  // regardless of summation order — the oracle compare needs no
-  // tolerance.
-  private[graft] val modelVocab: Seq[(String, Double)] = Seq(
-    "the" -> 0.125, "and" -> 0.09375, "of" -> 0.0625, "a" -> 0.046875,
-    "data" -> 0.5, "analysis" -> 0.375, "result" -> 0.25,
-    "lorem" -> -0.5, "ipsum" -> -0.5, "click" -> -0.75, "buy" -> -0.75)
-  private[graft] def modelVocabSqlCase(v: String): String =
-    "CASE " + v + " " + modelVocab.map { case (t, w) =>
-      s"WHEN '$t' THEN $w" }.mkString(" ") + " ELSE 0.0 END"
-
-  // Shared bucket expression: 22 equal-width buckets of l_extendedprice
-  // over [0, 110000] (data range ~902..105000).
-  private val PriceLo = 0.0; private val PriceHi = 110000.0; private val PriceN = 22
-  private def priceBucket: Column =
-    Histograms.numericBucket(col("l_extendedprice"), PriceLo, PriceHi, PriceN)
-  private val priceBucketSql =
-    s"LEAST(CAST(FLOOR((l_extendedprice - 0.0) / ((110000.0 - 0.0) / 22.0)) AS INT), 21)"
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ── relational core ────────────────────────────────────────────────
-    "q1_pricing_summary" -> ((s, d) =>
-      NextK.nextK(li(s, d), Seq(Order("l_returnflag"), Order("l_linestatus")), 10,
-        aggs = Seq(
-          AggSpec(SumAgg, "l_quantity", "sum_qty"),
-          AggSpec(SumAgg, "l_extendedprice", "sum_price"),
-          AggSpec(AvgAgg, "l_extendedprice", "avg_price"),
-          AggSpec(MinAgg, "l_discount", "min_disc"),
-          AggSpec(MaxAgg, "l_discount", "max_disc")))),
-    // Classic multi-join plan health: filters pushed to all three scans,
-    // dims broadcast, partial aggregation below the exchange, top-10 via
-    // TakeOrderedAndProject. Revenue summed in DECIMAL (exact, engine-
-    // order-independent), widened to double once.
-    "q3_shipping_priority" -> ((s, d) =>
-      cust(s, d).filter(col("c_mktsegment") === "BUILDING")
-        .join(ord(s, d), col("c_custkey") === col("o_custkey"))
-        .filter(col("o_orderdate") < lit("1995-03-15").cast("timestamp"))
-        .join(li(s, d), col("o_orderkey") === col("l_orderkey"))
-        .filter(col("l_shipdate") > lit("1995-03-15").cast("timestamp"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(graft.engine.Num.sumRevenue(
-          col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderdate"), col("l_orderkey"))
-        .limit(10)),
-    "q5_local_supplier" -> ((s, d) =>
-      Tables.region(s, d).filter(col("r_name") === "ASIA")
-        .join(Tables.nation(s, d), col("r_regionkey") === col("n_regionkey"))
-        .join(Tables.supplier(s, d), col("n_nationkey") === col("s_nationkey"))
-        .join(li(s, d), col("s_suppkey") === col("l_suppkey"))
-        .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(cust(s, d),
-          col("o_custkey") === col("c_custkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .filter(col("o_orderdate") >= lit("1994-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1995-01-01").cast("timestamp"))
-        .groupBy(col("n_name"))
-        .agg(graft.engine.Num.sumRevenue(
-          col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))),
-    // TPC-H q6 shape: tight scan-side conjunction (all four predicates
-    // reach the parquet scan as PushedFilters) feeding a single partial
-    // + final agg — the canonical pushdown anchor.
-    "q6_forecast_revenue" -> ((s, d) =>
-      li(s, d)
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg(graft.engine.Num.sumProductExact(
-          col("l_extendedprice"), col("l_discount")).as("revenue"),
-          count(lit(1)).as("n_items"))),
-    // TPC-H q4 shape: EXISTS decorrelated to a left-semi join whose
-    // condition references both sides (late shipment vs the order's own
-    // date), then a tiny group-by on priority.
-    "q4_order_priority" -> ((s, d) =>
-      ord(s, d)
-        .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1995-04-01").cast("timestamp"))
-        .join(li(s, d),
-          col("l_orderkey") === col("o_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy(col("o_orderpriority"))),
-    // TPC-H q17 shape, deliberately written as SQL TEXT with the
-    // correlated scalar subquery intact: anchors Catalyst's
-    // decorrelation (subquery → per-key aggregate + join), the third
-    // rewrite family next to q4's EXISTS and the view set-ops.
-    // l_quantity is integral-valued, so avg = exact-int-sum/count is
-    // deterministic across engines and the 0.2·avg comparison is safe.
-    "q17_small_qty_revenue" -> ((s, d) => {
-      // view names keyed by the SANITIZED FULL dir (collision-free,
-      // unlike a 32-bit hashCode): concurrent invocations on the same
-      // session with different dirs must not race on a shared view
-      // name (same-dir re-registration is idempotent)
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      li(s, d).createOrReplaceTempView(s"q17_lineitem_$tag")
-      Tables.part(s, d).createOrReplaceTempView(s"q17_part_$tag")
-      s.sql(
-        s"""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
-           |  count(*) AS n_rows
-           |FROM q17_lineitem_$tag JOIN q17_part_$tag ON p_partkey = l_partkey
-           |WHERE p_brand = 'Brand#1'
-           |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
-           |                    FROM q17_lineitem_$tag l2 WHERE l2.l_partkey = p_partkey)""".stripMargin)
-    }),
-    // TPC-H q18 shape (large-volume customer): the big-order set is
-    // computed by a lineitem-only partial+final aggregate FIRST, then
-    // joined — the agg output (~1% of orders) broadcasts, so the
-    // customer/orders join never shuffles lineitem a second time. The
-    // HAVING-subquery formulation in the oracle is semantically
-    // identical because l_orderkey determines the whole group.
-    // l_quantity is integral-valued, so the double sum is exact.
-    "q18_large_volume_customer" -> ((s, d) => {
-      val big = li(s, d).groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity")).as("total_qty"))
-        .filter(col("total_qty") > 250.0)
-      cust(s, d)
-        .join(ord(s, d), col("c_custkey") === col("o_custkey"))
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate"), col("o_totalprice"), col("total_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderdate"), col("o_orderkey"))
-        .limit(100)
-    }),
-    // TPC-H q21 shape adapted to this schema (no l_receiptdate /
-    // l_commitdate: "late" is l_shipdate > o_orderdate + 60 days).
-    // Suppliers in one nation who were the SOLE late supplier on a
-    // multi-supplier finished order: EXISTS(other supplier) → LeftSemi,
-    // NOT EXISTS(other LATE supplier) → LeftAnti, both equi-keyed on
-    // l_orderkey with the supplier-inequality as a residual condition —
-    // never a nested loop. The nation filter is applied BEFORE the two
-    // self-joins (the exists conditions don't depend on it), cutting
-    // the probe side ~25× — reference: hillview has no multi-join
-    // planner; this anchors Catalyst's semi/anti chain instead.
-    "q21_waiting_supplier" -> ((s, d) => {
-      val supps = Tables.supplier(s, d)
-        .join(Tables.nation(s, d).filter(col("n_name") === "NATION_3"),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_name"))
-      // EXISTS/NOT-EXISTS folded into one per-order aggregate instead
-      // of semi+anti joins against two more full lineitem passes: with
-      // s always a member of the order's supplier set (and always late
-      // on an l1 row), "another supplier exists" ⇔ min≠max over the
-      // order's suppliers, and "no OTHER supplier is late" ⇔ the late
-      // min and max both equal s — plain partial-aggregating min/max,
-      // no count-distinct expand. At scale this replaces two extra
-      // lineitem shuffles (the semi/anti probes) with one narrow
-      // per-order aggregation; surviving l1 rows (and therefore
-      // numwait, which counts ROWS) are identical.
-      val loAll = li(s, d)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-        .join(ord(s, d).filter(col("o_orderstatus") === "F")
-          .select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-      val late = col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS")
-      val stats = loAll.groupBy(col("l_orderkey").as("x_orderkey"))
-        .agg(min(col("l_suppkey")).as("min_s"),
-          max(col("l_suppkey")).as("max_s"),
-          min(when(late, col("l_suppkey"))).as("min_late"),
-          max(when(late, col("l_suppkey"))).as("max_late"))
-      val l1 = loAll.filter(late)
-        .join(supps, col("l_suppkey") === col("s_suppkey"))
-        .select(col("l_orderkey"), col("l_suppkey"), col("s_name"))
-      l1.join(stats, col("l_orderkey") === col("x_orderkey"))
-        .filter(col("min_s") =!= col("max_s") &&
-          col("min_late") === col("l_suppkey") &&
-          col("max_late") === col("l_suppkey"))
-        .groupBy(col("s_name")).agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(20)
-    }),
-    // TPC-H q2 shape adapted (no partsupp: "cost" is the lineitem sale
-    // price). Min-cost supplier per size-15 part sold in EUROPE. The
-    // correlated MIN subquery is written as its decorrelated form —
-    // aggregate-first, then join — so the tiny per-part min table
-    // (≤ #parts rows) BROADCASTS to the lineitem probe; lineitem is
-    // scanned twice but shuffled zero times.
-    "q2_min_cost_supplier" -> ((s, d) => {
-      val p15 = prt(s, d).filter(col("p_size") === 15).select(col("p_partkey"))
-      val mins = li(s, d)
-        .join(broadcast(p15), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_partkey"))
-        .agg(min(col("l_extendedprice")).as("min_price"))
-      val eurSupp = Tables.supplier(s, d)
-        .join(Tables.nation(s, d), col("s_nationkey") === col("n_nationkey"))
-        .join(Tables.region(s, d).filter(col("r_name") === "EUROPE"),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("s_suppkey"), col("s_name"))
-      li(s, d)
-        .join(broadcast(mins),
-          col("l_partkey") === col("p_partkey") &&
-            col("l_extendedprice") === col("min_price"))
-        .join(broadcast(eurSupp), col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_name"), col("p_partkey"), col("min_price"))
-        .distinct()
-        .orderBy(col("s_name"), col("p_partkey"))
-    }),
-    // TPC-H q7 shape (volume shipping between two nations, by year).
-    // Both nation dims are pre-filtered to the 2-name set BEFORE the
-    // broadcast joins — the inner joins then drop ~96% of rows early —
-    // and the cross-nation disjunction remains as the residual filter.
-    "q7_volume_shipping" -> ((s, d) => {
-      val names = Seq("NATION_10", "NATION_12")
-      val n1 = Tables.nation(s, d).filter(col("n_name").isin(names: _*))
-        .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-      val n2 = Tables.nation(s, d).filter(col("n_name").isin(names: _*))
-        .select(col("n_nationkey").as("cn_key"), col("n_name").as("cust_nation"))
-      li(s, d)
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("sn_key"))
-        .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(cust(s, d), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n2), col("c_nationkey") === col("cn_key"))
-        .filter((col("supp_nation") === "NATION_10" && col("cust_nation") === "NATION_12") ||
-          (col("supp_nation") === "NATION_12" && col("cust_nation") === "NATION_10"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(Num.sumRevenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    }),
-    // TPC-H q10 shape (returned-item reporting): one quarter of orders,
-    // only returned lines, revenue per customer, top 20. Customer keys
-    // carry through the group-by so no second customer join is needed.
-    "q10_returned_items" -> ((s, d) =>
-      cust(s, d)
-        .join(ord(s, d).filter(
-          col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("o_orderdate") < lit("1996-04-01").cast("timestamp")),
-          col("c_custkey") === col("o_custkey"))
-        .join(li(s, d).filter(col("l_returnflag") === "R"),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        .agg(Num.sumRevenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)),
-    // TPC-H q14 shape (promotion effect): conditional-sum / total-sum
-    // ratio in ONE aggregate pass. Both sums are exact decimals widened
-    // to double once, so the single division is deterministic across
-    // engines; the expression order (100 * num) / den matches the oracle
-    // textually.
-    "q14_promo_effect" -> ((s, d) => {
-      val rev = Num.revenueScaled(col("l_extendedprice"), col("l_discount"))
-      li(s, d)
-        .filter(col("l_shipdate") >= lit("1996-09-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-10-01").cast("timestamp"))
-        .join(broadcast(prt(s, d)), col("l_partkey") === col("p_partkey"))
-        .agg(
-          ((lit(100.0) * Num.descale4(sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0)))))
-            / Num.descale4(sum(rev))).as("promo_pct"),
-          count(lit(1)).as("n_rows"))
-    }),
-    // TPC-H q16 shape (supplier-part relationship count). The NOT IN
-    // over complaint suppliers (here: negative balance) is formulated as
-    // a LEFT ANTI broadcast join — the exact rewrite Catalyst produces
-    // for NOT IN over a provably non-null key — then a distinct-count
-    // per (brand, type, size).
-    "q16_supplier_part_cnt" -> ((s, d) => {
-      val parts = prt(s, d)
-        .filter(col("p_brand") =!= "Brand#5" && col("p_type") =!= "MEDIUM" &&
-          col("p_size").isin(1, 4, 7))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      // NOT IN ≡ left_anti ONLY while the subquery side is non-null (one
-      // null in NOT IN's list empties the whole result). Enforce the
-      // precondition instead of assuming it: with the filter, a future
-      // null s_suppkey is dropped from the exclusion list — the same
-      // non-null guard Catalyst itself requires for this rewrite.
-      val bad = Tables.supplier(s, d)
-        .filter(col("s_acctbal") < 0 && col("s_suppkey").isNotNull)
-        .select(col("s_suppkey"))
-      li(s, d)
-        .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(bad), col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-    }),
-    // TPC-H q9 shape (product-type profit by nation and year). The real
-    // q9 prices cost from partsupp.ps_supplycost; /root/testdata ships
-    // no partsupp, so the cost side is proxied by the part's own
-    // p_retailprice (same join/aggregate geometry: five tables, a
-    // LIKE-filtered part dim, profit = revenue − cost·qty as one exact
-    // decimal expression summed per (nation, year)). Dims broadcast;
-    // the only fact-fact shuffle is lineitem×orders — irreducible.
-    "q9_profit_by_nation" -> ((s, d) => {
-      val profit =
-        Num.revenueScaled(col("l_extendedprice"), col("l_discount")) -
-          Num.productScaled(col("p_retailprice"), col("l_quantity"))
-      // q9 proper says '%green%'; this corpus names parts '<adj> <noun>'
-      // with 'red' the only q9-style color token present at every SF —
-      // same selectivity role, non-vacuous result at sf0.001
-      val greenParts = prt(s, d).filter(col("p_name").contains("red"))
-        .select(col("p_partkey"), col("p_retailprice"))
-      val supN = Tables.supplier(s, d)
-        .join(Tables.nation(s, d), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("nation"))
-      li(s, d)
-        .join(broadcast(greenParts), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"))
-        .join(ord(s, d).select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("nation"), year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(Num.descale4(sum(profit)).as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-    // TPC-H q11 shape (important stock identification): per-key value
-    // aggregate kept only where it exceeds a FRACTION OF THE GLOBAL
-    // TOTAL — the scalar-subquery HAVING. The real q11 values partsupp
-    // stock; absent partsupp, per-part lineitem revenue stands in with
-    // identical geometry: one per-key aggregate (map-side combined),
-    // one 1-row global total BROADCAST to the filter (never a window,
-    // never a driver collect).
-    "q11_important_parts" -> ((s, d) => {
-      val rev = Num.revenueScaled(col("l_extendedprice"), col("l_discount"))
-      val perPart = li(s, d).groupBy(col("l_partkey")).agg(sum(rev).as("__val"))
-      val total = perPart.agg(Num.descale4(sum(col("__val"))).as("__tot"))
-      perPart.join(broadcast(total))
-        .filter(Num.descale4(col("__val")) > col("__tot") * lit(0.001))
-        .select(col("l_partkey").as("p_partkey"),
-          Num.descale4(col("__val")).as("value"))
-        .orderBy(col("value").desc, col("p_partkey"))
-    }),
-    // TPC-H q19 shape (discounted revenue): three OR'd brand/size/qty
-    // conjunctions across BOTH join sides. Anchors Catalyst's
-    // disjunction handling: the per-side factors of the OR are derived
-    // and pushed below the join (part gets brand∨brand∨brand + size
-    // bounds, lineitem gets the qty envelope) while the full predicate
-    // stays as the post-join residual.
-    "q19_disjunctive_revenue" -> ((s, d) =>
-      li(s, d)
-        .join(broadcast(prt(s, d)), col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#1" && col("p_size").between(1, 5) &&
-            col("l_quantity").between(1, 11)) ||
-          (col("p_brand") === "Brand#2" && col("p_size").between(1, 10) &&
-            col("l_quantity").between(10, 20)) ||
-          (col("p_brand") === "Brand#3" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(20, 30)))
-        .agg(Num.sumRevenue(col("l_extendedprice"), col("l_discount")).as("revenue"),
-          count(lit(1)).as("n_rows"))),
-    // TPC-H q20 shape (potential part promotion): suppliers who moved
-    // >300 units of 'red%' parts in 1997. The IN subquery is the
-    // aggregate-then-semi-join form: the qualified-supplier set (≤ #supp
-    // rows) comes out of a lineitem aggregate and semi-joins supplier —
-    // supplier itself is never shuffled.
-    "q20_part_promotion" -> ((s, d) => {
-      val redParts = prt(s, d).filter(col("p_name").startsWith("red"))
-        .select(col("p_partkey"))
-      val qualified = li(s, d)
-        .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .join(broadcast(redParts), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(col("l_quantity")).as("qty"))
-        .filter(col("qty") > 300.0)
-        .select(col("l_suppkey"))
-      Tables.supplier(s, d)
-        .join(broadcast(qualified), col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
-        .orderBy(col("s_suppkey"))
-    }),
-    // TPC-H q8 shape (national market share): the fraction of AMERICA
-    // customers' ECONOMY-part revenue supplied from one nation, by
-    // year — a conditional-sum / total-sum ratio per group over a
-    // six-table join. Dim chains (nation→region, supplier→nation) are
-    // broadcast; the ratio divides two exact decimal sums widened to
-    // double once per group.
-    "q8_market_share" -> ((s, d) => {
-      val rev = Num.revenueScaled(col("l_extendedprice"), col("l_discount"))
-      val supN = Tables.supplier(s, d)
-        .join(Tables.nation(s, d), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val amerCust = cust(s, d)
-        .join(broadcast(Tables.nation(s, d)
-            .select(col("n_nationkey").as("cn_key"), col("n_regionkey").as("cn_reg"))),
-          col("c_nationkey") === col("cn_key"))
-        .join(broadcast(Tables.region(s, d).filter(col("r_name") === "AMERICA")),
-          col("cn_reg") === col("r_regionkey"))
-        .select(col("c_custkey"))
-      li(s, d)
-        .join(broadcast(prt(s, d).filter(col("p_type") === "ECONOMY")
-          .select(col("p_partkey"))), col("l_partkey") === col("p_partkey"))
-        .join(ord(s, d), col("l_orderkey") === col("o_orderkey"))
-        .join(amerCust, col("o_custkey") === col("c_custkey"), "left_semi")
-        .join(broadcast(supN), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg((Num.descale4(sum(when(col("supp_nation") === "NATION_3", rev).otherwise(lit(0))))
-          / Num.descale4(sum(rev))).as("mkt_share"))
-        .orderBy(col("o_year"))
-    }),
-    // TPC-H q12 shape adapted (no l_shipmode/l_receiptdate: "mode" is
-    // l_returnflag, "late" is shipdate > orderdate + 90 days): one join
-    // + two conditional counts per group — the pivot-style aggregate.
-    "q12_late_lines" -> ((s, d) =>
-      li(s, d).filter(col("l_returnflag").isin("A", "N"))
-        .join(ord(s, d).filter(
-          col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("o_orderdate") < lit("1997-01-01").cast("timestamp")),
-          col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
-        .groupBy(col("l_returnflag"))
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("high_line_count"),
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
-            .otherwise(1L)).as("low_line_count"))
-        .orderBy(col("l_returnflag"))),
-    // TPC-H q13 shape (customer order distribution): LEFT OUTER join
-    // with the filter in the JOIN CONDITION (not a WHERE — customers
-    // with zero matching orders must survive with count 0), then a
-    // second aggregation over the first's output — the double-agg plan.
-    "q13_customer_distribution" -> ((s, d) =>
-      cust(s, d)
-        .join(ord(s, d).filter(col("o_orderpriority") =!= "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-        .limit(10)),
-    // TPC-H q15 shape (top supplier), SQL TEXT: a per-supplier revenue
-    // CTE consumed twice — once as the join input, once under a scalar
-    // MAX subquery. Anchors aggregate reuse + scalar-subquery gating;
-    // the double equality is safe because both sides come from the
-    // same exact decimal sum.
-    "q15_top_supplier" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      li(s, d).createOrReplaceTempView(s"q15_lineitem_$tag")
-      Tables.supplier(s, d).createOrReplaceTempView(s"q15_supplier_$tag")
-      s.sql(
-        s"""WITH rev AS (
-           |  SELECT l_suppkey,
-           |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_rev
-           |  FROM q15_lineitem_$tag
-           |  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-           |  GROUP BY l_suppkey)
-           |SELECT s_suppkey, s_name, total_rev
-           |FROM q15_supplier_$tag JOIN rev ON s_suppkey = l_suppkey
-           |WHERE total_rev = (SELECT max(total_rev) FROM rev)
-           |ORDER BY s_suppkey""".stripMargin)
-    }),
-    // TPC-H q22 shape, written as SQL TEXT (like q17) to anchor the two
-    // remaining subquery rewrites in one plan: an UNCORRELATED scalar
-    // subquery (global above-average balance — computed once, reused as
-    // a literal-like broadcast) and NOT EXISTS → LeftAnti. The average
-    // is exact-decimal-sum / count so both engines divide identical
-    // doubles.
-    "q22_global_sales_opportunity" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      cust(s, d).createOrReplaceTempView(s"q22_customer_$tag")
-      ord(s, d).createOrReplaceTempView(s"q22_orders_$tag")
-      s.sql(
-        s"""SELECT c_nationkey AS nation, count(*) AS numcust,
-           |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-           |FROM q22_customer_$tag c
-           |WHERE c_acctbal > (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-           |                   FROM q22_customer_$tag WHERE c_acctbal > 0.0)
-           |  AND c_nationkey IN (0, 3, 10, 11, 16, 17, 19)
-           |  AND NOT EXISTS (SELECT 1 FROM q22_orders_$tag o
-           |                  WHERE o.o_custkey = c.c_custkey
-           |                    AND o.o_orderpriority = '1-URGENT')
-           |GROUP BY 1 ORDER BY 1""".stripMargin)
-    }),
-    "f_range" -> ((s, d) =>
-      li(s, d).filter(Filters.range(col("l_extendedprice"), 1000.0, 5000.0))),
-    "f_comparison" -> ((s, d) =>
-      li(s, d).filter(Filters.comparison(col("l_quantity"), ">", 45.0))),
-    "f_string_contains" -> ((s, d) =>
-      ord(s, d).filter(Filters.stringMatch(col("o_orderpriority"), "URGENT"))),
-    "f_regex" -> ((s, d) =>
-      prt(s, d).filter(Filters.stringMatch(col("p_name"), "^(red|blue) .*t$", kind = "regex"))),
-    "f_isin" -> ((s, d) =>
-      li(s, d).filter(Filters.inList(col("l_returnflag"), Seq("A", "R")))),
-    "f_rowseek" -> ((s, d) =>
-      li(s, d).filter(Filters.rowSeek(
-        Seq(col("l_returnflag"), col("l_linestatus")), Seq("N", "O")))),
-    "f_compound" -> ((s, d) =>
-      li(s, d).filter(Filters.or(
-        Filters.and(col("l_quantity") > 30.0, col("l_discount") <= 0.05),
-        Filters.not(col("l_returnflag") === "N")))),
-    "f_ci_complement" -> ((s, d) =>
-      prt(s, d).filter(Filters.stringMatch(col("p_brand"), "brAnd#1",
-        kind = "substring", caseSensitive = false, complement = true))),
-    "f_any_column" -> ((s, d) =>
-      ord(s, d).filter(Filters.anyColumnMatches(
-        Seq(col("o_orderpriority"), col("o_orderstatus")), "F"))),
-    "interval_compare" -> ((s, d) =>
-      li(s, d)
-        .filter(Intervals.comparedTo(
-          Intervals.make(col("l_discount"), col("l_tax")), "==", 0.05))
-        .select(col("l_orderkey"), col("l_linenumber"))),
-    "f_udf_predicate" -> ((s, d) => {
-      graft.functions.Udfs.registerAll(s)
-      li(s, d).filter(expr("qty_band(l_quantity) = 'mid'"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-    }),
-    // runtime UDF surface (CreateColumnJSMap / JSFilterDescription):
-    // user-supplied expression STRINGS registered at runtime, parsed by
-    // Spark's parser — the predicate still pushes down to the scan
-    "dynamic_udf" -> ((s, d) => {
-      import graft.functions.DynamicUdf
-      DynamicUdf.registerExpr(s, "qty_mid_dyn", "q >= 10.0 AND q < 30.0", Seq("q"))
-      DynamicUdf.registerExpr(s, "ppu_dyn",
-        "CASE WHEN q = 0.0 THEN 0.0 ELSE floor(p / q * 10000.0) / 10000.0 END",
-        Seq("p", "q"))
-      li(s, d)
-        .filter(DynamicUdf.call(s, "qty_mid_dyn", col("l_quantity")))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          // SQL-parsed numeric literals promote to decimal — pin the
-          // declared output type to double (the oracle's type)
-          DynamicUdf.call(s, "ppu_dyn", col("l_extendedprice"), col("l_quantity"))
-            .cast("double").as("ppu"))
-    }),
-    // JSFilterDescription through the same runtime-string surface: the
-    // whole gesture (predicate text → filter) arrives at runtime, and the
-    // parsed predicate still reaches the scan as a pushed filter
-    "dynamic_filter" -> ((s, d) => {
-      import graft.functions.DynamicUdf
-      DynamicUdf.registerExpr(s, "ship_pick_dyn",
-        "q >= 45.0 AND m IN ('A', 'R')", Seq("q", "m"))
-      li(s, d)
-        .filter(DynamicUdf.call(s, "ship_pick_dyn",
-          col("l_quantity"), col("l_returnflag")))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_returnflag"))
-    }),
-    // the JS-gesture lexical surface (CreateColumnJSMap.java:39-56): a
-    // user-written `function map(row) {...}` — if/else chain, local
-    // var, string concat with JS number rendering, method call —
-    // compiled to Columns (codegen'd, pushdown-friendly), not executed
-    // per row; differential-fuzz-gated vs a plain-Scala interpreter
-    "dynamic_udf_js" -> ((s, d) => {
-      val js = """function map(row) {
-        var v = row.l_quantity * row.l_extendedprice;
-        if (row.l_returnflag == 'R') return 'ret:' + row.l_linestatus.toLowerCase();
-        if (v >= 1000000) { return 'big'; }
-        return 'v' + Math.floor(v / 100000);
-      }"""
-      graft.functions.JsGesture.withJsColumn(li(s, d), "tag", js)
-        .groupBy(col("tag"))
-        .agg(count(lit(1)).as("n"),
-          graft.engine.Num.sumExact(col("l_quantity")).as("sum_qty"))
-    }),
-    // JSFilterDescription.java:30-80 as a JS gesture: the function-form
-    // predicate still reaches the parquet scan as a pushed filter
-    // (plan-gated in JsGestureSpec)
-    "dynamic_filter_js" -> ((s, d) =>
-      graft.functions.JsGesture.jsFilter(li(s, d),
-        """function filter(row) {
-          return row.l_quantity >= 45 && row.l_returnflag.startsWith('A');
-        }""")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_returnflag"))),
-    // FULL-PROGRAM JS gestures (CreateColumnJSMap.java:39-56 evaluates
-    // arbitrary user JS per row via GraalVM): loops, reassignment, user
-    // functions, arrays run through the tier-2 per-row interpreter
-    // (JsProgramEval — children are only the referenced fields, so
-    // pruning reaches the scan). Oracled against loop-free SQL
-    // reformulations; tier-parity fuzz in JsProgramSpec.
-    // 1) for-loop positional charcode checksum over the corpus (ASCII
-    //    guard keeps JS UTF-16 .length == SQL codepoint semantics)
-    "dynamic_udf_js_loop" -> ((s, d) => {
-      val js = """function map(row) {
-        var c = row.text;
-        var acc = 0;
-        for (var i = 0; i < c.length; i++) {
-          acc = (acc + (i + 1) * c.charCodeAt(i)) % 1000003;
-        }
-        return acc;
-      }"""
-      graft.functions.JsGesture.withJsColumnTyped(
-          docs(s, d).filter(length(col("text")) === octet_length(col("text"))),
-          "acc", js, org.apache.spark.sql.types.DoubleType)
-        .agg(sum(col("acc")).cast("long").as("acc_sum"),
-          count(lit(1)).as("n_docs"))
-    }),
-    // 1b) objects + exceptions end-to-end (the r12 interpreter surface):
-    //     an object-literal accumulator mutated per word, a throw/catch
-    //     pair routing long words, a finally-set property counted via
-    //     Object.keys — replayed as a loop-free list fold in SQL
-    "dynamic_udf_js_object" -> ((s, d) => {
-      val js = """function map(row) {
-        var st = {sum: 0, nlong: 0};
-        var ws = row.text.split(' ');
-        for (var i = 0; i < ws.length; i++) {
-          try {
-            if (ws[i].length > 6) { throw {l: ws[i].length}; }
-            st.sum += ws[i].length;
-          } catch (e) {
-            st.nlong++;
-            st.sum += e.l % 7;
-          } finally {
-            st.touched = 1;
-          }
-        }
-        return st.sum * 10000 + st.nlong * 10 + Object.keys(st).length;
-      }"""
-      graft.functions.JsGesture.withJsColumnTyped(docs(s, d),
-          "score", js, org.apache.spark.sql.types.DoubleType)
-        .select(col("doc_id"), col("score"))
-    }),
-    // closures end-to-end (r13): a capture-mutating callback through
-    // .map, a seeded .reduce fold, and a comparator .sort — every
-    // piece SQL-replayable (sum/max of token lengths + long-token
-    // count), so the closure tier is value-oracled, not just spec'd
-    "dynamic_udf_js_closure" -> ((s, d) => {
-      val js = """function map(row) {
-        var ws = row.text.split(' ');
-        var cap = 0;
-        var mark = function (w) { if (w.length > 4) cap += 1; return w.length; };
-        var lens = ws.map(mark);
-        var tot = lens.reduce(function (a, x) { return a + x; }, 0);
-        var mx = lens.sort(function (a, b) { return b - a; })[0];
-        return '' + tot + ':' + mx + ':' + cap;
-      }"""
-      graft.functions.JsGesture.withJsColumnTyped(docs(s, d),
-          "closure_sig", js, org.apache.spark.sql.types.StringType)
-        .select(col("doc_id"), col("closure_sig"))
-    }),
-    // prototype mutation (the LAST documented GraalVM-boundary item,
-    // closed r14): a constructor function whose method table is built by
-    // mutating Ctor.prototype — instances share the live chain, `this`
-    // binds per call, chaining via `return this`
-    "dynamic_udf_js_proto" -> ((s, d) => {
-      val js = """function Acc(k) { this.k = k; this.n = 0; this.sum = 0; }
-      function map(row) {
-        Acc.prototype.add = function (x) {
-          this.n += 1; this.sum += x * this.k; return this;
-        };
-        Acc.prototype.mean10 = function () {
-          return Math.floor(this.sum * 10 / this.n);
-        };
-        var ws = row.text.split(' ');
-        var a = new Acc(2);
-        ws.forEach(function (w) { a.add(w.length); });
-        var b = new Acc(3);
-        b.add(5).add(7);
-        return a.n * 1000000 + a.mean10() * 100 + b.sum % 100;
-      }"""
-      graft.functions.JsGesture.withJsColumnTyped(docs(s, d),
-          "proto_sig", js, org.apache.spark.sql.types.DoubleType)
-        .select(col("doc_id"), col("proto_sig"))
-    }),
-    // `this` + accessors (the r13 boundary item, closed r14): a stateful
-    // accumulator object whose methods mutate through `this`, a setter
-    // that clamps, a getter that derives — the OO-gesture shape GraalVM
-    // runs; signature integer is SQL-replayable (n, floored total, avg)
-    "dynamic_udf_js_this" -> ((s, d) => {
-      val js = """function map(row) {
-        var ws = row.text.split(' ');
-        var acc = {
-          n: 0,
-          total: 0,
-          add: function (w) { this.n += 1; this.total += w.length; },
-          get avg10() { return Math.floor(this.total * 10 / this.n); },
-          set floor(v) { if (this.total < v) this.total = v; }
-        };
-        ws.forEach(function (w) { acc.add(w); });
-        acc.floor = 100;
-        return acc.n * 100000 + acc.total * 100 + acc.avg10 % 100;
-      }"""
-      graft.functions.JsGesture.withJsColumnTyped(docs(s, d),
-          "this_sig", js, org.apache.spark.sql.types.DoubleType)
-        .select(col("doc_id"), col("this_sig"))
-    }),
-    // 2) while-loop digit sum as a filter verdict (casting out nines
-    //    makes the loop's result SQL-checkable: digitsum(n)%9 == n%9)
-    "dynamic_filter_js_loop" -> ((s, d) =>
-      graft.functions.JsGesture.jsFilter(ord(s, d),
-        """function filter(row) {
-          var n = row.o_orderkey;
-          var s = 0;
-          while (n > 0) { s = s + n % 10; n = Math.floor(n / 10); }
-          return s % 9 == 0;
-        }""")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))),
-    // 3) user-defined helper functions incl. recursion
-    "dynamic_udf_js_func" -> ((s, d) => {
-      val js = """function digits(n) {
-        if (n < 10) return 1;
-        return 1 + digits(Math.floor(n / 10));
-      }
-      function map(row) { return digits(row.o_orderkey) * 100 + row.o_orderkey % 7; }"""
-      graft.functions.JsGesture.withJsColumnTyped(ord(s, d), "code", js,
-          org.apache.spark.sql.types.DoubleType)
-        .groupBy(col("code").cast("long").as("code"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    // 4) arrays: split + loop over word lengths
-    "dynamic_udf_js_array" -> ((s, d) => {
-      val js = """function map(row) {
-        var ws = row.text.split(' ');
-        var best = 0;
-        for (var i = 0; i < ws.length; i++) {
-          if (ws[i].length > best) best = ws[i].length;
-        }
-        return best;
-      }"""
-      graft.functions.JsGesture.withJsColumnTyped(
-          docs(s, d).filter(length(col("text")) === octet_length(col("text"))),
-          "best", js, org.apache.spark.sql.types.DoubleType)
-        .groupBy(col("best").cast("long").as("best"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    // 5) regex methods (match groups, global replace, test, search) —
-    //    the one GraalVM feature the reference's gesture examples lean
-    //    on beyond plain string methods; patterns stay in the shared
-    //    Java/RE2 dialect so DuckDB's regexp functions replay them
-    "dynamic_udf_js_regex" -> ((s, d) => {
-      val js = """function map(row) {
-        var t = row.text;
-        var m = t.match(/^([a-z]+) ([a-z]+)/);
-        var head = m === null ? 'none' : m[1] + '_' + m[2];
-        var novow = t.replace(/[aeiou]/g, '');
-        var hasq = /qu/.test(t) ? 1 : 0;
-        var sp = t.search(/ [a-z]{7} /);
-        return head + ':' + novow.length + ':' + hasq + ':' + sp;
-      }"""
-      graft.functions.JsGesture.withJsColumn(
-          docs(s, d).filter(length(col("text")) === octet_length(col("text"))),
-          "tag", js)
-        .select(col("doc_id"), col("tag"))
-    }),
-    // 6) the JS Date RUNTIME end-to-end (the reference row proxy hands
-    //    gestures `new Date(millis)` — JSVirtualRowSnapshot.java:52-58):
-    //    calendar getters, Date-minus-Date valueOf coercion against a
-    //    constructed date, and Date.UTC, aggregated per order month
-    "dynamic_udf_js_date" -> ((s, d) => {
-      val jsYm = """function map(row) {
-        var dt = row.o_orderdate;
-        return dt.getFullYear() * 100 + (dt.getMonth() + 1);
-      }"""
-      val jsWk = """function map(row) {
-        var dt = row.o_orderdate;
-        var days = Math.floor((dt - new Date(1995, 0, 1)) / 86400000);
-        var sane = Date.UTC(1995, 0, 1) === new Date(1995, 0, 1).getTime() ? 1 : 0;
-        return (days * 7 + dt.getDay()) * sane;
-      }"""
-      val base = ord(s, d).select(col("o_orderdate"))
-      val w = graft.functions.JsGesture.withJsColumnTyped(
-        graft.functions.JsGesture.withJsColumnTyped(base, "ym", jsYm,
-          org.apache.spark.sql.types.DoubleType),
-        "wk", jsWk, org.apache.spark.sql.types.DoubleType)
-      w.groupBy(col("ym").cast("long").as("ym"))
-        .agg(count(lit(1)).as("n"), sum(col("wk")).cast("long").as("wk_sum"))
-    }),
-    "nextk_basic" -> ((s, d) =>
-      NextK.nextK(ord(s, d), Seq(Order("o_orderpriority"), Order("o_orderstatus")), 8)),
-    "nextk_desc" -> ((s, d) =>
-      NextK.nextK(ord(s, d),
-        Seq(Order("o_orderpriority", ascending = false), Order("o_orderstatus")), 5)),
-    "nextk_pivot_aggs" -> ((s, d) =>
-      NextK.nextK(li(s, d), Seq(Order("l_returnflag"), Order("l_linestatus")), 5,
-        pivot = Some(Seq("N", "F")),
-        aggs = Seq(AggSpec(SumAgg, "l_quantity", "sum_qty"),
-          AggSpec(MinAgg, "l_extendedprice", "min_price"),
-          AggSpec(MaxAgg, "l_extendedprice", "max_price")))),
-    "topk_sort" -> ((s, d) =>
-      TopK.topK(li(s, d).select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice")),
-        Seq(Order("l_extendedprice", ascending = false), Order("l_orderkey"), Order("l_linenumber")), 15)),
-
-    // ── histograms ─────────────────────────────────────────────────────
-    "hist_numeric" -> ((s, d) =>
-      Histograms.histogram1D(
-        li(s, d).filter(col("l_extendedprice").between(PriceLo, PriceHi)), priceBucket)),
-    "hist_string_buckets" -> ((s, d) =>
-      Histograms.histogram1D(cust(s, d),
-        Histograms.stringBucket(col("c_mktsegment"), Seq("A", "C", "F", "M")))),
-    "hist_2d" -> ((s, d) =>
-      Histograms.histogram2D(li(s, d),
-        Histograms.numericBucket(col("l_quantity"), 0.0, 50.0, 10),
-        Histograms.numericBucket(col("l_discount"), 0.0, 0.1, 5))),
-    "hist_explicit" -> ((s, d) =>
-      Histograms.histogram1D(li(s, d),
-        Histograms.explicitBucket(col("l_quantity"),
-          Seq(0.0, 5.0, 15.0, 35.0, 50.0)))),
-    "heatmap_singleton" -> ((s, d) =>
-      Histograms.heatmapWithSingleton(prt(s, d),
-        Histograms.numericBucket(col("p_size").cast("double"), 0.0, 50.0, 10),
-        col("p_brand"), col("p_partkey"))),
-    "hist_cdf" -> ((s, d) =>
-      Histograms.histogramWithCdf(
-        li(s, d).filter(col("l_extendedprice").between(PriceLo, PriceHi)), priceBucket)),
-    "bucket_quantiles" -> ((s, d) =>
-      Histograms.bucketQuantiles(li(s, d), col("l_returnflag"),
-        col("l_extendedprice"), Seq(0.25, 0.5, 0.75))),
-    "hist2d_quantiles" -> ((s, d) =>
-      li(s, d).withColumn("__qv", col("l_extendedprice"))
-        .groupBy(col("l_returnflag").as("b1"), col("l_linestatus").as("b2"))
-        .agg(round(expr("percentile(__qv, 0.25)"), 4).as("q0"),
-          round(expr("percentile(__qv, 0.5)"), 4).as("q1"),
-          round(expr("percentile(__qv, 0.75)"), 4).as("q2"))),
-    // percentile_approx twin of hist2d_quantiles (rows-only; tolerance
-    // spec-gated) — bounded per-cell state at scale
-    "hist2d_quantiles_approx" -> ((s, d) =>
-      Histograms.bucketQuantilesApprox2D(li(s, d),
-        col("l_returnflag"), col("l_linestatus"),
-        col("l_extendedprice"), Seq(0.25, 0.5, 0.75))),
-    "interval_data_range" -> ((s, d) =>
-      li(s, d).agg(
-        min(least(col("l_discount"), col("l_tax"))).as("min_lo"),
-        max(greatest(col("l_discount"), col("l_tax"))).as("max_hi"),
-        count(lit(1)).as("present"))),
-    "ni_threshold" -> ((s, d) =>
-      li(s, d).agg((countDistinct(col("l_partkey")) > 1000L).as("exceeds"))),
-    "corr_grid" -> ((s, d) => {
-      // CorrelationSketch: grid of pairwise 2-D histograms over numeric
-      // column pairs, tagged by pair — one unioned aggregation set
-      val pairs = Seq(
-        ("l_quantity", 0.0, 50.0, 5, "l_discount", 0.0, 0.1, 5),
-        ("l_quantity", 0.0, 50.0, 5, "l_extendedprice", 0.0, 110000.0, 5),
-        ("l_discount", 0.0, 0.1, 5, "l_extendedprice", 0.0, 110000.0, 5))
-      pairs.map { case (cx, lx, hx, nx, cy, ly, hy, ny) =>
-        li(s, d).groupBy(
-            Histograms.numericBucket(col(cx), lx, hx, nx).as("bx"),
-            Histograms.numericBucket(col(cy), ly, hy, ny).as("by"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(lit(s"$cx:$cy").as("pair"), col("bx"), col("by"), col("cnt"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // ── stats / sketch family ──────────────────────────────────────────
-    "summary_count" -> ((s, d) => Stats.rowCount(li(s, d))),
-    "stats_basic" -> ((s, d) => Stats.basicColStats(li(s, d), "l_extendedprice")),
-    "stats_range_date" -> ((s, d) => Stats.dataRange(li(s, d), "l_shipdate")),
-    "stats_corr" -> ((s, d) => Stats.correlation(li(s, d), "l_quantity", "l_extendedprice")),
-    "stats_centroids" -> ((s, d) =>
-      Stats.categoryCentroids(li(s, d), "l_returnflag", Seq("l_quantity", "l_extendedprice"))),
-    "distinct_count" -> ((s, d) =>
-      DistinctAndFrequency.distinctCount(li(s, d), Seq("l_partkey"))),
-    "distinct_values" -> ((s, d) =>
-      DistinctAndFrequency.distinctValues(li(s, d), Seq("l_returnflag", "l_linestatus"))),
-    "hll_distinct" -> ((s, d) =>
-      DistinctAndFrequency.approxDistinctCount(li(s, d), "l_partkey")),
-    // GroupBy-combinator over the HLL sketch: one bounded sketch per
-    // group; approximate ⇒ rows-only gate + per-group error spec
-    "hll_group_distinct" -> ((s, d) =>
-      DistinctAndFrequency.approxDistinctByGroup(li(s, d), "l_returnflag", "l_partkey")),
-    // Persistable sketch surface: per-source HLL register arrays built in
-    // ONE corpus scan, then the global distinct answered by max-merging
-    // the kilobyte sketches — the cross-job form of partial aggregation
-    // (store the per-partition sketch, never rescan). Approximate ⇒
-    // rows-only; exact countDistinct twin rides in the same result and
-    // the ≤5% bound + merge monoid laws are property-gated.
-    // Storable mergeable Bloom filter — the MEMBERSHIP member of the
-    // sketch family: per-source token blooms probed for a fixed token
-    // list, each probe carried next to its EXACT twin (bloom answers
-    // are one-sided, so bloom >= exact always; equality at this fill is
-    // the observed-FP gate). Hash-bit blobs aren't DuckDB-replayable ⇒
-    // rows-only; one-sidedness/FP/merge-parity property-gated.
-    "sketch_bloom_rollup" -> ((s, d) => {
-      import graft.functions.BloomSketch._
-      val probes = Seq("slow", "dup", "spark", "merge",
-        "zzz_absent", "quux_absent")
-      val toks = docs(s, d).select(col("source"),
-          explode(split(lower(col("text")), " ")).as("tok"))
-        .filter(col("tok") =!= "")
-      val aggs = bloom_build(col("tok")).as("bf") +:
-        probes.zipWithIndex.map { case (p, i) =>
-          max((col("tok") === p).cast("long")).as(s"exact_$i") }
-      val perSrc = toks.groupBy(col("source")).agg(aggs.head, aggs.tail: _*)
-      perSrc.select((col("source") +:
-        round(bloom_fill(col("bf")), 4).as("fill") +:
-        probes.indices.flatMap(i => Seq(
-          bloom_might_contain(col("bf"), lit(probes(i))).cast("long")
-            .as(s"bloom_$i"),
-          col(s"exact_$i")))): _*)
-        .orderBy(col("source"))
-    }),
-    "sketch_distinct_rollup" -> ((s, d) => {
-      import graft.functions.HllSketch
-      val dd = docs(s, d)
-      val perSrc = dd.groupBy(col("source"))
-        .agg(HllSketch.hll_build(col("text")).as("sk"),
-          countDistinct(col("text")).as("exact_distinct"))
-      val srcRows = perSrc.select(col("source"),
-        floor(HllSketch.hll_estimate(col("sk"))).cast("long").as("est_distinct"),
-        col("exact_distinct"))
-      val globalExact = dd.agg(countDistinct(col("text")).as("exact_distinct"))
-      val globalRow = perSrc.agg(HllSketch.hll_merge(col("sk")).as("sk"))
-        .crossJoin(globalExact)
-        .select(lit("__all__").as("source"),
-          floor(HllSketch.hll_estimate(col("sk"))).cast("long").as("est_distinct"),
-          col("exact_distinct"))
-      srcRows.union(globalRow).orderBy(col("source"))
-    }),
-    // Storable theta/KMV sketches: set ALGEBRA over stored subsets —
-    // the question HLL blobs cannot answer. One scan builds a per-source
-    // vocabulary sketch; every pairwise overlap (|A∩B|, |A∖B|, Jaccard)
-    // is then answered from kilobyte blobs with NO rescan or token
-    // join. At verify scale k=1024 exceeds every vocabulary, so the
-    // sketches are exhaustive and the estimates EXACT ⇒ fully oracled
-    // (DuckDB recomputes the true pairwise overlaps); the sampled
-    // regime (vocab ≫ k) is property-gated with error bounds.
-    "sketch_theta_algebra" -> ((s, d) => {
-      import graft.functions.ThetaSketch
-      val toks = docs(s, d).select(col("source"),
-          explode(split(lower(col("text")), " ")).as("tok"))
-        .filter(col("tok") =!= "")
-      val perSrc = toks.groupBy(col("source"))
-        .agg(ThetaSketch.theta_build(col("tok")).as("sk"))
-      val a = perSrc.select(col("source").as("source_a"), col("sk").as("sk_a"))
-      val b = perSrc.select(col("source").as("source_b"), col("sk").as("sk_b"))
-      a.crossJoin(broadcast(b)) // sketch-sized frame: #sources² kilobyte rows
-        .filter(col("source_a") < col("source_b"))
-        .select(col("source_a"), col("source_b"),
-          round(ThetaSketch.theta_intersect(col("sk_a"), col("sk_b")))
-            .cast("long").as("common_tokens"),
-          round(ThetaSketch.theta_anotb(col("sk_a"), col("sk_b")))
-            .cast("long").as("a_only_tokens"),
-          ThetaSketch.theta_jaccard(col("sk_a"), col("sk_b")).as("jaccard"))
-        .orderBy(col("source_a"), col("source_b"))
-    }),
-    // Storable-sketch heavy hitters: per-source MG summary blobs built in
-    // one scan, max-merged (Agarwal mergeable-summaries combine), then the
-    // ≤cap candidate set exactly verified with a broadcast semi-join —
-    // the result is EXACT (MG guarantees no key above N/(cap+1) ≥ the
-    // 1% threshold is missed), so the query oracles like heavy_mg while
-    // the sketch blobs are storable/re-mergeable across jobs.
-    "sketch_heavy_rollup" -> ((s, d) => {
-      import graft.functions.MgSketch
-      val cap = 200
-      val toks = docs(s, d).select(col("source"),
-          explode(split(lower(col("text")), " ")).as("tok"))
-        .filter(length(col("tok")) > 0)
-      val perSrc = toks.groupBy(col("source"))
-        .agg(MgSketch.mg_build(col("tok"), cap).as("sk"),
-          count(lit(1)).as("n"))
-      val merged = perSrc.agg(MgSketch.mg_merge(col("sk"), cap).as("sk"),
-        sum(col("n")).as("n"))
-      val cands = merged.select(
-          explode(MgSketch.mg_entries(col("sk"))).as("e"))
-        .select(col("e.key").as("tok"))
-      val counts = toks.join(broadcast(cands), Seq("tok"), "left_semi")
-        .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      counts.crossJoin(broadcast(merged.select(col("n"))))
-        .filter(col("cnt") >= ceil(lit(0.01) * col("n")))
-        .select(col("tok"), col("cnt"))
-        .orderBy(col("cnt").desc, col("tok"))
-    }),
-    // ConcurrentSketch made concrete: ONE aggregation pass per source
-    // computes all three storable sketches (HLL distinct, MG lang
-    // summary, KLL length quantiles) PLUS their exact twins — the
-    // reference's multi-sketch-one-scan contract
-    // (ConcurrentSketch/MultiSketch) expressed as a single agg(...).
-    // Rows-only (sketch estimates aren't SQL-reproducible); every
-    // estimate is bounded against its in-result exact twin in
-    // PropertySpec. top_lang is deterministic: cap=16 exceeds the lang
-    // vocabulary, so MG counts are exact, and the argmax tie-breaks by
-    // key.
-    "corpus_sketch_report" -> ((s, d) => {
-      import graft.functions.{HllSketch, KllSketch, MgSketch, ThetaSketch}
-      val rep = docs(s, d).groupBy(col("source")).agg(
-        HllSketch.hll_build(col("text")).as("hll"),
-        MgSketch.mg_build(col("lang"), 16).as("mg"),
-        KllSketch.kll_build(col("n_chars").cast("double")).as("kll"),
-        ThetaSketch.theta_build(col("text")).as("theta"),
-        countDistinct(col("text")).as("exact_distinct"),
-        expr("percentile(n_chars, 0.5)").as("exact_median"))
-      val e = MgSketch.mg_entries(col("mg"))
-      val topLang = aggregate(e,
-        struct(lit("").as("key"), lit(-1L).as("lower_count")),
-        (acc, x) => when(x("lower_count") > acc("lower_count") ||
-            (x("lower_count") === acc("lower_count") && x("key") < acc("key")),
-          x).otherwise(acc))("key")
-      rep.select(col("source"),
-        floor(HllSketch.hll_estimate(col("hll"))).cast("long").as("est_distinct"),
-        col("exact_distinct"),
-        topLang.as("top_lang"),
-        KllSketch.kll_quantile(col("kll"), 0.5).as("est_median"),
-        col("exact_median"),
-        // theta member of the one-scan family: exhaustive at this
-        // per-source cardinality, so its estimate must EQUAL the twin
-        round(ThetaSketch.theta_estimate(col("theta")))
-          .cast("long").as("theta_distinct"))
-        .orderBy(col("source"))
-    }),
-    // Storable-sketch quantiles: per-source KLL blobs, merged, quartiles
-    // read off the merged sketch; the exact percentile twin rides in the
-    // same result (approximate ⇒ rows-only; rank-error and split
-    // invariance property-gated).
-    "sketch_quantile_rollup" -> ((s, d) => {
-      import graft.functions.KllSketch
-      val dd = docs(s, d)
-      val perSrc = dd.groupBy(col("source"))
-        .agg(KllSketch.kll_build(col("n_chars")).as("sk"))
-      val merged = perSrc.agg(KllSketch.kll_merge(col("sk")).as("sk"))
-      val exact = dd.agg(
-        expr("percentile(n_chars, 0.25)").as("exact_q25"),
-        expr("percentile(n_chars, 0.5)").as("exact_q50"),
-        expr("percentile(n_chars, 0.75)").as("exact_q75"))
-      merged.crossJoin(exact).select(
-        KllSketch.kll_quantile(col("sk"), 0.25).as("est_q25"),
-        KllSketch.kll_quantile(col("sk"), 0.5).as("est_q50"),
-        KllSketch.kll_quantile(col("sk"), 0.75).as("est_q75"),
-        col("exact_q25"), col("exact_q50"), col("exact_q75"))
-    }),
-    "heavy_exact" -> ((s, d) =>
-      DistinctAndFrequency.heavyHittersExact(ord(s, d), Seq("o_orderpriority"), 0.05)),
-    "heavy_mg" -> ((s, d) =>
-      DistinctAndFrequency.heavyHittersMG(li(s, d), Seq("l_returnflag", "l_linestatus"), 0.05)),
-    "heavy_sampled" -> ((s, d) =>
-      DistinctAndFrequency.heavyHittersSampled(ord(s, d), Seq("o_orderpriority"), 0.05)),
-    "exact_freq" -> ((s, d) =>
-      DistinctAndFrequency.exactFrequencies(ord(s, d),
-        Seq("o_orderpriority", "o_orderstatus"),
-        Seq(Seq("1-URGENT", "F"), Seq("5-LOW", "O"), Seq("3-MEDIUM", "Z")))),
-    "quantiles_exact" -> ((s, d) =>
-      Quantiles.quantiles(li(s, d), "l_extendedprice", Seq(0.25, 0.5, 0.75))),
-    // sampleK pins the KMV sampler's EXACT regime for the oracle gate
-    // (exact iff distinct <= k: customer has 15k names at sf0.1, 150k at
-    // sf1). The operator's bounded default (4096) is the production
-    // sampled regime, property-gated like the other sampled forms.
-    "string_boundaries" -> ((s, d) =>
-      Quantiles.stringBoundaries(cust(s, d), "c_name", 8, sampleK = 262144)
-        .withColumn("tile", col("tile").cast("int"))),
-
-    // ── set operations ─────────────────────────────────────────────────
-    "setop_union_view" -> ((s, d) =>
-      SetOps.viewUnion(ord(s, d),
-        col("o_orderpriority") === "1-URGENT", col("o_totalprice") > 400000.0)),
-    "setop_intersect_view" -> ((s, d) =>
-      SetOps.viewIntersect(ord(s, d),
-        col("o_orderpriority") === "1-URGENT", col("o_totalprice") > 200000.0)),
-    "setop_minus_view" -> ((s, d) =>
-      SetOps.viewMinus(ord(s, d),
-        col("o_orderpriority") === "1-URGENT", col("o_totalprice") > 200000.0)),
-    "setop_except" -> ((s, d) =>
-      SetOps.except(
-        cust(s, d).select(col("c_custkey").as("custkey")),
-        ord(s, d).select(col("o_custkey").as("custkey")))),
-    // ROW-IDENTITY set algebra (SetOperationMap membership-set semantics,
-    // reference TableTarget.java:665-674): the views project orders onto a
-    // duplicate-valued pair of columns, so two physical base rows with
-    // equal values are DISTINCT set members — union keeps both copies,
-    // intersect/minus keep one per physical row. Value-based
-    // union().distinct()/intersect()/except() would collapse them; the
-    // oracle (a plain OR/AND/AND-NOT predicate over the base, duplicates
-    // preserved) pins the row-identity behavior.
-    "setop_union_dups" -> ((s, d) => setOpDups(s, d, "union")),
-    "setop_intersect_dups" -> ((s, d) => setOpDups(s, d, "intersect")),
-    "setop_minus_dups" -> ((s, d) => setOpDups(s, d, "minus")),
-    "set_compare" -> ((s, d) => {
-      val o = ord(s, d)
-      SetOps.compare(Seq(
-          "urgent" -> o.filter(col("o_orderpriority") === "1-URGENT").select(col("o_orderkey")),
-          "big" -> o.filter(col("o_totalprice") > 300000.0).select(col("o_orderkey"))))
-        .withColumn("sources", array_join(col("sources"), ","))
-    }),
-
-    // ── column ops ─────────────────────────────────────────────────────
-    "col_project_rename" -> ((s, d) =>
-      ColumnOps.rename(
-        ColumnOps.project(li(s, d), Seq("l_orderkey", "l_linenumber", "l_extendedprice")),
-        "l_extendedprice", "price")),
-    "col_convert" -> ((s, d) =>
-      ColumnOps.dateToString(
-        ColumnOps.convert(
-          li(s, d).select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_shipdate")),
-          "l_quantity", "qty_int", "int"),
-        "l_shipdate", "ship_str").drop("l_quantity", "l_shipdate")),
-    "col_extract_kv" -> ((s, d) =>
-      ColumnOps.extractValue(ev(s, d).select(col("event_id"), col("props")), "props", "k", "k_val")
-        .withColumn("k_val", col("k_val").cast("int")).drop("props")),
-    // Json kind, parity-plus: real JSON-path extraction (the reference
-    // only validates Json strings; get_json_object is codegen'd)
-    "col_json_path" -> ((s, d) =>
-      ev(s, d).select(col("event_id"),
-        get_json_object(col("props"), "$.k").cast("int").as("k_json"))),
-    "col_linear_projection" -> ((s, d) =>
-      ColumnOps.linearProjection(
-        prt(s, d).select(col("p_partkey"), col("p_size"), col("p_retailprice")),
-        Seq("p_size", "p_retailprice"),
-        Seq(Seq(0.5, 0.25), Seq(-1.0, 0.125)),
-        Seq("proj0", "proj1")).drop("p_size", "p_retailprice")),
-    "interval_create" -> ((s, d) =>
-      ColumnOps.makeInterval(
-          li(s, d).select(col("l_orderkey"), col("l_linenumber"), col("l_discount"), col("l_tax")),
-          "l_discount", "l_tax", "iv")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("iv.lo").as("lo"), col("iv.hi").as("hi"))),
-    "interval_hist" -> ((s, d) =>
-      Intervals.histogram(li(s, d),
-        Intervals.make(col("l_discount"), col("l_tax")), 0.0, 0.25, 10)),
-    "col_date_roundtrip" -> ((s, d) =>
-      li(s, d).select(col("l_orderkey"), col("l_linenumber"),
-        to_timestamp(date_format(col("l_shipdate"), "yyyy-MM-dd"), "yyyy-MM-dd")
-          .as("ship_day"))),
-    // Duration kind (§1.2: ms-held-as-double + conversion helpers):
-    // order-to-ship latency as days and as Duration-ms
-    "col_duration" -> ((s, d) =>
-      li(s, d).select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
-        .join(ord(s, d).select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          datediff(col("l_shipdate"), col("o_orderdate")).as("latency_days"),
-          (datediff(col("l_shipdate"), col("o_orderdate")).cast("double") *
-            lit(86400000.0)).as("latency_ms"))),
-    // Morton key for two-dimensional file clustering (oracled: the
-    // magic-mask spread is pure integer arithmetic in any engine)
-    "col_zorder" -> ((s, d) =>
-      ev(s, d).select(col("event_id"),
-        graft.engine.Layout.zorder16(
-          pmod(col("user_id"), lit(65536L)),
-          pmod(col("event_id"), lit(65536L))).as("z"))),
-    // Time kind (ms-of-day) round-trip: extract from a timestamp,
-    // format to HH:mm:ss.SSS, parse back — back_ms must equal ms_of_day
-    "col_time_roundtrip" -> ((s, d) =>
-      ev(s, d).select(col("event_id"),
-          graft.operators.ColumnOps.timeOfDayMs(col("ts")).as("ms_of_day"))
-        .withColumn("time_str",
-          graft.operators.ColumnOps.msOfDayToString(col("ms_of_day")))
-        .withColumn("back_ms",
-          graft.operators.ColumnOps.stringToMsOfDay(col("time_str")))),
-    "interval_range_filter" -> ((s, d) =>
-      li(s, d)
-        .filter(least(col("l_discount"), col("l_tax")) >= 0.02 &&
-          greatest(col("l_discount"), col("l_tax")) <= 0.06)
-        .select(col("l_orderkey"), col("l_linenumber"))),
-
-    // ── joins ──────────────────────────────────────────────────────────
-    "join_revenue_by_priority" -> ((s, d) =>
-      Joins.revenueByPriority(li(s, d), ord(s, d))),
-    // the co-located-join path made VISIBLE: both sides written
-    // bucketed+sorted on the join key (Layout.writeBucketed — the one-
-    // time layout investment), then the identical revenue join runs
-    // WITHOUT a shuffle on either side (plan-gated in LayoutSpec: SMJ
-    // over bucketed scans, zero hashpartitioning exchanges) — at 100 TB
-    // this is the difference between shuffling the fact table per join
-    // and never shuffling it again
-    "join_bucketed_colocated" -> ((s, d) => {
-      // the two bucketed-table writes are independent jobs on different
-      // tables — submit them concurrently so the second write's tasks
-      // back-fill executors freed by the first's straggler tail
-      // (driver code is the only reason actions run sequentially); the
-      // join below still sees both tables only after both writes land
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val w1 = Future(graft.engine.Layout.recreateBucketed(s,
-          li(s, d).select(col("l_orderkey"), col("l_extendedprice"),
-            col("l_discount")),
-          "graft_li_colo", Seq("l_orderkey"), 8))
-        val w2 = Future(graft.engine.Layout.recreateBucketed(s,
-          ord(s, d).select(col("o_orderkey").as("l_orderkey"),
-            col("o_orderpriority")),
-          "graft_ord_colo", Seq("l_orderkey"), 8))
-        Await.result(w1, scala.concurrent.duration.Duration.Inf)
-        Await.result(w2, scala.concurrent.duration.Duration.Inf)
-      }
-      s.table("graft_li_colo")
-        .join(s.table("graft_ord_colo"), Seq("l_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_items"),
-          graft.engine.Num.sumRevenue(col("l_extendedprice"),
-            col("l_discount")).as("revenue"))
-        .orderBy(col("o_orderpriority"))
-    }),
-    "join_customers_per_region" -> ((s, d) =>
-      Joins.customersPerRegion(cust(s, d), Tables.nation(s, d), Tables.region(s, d))),
-    "join_semi_parts" -> ((s, d) =>
-      Joins.semiJoinFilter(
-          li(s, d).select(col("l_orderkey"), col("l_linenumber"), col("l_partkey")),
-          prt(s, d).filter(col("p_size") === 50).select(col("p_partkey").as("l_partkey")),
-          Seq("l_partkey"))),
-    "join_anti_customers" -> ((s, d) =>
-      Joins.antiJoinFilter(
-          cust(s, d).select(col("c_custkey")),
-          ord(s, d).select(col("o_custkey").as("c_custkey")),
-          Seq("c_custkey"))),
-    // binned range join: lineitems shipped inside each urgent Q1-1996
-    // order's first week — hash join on 7-day bins, never a nested loop
-    "range_join_week" -> ((s, d) => {
-      val ivs = ord(s, d)
-        .filter(col("o_orderpriority") === "1-URGENT" &&
-          col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
-        .select(col("o_orderkey"), col("o_orderdate"),
-          (col("o_orderdate") + expr("INTERVAL 7 DAYS")).as("o_until"))
-      RangeJoin.pointInIntervalTs(
-          li(s, d).select(col("l_shipdate"), col("l_quantity")), col("l_shipdate"),
-          ivs, col("o_orderdate"), col("o_until"), 7 * 86400L)
-        .groupBy(col("o_orderkey"))
-        .agg(count(lit(1)).as("n_shipped"),
-             Num.sumExact(col("l_quantity")).as("sum_qty"))
-    }),
-    // salted skew join: per-source mean doc length joined back to docs
-    // with every `source` key hot (5% of the corpus each)
-    "join_skew_salted" -> ((s, d) => {
-      val dm = docs(s, d).groupBy(col("source"))
-        .agg(avg(col("n_chars")).as("src_avg"))
-      Joins.saltedJoin(docs(s, d), dm, "source", col("doc_id"), 8)
-        .filter(col("n_chars") > col("src_avg"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_above"))
-    }),
-    // rollup with grouping indicators (parity-plus OLAP subtotals)
-    "rollup_pricing" -> ((s, d) =>
-      li(s, d).rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          grouping(col("l_returnflag")).cast("long").as("g_flag"),
-          grouping(col("l_linestatus")).cast("long").as("g_status"),
-          count(lit(1)).as("cnt"),
-          Num.sumExact(col("l_quantity")).as("sum_qty"))),
-    "cube_pricing" -> ((s, d) =>
-      li(s, d).cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          grouping(col("l_returnflag")).cast("long").as("g_flag"),
-          grouping(col("l_linestatus")).cast("long").as("g_status"),
-          count(lit(1)).as("cnt"),
-          Num.sumExact(col("l_quantity")).as("sum_qty"))),
-    // Count-Min frequency estimates (rows-only: sketch estimates;
-    // one-sided error property-gated vs exact counts)
-    "cms_freq" -> ((s, d) =>
-      DistinctAndFrequency.countMinFreq(ord(s, d), "o_orderpriority",
-        Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))),
-
-    // ── find / position / contains / sampling / save ───────────────────
-    "find_pattern" -> ((s, d) =>
-      Find.find(prt(s, d),
-        Filters.stringMatch(col("p_name"), "widget"),
-        Seq(Order("p_name"), Order("p_partkey")),
-        Seq("m", 0L),
-        Seq("p_name", "p_partkey"))),
-    "row_at_position" -> ((s, d) =>
-      Find.rowAtPosition(
-        li(s, d).select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice")),
-        Seq(Order("l_extendedprice"), Order("l_orderkey"), Order("l_linenumber")), 1000)),
-    // the reference's sampled scrollbar scheme (rate res²/N) — rows-only
-    // gate; position error is tolerance-tested (PropertySpec)
-    "row_at_position_sampled" -> ((s, d) =>
-      Find.rowAtPositionSampled(
-        li(s, d).select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice")),
-        Seq(Order("l_extendedprice"), Order("l_orderkey"), Order("l_linenumber")),
-        1000L, resolution = 100)),
-    "contains_row" -> ((s, d) =>
-      Find.containsRow(li(s, d), col("l_orderkey") === 1L && col("l_linenumber") === 1)),
-    "sample_rows" -> ((s, d) =>
-      li(s, d).sample(withReplacement = false, 0.01, 42L)
-        .select(col("l_orderkey"), col("l_linenumber"))),
-    // deterministic Bernoulli twin of sample_rows: engine-portable hash
-    // membership, so this one IS oracle-checkable
-    "sample_rows_hash" -> ((s, d) =>
-      graft.pipeline.Pipeline.hashSample(
-        li(s, d).select(col("l_orderkey"), col("l_linenumber")),
-        concat_ws("-", col("l_orderkey"), col("l_linenumber")), 100)),
-    // parquet footer introspection: per-column stats summed/merged
-    // across row groups from FOOTERS ONLY (no data pages read) — the
-    // oracle recomputes the same stats from the data, proving the
-    // footer statistics every row-group-skipping engine relies on
-    // actually agree with the content
-    "parquet_footer_stats" -> ((s, d) =>
-      graft.sources.ParquetStats.footerColumnStats(s,
-        s"$d/lineitem.parquet",
-        Seq("l_orderkey", "l_quantity", "l_returnflag"))),
-    "save_roundtrip" -> ((s, d) =>
-      graft.sources.Sources.saveRoundTrip(
-        li(s, d).filter(col("l_quantity") > 48.0)
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity")))),
-    // zone-map data skipping: docs land partitioned by ingest batch
-    // (floor(doc_id/50) — the monotone-id arrival layout); a doc_id
-    // range query consults the per-batch min/max stats table and only
-    // opens partitions that might match — pruning on a NON-partition
-    // column, which built-in partition pruning cannot do. The skip is
-    // conservative (read unless provably empty), so the result hash-
-    // equals the full scan and the query stays fully oracled.
-    "zonemap_skip" -> ((s, d) => {
-      import graft.engine.Skipping
-      // 200-doc ingest batches: partition-dir count stays write-sane at
-      // every SF while the [100,299] probe still prunes (finer-grained
-      // pruning is plan-gated in PlanSpec with 50-doc batches)
-      val dd = docs(s, d)
-        .withColumn("batch", floor(col("doc_id") / 200).cast("long"))
-      val dir = graft.sources.Sources.rtDir("zonemap_batch")
-      dd.write.mode("overwrite").partitionBy("batch").parquet(dir)
-      val zm = Skipping.buildZoneMap(dd, "batch", Seq("doc_id"))
-      Skipping.readWithSkipping(s, dir, zm, "batch", "doc_id",
-          lit(100L), lit(299L))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("n_chars")).cast("long").as("total_chars"))
-        .orderBy(col("lang"))
-    }),
-    // the zone-map manifest maintained as a FOLDED ARTIFACT (fifth
-    // stored model — the Delta/Iceberg stats-file posture made
-    // incremental): per-shard mini-manifests fold by the exact
-    // (min, max, count-sum) merge, never rescanning published shards;
-    // the skip decision reads the STORED manifest. Conservative skip ⇒
-    // hash-equals the full scan — the zonemap_skip oracle verbatim
-    "zonemap_skip_folded" -> ((s, d) => {
-      import graft.engine.Skipping
-      val shards = graft.dedup.Dedup.ensureDocShards(s, d, 3)
-      val name = "docs_mod3_" + Integer.toHexString(d.hashCode)
-      val partSql = "CAST(floor(doc_id / 200) AS BIGINT)"
-      if (!Skipping.zoneMapFoldedExists(name, "batch", partSql, Seq("doc_id")))
-        Skipping.zoneMapArtifactFolded(s, name, shards.take(2), "batch",
-          partSql, Seq("doc_id")).count()
-      val zm = Skipping.zoneMapArtifactFolded(s, name, shards, "batch",
-        partSql, Seq("doc_id"))
-      val parts = Skipping.candidatePartitions(zm, "batch", "doc_id",
-        lit(100L), lit(299L))
-      val dd = shards.map(sd => graft.engine.Tables.documents(s, sd))
-        .reduce(_ unionByName _)
-        .withColumn("batch", expr(partSql))
-      (if (parts.isEmpty) dd.filter(lit(false))
-       else dd.filter(col("batch").isin(parts: _*))
-         .filter(col("doc_id") >= 100L && col("doc_id") <= 299L))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("n_chars")).cast("long").as("total_chars"))
-        .orderBy(col("lang"))
-    }),
-    // small-files compaction PLAN (the OPTIMIZE planner): docs land
-    // hive-partitioned by lang in ~8 small files per partition, then
-    // each file is assigned a compaction bin of ~8 KiB by cumulative
-    // size in name order — metadata-only (no data page read). Fully
-    // ORACLED: the dump-time oracle carries the sink's on-disk listing
-    // and replays the offset binning in DuckDB
-    "sink_compaction_plan" -> ((s, d) => {
-      val dir = compactionSink
-      docs(s, d).repartition(8, col("doc_id")).write.partitionBy("lang")
-        .mode("overwrite").parquet(dir)
-      compactionSinkDir = Some(dir)
-      graft.engine.Layout.compactionPlan(s, dir, 8192L)
-    }),
-    // hive-layout partitioned sink: write docs partitioned by lang,
-    // re-read, aggregate — proves the layout preserves every row/value
-    // (partition pruning on the re-read is plan-asserted in PlanSpec)
-    "sink_partitioned" -> ((s, d) =>
-      graft.sources.Sources.partitionedRoundTrip(docs(s, d), Seq("lang"))
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).cast("long").as("total_chars"))),
-    // z-ordered sink round-trip: layout must not lose or alter rows; the
-    // oracle aggregates the ORIGINAL table, so any loss fails the gate
-    "sink_zorder" -> ((s, d) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_zsink").toString
-      graft.engine.Layout.writeZOrdered(ev(s, d),
-        pmod(col("user_id"), lit(65536L)),
-        pmod(floor(col("value") * 100).cast("long"), lit(65536L)), out, 8)
-      s.read.parquet(out)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("cnt"),
-          graft.engine.Num.sumExact(col("value")).as("total_value"))
-    }),
-
-    // ── more histograms / matrices / udf / quantization / windows ──────
-    "hist_3d" -> ((s, d) =>
-      Histograms.histogramND(li(s, d), Seq(
-        "bx" -> Histograms.numericBucket(col("l_quantity"), 0.0, 50.0, 5),
-        "by" -> Histograms.numericBucket(col("l_discount"), 0.0, 0.1, 3),
-        "bz" -> col("l_returnflag")))),
-    "hist_4d" -> ((s, d) =>
-      Histograms.histogramND(li(s, d), Seq(
-        "bx" -> Histograms.numericBucket(col("l_quantity"), 0.0, 50.0, 5),
-        "by" -> Histograms.numericBucket(col("l_discount"), 0.0, 0.1, 3),
-        "bz" -> col("l_returnflag"),
-        "bw" -> col("l_linestatus")))),
-    "corr_matrix" -> ((s, d) =>
-      Stats.correlationMatrix(li(s, d),
-        Seq("l_discount", "l_extendedprice", "l_quantity"))),
-    "udf_surface" -> ((s, d) => {
-      graft.functions.Udfs.registerAll(s)
-      li(s, d).groupBy(expr("qty_band(l_quantity)").as("band"))
-        .agg(count(lit(1)).as("cnt"))
-    }),
-    "dp_quantized_hist" -> ((s, d) =>
-      li(s, d)
-        .groupBy(graft.functions.Quantization.quantize(col("l_extendedprice"), 10000.0)
-          .as("qbucket"))
-        .agg(count(lit(1)).as("cnt"))),
-    // QuantizedTable on a STRING axis (StringColumnQuantization.java:28):
-    // names snapped to a letter grid before the histogram sees them
-    "dp_quantized_hist_str" -> ((s, d) =>
-      prt(s, d)
-        .groupBy(graft.functions.Quantization.quantizeString(col("p_name"),
-          Seq("a", "e", "i", "o", "u"), "zzzzzz").as("qbucket"))
-        .agg(count(lit(1)).as("cnt"))),
-    // NoisyHLogLog: rows-only (sketch + seeded noise); zero-noise twin
-    // equals hll_distinct, radius composition property-gated
-    "dp_noisy_distinct" -> ((s, d) =>
-      graft.functions.Quantization.noisyDistinct(li(s, d), "l_partkey", 0.05, 5.0)),
-    // DPWrapper parity: the noise scale comes from the PrivacySchema
-    // budget lookup (1/epsilon for the queried column set), not a knob
-    "dp_noisy_hist_budgeted" -> ((s, d) => {
-      val schema = graft.functions.PrivacySchema(
-        Map(Seq("l_extendedprice") -> 0.2), defaultEpsilon = 0.1)
-      li(s, d)
-        .groupBy(graft.functions.Quantization.quantize(col("l_extendedprice"), 10000.0)
-          .as("qbucket"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("noisy_cnt",
-          round(col("cnt") + graft.functions.Quantization.laplaceNoise(
-            col("qbucket"), schema.noiseScale("l_extendedprice")), 4))
-    }),
-    // DPHistogram semantics: per-bucket Laplace noise on the quantized
-    // counts (deterministic hash-seeded noise → reproducible; rows-only
-    // gate, noise distribution property-tested)
-    "dp_noisy_hist" -> ((s, d) =>
-      li(s, d)
-        .groupBy(graft.functions.Quantization.quantize(col("l_extendedprice"), 10000.0)
-          .as("qbucket"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("noisy_cnt",
-          round(col("cnt") + graft.functions.Quantization.laplaceNoise(col("qbucket"), 5.0), 4))),
-    // binary-mechanism DP CDF (IntervalDecomposition.java:63 +
-    // DPHistogram.java postProcess): one independent Laplace variable
-    // per dyadic interval-tree node, each prefix [0, r) summing only
-    // its O(log T) covering nodes — rows-only (seeded noise; the cover,
-    // variance bound, and monotone clamp are property-gated)
-    "dp_noisy_cdf" -> ((s, d) =>
-      graft.functions.Quantization.noisyHistogramDyadic(
-        li(s, d), "l_extendedprice", 0.0, 1000.0, 128,
-        Seq(0, 16, 32, 48, 64, 80, 96, 112), epsilon = 0.5,
-        branching = 2, cdf = true)),
-    // 2-D binary mechanism (DPHeatmapSketch.java:54): one Laplace
-    // variable per (x-interval × y-interval) tree rectangle, summed
-    // over the cross product of the two axes' dyadic covers — rows-only
-    // (seeded noise; cover size, exact counts, and CI are spec-gated)
-    "dp_noisy_heatmap" -> ((s, d) =>
-      graft.functions.Quantization.noisyHeatmapDyadic(
-        li(s, d), "l_extendedprice", "l_quantity",
-        0.0, 1000.0, 128, Seq(0, 16, 32, 48, 64, 80, 96, 112),
-        0.0, 1.0, 64, Seq(0, 8, 16, 24, 32, 40, 48, 56),
-        epsilon = 0.5, branching = 2)),
-    // PrivateTableTarget.getNextK (PrivateTableTarget.java:157-171):
-    // the private table page — the only rows DP mode may display are
-    // QUANTIZED tuples, and the page's rowsScanned carries table-count
-    // Laplace noise (NextKSketchNoisy.java:27). This is the ZERO-NOISE
-    // twin (fully oracled): quantized NextK page + exact rows_scanned.
-    "dp_quantized_nextk" -> ((s, d) => {
-      val total = li(s, d).agg(count(lit(1)).as("rows_scanned"))
-      li(s, d)
-        .groupBy(graft.functions.Quantization
-          .quantize(col("l_extendedprice"), 10000.0).as("qvalue"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("qvalue").asc_nulls_last).limit(8)
-        .crossJoin(broadcast(total))
-    }),
-    // the NOISY form: rows_scanned + Laplace(1/ε) keyed on the
-    // TotalCount special bucket through the HMAC-keyed SecureLaplace
-    // (DPWrapper.computeCountNoise parity) — rows-only; zero-noise
-    // equality with dp_quantized_nextk and noise determinism are
-    // spec-gated like the dp_noisy_hist family
-    "dp_noisy_nextk" -> ((s, d) => {
-      val total = li(s, d).agg(count(lit(1)).as("rows_scanned"))
-      li(s, d)
-        .groupBy(graft.functions.Quantization
-          .quantize(col("l_extendedprice"), 10000.0).as("qvalue"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("qvalue").asc_nulls_last).limit(8)
-        .crossJoin(broadcast(total))
-        .select(col("qvalue"), col("cnt"),
-          round(col("rows_scanned") +
-            graft.functions.Quantization.laplaceNoise(
-              lit("table:TotalCount"), 5.0), 4).as("rows_scanned_noisy"))
-    }),
-    // PrivateTableTarget.quantile (PrivateTableTarget.java:174-182):
-    // row-at-position under a QuantizationSchema. EXACT twin of the
-    // reference's SampleQuantileSketch (fully oracled): the two-phase
-    // bucket seek over quantized sort keys — same result as a global
-    // sort, never a data-sized single-partition funnel.
-    "dp_quantized_quantile" -> ((s, d) =>
-      Find.rowAtPosition(
-        li(s, d).select(
-          graft.functions.Quantization
-            .quantize(col("l_extendedprice"), 10000.0).as("qvalue"),
-          col("l_orderkey"), col("l_linenumber")),
-        Seq(Order("qvalue"), Order("l_orderkey"), Order("l_linenumber")),
-        1000)),
-    // the reference's ACTUAL private quantile scheme: uniform sample at
-    // rate res²/N over the quantized table, row at the scaled position
-    // (SampleQuantileSketch.java:39-120) — seeded sampling ⇒ rows-only;
-    // position tolerance vs the exact twin is spec-gated like
-    // row_at_position_sampled
-    "dp_sample_quantile" -> ((s, d) =>
-      Find.rowAtPositionSampled(
-        li(s, d).select(
-          graft.functions.Quantization
-            .quantize(col("l_extendedprice"), 10000.0).as("qvalue"),
-          col("l_orderkey"), col("l_linenumber")),
-        Seq(Order("qvalue"), Order("l_orderkey"), Order("l_linenumber")),
-        1000L, resolution = 100)),
-    // percentile_approx twin of bucket_quantiles (rows-only; tolerance
-    // spec-gated) — the declared scale path with bounded per-group state
-    "bucket_quantiles_approx" -> ((s, d) =>
-      Histograms.bucketQuantilesApprox(li(s, d), col("l_returnflag"),
-        col("l_extendedprice"), Seq(0.25, 0.5, 0.75))),
-    "events_moving_avg" -> ((s, d) =>
-      graft.streaming.Events.movingAvg(ev(s, d), 3)),
-    "events_funnel" -> ((s, d) =>
-      graft.streaming.Events.funnel(ev(s, d), Seq("view", "click", "purchase"))),
-    // weekly retention cohorts (the product-analytics curve): grouped
-    // by first-event week, O(weeks²) output, never event-sized
-    "events_retention" -> ((s, d) =>
-      graft.streaming.Events.retentionCohorts(ev(s, d))),
-    // funnel DISCOVERY: top-20 per-user event-type trigram paths,
-    // bounded take over the pattern-sized count table
-    "events_sequences" -> ((s, d) =>
-      graft.streaming.Events.eventSequences(ev(s, d), 20)),
-    // ingest-ops spike monitor: hour count vs trailing-24h mean on the
-    // exact grid, 3x flag; the trailing window runs over HOURS
-    "events_anomaly" -> ((s, d) =>
-      graft.streaming.Events.hourlyAnomaly(ev(s, d))),
-    // per-transition conversion latency (funnel semantics, exact
-    // integer seconds; mean on the grid)
-    "events_conversion_time" -> ((s, d) =>
-      graft.streaming.Events.funnelLatency(ev(s, d),
-        Seq("view", "click", "purchase"))),
-    // burst-duplicate suppression (telemetry debounce): same
-    // (user, type) within 5 s of the previous raw event; one
-    // per-(user, type) window, type-sized report
-    "events_dedup_burst" -> ((s, d) =>
-      graft.streaming.Events.burstDedup(ev(s, d))),
-    // event-lateness profile (the watermark-tuning tool): lateness of
-    // each arrival vs the running event-time max, as a power-of-2
-    // histogram; global prefix max decomposed into bucketed windows +
-    // an O(#buckets) driver offset table — no single-partition window
-    "events_lateness" -> ((s, d) =>
-      graft.streaming.Events.latenessProfile(ev(s, d))),
-    // last-touch attribution: each purchase credited to the user's
-    // most recent preceding click/view via one per-user window pass;
-    // organic purchases keep a null touch
-    "events_attribution" -> ((s, d) =>
-      graft.streaming.Events.lastTouchAttribution(ev(s, d))),
-    // lexical diversity (type-token ratio): low TTR flags templates
-    "text_ttr" -> ((s, d) =>
-      graft.text.TextAnalysis.typeTokenRatio(docs(s, d))),
-    // Zipf df histogram in power-of-2 buckets (corpus health)
-    "token_zipf" -> ((s, d) =>
-      graft.text.TextAnalysis.tokenZipf(docs(s, d))),
-    // (the streaming Misra-Gries twin of heavy_mg lives in
-    // streaming/Events.heavyHittersStream — spec-gated like the other
-    // Structured Streaming forms, not benched as a batch query)
-    "events_cumulative" -> ((s, d) =>
-      graft.streaming.Events.cumulativeValue(ev(s, d))),
-    // weighted sample without replacement (rows-only: sampled by design;
-    // determinism + weight-bias property-gated in PipelineSpec)
-    "sample_weighted" -> ((s, d) =>
-      graft.pipeline.Pipeline.weightedSample(
-        docs(s, d), col("doc_id"), col("n_chars").cast("double"), 100)),
-    "jl_projection" -> ((s, d) =>
-      Projections.jlProject(
-        prt(s, d).select(col("p_partkey"), col("p_size"), col("p_retailprice")),
-        Seq("p_size", "p_retailprice"), 2).drop("p_size", "p_retailprice")),
-
-    // ── dedup / similarity / text (training-data pipeline) ─────────────
-    "dedup_exact" -> ((s, d) => graft.dedup.Dedup.exactGroups(docs(s, d))),
-    // normalization-AWARE exact dedup (the reason text_normalize_nfc
-    // exists): group on md5(NFC(text)) over the ml corpus — the
-    // planted decomposed/precomposed fr twin pair collapses into one
-    // group with n_raw_forms = 2, which byte-exact dedup cannot see
-    "dedup_exact_nfc" -> ((s, d) =>
-      Fixtures.ml.df(s, d)
-        .groupBy(md5(graft.text.TextAnalysis.nfcNormalize(col("text"))
-          .cast("binary")).as("h"))
-        .agg(min(col("doc_id")).as("keep_id"),
-          count(lit(1)).as("n_copies"),
-          countDistinct(col("text")).as("n_raw_forms"))),
-    // the function's default 1 M df-cut stays ON (r5 verdict: disabling
-    // it here turned off the operator's 100 TB skew guard — stopword
-    // shingles make the inverted-index self-join quadratic in df). At
-    // sf0.1 no shingle approaches 1 M docs, so the oracle is unchanged.
-    "dedup_jaccard_3gram" -> ((s, d) =>
-      graft.dedup.Dedup.jaccardPairs(docs(s, d), 3, 0.5)),
-    // df-cut path actually exercised: every doc is salted with a common
-    // tail phrase, whose fully-interior shingle lands in ALL docs and is
-    // dropped by the maxShingleDocs=50 cut (groupBy → broadcast
-    // anti-join, no skewed-key window). Set sizes stay pre-cut.
-    "dedup_jaccard_dfcut" -> ((s, d) =>
-      graft.dedup.Dedup.jaccardPairs(
-        docs(s, d).withColumn("text",
-          concat(col("text"), lit(" zz common tail"))), 3, 0.5, 50L)),
-    "dedup_minhash_lsh" -> ((s, d) =>
-      graft.dedup.Dedup.minhashLshPairs(docs(s, d), 3, 64, 32, 0.5)),
-    // threshold-tuning curve: pair volume per 0.05 jaccard bucket with
-    // a cumulative pairs-at-or-above column — the "what would a θ of X
-    // cost me" dashboard a dedup threshold is chosen against; ONE
-    // banding+verify pass at the lowest θ, then a bounded ≤11-row
-    // bucket aggregate (the unpartitioned window runs over buckets,
-    // never pairs)
-    "dedup_threshold_curve" -> ((s, d) => {
-      val pairs = graft.dedup.Dedup.minhashLshPairs(docs(s, d), 3, 64, 32, 0.5)
-      pairs
-        .withColumn("theta_e2", (floor(col("jaccard") * 20) * 5).cast("long"))
-        .groupBy(col("theta_e2")).agg(count(lit(1)).as("n_pairs"))
-        .withColumn("n_pairs_ge", sum(col("n_pairs")).over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("theta_e2").desc)
-            .rowsBetween(Long.MinValue, 0)))
-    }),
-    // cross-source duplication matrix: which SOURCE PAIRS share
-    // near-dup content (the crawl-vs-wiki overlap question behind
-    // source-level dedup ordering); canonical (min, max) source pair,
-    // pair counts + mean jaccard on the exact 1e-4 grid — the pair set
-    // is the same banding pass, the matrix is #sources² rows
-    "dedup_source_matrix" -> ((s, d) => {
-      val pairs = graft.dedup.Dedup.minhashLshPairs(docs(s, d), 3, 64, 32, 0.5)
-      val src = docs(s, d).select(col("doc_id"), col("source"))
-      pairs
-        .join(src.select(col("doc_id").as("id_a"), col("source").as("__sa")),
-          Seq("id_a"))
-        .join(src.select(col("doc_id").as("id_b"), col("source").as("__sb")),
-          Seq("id_b"))
-        .select(least(col("__sa"), col("__sb")).as("source_a"),
-          greatest(col("__sa"), col("__sb")).as("source_b"),
-          (col("jaccard") * 10000).cast("long").as("__je4"))
-        .groupBy(col("source_a"), col("source_b"))
-        .agg(count(lit(1)).as("n_pairs"),
-          graft.text.TextAnalysis.intDiv(sum(col("__je4")), count(lit(1)))
-            .as("mean_jaccard_e4"))
-    }),
-    // ── UTF-8 twins of the similarity families over the ml-augmented
-    // corpus: shingles are WORD n-grams (space-split), so the unit is
-    // the word string — identical in Spark (UTF-16 strings) and DuckDB
-    // (UTF-8), and the planted mixed-script near-dup pairs must
-    // surface while the precomposed/decomposed fr twins (no identical
-    // words) must NOT produce false pairs (gated in PropertySpec)
-    "dedup_jaccard_3gram_ml" -> ((s, d) =>
-      graft.dedup.Dedup.jaccardPairs(Fixtures.ml.df(s, d), 3, 0.5)),
-    "dedup_minhash_lsh_ml" -> ((s, d) =>
-      graft.dedup.Dedup.minhashLshPairs(Fixtures.ml.df(s, d), 3, 64, 32, 0.5)),
-    // edit-distance unit on multilingual text: ONE CODEPOINT = one
-    // edit (Spark's levenshtein; the oracle byte-matches it through an
-    // injective codepoint→ascii-byte translate — see mlLevTranslate)
-    "dedup_edit_distance_ml" -> ((s, d) =>
-      graft.dedup.Dedup.editDistancePairs(Fixtures.ml.df(s, d), 5, 64)),
-    "text_winnow_pairs_ml" -> ((s, d) =>
-      graft.text.TextAnalysis.winnowPairs(Fixtures.ml.df(s, d))),
-    // span offsets over mixed-script text: gram md5 runs over UTF-8
-    // bytes in BOTH engines and offsets count WORDS, so the planted
-    // ru/zh/ko shared runs must surface with identical boundaries
-    "text_dup_spans_ml" -> ((s, d) =>
-      graft.text.TextAnalysis.dupSpans(Fixtures.ml.df(s, d), 5)),
-    // fuzzy dedup with an exact edit-distance verify: shared-window
-    // candidates (never all-pairs), band-limited levenshtein ≤ 64
-    "dedup_edit_distance" -> ((s, d) =>
-      graft.dedup.Dedup.editDistancePairs(docs(s, d), 5, 64)),
-    // df-cut path exercised: every doc is salted with a 5-token tail
-    // whose fully-interior window lands in ALL docs (df = corpus size)
-    // and is dropped by the maxWindowDocs=50 cap INSIDE the single
-    // postings aggregation (bounded buffer, no second count pass) —
-    // without the cut it would make every doc pair a candidate
-    "dedup_edit_dfcut" -> ((s, d) =>
-      graft.dedup.Dedup.editDistancePairs(
-        docs(s, d).withColumn("text",
-          concat(col("text"), lit(" zq0 zq1 zq2 zq3 zq4"))), 5, 64, 50)),
-    // incremental ingestion gate: the doc_id%10==0 "delta" deduped
-    // against the rest of the corpus, banding delta×corpus (no self-join)
-    "dedup_incremental" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.dedup.Dedup.minhashLshAgainst(
-        all.filter(pmod(col("doc_id"), lit(10L)) === 0L),
-        all.filter(pmod(col("doc_id"), lit(10L)) =!= 0L), 3, 64, 32, 0.5)
-    }),
-    // delta novelty from STORED sketches: "how much of this crawl is
-    // genuinely new?" answered by theta set algebra on two kilobyte
-    // blobs — no delta×corpus join at all (the cheap pre-gate before
-    // dedup_incremental's banding pass). k=8192 exceeds both distinct
-    // text counts at verify scale, so the answers are EXACT ⇒ fully
-    // oracled; at corpus scale the same query degrades gracefully to
-    // ~1/√k-error estimates (property-gated regime in PropertySpec).
-    "dedup_delta_novelty" -> ((s, d) => {
-      import graft.functions.ThetaSketch
-      val all = docs(s, d)
-      val corpus = all.filter(pmod(col("doc_id"), lit(10L)) =!= 0L)
-        .agg(ThetaSketch.theta_build(col("text"), 8192).as("sk_c"))
-      val delta = all.filter(pmod(col("doc_id"), lit(10L)) === 0L)
-        .agg(ThetaSketch.theta_build(col("text"), 8192).as("sk_d"))
-      delta.crossJoin(corpus).select(
-        round(ThetaSketch.theta_estimate(col("sk_d")))
-          .cast("long").as("delta_distinct"),
-        round(ThetaSketch.theta_anotb(col("sk_d"), col("sk_c")))
-          .cast("long").as("novel_texts"),
-        (ThetaSketch.theta_anotb(col("sk_d"), col("sk_c")) /
-          ThetaSketch.theta_estimate(col("sk_d"))).as("novelty_rate"))
-    }),
-    // default 9 single-chunk bands: fastest at this corpus size; the
-    // (nChunks, chunksPerKey) lever trades band count for key width when
-    // narrow keys over-collide at larger corpora
-    "dedup_simhash" -> ((s, d) => graft.dedup.SimHash.nearDupPairs(docs(s, d), 8)),
-    // pairs → connected components → one kept doc per cluster: the
-    // decision layer of dedup. The whole family (cluster census, survivor
-    // election, quality election) reads ONE stored cluster-map artifact —
-    // MinHash banding + label propagation mine once per input, every
-    // decision query after that is a parquet read of the map (the r13
-    // verdict's storable-model ask; at 100 TB re-mining per consumer is
-    // absurd)
-    "dedup_clusters" -> ((s, d) =>
-      graft.dedup.Dedup.clusterMapArtifact(s, d)),
-    // mining-cost observability twin (r15 advisor ask): dedup_clusters
-    // serves the stored artifact (the first run mines and writes, every
-    // later run is a parquet read), so its bench number no longer tracks
-    // LSH+CC mining regressions round over round. This twin ALWAYS runs
-    // the mining subtree — no artifact — keeping the most expensive
-    // dedup computation visible in the bench receipt.
-    "dedup_cluster_mine" -> ((s, d) =>
-      graft.dedup.Dedup.connectedComponents(
-        graft.dedup.Dedup.minhashLshPairs(docs(s, d)))),
-    // INCREMENTAL cluster-map maintenance (r15 headline): the corpus
-    // arrives as shards (here: documents split doc_id mod 3, written
-    // once to scratch); a base map is published over shards {0,1} only
-    // on first contact, then shard 2 is FOLDED in — delta×delta +
-    // delta×corpus banding, CC over (stored map edges ∪ new pairs) —
-    // never a corpus re-mine. The folded map is bit-identical to a full
-    // mine of the union, which is exactly what the oracle replays (the
-    // same recursive-CTE CC over the whole documents table).
-    "dedup_clusters_incremental" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, d, 3)
-      val name = "docs_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.dedup.Dedup.foldedArtifactExists(name))
-        graft.dedup.Dedup.clusterMapArtifactFolded(s, name, shards.take(2))
-          .count()
-      graft.dedup.Dedup.clusterMapArtifactFolded(s, name, shards)
-    }),
-    // the SECOND folded model (r15): the line-dedup state maintained
-    // incrementally over a 3-shard split of the NL-PLANTED corpus (the
-    // planted boilerplate lines span all three doc_id-mod-3 residues,
-    // so the fold genuinely merges cross-shard censuses) — base state
-    // over shards {0,1} on first contact, shard 2's state FOLDED in by
-    // the exact (sum, sum, min) merge, list consumers filter
-    // n_docs >= 2. Fold ≡ batch scan, which is exactly what the oracle
-    // replays (the text_boilerplate_lines census verbatim).
-    "text_boilerplate_folded" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.nl.inputDir(s, d), 3)
-      val name = "docsnl_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.text.TextAnalysis.boilerplateFoldedExists(name))
-        graft.text.TextAnalysis.boilerplateStateArtifactFolded(
-          s, name, shards.take(2)).count()
-      graft.text.TextAnalysis.boilerplateStateArtifactFolded(s, name, shards)
-        .filter(col("n_docs") >= 2)
-    }),
-    "dedup_survivors" -> ((s, d) =>
-      graft.dedup.Dedup.survivorsFromClusters(docs(s, d),
-        graft.dedup.Dedup.clusterMapArtifact(s, d))
-        .select(col("doc_id"))),
-    // the survivor election served from the FOLDED incremental map:
-    // the decision family consumes the folded lineage exactly as it
-    // consumes the full-mine artifact (fold ≡ full-mine), so the
-    // oracle is the dedup_survivors replay verbatim
-    "dedup_survivors_incremental" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, d, 3)
-      val name = "docs_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.dedup.Dedup.foldedArtifactExists(name))
-        graft.dedup.Dedup.clusterMapArtifactFolded(s, name, shards.take(2))
-          .count()
-      graft.dedup.Dedup.survivorsFromClusters(docs(s, d),
-        graft.dedup.Dedup.clusterMapArtifactFolded(s, name, shards))
-        .select(col("doc_id"))
-    }),
-    // containment (asymmetric Jaccard): the excerpt/quote-inclusion
-    // dedup symmetric near-dup misses — θ=0.9 on either direction
-    "dedup_containment" -> ((s, d) =>
-      graft.dedup.Dedup.containmentPairs(Fixtures.cont.df(s, d), 3, 9000L)),
-    // FineWeb-style survivor election: within each near-dup cluster
-    // keep the HIGHEST-QUALITY copy (ties → lowest doc_id), not the
-    // accidentally-first one
-    // the dedup DECISION REPORT — per-source accounting every pipeline
-    // publishes after a dedup pass (docs / clustered / dropped / keep
-    // rate), read straight off the stored cluster-map artifact: the
-    // report is a reporting-sized join, not a third mining pass
-    "dedup_report" -> ((s, d) => {
-      val cl = graft.dedup.Dedup.clusterMapArtifact(s, d)
-      docs(s, d).select(col("doc_id"), col("source"))
-        .join(cl, Seq("doc_id"), "left")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          count(col("cluster_id")).as("n_clustered"),
-          sum(when(col("cluster_id").isNotNull &&
-              col("cluster_id") =!= col("doc_id"), 1L).otherwise(0L))
-            .as("n_dropped"))
-        .withColumn("keep_rate_e4", graft.text.TextAnalysis.intDiv(
-          (col("n_docs") - col("n_dropped")) * lit(10000L), col("n_docs")))
-    }),
-    // duplicate-cluster size distribution (the dedup-paper curve): how
-    // many clusters of each size — again a pure artifact consumer
-    "dedup_cluster_sizes" -> ((s, d) =>
-      graft.dedup.Dedup.clusterMapArtifact(s, d)
-        .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))),
-    "dedup_survivors_quality" -> ((s, d) => {
-      // the election only reads scores of CLUSTER MEMBERS (the inner
-      // join in survivorsByQuality drops everything else), so the
-      // quality pass runs over the semi-joined member set — cluster-
-      // map-sized, not corpus-sized — and the cluster map itself comes
-      // from the shared stored artifact, not a fresh mining pass
-      val cl = graft.dedup.Dedup.clusterMapArtifact(s, d)
-      graft.dedup.Dedup.survivorsByQuality(cl,
-        graft.text.TextAnalysis.qualityGridScore(docs(s, d)
-          .join(cl.select(col("doc_id")), Seq("doc_id"), "left_semi")))
-    }),
-    "dedup_embedding" -> ((s, d) => graft.ann.Similarity.nearDupPairs(emb(s, d), 0.4)),
-    // bucketed (LSH-banded) near-dup at the PRODUCTION threshold
-    // (θ=0.7, the SemDeDup/near-dup operating point) — the headline
-    // envelope entry. The synthetic corpus's natural pairs top out at
-    // cos≈0.60, so the fixture plants deterministic near-dups (a 4%
-    // slice re-ided +10M with every 4th coordinate zeroed ⇒ cos≈0.87
-    // vs the original — same planted-copy pattern as the exact-dedup
-    // gates); rows-only, recall vs exact property-gated (PropertySpec)
-    // targetBucket=16 (finer buckets than the stress default): the
-    // synthetic embeddings cluster, so coarse buckets put whole label
-    // clusters in one cell and candidate volume approaches all-pairs;
-    // planes = log2(n/16) keeps buckets small AS N GROWS. maxBucket=0
-    // skips the hot-cut valve — bucket sizes are bounded by
-    // construction here; the stress entry keeps the valve on.
-    "dedup_embedding_lsh" -> ((s, d) =>
-      graft.ann.Similarity.nearDupPairsLsh(Fixtures.plantedEmb(s, d), 0.7,
-        nEstimate = embCount(s, d) * 26L / 25L,
-        targetBucket = 16L, maxBucket = 0)),
-    // the θ=0.4 low-threshold form kept as the declared STRESS entry:
-    // unique candidates at θ=0.4 approach ALL-PAIRS (measured 78% of
-    // n²/2 at sf0.1 — hyperplane bits barely separate cos 0.4 from
-    // random, so recall ≥0.993 forces near-total collision), which makes
-    // the dense-candidate carryVectors shape the right plan: verify
-    // fused into the band self-join, distinct only on survivors
-    // (r6-adjudication closed in r14 — 2.5 s → ~1.3 s, same pair set)
-    "dedup_embedding_lsh_stress" -> ((s, d) =>
-      graft.ann.Similarity.nearDupPairsLsh(emb(s, d), 0.4,
-        carryVectors = true)),
-    // ── corpus hygiene ─────────────────────────────────────────────────
-    // benchmark decontamination: training docs sharing any 3-gram with a
-    // held-out eval slice (deterministic doc_id-mod split so the oracle
-    // sees the same sides)
-    "decontaminate" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.text.TextAnalysis.contamination(
-        all.filter(pmod(col("doc_id"), lit(50L)) =!= 7L),
-        all.filter(pmod(col("doc_id"), lit(50L)) === 7L), 3)
-    }),
-    // water-filling mixture allocation (the LLaMA/GPT per-source
-    // epoch-cap design): capped prefix + shared waterline in CLOSED
-    // form — at sf0.01 the three low-cap sources bind and the rest
-    // fill at the waterline; all integer, fully oracled
-    "corpus_mix_waterfill" -> ((s, d) =>
-      graft.pipeline.Pipeline.waterfillMix(docs(s, d), 40000L,
-        Map("src0" -> 5000L, "src1" -> 8000L, "src2" -> 12000L), 30000L)),
-    // the QUANTITATIVE form (GPT-3 appendix C): overlap FRACTION per
-    // train doc on the exact grid + the θ=0.2 removal verdict — random
-    // vocabulary collisions stay under θ, only near-copies cross it
-    "decontam_overlap" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.text.TextAnalysis.contaminationOverlap(
-        all.filter(pmod(col("doc_id"), lit(50L)) =!= 7L),
-        all.filter(pmod(col("doc_id"), lit(50L)) === 7L), 3, 2000L)
-    }),
-    // decontamination span CUT (GPT-3 appendix C / The Pile): remove a
-    // ±2-token window around every eval-colliding 3-gram, reassemble —
-    // offsets and text fully oracled via the md5-60bit gram key
-    "decontam_cut" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.text.TextAnalysis.decontamCut(
-        all.filter(pmod(col("doc_id"), lit(50L)) =!= 7L),
-        all.filter(pmod(col("doc_id"), lit(50L)) === 7L), 3, 2)
-    }),
-    // Heaps-law vocabulary growth over doubling corpus prefixes — the
-    // tokenizer-vocab saturation curve
-    "vocab_growth" -> ((s, d) =>
-      graft.text.TextAnalysis.vocabGrowth(docs(s, d))),
-    // broadcast-Bloom decontamination — the shuffle-free 100 TB twin of
-    // `decontaminate`; FPs possible ⇒ rows-only gate, superset + FP-rate
-    // property-gated in PropertySpec
-    "decontaminate_bloom" -> ((s, d) => {
-      val all = docs(s, d)
-      graft.text.TextAnalysis.contaminationBloom(
-        all.filter(pmod(col("doc_id"), lit(50L)) =!= 7L),
-        all.filter(pmod(col("doc_id"), lit(50L)) === 7L), 3)
-    }),
-    // SEMANTIC decontamination: paraphrased eval leakage shares no
-    // 13-gram with the benchmark but sits next to it in embedding
-    // space — flag train vectors with cosine ≥ θ to ANY eval vector
-    // (label 9 plays the benchmark); eval broadcasts, train scanned
-    // once, no pair materialization
-    "decontam_embedding" -> ((s, d) => {
-      val e = emb(s, d)
-      graft.ann.Similarity.semanticContamination(
-        e.filter(col("label") =!= 9), e.filter(col("label") === 9), 0.4)
-    }),
-    // unigram-LM quality proxy: per-token corpus-frequency MAGNITUDE
-    // (bit length of the occurrence count — exact integer, so fully
-    // oracled where a float log would misround at power-of-two
-    // boundaries); low mean magnitude = rare-token/noisy text
-    "text_rarity" -> ((s, d) =>
-      graft.text.TextAnalysis.unigramRarity(docs(s, d))),
-    // temperature mixing at α = 1/2: sources thinned by √(n_ref/n_s)
-    // with the md5 coin — deterministic, so the kept set (reported per
-    // source) is fully oracled
-    "corpus_mix_temperature" -> ((s, d) =>
-      graft.pipeline.Pipeline.temperatureMix(docs(s, d), col("doc_id"), col("source"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))),
-    // temperature rebalance on TOKEN MASS (α=1/2 over per-source
-    // subword totals — the actual training-weight currency): same
-    // one-pass + broadcast-rate shape, the count aggregate becomes a
-    // sum of BPE token counts; fully ORACLED (sqrt is IEEE-stable, the
-    // token sums are exact longs via the recursive-CTE counts)
-    "corpus_mix_temperature_tokens" -> ((s, d) =>
-      graft.pipeline.Pipeline.temperatureMix(docs(s, d), col("doc_id"),
-          col("source"),
-          weight = Some(graft.text.TextAnalysis.bpeTokenCount(col("text"))))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))),
-    // the ORACLE-GRADE classifier trainer: integer batch perceptron,
-    // one exact-gradient pass per epoch (weights as plan literals),
-    // fused train→serve — 4 epochs replay bit-identically in SQL.
-    // Same planted quality label as the float probe (docs carrying the
-    // low-quality markers); the marker-count feature is learnable, the
-    // centered word count is SIGNED (exercises negative sums through
-    // the whole unrolled chain), convergence asserted in PipelineSpec
-    // reliability audit of the trained classifier: per exact integer
-    // score, the observed positive-label share and sign accuracy —
-    // the calibration curve a score threshold is chosen against;
-    // composes the SAME train-to-serve pipeline, class-sized output
-    "quality_calibration" -> ((s, d) => {
-      val t = split(lower(col("text")), " ")
-      val markers = size(filter(t, w => w === "slow" || w === "dup"))
-      val scored = graft.pipeline.Pipeline.perceptronTrainServe(
-        docs(s, d), col("doc_id"),
-        when(markers > 0, 1L).otherwise(-1L),
-        Seq(markers, graft.text.TextAnalysis.intDiv(
-          (size(t) - lit(40)).cast("long"), lit(16L))),
-        epochs = 6)
-      scored.groupBy(col("score"))
-        .agg(count(lit(1)).as("n"),
-          count(when(col("label") === 1, 1)).as("n_positive"),
-          count(when(col("pred") === col("label"), 1)).as("n_correct"))
-        .select(col("score"), col("n"), col("n_positive"),
-          graft.text.TextAnalysis.frac4(col("n_positive"), col("n"))
-            .as("positive_share"),
-          graft.text.TextAnalysis.frac4(col("n_correct"), col("n"))
-            .as("accuracy"))
-    }),
-    // threshold-free ranking quality of the trained classifier: exact
-    // integer ROC-AUC (Mann-Whitney with midranks) over the perceptron
-    // scores vs the marker labels — the audit that says whether the
-    // score ORDERING separates classes before any threshold is picked
-    "quality_model_auc" -> ((s, d) => {
-      val t = split(lower(col("text")), " ")
-      val markers = size(filter(t, w => w === "slow" || w === "dup"))
-      val scored = graft.pipeline.Pipeline.perceptronTrainServe(
-        docs(s, d), col("doc_id"),
-        when(markers > 0, 1L).otherwise(-1L),
-        Seq(markers, graft.text.TextAnalysis.intDiv(
-          (size(t) - lit(40)).cast("long"), lit(16L))),
-        epochs = 6)
-      graft.pipeline.Pipeline.aucExact(scored, col("label"), col("score"))
-    }),
-    "quality_perceptron_train" -> ((s, d) => {
-      val t = split(lower(col("text")), " ")
-      val markers = size(filter(t, w => w === "slow" || w === "dup"))
-      graft.pipeline.Pipeline.perceptronTrainServe(
-        docs(s, d), col("doc_id"),
-        when(markers > 0, 1L).otherwise(-1L),
-        Seq(markers, graft.text.TextAnalysis.intDiv(
-          (size(t) - lit(40)).cast("long"), lit(16L))),
-        epochs = 6)
-    }),
-    // in-engine quality-classifier training: full-batch logistic
-    // regression, one aggregation pass per gradient step (the Lloyd
-    // shape), then narrow scoring — GD float sums are partial-agg-order
-    // dependent ⇒ rows-only; accuracy/convergence property-gated
-    "quality_probe_train" -> ((s, d) => {
-      val dd = docs(s, d)
-      val t = split(lower(col("text")), " ")
-      // planted quality label: docs carrying the low-quality markers
-      // ("slow"/"dup" in the synthetic vocabulary, the lorem/click
-      // analog); the trainer must learn a positive marker weight —
-      // exactly how a linear quality model learns its vocabulary
-      val markers = (w: Column) => w === "slow" || w === "dup"
-      val label = (size(filter(t, markers)) > 0).cast("double")
-      val feats = Seq(
-        size(filter(t, markers)).cast("double"),
-        size(t).cast("double"),
-        (length(col("text")) - (size(t) - 1)).cast("double") / size(t))
-      val (w, _, m, sd) = graft.pipeline.Pipeline.trainLogisticProbe(
-        dd, label, feats, iters = 15)
-      dd.select(col("doc_id"), label.cast("long").as("label"),
-        (graft.pipeline.Pipeline.scoreLogistic(feats, w, m, sd) >= 0.5)
-          .cast("long").as("pred"))
-    }),
-    "text_repetition" -> ((s, d) =>
-      graft.text.TextAnalysis.repetitionSignals(docs(s, d))),
-    "text_dup_lines" -> ((s, d) =>
-      graft.text.TextAnalysis.dupLineFraction(docs(s, d))),
-    // duplicated-passage removal (keep the lowest-doc_id copy, cut the
-    // rest, reassemble) — the transform half next to dup_passages
-    "text_remove_dup_spans" -> ((s, d) =>
-      graft.text.TextAnalysis.removeDupSpans(docs(s, d), 5)),
-    "corpus_ngrams" -> ((s, d) =>
-      graft.text.TextAnalysis.topNgrams(docs(s, d), 2, 20)),
-    "corpus_report" -> ((s, d) =>
-      graft.text.TextAnalysis.corpusReport(docs(s, d))),
-    // Time kind feeding a sketch: hour-of-day histogram over events
-    "hist_time_of_day" -> ((s, d) =>
-      Histograms.histogram1D(ev(s, d),
-        floor(graft.operators.ColumnOps.timeOfDayMs(col("ts")) / lit(3600000L))
-          .cast("long"))),
-    // PII stats with LUHN-VALIDATED cards: the false-positive cut a
-    // real redaction pipeline applies (digit runs alone are mostly
-    // order ids — planted 4111111111111111 passes, ...1112 fails)
-    "pii_stats" -> ((s, d) =>
-      graft.text.TextAnalysis.piiStats(Fixtures.pii.df(s, d))),
-    "pii_redact" -> ((s, d) =>
-      // inject deterministic PII so the redaction provably fires, then
-      // scrub it; the oracle applies the same regexes to the same text
-      docs(s, d).select(col("doc_id"),
-        graft.text.TextAnalysis.redactPii(concat(
-          col("text"), lit(" contact: user"), col("doc_id").cast("string"),
-          lit("@ex-ample.com or 10.1."),
-          pmod(col("doc_id"), lit(256L)).cast("string"),
-          lit(".7 ph 555-123-4567"))).as("clean"))),
-    // seeded per-source Bernoulli rebalance; sampled ⇒ rows-only gate,
-    // proportions property-gated in PropertySpec
-    "stratified_sample" -> ((s, d) =>
-      graft.pipeline.Pipeline.stratifiedSample(docs(s, d), "source",
-        (0 until 20).map(i => s"src$i" -> (if (i % 2 == 0) 0.8 else 0.2)).toMap)),
-
-    // int8 scalar quantization of the embedding column (4× storage);
-    // scalar report columns so the oracle compare is engine-stable
-    "embedding_quantize" -> ((s, d) =>
-      graft.ann.Similarity.quantizeReport(emb(s, d))),
-    // deterministic k-means assignment (hash-seeded + Lloyd); sampled-
-    // seed clustering ⇒ rows-only gate, invariants property-gated
-    "embedding_kmeans" -> ((s, d) =>
-      graft.ann.Similarity.kmeansAssign(emb(s, d), 8, 2)),
-    // SemDeDup: within-cluster near-dup mining — precision-exact subset
-    // of dedup_embedding (property-gated), plus cluster structure
-    // SemDeDup headline routed onto the EXACT integer pipeline (r15
-    // judge ask #3): q16 quantize → integer Lloyd (8 cells, 2 steps,
-    // vec_id-seeded) → in-cell pairs with the float-free cos ≥ 2/5
-    // verdict (25·dot² ≥ 4·qqa·qqb in decimal) — every stage replays
-    // bit-identically in SQL, so the headline graduates from rows-only
-    // to fully ORACLED. The float-Lloyd serve path
-    // (Similarity.semanticDedupPairs) remains available and spec-gated
-    // in PipelineSpec for callers that want true-cosine verdicts.
-    "dedup_embedding_semantic" -> ((s, d) =>
-      graft.ann.Similarity.semanticDedupExact(emb(s, d), 2, 5, 8, 2)),
-    // ORACLE-GRADE clustering: integer Lloyd on the 2^16 grid
-    // (vec_id-seeded, truncating integer means, exact-integer argmin)
-    // — 2 k-means steps replay bit-identically in unrolled SQL CTEs
-    // cluster-quality audit on the exact grid: centroid silhouette
-    // (squared-L2 simplified form) — per-cluster cohesion/separation,
-    // bit-replayable because every distance is an exact q16 integer
-    "embedding_silhouette_exact" -> ((s, d) =>
-      graft.ann.Similarity.silhouetteExact(emb(s, d), 4, 2)),
-    "embedding_kmeans_exact" -> ((s, d) =>
-      graft.ann.Similarity.kmeansExact(emb(s, d), 4, 2)),
-    // topic labeling of the embedding clusters (BERTopic class-based
-    // TF-IDF): each exact-integer k-means cell pools its member docs
-    // into one class, scored per term by cluster TF × corpus IDF —
-    // the cross-modal curation dashboard (which WORDS characterize
-    // each embedding cell). Fully oracled: the kmeans CTE chain
-    // assigns, the tfidf replay ranks
-    "cluster_topic_terms" -> ((s, d) =>
-      graft.text.TextAnalysis.clusterTopicTerms(docs(s, d),
-        graft.ann.Similarity.kmeansExact(emb(s, d), 4, 2)
-          .select(col("vec_id"), col("cluster")), 5)),
-    // SemDeDup with the float-free verdict: cos ≥ 2/5 decided as
-    // 25·dot² ≥ 4·qq·cc in decimal — the pair SET is fully oracled
-    "dedup_semantic_exact" -> ((s, d) =>
-      graft.ann.Similarity.semanticDedupExact(emb(s, d), 2, 5, 4, 2)),
-    "ann_topk" -> ((s, d) =>
-      graft.ann.Similarity.bruteForceTopK(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10)),
-    // hard-negative mining (contrastive data prep): top-k most-similar
-    // DIFFERENT-label vectors per query — ANN top-k with the label
-    // exclusion pushed into the broadcast join, bounded-heap partials
-    "ann_hard_negatives" -> ((s, d) =>
-      graft.ann.Similarity.hardNegatives(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10)),
-    // triplet assembly for metric learning: per anchor, best same-label
-    // positive + best different-label negative + the margin between
-    // them — ONE corpus scan scores both roles
-    "ann_triplets" -> ((s, d) =>
-      graft.ann.Similarity.triplets(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L))),
-    // planes PINNED (not self-tuned) so the whole single-table LSH serve
-    // is value-replayable: the hyperplane family is a pure md5 function,
-    // FloatVecDot accumulates float products in ascending-index double
-    // adds, and the oracle unrolls the identical 4×64 projection with
-    // exact double literals — bucket membership, candidates, ranking all
-    // ORACLED (r13 ask #5; production callers keep the autoPlanes form)
-    "ann_lsh_topk" -> ((s, d) =>
-      graft.ann.Similarity.lshTopK(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10,
-        planes = 4)),
-    "ann_ivf_topk" -> ((s, d) =>
-      graft.ann.Similarity.ivfTopK(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10)),
-    // one-time PQ/IVF-PQ index BUILD (train centroids + codebooks,
-    // encode corpus to m-byte codes, persist) — timed separately from
-    // serving because production builds once and queries forever; the
-    // receipt row (corpus size, compression geometry) is fully oracled
-    "ann_pq_build" -> ((s, d) => {
-      // fixed per-corpus scratch path: every rebuild OVERWRITES the
-      // same tree (a fresh temp dir per run would leak one full index
-      // per bench iteration)
-      val dir = pqScratch(d)
-      val stats = graft.ann.PqIndex.build(emb(s, d), dir)
-      pqIndexDirs.put(d, dir) // freshest index serves subsequent queries
-      stats
-    }),
-    // product quantization (Jégou et al. 2011) SERVE path: scan the
-    // prebuilt persisted codes table once per query batch (single
-    // broadcast join — plan size independent of #queries), ADC score,
-    // exact re-rank — the billion-vector memory posture; approximate ⇒
-    // rows-only, recall vs brute force property-gated
-    "ann_pq_topk" -> ((s, d) =>
-      graft.ann.PqIndex.serve(emb(s, d), pqIndexDir(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), 10)),
-    // IVF-PQ composition (the FAISS workhorse) SERVE path: probe the
-    // nprobe nearest cells of the prebuilt index (cosine — the
-    // assignment metric), ADC-score the codes there, exact re-rank —
-    // per-query work ~nprobe/nlist of the corpus on byte codes
-    "ann_ivfpq_topk" -> ((s, d) =>
-      graft.ann.PqIndex.serve(emb(s, d), pqIndexDir(s, d),
-        Seq(0L, 1L, 2L, 3L, 4L), 10, nprobe = 6)),
-    // the PQ index maintained as a FOLDED ARTIFACT over embedding
-    // shards (sixth stored model, custom layout): base index trained
-    // and encoded over shards {0,1} on first contact; shard 2 folds in
-    // by encoding ONLY its vectors under the PUBLISHED quantizer (the
-    // append contract) — delta-sized work, per-shard immutable code
-    // datasets hive-partitioned by cell, provenance-receipted. Fully
-    // ORACLED: the folded side tables render at dump time and DuckDB
-    // replays the whole probed serve (the ann_ivfpq_topk template)
-    "ann_pq_topk_folded" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureEmbShards(s, d, 3)
-      val name = "emb_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.ann.PqIndex.foldedIndexExists(name))
-        // Seq(-1L) resolves no query vector, so the bootstrap publishes
-        // the base index without paying a throwaway ADC serve
-        graft.ann.PqIndex.foldedIndexServe(s, name, shards.take(2),
-          Seq(-1L), 1).count()
-      graft.ann.PqIndex.foldedIndexServe(s, name, shards,
-        Seq(0L, 1L, 2L, 3L, 4L), 10, nprobe = 6)
-    }),
-    // search over the int8 codes: integer-exact scores, so fully oracled
-    "ann_topk_quantized" -> ((s, d) =>
-      graft.ann.Similarity.quantizedTopK(emb(s, d), Seq(0L, 1L, 2L, 3L, 4L), 10)),
-    // k-center coreset (farthest-point greedy, Sener & Savarese):
-    // diversity-based data selection on the exact 2^16 grid — the
-    // whole greedy fixed point replays bit-identically in SQL
-    "kcenter_coreset" -> ((s, d) =>
-      graft.ann.Similarity.kcenterCoreset(emb(s, d), 6)),
-    // bitext mining (LASER/CCMatrix reciprocal-best): mutual-NN pairs
-    // across two label populations on the exact grid; one broadcast
-    // bipartite score, two struct-max elections, equality join
-    "bitext_mine" -> ((s, d) =>
-      graft.ann.Similarity.bitextMine(emb(s, d))),
-    // in-context-pretraining ordering (Shi et al. 2023): greedy
-    // most-similar-next hop, bit-pinned on the 2^16 grid — the
-    // topical-coherence twin of kcenter's diversity greedy
-    "icp_order" -> ((s, d) =>
-      graft.ann.Similarity.icpOrder(emb(s, d), 8)),
-    // embedding-space domain scoring (the embedding twin of
-    // text_dsir_weight): cosine of every vector to the label-0
-    // centroid on the global 2^16 grid — centroid and dots are exact
-    // integers, one IEEE-stable sqrt division rounded to 4 decimals;
-    // the 1-row centroid broadcasts, so scoring has no data shuffle
-    "embedding_domain_score" -> ((s, d) =>
-      graft.ann.Similarity.domainScore(emb(s, d), 0)),
-    "quantiles_approx" -> ((s, d) => {
-      val qs = Quantiles.approxQuantiles(li(s, d), "l_extendedprice",
-        Seq(0.25, 0.5, 0.75), 0.01)
-      import s.implicits._
-      Seq((qs(0), qs(1), qs(2))).toDF("q25", "q50", "q75")
-    }),
-    "nextk_start_position" -> ((s, d) => {
-      val n = NextK.startPosition(li(s, d),
-        Seq(Order("l_returnflag"), Order("l_linestatus")), Seq("N", "F"))
-      import s.implicits._
-      Seq(n).toDF("start_position")
-    }),
-    "text_quality" -> ((s, d) => graft.text.TextAnalysis.quality(docs(s, d))),
-    // per-source quality-percentile normalization (mixture calibration):
-    // percentile by COUNTING on the score grid, never a per-source sort
-    "quality_percentile" -> ((s, d) =>
-      graft.text.TextAnalysis.qualityPercentile(docs(s, d))),
-    // corpus snapshot diff (dataset versioning): v2 = v1 with %37==11
-    // removed, %37==5 edited, three added — classify by content hash
-    "corpus_diff" -> ((s, d) => {
-      val v1 = docs(s, d)
-      val v2 = v1.filter(pmod(col("doc_id"), lit(37L)) =!= 11L)
-        .withColumn("text", when(pmod(col("doc_id"), lit(37L)) === 5L,
-          concat(col("text"), lit(" v2 edit"))).otherwise(col("text")))
-        .unionByName(Fixtures.Fixture("added", Seq(
-          (9990001L, "brand new doc one", "en", "added"),
-          (9990002L, "brand new doc two", "en", "added"),
-          (9990003L, "brand new doc three", "en", "added"))).planted(s))
-      graft.pipeline.Pipeline.corpusDiff(v1, v2)
-    }),
-    // shard-balance audit: md5-hash sharding into 16 output shards,
-    // per-shard doc/token counts + doc share on the 1e-4 grid
-    "shard_balance" -> ((s, d) =>
-      graft.pipeline.Pipeline.shardBalance(docs(s, d), 16)),
-    // Gopher rule gate (Rae et al. 2021 A1.1): per-doc rule signals +
-    // composite pass, all on the exact 1e-4 grid — the standard
-    // pretraining pre-filter as one narrow zero-shuffle map. The
-    // stopword rule gets the FIXTURE's function-word set (the corpus
-    // vocabulary carries only 'the' of the canonical 8, which would
-    // fail every doc); the operator default is the canonical list
-    "text_gopher_rules" -> ((s, d) =>
-      graft.text.TextAnalysis.gopherRules(docs(s, d),
-        stopwords = Seq("the", "a", "of", "and"))),
-    // the LINE-level half of the Gopher gate (bullet-start / ellipsis-
-    // end shares with the paper's 0.9 / 0.3 removal thresholds) over
-    // planted multi-line docs straddling both thresholds
-    "text_gopher_lines" -> ((s, d) =>
-      graft.text.TextAnalysis.gopherLineRules(Fixtures.bullets.df(s, d))),
-    // the cleaning-pipeline survivor dashboard: ingested → gopher →
-    // language → blocklist → exact-dedup survivor, prefix conjunctions
-    // of one-scan flags; the only data-sized exchange is the dedup
-    // window (the shuffle exact dedup itself pays)
-    "corpus_filter_funnel" -> ((s, d) =>
-      graft.text.TextAnalysis.filterFunnel(docs(s, d), "en",
-        Seq("the", "a", "of", "and"), Seq("slow join", "qqq"))),
-    // ── web-ingest cleanup family (CCNet/RefinedWeb/C4 line+URL+HTML) ──
-    // cross-doc boilerplate-line detection over the newline-planted
-    // corpus: one explode, one groupBy on the line
-    "text_boilerplate_lines" -> ((s, d) =>
-      graft.text.TextAnalysis.boilerplateLines(Fixtures.nl.df(s, d), 2)),
-    // INCREMENTAL detection: per-shard line states (even/odd doc_id
-    // split plays two ingest shards) merged by (sum, sum, min), list
-    // derived from the merged state — exact, so it shares the batch
-    // oracle VERBATIM
-    "text_boilerplate_incremental" -> ((s, d) => {
-      val dnl = Fixtures.nl.df(s, d)
-      graft.text.TextAnalysis.mergeBoilerplateStates(Seq(
-          graft.text.TextAnalysis.boilerplateState(
-            dnl.filter(pmod(col("doc_id"), lit(2L)) === 0L)),
-          graft.text.TextAnalysis.boilerplateState(
-            dnl.filter(pmod(col("doc_id"), lit(2L)) === 1L))))
-        .filter(col("n_docs") >= 2)
-    }),
-    // the destructive CCNet/RefinedWeb pass: boilerplate lines cut from
-    // every non-keeper doc, text reassembled; 128-bit line keys
-    "text_remove_dup_lines" -> ((s, d) =>
-      graft.text.TextAnalysis.removeDupLines(Fixtures.nl.df(s, d), 2)),
-    // same transform under the CCNet NORMALIZED key (digit/punct-blind
-    // hash): the planted "page 1 of 10"/"page 2 of 10" twin collapses
-    // here and ONLY here; reassembled text keeps the raw lines
-    "text_remove_dup_lines_norm" -> ((s, d) =>
-      graft.text.TextAnalysis.removeDupLines(Fixtures.nl.df(s, d), 2, normalized = true)),
-    // the serve half of the line-dedup loop: strip EVERY occurrence
-    // against the FROZEN list (no keeper survival — the ingest-gate
-    // semantics; the list side broadcasts). r15: the list comes from
-    // the stored boilerplate-list ARTIFACT (the cluster-map pattern —
-    // detection runs once per (input, params, build) and every gate/
-    // strip consumer serves the published parquet), so this query's
-    // plan has NO detection subtree: one corpus scan + one broadcast
-    // join against a model-sized parquet read. The always-mine
-    // detection stays observable as text_boilerplate_lines. Oracle
-    // unchanged: the stored list IS boilerplateLines' output.
-    "text_strip_boilerplate" -> ((s, d) =>
-      graft.text.TextAnalysis.stripKnownBoilerplate(Fixtures.nl.df(s, d),
-        boilerplateListArtifact(s, d))),
-    // the strip consumer served from the FOLDED line state: folded
-    // (sum,sum,min) census ≡ whole-corpus census, so the frozen list
-    // (n_docs >= 2) and therefore the strip output are identical —
-    // the oracle is the text_strip_boilerplate replay verbatim
-    "text_strip_boilerplate_folded" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.nl.inputDir(s, d), 3)
-      val name = "docsnl_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.text.TextAnalysis.boilerplateFoldedExists(name))
-        graft.text.TextAnalysis.boilerplateStateArtifactFolded(
-          s, name, shards.take(2)).count()
-      graft.text.TextAnalysis.stripKnownBoilerplate(Fixtures.nl.df(s, d),
-        graft.text.TextAnalysis.boilerplateStateArtifactFolded(s, name, shards)
-          .filter(col("n_docs") >= 2))
-    }),
-    // domain link-graph centrality: integer-exact PageRank over the
-    // distinct site→domain edge set (graph-sized, never corpus-sized);
-    // one URL-extraction scan, one shuffle per iteration
-    // weakly-connected components over the SAME link graph PageRank
-    // ranks (crawl-cluster discovery: isolated site islands vs the
-    // main web component) — the string-keyed min-label propagation,
-    // bounded-round CC on a graph-sized edge table
-    "link_components" -> ((s, d) => {
-      val pairs = graft.graph.LinkGraph.domainEdges(docs(s, d))
-        .select(col("src").as("id_a"), col("dst").as("id_b"))
-      graft.dedup.Dedup.connectedComponents(pairs)
-        .select(col("doc_id").as("node"), col("cluster_id").as("component"))
-    }),
-    "link_domain_rank" -> ((s, d) =>
-      graft.graph.LinkGraph.domainRank(Fixtures.urlGraph.df(s, d), 4)),
-    // HITS hubs/authorities over the SAME link graph — the two roles
-    // PageRank folds together (directory sites vs trusted targets);
-    // exact-integer mutual recursion with max-normalization on the
-    // 1e-6 grid, unrolled-CTE replayable like link_domain_rank
-    "link_hits" -> ((s, d) =>
-      graft.graph.LinkGraph.hits(Fixtures.urlGraph.df(s, d), 3)),
-    // C4 URL filter over in-text links: narrow regex map + literal
-    // blocklist, zero shuffle
-    "text_url_filter" -> ((s, d) =>
-      graft.text.TextAnalysis.urlFilter(Fixtures.url.df(s, d), blockedDomains)),
-    // URL canonicalization + URL-level dedup (the crawl-side dedup
-    // key): lowercase authority, fragment/tracking-param/default-port/
-    // trailing-slash stripping, then group by the canonical form —
-    // the planted raw spellings must collapse
-    "url_canonicalize" -> ((s, d) =>
-      graft.text.TextAnalysis.urlDedup(Fixtures.urlCanon.df(s, d))),
-    // per-source quota (the FineWeb/C4 per-host cap): top-K docs per
-    // source by exact-grid quality via the bounded-heap aggregator —
-    // never a per-key full sort
-    "source_cap" -> ((s, d) =>
-      graft.text.TextAnalysis.sourceCap(docs(s, d), 5)),
-    // HTML → text with link density (the jusText/trafilatura signal);
-    // tag-free base docs are fixed points
-    "text_html_extract" -> ((s, d) =>
-      graft.text.TextAnalysis.htmlTextStats(Fixtures.html.df(s, d))),
-    "text_tokens" -> ((s, d) => graft.text.TextAnalysis.tokenStats(docs(s, d))),
-    // REAL subword tokenization (greedy longest-match over the literal
-    // vocab, one codegen trie walk per row — BpeTokenizer): per-doc
-    // counts are the production token-budget currency; fully ORACLED
-    // via a DuckDB recursive CTE replaying greedy match per distinct
-    // word over the SAME interpolated vocab literal
-    // SentencePiece-style unigram segmentation under the shipped
-    // integer-cost vocab: Viterbi DP once per DISTINCT word, broadcast
-    // back; includes the planted "data" cost tie that pins the
-    // (min cost, min seg) stage tie-break on both engines
-    "text_tokens_unigram" -> ((s, d) =>
-      graft.text.TextAnalysis.unigramStats(docs(s, d), unigramVocab)),
-    // the Viterbi-EM training loop (2 hard-EM rounds): re-segment →
-    // recount → re-cost with exact bit-length surrogates, all integer
-    "unigram_train_costs" -> ((s, d) =>
-      graft.text.TextAnalysis.unigramTrainCosts(docs(s, d), unigramVocab, 2)),
-    // the SentencePiece prune step: drop multi-char pieces under the
-    // count threshold after 2 EM rounds (singles always survive), then
-    // one more EM round under the shrunk vocabulary — pruned-away
-    // pieces force their words to re-segment, so counts/costs genuinely
-    // move; threshold 1500 sits above any single-word piece's corpus
-    // weight at sf0.01 but below multi-word shared pieces
-    "unigram_train_pruned" -> ((s, d) =>
-      graft.text.TextAnalysis.unigramTrainPruned(docs(s, d), unigramVocab,
-        2, 1500L)),
-    // train→serve CLOSED: per-doc stats under the costs TRAINED in this
-    // query (the pack_sequences_trained precedent — the vocabulary is
-    // the serving currency end-to-end, not a shipped literal)
-    "text_tokens_unigram_trained" -> ((s, d) => {
-      val trained = graft.text.TextAnalysis
-        .unigramTrainCosts(docs(s, d), unigramVocab, 2)
-        .collect().map(r => r.getString(0) -> r.getLong(2)).toSeq.sortBy(_._1)
-      graft.text.TextAnalysis.unigramStats(docs(s, d), trained)
-    }),
-    // WordPiece (BERT) greedy longest-match-first with ## continuations
-    // and whole-word [UNK] fallback — the third subword serving path
-    // beside BPE and unigram; the fixture vocab plants longest-initial,
-    // longest-continuation, multi-restart, and the no-backtrack trap
-    // ("window" → [UNK] though win|##dow covers)
-    "text_tokens_wordpiece" -> ((s, d) =>
-      graft.text.TextAnalysis.wordpieceStats(docs(s, d), wordpieceVocab)),
-    // in-engine WordPiece TRAINING (the BERT vocab learner): the BPE
-    // merge loop under the likelihood score count(ab)/(count(a)count(b))
-    // in the integer bit-length surrogate; symbols carry ## from
-    // initialization so the learned pieces serve directly
-    "wordpiece_train_merges" -> ((s, d) =>
-      graft.text.BpeTrainer.wordpieceMergesFrame(s,
-        graft.text.BpeTrainer.trainWordpieceMerges(docs(s, d), 8))),
-    // train→serve CLOSED for WordPiece: per-doc stats under the pieces
-    // TRAINED in this query (merged symbols + their participants; words
-    // touching unlearned characters fall to [UNK] — the BERT behavior)
-    "text_tokens_wordpiece_trained" -> ((s, d) => {
-      val merges = graft.text.BpeTrainer.trainWordpieceMerges(docs(s, d), 8)
-      graft.text.TextAnalysis.wordpieceStats(docs(s, d),
-        graft.text.BpeTrainer.wordpieceVocabFromMerges(merges))
-    }),
-    "text_tokens_bpe" -> ((s, d) =>
-      graft.text.TextAnalysis.bpeTokenStats(Fixtures.ml.df(s, d))),
-    // tokenizer bake-off: corpus totals + bytes/piece under the THREE
-    // vocab families side by side — the comparison a tokenizer choice
-    // is made against (caveats differ: unigram counts OOV words as 0
-    // pieces, wordpiece [UNK] = 1, the BPE trie byte-falls-back)
-    "tokenizer_compare" -> ((s, d) => {
-      val base = docs(s, d)
-      val bytes = base.select(col("doc_id"),
-        octet_length(col("text")).cast("long").as("__b"))
-      def one(name: String, stats: DataFrame, pieces: String) =
-        stats.join(bytes, Seq("doc_id"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col(pieces)).as("n_pieces"), sum(col("__b")).as("n_bytes"))
-          .select(lit(name).as("tokenizer"), col("n_docs"),
-            col("n_pieces"), col("n_bytes"),
-            graft.text.TextAnalysis.frac4(col("n_bytes"), col("n_pieces"))
-              .as("bytes_per_piece"))
-      one("bpe", graft.text.TextAnalysis.bpeTokenStats(base), "n_tokens_bpe")
-        .unionByName(one("unigram",
-          graft.text.TextAnalysis.unigramStats(base, unigramVocab), "n_pieces"))
-        .unionByName(one("wordpiece",
-          graft.text.TextAnalysis.wordpieceStats(base, wordpieceVocab), "n_pieces"))
-    }),
-    // per-LANGUAGE subword fertility (bytes per BPE token) over the
-    // ml-augmented corpus — the cross-script budget metric (CJK rows
-    // fall to byte-level tokens, so their fertility differs from en);
-    // same generated greedy-match oracle, grouped by lang; ratio on
-    // the exact 1e-4 integer grid (frac4)
-    "text_tokens_fertility" -> ((s, d) =>
-      Fixtures.ml.df(s, d).select(col("lang"),
-          octet_length(col("text")).cast("long").as("bytes"),
-          graft.text.TextAnalysis.bpeTokenCount(col("text")).as("toks"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("bytes")).cast("long").as("total_bytes"),
-          sum(col("toks")).cast("long").as("total_tokens"),
-          graft.text.TextAnalysis.frac4(sum(col("bytes")), sum(col("toks")))
-            .as("bytes_per_token"))),
-    // BM25 ranked retrieval over the corpus (parity-plus beside
-    // TF-IDF): integer-micro quantized per-term scores keep the
-    // per-doc sum exact (no float addition-order dependence), rank +
-    // score_micro output makes the compare bit-exact
-    "bm25_topk" -> ((s, d) =>
-      graft.text.TextAnalysis.bm25TopK(docs(s, d),
-        Seq("spark", "join", "merge", "slow"), 20)),
-    // hybrid retrieval (RRF, Cormack et al.): BM25 pool ∪ dense
-    // quantized-cosine pool fused on the exact integer grid — the
-    // standard BM25+vector RAG ranker; bounded pools, bounded windows
-    "hybrid_rrf" -> ((s, d) =>
-      graft.ann.Similarity.hybridRrf(docs(s, d), emb(s, d),
-        Seq("spark", "join", "merge", "slow"), 0L)),
-    // Unicode NFC canonicalization over the multilingual corpus — the
-    // ingest-time cleanup exact dedup needs (the planted fixture's
-    // decomposed combining-mark twin becomes byte-identical to its
-    // precomposed pair ONLY after NFC: distinct_raw > distinct_nfc
-    // for fr); both engines implement Unicode canonical composition,
-    // so the op is fully oracled
-    "text_normalize_nfc" -> ((s, d) =>
-      Fixtures.ml.df(s, d)
-        .select(col("lang"), col("text"),
-          graft.text.TextAnalysis.nfcNormalize(col("text")).as("nfc"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("text") =!= col("nfc"), 1L).otherwise(0L))
-            .cast("long").as("n_changed"),
-          countDistinct(col("text")).as("distinct_raw"),
-          countDistinct(col("nfc")).as("distinct_nfc"),
-          sum(length(col("nfc"))).cast("long").as("nfc_codepoints"))),
-    // bigram-LM surprisal (the CCNet perplexity-filter signal, trained
-    // in-engine in the same job): per-doc mean conditional surprisal
-    // as the exact INTEGER bit-length surrogate
-    // bitlen(c(w1)) - bitlen(c(w1,w2)) — order-free sums, so fully
-    // ORACLED where a float log2 would misround; high mean = gibberish
-    "text_lm_surprisal" -> ((s, d) =>
-      graft.text.TextAnalysis.bigramSurprisal(docs(s, d))),
-    // stupid-backoff trigram LM (Brants et al. 2007) with a REAL
-    // train→serve split: model trained on the base corpus, scored over
-    // the planted-row-augmented corpus — the planted remixes/unseen
-    // words force the backoff chain through levels 2, 1, and OOV;
-    // integer bit-length surrogates throughout, so the per-level hit
-    // counts and surprisal sums are bit-exact
-    // served from the STORED trigram-LM artifact (r15 verdict #3): the
-    // model is trained once per input and published; this entry prices
-    // the SERVE — three vocab-sized broadcast joins + the per-doc fold.
-    // Scores are exact integers from a deterministic derivation, so the
-    // stored-model serve is bit-identical to training fresh (the
-    // unchanged oracle trains fresh and the always-train twin below
-    // keeps the build priced in the bench).
-    "text_lm_backoff" -> ((s, d) => {
-      val (s3, s2, s1, oov) =
-        graft.text.TextAnalysis.trigramModelArtifact(s, d)
-      graft.text.TextAnalysis.scoreTrigramBackoff(
-        Fixtures.lm.df(s, d), s3, s2, s1, oov)
-    }),
-    // training-cost observability twin (the dedup_cluster_mine pattern):
-    // ALWAYS trains the trigram LM from the corpus — no artifact — so
-    // the bench keeps pricing the model build round over round.
-    "text_lm_backoff_mine" -> ((s, d) =>
-      graft.text.TextAnalysis.trigramBackoff(docs(s, d), Fixtures.lm.df(s, d))),
-    // storable LM count state: per-shard bigram tables (sharded by
-    // doc_id mod 3 here) merge by exact sum in a SHUFFLED order, then
-    // the shared derivation emits the model — bit-equal to training on
-    // the union, the incremental-ingest path (no rescan of old shards)
-    "lm_model_incremental" -> ((s, d) => {
-      val shards = (0 to 2).map(i => graft.text.TextAnalysis
-        .bigramCountState(docs(s, d).filter(pmod(col("doc_id"), lit(3)) === i)))
-      graft.text.TextAnalysis.bigramModelFromStates(
-        Seq(shards(2), shards(0), shards(1)))
-    }),
-    // the LM count state maintained as a FOLDED ARTIFACT over the
-    // 3-shard split (serveFoldedShards, third stored model): base state
-    // over shards {0,1} on first contact, shard 2's counts folded in by
-    // exact sum — only the delta is ever scanned; the model derives
-    // from the SERVED state, bit-equal to batch training on the union,
-    // which is exactly what the oracle replays (the lm_model_incremental
-    // oracle verbatim)
-    "lm_model_folded" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, d, 3)
-      val name = "docs_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.text.TextAnalysis.bigramFoldedExists(name))
-        graft.text.TextAnalysis.bigramStateArtifactFolded(s, name,
-          shards.take(2)).count()
-      graft.text.TextAnalysis.bigramModelFromStates(Seq(
-        graft.text.TextAnalysis.bigramStateArtifactFolded(s, name, shards)))
-    }),
-    // pairwise source TF-cosine (corpus drift / source redundancy —
-    // the signal behind source-level dedup and mixture design): exact
-    // integer dots and norms, one sqrt-based division rounded to 4
-    // decimals (the ANN-oracle precedent); #sources² output
-    "source_similarity" -> ((s, d) =>
-      graft.text.TextAnalysis.sourceSimilarity(docs(s, d))),
-    // cross-source vocabulary overlap from mergeable KMV bottom-k
-    // signatures — hash-value-selected, so the ESTIMATE itself is
-    // value-oracled; merge-exactness property-gated in PipelineSpec
-    "source_kmv_jaccard" -> ((s, d) =>
-      graft.text.TextAnalysis.sourceKmvJaccard(docs(s, d), 128)),
-    // CCNet head/middle/tail selection: per-lang surprisal tertiles
-    // via grid-COUNTING thresholds (never a per-lang data-sized sort —
-    // the cumulative window runs over the bounded 1e-4 grid table);
-    // head = most fluent third, the slice training pipelines keep
-    // the perplexity model comes from the STORED bigram-LM artifact
-    // (r15 verdict #3); the per-doc scoring pass and the grid-counting
-    // tertile selection — the data-sized work — are what this entry
-    // prices. Deterministic integer model ⇒ bit-identical to training
-    // in-query (the oracle and the always-train twin below).
-    "text_ccnet_buckets" -> ((s, d) =>
-      graft.text.TextAnalysis.ccnetBucketsWith(docs(s, d),
-        graft.text.TextAnalysis.bigramModelArtifact(s, d))),
-    // training-cost observability twin: always trains the bigram LM.
-    "text_ccnet_buckets_mine" -> ((s, d) =>
-      graft.text.TextAnalysis.ccnetBuckets(docs(s, d))),
-    // byte-entropy quality signal (the compression-ratio filter):
-    // integer bit-length surrogate over the per-doc byte histogram —
-    // low bits/byte = repetitive boilerplate; zero shuffle, fully
-    // ORACLED (ASCII corpus: DuckDB's codepoint positions == bytes)
-    "text_entropy" -> ((s, d) =>
-      graft.text.TextAnalysis.byteEntropy(docs(s, d))),
-    // DSIR importance weights (data selection toward a target domain):
-    // bag-of-bigrams log importance surrogate, target = lang'en' docs;
-    // exact integer bit-length arithmetic ⇒ fully ORACLED; selecting
-    // top-weighted docs is the Xie et al. importance-resampling step
-    "text_dsir_weight" -> ((s, d) =>
-      graft.text.TextAnalysis.dsirWeights(docs(s, d), col("lang") === "en")),
-    // the "R" in DSIR — keep the top-32 docs by mean importance weight
-    // (deterministic resampling form): bounded TakeOrdered, no full sort
-    "dsir_select" -> ((s, d) =>
-      graft.text.TextAnalysis.dsirSelect(docs(s, d), col("lang") === "en", 32)),
-    // per-source distinct-bigram diversity (templated sources score low)
-    "source_diversity" -> ((s, d) =>
-      graft.text.TextAnalysis.sourceDiversity(docs(s, d))),
-    // token-unit sliding-window chunking (W=32, stride 16): the
-    // overlap-chunking long-doc pretraining/RAG splits with
-    "chunk_sliding" -> ((s, d) =>
-      graft.text.TextAnalysis.chunkTokens(docs(s, d), 32, 16)),
-    // fill-in-the-middle (StarCoder code prep): deterministic ~50% of
-    // docs reordered as <fim_prefix> P <fim_suffix> S <fim_middle> M
-    // at hash-chosen cut points; row-local, zero shuffle
-    "fim_transform" -> ((s, d) =>
-      graft.text.TextAnalysis.fimTransform(docs(s, d))),
-    // T5/UL2 span corruption: deterministic md5-hash masking (~15%),
-    // adjacent masks merge to sentinel spans, (input, target) pair
-    // assembled — seeded-reproducible and fully string-oracled
-    "span_corruption" -> ((s, d) =>
-      graft.text.TextAnalysis.spanCorruption(docs(s, d))),
-    // multi-pattern blocklist scan (C4/RefinedWeb badwords shape):
-    // ONE Aho-Corasick pass per document for the whole lexicon — the
-    // per-byte cost is independent of lexicon size, vs m contains()
-    // scans (m full text passes at 100 TB). Per-TERM doc/occurrence
-    // counts, leftmost-greedy non-overlapping (= replace-trick
-    // semantics, so the oracle is one cheap replace per (doc, term));
-    // the lexicon carries prefix-nested terms ("low"/"slow",
-    // "can"/"scan" — fail-link paths), a phrase crossing word
-    // boundaries, CJK/emoji patterns hitting the planted multilingual
-    // rows, and a zero-hit term that must stay in the output
-    "text_blocklist" -> ((s, d) =>
-      graft.text.TextAnalysis.blocklistTermStats(Fixtures.ml.df(s, d), blocklistTerms)),
-    // the cleaning DECISION view of the same one-pass scan: per-source
-    // share of documents containing ANY lexicon term, exact 1e-4 grid
-    "text_blocklist_share" -> ((s, d) =>
-      graft.text.TextAnalysis.blocklistDocShare(Fixtures.ml.df(s, d), blocklistTerms)),
-    // WORD-BOUNDARY blocklist (the C4 badwords semantic): whole tokens
-    // only — the nested substring plants ("low"⊂"slow", "can"⊂"scan")
-    // must score ZERO here while the substring scan counts them
-    "text_blocklist_words" -> ((s, d) =>
-      graft.text.TextAnalysis.blocklistWordStats(Fixtures.ml.df(s, d),
-        blocklistTerms.filterNot(_.contains(' ')))),
-    // the packing operator budgeting in SUBWORD tokens — same two-level
-    // prefix-sum plan, the count column is the BPE encode
-    "pack_sequences_bpe" -> ((s, d) =>
-      graft.pipeline.Pipeline.packSequences(
-          docs(s, d).select(col("doc_id"), col("source"),
-            graft.text.TextAnalysis.bpeTokenCount(col("text")).as("n_tokens")),
-          col("source"), col("doc_id"), col("n_tokens"), 2048L)
-        .select(col("doc_id"), col("source"), col("n_tokens"), col("bin"))),
-    // packing-efficiency dashboard: per source, padding waste across
-    // COMPLETED bins (the last bin is legitimately partial) and
-    // overflow carried by straddling docs — the numbers you tune the
-    // token budget against; pure aggregate over the same packing
-    "pack_efficiency" -> ((s, d) => {
-      val packed = graft.pipeline.Pipeline.packSequences(
-        docs(s, d).select(col("doc_id"), col("source"),
-          graft.text.TextAnalysis.bpeTokenCount(col("text")).as("n_tokens")),
-        col("source"), col("doc_id"), col("n_tokens"), 2048L)
-      val bins = packed.groupBy(col("source"), col("bin"))
-        .agg(sum(col("n_tokens")).as("fill"))
-      val last = bins.groupBy(col("source")).agg(max(col("bin")).as("__last"))
-      bins.join(broadcast(last), Seq("source"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_bins"),
-          sum(col("fill")).cast("long").as("total_tokens"),
-          sum(when(col("bin") < col("__last"),
-            greatest(lit(0L), lit(2048L) - col("fill"))).otherwise(0L))
-            .cast("long").as("padding_waste"),
-          sum(greatest(lit(0L), col("fill") - lit(2048L)))
-            .cast("long").as("overflow_tokens"))
-        .select(col("source"), col("n_bins"), col("total_tokens"),
-          col("padding_waste"), col("overflow_tokens"),
-          when(col("n_bins") > 1L,
-            graft.text.TextAnalysis.frac4(col("padding_waste"),
-              (col("n_bins") - 1L) * lit(2048L))).as("waste_share"))
-    }),
-    // in-engine BPE vocabulary TRAINING (Sennrich): 8 learned merges,
-    // each step = one map-side-combined pair-count agg over the
-    // vocabulary table + driver argmax + one codegen merge map;
-    // deterministic ⇒ fully ORACLED by replaying the 8 stages in SQL
-    "bpe_train_merges" -> ((s, d) =>
-      graft.text.BpeTrainer.trainedMergesFrame(Fixtures.ml.df(s, d), 8)),
-    // INCREMENTAL vocabulary update: train 4 merges, then CONTINUE
-    // with 4 more. r16: the continuation resumes from the first
-    // training's LIVE state (word table + pair-count map) instead of
-    // replaying the shipped list against a second corpus scan — the
-    // merge list is identical either way (deterministic argmax makes
-    // continuation a pure suffix; the replay path stays in
-    // continueMerges and is spec-gated), so this query still shares the
-    // FULL 8-stage training oracle — the oracle itself asserts
-    // continue(train(4), +4) == train(8)
-    "bpe_train_continue" -> ((s, d) =>
-      graft.text.BpeTrainer.mergesFrame(s,
-        graft.text.BpeTrainer.trainThenContinueMerges(Fixtures.ml.df(s, d), 4, 4))),
-    // TRUE merge-order BPE encode under the TRAINED vocabulary: apply
-    // the 8 learned merges in rank order (chained codegen maps over
-    // the distinct-word table), count final symbols per word, sum per
-    // doc — fully ORACLED through the same generated training stages
-    // (the greedy trie encoder is the fast approximate path; THIS is
-    // the exact BPE semantics). Merges memoize per corpus — the
-    // build/serve split: training cost is the declared
-    // `bpe_train_merges` entry, this one times the ENCODE (merges are
-    // deterministic, so the always-training oracle still matches).
-    "bpe_encode_merge_order" -> ((s, d) =>
-      graft.text.BpeTrainer.mergeOrderTokenStats(Fixtures.ml.df(s, d),
-        trainedMerges(s, d))),
-    // the train→encode→budget loop CLOSED: packing bins budgeted in
-    // tokens of the in-query-TRAINED vocabulary (merge-order encode
-    // under the learned merges), oracled through the same generated
-    // training stages — the vocabulary is the budget currency
-    // end-to-end, not a shipped literal
-    "pack_sequences_trained" -> ((s, d) => {
-      val counts = graft.text.BpeTrainer
-        .mergeOrderTokenStats(Fixtures.ml.df(s, d), trainedMerges(s, d))
-        .select(col("doc_id"), col("n_tokens_merge_order"))
-      val budgeted = Fixtures.ml.df(s, d).select(col("doc_id"), col("source"))
-        .join(counts, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("source"),
-          coalesce(col("n_tokens_merge_order"), lit(0L)).as("n_tokens"))
-      graft.pipeline.Pipeline.packSequences(budgeted,
-          col("source"), col("doc_id"), col("n_tokens"), 2048L)
-        .select(col("doc_id"), col("source"), col("n_tokens"), col("bin"))
-    }),
-    // the token-ID assignment itself (input_ids): per-doc sequence
-    // fingerprint + count, ORACLED — the recursive CTE re-derives the
-    // greedy ids (argmax-length vocab index; byte-fallback block) and
-    // replays the rolling hash
-    "text_tokens_ids" -> ((s, d) =>
-      Fixtures.ml.df(s, d).select(col("doc_id"),
-          graft.text.TextAnalysis.bpeEncodeIds(col("text")).as("ids"))
-        .select(col("doc_id"), size(col("ids")).cast("long").as("n_tokens"),
-          graft.text.TextAnalysis.idsFingerprint(col("ids")).as("ids_fp"))),
-    // OOV rate under the subword vocabulary: share of byte-fallback
-    // tokens (id ≥ |vocab|) per doc — the "does the tokenizer cover
-    // this text" quality/routing signal (CJK rows ≈ all-fallback, en
-    // rows near zero); same generated-CTE oracle as text_tokens_ids
-    "text_oov_rate" -> ((s, d) => {
-      val v = graft.functions.BpeTokenizer.defaultVocab.size
-      Fixtures.ml.df(s, d).select(col("doc_id"), col("lang"),
-          graft.text.TextAnalysis.bpeEncodeIds(col("text")).as("ids"))
-        .select(col("doc_id"), col("lang"),
-          size(col("ids")).cast("long").as("n_tokens"),
-          size(filter(col("ids"), x => x >= lit(v))).cast("long").as("n_oov"))
-        .select(col("doc_id"), col("lang"), col("n_tokens"), col("n_oov"),
-          when(col("n_tokens") > 0L,
-            graft.text.TextAnalysis.frac4(col("n_oov"), col("n_tokens")))
-            .as("oov_rate"))
-    }),
-    // decode∘encode invertibility as an ORACLED query: every token
-    // decodes to its literal text (vocab entry or fallback char), so
-    // the round trip equals the input minus the spaces encode drops —
-    // the oracle needs no token knowledge at all
-    "text_detokenize" -> ((s, d) =>
-      Fixtures.ml.df(s, d).select(col("doc_id"),
-        graft.functions.BpeTokenizer.bpe_decode(
-          graft.functions.BpeTokenizer.bpe_encode(lower(col("text"))))
-          .as("detok"))),
-    // byte-level LOSSLESS round trip: byte-alphabet encode → ids →
-    // decode → inverse byte map equals the ORIGINAL text bit-exactly —
-    // case, spaces, control bytes, multibyte UTF-8 all survive (the
-    // word path round-trips only "minus spaces"). The tokenizer
-    // invertibility contract every byte-level stack relies on; the
-    // oracle needs no token knowledge at all.
-    "text_detokenize_bytes" -> ((s, d) =>
-      Fixtures.ml.df(s, d).select(col("doc_id"),
-        graft.functions.BpeTokenizer.byte_unicode_decode(
-          graft.functions.BpeTokenizer.bpe_decode(
-            graft.functions.BpeTokenizer.bpe_encode(
-              graft.functions.BpeTokenizer.byte_unicode(col("text")),
-              graft.functions.BpeTokenizer.byteVocab),
-            graft.functions.BpeTokenizer.byteVocab))
-          .as("detok"))),
-    // MATERIALIZED packed training sequences: per (source, bin) the
-    // concatenated input_ids in doc order — the artifact sequence
-    // packing exists to produce; ORACLED on the bin geometry and the
-    // id-sequence fingerprint
-    "pack_sequences_ids" -> ((s, d) =>
-      graft.text.TextAnalysis.packedSequenceIds(docs(s, d), 2048L)
-        .select(col("source"), col("bin"), col("n_docs"),
-          col("total_tokens"),
-          graft.text.TextAnalysis.idsFingerprint(col("input_ids"))
-            .as("seq_fp"),
-          graft.text.TextAnalysis.idsFingerprint(col("doc_offsets"))
-            .as("offsets_fp"))),
-    // token-budget mixing in SUBWORD tokens (budgets ~1.3× the word
-    // budgets to hold comparable doc counts)
-    "corpus_mix_bpe" -> ((s, d) =>
-      graft.pipeline.Pipeline.corpusMix(
-        docs(s, d).withColumn("n_toks",
-          graft.text.TextAnalysis.bpeTokenCount(col("text"))),
-        col("doc_id"), col("source"), col("n_toks"),
-        Map("src0" -> 1000L, "src1" -> 800L, "src2" -> 2000000L))),
-    "text_langid" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        graft.text.TextAnalysis.langId(col("text")).as("lang_pred"))),
-    // TRAINED language-ID (the CCNet/fastText classifier step, not the
-    // marker heuristic): Naive-Bayes char-bigram model learned from a
-    // TRUSTED seed (en-labeled base docs + the planted multilingual
-    // rows — the base corpus's non-en labels are synthetic noise, the
-    // exact thing a label AUDIT exists to catch), then every doc is
-    // scored and its claimed label checked. One scan trains, the
-    // vocab-sized model broadcasts, scores are half-bit-resolution
-    // integer surrogate sums; planted zh/fr/ru/ko rows must
-    // self-classify and mislabeled ASCII docs must flag label_ok=false
-    "text_langid_nb" -> ((s, d) =>
-      graft.text.TextAnalysis.langidNb(Fixtures.ml.df(s, d),
-        col("lang") === "en" || col("source") === "planted_ml")),
-    // Unicode script-mix profile (routing prior): literal codepoint
-    // ranges read identically by Java regex and RE2; zero shuffle
-    "text_scripts" -> ((s, d) =>
-      graft.text.TextAnalysis.scriptMix(Fixtures.ml.df(s, d))),
-    // storable langid model: 3 disjoint seed shards fold by exact sum
-    // into the batch-equal count table (no rescan of old shards)
-    "langid_model_incremental" -> ((s, d) => {
-      val dm = Fixtures.ml.df(s, d)
-      val seed = col("lang") === "en" || col("source") === "planted_ml"
-      val shards = (0 to 2).map(i => graft.text.TextAnalysis
-        .langidCountState(dm.filter(pmod(col("doc_id"), lit(3)) === i), seed))
-      graft.text.TextAnalysis.langidModelFromStates(
-        Seq(shards(2), shards(0), shards(1)))
-    }),
-    // the langid model state as a FOLDED ARTIFACT (fourth stored model):
-    // the ml corpus materialized once as an input dir, sharded mod 3;
-    // base state over shards {0,1}, shard 2's seed counts folded by
-    // exact sum; the seed predicate is part of the artifact identity
-    // (changing the trust contract re-mines). Fold ≡ batch counting,
-    // the langid_model_incremental oracle verbatim
-    "langid_model_folded" -> ((s, d) => {
-      val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.ml.inputDir(s, d), 3)
-      val name = "docsml_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.text.TextAnalysis.langidFoldedExists(name, langidSeedSql))
-        graft.text.TextAnalysis.langidStateArtifactFolded(s, name,
-          shards.take(2), langidSeedSql).count()
-      graft.text.TextAnalysis.langidStateArtifactFolded(s, name, shards,
-        langidSeedSql)
-    }),
-    // per-source sequence-length histogram in power-of-2 token buckets
-    // — the distribution packing/batching is tuned against
-    "seq_len_histogram" -> ((s, d) =>
-      graft.text.TextAnalysis.seqLenHistogram(docs(s, d))),
-    // SFT loss-mask prep: 0 through "prompt ### ", 1 over the
-    // completion; separator-free docs flag has_pair=false
-    "sft_loss_mask" -> ((s, d) =>
-      graft.text.TextAnalysis.sftLossMask(Fixtures.sft.df(s, d))),
-    // functional-dependency discovery (TANE level-1 profiling): all
-    // ordered pairs from ONE distinct-count pass
-    "fd_discovery" -> ((s, d) =>
-      graft.operators.DistinctAndFrequency.fdDiscovery(
-        Tables.nation(s, d), Seq("n_nationkey", "n_name", "n_regionkey"))),
-    // Benford first-digit audit (fabricated-numbers / synthetic-data
-    // QA): observed vs log10(1+1/d) shares on the exact grid
-    "benford_audit" -> ((s, d) =>
-      graft.operators.Stats.benfordAudit(
-        Tables.lineitem(s, d), col("l_extendedprice"))),
-    // RLE sink-layout audit: total run counts of every candidate sort
-    // order from ONE distinct-count pass — no sort executed; the
-    // ascending-cardinality parquet-sort-key rule, measured
-    "sink_rle_layout" -> ((s, d) =>
-      graft.engine.Layout.rleLayoutAudit(docs(s, d), Seq(
-        "lang" -> col("lang"), "source" -> col("source"),
-        "len_bits" -> length(bin(col("n_chars"))).cast("long")))),
-    // interval-interval OVERLAP join (the missing sibling of the
-    // point-in-interval range join): binned co-partition, canonical
-    // first-shared-bin emission (no distinct); urgent 7-day windows vs
-    // low-priority 10-day windows, aggregated per urgent order
-    "interval_overlap_join" -> ((s, d) => {
-      val ord = Tables.orders(s, d)
-      val base = lit("1970-01-01").cast("date")
-      def days(c: Column) = datediff(c.cast("date"), base).cast("long")
-      val a = ord.filter(col("o_orderpriority") === "1-URGENT" &&
-          col("o_orderdate") >= lit("1996-01-01") &&
-          col("o_orderdate") < lit("1996-03-01"))
-        .select(col("o_orderkey").as("a_key"),
-          days(col("o_orderdate")).as("a_lo"))
-        .withColumn("a_hi", col("a_lo") + 7L)
-      val b = ord.filter(col("o_orderpriority") === "5-LOW" &&
-          col("o_orderdate") >= lit("1995-12-15") &&
-          col("o_orderdate") < lit("1996-03-15"))
-        .select(col("o_orderkey").as("b_key"),
-          days(col("o_orderdate")).as("b_lo"))
-        .withColumn("b_hi", col("b_lo") + 10L)
-      graft.operators.RangeJoin.intervalOverlap(
-          a, col("a_lo"), col("a_hi"), b, col("b_lo"), col("b_hi"), 7L)
-        .select(col("a_key"),
-          (least(col("a_hi"), col("b_hi")) -
-            greatest(col("a_lo"), col("b_lo"))).as("__ov"))
-        .groupBy(col("a_key"))
-        .agg(count(lit(1)).as("n_overlaps"),
-          sum(col("__ov")).as("sum_overlap_days"),
-          max(col("__ov")).as("max_overlap_days"))
-    }),
-    // k-anonymity audit (the microdata-release check beside DP):
-    // quasi-ids = (lang, source, log2 length bucket); one hash agg,
-    // class-sized output + one-row risk summary joined as columns
-    "kanonymity_audit" -> ((s, d) => {
-      val q = Seq(col("lang"), col("source"),
-        length(bin(col("n_chars"))).cast("long").as("len_bits"))
-      graft.security.KAnonymity.classes(docs(s, d), q, 5L)
-    }),
-    // l-diversity (Machanavajjhala et al. 2007): the homogeneity-attack
-    // audit k-anonymity misses — every (lang, len_bits) class must see
-    // >= 2 distinct sources
-    "kanonymity_ldiversity" -> ((s, d) => {
-      val q = Seq(col("lang"),
-        length(bin(col("n_chars"))).cast("long").as("len_bits"))
-      graft.security.KAnonymity.lDiversity(docs(s, d), q, col("source"), 2L)
-    }),
-    // memorization-risk score (Lee et al. 2022 / Carlini et al. 2022):
-    // per doc, the share of its 5-gram windows duplicated elsewhere +
-    // the df of its most-duplicated gram — the cap/drop signal for
-    // extraction-risk-aware training
-    "text_memorization_risk" -> ((s, d) =>
-      graft.text.TextAnalysis.memorizationRisk(docs(s, d), 5)),
-    // train/test split leakage: near-duplicate pairs ACROSS the hash
-    // split (the contamination mode a random split creates silently);
-    // banding delta(test)×corpus(train), exact-jaccard verified
-    // stable 3-way split (80/10/10): per-(source, split) doc/token
-    // accounting — the dataset-card table every release ships with;
-    // band assignment from the same md5-60bit hash as hashSplit, so
-    // growing the corpus never reassigns an existing row
-    "split_summary" -> ((s, d) =>
-      graft.pipeline.Pipeline.hashSplit3(docs(s, d), col("doc_id"), 80, 10)
-        .groupBy(col("source"), col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(filter(split(lower(col("text")), " "), w => w =!= ""))
-            .cast("long")).as("n_tokens"))),
-    "split_leakage" -> ((s, d) => {
-      val sp = graft.pipeline.Pipeline.hashSplit(docs(s, d), col("doc_id"), 80)
-      graft.dedup.Dedup.minhashLshAgainst(
-          sp.filter(col("split") === "test"),
-          sp.filter(col("split") === "train"), 3, 64, 32, 0.5)
-        .select(col("new_id").as("test_id"),
-          col("corpus_id").as("train_id"), col("jaccard"))
-    }),
-    // DoReMi-shaped mixture reweighting (Xie et al. 2023): integer
-    // multiplicative weights on per-source excess proxy loss — the
-    // principled replacement for hand-set mixture shares
-    "corpus_mix_doremi" -> ((s, d) =>
-      graft.pipeline.Pipeline.doremiWeights(docs(s, d), 3, 10000L)),
-    // t-closeness (Li et al. 2007): the skewness-attack audit — class
-    // sensitive-value distribution vs the table's, exact-integer EMD
-    // over the ordered len_bits grid on the 1e-4 scale
-    "kanonymity_tcloseness" -> ((s, d) =>
-      graft.security.KAnonymity.tCloseness(docs(s, d),
-        Seq(col("lang"), col("source")),
-        length(bin(col("n_chars"))).cast("long"), 2000L)),
-    "kanonymity_risk" -> ((s, d) => {
-      val q = Seq(col("lang"), col("source"),
-        length(bin(col("n_chars"))).cast("long").as("len_bits"))
-      graft.security.KAnonymity.riskSummary(docs(s, d), q, 5L)
-    }),
-    // GPT-2 regex pre-tokenization (the stage before byte-level BPE):
-    // the lookahead-free decision procedure as a codegen kernel, one
-    // walk + narrow explode, zero shuffle
-    "text_pretokenize" -> ((s, d) =>
-      graft.text.TextAnalysis.pretokenize(Fixtures.pre.df(s, d))),
-    // the AUTHENTIC GPT-2 composition: BPE token counts over the
-    // pretoken stream (contractions and leading-space units tokenize
-    // separately, exactly as the real tokenizer segments them);
-    // whitespace-only pretokens carry 0 trie tokens — the word-level
-    // trie's documented simplification vs byte-level space encoding
-    "text_tokens_bpe_pretok" -> ((s, d) =>
-      graft.text.TextAnalysis.pretokenize(Fixtures.pre.df(s, d))
-        .withColumn("__n",
-          graft.text.TextAnalysis.bpeTokenCount(col("pretoken")))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_pretokens"),
-          sum(col("__n")).as("n_tokens_bpe"))),
-    // the BYTE-LEVEL composition (r13 ask #3): pretokens map through the
-    // GPT-2 bytes-to-unicode alphabet, then greedy-match against the
-    // byte vocab (word entries + their Ġ-prefixed leading-space merges).
-    // " the" is ONE token; whitespace/control runs tokenize authentically
-    // (Ġ/Ċ fallback units) instead of the word path's documented 0-token
-    // deviation — every byte of the corpus is accounted for.
-    "text_tokens_bpe_bytes" -> ((s, d) =>
-      graft.text.TextAnalysis.pretokenize(Fixtures.pre.df(s, d))
-        .withColumn("__n",
-          graft.functions.BpeTokenizer.bpe_count_bytes(col("pretoken")))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_pretokens"),
-          sum(col("__n")).as("n_tokens_bpe_bytes"))),
-    // invisible-char sanitization (Trojan Source / dedup evasion):
-    // zero-width + bidi-control counts and the stripped text, one
-    // regexp pass per class, zero shuffle
-    "text_sanitize_invisible" -> ((s, d) =>
-      graft.text.TextAnalysis.sanitizeInvisible(Fixtures.invis.df(s, d))),
-    // IBAN detection with the real mod-97 checksum (the Luhn posture
-    // for bank accounts): one regexp scan, fold only over candidates
-    "pii_iban" -> ((s, d) =>
-      graft.text.TextAnalysis.piiIban(Fixtures.iban.df(s, d))),
-    // sentence-aligned chunking (RAG splitter): fixed-budget
-    // cumulative rule, boundaries only between sentences; per-doc
-    // windows, no global sort
-    "chunk_sentences" -> ((s, d) =>
-      graft.text.TextAnalysis.chunkSentences(Fixtures.sent.df(s, d))),
-    // the FULL Gopher repetition table (Rae et al. Table A1): top
-    // 2/3/4-gram char fraction + duplicated 5..10-gram char coverage,
-    // paper thresholds on the exact grid; one count shuffle total
-    "text_rep_gopher" -> ((s, d) =>
-      graft.text.TextAnalysis.gopherRepetition(Fixtures.rep.df(s, d))),
-    // mojibake detect+repair (the ftfy CP1252 double-encoding fix):
-    // one codegen walk per row, zero shuffle; conservative no-touch
-    // on anything not strictly-valid reinterpreted UTF-8
-    "text_mojibake" -> ((s, d) =>
-      graft.text.TextAnalysis.mojibakeRepair(Fixtures.moji.df(s, d))),
-    // multi-turn chat loss masks (train-on-assistant-turns): the
-    // running-role fold is a codegen kernel, every count a codegen
-    // builtin; zero shuffle; marker-free corpus docs flow through as
-    // all-zero masks
-    "chat_loss_mask" -> ((s, d) =>
-      graft.text.TextAnalysis.chatLossMask(Fixtures.chat.df(s, d))),
-    // DPO preference-pair election (UltraFeedback binarization):
-    // completions grouped by exact prompt, scored on the 1e-4
-    // diversity grid, chosen/rejected elected by struct min/max
-    // aggregates — map-side partials, no window; tie rules and
-    // zero-margin drops pinned by the planted groups
-    "dpo_pairs" -> ((s, d) =>
-      graft.pipeline.Pipeline.dpoPairs(Fixtures.dpo.df(s, d))),
-    "text_fingerprint" -> ((s, d) => graft.text.TextAnalysis.fingerprints(docs(s, d))),
-    "text_rolling_fp" -> ((s, d) => graft.text.TextAnalysis.rollingFingerprints(docs(s, d))),
-    // winnowing (MOSS) fingerprint candidate pairs: window-min selected
-    // gram hashes (density ≈ 2/(w+1)) with the w+k−1 shared-run
-    // guarantee; md5-60bit gram hashes make the SELECTION itself
-    // replayable in SQL — fingerprint values are oracled, not just
-    // their artifacts; hot boilerplate prints df-cut before the join
-    "text_winnow_pairs" -> ((s, d) =>
-      graft.text.TextAnalysis.winnowPairs(docs(s, d))),
-    // span-LEVEL exact-substring dedup (Lee et al. 2022 with offsets):
-    // one row per maximal duplicated ≥5-token run per doc, boundaries
-    // in token coordinates — the md5-60bit gram key replays the whole
-    // selection (offsets included) in SQL
-    "text_dup_spans" -> ((s, d) =>
-      graft.text.TextAnalysis.dupSpans(docs(s, d), 5)),
-    // tiered maximal-span certification (w, 2w, 4w window hashes): each
-    // merged span stamped with the largest tier whose windows DENSELY
-    // cover it — a true ≥20-token verbatim duplicate certifies at 20,
-    // a chimera of distinct overlapping 5-gram matches stays at 5/0;
-    // the full certificate replays in SQL via the md5-60bit grams
-    "text_dup_spans_maximal" -> ((s, d) =>
-      graft.text.TextAnalysis.dupSpansMaximal(docs(s, d), 5)),
-    // RAG/context-window prep: 128-char chunks every 64 chars — one
-    // narrow explode, no shuffle, partitioning inherited from the scan
-    "text_chunks" -> ((s, d) => graft.text.TextAnalysis.chunk(docs(s, d), 128, 64)),
-    // code-data quality gate (The Stack/StarCoder filters): line-length
-    // bounds, alnum fraction, comment share, autogen marker — all on
-    // the exact 1e-4 grid, zero shuffle
-    "code_quality_rules" -> ((s, d) =>
-      graft.text.TextAnalysis.codeQualityRules(Fixtures.code.df(s, d))),
-    // ROUGE-L instruction-pool dedup (the Self-Instruct/Alpaca
-    // admission filter): max 2·LCS/(n+m) vs a broadcast pool on the
-    // exact 1e-4 grid, θ=0.7 verdict; candidates capped at 24 tokens
-    // (instructions are short; the cap bounds the oracle's DP width).
-    // The codegen LCS kernel runs per (candidate × pool) pair — one
-    // corpus scan, no shuffle beyond the per-doc argmax agg.
-    "text_rouge_dedup" -> ((s, d) =>
-      graft.text.TextAnalysis.rougeDedup(Fixtures.inst.df(s, d), Fixtures.instPool, 24)),
-    // fastText-style linear quality model over a literal vocab: weights
-    // are exact dyadic rationals so the fold is bit-identical on any
-    // engine (no float-association or libm divergence in the gate)
-    "quality_model_score" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        graft.text.TextAnalysis.modelScore(col("text"),
-          SparkEntry.modelVocab, -1.0).as("raw_score"))),
-    // exact substring-duplication signal (Lee et al. 2022 shape):
-    // positional 5-token windows hashed corpus-wide; per-doc dup fraction
-    "dup_passages" -> ((s, d) => graft.text.TextAnalysis.dupPassages(docs(s, d), 5)),
-    // C4-style rule cleaning at sentence granularity (row-local)
-    "sentence_filter" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        graft.text.TextAnalysis.sentenceFilter(col("text"), 4).as("clean"))),
-    // per-source top-5 TF-IDF terms, ranked through the GroupTopK
-    // custom plan (bounded heaps below the exchange)
-    "tfidf_topterms" -> ((s, d) => graft.text.TextAnalysis.tfidfTopTerms(docs(s, d), 5)),
-
-    // ── multimodal (binary media columns; REAL content codecs) ─────────
-    // true pixel/PCM statistics: payloads are real encoded BMP/PPM/WAV
-    // bytes (pixel p = text byte p mod len; sample k = (byte_k−128)·256),
-    // extractFeatures DECODES them (row flip, padding, BGR, sign-extend)
-    // and the oracle recomputes the exact integer-sum stats from text
-    "multimodal_features" -> ((s, d) =>
-      graft.multimodal.Multimodal.extractFeatures(
-          graft.multimodal.Multimodal.syntheticPixelMedia(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("kind"),
-          col("n_bytes").cast("long").as("n_bytes"), col("feat0"), col("feat1"))),
-    // REAL header decode: payloads carry valid PNG/JPEG/GIF container
-    // headers (format by doc_id mod 3, dims from the body length);
-    // imageDims parses them back byte-by-byte — the oracle checks the
-    // encode∘decode round-trip from the source columns alone
-    // the REAL media-ingest path: payloads land as FILES on disk, the
-    // binaryFile source lists + reads them (path/length/content), ids
-    // re-derive from filenames, the decoder runs over `content` — the
-    // plumbing every image/audio corpus ingest starts with (at scale:
-    // the same source over an object store, maxFilesPerTrigger for the
-    // streaming form). Scratch dir cleared first: stale files from a
-    // different-scale run must not leak into the listing.
-    "binaryfile_ingest" -> ((s, d) => {
-      import s.implicits._
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_binfiles")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(dir.toFile)
-      java.nio.file.Files.createDirectories(dir)
-      docs(s, d).orderBy(col("doc_id")).limit(16)
-        .select(col("doc_id"), col("text")).collect().foreach { r =>
-          val id = r.getLong(0)
-          val t = r.getString(1).getBytes("UTF-8")
-          val len = math.max(t.length, 1)
-          val w = 1 + (t.length % 32)
-          val h = 1 + (t.length % 24)
-          val payload = graft.multimodal.Multimodal.bmpPayload(w, h,
-            p => if (t.isEmpty) 0 else t(p % len) & 0xff)
-          java.nio.file.Files.write(dir.resolve(s"$id.bmp"), payload)
-        }
-      val bin = s.read.format("binaryFile").load(dir.toString)
-        .select(regexp_extract(element_at(split(col("path"), "/"), -1),
-          "^(\\d+)", 1).cast("long").as("id"),
-          lit("bmp").as("kind"), col("content").as("media"),
-          lit(0).as("width"), lit(0).as("height"))
-        .as[graft.multimodal.Multimodal.MediaRow]
-      graft.multimodal.Multimodal.extractFeatures(bin).toDF()
-        .select(col("id").as("doc_id"), col("kind"),
-          col("n_bytes").cast("long").as("n_bytes"),
-          col("feat0"), col("feat1"))
-    }),
-    // typed metadata on the opaque media column, the REAL thing: a
-    // spec-layout Exif APP1 (TIFF IFD0, BOTH byte orders planted by id
-    // parity, offset-stored ASCII + inline SHORT/LONG entries) written
-    // into each JPEG and walked back by a byte-level TIFF parser — all
-    // values derive from id/text formulas, fully oracled
-    "multimodal_exif_meta" -> ((s, d) => {
-      import s.implicits._
-      val media = docs(s, d).select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val t = text.getBytes("UTF-8")
-          val w = 1 + (t.length % 640)
-          val h = 1 + (t.length % 480)
-          val jpeg = graft.multimodal.Multimodal.jpegPayload(w, h, t)
-          val app1 = graft.multimodal.Multimodal.exifApp1(
-            s"graft-${id % 10}", w.toLong, (id % 8 + 1).toInt,
-            bigEndian = id % 2 == 0)
-          graft.multimodal.Multimodal.MediaRow(id, "jpeg",
-            graft.multimodal.Multimodal.withExif(jpeg, app1), w, h)
-        }
-      graft.multimodal.Multimodal.exifMeta(media).toDF()
-        .select(col("id").as("doc_id"), col("byte_order"), col("make"),
-          col("exif_width"), col("orientation"))
-    }),
-    "multimodal_image_dims" -> ((s, d) =>
-      graft.multimodal.Multimodal.decodeImageMeta(
-          graft.multimodal.Multimodal.syntheticImages(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("format"), col("width"),
-          col("height"), col("n_bytes").cast("long").as("n_bytes"))),
-    // WAV/RIFF twin of multimodal_image_dims: syntheticAudio wraps the
-    // text bytes in a real 44-byte PCM header (layout derived from
-    // doc_id), wavMeta chunk-walks it back — the oracle recomputes
-    // every field from the source columns alone (ASCII texts, so
-    // length(text) = body bytes; frame/duration math is exact integer)
-    "multimodal_audio_meta" -> ((s, d) =>
-      graft.multimodal.Multimodal.decodeAudioMeta(
-          graft.multimodal.Multimodal.syntheticAudio(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("format"), col("channels"),
-          col("sample_rate"), col("bits_per_sample"), col("n_frames"),
-          col("duration_ms"))),
-    // AIFF big-endian twin of the WAV feature decode: COMM parses the
-    // 80-bit extended sample rate, SSND carries big-endian PCM16 — the
-    // oracle recomputes the same amplitude statistics from the text
-    "multimodal_aiff_features" -> ((s, d) =>
-      graft.multimodal.Multimodal.extractFeatures(
-          graft.multimodal.Multimodal.syntheticAiffAudio(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("kind"),
-          col("n_bytes").cast("long").as("n_bytes"), col("feat0"), col("feat1"))),
-    // JPEG (DCT, lossy by design): real entropy decode of ImageIO-
-    // written streams; rows-only — the spec gates exact dims and a
-    // DC-preservation band on the mean instead of a hash oracle
-    "multimodal_jpeg_features" -> ((s, d) =>
-      graft.multimodal.Multimodal.extractCodecFeatures(
-          graft.multimodal.Multimodal.syntheticJpegMedia(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("kind"), col("width"),
-          col("height"), col("feat0"), col("feat1"))),
-    // ORACLE-GRADE JPEG decode: solid-gray-128 fixtures. A constant
-    // level-shifted-zero image has EVERY DCT coefficient exactly 0 in
-    // every 8×8 block, so any conformant quantize→entropy→IDCT round
-    // trip returns 128 at every pixel REGARDLESS of quant tables or
-    // encoder — mean 128, mean-square 16384, dims from the id formula.
-    // The full real entropy-decode + IDCT path runs with a VALUES-free
-    // exact oracle (the lossy general case stays spec-gated above).
-    "multimodal_jpeg_features_exact" -> ((s, d) => {
-      import s.implicits._
-      val media = docs(s, d).orderBy(col("doc_id")).limit(8)
-        .select(col("doc_id")).as[Long]
-        .map { id =>
-          val w = 1 + (id % 32).toInt
-          val h = 1 + (id % 24).toInt
-          graft.multimodal.Multimodal.MediaRow(id, "jpeg",
-            graft.multimodal.Multimodal.encodeImage("jpg", w, h, _ => 128),
-            w, h)
-        }
-      graft.multimodal.Multimodal.extractCodecFeatures(media)
-        .toDF()
-        .select(col("id").as("doc_id"), col("kind"), col("width"),
-          col("height"), col("feat0"), col("feat1"))
-    }),
-    // MP4/ISO-BMFF twin for the VIDEO column: syntheticVideo builds a
-    // real box tree (ftyp + moov[mvhd + tkhd per track] + mdat around
-    // the text bytes); mp4Meta walks it back — brand, movie timescale,
-    // duration, track count, and the 16.16-fixed video dimensions are
-    // all recomputed by the oracle from the source columns alone
-    "multimodal_video_meta" -> ((s, d) =>
-      graft.multimodal.Multimodal.decodeVideoMeta(
-          graft.multimodal.Multimodal.syntheticVideo(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("brand"), col("timescale"),
-          col("duration"), col("duration_ms"), col("n_tracks"),
-          col("width"), col("height"))),
-    // COMMERCIAL-codec pixel decode: payloads are real DEFLATE/LZW
-    // compressed PNG (doc_id%3=0), GIF (=1), TIFF (=2) streams encoded
-    // through javax.imageio; extractCodecFeatures entropy-DECODES them
-    // back to pixels. All three formats are lossless, so the decoded
-    // intensity statistics hash-match an oracle recomputed from the
-    // source text — even though the payload bytes are encoder-owned.
-    "multimodal_codec_features" -> ((s, d) =>
-      graft.multimodal.Multimodal.extractCodecFeatures(
-          graft.multimodal.Multimodal.syntheticCodecMedia(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("kind"), col("width"),
-          col("height"), col("feat0"), col("feat1"))),
-    // perceptual image hashes over DECODED pixels (aHash/dHash on an
-    // exact point-sampled 8×8 grid — integer end to end, so the oracle
-    // replays the hash from source text bit for bit)
-    "multimodal_image_hash" -> ((s, d) =>
-      graft.multimodal.Multimodal.imageHashes(
-          graft.multimodal.Multimodal.syntheticCodecMedia(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("kind"), col("width"),
-          col("height"), col("ahash"), col("dhash"))),
-    // image near-dup mining by aHash Hamming ≤ 3: 4×16-bit banded
-    // self-join (pigeonhole ⇒ recall 1 at ≤3 bits) + xor/bit_count
-    // verify — banded plan, all-pairs ORACLE, equal by construction
-    "multimodal_image_neardup" -> ((s, d) =>
-      graft.multimodal.Multimodal.imageNearDupPairs(
-        graft.multimodal.Multimodal.imageHashes(
-          graft.multimodal.Multimodal.syntheticCodecMedia(docs(s, d))).toDF())),
-    // frame-based audio fingerprint over decoded G.711 PCM: per-frame
-    // zero-crossing count + energy magnitude (exact integers ⇒ the
-    // fingerprint replays from source text in the oracle)
-    "multimodal_audio_fingerprint" -> ((s, d) =>
-      graft.multimodal.Multimodal.audioFingerprint(
-          graft.multimodal.Multimodal.syntheticUlawAudio(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("frame_idx"), col("n_samples"),
-          col("zero_crossings"), col("energy_mag"), col("checksum"))),
-    // audio exact-dup pairs by fingerprint signature (order-sensitive
-    // checksum fold over the frame fingerprints) — fully oracled; the
-    // fixture plants byte-identical payload copies under shifted ids
-    // (the base corpus has near-dups but no byte-exact ones)
-    "multimodal_audio_dedup" -> ((s, d) => {
-      val base = docs(s, d)
-      val withDups = base.select(col("doc_id"), col("text")).unionByName(
-        base.filter(pmod(col("doc_id"), lit(25L)) === 3L)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      graft.multimodal.Multimodal.audioDedupPairs(
-        graft.multimodal.Multimodal.audioFingerprint(
-          graft.multimodal.Multimodal.syntheticUlawAudio(withDups)).toDF())
-    }),
-    // CONTENT-BASED video frame signatures (the MJPEG shape): mdat
-    // located by the real box walk, frames demuxed by their own image
-    // headers, every 2nd frame DECODED through the pixel decoder
-    // (un-flip, padding, BGR→RGB) and signed over the decoded stream —
-    // a decode bug is an oracle mismatch, not a silent pass
-    "multimodal_video_frames" -> ((s, d) =>
-      graft.multimodal.Multimodal.videoFramePixelSignatures(
-          graft.multimodal.Multimodal.syntheticMotionVideo(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("frame_idx"), col("w"),
-          col("h"), col("checksum"))),
-    // the raw-stride fallback (codecs without an in-engine decoder)
-    // stays declared + oracled under its own name
-    "multimodal_video_frames_raw" -> ((s, d) =>
-      graft.multimodal.Multimodal.videoFrameSignatures(
-          graft.multimodal.Multimodal.syntheticVideo(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("frame_idx"), col("n_bytes"),
-          col("checksum"))),
-    // video dup pairs by DECODED-pixel frame signatures over a
-    // planted-copies fixture (same shape as multimodal_audio_dedup) —
-    // dedup now follows content, not container bytes; fully oracled
-    "multimodal_video_dedup" -> ((s, d) => {
-      val base = docs(s, d)
-      val withDups = base.select(col("doc_id"), col("text")).unionByName(
-        base.filter(pmod(col("doc_id"), lit(25L)) === 3L)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      graft.multimodal.Multimodal.videoDedupPairs(
-        graft.multimodal.Multimodal.videoFramePixelSignatures(
-            graft.multimodal.Multimodal.syntheticMotionVideo(withDups))
-          .toDF()
-          .select(col("id"), col("frame_idx"),
-            (col("w") * col("h")).as("n_bytes"), col("checksum")))
-    }),
-    "multimodal_chunks" -> ((s, d) =>
-      graft.multimodal.Multimodal.sampleChunks(
-          graft.multimodal.Multimodal.syntheticMedia(docs(s, d)), 64, 2)
-        .select(col("id").as("doc_id"), col("chunk_idx"), col("chunk_len"),
-          col("chunk_prefix"))),
-    // G.711 µ-law telephony audio: payloads are real format-tag-7 WAVs
-    // (one µ-law byte per text byte); extractFeatures expands each
-    // sample through the canonical companding formula — the oracle
-    // applies the same exact integer expansion to the source bytes
-    "multimodal_ulaw_features" -> ((s, d) =>
-      graft.multimodal.Multimodal.extractFeatures(
-          graft.multimodal.Multimodal.syntheticUlawAudio(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("kind"),
-          col("n_bytes").cast("long").as("n_bytes"), col("feat0"), col("feat1"))),
-    // TRUE pixel resize through the compressed codecs: entropy-decode
-    // PNG/GIF/TIFF, 2×2 box-average pool (edge boxes average what's
-    // present, exact integer floor division), stats of the RESIZED image
-    "multimodal_resize_pixels" -> ((s, d) =>
-      graft.multimodal.Multimodal.resizePixels(
-          graft.multimodal.Multimodal.syntheticCodecMedia(docs(s, d)))
-        .toDF()
-        .select(col("id").as("doc_id"), col("kind"), col("width"),
-          col("height"), col("feat0"), col("feat1"))),
-    "multimodal_resize" -> ((s, d) =>
-      graft.multimodal.Multimodal.resize(
-          graft.multimodal.Multimodal.syntheticMedia(docs(s, d)), 4)
-        .select(col("id").as("doc_id"), col("kind"), col("n_bytes"),
-          col("resized_len"), col("resized_sum"))),
-
-    // ── event streams ──────────────────────────────────────────────────
-    "events_hourly" -> ((s, d) => graft.streaming.Events.hourlyAgg(ev(s, d))),
-    // hourly resample with gap filling: dense hour grid (bounded by
-    // the time RANGE), zero rows + is_gap for missing hours, forward-
-    // filled last observed reading — the step-line dashboards draw
-    "events_gapfill" -> ((s, d) => graft.streaming.Events.hourlyGapfill(ev(s, d))),
-    // trending: per-hour top-3 event types by count, ranked through the
-    // GroupTopK custom plan (partial per-partition heaps before the
-    // exchange — at event scale the shuffle carries <= 3 rows per
-    // (partition, hour), never the hour's full type histogram)
-    "events_trending" -> ((s, d) => {
-      val hourly = ev(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      graft.plans.GroupTopK.groupTopK(hourly, Seq("hour"),
-        Seq(("n", false), ("event_type", true)), 3)
-        .select(col("hour"), col("rank"), col("event_type"), col("n"))
-    }),
-    "events_sessions" -> ((s, d) => graft.streaming.Events.sessionStats(ev(s, d), 30)),
-    "events_sessions_native" -> ((s, d) =>
-      graft.streaming.Events.sessionStatsNative(ev(s, d), 30)),
-
-    // ── source/sink layer (round-trips exercise writer + schema file +
-    //    reader; the oracle sees the original table, so any loss in the
-    //    round-trip fails the gate) ─────────────────────────────────────
-    "csv_roundtrip" -> ((s, d) =>
-      graft.sources.Sources.csvRoundTrip(
-        li(s, d).filter(col("l_quantity") > 47.0)
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-            col("l_returnflag")))),
-    "json_roundtrip" -> ((s, d) =>
-      graft.sources.Sources.jsonRoundTrip(
-        ord(s, d).filter(col("o_totalprice") > 400000.0)
-          .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")))),
-    // Spark 4's built-in XML source: rowTag write + schema-pinned read
-    // (XML carries no types — the CSV schema-file discipline applies)
-    "xml_roundtrip" -> ((s, d) =>
-      graft.sources.Sources.xmlRoundTrip(
-        cust(s, d).filter(col("c_acctbal") > 9000.0)
-          .select(col("c_custkey"), col("c_name"), col("c_acctbal")))),
-    // fixed-width text (the mainframe layout CSV tools mis-split): each
-    // line rendered with padded byte windows, one doc in 997 carries a
-    // deliberately corrupt quantity field — the try-cast lattice turns
-    // it into null (PERMISSIVE), everything else parses exactly
-    "fixedwidth_parse" -> ((s, d) => {
-      // right-justified 2-decimal render via decimal(12,2) cast + lpad
-      // (both codegen string ops) instead of format_string("%8.2f"):
-      // java.util.Formatter parses its pattern and allocates per ROW —
-      // it was ~70% of the render+write job's CPU at sf0.1. Identical
-      // bytes: the decimal cast rounds HALF_UP exactly like Formatter,
-      // renders both fraction digits, and quantities fit width 8.
-      // width-cliff guard (r15 advisor): lpad TRUNCATES a render wider
-      // than 8 chars where format_string("%8.2f") — the semantic
-      // reference — would widen the field. The split below is
-      // CONSERVATIVE and therefore byte-exact everywhere: any
-      // non-negative quantity under 99999.0 rounds to at most
-      // "99999.00" (8 chars), where lpad and format_string agree
-      // byte-for-byte; everything else (negative, huge, or near the
-      // rounding boundary) takes the Formatter branch, whose output is
-      // correct by definition. TPC-H quantities (1–50) always take the
-      // fast path, so the render job's CPU win is unchanged — the
-      // guard is one double comparison, not a second decimal cast.
-      val qtyStr = when(pmod(col("l_orderkey"), lit(997L)) === 0L,
-          lit("XXXXXX.X"))
-        .when(col("l_quantity") < 0.0 || col("l_quantity") >= 99999.0,
-          format_string("%8.2f", col("l_quantity")))
-        .otherwise(lpad(col("l_quantity").cast("decimal(12,2)")
-          .cast("string"), 8, " "))
-      val line = concat(
-        rpad(col("l_orderkey").cast("string"), 12, " "),
-        rpad(col("l_linenumber").cast("string"), 4, " "),
-        qtyStr,
-        col("l_returnflag"))
-      graft.sources.Sources.fixedWidthRoundTrip(
-        li(s, d).select(line.as("value")),
-        Seq(("l_orderkey", 1, 12, "bigint"), ("l_linenumber", 13, 4, "int"),
-          ("l_quantity", 17, 8, "double"), ("l_returnflag", 25, 1, "string")))
-    }),
-    "orc_roundtrip" -> ((s, d) =>
-      graft.sources.Sources.saveRoundTrip(
-        prt(s, d).filter(col("p_size") >= 45)
-          .select(col("p_partkey"), col("p_name"), col("p_size")), "orc")),
-    // ParseErrorsSketch end-to-end, ORACLED (upgrades the spec-only
-    // gate): render one JSON object per doc — every doc_id % 7 == 3
-    // line deliberately truncated mid-object — read back PERMISSIVE,
-    // and report corrupt/good counts plus a parsed-field sum the
-    // oracle recomputes from the source columns (corrupt rows parse
-    // all-null, so the sum proves good rows really parsed)
-    "json_parse_errors" -> ((s, d) => {
-      val dir = graft.sources.Sources.rtDir("json_err")
-      docs(s, d).select(
-          when(pmod(col("doc_id"), lit(7L)) === 3L,
-            concat(lit("{\"id\":"), col("doc_id").cast("string"),
-              lit(", \"n\":")))
-          .otherwise(concat(lit("{\"id\":"), col("doc_id").cast("string"),
-            lit(",\"n\":"), col("n_chars").cast("string"), lit("}")))
-          .as("value"))
-        .write.mode("overwrite").text(dir)
-      val parsed = s.read
-        .schema("id LONG, n LONG, _corrupt_record STRING")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(dir)
-      parsed.agg(
-        count(when(col("_corrupt_record").isNotNull, 1)).as("n_errors"),
-        count(when(col("_corrupt_record").isNull, 1)).as("n_good"),
-        sum(col("n")).as("sum_n"))
-    }),
-    "log_parse" -> ((s, d) => {
-      // Grok-ish loader end-to-end: render events as log lines, write
-      // text, re-parse with the regex loader; oracle = the source fields
-      val dir = graft.sources.Sources.rtDir("log")
-      ev(s, d).select(concat(
-          lit("evt id="), col("event_id").cast("string"),
-          lit(" user="), col("user_id").cast("string"),
-          lit(" type="), col("event_type")).as("value"))
-        .write.mode("overwrite").text(dir)
-      graft.sources.Sources.readLog(s, dir,
-          "^evt id=(\\d+) user=(\\d+) type=(\\w+)$",
-          Seq(("eid", 1), ("uid", 2), ("etype", 3)))
-        .select(col("eid").cast("long"), col("uid").cast("long"), col("etype"))
-    }),
-    "log_parse_grok" -> ((s, d) => {
-      // full Grok path: pattern-dictionary compile + typed fields +
-      // timestamp-bounded read (GrokLogs.java + LogFiles.java semantics)
-      val dir = graft.sources.Sources.rtDir("log_grok")
-      ev(s, d).select(concat(
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
-          lit(" INFO evt="), col("event_id").cast("string"),
-          lit(" user="), col("user_id").cast("string"),
-          lit(" type="), col("event_type")).as("value"))
-        .write.mode("overwrite").text(dir)
-      graft.sources.Grok.readLog(s, dir,
-          "%{TIMESTAMP_ISO8601:lts} %{LOGLEVEL:level} evt=%{INT:eid} user=%{INT:uid} type=%{WORD:etype}",
-          types = Map("eid" -> "long", "uid" -> "long", "lts" -> "timestamp"),
-          tsBounds = Some(("lts", "2024-01-10 00:00:00", "2024-01-20 00:00:00")))
-        .select(col("lts"), col("eid"), col("uid"), col("etype"))
-    }),
-    "schema_infer" -> ((s, d) =>
-      graft.sources.Sources.inferredKinds(
-        prt(s, d).select(
-          col("p_partkey").cast("string"),
-          col("p_retailprice").cast("string"),
-          col("p_name").cast("string"),
-          // well-formed yyyy-MM-dd strings: exercises the Date rung of
-          // the lattice (zero-padded so strict java.time and a laxer
-          // oracle strptime agree)
-          date_format(
-            date_add(to_date(lit("1992-01-01")), pmod(col("p_partkey"), lit(2000)).cast("int")),
-            "yyyy-MM-dd").as("p_pseudo_date")))),
-
-    // ── federated JDBC (JdbcDatabase.java) against embedded Derby ──────
-    // fixture: customer.parquet loaded into an in-memory database once per
-    // session; each query below is answered BY the database (pushed SQL),
-    // oracled by DuckDB computing the same thing from the parquet original
-    "jdbc_roundtrip" -> ((s, d) => {
-      val url = graft.sources.Jdbc.customerDb(s, d)
-      graft.sources.Jdbc.readTable(s, url, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    }),
-    // Greenplum segment-dump ingestion (GreenplumTarget.java,
-    // bin/dump-greenplum.sh): per-segment headerless CSV dump files +
-    // COLUMN-INCREMENTAL attach — the second dump carries ONLY the new
-    // column, aligned to the loaded rows purely by per-segment position
-    // (misalignment would scramble the flag↔quantity pairing and fail
-    // the oracle's sums)
-    "greenplum_dump_roundtrip" -> ((s, d) => {
-      import org.apache.spark.sql.types._
-      // the dump fixture is written ONCE per (JVM, corpus) — the timed
-      // query measures the aligned LOAD + positional attach, which is
-      // the operator; writing the dump each run was fixture IO in the
-      // timed region (the geo_polygon_holes lesson, r7 VERDICT #6)
-      val dir = gpDumpDir(s, d)
-      val sch1 = StructType(Seq(StructField("l_orderkey", LongType),
-        StructField("l_linenumber", IntegerType),
-        StructField("l_quantity", DoubleType)))
-      val sch2 = StructType(Seq(StructField("l_returnflag", StringType)))
-      val loaded = graft.sources.Greenplum.loadDumpAligned(s, s"$dir/b1", sch1)
-      graft.sources.Greenplum.attachColumns(loaded, s, s"$dir/b2", sch2)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          graft.engine.Num.sumExact(col("l_quantity")).as("sum_qty"),
-          min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"))
-    }),
-    "jdbc_federated_hist" -> ((s, d) =>
-      graft.sources.Jdbc.Federation(s, graft.sources.Jdbc.customerDb(s, d))
-        .histogram("customer", "c_acctbal", -1000.0, 10000.0, 11)),
-    "jdbc_federated_range" -> ((s, d) =>
-      graft.sources.Jdbc.Federation(s, graft.sources.Jdbc.customerDb(s, d))
-        .numericRange("customer", "c_acctbal")),
-    "jdbc_federated_topfreq" -> ((s, d) =>
-      graft.sources.Jdbc.Federation(s, graft.sources.Jdbc.customerDb(s, d))
-        .topFreq("customer", Seq("c_mktsegment"), 150L)),
-    // histogram2D (JdbcDatabase.java:265): both bucket axes computed in
-    // the pushed SQL, only O(buckets_x × buckets_y) rows cross the wire
-    "jdbc_federated_hist2d" -> ((s, d) =>
-      graft.sources.Jdbc.Federation(s, graft.sources.Jdbc.customerDb(s, d))
-        .heatmap("customer", "c_acctbal", -1000.0, 10000.0, 11,
-          "c_nationkey", 0.0, 25.0, 5)),
-
-    // ── more projections / histograms ──────────────────────────────────
-    "pca_projection" -> ((s, d) =>
-      Projections.pca2Project(prt(s, d), "p_size", "p_retailprice", Seq("p_partkey"))),
-    "lamp_projection" -> ((s, d) => {
-      // four fixed control points (corners of the size×price plane) with
-      // pinned 2-D positions; deterministic, no oracle (SVD-based map)
-      val controls = Array(
-        (Array(1.0, 900.0), (0.0, 0.0)), (Array(50.0, 900.0), (1.0, 0.0)),
-        (Array(1.0, 2000.0), (0.0, 1.0)), (Array(50.0, 2000.0), (1.0, 1.0)))
-      Projections.lampProject(
-          prt(s, d).select(col("p_partkey"), col("p_size").cast("double"), col("p_retailprice")),
-          Seq("p_size", "p_retailprice"), controls)
-        .select(col("p_partkey"), round(col("lamp_x"), 4).as("lamp_x"),
-          round(col("lamp_y"), 4).as("lamp_y"))
-    }),
-    "hist_singleton_1d" -> ((s, d) =>
-      Histograms.histogramWithSingleton(prt(s, d),
-        Histograms.numericBucket(col("p_retailprice"), 900.0, 2000.0, 40),
-        col("p_partkey"))),
-    // SampleCorrelationSketch: correlation matrix over a 20% sample.
-    // The sample is md5-hash MEMBERSHIP (the sample_rows_hash pattern),
-    // not an engine RNG: the sampled row set is a pure function of the
-    // keys, so the sampled correlation replays bit-stable in SQL and the
-    // query is fully ORACLED (r13 verdict ask #5) — and at corpus scale
-    // a hash sample is the reproducible/resumable choice anyway (rerun,
-    // different partitioning, different engine: same sample).
-    "sample_corr" -> ((s, d) =>
-      Stats.correlationMatrix(
-        graft.pipeline.Pipeline.hashSample(li(s, d),
-          concat_ws("-", col("l_orderkey"), col("l_linenumber")), 2000),
-        Seq("l_discount", "l_extendedprice", "l_quantity"))),
-    // SampleDistinctRowsSketch: uniform sample of distinct rows plus the
-    // min/max row under the order (rows-only; sampled)
-    "sample_distinct_rows" -> ((s, d) => {
-      val dist = ord(s, d).select(col("o_orderpriority"), col("o_orderstatus")).distinct()
-      dist.sample(withReplacement = false, 0.5, 42L)
-        .withColumn("which", lit("sample"))
-        .unionByName(dist.orderBy(col("o_orderpriority").asc_nulls_last,
-          col("o_orderstatus").asc_nulls_last).limit(1).withColumn("which", lit("min")))
-        .unionByName(dist.orderBy(col("o_orderpriority").desc_nulls_first,
-          col("o_orderstatus").desc_nulls_first).limit(1).withColumn("which", lit("max")))
-    }),
-
-    // ── training-pipeline staples: shuffle / split / packing ───────────
-    "shuffle_rows" -> ((s, d) =>
-      graft.pipeline.Pipeline.deterministicShuffle(
-        docs(s, d).select(col("doc_id")), col("doc_id"))),
-    "train_test_split" -> ((s, d) =>
-      graft.pipeline.Pipeline.hashSplit(
-        docs(s, d).select(col("doc_id")), col("doc_id"), 80)),
-    // curriculum order: short→long stages (token-count thresholds),
-    // hash-shuffled within each stage — a full training order with NO
-    // global sort (per-(stage, bucket) ranks + driver-sized offsets)
-    "curriculum_order" -> ((s, d) =>
-      graft.pipeline.Pipeline.curriculumOrder(
-        docs(s, d).withColumn("__nt",
-          size(split(col("text"), " ")).cast("long")),
-        col("doc_id"),
-        when(col("__nt") < 25L, 0).when(col("__nt") < 45L, 1).otherwise(2))
-        .select(col("doc_id"), col("stage"), col("curriculum_rank"))),
-    // length-grouped batching: per-batch padding economics under the
-    // distributed-loader semantics (batches form within (bin, shard))
-    "batch_by_length" -> ((s, d) =>
-      graft.pipeline.Pipeline.lengthBatches(
-        docs(s, d).select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("__nt")),
-        col("doc_id"), col("__nt"), 10L, 8, 16)),
-    // exactly-5-per-source deterministic sample (hash order) through the
-    // GroupTopK bounded-heap operator
-    "sample_per_source" -> ((s, d) =>
-      graft.pipeline.Pipeline.samplePerGroup(docs(s, d), col("doc_id"), "source", 5)),
-    // deterministic token-budget mix: src0/src1 capped (partial prefix),
-    // src2 unconstrained (whole source), every other source dropped
-    "corpus_mix" -> ((s, d) =>
-      graft.pipeline.Pipeline.corpusMix(
-        docs(s, d).withColumn("n_toks", size(split(col("text"), " ")).cast("long")),
-        col("doc_id"), col("source"), col("n_toks"),
-        Map("src0" -> 800L, "src1" -> 600L, "src2" -> 2000000L))),
-    "pack_sequences" -> ((s, d) =>
-      graft.pipeline.Pipeline.packSequences(
-          docs(s, d).select(col("doc_id"), col("source"),
-            size(split(col("text"), " ")).cast("long").as("n_tokens")),
-          col("source"), col("doc_id"), col("n_tokens"), 2048L)
-        .select(col("doc_id"), col("source"), col("n_tokens"), col("bin"))),
-    // CDC maintenance: apply a deterministic upsert/delete/insert feed
-    // (derived key-modulo from orders, so both engines stage the same
-    // log) to the orders snapshot — MERGE INTO semantics, feed-sized
-    // shuffle only (the base rides a left-anti join, never reshuffled)
-    "cdc_merge_apply" -> ((s, d) =>
-      graft.pipeline.Cdc.mergeApply(ord(s, d), cdcFeed(s, d),
-        Seq("o_orderkey"))),
-    // SCD2 validity history of the same feed: base enters as version 0,
-    // each change opens an interval the key's next change closes, a
-    // tombstone closes without opening
-    "cdc_scd2_history" -> ((s, d) =>
-      graft.pipeline.Cdc.scd2(ord(s, d), cdcFeed(s, d),
-        Seq("o_orderkey"))),
-    // schema evolution on ingest: two materialized orders shards — v1
-    // narrowed (int custkey, float price), v2 wide plus a NEW column —
-    // read back as ONE widened table (int→long, float→double, missing
-    // column null-fills); Spark's own mergeSchema rejects this read
-    "schema_evolution_read" -> ((s, d) =>
-      graft.sources.Sources.evolvedUnionRead(s, Fixtures.evolvedShards(s, d))),
-    // full pipeline composition: quality gate → language gate → exact
-    // dedup (keep lowest doc_id per content hash) → hash split → pack.
-    // One dataflow, three shuffles (dedup window, split-free, pack
-    // window) — what a real corpus-prep job looks like on this library.
-    "pipeline_end2end" -> ((s, d) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(md5(col("text").cast("binary"))).orderBy(col("doc_id"))
-      val kept = docs(s, d)
-        .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
-        .filter(col("n_tokens") >= 20)
-        .filter(graft.text.TextAnalysis.langId(col("text")) === "en")
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      val split2 = graft.pipeline.Pipeline.hashSplit(kept, col("doc_id"), 80)
-      graft.pipeline.Pipeline.packSequences(
-          split2, col("split"), col("doc_id"), col("n_tokens"), 2048L)
-        .select(col("doc_id"), col("split"), col("n_tokens"), col("bin"))
-    }),
-    // cluster management (reference management/PingSketch.java:32,
-    // MemoryUse.java:28): executor + driver liveness/memory rows —
-    // rows-only (machine metrics, no data oracle by construction)
-    "cluster_health" -> ((s, d) => graft.engine.Cluster.health(s)),
-    "merge_concat" -> ((s, d) => {
-      // mergeWith (TableTarget.java:734-746): bag concatenation of N
-      // same-schema datasets — unionByName, duplicates preserved
-      val o = ord(s, d).select(col("o_orderkey"), col("o_orderpriority"))
-      o.filter(col("o_orderpriority") === "1-URGENT")
-        .unionByName(o.filter(col("o_orderpriority") === "5-LOW"))
-        .unionByName(o.filter(col("o_orderkey") % 1000 === 0))
-    }),
-    "geo_tag" -> ((s, d) => {
-      // geo metadata join (TableTarget.getGeo, geo/PolygonSet): column
-      // value → small root-side metadata table, broadcast to every task
-      import s.implicits._
-      val zones = Seq(
-        ("AFRICA", "south"), ("AMERICA", "west"), ("ASIA", "east"),
-        ("EUROPE", "north"), ("MIDDLE EAST", "central")).toDF("r_name", "zone")
-      cust(s, d)
-        .join(Tables.nation(s, d), col("c_nationkey") === col("n_nationkey"))
-        .join(Tables.region(s, d), col("n_regionkey") === col("r_regionkey"))
-        .join(broadcast(zones), Seq("r_name"), "left")
-        .groupBy(col("zone")).agg(count(lit(1)).as("n_customers"))
-    }),
-    "geo_polygon_tag" -> ((s, d) => {
-      // real point-in-polygon containment (geo/PolygonSet.java): convex
-      // CCW features, broadcast; points derived deterministically from
-      // customer keys on an integer grid (exact in both engines)
-      val polys = graft.geo.Geo.polygonSet(s, Seq(
-        ("southwest", Seq((0.0, 0.0), (48.0, 0.0), (0.0, 48.0))),
-        ("east", Seq((49.0, 0.0), (96.0, 0.0), (96.0, 96.0), (49.0, 96.0))),
-        ("north", Seq((0.0, 49.0), (48.0, 49.0), (24.0, 96.0)))))
-      val pts = cust(s, d).select(
-        (col("c_custkey") % 97).cast("double").as("px"),
-        (expr("c_custkey div 97") % 97).cast("double").as("py"))
-      graft.geo.Geo.tagPoints(pts, polys, col("px"), col("py"))
-        .groupBy(col("poly")).agg(count(lit(1)).as("n_points"))
-    }),
-    "geo_polygon_concave" -> ((s, d) => {
-      // NON-convex feature (an L-shape) via even-odd ray casting — the
-      // general simple-polygon case the reference reads from shapefiles
-      // (geo/PolygonSet.java); the convex half-plane test cannot
-      // express it. Same deterministic integer point grid.
-      val polys = graft.geo.Geo.polygonSet(s, Seq(
-        ("lshape", Seq((0.0, 0.0), (48.0, 0.0), (48.0, 24.0), (24.0, 24.0),
-          (24.0, 96.0), (0.0, 96.0))),
-        ("east", Seq((49.0, 0.0), (96.0, 0.0), (96.0, 96.0), (49.0, 96.0)))))
-      val pts = cust(s, d).select(
-        (col("c_custkey") % 97).cast("double").as("px"),
-        (expr("c_custkey div 97") % 97).cast("double").as("py"))
-      graft.geo.Geo.tagPoints(pts, polys, col("px"), col("py"), convex = false)
-        .groupBy(col("poly")).agg(count(lit(1)).as("n_points"))
-    }),
-    "geo_shapefile_tag" -> ((s, d) => {
-      // the reference's actual ingestion path (geo/PolygonSet.java:20-27
-      // loads .shp feature sets + names): REAL shapefile bytes — written
-      // then parsed via the public ESRI/dBASE formats, no GIS library —
-      // feeding the same broadcast ray-cast containment as the inline
-      // polygon queries. Same features/grid as geo_polygon_tag, so the
-      // oracle is the identical region predicate. Fixture bytes are
-      // written once per JVM (shpTagBase) — the query times parse+join.
-      val polys = graft.geo.Shapefile.readPolygons(s, shpTagBase)
-      val pts = cust(s, d).select(
-        (col("c_custkey") % 97).cast("double").as("px"),
-        (expr("c_custkey div 97") % 97).cast("double").as("py"))
-      graft.geo.Geo.tagPoints(pts, polys, col("px"), col("py"), convex = false)
-        .groupBy(col("poly")).agg(count(lit(1)).as("n_points"))
-    }),
-    "geo_polygon_holes" -> ((s, d) => {
-      // polygons WITH HOLES: a donut (outer square + interior hole ring,
-      // one multi-part shapefile RECORD — the numParts>1 case) and a
-      // solid square, through the full real-bytes path: write .shp/.dbf,
-      // parse rings grouped, even-odd containment ACROSS rings. A point
-      // inside the hole is outside the feature; hole boundary is inside.
-      // Axis-aligned rings on the integer grid keep the oracle exact.
-      // Fixture bytes written once per JVM (shpHolesBase) — the query
-      // times ring parse + tag join, not temp-file IO.
-      val feats = graft.geo.Shapefile.readFeatures(s, shpHolesBase)
-      val pts = cust(s, d).select(
-        (col("c_custkey") % 97).cast("double").as("px"),
-        (expr("c_custkey div 97") % 97).cast("double").as("py"))
-      graft.geo.Geo.tagPointsRings(pts, feats, col("px"), col("py"))
-        .groupBy(col("poly")).agg(count(lit(1)).as("n_points"))
-    }),
-    "asof_join" -> ((s, d) => {
-      val e = ev(s, d)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      // pre-dedup right rows sharing (user_id, ts) — keep the max-id view
-      // — so the asof pick is deterministic in BOTH engines (DuckDB's
-      // ASOF leaves the within-ts choice unspecified)
-      val views = e.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"),
-          expr("max_by(value, event_id)").as("view_value"))
-      AsOfJoin.asofJoin(clicks, views, Seq("user_id"), "ts",
-          Seq("view_id", "view_value"))
-        .select(col("event_id"), col("user_id"), col("view_id"), col("view_value"))
-    })
-  )
-
-  // ────────────────────────────────────────────────────────────────────
-  /** Shared CTE chain for the audio-fingerprint oracles: G.711 µ-law
-    * expansion of each text byte (the same expression as the
-    * multimodal_ulaw_features oracle), framed into 256-sample windows
-    * with zero-crossing counts and energy magnitudes. `tail` is either
-    * a SELECT over the `frames` CTE or an additional CTE + SELECT
-    * (starting with ","). */
-  private def audioFrameSql(tail: String,
-      source: String = "documents"): String = {
-    val u = "xor(ascii(substr(text, CAST(k AS INT), 1)), 255)"
-    val mant = s"(((($u) & 15) << 3) + 132) << ((($u) & 112) >> 4)"
-    val ulaw = s"CASE WHEN (($u) & 128) != 0 THEN 132 - ($mant) ELSE ($mant) - 132 END"
-    s"""WITH p AS (SELECT doc_id, length(text) AS len,
-       |  list_transform(range(1, length(text) + 1), k -> $ulaw) AS pcm
-       |  FROM $source),
-       |f AS (SELECT doc_id, len, pcm,
-       |  unnest(range(0, (len + 255) // 256)) AS fi FROM p),
-       |frames AS (SELECT doc_id, CAST(fi AS INT) AS frame_idx,
-       |  CAST(LEAST(len, 256 * (fi + 1)) - 256 * fi AS INT) AS n_samples,
-       |  CAST(COALESCE(list_sum(list_transform(
-       |    range(256 * fi + 1, LEAST(len, 256 * (fi + 1))),
-       |    k -> CASE WHEN (pcm[CAST(k AS INT)] < 0) != (pcm[CAST(k + 1 AS INT)] < 0)
-       |         THEN 1 ELSE 0 END)), 0) AS INT) AS zero_crossings,
-       |  CAST(length(bin(CAST(list_sum(list_transform(
-       |    pcm[CAST(256 * fi + 1 AS INT):CAST(LEAST(len, 256 * (fi + 1)) AS INT)],
-       |    x -> abs(x))) AS BIGINT))) AS INT) AS energy_mag,
-       |  CAST(COALESCE(list_sum(list_transform(
-       |    range(256 * fi + 1, LEAST(len, 256 * (fi + 1)) + 1),
-       |    k -> pcm[CAST(k AS INT)] * (k - 256 * fi))), 0) AS BIGINT) AS checksum
-       |  FROM f)
-       |$tail""".stripMargin
-  }
-
-  /** Shared CTE for the video frame-sample oracles: the mdat body is
-    * the text bytes, framed at 1024-byte stride, every 2nd frame
-    * sampled, position-weighted byte checksums. */
-  private def videoFrameSql(tail: String, source: String): String =
-    s"""WITH f AS (SELECT doc_id, length(text) AS len, text,
-       |  unnest(range(0, (length(text) + 1023) // 1024)) AS fi FROM $source),
-       |frames AS (SELECT doc_id, CAST(fi AS INT) AS frame_idx,
-       |  CAST(LEAST(len, 1024 * (fi + 1)) - 1024 * fi AS INT) AS n_bytes,
-       |  CAST(list_sum(list_transform(
-       |    range(1024 * fi + 1, LEAST(len, 1024 * (fi + 1)) + 1),
-       |    k -> ascii(substr(text, CAST(k AS INT), 1)) * (k - 1024 * fi)))
-       |    AS BIGINT) AS checksum
-       |  FROM f WHERE fi % 2 = 0)
-       |$tail""".stripMargin
-
-  // decoded-pixel video frames: w=8, h=6 (48 px), frame count
-  // nf = 3 + len mod 3, pixel p of frame f = text byte
-  // (f + p·⌈len/48⌉) mod len (each frame spans the whole text, samples
-  // wrap past the end), every 2nd frame sampled, frame checksum =
-  // modular rolling hash over the decoded 3-channel stream — mirrors
-  // Multimodal.syntheticMotionVideo + videoFramePixelSignatures
-  private def videoPixelFrameSql(tail: String, source: String): String =
-    s"""WITH f AS (SELECT doc_id, length(text) AS len, text,
-       |  GREATEST(1, (length(text) + 47) // 48) AS step,
-       |  unnest(range(0, 3 + length(text) % 3)) AS fi FROM $source),
-       |frames AS (SELECT doc_id, CAST(fi AS INT) AS frame_idx,
-       |  CAST(8 AS INT) AS w, CAST(6 AS INT) AS h,
-       |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |    list_transform(range(0, 144),
-       |      k -> ascii(substr(text, CAST((fi + (k // 3) * step) % len AS INT) + 1, 1)))),
-       |    (acc, x) -> (acc * 1000003 + x) % 2147483647) AS BIGINT) AS checksum
-       |  FROM f WHERE fi % 2 = 0)
-       |$tail""".stripMargin
-
-  private val sumQty  = "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)"
-  private val sumPrice = "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)"
-  /** Connected components over the exact-Jaccard pair set (the same pair
-    * semantics as shingleCte) via DuckDB's recursive CTE: enumerate
-    * reachability, take the min reachable id per node — the ground truth
-    * for Dedup.connectedComponents' min-label propagation.
-    */
-  // Greedy longest-match subword counts per doc (recursive CTE): tokens
-  // per DISTINCT word (tokenization is context-free within a word), then
-  // joined back to word occurrences. The vocab literal is interpolated
-  // from the SAME Scala constant the engine compiles into its trie, so
-  // engine and oracle cannot desynchronize. Prefix with WITH RECURSIVE.
-  private def bpeCte(src: String = "documents"): String = {
-    val vlist = graft.functions.BpeTokenizer.vocabSqlList()
-    s"""words AS (SELECT doc_id, u.w FROM $src,
-       |  UNNEST(string_split(lower(text), ' ')) AS u(w) WHERE len(u.w) > 0),
-       |uw AS (SELECT DISTINCT w FROM words),
-       |step AS (
-       |  SELECT w, CAST(1 AS INTEGER) AS pos, CAST(0 AS BIGINT) AS n FROM uw
-       |  UNION ALL
-       |  SELECT w, CAST(pos + GREATEST(m, 1) AS INTEGER), n + 1 FROM (
-       |    SELECT w, pos, n,
-       |      list_max(list_transform($vlist,
-       |        v -> CASE WHEN substr(w, pos, len(v)) = v THEN len(v) ELSE 0 END)) AS m
-       |    FROM step WHERE pos <= len(w)) s),
-       |wt AS (SELECT w, max(n) AS toks FROM step GROUP BY w),
-       |bpe AS (SELECT doc_id, count(*) AS n_words,
-       |  CAST(sum(wt.toks) AS BIGINT) AS n_tokens_bpe
-       |  FROM words JOIN wt USING (w) GROUP BY 1)""".stripMargin
-  }
-
-  // Token-ID variant of bpeCte: the recursive step ALSO records which
-  // entry matched (argmax length is unique — equal-length matching
-  // entries at one position would be the same string) or the
-  // byte-fallback id V + codepoint. `docids` flattens per-doc id
-  // sequences in word order. Prefix with WITH RECURSIVE.
-  private def bpeIdsCte(src: String = "documents"): String = {
-    val vlist = graft.functions.BpeTokenizer.vocabSqlList()
-    val v = graft.functions.BpeTokenizer.defaultVocab.size
-    s"""wl AS (SELECT doc_id, source, string_split(lower(text), ' ') AS ws
-       |  FROM $src),
-       |words AS (SELECT doc_id, source, i AS wi, ws[CAST(i AS INT)] AS w
-       |  FROM wl, UNNEST(range(1, len(ws) + 1)) AS t(i)
-       |  WHERE len(ws[CAST(i AS INT)]) > 0),
-       |uw AS (SELECT DISTINCT w FROM words),
-       |step AS (
-       |  SELECT w, CAST(1 AS INTEGER) AS pos, CAST([] AS BIGINT[]) AS ids FROM uw
-       |  UNION ALL
-       |  SELECT w, CAST(pos + GREATEST(m, 1) AS INTEGER),
-       |    list_append(ids, CASE WHEN m > 0 THEN
-       |      list_max(list_transform(range(1, $v + 1), i ->
-       |        CASE WHEN len(($vlist)[CAST(i AS INT)]) = m
-       |          AND substr(w, pos, m) = ($vlist)[CAST(i AS INT)]
-       |        THEN i - 1 ELSE -1 END))
-       |      ELSE $v + ascii(substr(w, pos, 1)) END)
-       |  FROM (SELECT w, pos, ids,
-       |    CAST(list_max(list_transform($vlist,
-       |      v -> CASE WHEN substr(w, pos, len(v)) = v THEN len(v) ELSE 0 END)) AS INT) AS m
-       |    FROM step WHERE pos <= len(w)) s),
-       |wt AS (SELECT w, arg_max(ids, pos) AS ids FROM step GROUP BY w),
-       |docids AS (SELECT words.doc_id,
-       |  flatten(list(wt.ids ORDER BY words.wi)) AS all_ids
-       |  FROM words JOIN wt USING (w) GROUP BY words.doc_id)""".stripMargin
-  }
-
-  /** Boilerplate-strip replay shared by the stored-list and folded-state
-    * serve paths (the folded (sum,sum,min) census ≡ the whole-corpus
-    * census, so both serve the same frozen line list). */
-  private lazy val stripBoilerplateSql: String =
-    s"""WITH dnl AS (${Fixtures.nl.sql}),
-      |l0 AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM dnl),
-      |e0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ls)),
-      |    i -> {'p': i, 'line': ls[i]})) AS u FROM l0),
-      |e AS (SELECT doc_id, u.p AS p, u.line AS line FROM e0),
-      |dup AS (SELECT line FROM e WHERE line <> ''
-      |  GROUP BY line HAVING count(DISTINCT doc_id) >= 2),
-      |kept AS (SELECT e.doc_id, e.p, e.line FROM e LEFT JOIN dup
-      |    ON e.line = dup.line
-      |  WHERE dup.line IS NULL),
-      |r AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-      |    string_agg(line, chr(10) ORDER BY p) AS clean_text
-      |  FROM kept GROUP BY doc_id)
-      |SELECT l0.doc_id, CAST(len(ls) AS BIGINT) AS n_lines,
-      |  COALESCE(n_kept, 0) AS n_kept,
-      |  COALESCE(clean_text, '') AS clean_text
-      |FROM l0 LEFT JOIN r USING (doc_id)""".stripMargin
-
-  /** The CDC feed staging both cdc_* oracles share — the same
-    * key-modulo log [[cdcFeed]] builds on the Spark side. */
-  private lazy val cdcFeedSql: String =
-    """WITH feed AS (
-      |  SELECT o_orderkey, o_custkey, 'U1' AS o_orderstatus, o_totalprice,
-      |    o_orderdate, o_orderpriority, 'U' AS op, CAST(1 AS BIGINT) AS seq
-      |  FROM orders WHERE o_orderkey % 7 = 1
-      |  UNION ALL
-      |  SELECT o_orderkey, o_custkey, 'U2', o_totalprice + 10.0,
-      |    o_orderdate, o_orderpriority, 'U', 2 FROM orders WHERE o_orderkey % 7 = 1
-      |  UNION ALL
-      |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-      |    o_orderdate, o_orderpriority, 'D', 1 FROM orders WHERE o_orderkey % 7 = 2
-      |  UNION ALL
-      |  SELECT o_orderkey + 10000000, o_custkey, 'N', o_totalprice,
-      |    o_orderdate, o_orderpriority, 'I', 1 FROM orders WHERE o_orderkey % 7 = 3)""".stripMargin
-
-  /** Survivor-election replay shared by the full-mine and folded-map
-    * serve paths (fold ≡ full-mine is the artifact contract). */
-  private lazy val survivorsSql: String = ccCte +
-    """
-      |SELECT doc_id FROM documents
-      |WHERE doc_id NOT IN (SELECT node FROM cc WHERE cluster_id <> node)""".stripMargin
-
-  private val ccCte =
-    """WITH RECURSIVE w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-      |sh AS (SELECT DISTINCT doc_id, shingle FROM
-      |  (SELECT doc_id, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingle
-      |   FROM w WHERE len(ws) >= 3)),
-      |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-      |shared AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2),
-      |p AS (SELECT id_a, id_b
-      |  FROM shared JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-      |  WHERE round(shared / (sa.sz + sb.sz - shared), 4) >= 0.5),
-      |e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
-      |reach(node, r) AS (
-      |  SELECT src, src FROM e
-      |  UNION
-      |  SELECT e2.src, reach.r FROM e e2 JOIN reach ON e2.dst = reach.node),
-      |cc AS (SELECT node, min(r) AS cluster_id FROM reach GROUP BY node)""".stripMargin
-
-  private def shingleCteFor(src: String): String =
-    s"""w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM $src),
-      |sh AS (SELECT DISTINCT doc_id, shingle FROM
-      |  (SELECT doc_id, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingle
-      |   FROM w WHERE len(ws) >= 3)),
-      |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-      |shared AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2)
-      |SELECT id_a, id_b, round(shared / (sa.sz + sb.sz - shared), 4) AS jaccard
-      |FROM shared JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-      |WHERE round(shared / (sa.sz + sb.sz - shared), 4) >= 0.5""".stripMargin
-  private val shingleCte = "WITH " + shingleCteFor("documents")
-  private lazy val shingleCteMl =
-    s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),\n" + shingleCteFor("dml")
-
-  /** Inference-lattice oracle, generated per column: None → Integer →
-    * Double → Date → String. The Date rung mirrors guessSchema's
-    * single-format-per-column rule as least() over per-format failure
-    * counts (DuckDB try_strptime ↔ Spark try_to_timestamp).
-    */
-  private val schemaInferOracle: String = {
-    val cols = Seq("p_partkey" -> "c1", "p_retailprice" -> "c2",
-      "p_name" -> "c3", "p_pseudo_date" -> "c4")
-    val fmts = Seq("%Y-%m-%d", "%Y/%m/%d", "%m/%d/%Y",
-      "%Y-%m-%d %H:%M:%S", "%Y-%m-%dT%H:%M:%S")
-    def block(name: String, c: String): String = {
-      val p = s"$c IS NOT NULL AND $c <> ''"
-      val nds = fmts.zipWithIndex.map { case (f, i) =>
-        s"count(CASE WHEN $p AND try_strptime($c, '$f') IS NULL THEN 1 END) AS nd$i"
-      }.mkString(", ")
-      s"SELECT '$name' AS col_name, " +
-        s"count(CASE WHEN $p THEN 1 END) AS n, " +
-        s"count(CASE WHEN $p AND NOT regexp_matches($c, '^-?\\d{1,18}$$') THEN 1 END) AS notint, " +
-        s"count(CASE WHEN $p AND NOT regexp_matches($c, '^-?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$$') THEN 1 END) AS notdbl, " +
-        s"$nds FROM s"
-    }
-    val blocks = cols.map { case (n, c) => block(n, c) }.mkString("\n  UNION ALL ")
-    s"""WITH s AS (SELECT CAST(p_partkey AS VARCHAR) AS c1,
-       |  CAST(p_retailprice AS VARCHAR) AS c2, CAST(p_name AS VARCHAR) AS c3,
-       |  strftime(DATE '1992-01-01' + CAST(p_partkey % 2000 AS INT), '%Y-%m-%d') AS c4
-       |  FROM part),
-       |k AS (
-       |  $blocks)
-       |SELECT col_name, CASE WHEN n = 0 THEN 'None' WHEN notint = 0 THEN 'Integer'
-       |  WHEN notdbl = 0 THEN 'Double'
-       |  WHEN least(nd0, nd1, nd2, nd3, nd4) = 0 THEN 'Date'
-       |  ELSE 'String' END AS kind FROM k""".stripMargin
-  }
-
-  /** Generated oracle for ann_lsh_topk: the declared query pins planes=4
-    * (seed 0, dim 64), so the hyperplane family is a FIXED md5 function
-    * and the whole serve replays in SQL. Each plane's projection unrolls
-    * to the identical computation FloatVecDot runs — CAST(f AS DOUBLE) *
-    * exact-double-coefficient products summed left-assoc in ascending
-    * index order (float×float→double is exact; the adds round the same
-    * way in both engines) — and the bucket is the same strict dot>0 sign
-    * word. Candidates (bucket equality), exclusion, cosine ranking and
-    * tie-break then follow the ann_topk oracle pattern verbatim.
-    */
-  private def annLshTopkOracleSql: String = {
-    def coefLit(p: Int, d: Int): String = {
-      // identical derivation to Similarity.lshBucket's coef (seed 0)
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$p:$d".getBytes("UTF-8"))
-      val x = java.nio.ByteBuffer.wrap(md).getInt(0)
-      val f = x.toFloat / Int.MaxValue.toFloat
-      // exact decimal expansion of the float's double value — parses back
-      // to the bit-identical double in any engine
-      "(" + new java.math.BigDecimal(f.toDouble).toPlainString + ")"
-    }
-    def dotSql(p: Int): String =
-      (0 until 64).map(d =>
-        s"CAST(embedding[${d + 1}] AS DOUBLE) * ${coefLit(p, d)}")
-        .mkString(" + ")
-    val bucketSql = (0 until 4).map(p =>
-      s"(CASE WHEN ${dotSql(p)} > 0 THEN ${1L << p} ELSE 0 END)")
-      .mkString("(", " + ", ")")
-    s"""WITH bkt AS (SELECT vec_id, embedding, $bucketSql AS bucket FROM embeddings)
-       |SELECT query_id, rank, neighbor_id, cos FROM (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS cos,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY a.vec_id
-       |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS INT) AS rank
-       |  FROM bkt a JOIN bkt b ON b.bucket = a.bucket AND b.vec_id <> a.vec_id
-       |  WHERE a.vec_id IN (0, 1, 2, 3, 4))
-       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Generated oracles for the PQ serve paths (ann_pq_topk flat,
-    * ann_ivfpq_topk probed) — the ann_lsh_topk template at one remove:
-    * the TRAINED quantizer (deterministic per corpus; run-to-run bit
-    * equality property-gated) is rendered as exact-decimal SQL literal
-    * tables, and the entire serve is replayed independently in DuckDB:
-    *
-    *  - l2 normalization with the engine's exact float semantics
-    *    (double ascending squares → sqrt → double divide → REAL cast);
-    *  - per-subspace code assignment: argmin over ‖c‖² − 2·⟨x_j, c⟩
-    *    with `list_reduce`'s no-init ascending left fold matching
-    *    PqEncode's double accumulation, ties to the lower code;
-    *  - coarse-cell assignment and cosine cell probing (ivfpq):
-    *    1 − s/(‖x‖·‖c‖), top-nprobe by (score desc, cell asc);
-    *  - ADC lookup tables T[j][c] = ⟨q_j, codebook_j[c]⟩, the per-
-    *    neighbor score as the ascending-j fold of its code lookups;
-    *  - the refine·k shortlist by (adc desc, neighbor asc) and the
-    *    exact-cosine re-rank of the shortlist on the normalized
-    *    vectors, round-4 display.
-    *
-    * Float×float→double products are exact and both engines round the
-    * ascending double adds identically, so every argmin/ordering input
-    * is bit-equal — the decisions replay, not just the final floats.
-    * Rendered only when the session holds the quantizer ([[graft.ann.
-    * PqIndex.lastSide]]); Verify runs queries before dumping, so the
-    * normal path always renders.
-    */
-  private def pqServeOracles: Map[String, String] = {
-    val main = (if (graft.ann.PqIndex.sideConflict) None
-      else graft.ann.PqIndex.lastSide) match {
-      case None => Map.empty[String, String]
-      case Some((cbs, cents)) =>
-        val (flat, probed) = renderPqServeSql(cbs, cents)
-        Map("ann_pq_topk" -> flat, "ann_ivfpq_topk" -> probed)
-    }
-    // the folded-index serve renders from ITS OWN stash — the folded
-    // quantizer trains on the shard union and need not be bit-equal
-    // to the single-table build's (same decline-on-conflict rule)
-    val folded = (if (graft.ann.PqIndex.foldedConflict) None
-      else graft.ann.PqIndex.lastFoldedSide) match {
-      case None => Map.empty[String, String]
-      case Some((cbs, cents)) =>
-        Map("ann_pq_topk_folded" -> renderPqServeSql(cbs, cents)._2)
-    }
-    main ++ folded
-  }
-
-  /** The compaction sink dir of this session's `sink_compaction_plan`
-    * run. The sink is deleted when the JVM exits, before any DuckDB
-    * compare can read it, so the oracle carries the on-disk listing
-    * (names and sizes, read off the directory when the oracle is
-    * rendered, not taken from the plan) and replays the offset binning
-    * over it. */
-  @volatile private[graft] var compactionSinkDir: Option[String] = None
-
-  /** Where `sink_compaction_plan` writes: one temp dir per JVM, outside
-    * the artifact root, so runs from another checkout on the host can
-    * never rewrite the files between a run and its oracle. Every run
-    * overwrites it (repeated runs leak nothing); removed at JVM exit. */
-  private lazy val compactionSink: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_compaction_")
-    sys.addShutdownHook(graft.engine.Artifacts.deleteRecursively(root.toFile))
-    root.resolve("sink").toString
-  }
-
-  private def compactionOracle: Map[String, String] =
-    compactionSinkDir match {
-      case None => Map.empty
-      case Some(dir) =>
-        def ls(f: java.io.File) = Option(f.listFiles).toSeq.flatten
-        val files = for {
-          p <- ls(new java.io.File(dir))
-          if p.isDirectory && p.getName.startsWith("lang=")
-          f <- ls(p)
-          if f.isFile && f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith(".")
-        } yield s"('${p.getName}', '${f.getName}', ${f.length})"
-        require(files.nonEmpty, s"compaction sink $dir holds no parquet files")
-        Map("sink_compaction_plan" ->
-          s"""WITH p AS (SELECT part_dir, file, CAST(bytes AS BIGINT) AS bytes
-             |  FROM (VALUES ${files.mkString(", ")}) AS t(part_dir, file, bytes)),
-             |c AS (SELECT part_dir, file, bytes,
-             |    COALESCE(SUM(bytes) OVER (PARTITION BY part_dir
-             |      ORDER BY file ROWS BETWEEN UNBOUNDED PRECEDING
-             |      AND 1 PRECEDING), 0) AS cumb FROM p)
-             |SELECT part_dir, file, bytes,
-             |  CAST(cumb // 8192 AS BIGINT) AS bin FROM c""".stripMargin)
-    }
-
-  /** (flat, probed) serve-replay SQL for one PQ side-table set. */
-  private def renderPqServeSql(cbs: Array[Array[Array[Float]]],
-      cents: Array[(Array[Float], Int)]): (String, String) = {
-        val m = cbs.length                  // 8 subspaces
-        val d = cbs(0)(0).length            // 8 dims per subspace
-        def lit(f: Float): String =
-          new java.math.BigDecimal(f.toDouble).toPlainString
-        val cbRows = (for (j <- cbs.indices; k <- cbs(j).indices) yield
-          s"($j, $k, [${cbs(j)(k).map(lit).mkString(", ")}])")
-          .mkString(",\n    ")
-        val centRows = cents.map { case (c, i) =>
-          s"($i, [${c.map(lit).mkString(", ")}])"
-        }.mkString(",\n    ")
-        def fold(expr: String) = s"list_reduce($expr, (a, b) -> a + b)"
-        // shared prologue: codebook literals, normalization, subspace
-        // slices, code assignment, ADC tables
-        val prologue =
-          s"""cbf AS (SELECT j, k, CAST(cent AS DOUBLE[]) AS cent FROM (VALUES
-             |    $cbRows) AS t(j, k, cent)),
-             |cb2 AS (SELECT j, k, cent,
-             |    ${fold("list_transform(cent, c -> c * c)")} AS c2 FROM cbf),
-             |nv AS (SELECT vec_id, embedding,
-             |    sqrt(${fold("list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")}) AS nn
-             |  FROM embeddings),
-             |ne AS (SELECT vec_id,
-             |    [CAST(CAST(x AS DOUBLE) / nn AS REAL) for x in embedding] AS e
-             |  FROM nv WHERE nn > 0),
-             |sub AS (SELECT vec_id, j,
-             |    [CAST(e[j * $d + t] AS DOUBLE) for t in range(1, ${d + 1})] AS sv
-             |  FROM ne, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-             |codes AS (SELECT vec_id, j, k AS code FROM (
-             |    SELECT s.vec_id, s.j, c.k,
-             |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.j
-             |        ORDER BY c.c2 - 2 * ${fold(s"list_transform(range(1, ${d + 1}), t -> s.sv[t] * c.cent[t])")} ASC,
-             |          c.k ASC) AS rn
-             |    FROM sub s JOIN cb2 c ON c.j = s.j) WHERE rn = 1),
-             |qs AS (SELECT vec_id AS query_id, e AS qe FROM ne
-             |  WHERE vec_id IN (0, 1, 2, 3, 4)),
-             |qsub AS (SELECT query_id, j,
-             |    [CAST(qe[j * $d + t] AS DOUBLE) for t in range(1, ${d + 1})] AS qv
-             |  FROM qs, UNNEST(generate_series(0, ${m - 1})) AS u(j)),
-             |tabs AS (SELECT q.query_id, q.j, c.k,
-             |    ${fold(s"list_transform(range(1, ${d + 1}), t -> q.qv[t] * c.cent[t])")} AS tv
-             |  FROM qsub q JOIN cbf c ON c.j = q.j)""".stripMargin
-        // epilogue: ADC scoring over an (optionally cell-filtered)
-        // neighbor set, refine·k shortlist, exact re-rank — probeJoin
-        // is "" for the flat scan or the probed-cell semi-filter
-        def epilogue(probeJoin: String) =
-          s"""adc AS (SELECT t.query_id, cd.vec_id AS neighbor_id,
-             |    ${fold("list(t.tv ORDER BY t.j)")} AS adc
-             |  FROM codes cd JOIN tabs t ON t.j = cd.j AND t.k = cd.code
-             |  $probeJoin
-             |  WHERE cd.vec_id <> t.query_id
-             |  GROUP BY t.query_id, cd.vec_id),
-             |cand AS (SELECT query_id, neighbor_id FROM (
-             |    SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
-             |      PARTITION BY query_id ORDER BY adc DESC, neighbor_id ASC) AS rn
-             |    FROM adc) WHERE rn <= 80),
-             |rr AS (SELECT c.query_id, c.neighbor_id,
-             |    ${fold("list_transform(range(1, 65), t -> CAST(q.qe[t] AS DOUBLE) * CAST(n.e[t] AS DOUBLE))")} AS cos
-             |  FROM cand c JOIN qs q ON q.query_id = c.query_id
-             |    JOIN ne n ON n.vec_id = c.neighbor_id)
-             |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos FROM (
-             |  SELECT query_id, neighbor_id, cos,
-             |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-             |      ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank FROM rr)
-             |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
-        val flat = s"WITH $prologue,\n${epilogue("")}"
-        // ivfpq: coarse-cell assignment (PqEncode's 1 − s/(‖x‖·‖c‖)
-        // argmin, ties to the lower cell) + per-query top-6 cosine
-        // probe, then the same ADC/shortlist/re-rank restricted to
-        // neighbors in probed cells
-        val probed =
-          s"""WITH $prologue,
-             |ct AS (SELECT ci, CAST(cvec AS DOUBLE[]) AS cvec FROM (VALUES
-             |    $centRows) AS t(ci, cvec)),
-             |ct2 AS (SELECT ci, cvec,
-             |    sqrt(${fold("list_transform(cvec, c -> c * c)")}) AS cn FROM ct),
-             |vn AS (SELECT vec_id,
-             |    sqrt(${fold("list_transform(e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")}) AS nn2, e
-             |  FROM ne),
-             |cell AS (SELECT vec_id, ci AS cell FROM (
-             |    SELECT v.vec_id, c.ci, ROW_NUMBER() OVER (
-             |      PARTITION BY v.vec_id ORDER BY
-             |        1 - ${fold("list_transform(range(1, 65), t -> CAST(v.e[t] AS DOUBLE) * c.cvec[t])")} / (v.nn2 * c.cn) ASC,
-             |        c.ci ASC) AS rn
-             |    FROM vn v CROSS JOIN ct2 c) WHERE rn = 1),
-             |probe AS (SELECT query_id, ci FROM (
-             |    SELECT q.query_id, c.ci, ROW_NUMBER() OVER (
-             |      PARTITION BY q.query_id ORDER BY
-             |        ${fold("list_transform(range(1, 65), t -> CAST(q.qe[t] AS DOUBLE) * c.cvec[t])")} / c.cn DESC,
-             |        c.ci ASC) AS rn
-             |    FROM qs q CROSS JOIN ct2 c) WHERE rn <= 6),
-             |${epilogue(
-               """JOIN cell ce ON ce.vec_id = cd.vec_id
-                 |  JOIN probe p ON p.query_id = t.query_id AND p.ci = ce.cell""".stripMargin)}""".stripMargin
-        (flat, probed)
-  }
-
-  /** Generated oracle for ann_ivf_topk — same template, simpler model:
-    * the coarse centroids of the RAW-vector k-means (ivfTopK trains on
-    * unnormalized embeddings) pinned as literals; cell assignment and
-    * probing replay nearestCells' 1 − cos(v, c) struct-sort (d asc,
-    * cell asc — DuckDB and Spark agree NaN sorts greatest), scoring
-    * replays cosine = dot/(‖a‖·‖b‖) with the ascending double folds.
-    */
-  private def ivfServeOracle: Map[String, String] =
-    (if (graft.ann.Similarity.ivfConflict) None
-     else graft.ann.Similarity.lastIvfCentroids) match {
-      case None => Map.empty
-      case Some(cents) =>
-        def lit(f: Float): String =
-          new java.math.BigDecimal(f.toDouble).toPlainString
-        def fold(expr: String) = s"list_reduce($expr, (a, b) -> a + b)"
-        val centRows = cents.map { case (c, i) =>
-          s"($i, [${c.map(lit).mkString(", ")}])"
-        }.mkString(",\n    ")
-        val sql =
-          s"""WITH ct AS (SELECT ci, CAST(cvec AS DOUBLE[]) AS cvec FROM (VALUES
-             |    $centRows) AS t(ci, cvec)),
-             |ct2 AS (SELECT ci, cvec,
-             |    sqrt(${fold("list_transform(cvec, c -> c * c)")}) AS cn FROM ct),
-             |vv AS (SELECT vec_id, embedding,
-             |    sqrt(${fold("list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")}) AS vn
-             |  FROM embeddings),
-             |dist AS (SELECT v.vec_id, c.ci,
-             |    1 - ${fold("list_transform(range(1, 65), t -> CAST(v.embedding[t] AS DOUBLE) * c.cvec[t])")} / (v.vn * c.cn) AS d
-             |  FROM vv v CROSS JOIN ct2 c),
-             |cell AS (SELECT vec_id, ci AS cell FROM (
-             |    SELECT vec_id, ci, ROW_NUMBER() OVER (PARTITION BY vec_id
-             |      ORDER BY d ASC, ci ASC) AS rn FROM dist) WHERE rn = 1),
-             |qc AS (SELECT vec_id AS query_id, ci AS q_cell FROM (
-             |    SELECT vec_id, ci, ROW_NUMBER() OVER (PARTITION BY vec_id
-             |      ORDER BY d ASC, ci ASC) AS rn FROM dist
-             |    WHERE vec_id IN (0, 1, 2, 3, 4)) WHERE rn <= 4),
-             |sc AS (SELECT q.query_id, ce.vec_id AS neighbor_id,
-             |    ${fold("list_transform(range(1, 65), t -> CAST(a.embedding[t] AS DOUBLE) * CAST(v.embedding[t] AS DOUBLE))")} / (a.vn * v.vn) AS cos
-             |  FROM cell ce JOIN qc q ON q.q_cell = ce.cell
-             |    JOIN vv v ON v.vec_id = ce.vec_id
-             |    JOIN vv a ON a.vec_id = q.query_id
-             |  WHERE ce.vec_id <> q.query_id)
-             |SELECT query_id, rank, neighbor_id, round(cos, 4) AS cos FROM (
-             |  SELECT query_id, neighbor_id, cos,
-             |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-             |      ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank FROM sc)
-             |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
-        Map("ann_ivf_topk" -> sql)
-    }
-
-  /** Generated oracle for the embedding-LSH near-dup queries: replays
-    * hyperplane banding VALUE-EXACTLY at the sf0.01 verify geometry.
-    * The coefficient matrix is the engine's own
-    * `HyperplaneBandKeys.planeMatrix` rendered as exact decimal
-    * doubles; projections replay FloatVecDot's ascending left-assoc
-    * double adds via `list_reduce` (its no-init fold IS the ascending
-    * left fold); the bucket is the same strict dot>0 bit word. Candidate
-    * membership (bucket equality in ≥1 band, deduped), the exact cosine
-    * verify, and the round-4 θ filter then mirror the engine — round-4
-    * cosine parity between `list_cosine_similarity` and the engine's
-    * cosinePre is already proven by the ORACLED all-pairs twin
-    * (`dedup_embedding`). Geometry (planes/bands) is the auto-tune
-    * answer AT VERIFY SCALE, computed here from the same formulas; the
-    * hot-bucket valve cannot fire at 500-row scale (bucket ≤ corpus ≪
-    * maxBucket), so the replay omits it.
-    */
-  private def embeddingLshOracleSql(nEstimate: Long, targetBucket: Long,
-      theta: Double, planted: Boolean): String = {
-    val planes = graft.ann.Similarity.autoPlanes(nEstimate, targetBucket)
-    val bands = graft.ann.Similarity.autoBands(planes, theta)
-    val m = graft.functions.HyperplaneBandKeys.planeMatrix(64, planes, bands)
-    val coefList = m.map(f =>
-      new java.math.BigDecimal(f.toDouble).toPlainString)
-      .mkString("[", ", ", "]")
-    val emb2 =
-      if (planted)
-        """SELECT vec_id, embedding FROM embeddings
-          |  UNION ALL
-          |  SELECT vec_id + 10000000, list_transform(embedding,
-          |      (x, i) -> CASE WHEN (i - 1) % 4 = 0
-          |        THEN CAST(0.0 AS FLOAT) ELSE x END)
-          |  FROM embeddings WHERE vec_id % 25 = 3""".stripMargin
-      else "SELECT vec_id, embedding FROM embeddings"
-    s"""WITH coefs AS (SELECT CAST($coefList AS DOUBLE[]) AS m),
-       |emb2 AS ($emb2),
-       |bb AS (
-       |  SELECT e.vec_id, t.b AS band,
-       |    list_reduce(list_transform(range(1, ${planes + 1}), p ->
-       |      CASE WHEN list_reduce(list_transform(range(1, 65), d ->
-       |          CAST(e.embedding[CAST(d AS INT)] AS DOUBLE)
-       |            * c.m[CAST(((t.b - 1) * $planes + (p - 1)) * 64 + d AS INT)]),
-       |        (a, x) -> a + x) > 0
-       |      THEN CAST(1 AS BIGINT) << CAST(p - 1 AS INT) ELSE CAST(0 AS BIGINT) END),
-       |      (a, x) -> a + x) AS bucket
-       |  FROM emb2 e CROSS JOIN coefs c, UNNEST(range(1, ${bands + 1})) t(b)),
-       |cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-       |  FROM bb x JOIN bb y ON x.band = y.band AND x.bucket = y.bucket
-       |    AND x.vec_id < y.vec_id)
-       |SELECT c.id_a, c.id_b,
-       |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-       |    CAST(b.embedding AS DOUBLE[])), 4) AS cos
-       |FROM cand c JOIN emb2 a ON a.vec_id = c.id_a
-       |  JOIN emb2 b ON b.vec_id = c.id_b
-       |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-       |  CAST(b.embedding AS DOUBLE[])), 4) >= $theta""".stripMargin
-  }
-
-  /** Static oracles plus the PQ serve-path oracles, which are rendered
-    * at dump time from the session's trained quantizer (see
-    * [[pqServeOracles]]) — Verify runs every query (building the index
-    * and stashing its side tables) before it dumps oracle_sql.json, so
-    * the render always sees the model the dumped results used.
-    */
-  def oracleSql: Map[String, String] =
-    oracleSqlStatic ++ pqServeOracles ++ ivfServeOracle ++ compactionOracle ++
-      // the always-train observability twins compute exactly what their
-      // artifact-served originals compute (deterministic integer models:
-      // stored-model serve ≡ fresh training), so they share the oracle
-      // replay verbatim
-      Map(
-        "text_lm_backoff_mine" -> oracleSqlStatic("text_lm_backoff"),
-        "text_ccnet_buckets_mine" -> oracleSqlStatic("text_ccnet_buckets"))
-
-  private def oracleSqlStatic: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus, count(*) AS cnt, $sumQty AS sum_qty,
-         |$sumPrice AS sum_price,
-         |$sumPrice / count(l_extendedprice) AS avg_price,
-         |min(l_discount) AS min_disc, max(l_discount) AS max_disc
-         |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2 LIMIT 10""".stripMargin,
-    "f_range" ->
-      "SELECT * FROM lineitem WHERE l_extendedprice >= 1000.0 AND l_extendedprice <= 5000.0",
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1995-03-15' AND l_shipdate > TIMESTAMP '1995-03-15'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""".stripMargin,
-    "q5_local_supplier" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM region JOIN nation ON r_regionkey = n_regionkey
-        |JOIN supplier ON n_nationkey = s_nationkey
-        |JOIN lineitem ON s_suppkey = l_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1994-01-01' AND o_orderdate < TIMESTAMP '1995-01-01'
-        |GROUP BY 1 ORDER BY revenue DESC, n_name""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q17_small_qty_revenue" ->
-      """SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS DOUBLE) AS avg_yearly,
-        |  count(*) AS n_rows
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#1'
-        |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
-        |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
-    "q18_large_volume_customer" ->
-      """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-        |  sum(l_quantity) AS total_qty
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1, 2, 3, 4, 5
-        |HAVING sum(l_quantity) > 250.0
-        |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey LIMIT 100""".stripMargin,
-    "q21_waiting_supplier" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM lineitem l1
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |JOIN supplier ON s_suppkey = l1.l_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |  AND n_name = 'NATION_3'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |      AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-    "q2_min_cost_supplier" ->
-      """SELECT DISTINCT s_name, p_partkey, l_extendedprice AS min_price
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |JOIN supplier ON s_suppkey = l_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'EUROPE' AND p_size = 15
-        |  AND l_extendedprice = (SELECT min(l2.l_extendedprice)
-        |                         FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
-        |ORDER BY s_name, p_partkey""".stripMargin,
-    "q7_volume_shipping" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE ((n1.n_name = 'NATION_10' AND n2.n_name = 'NATION_12')
-        |    OR (n1.n_name = 'NATION_12' AND n2.n_name = 'NATION_10'))
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
-        |  AND l_returnflag = 'R'
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q14_promo_effect" ->
-      """SELECT (100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |    ELSE 0 END) AS DOUBLE))
-        |  / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS promo_pct,
-        |  count(*) AS n_rows
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-09-01' AND l_shipdate < TIMESTAMP '1996-10-01'""".stripMargin,
-    "q16_supplier_part_cnt" ->
-      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand <> 'Brand#5' AND p_type <> 'MEDIUM' AND p_size IN (1, 4, 7)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    // q9 proxy: profit = revenue − p_retailprice·qty (cost side proxied —
-    // no partsupp in the test data), exact decimal sum per (nation, year)
-    "q9_profit_by_nation" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |         - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%red%'
-        |GROUP BY 1, 2""".stripMargin,
-    // q11 proxy: per-part value vs a fraction of the global total (the
-    // scalar-subquery HAVING); values summed exactly as decimals, the
-    // threshold comparison done in double on both engines
-    "q11_important_parts" ->
-      """WITH v AS (
-        |  SELECT l_partkey,
-        |    SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS val
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_partkey AS p_partkey, CAST(val AS DOUBLE) AS value
-        |FROM v
-        |WHERE CAST(val AS DOUBLE) > (SELECT CAST(SUM(val) AS DOUBLE) FROM v) * 0.001""".stripMargin,
-    "q19_disjunctive_revenue" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_rows
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q20_part_promotion" ->
-      """SELECT s_suppkey, s_name, s_acctbal FROM supplier
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey FROM lineitem JOIN part ON p_partkey = l_partkey
-        |  WHERE p_name LIKE 'red%'
-        |    AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  GROUP BY l_suppkey HAVING sum(l_quantity) > 300.0)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q8_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-        |  CAST(SUM(CASE WHEN n1.n_name = 'NATION_3'
-        |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |    ELSE 0 END) AS DOUBLE)
-        |  / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS mkt_share
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |JOIN region ON n2.n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |WHERE r_name = 'AMERICA' AND p_type = 'ECONOMY'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q12_late_lines" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_returnflag IN ('A', 'N')
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND l_shipdate > o_orderdate + INTERVAL 90 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q13_customer_distribution" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY 1)
-        |GROUP BY 1 ORDER BY custdist DESC, c_count DESC LIMIT 10""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_rev
-        |FROM supplier JOIN rev ON s_suppkey = l_suppkey
-        |WHERE total_rev = (SELECT max(total_rev) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q22_global_sales_opportunity" ->
-      """SELECT c_nationkey AS nation, count(*) AS numcust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM customer c
-        |WHERE c_acctbal > (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-        |                   FROM customer WHERE c_acctbal > 0.0)
-        |  AND c_nationkey IN (0, 3, 10, 11, 16, 17, 19)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_orderpriority = '1-URGENT')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "f_comparison" -> "SELECT * FROM lineitem WHERE l_quantity > 45.0",
-    "f_string_contains" -> "SELECT * FROM orders WHERE contains(o_orderpriority, 'URGENT')",
-    "f_regex" -> "SELECT * FROM part WHERE regexp_matches(p_name, '^(red|blue) .*t$')",
-    "f_isin" -> "SELECT * FROM lineitem WHERE l_returnflag IN ('A', 'R')",
-    "f_rowseek" ->
-      "SELECT * FROM lineitem WHERE (l_returnflag, l_linestatus) >= ('N', 'O')",
-    "f_ci_complement" ->
-      "SELECT * FROM part WHERE NOT contains(lower(p_brand), 'brand#1')",
-    "f_any_column" ->
-      """SELECT * FROM orders
-        |WHERE contains(o_orderpriority, 'F') OR contains(o_orderstatus, 'F')""".stripMargin,
-    "interval_compare" ->
-      """SELECT l_orderkey, l_linenumber FROM lineitem
-        |WHERE LEAST(l_discount, l_tax) <= 0.05 AND GREATEST(l_discount, l_tax) >= 0.05""".stripMargin,
-    "f_compound" ->
-      """SELECT * FROM lineitem
-        |WHERE (l_quantity > 30.0 AND l_discount <= 0.05) OR NOT (l_returnflag = 'N')""".stripMargin,
-    "nextk_basic" ->
-      """SELECT o_orderpriority, o_orderstatus, count(*) AS cnt FROM orders
-        |GROUP BY 1, 2 ORDER BY 1, 2 LIMIT 8""".stripMargin,
-    "f_udf_predicate" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_quantity >= 10 AND l_quantity < 30""".stripMargin,
-    "dynamic_udf" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CASE WHEN l_quantity = 0.0 THEN 0.0
-        |  ELSE floor(l_extendedprice / l_quantity * 10000.0) / 10000.0 END AS ppu
-        |FROM lineitem WHERE l_quantity >= 10.0 AND l_quantity < 30.0""".stripMargin,
-    "dynamic_udf_js" ->
-      s"""SELECT CASE WHEN l_returnflag = 'R' THEN 'ret:' || lower(l_linestatus)
-        |  WHEN l_quantity * l_extendedprice >= 1000000 THEN 'big'
-        |  ELSE 'v' || CAST(CAST(FLOOR(l_quantity * l_extendedprice / 100000) AS BIGINT) AS VARCHAR)
-        |  END AS tag,
-        |count(*) AS n, $sumQty AS sum_qty
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "dynamic_filter_js" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
-        |WHERE l_quantity >= 45 AND l_returnflag LIKE 'A%'""".stripMargin,
-    // loop-free SQL reformulations of the full-program JS gestures:
-    // the per-character for loop becomes an indexed list fold; the
-    // digit-sum while loop becomes the casting-out-nines identity; the
-    // recursive digit count becomes a varchar length
-    "dynamic_udf_js_loop" ->
-      """SELECT CAST(SUM(acc) AS BIGINT) AS acc_sum, count(*) AS n_docs FROM (
-        |  SELECT COALESCE(list_sum(list_transform(range(1, length(text)+1),
-        |      j -> j * ascii(substring(text, j, 1)))), 0) % 1000003 AS acc
-        |  FROM documents WHERE length(text) = strlen(text))""".stripMargin,
-    // the object/try-catch gesture replayed: the catch arm is the
-    // length>6 CASE branch, the finally-set key makes Object.keys 3
-    "dynamic_udf_js_closure" ->
-      """SELECT doc_id,
-        |  CAST(CAST(list_sum(list_transform(string_split(text, ' '),
-        |      w -> length(w))) AS BIGINT) AS VARCHAR)
-        |  || ':' || CAST(CAST(list_max(list_transform(string_split(text, ' '),
-        |      w -> length(w))) AS BIGINT) AS VARCHAR)
-        |  || ':' || CAST(len(list_filter(string_split(text, ' '),
-        |      w -> length(w) > 4)) AS VARCHAR) AS closure_sig
-        |FROM documents""".stripMargin,
-    "dynamic_udf_js_object" ->
-      """SELECT doc_id,
-        |  CAST(list_sum(list_transform(string_split(text, ' '),
-        |      w -> CASE WHEN length(w) > 6 THEN length(w) % 7
-        |           ELSE length(w) END)) * 10000
-        |    + len(list_filter(string_split(text, ' '),
-        |        w -> length(w) > 6)) * 10 + 3 AS DOUBLE) AS score
-        |FROM documents""".stripMargin,
-    // the prototype-accumulator replay: n words, doubled length sum via
-    // the shared prototype method, floor mean on the integer grid, and
-    // the chained second instance contributes the constant 36
-    "dynamic_udf_js_proto" ->
-      """SELECT doc_id, CAST(
-        |  len(string_split(text, ' ')) * 1000000
-        |  + ((CAST(list_sum(list_transform(string_split(text, ' '),
-        |      w -> length(w) * 2)) AS BIGINT) * 10)
-        |    // len(string_split(text, ' '))) * 100
-        |  + 36 AS DOUBLE) AS proto_sig
-        |FROM documents""".stripMargin,
-    // the `this`-accumulator replay: n words, length total floored at
-    // 100 by the setter, the getter's floor(total*10/n) — all integer
-    "dynamic_udf_js_this" ->
-      """SELECT doc_id, CAST(
-        |  len(string_split(text, ' ')) * 100000
-        |  + GREATEST(CAST(list_sum(list_transform(string_split(text, ' '),
-        |      w -> length(w))) AS BIGINT), 100) * 100
-        |  + ((GREATEST(CAST(list_sum(list_transform(string_split(text, ' '),
-        |      w -> length(w))) AS BIGINT), 100) * 10)
-        |    // len(string_split(text, ' '))) % 100
-        |  AS DOUBLE) AS this_sig
-        |FROM documents""".stripMargin,
-    "dynamic_filter_js_loop" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus FROM orders
-        |WHERE o_orderkey % 9 = 0""".stripMargin,
-    "dynamic_udf_js_func" ->
-      """SELECT length(CAST(o_orderkey AS VARCHAR))*100 + o_orderkey % 7 AS code,
-        |count(*) AS n FROM orders GROUP BY 1""".stripMargin,
-    "dynamic_udf_js_array" ->
-      """SELECT CAST(list_max(list_transform(string_split(text, ' '),
-        |    w -> length(w))) AS BIGINT) AS best, count(*) AS n
-        |  FROM documents WHERE length(text) = strlen(text) GROUP BY 1""".stripMargin,
-    // regex gesture replayed with RE2: `search` becomes the
-    // suffix-length trick (leftmost-match semantics agree), `match`
-    // groups become regexp_extract, /g replace becomes the 'g' option
-    "dynamic_udf_js_regex" ->
-      """SELECT doc_id,
-        |  (CASE WHEN regexp_matches(text, '^([a-z]+) ([a-z]+)')
-        |    THEN regexp_extract(text, '^([a-z]+) ([a-z]+)', 1) || '_' ||
-        |         regexp_extract(text, '^([a-z]+) ([a-z]+)', 2)
-        |    ELSE 'none' END)
-        |  || ':' || CAST(length(regexp_replace(text, '[aeiou]', '', 'g')) AS VARCHAR)
-        |  || ':' || (CASE WHEN regexp_matches(text, 'qu') THEN '1' ELSE '0' END)
-        |  || ':' || CAST(CASE WHEN regexp_matches(text, ' [a-z]{7} ')
-        |      THEN length(text) - length(regexp_extract(text, '( [a-z]{7} .*)$'))
-        |      ELSE -1 END AS VARCHAR) AS tag
-        |FROM documents WHERE length(text) = strlen(text)""".stripMargin,
-    // Date runtime replayed: getters = year/month/dayofweek (DuckDB
-    // dayofweek is Sunday=0, exactly JS getDay), Date-minus-Date =
-    // whole-day diff (midnight-aligned timestamps make floor exact)
-    "dynamic_udf_js_date" ->
-      """SELECT CAST(year(o_orderdate)*100 + month(o_orderdate) AS BIGINT) AS ym,
-        |  count(*) AS n,
-        |  CAST(SUM(date_diff('day', TIMESTAMP '1995-01-01', o_orderdate) * 7
-        |    + dayofweek(o_orderdate)) AS BIGINT) AS wk_sum
-        |FROM orders GROUP BY 1""".stripMargin,
-    "greenplum_dump_roundtrip" ->
-      s"""SELECT l_returnflag, count(*) AS n, $sumQty AS sum_qty,
-        |min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok
-        |FROM lineitem WHERE l_orderkey % 10 = 0 GROUP BY 1""".stripMargin,
-    "dynamic_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem
-        |WHERE l_quantity >= 45.0 AND l_returnflag IN ('A', 'R')""".stripMargin,
-    "text_chunks" ->
-      """SELECT doc_id, CAST((start - 1) // 64 AS INT) AS chunk_idx,
-        |  CAST(start AS INT) AS chunk_start,
-        |  substring(text, CAST(start AS INT), 128) AS chunk_text,
-        |  CAST(length(substring(text, CAST(start AS INT), 128)) AS INT) AS chunk_len
-        |FROM (SELECT doc_id, text, unnest(generate_series(1, length(text), 64)) AS start
-        |  FROM documents WHERE length(text) > 0)""".stripMargin,
-    "text_rouge_dedup" -> rougeSql(Fixtures.instPool, 24, 7000L),
-    "dsir_select" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents),
-        |big AS (
-        |  SELECT doc_id, lang, (lang = 'en') AS is_t,
-        |    ws[i] AS w1, ws[i + 1] AS w2
-        |  FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 2),
-        |m AS (
-        |  SELECT w1, w2,
-        |    length(bin(count(*) FILTER (WHERE is_t) + 1))
-        |      - length(bin(count(*) + 1)) AS wgt
-        |  FROM big GROUP BY 1, 2),
-        |w AS (SELECT doc_id, lang, count(*) AS n_bigrams,
-        |    CAST(SUM(wgt) AS BIGINT) AS dsir_weight,
-        |    (CAST(SUM(wgt) AS BIGINT) * 10000 // count(*)) / 10000.0
-        |      AS mean_weight
-        |  FROM big JOIN m USING (w1, w2) GROUP BY 1, 2)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY mean_weight DESC, doc_id)
-        |    AS BIGINT) AS rank,
-        |  doc_id, lang, n_bigrams, dsir_weight, mean_weight
-        |FROM w ORDER BY mean_weight DESC, doc_id LIMIT 32""".stripMargin,
-    "source_diversity" ->
-      """WITH toks AS (
-        |  SELECT source, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents),
-        |big AS (
-        |  SELECT source, ws[i] AS w1, ws[i + 1] AS w2
-        |  FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 2),
-        |pc AS (SELECT source, w1, w2, count(*) AS c FROM big GROUP BY 1, 2, 3)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_distinct,
-        |  CAST(SUM(c) AS BIGINT) AS n_total,
-        |  (CAST(count(*) AS BIGINT) * 10000 // CAST(SUM(c) AS BIGINT)) / 10000.0
-        |    AS distinct_ratio
-        |FROM pc GROUP BY 1""".stripMargin,
-    // the fold is associative+commutative, so shard-split training
-    // equals batch counting over the seed — the oracle is the batch
-    "langid_model_incremental" -> langidModelTrainSql,
-    // folded-artifact form: same equality claim, same batch oracle —
-    // any fold error (double-counted shard, stale stored state, lost
-    // sum key) breaks the hash
-    "langid_model_folded" -> langidModelTrainSql,
-    "seq_len_histogram" ->
-      """WITH t AS (SELECT source,
-        |    CAST(len(list_filter(string_split(lower(text), ' '),
-        |      w -> w <> '')) AS BIGINT) AS n_toks FROM documents),
-        |b AS (SELECT source, n_toks,
-        |    CAST(length(bin(n_toks)) AS BIGINT) AS bucket_bits
-        |  FROM t WHERE n_toks > 0)
-        |SELECT source, bucket_bits, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-        |  CAST(1 AS BIGINT) << CAST(bucket_bits - 1 AS INTEGER) AS bucket_lo,
-        |  (CAST(1 AS BIGINT) << CAST(bucket_bits - 1 AS INTEGER)) * 2 - 1
-        |    AS bucket_hi
-        |FROM b GROUP BY 1, 2""".stripMargin,
-    "fim_transform" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |b AS (SELECT doc_id, ws, CAST(len(ws) AS BIGINT) AS n,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_fim'), 1, 15))
-        |      AS BIGINT) % 2 = 0 AS is_fim,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_a'), 1, 15))
-        |      AS BIGINT) % (CAST(len(ws) AS BIGINT) + 1) AS a,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_b'), 1, 15))
-        |      AS BIGINT) % (CAST(len(ws) AS BIGINT) + 1) AS bb
-        |  FROM t WHERE len(ws) > 0),
-        |c AS (SELECT doc_id, ws, n, is_fim,
-        |    least(a, bb) AS s1, greatest(a, bb) AS s2 FROM b)
-        |SELECT doc_id, n AS n_tokens, is_fim,
-        |  CASE WHEN is_fim THEN s1 END AS s1,
-        |  CASE WHEN is_fim THEN s2 END AS s2,
-        |  CASE WHEN is_fim THEN '<fim_prefix> ' ||
-        |      COALESCE(array_to_string(ws[1:CAST(s1 AS INTEGER)], ' '), '')
-        |      || ' <fim_suffix> ' ||
-        |      COALESCE(array_to_string(ws[CAST(s2 + 1 AS INTEGER):CAST(n AS INTEGER)], ' '), '')
-        |      || ' <fim_middle> ' ||
-        |      COALESCE(array_to_string(ws[CAST(s1 + 1 AS INTEGER):CAST(s2 AS INTEGER)], ' '), '')
-        |    ELSE array_to_string(ws, ' ') END AS out_text
-        |FROM c""".stripMargin,
-    "span_corruption" ->
-      """WITH t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents),
-        |p AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS pos, ws
-        |  FROM t WHERE len(ws) > 0),
-        |f AS (SELECT doc_id, pos, ws[CAST(pos AS INTEGER)] AS tok,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_' ||
-        |      CAST(pos AS VARCHAR)), 1, 15)) AS BIGINT) % 20 < 3 AS flag
-        |  FROM p),
-        |w1 AS (SELECT *, flag AND NOT coalesce(
-        |    lag(flag) OVER (PARTITION BY doc_id ORDER BY pos), false)
-        |    AS span_start FROM f),
-        |w2 AS (SELECT *, SUM(CASE WHEN span_start THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS span_id
-        |  FROM w1),
-        |pc AS (SELECT doc_id, pos, flag, span_start,
-        |    CASE WHEN NOT flag THEN tok
-        |      WHEN span_start THEN '<extra_id_' || CAST(span_id - 1 AS VARCHAR) || '>'
-        |      END AS ip,
-        |    CASE WHEN flag THEN
-        |      CASE WHEN span_start THEN '<extra_id_' ||
-        |        CAST(span_id - 1 AS VARCHAR) || '> ' || tok ELSE tok END
-        |      END AS tp
-        |  FROM w2)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) FILTER (WHERE flag) AS BIGINT) AS n_masked,
-        |  CAST(count(*) FILTER (WHERE span_start) AS BIGINT) AS n_spans,
-        |  COALESCE(string_agg(ip, ' ' ORDER BY pos), '') AS input_text,
-        |  CASE WHEN string_agg(tp, ' ' ORDER BY pos) IS NULL THEN ''
-        |    ELSE string_agg(tp, ' ' ORDER BY pos) || ' ' END
-        |    || '<extra_id_' ||
-        |    CAST(count(*) FILTER (WHERE span_start) AS VARCHAR) || '>'
-        |    AS target_text
-        |FROM pc GROUP BY doc_id""".stripMargin,
-    "chunk_sliding" ->
-      """WITH t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents),
-        |c AS (SELECT doc_id, ws,
-        |    unnest(generate_series(1, len(ws), 16)) AS start
-        |  FROM t WHERE len(ws) > 0)
-        |SELECT doc_id, CAST((start - 1) // 16 AS BIGINT) AS chunk_idx,
-        |  CAST(start AS BIGINT) AS tok_start,
-        |  CAST(len(list_slice(ws, CAST(start AS INTEGER),
-        |    CAST(least(start + 31, len(ws)) AS INTEGER))) AS BIGINT) AS n_toks,
-        |  array_to_string(list_slice(ws, CAST(start AS INTEGER),
-        |    CAST(least(start + 31, len(ws)) AS INTEGER)), ' ') AS chunk_text
-        |FROM c""".stripMargin,
-    "code_quality_rules" ->
-      s"""WITH dc AS MATERIALIZED (${Fixtures.code.sql}),
-         |t AS (SELECT doc_id, text, string_split(text, chr(10)) AS ls FROM dc),
-         |m AS (SELECT doc_id,
-         |    CAST(len(ls) AS BIGINT) AS n_lines,
-         |    CAST(list_max(list_transform(ls, l -> length(l))) AS BIGINT)
-         |      AS max_line_len,
-         |    CAST((length(text) - len(ls) + 1) * 10000 // len(ls) AS DOUBLE)
-         |      / CAST(10000 AS DOUBLE) AS mean_line_len,
-         |    CAST(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g')) * 10000
-         |      // greatest(length(text), 1) AS DOUBLE) / CAST(10000 AS DOUBLE)
-         |      AS alnum_frac,
-         |    CAST(len(list_filter(ls, l -> left(trim(l), 1) = '#'
-         |      OR left(trim(l), 2) = '//')) * 10000 // len(ls) AS DOUBLE)
-         |      / CAST(10000 AS DOUBLE) AS comment_share,
-         |    (contains(lower(array_to_string(ls[1:5], chr(10))), 'auto-generated')
-         |      OR contains(lower(array_to_string(ls[1:5], chr(10))), 'do not edit'))
-         |      AS has_autogen
-         |  FROM t)
-         |SELECT *, max_line_len <= 120 AND mean_line_len <= 60.0
-         |  AND alnum_frac >= 0.25 AND comment_share <= 0.8
-         |  AND NOT has_autogen AS passes FROM m""".stripMargin,
-    // NB langid: grams → per-lang counts (model) → smoothed bit-length
-    // scores → argmax with lang-asc ties; DuckDB range(1, n) is empty
-    // when n ≤ 1, so the short-doc guard is implicit on this side
-    "text_langid_nb" ->
-      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
-         |g AS MATERIALIZED (SELECT doc_id, lang,
-         |    (lang = 'en' OR source = 'planted_ml') AS seed,
-         |    unnest([substr(lower(text), CAST(i AS INTEGER), 2)
-         |      for i in range(1, length(lower(text)))]) AS g
-         |  FROM dml),
-         |model AS MATERIALIZED (SELECT lang AS lang2, g,
-         |    CAST(count(*) AS BIGINT) AS c FROM g WHERE seed GROUP BY 1, 2),
-         |vv AS (SELECT CAST(count(DISTINCT g) AS BIGINT) AS v FROM model),
-         |den AS (SELECT lang2,
-         |    CAST(length(bin((tot + v) * (tot + v))) AS BIGINT) AS db
-         |  FROM (SELECT lang2, CAST(SUM(c) AS BIGINT) AS tot
-         |    FROM model GROUP BY 1) CROSS JOIN vv),
-         |sc AS (SELECT doc_id, lang, d.lang2 AS lang2,
-         |    CAST(SUM(length(bin((COALESCE(m.c, 0) + 1) * (COALESCE(m.c, 0) + 1)))
-         |      - d.db) AS BIGINT) AS score
-         |  FROM g CROSS JOIN den d
-         |    LEFT JOIN model m ON m.lang2 = d.lang2 AND m.g = g.g
-         |  GROUP BY 1, 2, 3),
-         |best AS (SELECT doc_id, lang, max(score) AS bs FROM sc GROUP BY 1, 2)
-         |SELECT s.doc_id, s.lang, min(s.lang2) AS pred_lang, b.bs AS score,
-         |  s.lang = min(s.lang2) AS label_ok
-         |FROM sc s JOIN best b ON s.doc_id = b.doc_id AND s.score = b.bs
-         |GROUP BY s.doc_id, s.lang, b.bs""".stripMargin,
-    "quality_model_score" ->
-      s"""SELECT doc_id, -1.0 + coalesce(list_sum(
-         |  [${modelVocabSqlCase("x")} for x in string_split(lower(text), ' ')]),
-         |  0.0) AS raw_score
-         |FROM documents""".stripMargin,
-    "dup_passages" ->
-      """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-        |g AS (SELECT doc_id, unnest([array_to_string(ws[i:i+4], ' ') for i in range(1, len(ws)-3)]) AS gram
-        |  FROM w WHERE len(ws) >= 5),
-        |nd AS (SELECT gram FROM (SELECT gram, count(DISTINCT doc_id) AS c FROM g GROUP BY 1) WHERE c >= 2),
-        |per AS (SELECT doc_id, count(*) AS n FROM g JOIN nd USING (gram) GROUP BY 1)
-        |SELECT w.doc_id, CAST(len(ws) - 4 AS BIGINT) AS n_windows,
-        |  coalesce(per.n, 0) AS n_dup_windows,
-        |  CAST(coalesce(per.n, 0) * 10000 // (len(ws) - 4) AS DOUBLE) / CAST(10000 AS DOUBLE) AS dup_frac
-        |FROM w LEFT JOIN per USING (doc_id) WHERE len(ws) >= 5""".stripMargin,
-    "text_remove_dup_spans" ->
-      """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest([i for i in range(1, len(ws)-3)]) AS pos,
-        |    unnest([array_to_string(ws[i:i+4], ' ') for i in range(1, len(ws)-3)]) AS gram
-        |  FROM w WHERE len(ws) >= 5),
-        |d AS (SELECT gram, min(doc_id) AS keeper
-        |  FROM (SELECT gram, doc_id FROM g GROUP BY 1, 2)
-        |  GROUP BY gram HAVING count(*) >= 2),
-        |st AS (SELECT g.doc_id, list(g.pos) AS ps FROM g JOIN d USING (gram)
-        |  WHERE g.doc_id <> d.keeper GROUP BY 1),
-        |k AS (SELECT w.doc_id, ws, coalesce(st.ps, []) AS ps
-        |  FROM w LEFT JOIN st USING (doc_id))
-        |SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-        |  CAST(len(kept) AS BIGINT) AS n_kept,
-        |  coalesce(array_to_string(kept, ' '), '') AS clean_text
-        |FROM (SELECT doc_id, ws,
-        |    list_filter(ws, (t, j) -> len(list_filter(ps, p -> j >= p AND j <= p + 4)) = 0) AS kept
-        |  FROM k)""".stripMargin,
-    "dedup_edit_distance" ->
-      """WITH w AS (SELECT doc_id, lower(text) AS t, string_split(lower(text), ' ') AS ws FROM documents),
-        |g AS (SELECT DISTINCT doc_id, gram FROM (
-        |  SELECT doc_id, unnest([array_to_string(ws[i:i+4], ' ') for i in range(1, len(ws)-3)]) AS gram
-        |  FROM w WHERE len(ws) >= 5)),
-        |p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM g a JOIN g b USING (gram) WHERE a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, CAST(d AS BIGINT) AS edit_dist FROM (
-        |  SELECT id_a, id_b, levenshtein(wa.t, wb.t) AS d
-        |  FROM p JOIN w wa ON wa.doc_id = id_a JOIN w wb ON wb.doc_id = id_b
-        |  WHERE abs(length(wa.t) - length(wb.t)) <= 64)
-        |WHERE d <= 64""".stripMargin,
-    // ml twin: candidates regenerate identically (word 5-grams); the
-    // levenshtein VALUE is byte-based in DuckDB vs codepoint-based in
-    // the engine, so both texts pass through the injective codepoint →
-    // single-ascii-byte translate, under which byte distance equals
-    // the engine's codepoint distance exactly (see mlLevTranslate)
-    "dedup_edit_distance_ml" -> {
-      val (frm, to) = mlLevTranslate
-      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
-        |w AS (SELECT doc_id, lower(text) AS t, string_split(lower(text), ' ') AS ws FROM dml),
-        |g AS (SELECT DISTINCT doc_id, gram FROM (
-        |  SELECT doc_id, unnest([array_to_string(ws[i:i+4], ' ') for i in range(1, len(ws)-3)]) AS gram
-        |  FROM w WHERE len(ws) >= 5)),
-        |p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM g a JOIN g b USING (gram) WHERE a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, CAST(d AS BIGINT) AS edit_dist FROM (
-        |  SELECT id_a, id_b, levenshtein(translate(wa.t, '$frm', '$to'),
-        |    translate(wb.t, '$frm', '$to')) AS d
-        |  FROM p JOIN w wa ON wa.doc_id = id_a JOIN w wb ON wb.doc_id = id_b
-        |  WHERE abs(length(wa.t) - length(wb.t)) <= 64)
-        |WHERE d <= 64""".stripMargin
-    },
-    "dedup_edit_dfcut" ->
-      """WITH w AS (SELECT doc_id, lower(text || ' zq0 zq1 zq2 zq3 zq4') AS t,
-        |  string_split(lower(text || ' zq0 zq1 zq2 zq3 zq4'), ' ') AS ws FROM documents),
-        |g AS (SELECT DISTINCT doc_id, gram FROM (
-        |  SELECT doc_id, unnest([array_to_string(ws[i:i+4], ' ') for i in range(1, len(ws)-3)]) AS gram
-        |  FROM w WHERE len(ws) >= 5)),
-        |ok AS (SELECT gram FROM g GROUP BY gram HAVING count(*) <= 50),
-        |g2 AS (SELECT g.doc_id, g.gram FROM g JOIN ok USING (gram)),
-        |p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM g2 a JOIN g2 b USING (gram) WHERE a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, CAST(d AS BIGINT) AS edit_dist FROM (
-        |  SELECT id_a, id_b, levenshtein(wa.t, wb.t) AS d
-        |  FROM p JOIN w wa ON wa.doc_id = id_a JOIN w wb ON wb.doc_id = id_b
-        |  WHERE abs(length(wa.t) - length(wb.t)) <= 64)
-        |WHERE d <= 64""".stripMargin,
-    "sentence_filter" ->
-      """SELECT doc_id, array_to_string(
-        |  [s for s in string_split(text, '. ') if len(string_split(s, ' ')) >= 4 AND len(s) > 0],
-        |  '. ') AS clean
-        |FROM documents""".stripMargin,
-    "tfidf_topterms" ->
-      """WITH tok AS (SELECT doc_id, source, unnest(string_split(lower(text), ' ')) AS token FROM documents),
-        |tf AS (SELECT source, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |dfq AS (SELECT token, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents),
-        |s AS (SELECT tf.source, tf.token, tf.tf, dfq.df,
-        |    floor(tf.tf * ln(CAST(n.n AS DOUBLE) / dfq.df) * 10000) / 10000 AS tfidf
-        |  FROM tf JOIN dfq USING (token) CROSS JOIN n)
-        |SELECT source, token, tf, df, tfidf, rank FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY source
-        |    ORDER BY tfidf DESC, token) AS INT) AS rank FROM s)
-        |WHERE rank <= 5""".stripMargin,
-    "hist2d_quantiles" ->
-      """SELECT l_returnflag AS b1, l_linestatus AS b2,
-        |round(quantile_cont(l_extendedprice, 0.25), 4) AS q0,
-        |round(quantile_cont(l_extendedprice, 0.5), 4) AS q1,
-        |round(quantile_cont(l_extendedprice, 0.75), 4) AS q2
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-    "interval_data_range" ->
-      """SELECT min(LEAST(l_discount, l_tax)) AS min_lo,
-        |max(GREATEST(l_discount, l_tax)) AS max_hi, count(*) AS present
-        |FROM lineitem""".stripMargin,
-    "ni_threshold" ->
-      "SELECT (count(DISTINCT l_partkey) > 1000) AS exceeds FROM lineitem",
-    "corr_grid" ->
-      """SELECT 'l_quantity:l_discount' AS pair,
-        |  LEAST(CAST(FLOOR((l_quantity - 0.0) / ((50.0 - 0.0) / 5.0)) AS INT), 4) AS bx,
-        |  LEAST(CAST(FLOOR((l_discount - 0.0) / ((0.1 - 0.0) / 5.0)) AS INT), 4) AS by,
-        |  count(*) AS cnt FROM lineitem GROUP BY 2, 3
-        |UNION ALL
-        |SELECT 'l_quantity:l_extendedprice',
-        |  LEAST(CAST(FLOOR((l_quantity - 0.0) / ((50.0 - 0.0) / 5.0)) AS INT), 4),
-        |  LEAST(CAST(FLOOR((l_extendedprice - 0.0) / ((110000.0 - 0.0) / 5.0)) AS INT), 4),
-        |  count(*) FROM lineitem GROUP BY 2, 3
-        |UNION ALL
-        |SELECT 'l_discount:l_extendedprice',
-        |  LEAST(CAST(FLOOR((l_discount - 0.0) / ((0.1 - 0.0) / 5.0)) AS INT), 4),
-        |  LEAST(CAST(FLOOR((l_extendedprice - 0.0) / ((110000.0 - 0.0) / 5.0)) AS INT), 4),
-        |  count(*) FROM lineitem GROUP BY 2, 3""".stripMargin,
-    "nextk_pivot_aggs" ->
-      s"""SELECT l_returnflag, l_linestatus, count(*) AS cnt, $sumQty AS sum_qty,
-         |min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price
-         |FROM lineitem WHERE (l_returnflag, l_linestatus) >= ('N', 'F')
-         |GROUP BY 1, 2 ORDER BY 1, 2 LIMIT 5""".stripMargin,
-    "topk_sort" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 15""".stripMargin,
-    "hist_numeric" ->
-      s"""SELECT $priceBucketSql AS bucket, count(*) AS cnt FROM lineitem
-         |WHERE l_extendedprice >= 0.0 AND l_extendedprice <= 110000.0 GROUP BY 1""".stripMargin,
-    "hist_string_buckets" ->
-      """SELECT CASE WHEN c_mktsegment >= 'M' THEN 3 WHEN c_mktsegment >= 'F' THEN 2
-        |WHEN c_mktsegment >= 'C' THEN 1 ELSE 0 END AS bucket, count(*) AS cnt
-        |FROM customer GROUP BY 1""".stripMargin,
-    "hist_explicit" ->
-      """SELECT CASE
-        |  WHEN l_quantity >= 35.0 AND l_quantity <= 50.0 THEN 3
-        |  WHEN l_quantity >= 15.0 AND l_quantity < 35.0 THEN 2
-        |  WHEN l_quantity >= 5.0 AND l_quantity < 15.0 THEN 1
-        |  WHEN l_quantity >= 0.0 AND l_quantity < 5.0 THEN 0
-        |  ELSE -1 END AS bucket, count(*) AS cnt
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "hist_2d" ->
-      """SELECT LEAST(CAST(FLOOR((l_quantity - 0.0) / ((50.0 - 0.0) / 10.0)) AS INT), 9) AS bx,
-        |LEAST(CAST(FLOOR((l_discount - 0.0) / ((0.1 - 0.0) / 5.0)) AS INT), 4) AS by,
-        |count(*) AS cnt FROM lineitem GROUP BY 1, 2""".stripMargin,
-    "heatmap_singleton" ->
-      """SELECT LEAST(CAST(FLOOR((CAST(p_size AS DOUBLE) - 0.0) / ((50.0 - 0.0) / 10.0)) AS INT), 9) AS bx,
-        |p_brand AS by, count(*) AS cnt,
-        |CASE WHEN count(*) = 1 THEN min(p_partkey) END AS singleton
-        |FROM part GROUP BY 1, 2""".stripMargin,
-    "hist_cdf" ->
-      s"""WITH h AS (SELECT $priceBucketSql AS bucket, count(*) AS cnt FROM lineitem
-         |WHERE l_extendedprice >= 0.0 AND l_extendedprice <= 110000.0 GROUP BY 1)
-         |SELECT bucket, cnt, CAST(SUM(cnt) OVER (ORDER BY bucket) AS BIGINT) AS cdf FROM h""".stripMargin,
-    "bucket_quantiles" ->
-      """SELECT l_returnflag AS bucket, round(quantile_cont(l_extendedprice, 0.25), 4) AS q0,
-        |round(quantile_cont(l_extendedprice, 0.5), 4) AS q1,
-        |round(quantile_cont(l_extendedprice, 0.75), 4) AS q2
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "summary_count" -> "SELECT count(*) AS n_rows FROM lineitem",
-    "stats_basic" ->
-      """SELECT min(l_extendedprice) AS min_v, max(l_extendedprice) AS max_v,
-        |count(l_extendedprice) AS present,
-        |count(CASE WHEN l_extendedprice IS NULL THEN 1 END) AS missing,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(l_extendedprice) AS mean,
-        |round(sqrt(
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(l_extendedprice)
-        |  - (CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(l_extendedprice))
-        |  * (CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(l_extendedprice))), 4) AS stddev
-        |FROM lineitem""".stripMargin,
-    "stats_range_date" ->
-      """SELECT CAST(min(l_shipdate) AS TIMESTAMP) AS min_v, CAST(max(l_shipdate) AS TIMESTAMP) AS max_v,
-        |count(l_shipdate) AS present, count(CASE WHEN l_shipdate IS NULL THEN 1 END) AS missing
-        |FROM lineitem""".stripMargin,
-    "stats_corr" ->
-      """SELECT round(
-        |  (CAST(sxy AS DOUBLE) * n - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-        |  (sqrt(n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
-        |   sqrt(n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 4) AS corr
-        |FROM (SELECT count(*) AS n,
-        |  SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sx,
-        |  SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS sy,
-        |  SUM(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS sxy,
-        |  SUM(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS sxx,
-        |  SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS syy
-        |  FROM lineitem)""".stripMargin,
-    "stats_centroids" ->
-      s"""SELECT l_returnflag, $sumQty / count(l_quantity) AS avg_l_quantity,
-         |$sumPrice / count(l_extendedprice) AS avg_l_extendedprice
-         |FROM lineitem GROUP BY 1""".stripMargin,
-    "distinct_count" -> "SELECT count(DISTINCT l_partkey) AS n_distinct FROM lineitem",
-    "distinct_values" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY 1, 2""".stripMargin,
-    // theta set algebra in the exhaustive regime: k=1024 exceeds every
-    // per-source vocabulary, so the sketch-path answers are EXACT and
-    // DuckDB recomputes the true pairwise overlaps. Jaccard is one
-    // division of exact integer counts — both engines round the same
-    // real quotient identically.
-    "sketch_theta_algebra" ->
-      """WITH toks AS (SELECT DISTINCT source, tok FROM
-        |  (SELECT source, unnest(string_split(lower(text), ' ')) AS tok FROM documents)
-        |  WHERE tok <> ''),
-        |counts AS (SELECT source, count(*) AS n FROM toks GROUP BY source),
-        |common AS (
-        |  SELECT x.source AS sa, y.source AS sb, count(*) AS c
-        |  FROM toks x JOIN toks y ON x.tok = y.tok AND x.source < y.source
-        |  GROUP BY 1, 2)
-        |SELECT ca.source AS source_a, cb.source AS source_b,
-        |  CAST(COALESCE(c.c, 0) AS BIGINT) AS common_tokens,
-        |  CAST(ca.n - COALESCE(c.c, 0) AS BIGINT) AS a_only_tokens,
-        |  CAST(COALESCE(c.c, 0) AS DOUBLE)
-        |    / (ca.n + cb.n - COALESCE(c.c, 0)) AS jaccard
-        |FROM counts ca JOIN counts cb ON ca.source < cb.source
-        |LEFT JOIN common c ON c.sa = ca.source AND c.sb = cb.source
-        |ORDER BY source_a, source_b""".stripMargin,
-    "sketch_heavy_rollup" ->
-      """WITH t AS (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents),
-        |tt AS (SELECT tok FROM t WHERE length(tok) > 0)
-        |SELECT tok, count(*) AS cnt FROM tt GROUP BY 1
-        |HAVING count(*) >= ceil(0.01 * (SELECT count(*) FROM tt))
-        |ORDER BY cnt DESC, tok""".stripMargin,
-    "heavy_exact" ->
-      """SELECT o_orderpriority, count(*) AS cnt FROM orders GROUP BY 1
-        |HAVING count(*) >= ceil(0.05 * (SELECT count(*) FROM orders))
-        |ORDER BY cnt DESC, o_orderpriority""".stripMargin,
-    "heavy_mg" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS cnt FROM lineitem GROUP BY 1, 2
-        |HAVING count(*) >= ceil(0.05 * (SELECT count(*) FROM lineitem))
-        |ORDER BY cnt DESC, l_returnflag, l_linestatus""".stripMargin,
-    "exact_freq" ->
-      """SELECT c.p AS o_orderpriority, c.s AS o_orderstatus, COALESCE(g.cnt, 0) AS cnt
-        |FROM (VALUES ('1-URGENT','F'), ('5-LOW','O'), ('3-MEDIUM','Z')) c(p, s)
-        |LEFT JOIN (SELECT o_orderpriority, o_orderstatus, count(*) AS cnt
-        |  FROM orders GROUP BY 1, 2) g
-        |ON c.p = g.o_orderpriority AND c.s = g.o_orderstatus""".stripMargin,
-    // Count-Min at the declared geometry is EXACT: 5 distinct keys in a
-    // width-2000 × depth-5 sketch — an estimate inflates only if another
-    // key collides in ALL 5 depth rows. The exact-regime pin lives in
-    // PropertySpec (est == exact per key), which would break on any
-    // hashing change BEFORE this oracle could silently drift.
-    "cms_freq" ->
-      """SELECT o_orderpriority, count(*) AS est_count
-        |FROM orders GROUP BY 1""".stripMargin,
-    "quantiles_exact" ->
-      """SELECT round(quantile_cont(l_extendedprice, 0.25), 4) AS q25,
-        |round(quantile_cont(l_extendedprice, 0.5), 4) AS q50,
-        |round(quantile_cont(l_extendedprice, 0.75), 4) AS q75 FROM lineitem""".stripMargin,
-    "string_boundaries" ->
-      """SELECT CAST(tile AS INT) AS tile, max(c_name) AS boundary FROM
-        |(SELECT c_name, ntile(8) OVER (ORDER BY c_name) AS tile FROM
-        |  (SELECT DISTINCT c_name FROM customer WHERE c_name IS NOT NULL))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "setop_union_view" ->
-      "SELECT * FROM orders WHERE o_orderpriority = '1-URGENT' OR o_totalprice > 400000.0",
-    "setop_intersect_view" ->
-      "SELECT * FROM orders WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 200000.0",
-    "setop_minus_view" ->
-      "SELECT * FROM orders WHERE o_orderpriority = '1-URGENT' AND NOT (o_totalprice > 200000.0)",
-    "setop_except" ->
-      """SELECT c_custkey AS custkey FROM customer
-        |EXCEPT SELECT o_custkey AS custkey FROM orders""".stripMargin,
-    // row-identity set algebra over two views of the same base: the
-    // membership predicate composes; DUPLICATE-VALUED projected rows are
-    // preserved one-per-physical-row (bag, not set)
-    "setop_union_dups" ->
-      """SELECT o_custkey, o_orderstatus FROM orders
-        |WHERE o_totalprice > 200000.0 OR o_orderpriority = '1-URGENT'""".stripMargin,
-    "setop_intersect_dups" ->
-      """SELECT o_custkey, o_orderstatus FROM orders
-        |WHERE o_totalprice > 200000.0 AND o_orderpriority = '1-URGENT'""".stripMargin,
-    "setop_minus_dups" ->
-      """SELECT o_custkey, o_orderstatus FROM orders
-        |WHERE o_totalprice > 200000.0 AND NOT o_orderpriority = '1-URGENT'""".stripMargin,
-    "set_compare" ->
-      """SELECT o_orderkey, array_to_string(list_sort(list(DISTINCT src)), ',') AS sources FROM
-        |(SELECT o_orderkey, 'urgent' AS src FROM orders WHERE o_orderpriority = '1-URGENT'
-        | UNION ALL
-        | SELECT o_orderkey, 'big' AS src FROM orders WHERE o_totalprice > 300000.0)
-        |GROUP BY 1""".stripMargin,
-    "col_project_rename" ->
-      "SELECT l_orderkey, l_linenumber, l_extendedprice AS price FROM lineitem",
-    "col_convert" ->
-      """SELECT l_orderkey, l_linenumber, CAST(l_quantity AS INT) AS qty_int,
-        |strftime(l_shipdate, '%Y-%m-%d') AS ship_str FROM lineitem""".stripMargin,
-    "col_extract_kv" ->
-      """SELECT event_id, CAST(regexp_extract(props, '"k"\s*:\s*"?([^,}"]*)"?', 1) AS INT) AS k_val
-        |FROM events""".stripMargin,
-    "col_json_path" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k_json
-        |FROM events""".stripMargin,
-    "nextk_desc" ->
-      """SELECT o_orderpriority, o_orderstatus, count(*) AS cnt FROM orders
-        |GROUP BY 1, 2 ORDER BY o_orderpriority DESC, o_orderstatus LIMIT 5""".stripMargin,
-    "col_linear_projection" ->
-      """SELECT p_partkey, 0.5 * p_size + 0.25 * p_retailprice AS proj0,
-        |-1.0 * p_size + 0.125 * p_retailprice AS proj1 FROM part""".stripMargin,
-    "interval_create" ->
-      """SELECT l_orderkey, l_linenumber, LEAST(l_discount, l_tax) AS lo,
-        |GREATEST(l_discount, l_tax) AS hi FROM lineitem""".stripMargin,
-    "interval_range_filter" ->
-      """SELECT l_orderkey, l_linenumber FROM lineitem
-        |WHERE LEAST(l_discount, l_tax) >= 0.02 AND GREATEST(l_discount, l_tax) <= 0.06""".stripMargin,
-    "interval_hist" ->
-      """SELECT bucket, count(*) AS cnt FROM (
-        |  SELECT unnest(generate_series(
-        |    LEAST(CAST(FLOOR((GREATEST(LEAST(l_discount, l_tax), 0.0) - 0.0) / ((0.25 - 0.0) / 10.0)) AS INT), 9),
-        |    LEAST(CAST(FLOOR((LEAST(GREATEST(l_discount, l_tax), 0.25) - 0.0) / ((0.25 - 0.0) / 10.0)) AS INT), 9))) AS bucket
-        |  FROM lineitem
-        |  WHERE NOT (GREATEST(l_discount, l_tax) < 0.0 OR LEAST(l_discount, l_tax) > 0.25))
-        |GROUP BY 1""".stripMargin,
-    "col_date_roundtrip" ->
-      """SELECT l_orderkey, l_linenumber,
-        |strptime(strftime(CAST(l_shipdate AS TIMESTAMP), '%Y-%m-%d'), '%Y-%m-%d') AS ship_day
-        |FROM lineitem""".stripMargin,
-    "col_duration" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CAST(date_diff('day', o_orderdate, l_shipdate) AS INT) AS latency_days,
-        |CAST(date_diff('day', o_orderdate, l_shipdate) AS DOUBLE) * 86400000.0 AS latency_ms
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey""".stripMargin,
-    "join_bucketed_colocated" ->
-      """SELECT o_orderpriority, count(*) AS n_items,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_revenue_by_priority" ->
-      """SELECT o_orderpriority, count(*) AS n_items,
-        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_customers_per_region" ->
-      """SELECT r_name, count(*) AS n_customers,
-        |CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey GROUP BY 1 ORDER BY 1""".stripMargin,
-    "join_semi_parts" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey FROM lineitem
-        |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size = 50)""".stripMargin,
-    "join_anti_customers" ->
-      """SELECT c_custkey FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)""".stripMargin,
-    "range_join_week" ->
-      """SELECT o.o_orderkey, count(*) AS n_shipped,
-        |CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM orders o JOIN lineitem l
-        |  ON l.l_shipdate >= o.o_orderdate
-        | AND l.l_shipdate < o.o_orderdate + INTERVAL 7 DAY
-        |WHERE o.o_orderpriority = '1-URGENT'
-        |  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1996-04-01'
-        |GROUP BY 1""".stripMargin,
-    "join_skew_salted" ->
-      """WITH dim AS (SELECT source, avg(n_chars) AS src_avg
-        |             FROM documents GROUP BY 1)
-        |SELECT d.source, count(*) AS n_above
-        |FROM documents d JOIN dim USING (source)
-        |WHERE d.n_chars > dim.src_avg GROUP BY 1""".stripMargin,
-    "rollup_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
-        |CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-        |count(*) AS cnt,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "cube_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
-        |CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
-        |count(*) AS cnt,
-        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-    "find_pattern" ->
-      """SELECT b.before_cnt, b.at_cnt, b.after_cnt, f.first_p_name, f.first_p_partkey FROM
-        |(SELECT count(CASE WHEN NOT ((p_name, p_partkey) >= ('m', 0)) THEN 1 END) AS before_cnt,
-        |        count(CASE WHEN p_name = 'm' AND p_partkey = 0 THEN 1 END) AS at_cnt,
-        |        count(CASE WHEN (p_name, p_partkey) >= ('m', 0)
-        |          AND NOT (p_name = 'm' AND p_partkey = 0) THEN 1 END) AS after_cnt
-        | FROM part WHERE contains(p_name, 'widget')) b
-        |CROSS JOIN
-        |(SELECT p_name AS first_p_name, p_partkey AS first_p_partkey FROM part
-        | WHERE contains(p_name, 'widget') AND (p_name, p_partkey) >= ('m', 0)
-        | ORDER BY p_name, p_partkey LIMIT 1) f""".stripMargin,
-    "row_at_position" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-        |ORDER BY l_extendedprice, l_orderkey, l_linenumber LIMIT 1 OFFSET 1000""".stripMargin,
-    "contains_row" ->
-      """SELECT (count(CASE WHEN l_orderkey = 1 AND l_linenumber = 1 THEN 1 END) > 0) AS found
-        |FROM lineitem""".stripMargin,
-    "save_roundtrip" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_quantity > 48.0",
-    // footer-vs-data consistency: value counts include nulls (parquet
-    // valueCount semantics), min/max rendered as canonical strings
-    "parquet_footer_stats" ->
-      """SELECT * FROM (
-        |SELECT 'l_orderkey' AS col_name, count(*) AS num_values,
-        |  count(*) - count(l_orderkey) AS null_count,
-        |  CAST(min(l_orderkey) AS VARCHAR) AS min_val,
-        |  CAST(max(l_orderkey) AS VARCHAR) AS max_val FROM lineitem
-        |UNION ALL
-        |SELECT 'l_quantity', count(*), count(*) - count(l_quantity),
-        |  CAST(min(l_quantity) AS VARCHAR), CAST(max(l_quantity) AS VARCHAR)
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'l_returnflag', count(*), count(*) - count(l_returnflag),
-        |  min(l_returnflag), max(l_returnflag) FROM lineitem)
-        |ORDER BY col_name""".stripMargin,
-    "sink_partitioned" ->
-      """SELECT lang, source, count(*) AS cnt, CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-    // zone-map skipping is conservative, so the skipped scan must equal
-    // the full scan of the same range predicate
-    "zonemap_skip" ->
-      """SELECT lang, count(*) AS cnt, CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM documents WHERE doc_id BETWEEN 100 AND 299
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same conservative-skip equality through the STORED folded
-    // manifest: any fold error that loses or widens a zone either
-    // changes the candidate set into dropping matching rows (hash
-    // breaks) or keeps the scan superset (result identical) — the
-    // conservative contract
-    "zonemap_skip_folded" ->
-      """SELECT lang, count(*) AS cnt, CAST(sum(n_chars) AS BIGINT) AS total_chars
-        |FROM documents WHERE doc_id BETWEEN 100 AND 299
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "hist_3d" ->
-      """SELECT LEAST(CAST(FLOOR((l_quantity - 0.0) / ((50.0 - 0.0) / 5.0)) AS INT), 4) AS bx,
-        |LEAST(CAST(FLOOR((l_discount - 0.0) / ((0.1 - 0.0) / 3.0)) AS INT), 2) AS by,
-        |l_returnflag AS bz, count(*) AS cnt FROM lineitem GROUP BY 1, 2, 3""".stripMargin,
-    "hist_4d" ->
-      """SELECT LEAST(CAST(FLOOR((l_quantity - 0.0) / ((50.0 - 0.0) / 5.0)) AS INT), 4) AS bx,
-        |LEAST(CAST(FLOOR((l_discount - 0.0) / ((0.1 - 0.0) / 3.0)) AS INT), 2) AS by,
-        |l_returnflag AS bz, l_linestatus AS bw, count(*) AS cnt
-        |FROM lineitem GROUP BY 1, 2, 3, 4""".stripMargin,
-    "corr_matrix" ->
-      """WITH c AS (SELECT CAST(floor(l_discount*100 + 0.5) AS BIGINT) AS d,
-        |  CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT) AS e,
-        |  CAST(floor(l_quantity*100 + 0.5) AS BIGINT) AS q FROM lineitem),
-        |m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(d AS DECIMAL(20,0))) AS DOUBLE) AS s_d,
-        |  CAST(SUM(CAST(e AS DECIMAL(20,0))) AS DOUBLE) AS s_e,
-        |  CAST(SUM(CAST(q AS DECIMAL(20,0))) AS DOUBLE) AS s_q,
-        |  CAST(SUM(CAST(d*d AS DECIMAL(20,0))) AS DOUBLE) AS p_dd,
-        |  CAST(SUM(CAST(d*e AS DECIMAL(20,0))) AS DOUBLE) AS p_de,
-        |  CAST(SUM(CAST(d*q AS DECIMAL(20,0))) AS DOUBLE) AS p_dq,
-        |  CAST(SUM(CAST(e*e AS DECIMAL(20,0))) AS DOUBLE) AS p_ee,
-        |  CAST(SUM(CAST(e*q AS DECIMAL(20,0))) AS DOUBLE) AS p_eq,
-        |  CAST(SUM(CAST(q*q AS DECIMAL(20,0))) AS DOUBLE) AS p_qq
-        |  FROM c)
-        |SELECT 'l_discount' AS col_a, 'l_extendedprice' AS col_b,
-        |  round((p_de * n - s_d * s_e) / (sqrt(n * p_dd - s_d * s_d) * sqrt(n * p_ee - s_e * s_e)), 4) AS corr FROM m
-        |UNION ALL SELECT 'l_discount', 'l_quantity',
-        |  round((p_dq * n - s_d * s_q) / (sqrt(n * p_dd - s_d * s_d) * sqrt(n * p_qq - s_q * s_q)), 4) FROM m
-        |UNION ALL SELECT 'l_extendedprice', 'l_quantity',
-        |  round((p_eq * n - s_e * s_q) / (sqrt(n * p_ee - s_e * s_e) * sqrt(n * p_qq - s_q * s_q)), 4) FROM m""".stripMargin,
-    // the corr_matrix moments over the md5-membership 20% sample — the
-    // sample set is a pure key function, so the sampled correlation is
-    // value-replayable, not just rows-gated
-    "sample_corr" ->
-      """WITH c AS (SELECT CAST(floor(l_discount*100 + 0.5) AS BIGINT) AS d,
-        |  CAST(floor(l_extendedprice*100 + 0.5) AS BIGINT) AS e,
-        |  CAST(floor(l_quantity*100 + 0.5) AS BIGINT) AS q FROM lineitem
-        |  WHERE CAST(('0x' || substr(md5(
-        |    CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)
-        |    ), 1, 15)) AS BIGINT) % 10000 < 2000),
-        |m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(d AS DECIMAL(20,0))) AS DOUBLE) AS s_d,
-        |  CAST(SUM(CAST(e AS DECIMAL(20,0))) AS DOUBLE) AS s_e,
-        |  CAST(SUM(CAST(q AS DECIMAL(20,0))) AS DOUBLE) AS s_q,
-        |  CAST(SUM(CAST(d*d AS DECIMAL(20,0))) AS DOUBLE) AS p_dd,
-        |  CAST(SUM(CAST(d*e AS DECIMAL(20,0))) AS DOUBLE) AS p_de,
-        |  CAST(SUM(CAST(d*q AS DECIMAL(20,0))) AS DOUBLE) AS p_dq,
-        |  CAST(SUM(CAST(e*e AS DECIMAL(20,0))) AS DOUBLE) AS p_ee,
-        |  CAST(SUM(CAST(e*q AS DECIMAL(20,0))) AS DOUBLE) AS p_eq,
-        |  CAST(SUM(CAST(q*q AS DECIMAL(20,0))) AS DOUBLE) AS p_qq
-        |  FROM c)
-        |SELECT 'l_discount' AS col_a, 'l_extendedprice' AS col_b,
-        |  round((p_de * n - s_d * s_e) / (sqrt(n * p_dd - s_d * s_d) * sqrt(n * p_ee - s_e * s_e)), 4) AS corr FROM m
-        |UNION ALL SELECT 'l_discount', 'l_quantity',
-        |  round((p_dq * n - s_d * s_q) / (sqrt(n * p_dd - s_d * s_d) * sqrt(n * p_qq - s_q * s_q)), 4) FROM m
-        |UNION ALL SELECT 'l_extendedprice', 'l_quantity',
-        |  round((p_eq * n - s_e * s_q) / (sqrt(n * p_ee - s_e * s_e) * sqrt(n * p_qq - s_q * s_q)), 4) FROM m""".stripMargin,
-    "udf_surface" ->
-      """SELECT CASE WHEN l_quantity < 10 THEN 'low' WHEN l_quantity < 30 THEN 'mid'
-        |ELSE 'high' END AS band, count(*) AS cnt FROM lineitem GROUP BY 1""".stripMargin,
-    "dp_quantized_hist" ->
-      """SELECT FLOOR(l_extendedprice / 10000.0) * 10000.0 AS qbucket, count(*) AS cnt
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "dp_quantized_nextk" ->
-      """SELECT q.qvalue, q.cnt, t.rows_scanned FROM (
-        |  SELECT FLOOR(l_extendedprice / 10000.0) * 10000.0 AS qvalue, count(*) AS cnt
-        |  FROM lineitem GROUP BY 1 ORDER BY qvalue LIMIT 8) q
-        |CROSS JOIN (SELECT count(*) AS rows_scanned FROM lineitem) t""".stripMargin,
-    "dp_quantized_quantile" ->
-      """SELECT FLOOR(l_extendedprice / 10000.0) * 10000.0 AS qvalue, l_orderkey, l_linenumber
-        |FROM lineitem ORDER BY qvalue, l_orderkey, l_linenumber LIMIT 1 OFFSET 1000""".stripMargin,
-    // solid-gray JPEG: every DCT coefficient is exactly zero, so the
-    // decoded statistics are encoder-independent constants and the
-    // dims come from the planted id formula — no engine state involved
-    "multimodal_jpeg_features_exact" ->
-      """SELECT doc_id, 'jpeg' AS kind,
-        |  CAST(1 + doc_id % 32 AS INTEGER) AS width,
-        |  CAST(1 + doc_id % 24 AS INTEGER) AS height,
-        |  CAST(128 AS DOUBLE) AS feat0, CAST(16384 AS DOUBLE) AS feat1
-        |FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 8)""".stripMargin,
-    "dp_quantized_hist_str" ->
-      """SELECT CASE WHEN p_name IS NULL OR p_name > 'zzzzzz' THEN NULL
-        |  WHEN p_name = 'zzzzzz' THEN 'zzzzzz'
-        |  WHEN p_name >= 'u' THEN 'u' WHEN p_name >= 'o' THEN 'o'
-        |  WHEN p_name >= 'i' THEN 'i' WHEN p_name >= 'e' THEN 'e'
-        |  WHEN p_name >= 'a' THEN 'a' ELSE NULL END AS qbucket, count(*) AS cnt
-        |FROM part GROUP BY 1""".stripMargin,
-    // Morton spread via binary-magic-numbers, step-by-step CTEs
-    "col_zorder" ->
-      """WITH s0 AS (SELECT event_id, user_id % 65536 AS a, event_id % 65536 AS b FROM events),
-        |s1 AS (SELECT event_id, (a | (a << 8)) & 16711935 AS a, (b | (b << 8)) & 16711935 AS b FROM s0),
-        |s2 AS (SELECT event_id, (a | (a << 4)) & 252645135 AS a, (b | (b << 4)) & 252645135 AS b FROM s1),
-        |s3 AS (SELECT event_id, (a | (a << 2)) & 858993459 AS a, (b | (b << 2)) & 858993459 AS b FROM s2),
-        |s4 AS (SELECT event_id, (a | (a << 1)) & 1431655765 AS a, (b | (b << 1)) & 1431655765 AS b FROM s3)
-        |SELECT event_id, a | (b << 1) AS z FROM s4""".stripMargin,
-    "text_dup_lines" ->
-      """WITH l AS (SELECT doc_id,
-        |    [s for s in string_split(text, '. ') if len(s) > 0] AS ls FROM documents)
-        |SELECT doc_id, len(ls) AS n_lines,
-        |  len(ls) - len(list_distinct(ls)) AS n_dup_lines,
-        |  CAST((len(ls) - len(list_distinct(ls))) * 10000 // len(ls) AS DOUBLE)
-        |    / CAST(10000 AS DOUBLE) AS dup_line_frac
-        |FROM l WHERE len(ls) >= 1""".stripMargin,
-    "hist_time_of_day" ->
-      """SELECT (epoch_ms(ts) % 86400000) // 3600000 AS bucket, count(*) AS cnt
-        |FROM events GROUP BY 1""".stripMargin,
-    "corpus_ngrams" ->
-      """WITH w AS (SELECT string_split(lower(text), ' ') AS ws FROM documents),
-        |g AS (SELECT unnest([array_to_string(ws[i:i+1], ' ') for i in range(1, len(ws))]) AS gram
-        |  FROM w WHERE len(ws) >= 2)
-        |SELECT gram, count(*) AS cnt FROM g GROUP BY 1
-        |ORDER BY cnt DESC, gram LIMIT 20""".stripMargin,
-    "corpus_report" ->
-      """WITH b AS (SELECT source, string_split(lower(text), ' ') AS ws, length(text) AS len
-        |  FROM documents),
-        |a AS (SELECT source, count(*) AS n_docs,
-        |    CAST(SUM(len(ws)) AS BIGINT) AS total_tokens,
-        |    CAST(SUM(len) AS BIGINT) AS total_chars,
-        |    CAST(SUM(CASE WHEN len(ws) < 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_short_docs,
-        |    CAST(SUM(len(ws) - len(list_distinct(ws))) AS BIGINT) AS dup_toks
-        |  FROM b GROUP BY 1)
-        |SELECT source, n_docs, total_tokens, total_chars, n_short_docs,
-        |  CAST(dup_toks * 10000 // total_tokens AS DOUBLE) / CAST(10000 AS DOUBLE)
-        |    AS dup_token_share
-        |FROM a ORDER BY 1""".stripMargin,
-    "col_time_roundtrip" ->
-      """WITH t AS (SELECT event_id, epoch_ms(ts) % 86400000 AS ms_of_day FROM events),
-        |f AS (SELECT event_id, ms_of_day,
-        |  strftime(epoch_ms(ms_of_day), '%H:%M:%S.%g') AS time_str FROM t)
-        |SELECT event_id, ms_of_day, time_str,
-        |  epoch_ms(strptime('1970-01-01 ' || time_str, '%Y-%m-%d %H:%M:%S.%g')) AS back_ms
-        |FROM f""".stripMargin,
-    "events_moving_avg" ->
-      """SELECT event_id, user_id, round(avg(value) OVER (PARTITION BY user_id
-        |ORDER BY ts, event_id ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS mavg
-        |FROM events""".stripMargin,
-    "events_dedup_burst" ->
-      """WITH p AS (SELECT event_type,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01 00:00:00', ts)
-        |      AS BIGINT) AS sec,
-        |    lag(CAST(date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
-        |      ts) AS BIGINT)) OVER (PARTITION BY user_id, event_type
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(count(*) FILTER (WHERE prev IS NOT NULL
-        |    AND sec - prev <= 5) AS BIGINT) AS n_suppressed,
-        |  CAST(count(*) FILTER (WHERE prev IS NULL
-        |    OR sec - prev > 5) AS BIGINT) AS n_kept
-        |FROM p GROUP BY 1""".stripMargin,
-    "events_lateness" ->
-      """WITH e AS (SELECT event_id,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01 00:00:00', ts)
-        |      AS BIGINT) AS sec
-        |  FROM events),
-        |r AS (SELECT event_id, sec,
-        |    COALESCE(max(sec) OVER (ORDER BY event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-        |      AS pm
-        |  FROM e),
-        |l AS (SELECT greatest(pm - sec, 0) AS late FROM r)
-        |SELECT CASE WHEN late = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE CAST(length(bin(late)) AS BIGINT) END AS late_bits,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(max(late) AS BIGINT) AS max_late_s
-        |FROM l GROUP BY 1""".stripMargin,
-    "events_attribution" ->
-      """WITH t AS (SELECT event_id, user_id, ts, event_type,
-        |    last_value(CASE WHEN event_type IN ('click', 'view') THEN
-        |      struct_pack(tts := ts, tid := event_id,
-        |        ttype := event_type) END IGNORE NULLS) OVER (
-        |      PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tch
-        |  FROM events)
-        |SELECT event_id AS purchase_id, user_id,
-        |  tch.ttype AS touch_type, tch.tid AS touch_id,
-        |  CAST(date_diff('second', tch.tts, ts) AS BIGINT)
-        |    AS latency_seconds
-        |FROM t WHERE event_type = 'purchase'""".stripMargin,
-    "events_conversion_time" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |  JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |  JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1),
-        |d1 AS (SELECT CAST(date_diff('second', s1.t1, s2.t2) AS BIGINT) AS d
-        |  FROM s2 JOIN s1 USING (user_id)),
-        |d2 AS (SELECT CAST(date_diff('second', s2.t2, s3.t3) AS BIGINT) AS d
-        |  FROM s3 JOIN s2 USING (user_id))
-        |SELECT 'view>click' AS transition,
-        |  CAST(count(*) AS BIGINT) AS n_converted,
-        |  min(d) AS min_seconds, max(d) AS max_seconds,
-        |  CAST(SUM(d) * 10000 // count(*) AS DOUBLE) / CAST(10000 AS DOUBLE)
-        |    AS mean_seconds
-        |FROM d1
-        |UNION ALL
-        |SELECT 'click>purchase', CAST(count(*) AS BIGINT),
-        |  min(d), max(d),
-        |  CAST(SUM(d) * 10000 // count(*) AS DOUBLE) / CAST(10000 AS DOUBLE)
-        |FROM d2""".stripMargin,
-    "events_anomaly" ->
-      """WITH h AS (SELECT date_trunc('hour', ts) AS hour,
-        |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1),
-        |w AS (SELECT hour, n,
-        |    SUM(n) OVER (ORDER BY hour ROWS BETWEEN 24 PRECEDING
-        |      AND 1 PRECEDING) AS tr,
-        |    COUNT(n) OVER (ORDER BY hour ROWS BETWEEN 24 PRECEDING
-        |      AND 1 PRECEDING) AS tc
-        |  FROM h),
-        |m AS (SELECT hour, n,
-        |    CASE WHEN tc > 0 THEN CAST(tr * 10000 // tc AS BIGINT) END AS tm,
-        |    CASE WHEN tc > 0 AND CAST(tr * 10000 // tc AS BIGINT) > 0 THEN
-        |      CAST(n * 100000000 // CAST(tr * 10000 // tc AS BIGINT)
-        |        AS BIGINT) END AS r
-        |  FROM w)
-        |SELECT hour, n,
-        |  CAST(tm AS DOUBLE) / CAST(10000 AS DOUBLE) AS trailing_mean,
-        |  CAST(r AS DOUBLE) / CAST(10000 AS DOUBLE) AS ratio,
-        |  COALESCE(r >= 30000, false) AS is_spike
-        |FROM m""".stripMargin,
-    "text_ttr" ->
-      """SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_distinct(ws)) AS BIGINT) AS n_types,
-        |  CAST(len(list_distinct(ws)) * 10000 // len(ws) AS DOUBLE)
-        |    / CAST(10000 AS DOUBLE) AS ttr
-        |FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents)
-        |WHERE len(ws) > 0""".stripMargin,
-    "token_zipf" ->
-      """SELECT CAST(length(bin(df)) AS BIGINT) AS df_bits,
-        |  CAST(count(*) AS BIGINT) AS n_words
-        |FROM (SELECT count(*) AS df FROM (SELECT unnest(list_filter(
-        |    string_split(lower(text), ' '), w -> w <> '')) AS w
-        |  FROM documents) GROUP BY w)
-        |GROUP BY 1""".stripMargin,
-    "events_retention" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-        |    CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7
-        |      AS BIGINT) AS w
-        |  FROM events),
-        |c AS (SELECT user_id, min(w) AS c0 FROM uw GROUP BY 1),
-        |sz AS (SELECT c0, CAST(count(*) AS BIGINT) AS cohort_users
-        |  FROM c GROUP BY 1),
-        |act AS (SELECT c.c0 AS cohort_week, uw.w - c.c0 AS week_offset,
-        |    CAST(count(*) AS BIGINT) AS n_active
-        |  FROM uw JOIN c USING (user_id) GROUP BY 1, 2)
-        |SELECT a.cohort_week, a.week_offset, a.n_active, s.cohort_users,
-        |  CAST(a.n_active * 10000 // s.cohort_users AS DOUBLE)
-        |    / CAST(10000 AS DOUBLE) AS retention
-        |FROM act a JOIN sz s ON a.cohort_week = s.c0""".stripMargin,
-    "events_sequences" ->
-      """WITH o AS (SELECT user_id, event_type, ts, event_id,
-        |    lead(event_type, 1) OVER w AS e2,
-        |    lead(event_type, 2) OVER w AS e3
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |t AS (SELECT event_type || '>' || e2 || '>' || e3 AS sequence
-        |  FROM o WHERE e3 IS NOT NULL),
-        |c AS (SELECT sequence, CAST(count(*) AS BIGINT) AS n
-        |  FROM t GROUP BY 1 ORDER BY n DESC, sequence LIMIT 20)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY n DESC, sequence) AS BIGINT)
-        |    AS rank, sequence, n
-        |FROM c""".stripMargin,
-    "events_funnel" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |            WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-        |       JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-        |       JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1)
-        |SELECT (SELECT count(*) FROM s1) AS u_view,
-        |       (SELECT count(*) FROM s2) AS u_click,
-        |       (SELECT count(*) FROM s3) AS u_purchase""".stripMargin,
-    "events_cumulative" ->
-      """SELECT event_id, user_id,
-        |CAST(sum(CAST(value AS DECIMAL(18,2))) OVER (
-        |  PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |  AS cum_value
-        |FROM events""".stripMargin,
-    "jl_projection" -> {
-      // the deterministic ±1 sign matrix is generated in Scala and
-      // inlined into the oracle so both engines compute the same map
-      val signs = Projections.jlSigns(2, 2)
-      s"""SELECT p_partkey,
-         |${signs(0)(0)} * p_size + ${signs(0)(1)} * p_retailprice AS jl0,
-         |${signs(1)(0)} * p_size + ${signs(1)(1)} * p_retailprice AS jl1
-         |FROM part""".stripMargin
-    },
-    "dedup_exact" ->
-      """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin,
-    "dedup_exact_nfc" -> {
-      val body = """SELECT md5(nfc_normalize(text)) AS h,
-        |  min(doc_id) AS keep_id, count(*) AS n_copies,
-        |  CAST(count(DISTINCT text) AS BIGINT) AS n_raw_forms
-        |FROM dml GROUP BY 1""".stripMargin
-      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql})\n$body"
-    },
-    "dedup_jaccard_3gram" -> shingleCte,
-    "dedup_jaccard_3gram_ml" -> shingleCteMl,
-    "dedup_minhash_lsh_ml" -> shingleCteMl,
-    // mirrors jaccardPairs' df-cut semantics: per-doc set sizes are
-    // computed BEFORE the cut, shared counts AFTER it
-    "dedup_jaccard_dfcut" ->
-      """WITH w AS (SELECT doc_id,
-        |    string_split(lower(text || ' zz common tail'), ' ') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, shingle FROM
-        |  (SELECT doc_id, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingle
-        |   FROM w WHERE len(ws) >= 3)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |dfc AS (SELECT shingle FROM (SELECT shingle, count(*) AS df FROM sh GROUP BY 1) WHERE df <= 50),
-        |cut AS (SELECT doc_id, shingle FROM sh JOIN dfc USING (shingle)),
-        |shared AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
-        |  FROM cut a JOIN cut b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b, round(shared / (sa.sz + sb.sz - shared), 4) AS jaccard
-        |FROM shared JOIN sz sa ON id_a = sa.doc_id JOIN sz sb ON id_b = sb.doc_id
-        |WHERE round(shared / (sa.sz + sb.sz - shared), 4) >= 0.5""".stripMargin,
-    "dedup_minhash_lsh" -> shingleCte,
-    // same exact-jaccard pair replay, bucketed; the cumulative window
-    // runs over <= 11 bucket rows on both engines
-    "dedup_threshold_curve" ->
-      s"""WITH pairs AS ($shingleCte),
-         |b AS (SELECT CAST(floor(jaccard * 20) * 5 AS BIGINT) AS theta_e2,
-         |    CAST(count(*) AS BIGINT) AS n_pairs FROM pairs GROUP BY 1)
-         |SELECT theta_e2, n_pairs,
-         |  CAST(SUM(n_pairs) OVER (ORDER BY theta_e2 DESC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         |    AS n_pairs_ge
-         |FROM b""".stripMargin,
-    // the pair replay joined back to sources; identical double
-    // truncation (CAST toward zero) on both engines
-    "dedup_source_matrix" ->
-      s"""WITH pairs AS ($shingleCte)
-         |SELECT LEAST(da.source, db.source) AS source_a,
-         |  GREATEST(da.source, db.source) AS source_b,
-         |  CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(SUM(CAST(jaccard * 10000 AS BIGINT)) // count(*) AS BIGINT)
-         |    AS mean_jaccard_e4
-         |FROM pairs JOIN documents da ON da.doc_id = pairs.id_a
-         |  JOIN documents db ON db.doc_id = pairs.id_b
-         |GROUP BY 1, 2""".stripMargin,
-    // exhaustive regime ⇒ theta answers equal the true set counts; the
-    // rate is one division of exact integers, rounded identically
-    "dedup_delta_novelty" ->
-      """WITH corpus AS (SELECT DISTINCT text FROM documents WHERE doc_id % 10 <> 0),
-        |delta AS (SELECT DISTINCT text FROM documents WHERE doc_id % 10 = 0)
-        |SELECT CAST((SELECT count(*) FROM delta) AS BIGINT) AS delta_distinct,
-        |CAST((SELECT count(*) FROM delta
-        |      WHERE text NOT IN (SELECT text FROM corpus)) AS BIGINT) AS novel_texts,
-        |CAST((SELECT count(*) FROM delta
-        |      WHERE text NOT IN (SELECT text FROM corpus)) AS DOUBLE)
-        |  / (SELECT count(*) FROM delta) AS novelty_rate""".stripMargin,
-    // exact cross-split Jaccard: delta (doc_id%10=0) vs corpus (rest)
-    "dedup_incremental" ->
-      """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, shingle FROM
-        |  (SELECT doc_id, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingle
-        |   FROM w WHERE len(ws) >= 3)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |shared AS (SELECT a.doc_id AS new_id, b.doc_id AS corpus_id, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-        |  WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0 GROUP BY 1, 2)
-        |SELECT new_id, corpus_id, round(shared / (sa.sz + sb.sz - shared), 4) AS jaccard
-        |FROM shared JOIN sz sa ON new_id = sa.doc_id JOIN sz sb ON corpus_id = sb.doc_id
-        |WHERE round(shared / (sa.sz + sb.sz - shared), 4) >= 0.5""".stripMargin,
-    "decontaminate" ->
-      """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, shingle FROM
-        |  (SELECT doc_id, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingle
-        |   FROM w WHERE len(ws) >= 3)),
-        |ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 7)
-        |SELECT t.doc_id, count(*) AS n_shared_ngrams
-        |FROM (SELECT * FROM sh WHERE doc_id % 50 <> 7) t
-        |JOIN ev ON t.shingle = ev.shingle GROUP BY 1""".stripMargin,
-    // the closed-form waterline replayed with the same integer window
-    // algebra (prefix capped allocation, suffix token sums, clamped λ,
-    // the max-λ-over-uncapped waterline)
-    "corpus_mix_waterfill" ->
-      """WITH t AS (SELECT source,
-        |    CAST(SUM(len(list_filter(string_split(lower(text), ' '),
-        |      x -> x <> ''))) AS BIGINT) AS tokens
-        |  FROM documents GROUP BY 1),
-        |c AS (SELECT source, tokens,
-        |    CAST(CASE source WHEN 'src0' THEN 5000 WHEN 'src1' THEN 8000
-        |      WHEN 'src2' THEN 12000 ELSE 30000 END AS BIGINT) AS cap_e4
-        |  FROM t WHERE tokens > 0),
-        |p AS (SELECT *, cap_e4 * tokens // 10000 AS cap_alloc FROM c),
-        |q AS (SELECT *,
-        |    COALESCE(SUM(cap_alloc) OVER (ORDER BY cap_e4, source
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS cum_before,
-        |    SUM(tokens) OVER (ORDER BY cap_e4, source
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS suffix_t
-        |  FROM p),
-        |r AS (SELECT *,
-        |    GREATEST(40000 - cum_before, 0) * 10000 // suffix_t AS lam
-        |  FROM q),
-        |s AS (SELECT *, lam >= cap_e4 AS capped FROM r),
-        |f AS (SELECT *,
-        |    MAX(CASE WHEN NOT capped THEN lam END) OVER () AS lam_fin
-        |  FROM s)
-        |SELECT source, tokens, cap_e4,
-        |  CAST(CASE WHEN capped THEN cap_alloc
-        |    ELSE lam_fin * tokens // 10000 END AS BIGINT) AS alloc_tokens,
-        |  CAST((CASE WHEN capped THEN cap_alloc
-        |    ELSE lam_fin * tokens // 10000 END) * 10000 // tokens AS BIGINT)
-        |    AS epochs_e4
-        |FROM f""".stripMargin,
-    // the fraction form: per-doc total grams and shared grams, the
-    // 1e-4-grid ratio, the θ verdict
-    "decontam_overlap" ->
-      """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, shingle FROM
-        |  (SELECT doc_id, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingle
-        |   FROM w WHERE len(ws) >= 3)),
-        |ev AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 7),
-        |tr AS (SELECT * FROM sh WHERE doc_id % 50 <> 7),
-        |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_ngrams
-        |  FROM tr GROUP BY 1),
-        |sd AS (SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_shared
-        |  FROM tr t JOIN ev USING (shingle) GROUP BY 1)
-        |SELECT tot.doc_id, tot.n_ngrams,
-        |  COALESCE(sd.n_shared, CAST(0 AS BIGINT)) AS n_shared_ngrams,
-        |  CAST(COALESCE(sd.n_shared, 0) * 10000 // tot.n_ngrams AS DOUBLE)
-        |    / CAST(10000 AS DOUBLE) AS overlap_frac,
-        |  COALESCE(sd.n_shared, 0) * 10000 // tot.n_ngrams >= 2000 AS flagged
-        |FROM tot LEFT JOIN sd USING (doc_id)""".stripMargin,
-    // truncated ratios via exact integer division (k = num*10^4 // den,
-    // then k/10000.0): bit-identical to Spark's frac4 — the floor(double)
-    // form disagreed one ulp below the 1e-4 grid on boundary fractions
-    "text_repetition" ->
-      """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, len(ws) AS n_tokens,
-        |    CAST((len(ws) - len(list_distinct(ws))) * 10000 // len(ws) AS DOUBLE)
-        |      / CAST(10000 AS DOUBLE) AS dup_token_frac
-        |  FROM w WHERE len(ws) >= 2),
-        |g AS (SELECT doc_id, unnest([array_to_string(ws[i:i+1], ' ') for i in range(1, len(ws))]) AS gram
-        |  FROM w WHERE len(ws) >= 2),
-        |pg AS (SELECT doc_id, gram, count(*) AS ct FROM g GROUP BY 1, 2),
-        |gs AS (SELECT doc_id, CAST(sum(ct) AS BIGINT) AS n_2grams, max(ct) AS top_2gram_ct FROM pg GROUP BY 1)
-        |SELECT t.doc_id, t.n_tokens, t.dup_token_frac, gs.n_2grams, gs.top_2gram_ct,
-        |  CAST(top_2gram_ct * 10000 // n_2grams AS DOUBLE) / CAST(10000 AS DOUBLE) AS top_2gram_frac
-        |FROM tok t JOIN gs USING (doc_id)""".stripMargin,
-    "ann_topk_quantized" ->
-      """WITH b AS (SELECT vec_id, embedding,
-        |    CASE WHEN m = 0 THEN 1.0 ELSE CAST(m AS DOUBLE) / 127.0 END AS scale
-        |  FROM (SELECT vec_id, embedding,
-        |    list_max([abs(x) for x in embedding]) AS m FROM embeddings)),
-        |q AS (SELECT vec_id,
-        |    [floor(CAST(x AS DOUBLE) / scale + 0.5) for x in embedding] AS qe
-        |  FROM b)
-        |SELECT query_id, rank, neighbor_id, cos FROM (
-        |  SELECT a.vec_id AS query_id, n.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(a.qe, n.qe), 4) AS cos,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(a.qe, n.qe) DESC, n.vec_id) AS INT) AS rank
-        |  FROM q a JOIN q n ON n.vec_id <> a.vec_id
-        |  WHERE a.vec_id IN (0, 1, 2, 3, 4))
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "kcenter_coreset" -> kcenterSql(6),
-    "icp_order" -> icpSql(8),
-    "bitext_mine" ->
-      """WITH q AS (SELECT vec_id, label,
-        |    [CAST(floor(CAST(x AS DOUBLE) * 65536) AS BIGINT) for x in embedding] AS qe
-        |  FROM embeddings WHERE label IN (0, 1)),
-        |p AS (SELECT a.vec_id AS id_src, b.vec_id AS id_tgt,
-        |    CAST(list_sum(list_transform(generate_series(1, len(a.qe)),
-        |      i -> a.qe[i] * b.qe[i])) AS BIGINT) AS d
-        |  FROM q a JOIN q b ON a.label = 0 AND b.label = 1),
-        |ra AS (SELECT id_src, id_tgt, d, row_number() OVER (
-        |    PARTITION BY id_src ORDER BY d DESC, id_tgt ASC) AS rn FROM p),
-        |rb AS (SELECT id_src, id_tgt, row_number() OVER (
-        |    PARTITION BY id_tgt ORDER BY d DESC, id_src ASC) AS rn FROM p)
-        |SELECT ra.id_src, ra.id_tgt, ra.d AS dot_q
-        |FROM ra JOIN rb ON ra.id_src = rb.id_src AND ra.id_tgt = rb.id_tgt
-        |  AND ra.rn = 1 AND rb.rn = 1""".stripMargin,
-    "decontam_cut" ->
-      """WITH tr AS MATERIALIZED (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), w -> w <> '') AS ws
-        |  FROM documents WHERE doc_id % 50 <> 7),
-        |ev AS MATERIALIZED (SELECT DISTINCT
-        |    CAST(('0x' || substr(md5(array_to_string(ws[i:i+2], ' ')), 1, 15))
-        |      AS BIGINT) AS gh
-        |  FROM (SELECT list_filter(string_split(lower(text), ' '),
-        |      w -> w <> '') AS ws FROM documents WHERE doc_id % 50 = 7),
-        |    UNNEST(generate_series(1, len(ws) - 2)) t(i)
-        |  WHERE len(ws) >= 3),
-        |g AS (SELECT doc_id, i AS p,
-        |    CAST(('0x' || substr(md5(array_to_string(ws[i:i+2], ' ')), 1, 15))
-        |      AS BIGINT) AS gh
-        |  FROM tr, UNNEST(generate_series(1, len(ws) - 2)) t(i)
-        |  WHERE len(ws) >= 3),
-        |st AS (SELECT doc_id, p FROM g JOIN ev USING (gh)),
-        |j AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS j
-        |  FROM tr),
-        |cov AS (SELECT j.doc_id, j.j, ws[CAST(j.j AS INTEGER)] AS tok,
-        |    bool_or(s.p IS NOT NULL) AS covered
-        |  FROM j LEFT JOIN st s ON s.doc_id = j.doc_id
-        |    AND j.j BETWEEN greatest(s.p - 2, 1) AND s.p + 4
-        |  GROUP BY 1, 2, 3),
-        |runs AS (SELECT doc_id, j, tok, covered,
-        |    CASE WHEN covered AND NOT coalesce(lag(covered)
-        |      OVER (PARTITION BY doc_id ORDER BY j), false)
-        |    THEN 1 ELSE 0 END AS run_start FROM cov)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) FILTER (WHERE covered) AS BIGINT) AS n_cut_tokens,
-        |  CAST(SUM(run_start) AS BIGINT) AS n_spans_cut,
-        |  COALESCE(string_agg(tok, ' ' ORDER BY j)
-        |    FILTER (WHERE NOT covered), '') AS clean_text
-        |FROM runs GROUP BY doc_id""".stripMargin,
-    "vocab_growth" ->
-      """WITH w AS (SELECT min(doc_id) AS first_id
-        |  FROM (SELECT doc_id, unnest(list_filter(
-        |      string_split(lower(text), ' '), x -> x <> '')) AS w
-        |    FROM documents) GROUP BY w)
-        |SELECT bucket_bits, CAST(count(*) AS BIGINT) AS n_new_words,
-        |  CAST(SUM(count(*)) OVER (ORDER BY bucket_bits
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum_vocab
-        |FROM (SELECT CAST(length(bin(first_id + 1)) AS BIGINT)
-        |    AS bucket_bits FROM w)
-        |GROUP BY bucket_bits""".stripMargin,
-    "sft_loss_mask" ->
-      s"""WITH ds AS MATERIALIZED (${Fixtures.sft.sql}),
-         |t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-         |    w -> w <> '') AS ws FROM ds),
-         |b AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens,
-         |    CAST(nullif(list_position(ws, '###'), 0) AS BIGINT) AS sep_idx
-         |  FROM t WHERE len(ws) > 0)
-         |SELECT doc_id, n_tokens, sep_idx IS NOT NULL AS has_pair,
-         |  COALESCE(sep_idx, n_tokens) AS n_prompt_tokens,
-         |  n_tokens - COALESCE(sep_idx, n_tokens) AS n_completion_tokens,
-         |  repeat('0', CAST(COALESCE(sep_idx, n_tokens) AS INTEGER)) ||
-         |    repeat('1', CAST(n_tokens - COALESCE(sep_idx, n_tokens) AS INTEGER))
-         |    AS loss_mask
-         |FROM b""".stripMargin,
-    "fd_discovery" ->
-      """WITH d AS (SELECT
-        |  CAST(count(DISTINCT n_nationkey) AS BIGINT) AS dk,
-        |  CAST(count(DISTINCT n_name) AS BIGINT) AS dn,
-        |  CAST(count(DISTINCT n_regionkey) AS BIGINT) AS dr,
-        |  CAST(count(DISTINCT (n_nationkey, n_name)) AS BIGINT) AS dkn,
-        |  CAST(count(DISTINCT (n_nationkey, n_regionkey)) AS BIGINT) AS dkr,
-        |  CAST(count(DISTINCT (n_name, n_regionkey)) AS BIGINT) AS dnr
-        |  FROM nation)
-        |SELECT 'n_nationkey' AS determinant, 'n_name' AS dependent,
-        |    dk AS n_classes, dkn AS n_pairs, dkn = dk AS fd_holds,
-        |    dkn - dk AS n_violations FROM d
-        |UNION ALL SELECT 'n_nationkey', 'n_regionkey', dk, dkr,
-        |  dkr = dk, dkr - dk FROM d
-        |UNION ALL SELECT 'n_name', 'n_nationkey', dn, dkn,
-        |  dkn = dn, dkn - dn FROM d
-        |UNION ALL SELECT 'n_name', 'n_regionkey', dn, dnr,
-        |  dnr = dn, dnr - dn FROM d
-        |UNION ALL SELECT 'n_regionkey', 'n_nationkey', dr, dkr,
-        |  dkr = dr, dkr - dr FROM d
-        |UNION ALL SELECT 'n_regionkey', 'n_name', dr, dnr,
-        |  dnr = dr, dnr - dr FROM d""".stripMargin,
-    "benford_audit" ->
-      """WITH f AS (SELECT regexp_extract(
-        |    CAST(l_extendedprice AS VARCHAR), '[1-9]', 0) AS fd
-        |  FROM lineitem WHERE l_extendedprice > 0),
-        |c AS (SELECT CAST(fd AS BIGINT) AS first_digit,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM f WHERE fd <> '' GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n) AS BIGINT) AS tt FROM c)
-        |SELECT first_digit, n,
-        |  (n * 10000 // tt) / 10000.0 AS share,
-        |  CASE first_digit WHEN 1 THEN 3010 WHEN 2 THEN 1760
-        |    WHEN 3 THEN 1249 WHEN 4 THEN 969 WHEN 5 THEN 791
-        |    WHEN 6 THEN 669 WHEN 7 THEN 579 WHEN 8 THEN 511
-        |    ELSE 457 END / 10000.0 AS expected_share,
-        |  abs(n * 10000 // tt - CASE first_digit WHEN 1 THEN 3010
-        |    WHEN 2 THEN 1760 WHEN 3 THEN 1249 WHEN 4 THEN 969
-        |    WHEN 5 THEN 791 WHEN 6 THEN 669 WHEN 7 THEN 579
-        |    WHEN 8 THEN 511 ELSE 457 END) / 10000.0 AS deviation
-        |FROM c CROSS JOIN t""".stripMargin,
-    "sink_rle_layout" ->
-      """WITH q AS (SELECT lang AS a, source AS b,
-        |    CAST(length(bin(n_chars)) AS BIGINT) AS c FROM documents),
-        |d AS (SELECT CAST(count(DISTINCT a) AS BIGINT) AS da,
-        |    CAST(count(DISTINCT b) AS BIGINT) AS db,
-        |    CAST(count(DISTINCT c) AS BIGINT) AS dc,
-        |    CAST(count(DISTINCT (a, b)) AS BIGINT) AS dab,
-        |    CAST(count(DISTINCT (a, c)) AS BIGINT) AS dac,
-        |    CAST(count(DISTINCT (b, c)) AS BIGINT) AS dbc,
-        |    CAST(count(DISTINCT (a, b, c)) AS BIGINT) AS dabc FROM q),
-        |p AS (
-        |  SELECT 'lang,source,len_bits' AS sort_key,
-        |      da AS r1, dab AS r2, dabc AS r3 FROM d
-        |  UNION ALL SELECT 'lang,len_bits,source', da, dac, dabc FROM d
-        |  UNION ALL SELECT 'source,lang,len_bits', db, dab, dabc FROM d
-        |  UNION ALL SELECT 'source,len_bits,lang', db, dbc, dabc FROM d
-        |  UNION ALL SELECT 'len_bits,lang,source', dc, dac, dabc FROM d
-        |  UNION ALL SELECT 'len_bits,source,lang', dc, dbc, dabc FROM d)
-        |SELECT sort_key, r1 AS runs_c1, r2 AS runs_c2, r3 AS runs_c3,
-        |  r1 + r2 + r3 AS total_runs,
-        |  row_number() OVER (ORDER BY r1 + r2 + r3, sort_key) = 1
-        |    AS is_best
-        |FROM p""".stripMargin,
-    "interval_overlap_join" ->
-      """WITH a AS (SELECT o_orderkey AS a_key,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      AS a_lo
-        |  FROM orders WHERE o_orderpriority = '1-URGENT'
-        |    AND o_orderdate >= '1996-01-01'
-        |    AND o_orderdate < '1996-03-01'),
-        |b AS (SELECT o_orderkey AS b_key,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      AS b_lo
-        |  FROM orders WHERE o_orderpriority = '5-LOW'
-        |    AND o_orderdate >= '1995-12-15'
-        |    AND o_orderdate < '1996-03-15')
-        |SELECT a_key, CAST(count(*) AS BIGINT) AS n_overlaps,
-        |  CAST(SUM(least(a_lo + 7, b_lo + 10)
-        |    - greatest(a_lo, b_lo)) AS BIGINT) AS sum_overlap_days,
-        |  CAST(MAX(least(a_lo + 7, b_lo + 10)
-        |    - greatest(a_lo, b_lo)) AS BIGINT) AS max_overlap_days
-        |FROM a JOIN b ON a_lo < b_lo + 10 AND b_lo < a_lo + 7
-        |GROUP BY 1""".stripMargin,
-    "kanonymity_ldiversity" ->
-      """SELECT lang, CAST(length(bin(n_chars)) AS BIGINT) AS len_bits,
-        |  count(*) AS class_size,
-        |  CAST(count(DISTINCT source) AS BIGINT) AS n_sensitive,
-        |  count(DISTINCT source) >= 2 AS l_diverse
-        |FROM documents GROUP BY 1, 2""".stripMargin,
-    "text_memorization_risk" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |e AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 4),
-        |    i -> CAST(('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 15))
-        |      AS BIGINT))) AS fp
-        |  FROM t WHERE len(ws) >= 5),
-        |d AS (SELECT fp, count(DISTINCT doc_id) AS df FROM e GROUP BY fp)
-        |SELECT doc_id, count(*) AS n_windows,
-        |  count(CASE WHEN df >= 2 THEN 1 END) AS n_dup_windows,
-        |  CAST(max(df) AS BIGINT) AS max_df,
-        |  (count(CASE WHEN df >= 2 THEN 1 END) * 10000 // count(*)) / 10000.0
-        |    AS dup_share
-        |FROM e JOIN d USING (fp) GROUP BY doc_id""".stripMargin,
-    "split_summary" ->
-      """WITH sp AS (SELECT source, text,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-        |      % 100 AS h
-        |  FROM documents)
-        |SELECT source,
-        |  CASE WHEN h < 80 THEN 'train' WHEN h < 90 THEN 'val'
-        |    ELSE 'test' END AS split,
-        |  count(*) AS n_docs,
-        |  CAST(SUM(len(list_filter(string_split(lower(text), ' '),
-        |    w -> w <> ''))) AS BIGINT) AS n_tokens
-        |FROM sp GROUP BY 1, 2""".stripMargin,
-    "split_leakage" ->
-      """WITH sp AS (SELECT doc_id, text,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-        |      % 100 < 80 AS is_train
-        |  FROM documents),
-        |w AS (SELECT doc_id, is_train, string_split(lower(text), ' ') AS ws FROM sp),
-        |sh AS (SELECT DISTINCT doc_id, is_train, shingle FROM
-        |  (SELECT doc_id, is_train,
-        |     unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingle
-        |   FROM w WHERE len(ws) >= 3)),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-        |shared AS (SELECT a.doc_id AS test_id, b.doc_id AS train_id, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-        |  WHERE NOT a.is_train AND b.is_train GROUP BY 1, 2)
-        |SELECT test_id, train_id,
-        |  round(shared / (sa.sz + sb.sz - shared), 4) AS jaccard
-        |FROM shared JOIN sz sa ON test_id = sa.doc_id JOIN sz sb ON train_id = sb.doc_id
-        |WHERE round(shared / (sa.sz + sb.sz - shared), 4) >= 0.5""".stripMargin,
-    "corpus_mix_doremi" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents),
-        |big AS (
-        |  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-        |  FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 2),
-        |c2 AS (SELECT w1, w2, count(*) AS n2 FROM big GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(SUM(n2) AS BIGINT) AS n1 FROM c2 GROUP BY 1),
-        |loss AS (SELECT d.source,
-        |    CAST(SUM(length(bin(n1)) - length(bin(n2))) AS BIGINT) * 10000
-        |      // count(*) AS loss_e4
-        |  FROM big JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
-        |  JOIN documents d USING (doc_id)
-        |  GROUP BY 1),
-        |ex AS (SELECT source, loss_e4,
-        |    loss_e4 - (SELECT MIN(loss_e4) FROM loss) AS excess_e4 FROM loss),
-        |s1 AS (SELECT *, 1000000 * (10000 + 10000 * excess_e4 // 10000) // 10000 AS w FROM ex),
-        |s2 AS (SELECT source, loss_e4, excess_e4,
-        |    w * (10000 + 10000 * excess_e4 // 10000) // 10000 AS w FROM s1),
-        |s3 AS (SELECT source, loss_e4, excess_e4,
-        |    w * (10000 + 10000 * excess_e4 // 10000) // 10000 AS w FROM s2)
-        |SELECT source, loss_e4, excess_e4, CAST(w AS BIGINT) AS weight,
-        |  CAST(w * 1000000 // (SELECT SUM(w) FROM s3) AS BIGINT) AS share_ppm,
-        |  CAST(w * 1000000 // (SELECT SUM(w) FROM s3) AS BIGINT) / 1000000.0
-        |    AS mix_share
-        |FROM s3""".stripMargin,
-    "kanonymity_tcloseness" ->
-      """WITH base AS (SELECT lang, source,
-        |    CAST(length(bin(n_chars)) AS BIGINT) AS sv FROM documents),
-        |cells AS (SELECT lang, source, sv, count(*) AS cc FROM base GROUP BY 1, 2, 3),
-        |gdist AS (SELECT sv, CAST(SUM(cc) AS BIGINT) AS gc FROM cells GROUP BY 1),
-        |cls AS (SELECT lang, source, CAST(SUM(cc) AS BIGINT) AS class_size
-        |  FROM cells GROUP BY 1, 2),
-        |n AS (SELECT CAST(SUM(gc) AS BIGINT) AS nn FROM gdist),
-        |grid AS (SELECT c.lang, c.source, c.class_size, g.sv, g.gc,
-        |    COALESCE(ce.cc, 0) AS cc
-        |  FROM cls c CROSS JOIN gdist g
-        |  LEFT JOIN cells ce ON ce.lang = c.lang AND ce.source = c.source
-        |    AND ce.sv = g.sv),
-        |cum AS (SELECT lang, source, class_size, gc, cc,
-        |    SUM(cc) OVER (PARTITION BY lang, source ORDER BY sv
-        |      ROWS UNBOUNDED PRECEDING) AS cumC,
-        |    SUM(gc) OVER (PARTITION BY lang, source ORDER BY sv
-        |      ROWS UNBOUNDED PRECEDING) AS cumG,
-        |    COUNT(*) OVER (PARTITION BY lang, source) AS m
-        |  FROM grid),
-        |emd AS (SELECT lang, source, class_size,
-        |    CASE WHEN m > 1 THEN CAST(
-        |      SUM(ABS(nn * cumC - class_size * cumG)) * 10000
-        |        // (class_size * nn * (m - 1)) AS BIGINT)
-        |    ELSE 0 END AS emd_e4
-        |  FROM cum CROSS JOIN n GROUP BY lang, source, class_size, m, nn)
-        |SELECT lang, source, class_size, emd_e4, emd_e4 <= 2000 AS t_close
-        |FROM emd""".stripMargin,
-    "kanonymity_audit" ->
-      """SELECT lang, source,
-        |  CAST(length(bin(n_chars)) AS BIGINT) AS len_bits,
-        |  CAST(count(*) AS BIGINT) AS class_size,
-        |  count(*) >= 5 AS k_anonymous
-        |FROM documents GROUP BY 1, 2, 3""".stripMargin,
-    "kanonymity_risk" ->
-      """WITH c AS (SELECT CAST(count(*) AS BIGINT) AS class_size
-        |  FROM documents
-        |  GROUP BY lang, source, length(bin(n_chars)))
-        |SELECT CAST(count(*) AS BIGINT) AS n_classes,
-        |  CAST(count(*) FILTER (WHERE class_size < 5) AS BIGINT)
-        |    AS n_violating_classes,
-        |  CAST(SUM(class_size) AS BIGINT) AS n_rows,
-        |  CAST(COALESCE(SUM(class_size) FILTER (WHERE class_size < 5), 0)
-        |    AS BIGINT) AS n_rows_at_risk,
-        |  CAST(COALESCE(SUM(class_size) FILTER (WHERE class_size < 5), 0)
-        |    * 10000 // CAST(SUM(class_size) AS BIGINT) AS DOUBLE) / 10000.0
-        |    AS at_risk_share
-        |FROM c""".stripMargin,
-    "text_pretokenize" ->
-      s"""WITH RECURSIVE
-         |dd AS MATERIALIZED (${Fixtures.pre.sql}),
-         |${pretokCtes("dd")}
-         |SELECT doc_id, idx - 1 AS idx, tok AS pretoken FROM toks
-         |WHERE tok IS NOT NULL""".stripMargin,
-    "text_tokens_bpe_pretok" ->
-      s"""WITH RECURSIVE
-         |dd AS MATERIALIZED (${Fixtures.pre.sql}),
-         |${pretokCtes("dd")},
-         |ptk AS MATERIALIZED (SELECT doc_id, idx, tok FROM toks
-         |  WHERE tok IS NOT NULL),
-         |pre AS MATERIALIZED (SELECT doc_id * 1000000 + idx AS doc_id,
-         |    tok AS text FROM ptk),
-         |${bpeCte("pre")},
-         |agg AS (SELECT CAST(doc_id // 1000000 AS BIGINT) AS doc_id,
-         |    CAST(SUM(n_tokens_bpe) AS BIGINT) AS nb FROM bpe GROUP BY 1),
-         |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pretokens
-         |  FROM ptk GROUP BY 1)
-         |SELECT c.doc_id, c.n_pretokens, COALESCE(a.nb, 0) AS n_tokens_bpe
-         |FROM cnt c LEFT JOIN agg a USING (doc_id)""".stripMargin,
-    // byte-level replay: pretokens → per-codepoint UTF-8 byte expansion
-    // (pure integer arithmetic) → the 256-entry GPT-2 bytes-to-unicode
-    // table as a list literal → greedy longest-match over the byte vocab
-    // with the same recursive step CTE the word path uses. Greedy ties
-    // can't desync: among prefix-matching entries one is a prefix of the
-    // other, so byte-longest ⟺ codepoint-longest.
-    "text_tokens_bpe_bytes" -> {
-      val mapList = graft.functions.BpeTokenizer.bytesToUnicode
-        .mkString("[", ", ", "]")
-      val bv = graft.functions.BpeTokenizer.vocabSqlList(
-        graft.functions.BpeTokenizer.byteVocab)
-      s"""WITH RECURSIVE
-         |dd AS MATERIALIZED (${Fixtures.pre.sql}),
-         |${pretokCtes("dd")},
-         |ptk AS MATERIALIZED (SELECT doc_id, idx, tok FROM toks
-         |  WHERE tok IS NOT NULL),
-         |bm AS MATERIALIZED (SELECT doc_id, idx,
-         |  list_aggregate(list_transform(
-         |    flatten(list_transform(
-         |      list_transform(range(1, length(tok) + 1),
-         |        j -> unicode(substr(tok, CAST(j AS INT), 1))),
-         |      u -> CASE WHEN u < 128 THEN [u]
-         |        WHEN u < 2048 THEN [192 + u // 64, 128 + u % 64]
-         |        WHEN u < 65536 THEN [224 + u // 4096, 128 + (u // 64) % 64, 128 + u % 64]
-         |        ELSE [240 + u // 262144, 128 + (u // 4096) % 64, 128 + (u // 64) % 64, 128 + u % 64] END)),
-         |    b -> chr(($mapList)[CAST(b AS INT) + 1])), 'string_agg', '') AS bw
-         |  FROM ptk),
-         |ubw AS (SELECT DISTINCT bw FROM bm),
-         |step AS (
-         |  SELECT bw AS w, CAST(1 AS INTEGER) AS pos, CAST(0 AS BIGINT) AS n FROM ubw
-         |  UNION ALL
-         |  SELECT w, CAST(pos + GREATEST(m, 1) AS INTEGER), n + 1 FROM (
-         |    SELECT w, pos, n,
-         |      list_max(list_transform($bv,
-         |        v -> CASE WHEN substr(w, pos, len(v)) = v THEN len(v) ELSE 0 END)) AS m
-         |    FROM step WHERE pos <= len(w)) s),
-         |wt AS (SELECT w, max(n) AS toks FROM step GROUP BY w)
-         |SELECT b.doc_id, CAST(count(*) AS BIGINT) AS n_pretokens,
-         |  CAST(sum(wt.toks) AS BIGINT) AS n_tokens_bpe_bytes
-         |FROM bm b JOIN wt ON wt.w = b.bw GROUP BY 1""".stripMargin
-    },
-    "text_sanitize_invisible" ->
-      s"""WITH dd AS MATERIALIZED (${Fixtures.invis.sql})
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text,
-         |    '[\\x{200B}-\\x{200F}\\x{2060}-\\x{2064}\\x{FEFF}]'))
-         |    AS BIGINT) AS n_zero_width,
-         |  CAST(len(regexp_extract_all(text,
-         |    '[\\x{202A}-\\x{202E}\\x{2066}-\\x{2069}]'))
-         |    AS BIGINT) AS n_bidi_controls,
-         |  regexp_replace(regexp_replace(text,
-         |    '[\\x{200B}-\\x{200F}\\x{2060}-\\x{2064}\\x{FEFF}]',
-         |    '', 'g'),
-         |    '[\\x{202A}-\\x{202E}\\x{2066}-\\x{2069}]', '', 'g')
-         |    AS text_clean
-         |FROM dd""".stripMargin,
-    "pii_iban" ->
-      s"""WITH dd AS MATERIALIZED (${Fixtures.iban.sql})
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text,
-         |    '[A-Z]{2}[0-9]{2}[A-Z0-9]{11,30}')) AS BIGINT)
-         |    AS n_iban_candidates,
-         |  CAST(len(list_filter(regexp_extract_all(text,
-         |    '[A-Z]{2}[0-9]{2}[A-Z0-9]{11,30}'),
-         |    c -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(generate_series(1, length(c)), j ->
-         |        CASE WHEN ascii(substr(
-         |            c || substr(c, 1, 4), CAST(j + 4 AS INT), 1)) >= 65
-         |          THEN CAST(100000 + ascii(substr(c || substr(c, 1, 4),
-         |            CAST(j + 4 AS INT), 1)) - 55 AS BIGINT)
-         |          ELSE CAST(10000 + ascii(substr(c || substr(c, 1, 4),
-         |            CAST(j + 4 AS INT), 1)) - 48 AS BIGINT) END)),
-         |      (acc, e) -> (acc * CASE WHEN e >= 100000 THEN 100 ELSE 10
-         |        END + e % 10000) % 97) = 1)) AS BIGINT) AS n_iban_valid
-         |FROM dd""".stripMargin,
-    "chunk_sentences" ->
-      s"""WITH dd AS MATERIALIZED (${Fixtures.sent.sql}),
-         |t AS (SELECT doc_id, list_filter(string_split(text, '. '),
-         |    x -> x <> '') AS ss FROM dd),
-         |s AS (SELECT doc_id, j, ss[CAST(j AS INTEGER)] AS sent,
-         |    CAST(len(list_filter(string_split(
-         |      lower(ss[CAST(j AS INTEGER)]), ' '), w -> w <> ''))
-         |      AS BIGINT) AS n_toks
-         |  FROM t, UNNEST(generate_series(1, len(ss))) AS tt(j)),
-         |c AS (SELECT doc_id, j, sent, n_toks,
-         |    (CAST(SUM(n_toks) OVER (PARTITION BY doc_id ORDER BY j
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) - n_toks) // 64 AS chunk_id
-         |  FROM s WHERE n_toks > 0)
-         |SELECT doc_id, chunk_id,
-         |  CAST(count(*) AS BIGINT) AS n_sentences,
-         |  CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-         |  string_agg(sent, '. ' ORDER BY j) AS chunk_text
-         |FROM c GROUP BY 1, 2""".stripMargin,
-    "text_rep_gopher" -> gopherRepSql,
-    "text_mojibake" -> mojibakeSql,
-    "chat_loss_mask" ->
-      s"""WITH dd AS MATERIALIZED (${Fixtures.chat.sql}),
-         |t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-         |    w -> w <> '') AS ws FROM dd),
-         |e AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n, ws,
-         |    unnest(generate_series(1, len(ws))) AS j
-         |  FROM t WHERE len(ws) > 0),
-         |m AS (SELECT doc_id, n, j,
-         |    CASE WHEN ws[CAST(j AS INTEGER)] = '<user>' THEN 0
-         |         WHEN ws[CAST(j AS INTEGER)] = '<assistant>' THEN 1
-         |    END AS marker FROM e),
-         |r AS (SELECT doc_id, n, j, marker,
-         |    COALESCE(last_value(marker IGNORE NULLS) OVER (
-         |      PARTITION BY doc_id ORDER BY j
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)
-         |      AS role FROM m)
-         |SELECT doc_id, max(n) AS n_tokens,
-         |  CAST(count(*) FILTER (WHERE marker IS NOT NULL) AS BIGINT)
-         |    AS n_turns,
-         |  CAST(count(*) FILTER (WHERE marker = 1) AS BIGINT)
-         |    AS n_assistant_turns,
-         |  COALESCE(bool_or(marker = 1), false) AS has_dialog,
-         |  CAST(count(*) FILTER (WHERE marker IS NULL AND role = 1)
-         |    AS BIGINT) AS n_train_tokens,
-         |  string_agg(CASE WHEN marker IS NULL AND role = 1
-         |    THEN '1' ELSE '0' END, '' ORDER BY j) AS loss_mask
-         |FROM r GROUP BY doc_id""".stripMargin,
-    "dpo_pairs" ->
-      s"""WITH dd AS MATERIALIZED (${Fixtures.dpo.sql}),
-         |t AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-         |    w -> w <> '') AS ws FROM dd),
-         |b AS (SELECT doc_id, ws,
-         |    nullif(list_position(ws, '###'), 0) AS sep_idx FROM t),
-         |c AS (SELECT doc_id,
-         |    COALESCE(array_to_string(ws[1:CAST(sep_idx - 1 AS INTEGER)],
-         |      ' '), '') AS prompt,
-         |    ws[CAST(sep_idx + 1 AS INTEGER):len(ws)] AS comp
-         |  FROM b WHERE sep_idx IS NOT NULL),
-         |s AS (SELECT doc_id, prompt, CAST(len(comp) AS BIGINT) AS n_comp,
-         |    10000 * CAST(len(list_distinct(comp)) AS BIGINT) // len(comp)
-         |      AS score
-         |  FROM c WHERE len(comp) > 0),
-         |ch AS (SELECT prompt, doc_id AS chosen_id, score AS chosen_score,
-         |    row_number() OVER (PARTITION BY prompt
-         |      ORDER BY score DESC, doc_id ASC) AS rn FROM s),
-         |rj AS (SELECT prompt, doc_id AS rejected_id,
-         |    score AS rejected_score,
-         |    row_number() OVER (PARTITION BY prompt
-         |      ORDER BY score ASC, doc_id DESC) AS rn FROM s),
-         |g AS (SELECT prompt, CAST(count(*) AS BIGINT) AS n_candidates
-         |  FROM s GROUP BY prompt)
-         |SELECT g.prompt, g.n_candidates, ch.chosen_id, ch.chosen_score,
-         |  rj.rejected_id, rj.rejected_score,
-         |  ch.chosen_score - rj.rejected_score AS margin
-         |FROM g JOIN ch ON ch.prompt = g.prompt AND ch.rn = 1
-         |JOIN rj ON rj.prompt = g.prompt AND rj.rn = 1
-         |WHERE g.n_candidates >= 2
-         |  AND ch.chosen_score > rj.rejected_score""".stripMargin,
-    "embedding_domain_score" ->
-      """WITH q AS (SELECT vec_id, label,
-        |    [CAST(floor(CAST(x AS DOUBLE) * 65536) AS BIGINT) for x in embedding] AS qe
-        |  FROM embeddings),
-        |cd AS (SELECT i, CAST(SUM(qe[i]) AS BIGINT) // count(*) AS c
-        |  FROM q, UNNEST(generate_series(1, len(qe))) AS t(i)
-        |  WHERE label = 0 GROUP BY i),
-        |cl AS (SELECT list(c ORDER BY i) AS cent FROM cd)
-        |SELECT vec_id, label,
-        |  CAST(list_sum(list_transform(generate_series(1, len(qe)),
-        |    i -> qe[i] * cent[i])) AS BIGINT) AS dot_q,
-        |  CASE WHEN list_sum([x*x for x in qe]) > 0
-        |      AND list_sum([y*y for y in cent]) > 0 THEN
-        |    round(CAST(list_sum(list_transform(generate_series(1, len(qe)),
-        |        i -> qe[i] * cent[i])) AS DOUBLE)
-        |      / (sqrt(CAST(list_sum([x*x for x in qe]) AS DOUBLE))
-        |        * sqrt(CAST(list_sum([y*y for y in cent]) AS DOUBLE))), 4)
-        |  END AS cos
-        |FROM q CROSS JOIN cl""".stripMargin,
-    "quality_model_auc" ->
-      s"""WITH ${perceptronSqlCtes(6, 3)},
-        |sc AS (SELECT
-        |    CAST(list_sum(list_transform(generate_series(1, 3),
-        |      j -> w.w[j] * f.x[j])) AS BIGINT) AS score,
-        |    CAST(f.y AS INT) AS label
-        |  FROM pf f CROSS JOIN pw6 w),
-        |grid AS (SELECT score, count(*) AS n,
-        |    count(*) FILTER (WHERE label = 1) AS np FROM sc GROUP BY 1),
-        |cum AS (SELECT score, n, np,
-        |    SUM(n) OVER (ORDER BY score ROWS UNBOUNDED PRECEDING) AS cumn
-        |  FROM grid),
-        |agg AS (SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
-        |    CAST(SUM(n) - SUM(np) AS BIGINT) AS n_neg,
-        |    CAST(SUM(np * (2 * (cumn - n) + n + 1)) AS BIGINT) AS s2
-        |  FROM cum)
-        |SELECT n_pos, n_neg,
-        |  CAST(CASE WHEN n_pos > 0 AND n_neg > 0
-        |    THEN (s2 - n_pos * (n_pos + 1)) * 10000 // (2 * n_pos * n_neg)
-        |    ELSE 0 END AS BIGINT) AS auc_e4,
-        |  CAST(CASE WHEN n_pos > 0 AND n_neg > 0
-        |    THEN (s2 - n_pos * (n_pos + 1)) * 10000 // (2 * n_pos * n_neg)
-        |    ELSE 0 END AS BIGINT) / 10000.0 AS auc
-        |FROM agg""".stripMargin,
-    "quality_calibration" ->
-      s"""WITH ${perceptronSqlCtes(6, 3)},
-        |sc AS (SELECT f.doc_id,
-        |    CAST(list_sum(list_transform(generate_series(1, 3),
-        |      j -> w.w[j] * f.x[j])) AS BIGINT) AS score,
-        |    CASE WHEN list_sum(list_transform(generate_series(1, 3),
-        |      j -> w.w[j] * f.x[j])) > 0 THEN 1 ELSE -1 END AS pred,
-        |    CAST(f.y AS INT) AS label
-        |  FROM pf f CROSS JOIN pw6 w)
-        |SELECT score, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) FILTER (WHERE label = 1) AS BIGINT)
-        |    AS n_positive,
-        |  (CAST(count(*) FILTER (WHERE label = 1) AS BIGINT) * 10000
-        |    // count(*)) / 10000.0 AS positive_share,
-        |  (CAST(count(*) FILTER (WHERE pred = label) AS BIGINT) * 10000
-        |    // count(*)) / 10000.0 AS accuracy
-        |FROM sc GROUP BY 1""".stripMargin,
-    "quality_perceptron_train" ->
-      s"""WITH ${perceptronSqlCtes(6, 3)}
-        |SELECT f.doc_id,
-        |  CAST(list_sum(list_transform(generate_series(1, 3),
-        |    j -> w.w[j] * f.x[j])) AS BIGINT) AS score,
-        |  CASE WHEN list_sum(list_transform(generate_series(1, 3),
-        |    j -> w.w[j] * f.x[j])) > 0 THEN 1 ELSE -1 END AS pred,
-        |  CAST(f.y AS INT) AS label
-        |FROM pf f CROSS JOIN pw6 w""".stripMargin,
-    "embedding_silhouette_exact" ->
-      s"""WITH ${kmeansSqlCtes(4, 2)},
-        |dall AS (SELECT q.vec_id, c.cell,
-        |    list_sum(list_transform(generate_series(1, len(q.qe)),
-        |      i -> (q.qe[i] - c.cent[i]) * (q.qe[i] - c.cent[i]))) AS d,
-        |    ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        |      list_sum(list_transform(generate_series(1, len(q.qe)),
-        |        i -> (q.qe[i] - c.cent[i]) * (q.qe[i] - c.cent[i]))),
-        |      c.cell) AS rn
-        |  FROM kq q CROSS JOIN kc2 c),
-        |ab AS (SELECT a.vec_id, a.cell, a.d AS da, b.d AS db
-        |  FROM dall a JOIN dall b ON a.vec_id = b.vec_id
-        |  WHERE a.rn = 1 AND b.rn = 2),
-        |sil AS (SELECT cell, (db - da) * 10000 // greatest(db, 1) AS s FROM ab)
-        |SELECT cell AS cluster, count(*) AS n_vectors,
-        |  CAST(SUM(s) // count(*) AS BIGINT) AS mean_s_e4,
-        |  CAST(SUM(s) // count(*) AS BIGINT) / 10000.0 AS mean_silhouette
-        |FROM sil GROUP BY 1""".stripMargin,
-    "embedding_kmeans_exact" ->
-      s"""WITH ${kmeansSqlCtes(4, 2)},
-        |${kmeansFinalAssignCte(2)}
-        |SELECT vec_id, cell AS cluster, CAST(d2 AS BIGINT) AS d2
-        |FROM kfin""".stripMargin,
-    // the kmeans assignment CTE chain feeding the tfidf_topterms replay
-    // grouped by cell — cluster membership AND term ranking both
-    // re-derived independently
-    "cluster_topic_terms" ->
-      s"""WITH ${kmeansSqlCtes(4, 2)},
-        |${kmeansFinalAssignCte(2)},
-        |tok AS (SELECT d.doc_id, kfin.cell AS cluster,
-        |    unnest(string_split(lower(d.text), ' ')) AS token
-        |  FROM documents d JOIN kfin ON kfin.vec_id = d.doc_id),
-        |tfx AS (SELECT cluster, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |dfq AS (SELECT token, count(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-        |nn AS (SELECT count(*) AS n FROM documents),
-        |sc AS (SELECT tfx.cluster, tfx.token, tfx.tf, dfq.df,
-        |    floor(tfx.tf * ln(CAST(nn.n AS DOUBLE) / dfq.df) * 10000) / 10000
-        |      AS tfidf
-        |  FROM tfx JOIN dfq USING (token) CROSS JOIN nn)
-        |SELECT cluster, token, tf, df, tfidf, rank FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY cluster
-        |    ORDER BY tfidf DESC, token) AS INT) AS rank FROM sc)
-        |WHERE rank <= 5""".stripMargin,
-    // pair verdict in HUGEINT — the engine's decimal(38,0) twin
-    "dedup_semantic_exact" ->
-      s"""WITH ${kmeansSqlCtes(4, 2)},
-        |${kmeansFinalAssignCte(2)},
-        |kf AS (SELECT vec_id, qe, cell,
-        |    CAST(list_sum([x * x for x in qe]) AS BIGINT) AS qq FROM kfin)
-        |SELECT id_a, id_b, cluster, dot_q FROM (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.cell AS cluster,
-        |    a.qq AS qqa, b.qq AS qqb,
-        |    CAST(list_sum(list_transform(generate_series(1, len(a.qe)),
-        |      i -> a.qe[i] * b.qe[i])) AS BIGINT) AS dot_q
-        |  FROM kf a JOIN kf b ON a.cell = b.cell AND a.vec_id < b.vec_id)
-        |WHERE qqa > 0 AND qqb > 0 AND dot_q > 0
-        |  AND 25 * CAST(dot_q AS HUGEINT) * dot_q
-        |      >= 4 * CAST(qqa AS HUGEINT) * qqb""".stripMargin,
-    // the SemDeDup headline's oracle: identical CTE chain to
-    // dedup_semantic_exact but at the headline's 8-cell geometry — the
-    // kmeans CTE generator is parameterized, so the two oracles share
-    // every line of logic and differ only in (k, iters)
-    "dedup_embedding_semantic" ->
-      s"""WITH ${kmeansSqlCtes(8, 2)},
-        |${kmeansFinalAssignCte(2)},
-        |kf AS (SELECT vec_id, qe, cell,
-        |    CAST(list_sum([x * x for x in qe]) AS BIGINT) AS qq FROM kfin)
-        |SELECT id_a, id_b, cluster, dot_q FROM (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.cell AS cluster,
-        |    a.qq AS qqa, b.qq AS qqb,
-        |    CAST(list_sum(list_transform(generate_series(1, len(a.qe)),
-        |      i -> a.qe[i] * b.qe[i])) AS BIGINT) AS dot_q
-        |  FROM kf a JOIN kf b ON a.cell = b.cell AND a.vec_id < b.vec_id)
-        |WHERE qqa > 0 AND qqb > 0 AND dot_q > 0
-        |  AND 25 * CAST(dot_q AS HUGEINT) * dot_q
-        |      >= 4 * CAST(qqa AS HUGEINT) * qqb""".stripMargin,
-    "embedding_quantize" ->
-      """WITH b AS (SELECT vec_id, embedding,
-        |    CASE WHEN m = 0 THEN 1.0 ELSE CAST(m AS DOUBLE) / 127.0 END AS scale
-        |  FROM (SELECT vec_id, embedding,
-        |    list_max([abs(x) for x in embedding]) AS m FROM embeddings)),
-        |q AS (SELECT vec_id, scale,
-        |    [CAST(floor(CAST(x AS DOUBLE) / scale + 0.5) AS INT) for x in embedding] AS qs
-        |  FROM b)
-        |SELECT vec_id, scale, CAST(list_sum(qs) AS BIGINT) AS q_sum,
-        |  list_min(qs) AS q_min, list_max(qs) AS q_max FROM q""".stripMargin,
-    // the Luhn fold replayed as the same right-indexed list fold
-    "pii_stats" ->
-      s"""WITH dp AS (${Fixtures.pii.sql})
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(text,
-        |    '\\d{3}[-.]\\d{3}[-.]\\d{4}')) AS BIGINT) AS n_phones,
-        |  CAST(len(regexp_extract_all(text,
-        |    '(\\d{1,3}\\.){3}\\d{1,3}')) AS BIGINT) AS n_ips,
-        |  CAST(len(regexp_extract_all(text, '[0-9]{13,19}')) AS BIGINT)
-        |    AS n_digit_runs,
-        |  CAST(len(list_filter(regexp_extract_all(text, '[0-9]{13,19}'),
-        |    c -> list_sum(list_transform(generate_series(1, length(c)),
-        |      j -> CASE WHEN j % 2 = 0 THEN
-        |          CASE WHEN 2 * (ascii(substr(c, CAST(length(c) - j + 1 AS INT), 1)) - 48) > 9
-        |            THEN 2 * (ascii(substr(c, CAST(length(c) - j + 1 AS INT), 1)) - 48) - 9
-        |            ELSE 2 * (ascii(substr(c, CAST(length(c) - j + 1 AS INT), 1)) - 48) END
-        |        ELSE ascii(substr(c, CAST(length(c) - j + 1 AS INT), 1)) - 48
-        |        END)) % 10 = 0)) AS BIGINT) AS n_cards_valid
-        |FROM dp""".stripMargin,
-    "pii_redact" ->
-"""SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(
-        |  text || ' contact: user' || CAST(doc_id AS VARCHAR) || '@ex-ample.com or 10.1.'
-        |    || CAST(doc_id % 256 AS VARCHAR) || '.7 ph 555-123-4567',
-        |  '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-        |  '\d{3}[-.]\d{3}[-.]\d{4}', '<PHONE>', 'g'),
-        |  '(^|[^0-9.])((\d{1,3}\.){3}\d{1,3})([^0-9.]|$)', '\1<IP>\4', 'g') AS clean
-        |FROM documents""".stripMargin,
-    "dedup_clusters" -> (ccCte +
-      "\nSELECT node AS doc_id, cluster_id FROM cc"),
-    // the always-mine twin computes the identical map, so the oracle is
-    // the same recursive-CTE connected-components replay
-    "dedup_cluster_mine" -> (ccCte +
-      "\nSELECT node AS doc_id, cluster_id FROM cc"),
-    // fold ≡ full-mine: the incrementally-folded map over the 3-shard
-    // split must equal CC over the WHOLE table's pair mining — the
-    // oracle is deliberately the full-corpus replay, so any fold error
-    // (lost cross-shard pair, stale stored edge) breaks the value hash
-    "dedup_clusters_incremental" -> (ccCte +
-      "\nSELECT node AS doc_id, cluster_id FROM cc"),
-    // folded line state ≡ the whole nl-corpus census (the
-    // text_boilerplate_lines oracle verbatim): any fold error —
-    // double-counted shard, lost (sum,sum,min) merge key, stale stored
-    // state — breaks the hash
-    "text_boilerplate_folded" ->
-      s"""WITH dnl AS (${Fixtures.nl.sql}),
-        |e AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM dnl)
-        |SELECT line, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_occurrences, min(doc_id) AS keeper
-        |FROM e WHERE line <> ''
-        |GROUP BY line HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
-    "dedup_report" -> (ccCte + """
-      |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-      |  CAST(count(cc.cluster_id) AS BIGINT) AS n_clustered,
-      |  CAST(count(CASE WHEN cc.cluster_id IS NOT NULL
-      |    AND cc.cluster_id <> d.doc_id THEN 1 END) AS BIGINT) AS n_dropped,
-      |  ((CAST(count(*) AS BIGINT) - CAST(count(CASE WHEN cc.cluster_id IS NOT NULL
-      |    AND cc.cluster_id <> d.doc_id THEN 1 END) AS BIGINT)) * 10000)
-      |    // CAST(count(*) AS BIGINT) AS keep_rate_e4
-      |FROM documents d LEFT JOIN cc ON cc.node = d.doc_id
-      |GROUP BY 1""".stripMargin),
-    "dedup_cluster_sizes" -> (ccCte + """,
-      |szs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS sz
-      |  FROM cc GROUP BY 1)
-      |SELECT sz, CAST(count(*) AS BIGINT) AS n_clusters
-      |FROM szs GROUP BY 1""".stripMargin),
-    "dedup_containment" ->
-      s"""WITH dc AS MATERIALIZED (${Fixtures.cont.sql}),
-         |w AS (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-         |    x -> x <> '') AS ws FROM dc),
-         |sh AS (SELECT DISTINCT doc_id, shingle FROM
-         |  (SELECT doc_id, unnest([array_to_string(ws[i:i+2], ' ')
-         |      for i in range(1, len(ws) - 1)]) AS shingle
-         |    FROM w WHERE len(ws) >= 3)),
-         |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-         |  FROM sh GROUP BY 1),
-         |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    CAST(count(*) AS BIGINT) AS shared
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
-         |    AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         |m AS (SELECT p.id_a, p.id_b, p.shared,
-         |    CAST(p.shared * 10000 // za.sz AS DOUBLE)
-         |      / CAST(10000 AS DOUBLE) AS cont_a,
-         |    CAST(p.shared * 10000 // zb.sz AS DOUBLE)
-         |      / CAST(10000 AS DOUBLE) AS cont_b
-         |  FROM p JOIN sz za ON p.id_a = za.doc_id
-         |    JOIN sz zb ON p.id_b = zb.doc_id)
-         |SELECT * FROM m WHERE greatest(cont_a, cont_b) >= 0.9""".stripMargin,
-    // clusters ∘ the integer grid quality score: survivor = max score,
-    // ties to lowest doc_id
-    "dedup_survivors_quality" -> (ccCte + """,
-      |q AS (SELECT doc_id,
-      |    (LEAST(len(string_split(lower(text), ' ')) * 100, 10000) * 7
-      |      + LEAST(len(list_filter(string_split(lower(text), ' '),
-      |          x -> x = 'the' OR x = 'a' OR x = 'and' OR x = 'of'))
-      |        * 100000 // len(string_split(lower(text), ' ')), 10000) * 3)
-      |      // 10 AS q_e4
-      |  FROM documents),
-      |j AS (SELECT cc.cluster_id, cc.node AS doc_id, q.q_e4
-      |  FROM cc JOIN q ON cc.node = q.doc_id),
-      |b AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-      |    max(q_e4) AS bq FROM j GROUP BY 1)
-      |SELECT b.cluster_id, b.n_members,
-      |  CAST(min(j.doc_id) AS BIGINT) AS survivor_id,
-      |  CAST(b.bq AS DOUBLE) / CAST(10000 AS DOUBLE) AS survivor_quality
-      |FROM b JOIN j ON j.cluster_id = b.cluster_id AND j.q_e4 = b.bq
-      |GROUP BY b.cluster_id, b.n_members, b.bq""".stripMargin),
-    "dedup_survivors" -> survivorsSql,
-    // served from the FOLDED incremental map: fold ≡ full-mine, so the
-    // replay is identical — a fold error surfaces as a survivor diff
-    "dedup_survivors_incremental" -> survivorsSql,
-    // brute-force simhash in SQL: same md5-derived 60-bit token hash and
-    // majority-bit fingerprint as SimHash60, all pairs checked exactly —
-    // verifies the Spark side's pigeonhole banding loses no pairs
-    "dedup_simhash" ->
-      """WITH th AS (
-        |  SELECT doc_id, CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
-        |  FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents)),
-        |bits AS (
-        |  SELECT doc_id, j,
-        |    SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-        |  FROM th CROSS JOIN (SELECT unnest(range(0, 60)) AS j) GROUP BY 1, 2),
-        |fp AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS fp
-        |  FROM bits GROUP BY 1)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(bit_count(xor(a.fp, b.fp)) AS INT) AS hamming
-        |FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.fp, b.fp)) <= 8""".stripMargin,
-    // the sf0.01 auto-tune geometry: headline (planted, θ=0.7) resolves
-    // planes=6/bands=29 from nEstimate=520/targetBucket=16; stress
-    // (θ=0.4) resolves planes=4/bands=32 from n=500/targetBucket=64 —
-    // the generator recomputes via the SAME autoPlanes/autoBands
-    "dedup_embedding_lsh" ->
-      embeddingLshOracleSql(520L, 16L, 0.7, planted = true),
-    "dedup_embedding_lsh_stress" ->
-      embeddingLshOracleSql(500L, 64L, 0.4, planted = false),
-    "dedup_embedding" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS cos
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) >= 0.4""".stripMargin,
-    "ann_topk" ->
-      """SELECT query_id, rank, neighbor_id, cos FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS cos,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS INT) AS rank
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-        |  WHERE a.vec_id IN (0, 1, 2, 3, 4))
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "ann_lsh_topk" -> annLshTopkOracleSql,
-    "ann_hard_negatives" ->
-      """SELECT query_id, rank, neighbor_id, cos FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 4) AS cos,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS INT) AS rank
-        |  FROM embeddings a JOIN embeddings b ON b.label <> a.label
-        |  WHERE a.vec_id IN (0, 1, 2, 3, 4))
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "ann_triplets" ->
-      """WITH s AS (SELECT a.vec_id AS anchor_id,
-        |    (b.label = a.label) AS is_pos, b.vec_id AS cand_id,
-        |    list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |      CAST(b.embedding AS DOUBLE[])) AS cos
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-        |  WHERE a.vec_id IN (0, 1, 2, 3, 4)),
-        |r AS (SELECT anchor_id, is_pos, cand_id, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY anchor_id, is_pos
-        |      ORDER BY cos DESC, cand_id) AS rk FROM s),
-        |p AS (SELECT anchor_id, cand_id AS pos_id, cos AS pc
-        |  FROM r WHERE rk = 1 AND is_pos),
-        |n AS (SELECT anchor_id, cand_id AS neg_id, cos AS nc
-        |  FROM r WHERE rk = 1 AND NOT is_pos)
-        |SELECT anchor_id, pos_id, round(pc, 4) AS pos_cos,
-        |  neg_id, round(nc, 4) AS neg_cos, round(pc - nc, 4) AS margin
-        |FROM p JOIN n USING (anchor_id)""".stripMargin,
-    // build receipt: corpus size under the index (zero vectors drop in
-    // normalization) + the declared compression geometry
-    "ann_pq_build" ->
-      """SELECT count(*) AS n_vectors, 8 AS m, 32 AS ksub, 16 AS nlist,
-        |8 AS code_bytes, 256 AS raw_bytes FROM embeddings
-        |WHERE list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x*x)) > 0""".stripMargin,
-    "nextk_start_position" ->
-      """SELECT count(*) AS start_position FROM lineitem
-        |WHERE NOT ((l_returnflag, l_linestatus) >= ('N', 'F'))""".stripMargin,
-    // exact 1e-4 integer-grid ratios (num*10^4 // den), widened to double
-    // once — mirrors TextAnalysis.quality's divE4 bit-for-bit
-    "text_rarity" ->
-      """WITH toks AS (
-        |  SELECT doc_id, t AS tok FROM (
-        |    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t
-        |    FROM documents)
-        |  WHERE t <> ''),
-        |tf AS (SELECT tok, count(*) AS df FROM toks GROUP BY tok)
-        |SELECT doc_id, count(*) AS n_tokens,
-        |  CAST(SUM(length(bin(df))) AS BIGINT) AS magnitude_sum,
-        |  (CAST(SUM(length(bin(df))) AS BIGINT) * 10000 // count(*)) / 10000.0
-        |    AS mean_magnitude
-        |FROM toks JOIN tf USING (tok) GROUP BY doc_id""".stripMargin,
-    "corpus_mix_temperature" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY source),
-        |r AS (SELECT source,
-        |  CAST(FLOOR(SQRT(CAST((SELECT MIN(n) FROM c) AS DOUBLE) / n) * 10000)
-        |    AS BIGINT) AS cut FROM c)
-        |SELECT d.source, count(*) AS n_kept,
-        |  min(d.doc_id) AS min_id, max(d.doc_id) AS max_id
-        |FROM documents d JOIN r ON d.source = r.source
-        |WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-        |  % 10000 < r.cut
-        |GROUP BY 1""".stripMargin,
-    "corpus_mix_temperature_tokens" ->
-      s"""WITH RECURSIVE ${bpeCte()},
-         |dt AS (SELECT d.doc_id, d.source,
-         |    COALESCE(b.n_tokens_bpe, 0) AS toks
-         |  FROM documents d LEFT JOIN bpe b USING (doc_id)),
-         |c AS (SELECT source, CAST(SUM(toks) AS BIGINT) AS n FROM dt
-         |  GROUP BY source HAVING SUM(toks) > 0),
-         |r AS (SELECT source,
-         |  CAST(FLOOR(SQRT(CAST((SELECT MIN(n) FROM c) AS DOUBLE) / n) * 10000)
-         |    AS BIGINT) AS cut FROM c)
-         |SELECT d.source, count(*) AS n_kept,
-         |  min(d.doc_id) AS min_id, max(d.doc_id) AS max_id
-         |FROM documents d JOIN r ON d.source = r.source
-         |WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-         |  % 10000 < r.cut
-         |GROUP BY 1""".stripMargin,
-    "text_scripts" ->
-      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
-         |b AS (SELECT doc_id, lower(text) AS t FROM dml),
-         |c AS (SELECT doc_id, CAST(length(t) AS BIGINT) AS n_chars,
-         |    CAST(length(t) - length(regexp_replace(t, '[a-z]', '', 'g'))
-         |      AS BIGINT) AS n_latin,
-         |    CAST(length(t) - length(regexp_replace(t, '[一-鿿]', '', 'g'))
-         |      AS BIGINT) AS n_cjk,
-         |    CAST(length(t) - length(regexp_replace(t, '[а-яё]', '', 'g'))
-         |      AS BIGINT) AS n_cyrillic,
-         |    CAST(length(t) - length(regexp_replace(t, '[가-힣]', '', 'g'))
-         |      AS BIGINT) AS n_hangul,
-         |    CAST(length(t) - length(regexp_replace(t, '[0-9]', '', 'g'))
-         |      AS BIGINT) AS n_digit
-         |  FROM b)
-         |SELECT *, CAST(greatest(n_latin, n_cjk, n_cyrillic, n_hangul)
-         |    * 10000 // greatest(n_chars, 1) AS DOUBLE)
-         |  / CAST(10000 AS DOUBLE) AS dominant_share
-         |FROM c""".stripMargin,
-    "quality_percentile" ->
-      """WITH b AS (SELECT doc_id, source, length(text) AS len,
-        |    len(string_split(lower(text), ' ')) AS n,
-        |    len(list_filter(string_split(lower(text), ' '),
-        |      x -> x = 'the' OR x = 'a' OR x = 'and' OR x = 'of')) AS stop
-        |  FROM documents),
-        |g AS (SELECT doc_id, source,
-        |    CAST((LEAST(n * 100, 10000) * 7
-        |      + LEAST(stop * 100000 // n, 10000) * 3) // 10 AS BIGINT) AS q_e4
-        |  FROM b),
-        |c AS (SELECT source, q_e4, count(*) AS c FROM g GROUP BY 1, 2),
-        |nn AS (SELECT source, count(*) AS n FROM g GROUP BY 1),
-        |st AS (SELECT c.source, c.q_e4,
-        |    CAST((SUM(c.c) OVER (PARTITION BY c.source ORDER BY c.q_e4
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c.c)
-        |      * 10000 // nn.n AS DOUBLE) / CAST(10000 AS DOUBLE) AS pct
-        |  FROM c JOIN nn USING (source))
-        |SELECT g.doc_id, g.source,
-        |  CAST(g.q_e4 AS DOUBLE) / CAST(10000 AS DOUBLE) AS quality_score,
-        |  st.pct
-        |FROM g JOIN st ON g.source = st.source AND g.q_e4 = st.q_e4""".stripMargin,
-    "corpus_diff" ->
-      """WITH v1 AS (SELECT doc_id, md5(text) AS h1 FROM documents),
-        |v2 AS (SELECT doc_id, md5(CASE WHEN doc_id % 37 = 5
-        |      THEN text || ' v2 edit' ELSE text END) AS h2
-        |    FROM documents WHERE doc_id % 37 <> 11
-        |  UNION ALL SELECT * FROM (VALUES
-        |    (9990001, md5('brand new doc one')),
-        |    (9990002, md5('brand new doc two')),
-        |    (9990003, md5('brand new doc three'))) t(doc_id, h2))
-        |SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id,
-        |  CASE WHEN v2.h2 IS NULL THEN 'removed'
-        |    WHEN v1.h1 IS NULL THEN 'added'
-        |    WHEN v1.h1 <> v2.h2 THEN 'changed'
-        |    ELSE 'unchanged' END AS status
-        |FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id""".stripMargin,
-    "shard_balance" ->
-      """WITH s AS (SELECT
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-        |      AS BIGINT) % 16 AS shard,
-        |    CAST(len(list_filter(string_split(lower(text), ' '),
-        |      w -> w <> '')) AS BIGINT) AS nt
-        |  FROM documents),
-        |p AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(SUM(nt) AS BIGINT) AS n_tokens FROM s GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM p)
-        |SELECT shard, n_docs, n_tokens,
-        |  CAST(n_docs * 10000 // total AS DOUBLE) / CAST(10000 AS DOUBLE)
-        |    AS doc_share
-        |FROM p CROSS JOIN t""".stripMargin,
-    "text_quality" ->
-      """WITH b AS (SELECT doc_id, length(text) AS len,
-        |    len(string_split(lower(text), ' ')) AS n,
-        |    len(list_filter(string_split(lower(text), ' '),
-        |      x -> x = 'the' OR x = 'a' OR x = 'and' OR x = 'of')) AS stop
-        |  FROM documents),
-        |e AS (SELECT doc_id, n,
-        |    (len - (n - 1)) * 10000 // n AS mlen_e4,
-        |    stop * 10000 // n AS stop_e4,
-        |    (LEAST(n * 100, 10000) * 7 + LEAST(stop * 100000 // n, 10000) * 3) // 10 AS score_e4
-        |  FROM b)
-        |SELECT doc_id, n AS n_tokens,
-        |  CAST(mlen_e4 AS DOUBLE) / CAST(10000 AS DOUBLE) AS mean_token_len,
-        |  CAST(stop_e4 AS DOUBLE) / CAST(10000 AS DOUBLE) AS stopword_ratio,
-        |  CAST(score_e4 AS DOUBLE) / CAST(10000 AS DOUBLE) AS quality_score
-        |FROM e""".stripMargin,
-    // the Gopher gate replayed rule by rule on the same 1e-4 grid
-    "text_gopher_rules" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |c AS (SELECT doc_id,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(GREATEST(len(ws), 1) AS BIGINT) AS den,
-        |    CAST(COALESCE(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
-        |    CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS n_alpha,
-        |    CAST(len(list_intersect(list_distinct(ws),
-        |      ['the', 'a', 'of', 'and'])) AS BIGINT) AS n_stop,
-        |    CAST(len(list_filter(ws, w -> contains(w, '#') OR contains(w, '...'))) AS BIGINT) AS n_sym,
-        |    CAST(COALESCE(list_max(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS max_word_len
-        |  FROM t)
-        |SELECT doc_id, n_words,
-        |  CAST(sum_len * 10000 // den AS DOUBLE) / 10000.0 AS mean_word_len,
-        |  CAST(n_alpha * 10000 // den AS DOUBLE) / 10000.0 AS alpha_word_frac,
-        |  n_stop AS n_stopwords,
-        |  CAST(n_sym * 10000 // den AS DOUBLE) / 10000.0 AS symbol_word_frac,
-        |  max_word_len,
-        |  (n_words >= 5 AND n_words <= 100000
-        |    AND sum_len * 10000 // den BETWEEN 30000 AND 100000
-        |    AND max_word_len <= 30
-        |    AND n_alpha * 10000 // den >= 8000
-        |    AND n_stop >= 2
-        |    AND n_sym * 10000 // den <= 1000) AS pass
-        |FROM c""".stripMargin,
-    // the funnel replayed stage by stage: the gopher conjunction is the
-    // text_gopher_rules pass expr, blocklist-any = contains-any (the
-    // automaton's leftmost-greedy consumption cannot hide a contained
-    // term — any occurrence is covered by SOME matched term), survivor
-    // election via the same windowed min
-    "corpus_filter_funnel" ->
-      """WITH t AS (SELECT doc_id, lang, text, md5(text) AS h,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |c AS (SELECT doc_id, lang, h,
-        |    CAST(len(ws) AS BIGINT) AS n_words,
-        |    CAST(GREATEST(len(ws), 1) AS BIGINT) AS den,
-        |    CAST(COALESCE(list_sum(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS sum_len,
-        |    CAST(len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS n_alpha,
-        |    CAST(len(list_intersect(list_distinct(ws),
-        |      ['the', 'a', 'of', 'and'])) AS BIGINT) AS n_stop,
-        |    CAST(len(list_filter(ws, w -> contains(w, '#') OR contains(w, '...'))) AS BIGINT) AS n_sym,
-        |    CAST(COALESCE(list_max(list_transform(ws, w -> length(w))), 0) AS BIGINT) AS max_word_len,
-        |    NOT (contains(lower(text), 'slow join')
-        |      OR contains(lower(text), 'qqq')) AS b
-        |  FROM t),
-        |f AS (SELECT doc_id, h,
-        |    (n_words >= 5 AND n_words <= 100000
-        |      AND sum_len * 10000 // den BETWEEN 30000 AND 100000
-        |      AND max_word_len <= 30
-        |      AND n_alpha * 10000 // den >= 8000
-        |      AND n_stop >= 2
-        |      AND n_sym * 10000 // den <= 1000) AS g,
-        |    lang = 'en' AS l, b
-        |  FROM c),
-        |s AS (SELECT *, g AND l AND b AS s3 FROM f),
-        |s4 AS (SELECT *, s3 AND doc_id = min(CASE WHEN s3 THEN doc_id END)
-        |    OVER (PARTITION BY h) AS sv FROM s)
-        |SELECT '0_ingested' AS stage, count(*) AS n_docs FROM s4
-        |UNION ALL SELECT '1_quality', count(*) FILTER (WHERE g) FROM s4
-        |UNION ALL SELECT '2_language', count(*) FILTER (WHERE g AND l) FROM s4
-        |UNION ALL SELECT '3_blocklist', count(*) FILTER (WHERE s3) FROM s4
-        |UNION ALL SELECT '4_dedup', count(*) FILTER (WHERE sv) FROM s4""".stripMargin,
-    // cross-doc boilerplate-line detection over the newline-planted
-    // corpus: exact line-string grouping on both sides
-    // the incremental merge is exact on disjoint shards, so the same
-    // batch SQL is its oracle verbatim
-    "text_boilerplate_incremental" ->
-      s"""WITH dnl AS (${Fixtures.nl.sql}),
-        |e AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM dnl)
-        |SELECT line, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_occurrences, min(doc_id) AS keeper
-        |FROM e WHERE line <> ''
-        |GROUP BY line HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
-    "text_boilerplate_lines" ->
-      s"""WITH dnl AS (${Fixtures.nl.sql}),
-        |e AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM dnl)
-        |SELECT line, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_occurrences, min(doc_id) AS keeper
-        |FROM e WHERE line <> ''
-        |GROUP BY line HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
-    // the destructive pass replayed positionally: keeper keeps all its
-    // copies, every other doc loses all of them, blanks always survive
-    "text_remove_dup_lines" ->
-      s"""WITH dnl AS (${Fixtures.nl.sql}),
-        |l0 AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM dnl),
-        |e0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ls)),
-        |    i -> {'p': i, 'line': ls[i]})) AS u FROM l0),
-        |e AS (SELECT doc_id, u.p AS p, u.line AS line FROM e0),
-        |dup AS (SELECT line, min(doc_id) AS keeper FROM e WHERE line <> ''
-        |  GROUP BY line HAVING count(DISTINCT doc_id) >= 2),
-        |kept AS (SELECT e.doc_id, e.p, e.line FROM e LEFT JOIN dup
-        |    ON e.line = dup.line
-        |  WHERE dup.line IS NULL OR e.doc_id = dup.keeper),
-        |r AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |    string_agg(line, chr(10) ORDER BY p) AS clean_text
-        |  FROM kept GROUP BY doc_id)
-        |SELECT l0.doc_id, CAST(len(ls) AS BIGINT) AS n_lines,
-        |  COALESCE(n_kept, 0) AS n_kept,
-        |  COALESCE(clean_text, '') AS clean_text
-        |FROM l0 LEFT JOIN r USING (doc_id)""".stripMargin,
-    // the same transform under the CCNet normalized key; the regex
-    // spells ASCII punctuation as explicit ranges (Java∩RE2) and the
-    // reassembled text keeps RAW lines
-    "text_remove_dup_lines_norm" ->
-      s"""WITH dnl AS (${Fixtures.nl.sql}),
-        |l0 AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM dnl),
-        |e0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ls)),
-        |    i -> {'p': i, 'line': ls[i]})) AS u FROM l0),
-        |e AS (SELECT doc_id, u.p AS p, u.line AS line,
-        |    trim(regexp_replace(regexp_replace(lower(u.line),
-        |      '[0-9!-/:-@\\[-`{-~]', '', 'g'), ' +', ' ', 'g')) AS k FROM e0),
-        |dup AS (SELECT k, min(doc_id) AS keeper FROM e WHERE k <> ''
-        |  GROUP BY k HAVING count(DISTINCT doc_id) >= 2),
-        |kept AS (SELECT e.doc_id, e.p, e.line FROM e LEFT JOIN dup
-        |    ON e.k = dup.k
-        |  WHERE dup.k IS NULL OR e.doc_id = dup.keeper),
-        |r AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |    string_agg(line, chr(10) ORDER BY p) AS clean_text
-        |  FROM kept GROUP BY doc_id)
-        |SELECT l0.doc_id, CAST(len(ls) AS BIGINT) AS n_lines,
-        |  COALESCE(n_kept, 0) AS n_kept,
-        |  COALESCE(clean_text, '') AS clean_text
-        |FROM l0 LEFT JOIN r USING (doc_id)""".stripMargin,
-    // the frozen-list strip: same staging, no keeper exception
-    "text_strip_boilerplate" -> stripBoilerplateSql,
-    // served from the FOLDED line state (folded census ≡ whole-corpus
-    // census, so the strip replay is identical)
-    "text_strip_boilerplate_folded" -> stripBoilerplateSql,
-    // integer PageRank replayed with mechanically-unrolled iteration
-    // CTEs — bit-identical // arithmetic at every step
-    "link_components" ->
-      """WITH RECURSIVE p0 AS (
-        |  SELECT DISTINCT source AS src,
-        |    unnest(list_transform(
-        |      regexp_extract_all(text, 'https?://[a-z0-9.-]+'),
-        |      u -> split_part(u, '//', 2))) AS dst
-        |  FROM documents),
-        |e AS (SELECT src, dst FROM p0 UNION SELECT dst, src FROM p0),
-        |reach(node, r) AS (
-        |  SELECT src, src FROM e
-        |  UNION
-        |  SELECT e2.src, reach.r FROM e e2 JOIN reach ON e2.dst = reach.node)
-        |SELECT node, min(r) AS component FROM reach GROUP BY node""".stripMargin,
-    "link_domain_rank" -> linkRankSql(4),
-    // the mutual-recursion fixed point replayed round by round (raw
-    // sums + max-normalization, all truncating integer arithmetic)
-    "link_hits" -> linkHitsSql(3),
-    // C4 URL filter: same scheme+host regex, domain = after the '//'
-    "text_url_filter" ->
-      s"""WITH du AS (${Fixtures.url.sql}),
-        |p AS (SELECT doc_id, list_transform(
-        |    regexp_extract_all(text, 'https?://[a-z0-9.-]+'),
-        |    u -> split_part(u, '//', 2)) AS doms FROM du)
-        |SELECT doc_id, CAST(len(doms) AS BIGINT) AS n_urls,
-        |  COALESCE(array_to_string(list_sort(list_distinct(doms)), ','), '')
-        |    AS domains,
-        |  len(list_intersect(list_distinct(doms),
-        |    [${blockedDomains.map(d => s"'$d'").mkString(", ")}])) > 0 AS flagged
-        |FROM p""".stripMargin,
-    // the canonicalization chain replayed step by step (prefix-lower,
-    // fragment, param filter, default ports, trailing slash); DuckDB
-    // backrefs are \1 where Spark's are $1 — same RE2-safe patterns
-    "url_canonicalize" ->
-      s"""WITH du AS (${Fixtures.urlCanon.sql}),
-        |r AS (SELECT u.url FROM du,
-        |  UNNEST(regexp_extract_all(text, '(?i)https?://[^ ]+')) AS u(url)),
-        |c1 AS (SELECT url,
-        |  lower(regexp_extract(url, '^([A-Za-z]+://[A-Za-z0-9.-]+(:[0-9]+)?)', 1))
-        |    || substr(url, length(regexp_extract(url,
-        |      '^([A-Za-z]+://[A-Za-z0-9.-]+(:[0-9]+)?)', 1)) + 1) AS u1
-        |  FROM r),
-        |c2 AS (SELECT url, regexp_replace(u1, '#.*$$', '') AS u2 FROM c1),
-        |c3 AS (SELECT url, split_part(u2, '?', 1) AS base,
-        |  CASE WHEN length(u2) > length(split_part(u2, '?', 1))
-        |    THEN substr(u2, length(split_part(u2, '?', 1)) + 2)
-        |    ELSE '' END AS q FROM c2),
-        |c4 AS (SELECT url, base ||
-        |    CASE WHEN len(kept) > 0 THEN '?' || array_to_string(kept, '&')
-        |      ELSE '' END AS u3
-        |  FROM (SELECT url, base, list_filter(string_split(q, '&'),
-        |    p -> p <> '' AND NOT regexp_matches(p,
-        |      '^(utm_[^=]*|fbclid|gclid)(=|$$)')) AS kept FROM c3)),
-        |c5 AS (SELECT url, regexp_replace(regexp_replace(u3,
-        |    '^(http://[a-z0-9.-]+):80($$|/)', '\\1\\2'),
-        |    '^(https://[a-z0-9.-]+):443($$|/)', '\\1\\2') AS u4 FROM c4),
-        |c6 AS (SELECT url, regexp_replace(u4, '/$$', '') AS uc FROM c5)
-        |SELECT uc AS url_canon, CAST(count(*) AS BIGINT) AS n_urls,
-        |  CAST(count(DISTINCT url) AS BIGINT) AS n_raw_variants
-        |FROM c6 GROUP BY 1""".stripMargin,
-    // the quality grid re-derived, then the per-source top-5 as a
-    // deterministic (score desc, doc_id asc) row_number window
-    "source_cap" ->
-      """WITH b AS (SELECT doc_id, length(text) AS len,
-        |    len(string_split(lower(text), ' ')) AS n,
-        |    len(list_filter(string_split(lower(text), ' '),
-        |      x -> x = 'the' OR x = 'a' OR x = 'and' OR x = 'of')) AS stop
-        |  FROM documents),
-        |e AS (SELECT doc_id,
-        |    (LEAST(n * 100, 10000) * 7 + LEAST(stop * 100000 // n, 10000) * 3)
-        |      // 10 AS score_e4
-        |  FROM b),
-        |j AS (SELECT d.source, d.doc_id, e.score_e4
-        |  FROM documents d JOIN e USING (doc_id))
-        |SELECT source, CAST(row_number() OVER w AS INT) AS rank, doc_id,
-        |  CAST(score_e4 AS DOUBLE) / CAST(10000 AS DOUBLE) AS quality_score
-        |FROM j WINDOW w AS (PARTITION BY source ORDER BY score_e4 DESC, doc_id)
-        |QUALIFY row_number() OVER w <= 5""".stripMargin,
-    // HTML extraction replayed transform by transform (DuckDB needs the
-    // explicit 'g' flag; Spark regexp_replace is global by default)
-    "text_html_extract" ->
-      s"""WITH dh AS (${Fixtures.html.sql}),
-        |c AS (SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    text, '<!--.*?-->', ' ', 'g'), '<[^>]*>', ' ', 'g'),
-        |    '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'),
-        |    '&#39;', '''', 'g'), '&amp;', '&', 'g'),
-        |    '\\s+', ' ', 'g')) AS clean_text,
-        |  list_transform(regexp_extract_all(text, '<a [^>]*>([^<]*)</a>', 1),
-        |    t -> trim(regexp_replace(t, '\\s+', ' ', 'g'))) AS anc
-        |  FROM dh)
-        |SELECT doc_id, clean_text,
-        |  CAST(length(clean_text) AS BIGINT) AS n_chars,
-        |  CAST(len(anc) AS BIGINT) AS n_links,
-        |  CAST(COALESCE(list_sum(list_transform(anc, t -> length(t))), 0)
-        |    AS BIGINT) AS n_link_chars,
-        |  CAST(COALESCE(list_sum(list_transform(anc, t -> length(t))), 0)
-        |    * 10000 // GREATEST(length(clean_text), 1) AS DOUBLE) / 10000.0
-        |    AS link_density
-        |FROM c""".stripMargin,
-    // semantic decontamination replayed with the shared list_cosine /
-    // round(·,4) precedent (dedup_embedding)
-    "decontam_embedding" ->
-      """SELECT t.vec_id, count(*) AS n_hits,
-        |  max(round(list_cosine_similarity(CAST(t.embedding AS DOUBLE[]),
-        |    CAST(e.embedding AS DOUBLE[])), 4)) AS max_cos
-        |FROM embeddings t JOIN embeddings e ON t.label <> 9 AND e.label = 9
-        |WHERE round(list_cosine_similarity(CAST(t.embedding AS DOUBLE[]),
-        |  CAST(e.embedding AS DOUBLE[])), 4) >= 0.4
-        |GROUP BY 1""".stripMargin,
-    "text_tokens" ->
-      """SELECT source, count(*) AS n_docs,
-        |CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-        |CAST(SUM(len(regexp_extract_all(text, '\w+|[^\w\s]'))) AS BIGINT) AS regex_tokens,
-        |CAST(SUM(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS BIGINT) AS est_bpe_tokens
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the Viterbi DP replayed through 12 unrolled per-position stages
-    "text_tokens_unigram" -> unigramSql(unigramVocab, 12),
-    // the full training loop replayed: two DP blocks with the derived
-    // cost table between them
-    "unigram_train_costs" -> unigramTrainSql(unigramVocab, 12, 2),
-    // prune CTE between the trained table and a third full EM round
-    "unigram_train_pruned" -> unigramTrainPrunedSql(unigramVocab, 12, 2, 1500L),
-    // train→serve: a third DP block under the trained cost table
-    "text_tokens_unigram_trained" ->
-      unigramTrainedServeSql(unigramVocab, 12, 2),
-    // the greedy loop replayed through 12 unrolled advance-or-UNK stages
-    "text_tokens_wordpiece" -> wordpieceSql(wordpieceVocab, 12),
-    // three family oracles wrapped as derived tables (DuckDB allows a
-    // full WITH — even RECURSIVE — inside a subquery) + byte totals
-    "tokenizer_compare" -> {
-      def wrap(name: String, inner: String, pieces: String) =
-        s"""SELECT tokenizer, n_docs, n_pieces, n_bytes,
-           |  CAST(n_bytes * 10000 // n_pieces AS DOUBLE)
-           |    / CAST(10000 AS DOUBLE) AS bytes_per_piece
-           |FROM (SELECT '$name' AS tokenizer,
-           |    CAST(count(*) AS BIGINT) AS n_docs,
-           |    CAST(SUM($pieces) AS BIGINT) AS n_pieces,
-           |    CAST(SUM(d.b) AS BIGINT) AS n_bytes
-           |  FROM ($inner) s JOIN (SELECT doc_id,
-           |    CAST(strlen(text) AS BIGINT) AS b FROM documents) d
-           |  USING (doc_id))""".stripMargin
-      val bpeInner =
-        s"""WITH RECURSIVE ${bpeCte("documents")}
-           |SELECT d.doc_id, COALESCE(b.n_tokens_bpe, 0) AS n_tokens_bpe
-           |FROM documents d LEFT JOIN bpe b USING (doc_id)""".stripMargin
-      wrap("bpe", bpeInner, "n_tokens_bpe") + "\nUNION ALL\n" +
-        wrap("unigram", unigramSql(unigramVocab, 12), "n_pieces") +
-        "\nUNION ALL\n" +
-        wrap("wordpiece", wordpieceSql(wordpieceVocab, 12), "n_pieces")
-    },
-    // the likelihood-scored merge loop replayed stage by stage (pair
-    // counts, symbol counts, surrogate argmax, ##-stripping apply)
-    "wordpiece_train_merges" ->
-      graft.text.BpeTrainer.wordpieceTrainingOracleSql(8),
-    // training stages -> derived piece set -> the same greedy replay
-    "text_tokens_wordpiece_trained" -> wordpieceTrainedServeSql(8, 12),
-    "text_tokens_bpe" ->
-withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
-         |SELECT d.doc_id, COALESCE(b.n_words, 0) AS n_words,
-         |  COALESCE(b.n_tokens_bpe, 0) AS n_tokens_bpe
-         |FROM dml d LEFT JOIN bpe b USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin),
-    "text_tokens_fertility" ->
-      withMlDocs(s"""WITH RECURSIVE ${bpeCte("dml")}
-         |SELECT lang, count(*) AS n_docs,
-         |  CAST(SUM(strlen(text)) AS BIGINT) AS total_bytes,
-         |  CAST(SUM(COALESCE(b.n_tokens_bpe, 0)) AS BIGINT) AS total_tokens,
-         |  ((CAST(SUM(strlen(text)) AS BIGINT) * 10000)
-         |    // CAST(SUM(COALESCE(b.n_tokens_bpe, 0)) AS BIGINT)) / 10000.0
-         |    AS bytes_per_token
-         |FROM dml d LEFT JOIN bpe b USING (doc_id) GROUP BY 1""".stripMargin),
-    "bm25_topk" ->
-      """WITH words AS (SELECT doc_id, u.w FROM documents,
-        |    UNNEST(string_split(lower(text), ' ')) AS u(w) WHERE len(u.w) > 0),
-        |dl AS (SELECT doc_id, count(*) AS dlen FROM words GROUP BY 1),
-        |stats AS (SELECT CAST(SUM(dlen) AS DOUBLE) AS sumdl,
-        |  CAST(COUNT(*) AS DOUBLE) AS nd FROM dl),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM words
-        |  WHERE w IN ('spark', 'join', 'merge', 'slow') GROUP BY 1, 2),
-        |dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT tf.doc_id,
-        |  CAST(SUM(CAST(FLOOR(ln((nd - df + 0.5) / (df + 0.5) + 1.0)
-        |    * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dlen / (sumdl / nd)))
-        |    * 1000000.0) AS BIGINT)) AS BIGINT) AS score_micro
-        |  FROM tf JOIN dfq USING (w) JOIN dl USING (doc_id) CROSS JOIN stats
-        |  GROUP BY 1)
-        |SELECT ROW_NUMBER() OVER (ORDER BY score_micro DESC, doc_id) AS rank,
-        |  doc_id, score_micro
-        |FROM sc ORDER BY score_micro DESC, doc_id LIMIT 20""".stripMargin,
-    "hybrid_rrf" ->
-      """WITH words AS (SELECT doc_id, u.w FROM documents,
-        |    UNNEST(string_split(lower(text), ' ')) AS u(w) WHERE len(u.w) > 0),
-        |dl AS (SELECT doc_id, count(*) AS dlen FROM words GROUP BY 1),
-        |stats AS (SELECT CAST(SUM(dlen) AS DOUBLE) AS sumdl,
-        |  CAST(COUNT(*) AS DOUBLE) AS nd FROM dl),
-        |tf AS (SELECT doc_id, w, count(*) AS tf FROM words
-        |  WHERE w IN ('spark', 'join', 'merge', 'slow') GROUP BY 1, 2),
-        |dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT tf.doc_id,
-        |  CAST(SUM(CAST(FLOOR(ln((nd - df + 0.5) / (df + 0.5) + 1.0)
-        |    * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dlen / (sumdl / nd)))
-        |    * 1000000.0) AS BIGINT)) AS BIGINT) AS score_micro
-        |  FROM tf JOIN dfq USING (w) JOIN dl USING (doc_id) CROSS JOIN stats
-        |  GROUP BY 1),
-        |lex AS (SELECT doc_id, CAST(ROW_NUMBER() OVER (
-        |    ORDER BY score_micro DESC, doc_id) AS BIGINT) AS lex_rank
-        |  FROM sc ORDER BY score_micro DESC, doc_id LIMIT 50),
-        |qv AS (SELECT [CAST(floor(CAST(x AS DOUBLE) * 65536) AS BIGINT)
-        |    for x in embedding] AS qe
-        |  FROM embeddings WHERE vec_id = 0),
-        |dsc AS (SELECT e.vec_id AS doc_id,
-        |    CAST(list_sum(list_transform(generate_series(1, len(e.eq)),
-        |      i -> e.eq[i] * q.qe[i])) AS BIGINT) AS d
-        |  FROM (SELECT vec_id,
-        |      [CAST(floor(CAST(x AS DOUBLE) * 65536) AS BIGINT)
-        |        for x in embedding] AS eq FROM embeddings) e
-        |    CROSS JOIN qv q
-        |  WHERE e.vec_id != 0),
-        |dr AS (SELECT doc_id, CAST(ROW_NUMBER() OVER (
-        |    ORDER BY d DESC, doc_id) AS BIGINT) AS dense_rank
-        |  FROM dsc ORDER BY d DESC, doc_id LIMIT 50),
-        |fused AS (SELECT COALESCE(l.doc_id, r.doc_id) AS doc_id,
-        |    l.lex_rank, r.dense_rank,
-        |    COALESCE(1000000 // (60 + l.lex_rank), 0)
-        |      + COALESCE(1000000 // (60 + r.dense_rank), 0) AS rrf_e6
-        |  FROM lex l FULL OUTER JOIN dr r ON l.doc_id = r.doc_id
-        |  ORDER BY rrf_e6 DESC, doc_id LIMIT 10)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY rrf_e6 DESC, doc_id)
-        |    AS BIGINT) AS rank,
-        |  doc_id, lex_rank, dense_rank, rrf_e6
-        |FROM fused""".stripMargin,
-    "text_normalize_nfc" -> {
-      val body = """SELECT lang, count(*) AS n_docs,
-        |  CAST(SUM(CASE WHEN text <> nfc_normalize(text) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_changed,
-        |  CAST(count(DISTINCT text) AS BIGINT) AS distinct_raw,
-        |  CAST(count(DISTINCT nfc_normalize(text)) AS BIGINT) AS distinct_nfc,
-        |  CAST(SUM(length(nfc_normalize(text))) AS BIGINT) AS nfc_codepoints
-        |FROM dml GROUP BY 1""".stripMargin
-      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql})\n$body"
-    },
-    "source_similarity" ->
-      """WITH toks AS (SELECT source, u.w AS tok FROM documents,
-        |    UNNEST(string_split(lower(text), ' ')) AS u(w) WHERE u.w <> ''),
-        |tf AS (SELECT source, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |nn AS (SELECT source, CAST(SUM(tf * tf) AS BIGINT) AS n2
-        |  FROM tf GROUP BY 1),
-        |d AS (SELECT a.source AS src_a, b.source AS src_b,
-        |    CAST(SUM(a.tf * b.tf) AS BIGINT) AS dot
-        |  FROM tf a JOIN tf b ON a.tok = b.tok AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT src_a, src_b, dot,
-        |  round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 4) AS cos
-        |FROM d JOIN nn na ON src_a = na.source
-        |  JOIN nn nb ON src_b = nb.source""".stripMargin,
-    // KMV replay: bottom-128 distinct md5-60bit hashes per source, the
-    // Beyer et al. estimator over the union's bottom-k — all integers
-    "source_kmv_jaccard" ->
-      """WITH t AS (SELECT source,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |h AS (SELECT DISTINCT source, u.h FROM (
-        |  SELECT source, list_transform(generate_series(1, len(ws) - 2),
-        |    i -> CAST(('0x' || substr(md5(array_to_string(ws[i:i+2], ' ')), 1, 15))
-        |      AS BIGINT)) AS gh
-        |  FROM t WHERE len(ws) >= 3), UNNEST(gh) AS u(h)),
-        |sig AS (SELECT source, h FROM (SELECT source, h,
-        |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rn FROM h)
-        |  WHERE rn <= 128),
-        |pr AS (SELECT a.source AS sa, b.source AS sb
-        |  FROM (SELECT DISTINCT source FROM sig) a
-        |  JOIN (SELECT DISTINCT source FROM sig) b ON a.source < b.source),
-        |uni AS (SELECT p.sa, p.sb, s.h,
-        |    MAX(CASE WHEN s.source = p.sa THEN 1 ELSE 0 END) AS ina,
-        |    MAX(CASE WHEN s.source = p.sb THEN 1 ELSE 0 END) AS inb
-        |  FROM pr p JOIN sig s ON s.source IN (p.sa, p.sb)
-        |  GROUP BY 1, 2, 3),
-        |rk AS (SELECT sa, sb, ina, inb,
-        |    ROW_NUMBER() OVER (PARTITION BY sa, sb ORDER BY h) AS rn
-        |  FROM uni)
-        |SELECT sa AS src_a, sb AS src_b,
-        |  CAST(COALESCE(SUM(CASE WHEN rn <= 128 AND ina = 1 AND inb = 1
-        |    THEN 1 END), 0) AS BIGINT) AS inter_k,
-        |  (CAST(COALESCE(SUM(CASE WHEN rn <= 128 AND ina = 1 AND inb = 1
-        |    THEN 1 END), 0) AS BIGINT) * 10000)
-        |    // LEAST(128, COUNT(*)) AS jaccard_e4
-        |FROM rk GROUP BY 1, 2""".stripMargin,
-    // the CCNet bucket replay: same bigram-LM stages, integer-micro
-    // mean, counting-based tertile thresholds, value-threshold buckets
-    "text_ccnet_buckets" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents),
-        |big AS (
-        |  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-        |  FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 2),
-        |c2 AS (SELECT w1, w2, count(*) AS n2 FROM big GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(SUM(n2) AS BIGINT) AS n1 FROM c2 GROUP BY 1),
-        |sc AS (SELECT doc_id,
-        |    CAST(SUM(length(bin(n1)) - length(bin(n2))) AS BIGINT) * 10000
-        |      // count(*) AS mean_e4
-        |  FROM big JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
-        |  GROUP BY doc_id),
-        |sl AS (SELECT sc.doc_id, d.lang, mean_e4
-        |  FROM sc JOIN documents d USING (doc_id)),
-        |cnts AS (SELECT lang, mean_e4, count(*) AS c FROM sl GROUP BY 1, 2),
-        |cum AS (SELECT lang, mean_e4,
-        |    SUM(c) OVER (PARTITION BY lang ORDER BY mean_e4) AS cm FROM cnts),
-        |nn AS (SELECT lang, count(*) AS n FROM sl GROUP BY 1),
-        |th AS (SELECT lang,
-        |    MIN(CASE WHEN cm * 3 >= n THEN mean_e4 END) AS t1,
-        |    MIN(CASE WHEN cm * 3 >= 2 * n THEN mean_e4 END) AS t2
-        |  FROM cum JOIN nn USING (lang) GROUP BY lang)
-        |SELECT doc_id, lang, CAST(mean_e4 AS BIGINT) AS mean_e4,
-        |  CASE WHEN mean_e4 <= t1 THEN 'head'
-        |    WHEN mean_e4 <= t2 THEN 'middle' ELSE 'tail' END AS bucket
-        |FROM sl JOIN th USING (lang)""".stripMargin,
-    // per-doc char histogram via generate_series positions (the ASCII
-    // corpus makes codepoints == bytes), bit lengths via bin()
-    "text_entropy" ->
-      """WITH ch AS (
-        |  SELECT doc_id, substr(text, i, 1) AS c
-        |  FROM documents, UNNEST(generate_series(1, length(text))) AS t(i)),
-        |hc AS (SELECT doc_id, c, count(*) AS cb FROM ch GROUP BY 1, 2),
-        |nn AS (SELECT doc_id, length(text) AS n FROM documents)
-        |SELECT doc_id, CAST(n AS BIGINT) AS n_bytes,
-        |  CAST(SUM(cb * (length(bin(n)) - length(bin(cb)))) AS BIGINT)
-        |    AS entropy_sum,
-        |  (CAST(SUM(cb * (length(bin(n)) - length(bin(cb)))) AS BIGINT)
-        |    * 10000 // n) / 10000.0 AS mean_bits
-        |FROM hc JOIN nn USING (doc_id)
-        |GROUP BY doc_id, n""".stripMargin,
-    // DSIR replayed in SQL: one training pass builds raw + target
-    // counts (FILTER), per-gram weight = bit-length of add-one counts
-    "text_dsir_weight" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents),
-        |big AS (
-        |  SELECT doc_id, lang, (lang = 'en') AS is_t,
-        |    ws[i] AS w1, ws[i + 1] AS w2
-        |  FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 2),
-        |m AS (
-        |  SELECT w1, w2,
-        |    length(bin(count(*) FILTER (WHERE is_t) + 1))
-        |      - length(bin(count(*) + 1)) AS wgt
-        |  FROM big GROUP BY 1, 2)
-        |SELECT doc_id, lang, count(*) AS n_bigrams,
-        |  CAST(SUM(wgt) AS BIGINT) AS dsir_weight,
-        |  (CAST(SUM(wgt) AS BIGINT) * 10000 // count(*)) / 10000.0
-        |    AS mean_weight
-        |FROM big JOIN m USING (w1, w2)
-        |GROUP BY 1, 2""".stripMargin,
-    // the bigram LM replayed in SQL: same tokenization, counts from
-    // the same corpus, bit lengths via length(bin(n)) (exact integer —
-    // the text_rarity idiom), mean on the 1e-4 grid
-    "text_lm_surprisal" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(lower(text), ' '),
-        |    w -> w <> '') AS ws FROM documents),
-        |big AS (
-        |  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-        |  FROM toks, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 2),
-        |c2 AS (SELECT w1, w2, count(*) AS n2 FROM big GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(SUM(n2) AS BIGINT) AS n1 FROM c2 GROUP BY 1)
-        |SELECT doc_id, count(*) AS n_bigrams,
-        |  CAST(SUM(length(bin(n1)) - length(bin(n2))) AS BIGINT)
-        |    AS surprisal_sum,
-        |  (CAST(SUM(length(bin(n1)) - length(bin(n2))) AS BIGINT) * 10000
-        |    // count(*)) / 10000.0 AS mean_surprisal
-        |FROM big JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
-        |GROUP BY doc_id""".stripMargin,
-    // exact-sum fold ≡ counting the union: the oracle trains on the
-    // whole table directly — equality IS the storable-state claim
-    "lm_model_incremental" -> lmModelTrainSql,
-    // folded-artifact form: fold ≡ union-train, same batch oracle
-    "lm_model_folded" -> lmModelTrainSql,
-    // the three count orders and the per-level surrogate scores replayed
-    // verbatim; the serve side is the planted-augmented corpus while
-    // every model CTE reads only `documents`
-    "text_lm_backoff" ->
-      s"""WITH dlm AS MATERIALIZED (${Fixtures.lm.sql}),
-        |tw AS MATERIALIZED (SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), w -> w <> '') AS ws
-        |  FROM documents),
-        |uni AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS n1
-        |  FROM (SELECT unnest(ws) AS w FROM tw) GROUP BY 1),
-        |big AS MATERIALIZED (SELECT ws[i] AS w1, ws[i + 1] AS w2,
-        |    CAST(count(*) AS BIGINT) AS n2
-        |  FROM tw, UNNEST(generate_series(1, len(ws) - 1)) AS t(i)
-        |  WHERE len(ws) >= 2 GROUP BY 1, 2),
-        |tri AS MATERIALIZED (SELECT ws[i] AS w1, ws[i + 1] AS w2,
-        |    ws[i + 2] AS w3, CAST(count(*) AS BIGINT) AS n3
-        |  FROM tw, UNNEST(generate_series(1, len(ws) - 2)) AS t(i)
-        |  WHERE len(ws) >= 3 GROUP BY 1, 2, 3),
-        |tot AS (SELECT CAST(length(bin(SUM(n1))) AS BIGINT) AS bl FROM uni),
-        |s3 AS MATERIALIZED (SELECT t.w1, t.w2, t.w3,
-        |    CAST(length(bin(b.n2)) - length(bin(t.n3)) AS BIGINT) AS s
-        |  FROM tri t JOIN big b USING (w1, w2)),
-        |s2 AS MATERIALIZED (SELECT b.w1 AS w2, b.w2 AS w3,
-        |    CAST(2 + length(bin(u.n1)) - length(bin(b.n2)) AS BIGINT) AS s
-        |  FROM big b JOIN uni u ON b.w1 = u.w),
-        |s1 AS MATERIALIZED (SELECT u.w AS w3,
-        |    CAST(4 + t.bl - length(bin(u.n1)) AS BIGINT) AS s
-        |  FROM uni u CROSS JOIN tot t),
-        |sw AS MATERIALIZED (SELECT doc_id,
-        |  list_filter(string_split(lower(text), ' '), w -> w <> '') AS ws
-        |  FROM dlm),
-        |st AS MATERIALIZED (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2,
-        |    ws[i + 2] AS w3
-        |  FROM sw, UNNEST(generate_series(1, len(ws) - 2)) AS t(i)
-        |  WHERE len(ws) >= 3)
-        |SELECT st.doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-        |  CAST(count(a.s) AS BIGINT) AS n_l3,
-        |  CAST(count(*) FILTER (WHERE a.s IS NULL AND b.s IS NOT NULL)
-        |    AS BIGINT) AS n_l2,
-        |  CAST(count(*) FILTER (WHERE a.s IS NULL AND b.s IS NULL
-        |    AND c.s IS NOT NULL) AS BIGINT) AS n_l1,
-        |  CAST(count(*) FILTER (WHERE a.s IS NULL AND b.s IS NULL
-        |    AND c.s IS NULL) AS BIGINT) AS n_oov,
-        |  CAST(SUM(COALESCE(a.s, b.s, c.s, 5 + t.bl)) AS BIGINT)
-        |    AS surprisal_sum,
-        |  ((CAST(SUM(COALESCE(a.s, b.s, c.s, 5 + t.bl)) AS BIGINT) * 10000)
-        |    // count(*)) / 10000.0 AS mean_surprisal
-        |FROM st LEFT JOIN s3 a USING (w1, w2, w3)
-        |  LEFT JOIN s2 b USING (w2, w3)
-        |  LEFT JOIN s1 c USING (w3)
-        |  CROSS JOIN tot t
-        |GROUP BY 1""".stripMargin,
-    // leftmost-greedy non-overlapping occurrence counts are exactly
-    // what the replace() trick counts; length()/replace() are
-    // codepoint-based in DuckDB, matching the byte-level automaton on
-    // any valid UTF-8 (self-synchronizing). FILTER keeps zero-hit
-    // lexicon terms in the output like the engine's left join does.
-    "text_blocklist" -> {
-      val body = s"""t(term) AS (VALUES ${
-          graft.functions.AhoCorasick.patternsSqlValues(blocklistTerms)}),
-        |h AS (SELECT term,
-        |    (length(lower(d.text)) - length(replace(lower(d.text), term, '')))
-        |      // length(term) AS cnt
-        |  FROM dml d, t)
-        |SELECT term, CAST(count(*) FILTER (WHERE cnt > 0) AS BIGINT) AS n_docs,
-        |  CAST(SUM(cnt) AS BIGINT) AS n_occurrences
-        |FROM h GROUP BY term ORDER BY term""".stripMargin
-      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),\n$body"
-    },
-    "text_blocklist_share" -> {
-      val lst = blocklistTerms.map(t =>
-        "'" + t.replace("'", "''") + "'").mkString("[", ", ", "]")
-      val body = s"""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CASE WHEN len(list_filter($lst,
-        |      p -> contains(lower(d.text), p))) > 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_flagged,
-        |  (CAST(SUM(CASE WHEN len(list_filter($lst,
-        |      p -> contains(lower(d.text), p))) > 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) * 10000 // count(*)) / 10000.0 AS flagged_share
-        |FROM dml d GROUP BY source ORDER BY source""".stripMargin
-      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql})\n$body"
-    },
-    // whole-token matching: explode tokens, join the lexicon, restore
-    // zero-hit terms — the nested plants score 0 here by construction
-    "text_blocklist_words" -> {
-      val singles = blocklistTerms.filterNot(_.contains(' '))
-      val body = s"""t(term) AS (VALUES ${
-          graft.functions.AhoCorasick.patternsSqlValues(singles)}),
-        |w AS (SELECT doc_id, u.w FROM dml,
-        |  UNNEST(list_filter(string_split(lower(text), ' '), x -> x <> ''))
-        |    AS u(w)),
-        |h AS (SELECT w AS term, CAST(count(DISTINCT doc_id) AS BIGINT) AS nd,
-        |    CAST(count(*) AS BIGINT) AS no
-        |  FROM w JOIN t ON w.w = t.term GROUP BY 1)
-        |SELECT t.term, COALESCE(h.nd, CAST(0 AS BIGINT)) AS n_docs,
-        |  COALESCE(h.no, CAST(0 AS BIGINT)) AS n_occurrences
-        |FROM t LEFT JOIN h USING (term) ORDER BY term""".stripMargin
-      s"WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),\n$body"
-    },
-    // the line rules replayed on the same 1e-4 grid over the planted
-    // multi-line fixture
-    "text_gopher_lines" ->
-      s"""WITH db AS MATERIALIZED (${Fixtures.bullets.sql}),
-        |l AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM db),
-        |e AS (SELECT doc_id, CAST(len(ls) AS BIGINT) AS n,
-        |  CAST(len(list_filter(ls, x -> x LIKE '- %' OR x LIKE '* %'))
-        |    AS BIGINT) AS nb,
-        |  CAST(len(list_filter(ls, x -> x LIKE '%...')) AS BIGINT) AS ne
-        |  FROM l)
-        |SELECT doc_id, n AS n_lines,
-        |  CAST(nb * 10000 // n AS DOUBLE) / CAST(10000 AS DOUBLE)
-        |    AS bullet_share,
-        |  CAST(ne * 10000 // n AS DOUBLE) / CAST(10000 AS DOUBLE)
-        |    AS ellipsis_share,
-        |  (nb * 10000 // n <= 9000 AND ne * 10000 // n <= 3000) AS pass
-        |FROM e""".stripMargin,
-    "pack_efficiency" ->
-      s"""WITH RECURSIVE ${bpeCte()},
-         |p AS (SELECT doc_id, source, n_tokens,
-         |  CAST(FLOOR((CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) - n_tokens) / 2048.0) AS BIGINT) AS bin
-         |  FROM (SELECT d.doc_id, d.source, COALESCE(b.n_tokens_bpe, 0) AS n_tokens
-         |    FROM documents d LEFT JOIN bpe b USING (doc_id))),
-         |bb AS (SELECT source, bin, CAST(SUM(n_tokens) AS BIGINT) AS fill
-         |  FROM p GROUP BY 1, 2),
-         |m AS (SELECT source, MAX(bin) AS last_bin FROM bb GROUP BY 1)
-         |SELECT source, count(*) AS n_bins,
-         |  CAST(SUM(fill) AS BIGINT) AS total_tokens,
-         |  CAST(SUM(CASE WHEN bin < last_bin THEN GREATEST(0, 2048 - fill)
-         |    ELSE 0 END) AS BIGINT) AS padding_waste,
-         |  CAST(SUM(GREATEST(0, fill - 2048)) AS BIGINT) AS overflow_tokens,
-         |  CASE WHEN count(*) > 1 THEN
-         |    (CAST(SUM(CASE WHEN bin < last_bin THEN GREATEST(0, 2048 - fill)
-         |      ELSE 0 END) AS BIGINT) * 10000
-         |      // ((count(*) - 1) * 2048)) / 10000.0 END AS waste_share
-         |FROM bb JOIN m USING (source)
-         |GROUP BY source""".stripMargin,
-    "pack_sequences_bpe" ->
-      s"""WITH RECURSIVE ${bpeCte()}
-         |SELECT doc_id, source, n_tokens,
-         |CAST(FLOOR((CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) - n_tokens) / 2048.0) AS BIGINT) AS bin
-         |FROM (SELECT d.doc_id, d.source, COALESCE(b.n_tokens_bpe, 0) AS n_tokens
-         |  FROM documents d LEFT JOIN bpe b USING (doc_id))""".stripMargin,
-    "bpe_train_merges" ->
-      withMlDocs(graft.text.BpeTrainer.trainingOracleSql(8, "dml")),
-    "bpe_train_continue" ->
-      withMlDocs(graft.text.BpeTrainer.trainingOracleSql(8, "dml")),
-    "bpe_encode_merge_order" ->
-      withMlDocs(graft.text.BpeTrainer.mergeOrderEncodeOracleSql(8, "dml")),
-    "pack_sequences_trained" ->
-      withMlDocs(graft.text.BpeTrainer.packTrainedOracleSql(8, 2048L, "dml")),
-    "text_detokenize" ->
-      (s"WITH dml AS (${Fixtures.ml.sql}) " +
-        "SELECT doc_id, replace(lower(text), ' ', '') AS detok FROM dml"),
-    // the byte-level round trip is the IDENTITY — the whole point
-    "text_detokenize_bytes" ->
-      (s"WITH dml AS (${Fixtures.ml.sql}) " +
-        "SELECT doc_id, text AS detok FROM dml"),
-    "text_tokens_ids" ->
-      withMlDocs(s"""WITH RECURSIVE ${bpeIdsCte("dml")}
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(len(b.all_ids), 0) AS BIGINT) AS n_tokens,
-         |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    COALESCE(b.all_ids, CAST([] AS BIGINT[]))),
-         |    (acc, x) -> (acc * 1000003 + x) % 2147483647) AS BIGINT) AS ids_fp
-         |FROM dml d LEFT JOIN docids b USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin),
-    "text_oov_rate" -> {
-      val v = graft.functions.BpeTokenizer.defaultVocab.size
-      withMlDocs(s"""WITH RECURSIVE ${bpeIdsCte("dml")}
-         |SELECT d.doc_id, d.lang,
-         |  CAST(COALESCE(len(b.all_ids), 0) AS BIGINT) AS n_tokens,
-         |  CAST(COALESCE(len(list_filter(b.all_ids, x -> x >= $v)), 0)
-         |    AS BIGINT) AS n_oov,
-         |  CASE WHEN COALESCE(len(b.all_ids), 0) > 0 THEN
-         |    (CAST(len(list_filter(b.all_ids, x -> x >= $v)) AS BIGINT)
-         |      * 10000 // CAST(len(b.all_ids) AS BIGINT)) / 10000.0
-         |  END AS oov_rate
-         |FROM dml d LEFT JOIN docids b USING (doc_id)""".stripMargin)
-    },
-    "pack_sequences_ids" ->
-      s"""WITH RECURSIVE ${bpeIdsCte()},
-         |t AS (SELECT d.doc_id, d.source,
-         |    COALESCE(b.all_ids, CAST([] AS BIGINT[])) AS all_ids,
-         |    CAST(COALESCE(len(b.all_ids), 0) AS BIGINT) AS n_tokens
-         |  FROM documents d LEFT JOIN docids b USING (doc_id)),
-         |c AS (SELECT *, CAST(FLOOR((CAST(SUM(n_tokens) OVER (PARTITION BY source
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    AS DOUBLE) - n_tokens) / 2048.0) AS BIGINT) AS bin FROM t),
-         |c2 AS (SELECT *, CAST(SUM(n_tokens) OVER (PARTITION BY source, bin
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    AS BIGINT) AS cum2 FROM c)
-         |SELECT source, bin, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-         |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    flatten(list(all_ids ORDER BY doc_id))),
-         |    (acc, x) -> (acc * 1000003 + x) % 2147483647) AS BIGINT) AS seq_fp,
-         |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_prepend(CAST(0 AS BIGINT), list(cum2 ORDER BY doc_id))),
-         |    (acc, x) -> (acc * 1000003 + x) % 2147483647) AS BIGINT) AS offsets_fp
-         |FROM c2 GROUP BY 1, 2""".stripMargin,
-    "corpus_mix_bpe" ->
-      s"""WITH RECURSIVE ${bpeCte()},
-         |t AS (SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars,
-         |    COALESCE(b.n_tokens_bpe, 0) AS n_toks,
-         |    CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-         |  FROM documents d LEFT JOIN bpe b USING (doc_id)
-         |  WHERE d.source IN ('src0', 'src1', 'src2')),
-         |bb AS (SELECT *, CASE source WHEN 'src0' THEN 1000 WHEN 'src1' THEN 800
-         |    ELSE 2000000 END AS bud FROM t),
-         |c AS (SELECT *, CAST(sum(n_toks) OVER (PARTITION BY source
-         |    ORDER BY h, CAST(doc_id AS VARCHAR)
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM bb)
-         |SELECT doc_id, text, lang, source, n_chars, n_toks, cum AS cum_tokens
-         |FROM c WHERE cum <= bud""".stripMargin,
-    "text_langid" ->
-      """SELECT doc_id, CASE
-        |WHEN len(list_filter(string_split(lower(text), ' '), x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'and')) >= len(list_filter(string_split(lower(text), ' '), x -> x = 'der' OR x = 'die' OR x = 'das' OR x = 'und'))
-        |  AND len(list_filter(string_split(lower(text), ' '), x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'and')) >= len(list_filter(string_split(lower(text), ' '), x -> x = 'le' OR x = 'la' OR x = 'les' OR x = 'et'))
-        |  AND len(list_filter(string_split(lower(text), ' '), x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'and')) > 0 THEN 'en'
-        |WHEN len(list_filter(string_split(lower(text), ' '), x -> x = 'der' OR x = 'die' OR x = 'das' OR x = 'und')) >= len(list_filter(string_split(lower(text), ' '), x -> x = 'le' OR x = 'la' OR x = 'les' OR x = 'et'))
-        |  AND len(list_filter(string_split(lower(text), ' '), x -> x = 'der' OR x = 'die' OR x = 'das' OR x = 'und')) > 0 THEN 'de'
-        |WHEN len(list_filter(string_split(lower(text), ' '), x -> x = 'le' OR x = 'la' OR x = 'les' OR x = 'et')) > 0 THEN 'fr'
-        |ELSE 'und' END AS lang_pred FROM documents""".stripMargin,
-    "text_fingerprint" ->
-      """SELECT doc_id, md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) AS fingerprint
-        |FROM documents""".stripMargin,
-    "text_rolling_fp" ->
-      """SELECT doc_id, list_reduce(
-        |  list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split(lower(text), ' '),
-        |      w -> CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT))),
-        |  (acc, x) -> (acc * 1000003 + x) % 2147483647) AS rhash
-        |FROM documents""".stripMargin,
-    // the winnowing selection replayed: same md5-60bit gram hashes,
-    // same window minima, same df-cut — list slices are 1-based
-    // inclusive, so ws[i:i+3] is the 4-gram and gh[j:j+4] the 5-window
-    // ml twin: md5 of the gram STRING hashes its UTF-8 bytes in both
-    // engines, so the window-min selection replays unchanged over the
-    // mixed-script corpus
-    "text_winnow_pairs_ml" ->
-      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
-        |t AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM dml),
-        |g AS (SELECT doc_id, list_transform(generate_series(1, len(ws) - 3),
-        |    i -> CAST(('0x' || substr(md5(array_to_string(ws[i:i+3], ' ')), 1, 15))
-        |      AS BIGINT)) AS gh
-        |  FROM t WHERE len(ws) >= 8),
-        |f AS (SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, len(gh) - 4), j -> list_min(gh[j:j+4]))) AS fps
-        |  FROM g),
-        |e AS (SELECT doc_id, unnest(fps) AS fp FROM f),
-        |kept AS (SELECT fp FROM e GROUP BY fp HAVING count(*) <= 1000),
-        |ek AS (SELECT doc_id, fp FROM e JOIN kept USING (fp))
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(count(*) AS BIGINT) AS n_shared
-        |FROM ek a JOIN ek b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2""".stripMargin,
-    // the duplicated-SPAN selection replayed end-to-end: same md5-60bit
-    // 5-gram hashes, dup = gram in ≥2 distinct docs, per-doc window
-    // starts merged gaps-and-islands style (equal-width windows ⇒ ends
-    // are monotone in p, so "new island when p − prev > w" is exact),
-    // then boundaries and span text re-sliced from the token list
-    // ml twin: identical pipeline over the augmented corpus — md5 of a
-    // gram hashes its UTF-8 bytes in both engines and positions count
-    // words, so mixed-script boundaries replay unchanged
-    "text_dup_spans_ml" ->
-      s"""WITH dml AS MATERIALIZED (${Fixtures.ml.sql}),
-        |t AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM dml),
-        |g AS (SELECT doc_id, ws, list_transform(generate_series(1, len(ws) - 4),
-        |    i -> CAST(('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 15))
-        |      AS BIGINT)) AS gh
-        |  FROM t WHERE len(ws) >= 5),
-        |e0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(gh)),
-        |    i -> {'p': i, 'fp': gh[i]})) AS u FROM g),
-        |e AS (SELECT doc_id, u.p AS p, u.fp AS fp FROM e0),
-        |dup AS (SELECT fp FROM e GROUP BY fp HAVING count(DISTINCT doc_id) >= 2),
-        |s AS (SELECT doc_id, p FROM e JOIN dup USING (fp)),
-        |m AS (SELECT doc_id, p, CASE WHEN p - COALESCE(lag(p) OVER
-        |    (PARTITION BY doc_id ORDER BY p), -1000000) > 5 THEN 1 ELSE 0 END AS brk
-        |  FROM s),
-        |isl AS (SELECT doc_id, p, SUM(brk) OVER (PARTITION BY doc_id ORDER BY p
-        |    ROWS UNBOUNDED PRECEDING) AS island FROM m),
-        |sp AS (SELECT doc_id, CAST(MIN(p) AS BIGINT) AS span_start,
-        |    CAST(MAX(p) + 4 AS BIGINT) AS span_end
-        |  FROM isl GROUP BY doc_id, island)
-        |SELECT sp.doc_id, span_start, span_end,
-        |  span_end - span_start + 1 AS n_span_tokens,
-        |  array_to_string(ws[CAST(span_start AS INT):CAST(span_end AS INT)], ' ')
-        |    AS span_text
-        |FROM sp JOIN t USING (doc_id)""".stripMargin,
-    "text_dup_spans" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |g AS (SELECT doc_id, ws, list_transform(generate_series(1, len(ws) - 4),
-        |    i -> CAST(('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 15))
-        |      AS BIGINT)) AS gh
-        |  FROM t WHERE len(ws) >= 5),
-        |e0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(gh)),
-        |    i -> {'p': i, 'fp': gh[i]})) AS u FROM g),
-        |e AS (SELECT doc_id, u.p AS p, u.fp AS fp FROM e0),
-        |dup AS (SELECT fp FROM e GROUP BY fp HAVING count(DISTINCT doc_id) >= 2),
-        |s AS (SELECT doc_id, p FROM e JOIN dup USING (fp)),
-        |m AS (SELECT doc_id, p, CASE WHEN p - COALESCE(lag(p) OVER
-        |    (PARTITION BY doc_id ORDER BY p), -1000000) > 5 THEN 1 ELSE 0 END AS brk
-        |  FROM s),
-        |isl AS (SELECT doc_id, p, SUM(brk) OVER (PARTITION BY doc_id ORDER BY p
-        |    ROWS UNBOUNDED PRECEDING) AS island FROM m),
-        |sp AS (SELECT doc_id, CAST(MIN(p) AS BIGINT) AS span_start,
-        |    CAST(MAX(p) + 4 AS BIGINT) AS span_end
-        |  FROM isl GROUP BY doc_id, island)
-        |SELECT sp.doc_id, span_start, span_end,
-        |  span_end - span_start + 1 AS n_span_tokens,
-        |  array_to_string(ws[CAST(span_start AS INT):CAST(span_end AS INT)], ' ')
-        |    AS span_text
-        |FROM sp JOIN t USING (doc_id)""".stripMargin,
-    // spans identical to text_dup_spans; certified_tier from dense
-    // coverage counts at widths 5/10/20 (expected count in [s, e-t+1]
-    // is e-s-t+2; coverage at a longer width implies the shorter ones)
-    "text_dup_spans_maximal" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |sall AS (
-        |  SELECT doc_id, u.p AS p, u.fp AS fp, width FROM (
-        |    SELECT doc_id, width, unnest(list_transform(
-        |      generate_series(1, len(ws) - width + 1),
-        |      i -> {'p': i, 'fp': CAST(('0x' || substr(md5(
-        |        array_to_string(ws[i:i+width-1], ' ')), 1, 15)) AS BIGINT)})) AS u
-        |    FROM t CROSS JOIN (VALUES (5), (10), (20)) AS v(width)
-        |    WHERE len(ws) >= width)),
-        |dups AS (SELECT width, fp FROM sall GROUP BY width, fp
-        |  HAVING count(DISTINCT doc_id) >= 2),
-        |s AS (SELECT doc_id, p, width FROM sall JOIN dups USING (width, fp)),
-        |m AS (SELECT doc_id, p, CASE WHEN p - COALESCE(lag(p) OVER
-        |    (PARTITION BY doc_id ORDER BY p), -1000000) > 5 THEN 1 ELSE 0 END AS brk
-        |  FROM s WHERE width = 5),
-        |isl AS (SELECT doc_id, p, SUM(brk) OVER (PARTITION BY doc_id ORDER BY p
-        |    ROWS UNBOUNDED PRECEDING) AS island FROM m),
-        |sp AS (SELECT doc_id, CAST(MIN(p) AS BIGINT) AS span_start,
-        |    CAST(MAX(p) + 4 AS BIGINT) AS span_end
-        |  FROM isl GROUP BY doc_id, island),
-        |cov AS (SELECT sp.doc_id, sp.span_start, sp.span_end, w.width,
-        |    COALESCE(c.nc, 0) AS nc
-        |  FROM sp CROSS JOIN (VALUES (5), (10), (20)) AS w(width)
-        |  LEFT JOIN (
-        |    SELECT sp2.doc_id, sp2.span_start, sp2.span_end, s.width,
-        |      count(*) AS nc
-        |    FROM sp sp2 JOIN s ON s.doc_id = sp2.doc_id
-        |      AND s.p BETWEEN sp2.span_start AND sp2.span_end - s.width + 1
-        |    GROUP BY 1, 2, 3, 4) c
-        |  ON c.doc_id = sp.doc_id AND c.span_start = sp.span_start
-        |    AND c.span_end = sp.span_end AND c.width = w.width),
-        |cert AS (SELECT doc_id, span_start, span_end,
-        |    MAX(CASE WHEN span_end - span_start + 1 >= width
-        |      AND nc = span_end - span_start - width + 2
-        |      THEN width ELSE 0 END) AS certified_tier
-        |  FROM cov GROUP BY 1, 2, 3)
-        |SELECT sp.doc_id, sp.span_start, sp.span_end,
-        |  sp.span_end - sp.span_start + 1 AS n_span_tokens,
-        |  CAST(cert.certified_tier AS BIGINT) AS certified_tier,
-        |  array_to_string(ws[CAST(sp.span_start AS INT):CAST(sp.span_end AS INT)], ' ')
-        |    AS span_text
-        |FROM sp JOIN cert USING (doc_id, span_start, span_end)
-        |JOIN t USING (doc_id)""".stripMargin,
-    "text_winnow_pairs" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
-        |  FROM documents),
-        |g AS (SELECT doc_id, list_transform(generate_series(1, len(ws) - 3),
-        |    i -> CAST(('0x' || substr(md5(array_to_string(ws[i:i+3], ' ')), 1, 15))
-        |      AS BIGINT)) AS gh
-        |  FROM t WHERE len(ws) >= 8),
-        |f AS (SELECT doc_id, list_distinct(list_transform(
-        |    generate_series(1, len(gh) - 4), j -> list_min(gh[j:j+4]))) AS fps
-        |  FROM g),
-        |e AS (SELECT doc_id, unnest(fps) AS fp FROM f),
-        |kept AS (SELECT fp FROM e GROUP BY fp HAVING count(*) <= 1000),
-        |ek AS (SELECT doc_id, fp FROM e JOIN kept USING (fp))
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(count(*) AS BIGINT) AS n_shared
-        |FROM ek a JOIN ek b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2""".stripMargin,
-    // real-content twin: recompute the decoded pixel/PCM statistics from
-    // the source text (pixel p = byte p mod len; sample k = (byte_k−128)·256).
-    // Sums are exact integers on both sides; the single double division of
-    // the same rational is correctly rounded identically by both engines.
-    // n_bytes: BMP = 54 hdr + padded rows; PPM = "P6\n{w} {h}\n255\n" + 3wh;
-    // WAV = 44 hdr + 2·len.
-    "multimodal_features" ->
-      """SELECT doc_id,
-        |CASE WHEN doc_id % 4 = 0 THEN 'bmp' WHEN doc_id % 2 = 0 THEN 'ppm' ELSE 'wav' END AS kind,
-        |CAST(CASE WHEN doc_id % 4 = 0 THEN 54 + ((3*w + 3) // 4 * 4) * h
-        |  WHEN doc_id % 2 = 0 THEN 9 + length(CAST(w AS VARCHAR)) + length(CAST(h AS VARCHAR)) + 3*w*h
-        |  ELSE 44 + 2*len END AS BIGINT) AS n_bytes,
-        |CASE WHEN doc_id % 2 = 0
-        |  THEN CAST(list_sum(list_transform(range(0, w*h),
-        |    p -> ascii(substr(text, CAST(p % len AS INT) + 1, 1)))) AS DOUBLE) / (w*h)
-        |  ELSE CAST(list_sum(list_transform(range(1, len + 1),
-        |    k -> (ascii(substr(text, CAST(k AS INT), 1)) - 128) * 256)) AS DOUBLE) / len
-        |END AS feat0,
-        |CASE WHEN doc_id % 2 = 0
-        |  THEN CAST(list_sum(list_transform(range(0, w*h),
-        |    p -> ascii(substr(text, CAST(p % len AS INT) + 1, 1))
-        |       * ascii(substr(text, CAST(p % len AS INT) + 1, 1)))) AS DOUBLE) / (w*h)
-        |  ELSE CAST(list_sum(list_transform(range(1, len + 1),
-        |    k -> abs((ascii(substr(text, CAST(k AS INT), 1)) - 128) * 256))) AS DOUBLE) / len
-        |END AS feat1
-        |FROM (SELECT doc_id, text, length(text) AS len,
-        |        1 + length(text) % 32 AS w, 1 + length(text) % 24 AS h
-        |      FROM documents)""".stripMargin,
-    // MP4 box-walk twin: duration = 7·len+13 movie-timescale units,
-    // duration_ms = duration·1000 // timescale — exact integer math on
-    // both sides; dims are the encoded 16.16 integer parts
-    "multimodal_video_meta" ->
-      """SELECT doc_id,
-        |CASE doc_id % 2 WHEN 0 THEN 'isom' ELSE 'mp42' END AS brand,
-        |CAST(CASE doc_id % 3 WHEN 0 THEN 600 WHEN 1 THEN 1000 ELSE 90000 END AS BIGINT) AS timescale,
-        |CAST(7 * length(text) + 13 AS BIGINT) AS duration,
-        |CAST((7 * length(text) + 13) * 1000
-        |  // (CASE doc_id % 3 WHEN 0 THEN 600 WHEN 1 THEN 1000 ELSE 90000 END) AS BIGINT) AS duration_ms,
-        |CAST(1 + doc_id % 2 AS INT) AS n_tracks,
-        |CAST(16 * (1 + length(text) % 80) AS INT) AS width,
-        |CAST(16 * (1 + length(text) % 45) AS INT) AS height
-        |FROM documents""".stripMargin,
-    // commercial-codec twin: payload bytes are encoder-owned DEFLATE/LZW
-    // streams, but PNG/GIF/TIFF are LOSSLESS, so the decoded pixel
-    // statistics are still the exact integer sums over the source text
-    // bytes (pixel p = byte p mod len) — same stat shape as
-    // multimodal_features, plus the decoded dimensions
-    // decoded-pixel frame signatures: the oracle recomputes the frame
-    // pixels from the source text (pixel p of frame f = byte
-    // (f + p·nf) mod len) and replays the modular rolling hash over
-    // the decoded 3-channel top-down stream (gray g repeats 3× per
-    // pixel); any decode defect (row flip, padding, channel order)
-    // breaks the equality
-    "multimodal_video_frames" -> videoPixelFrameSql(
-      """SELECT doc_id, frame_idx, w, h, checksum FROM frames""",
-      source = "documents"),
-    "multimodal_video_frames_raw" -> videoFrameSql(
-      """SELECT doc_id, frame_idx, n_bytes, checksum FROM frames""",
-      source = "documents"),
-    "multimodal_video_dedup" -> videoPixelFrameSql(
-      source = """(SELECT doc_id, text FROM documents
-        | UNION ALL SELECT doc_id + 1000000, text FROM documents
-        | WHERE doc_id % 25 = 3)""".stripMargin,
-      tail = """, sigs AS (
-        |  SELECT doc_id, count(*) AS n_frames,
-        |    CAST(SUM(checksum * (frame_idx + 1) + w * h) AS BIGINT) AS sig
-        |  FROM frames GROUP BY doc_id)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  a.n_frames AS n_frames, a.sig AS sig
-        |FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-        |  AND a.n_frames = b.n_frames AND a.sig = b.sig""".stripMargin),
-    "multimodal_audio_fingerprint" -> audioFrameSql(
-      """SELECT doc_id, frame_idx, n_samples, zero_crossings, energy_mag,
-        |checksum FROM frames""".stripMargin),
-    "multimodal_audio_dedup" -> audioFrameSql(
-      source = """(SELECT doc_id, text FROM documents
-        | UNION ALL SELECT doc_id + 1000000, text FROM documents
-        | WHERE doc_id % 25 = 3)""".stripMargin,
-      tail = """, sigs AS (
-        |  SELECT doc_id, count(*) AS n_frames,
-        |    CAST(SUM(checksum * (frame_idx + 1) + zero_crossings * 131 + energy_mag)
-        |      AS BIGINT) AS sig
-        |  FROM frames GROUP BY doc_id)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  a.n_frames AS n_frames, a.sig AS sig
-        |FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-        |  AND a.n_frames = b.n_frames AND a.sig = b.sig""".stripMargin),
-    // the aHash/dHash bit weights: bit 63 contributes the min-long
-    // literal (a 1<<63 shift overflows DuckDB's checked BIGINT); the
-    // HUGEINT list_sum of weights equals the two's-complement long
-    "multimodal_image_hash" ->
-      """WITH b AS (SELECT doc_id, text, length(text) AS len,
-        |    1 + length(text) % 32 AS w, 1 + length(text) % 24 AS h FROM documents),
-        |g AS (SELECT doc_id, w, h,
-        |  list_transform(range(0, 64), k ->
-        |    ascii(substr(text, CAST((((k // 8) * h // 8) * w + ((k % 8) * w // 8)) % len AS INT) + 1, 1))) AS sv,
-        |  list_transform(range(0, 64), k ->
-        |    CASE WHEN ascii(substr(text, CAST((((k // 8) * h // 8) * w + ((k % 8) * w // 9)) % len AS INT) + 1, 1))
-        |       > ascii(substr(text, CAST((((k // 8) * h // 8) * w + (((k % 8) + 1) * w // 9)) % len AS INT) + 1, 1))
-        |    THEN CASE WHEN k = 63 THEN -9223372036854775808::HUGEINT
-        |              ELSE CAST(1::BIGINT << CAST(k AS INT) AS HUGEINT) END
-        |    ELSE 0::HUGEINT END) AS dv
-        |  FROM b),
-        |h2 AS (SELECT doc_id, w, h, sv, list_sum(sv) AS tot, dv FROM g)
-        |SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'gif' ELSE 'tiff' END AS kind,
-        |  CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-        |  CAST(list_sum(list_transform(sv, (v, i) ->
-        |    CASE WHEN 64 * v > tot THEN
-        |      CASE WHEN i = 64 THEN -9223372036854775808::HUGEINT
-        |           ELSE CAST(1::BIGINT << CAST(i - 1 AS INT) AS HUGEINT) END
-        |    ELSE 0::HUGEINT END)) AS BIGINT) AS ahash,
-        |  CAST(list_sum(dv) AS BIGINT) AS dhash
-        |FROM h2""".stripMargin,
-    "multimodal_image_neardup" ->
-      """WITH b AS (SELECT doc_id, text, length(text) AS len,
-        |    1 + length(text) % 32 AS w, 1 + length(text) % 24 AS h FROM documents),
-        |g AS (SELECT doc_id,
-        |  list_transform(range(0, 64), k ->
-        |    ascii(substr(text, CAST((((k // 8) * h // 8) * w + ((k % 8) * w // 8)) % len AS INT) + 1, 1))) AS sv
-        |  FROM b),
-        |h2 AS (SELECT doc_id, sv, list_sum(sv) AS tot FROM g),
-        |hs AS (SELECT doc_id,
-        |  CAST(list_sum(list_transform(sv, (v, i) ->
-        |    CASE WHEN 64 * v > tot THEN
-        |      CASE WHEN i = 64 THEN -9223372036854775808::HUGEINT
-        |           ELSE CAST(1::BIGINT << CAST(i - 1 AS INT) AS HUGEINT) END
-        |    ELSE 0::HUGEINT END)) AS BIGINT) AS ahash
-        |  FROM h2)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-        |FROM hs a JOIN hs b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.ahash, b.ahash)) <= 3""".stripMargin,
-    "multimodal_codec_features" ->
-      """SELECT doc_id,
-        |CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'gif' ELSE 'tiff' END AS kind,
-        |CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-        |CAST(list_sum(list_transform(range(0, w*h),
-        |  p -> ascii(substr(text, CAST(p % len AS INT) + 1, 1)))) AS DOUBLE) / (w*h) AS feat0,
-        |CAST(list_sum(list_transform(range(0, w*h),
-        |  p -> ascii(substr(text, CAST(p % len AS INT) + 1, 1))
-        |     * ascii(substr(text, CAST(p % len AS INT) + 1, 1)))) AS DOUBLE) / (w*h) AS feat1
-        |FROM (SELECT doc_id, text, length(text) AS len,
-        |        1 + length(text) % 32 AS w, 1 + length(text) % 24 AS h
-        |      FROM documents)""".stripMargin,
-    // header sizes: PNG sig+len+IHDR+dims = 24, JPEG SOI+SOF0 seg = 15,
-    // GIF6+screen = 10 (texts are ASCII so length(text) = body bytes)
-    "binaryfile_ingest" ->
-      """SELECT doc_id, 'bmp' AS kind,
-        |CAST(54 + ((3 * (1 + length(text) % 32) + 3) // 4 * 4)
-        |  * (1 + length(text) % 24) AS BIGINT) AS n_bytes,
-        |CAST(list_sum(list_transform(range(0, (1 + length(text) % 32) * (1 + length(text) % 24)),
-        |  p -> ascii(substr(text, CAST(p % greatest(length(text), 1) AS INT) + 1, 1)))) AS DOUBLE)
-        |  / ((1 + length(text) % 32) * (1 + length(text) % 24)) AS feat0,
-        |CAST(list_sum(list_transform(range(0, (1 + length(text) % 32) * (1 + length(text) % 24)),
-        |  p -> ascii(substr(text, CAST(p % greatest(length(text), 1) AS INT) + 1, 1))
-        |    * ascii(substr(text, CAST(p % greatest(length(text), 1) AS INT) + 1, 1)))) AS DOUBLE)
-        |  / ((1 + length(text) % 32) * (1 + length(text) % 24)) AS feat1
-        |FROM (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 16)""".stripMargin,
-    "multimodal_exif_meta" ->
-      """SELECT doc_id,
-        |CASE WHEN doc_id % 2 = 0 THEN 'MM' ELSE 'II' END AS byte_order,
-        |'graft-' || CAST(doc_id % 10 AS VARCHAR) AS make,
-        |CAST(1 + length(text) % 640 AS BIGINT) AS exif_width,
-        |CAST(doc_id % 8 + 1 AS BIGINT) AS orientation
-        |FROM documents""".stripMargin,
-    "multimodal_image_dims" ->
-      """SELECT doc_id,
-        |CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'gif' END AS format,
-        |CAST(1 + length(text) % 640 AS INT) AS width,
-        |CAST(1 + length(text) % 480 AS INT) AS height,
-        |CAST(length(text) + CASE doc_id % 3 WHEN 0 THEN 24 WHEN 1 THEN 15 ELSE 10 END AS BIGINT) AS n_bytes
-        |FROM documents""".stripMargin,
-    // blockAlign = channels·bits/8; frames = body // blockAlign;
-    // duration = frames·1000 // rate — all exact integer math
-    "multimodal_audio_meta" ->
-      """SELECT doc_id, 'wav' AS format,
-        |CAST(1 + doc_id % 2 AS INT) AS channels,
-        |CAST(CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END AS INT) AS sample_rate,
-        |CAST(8 * (1 + (doc_id // 2) % 2) AS INT) AS bits_per_sample,
-        |CAST(length(text) // ((1 + doc_id % 2) * (1 + (doc_id // 2) % 2)) AS BIGINT) AS n_frames,
-        |CAST((length(text) // ((1 + doc_id % 2) * (1 + (doc_id // 2) % 2))) * 1000
-        |  // (CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000 ELSE 44100 END) AS BIGINT) AS duration_ms
-        |FROM documents""".stripMargin,
-    "multimodal_chunks" ->
-      """SELECT doc_id, CAST(idx AS INT) AS chunk_idx,
-        |CAST(LEAST(64, length(text) - idx*64) AS INT) AS chunk_len,
-        |lower(hex(encode(substr(text, CAST(idx*64 + 1 AS INT), 8)))) AS chunk_prefix
-        |FROM (SELECT doc_id, text,
-        |  unnest(range(0, CAST(ceil(length(text)/64.0) AS BIGINT), 2)) AS idx
-        |  FROM documents)""".stripMargin,
-    // AIFF twin: same linear sample map as the WAV twin; n_bytes =
-    // FORM(12) + COMM(26) + SSND preamble(16) + 2·len = 54 + 2·len
-    "multimodal_aiff_features" ->
-      """SELECT doc_id, 'aiff' AS kind,
-        |CAST(54 + 2 * length(text) AS BIGINT) AS n_bytes,
-        |CAST(list_sum(list_transform(range(1, length(text) + 1),
-        |  k -> (ascii(substr(text, CAST(k AS INT), 1)) - 128) * 256)) AS DOUBLE)
-        |  / length(text) AS feat0,
-        |CAST(list_sum(list_transform(range(1, length(text) + 1),
-        |  k -> abs((ascii(substr(text, CAST(k AS INT), 1)) - 128) * 256))) AS DOUBLE)
-        |  / length(text) AS feat1
-        |FROM documents""".stripMargin,
-    // µ-law twin: the G.711 expansion (complement; (mantissa·8+132)
-    // shifted by segment; bias subtracted; sign applied) in exact
-    // integer SQL over the same source bytes
-    "multimodal_ulaw_features" ->
-      """SELECT doc_id, 'ulaw' AS kind,
-        |CAST(44 + length(text) AS BIGINT) AS n_bytes,
-        |CAST(list_sum(list_transform(range(1, length(text) + 1), k ->
-        |  CASE WHEN (xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 128) != 0
-        |    THEN 132 - ((((xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 15) << 3) + 132)
-        |                 << ((xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 112) >> 4))
-        |    ELSE ((((xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 15) << 3) + 132)
-        |            << ((xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 112) >> 4)) - 132
-        |  END)) AS DOUBLE) / length(text) AS feat0,
-        |CAST(list_sum(list_transform(range(1, length(text) + 1), k ->
-        |  abs(CASE WHEN (xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 128) != 0
-        |    THEN 132 - ((((xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 15) << 3) + 132)
-        |                 << ((xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 112) >> 4))
-        |    ELSE ((((xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 15) << 3) + 132)
-        |            << ((xor(ascii(substr(text, CAST(k AS INT), 1)), 255) & 112) >> 4)) - 132
-        |  END))) AS DOUBLE) / length(text) AS feat1
-        |FROM documents""".stripMargin,
-    // true-resize twin: out pixel (i,j) = floor-average of the 2×2 box
-    // at (2i,2j) clipped to the image (pixel p of the source = text byte
-    // p mod len) — exact integer division on both sides, then the same
-    // exact-sum statistics as the other decode twins
-    "multimodal_resize_pixels" ->
-      """SELECT doc_id, kind, CAST(ow AS INT) AS width, CAST(oh AS INT) AS height,
-        |CAST(list_sum(vals) AS DOUBLE) / (ow*oh) AS feat0,
-        |CAST(list_sum(list_transform(vals, v -> v*v)) AS DOUBLE) / (ow*oh) AS feat1
-        |FROM (
-        |SELECT doc_id, kind, ow, oh,
-        |  list_transform(range(0, ow*oh), p ->
-        |    ( ascii(substr(text, CAST((2*(p//ow)*w + 2*(p%ow)) % len AS INT) + 1, 1))
-        |    + CASE WHEN 2*(p%ow)+1 < w
-        |        THEN ascii(substr(text, CAST((2*(p//ow)*w + 2*(p%ow)+1) % len AS INT) + 1, 1))
-        |        ELSE 0 END
-        |    + CASE WHEN 2*(p//ow)+1 < h
-        |        THEN ascii(substr(text, CAST(((2*(p//ow)+1)*w + 2*(p%ow)) % len AS INT) + 1, 1))
-        |        ELSE 0 END
-        |    + CASE WHEN 2*(p%ow)+1 < w AND 2*(p//ow)+1 < h
-        |        THEN ascii(substr(text, CAST(((2*(p//ow)+1)*w + 2*(p%ow)+1) % len AS INT) + 1, 1))
-        |        ELSE 0 END
-        |    ) // ((CASE WHEN 2*(p%ow)+1 < w THEN 2 ELSE 1 END)
-        |         * (CASE WHEN 2*(p//ow)+1 < h THEN 2 ELSE 1 END))) AS vals
-        |FROM (SELECT doc_id, text, length(text) AS len,
-        |        CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'gif' ELSE 'tiff' END AS kind,
-        |        1 + length(text) % 32 AS w, 1 + length(text) % 24 AS h,
-        |        (1 + length(text) % 32 + 1) // 2 AS ow,
-        |        (1 + length(text) % 24 + 1) // 2 AS oh
-        |      FROM documents))""".stripMargin,
-    "multimodal_resize" ->
-      """SELECT doc_id, CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-        |CAST(length(text) AS INT) AS n_bytes,
-        |CAST(ceil(length(text) / 4.0) AS INT) AS resized_len,
-        |CAST(list_sum(list_transform(range(0, CAST(ceil(length(text)/4.0) AS BIGINT)),
-        |  i -> ascii(substr(text, CAST(i*4+1 AS INT), 1)))) AS BIGINT) AS resized_sum
-        |FROM documents""".stripMargin,
-    "events_trending" ->
-      """WITH h AS (SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-        |    event_type, count(*) AS n FROM events GROUP BY 1, 2),
-        |r AS (SELECT hour, event_type, n,
-        |    CAST(row_number() OVER (PARTITION BY hour ORDER BY n DESC, event_type)
-        |      AS INT) AS rank FROM h)
-        |SELECT hour, rank, event_type, n FROM r WHERE rank <= 3""".stripMargin,
-    "events_gapfill" ->
-      """WITH h AS (SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-        |    count(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1),
-        |b AS (SELECT MIN(hour) AS lo, MAX(hour) AS hi FROM h),
-        |g AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour FROM b)
-        |SELECT g.hour, COALESCE(h.n, 0) AS n_events, h.n IS NULL AS is_gap,
-        |  last_value(h.n IGNORE NULLS) OVER (ORDER BY g.hour
-        |    ROWS UNBOUNDED PRECEDING) AS last_observed_n,
-        |  COALESCE(h.v, 0.0) AS total_value
-        |FROM g LEFT JOIN h ON g.hour = h.hour""".stripMargin,
-    "events_hourly" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-        |count(*) AS n_events, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-        |count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "csv_roundtrip" ->
-      """SELECT CAST(l_orderkey AS INT) AS l_orderkey, CAST(l_linenumber AS INT) AS l_linenumber,
-        |l_quantity, l_returnflag FROM lineitem WHERE l_quantity > 47.0""".stripMargin,
-    "json_roundtrip" ->
-      """SELECT o_orderkey, o_orderpriority, o_totalprice FROM orders
-        |WHERE o_totalprice > 400000.0""".stripMargin,
-    "xml_roundtrip" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE c_acctbal > 9000.0""".stripMargin,
-    "fixedwidth_parse" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS INT) AS l_linenumber,
-        |  CASE WHEN l_orderkey % 997 = 0 THEN NULL
-        |    ELSE ROUND(l_quantity, 2) END AS l_quantity,
-        |  l_returnflag
-        |FROM lineitem""".stripMargin,
-    "orc_roundtrip" ->
-      "SELECT p_partkey, p_name, p_size FROM part WHERE p_size >= 45",
-    "json_parse_errors" ->
-      """SELECT CAST(count(*) FILTER (doc_id % 7 = 3) AS BIGINT) AS n_errors,
-        |CAST(count(*) FILTER (doc_id % 7 <> 3) AS BIGINT) AS n_good,
-        |CAST(SUM(n_chars) FILTER (doc_id % 7 <> 3) AS BIGINT) AS sum_n
-        |FROM documents""".stripMargin,
-    "log_parse" ->
-      """SELECT CAST(event_id AS BIGINT) AS eid, CAST(user_id AS BIGINT) AS uid,
-        |event_type AS etype FROM events""".stripMargin,
-    // the log line carries second-truncated timestamps, so the oracle
-    // truncates the source ts the same way before bounding
-    "log_parse_grok" ->
-      """SELECT strptime(strftime(ts, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S') AS lts,
-        |CAST(event_id AS BIGINT) AS eid, CAST(user_id AS BIGINT) AS uid,
-        |event_type AS etype
-        |FROM events
-        |WHERE strptime(strftime(ts, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S')
-        |  >= TIMESTAMP '2024-01-10 00:00:00'
-        |AND strptime(strftime(ts, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S')
-        |  < TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    // the same None→Integer→Double→String promotion lattice
-    // (GuessSchema.java:74-137) evaluated in SQL over the same
-    // stringified columns — checks the inference itself, not a
-    // hardcoded expected answer
-    "schema_infer" -> schemaInferOracle,
-    // federated JDBC: the database's own answers (embedded Derby) must
-    // equal DuckDB computing the same pushed SQL over the parquet original
-    "jdbc_roundtrip" ->
-      "SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer",
-    "jdbc_federated_hist" ->
-      """SELECT bucket, count(*) AS ct FROM (
-        |  SELECT CASE WHEN CAST(FLOOR((c_acctbal - -1000.0) / 1000.0) AS INT) > 10
-        |    THEN 10 ELSE CAST(FLOOR((c_acctbal - -1000.0) / 1000.0) AS INT) END AS bucket
-        |  FROM customer WHERE c_acctbal >= -1000.0 AND c_acctbal <= 10000.0) b
-        |GROUP BY bucket""".stripMargin,
-    "jdbc_federated_range" ->
-      """SELECT min(c_acctbal) AS min_v, max(c_acctbal) AS max_v,
-        |  count(c_acctbal) AS nonnulls, count(*) AS total FROM customer""".stripMargin,
-    "jdbc_federated_topfreq" ->
-      """SELECT c_mktsegment, count(*) AS ct FROM customer
-        |GROUP BY c_mktsegment HAVING count(*) >= 150""".stripMargin,
-    "jdbc_federated_hist2d" ->
-      """SELECT bucket_x, bucket_y, count(*) AS ct FROM (
-        |  SELECT CASE WHEN CAST(FLOOR((c_acctbal - -1000.0) / 1000.0) AS INT) > 10
-        |    THEN 10 ELSE CAST(FLOOR((c_acctbal - -1000.0) / 1000.0) AS INT) END AS bucket_x,
-        |  CASE WHEN CAST(FLOOR((c_nationkey - 0.0) / 5.0) AS INT) > 4
-        |    THEN 4 ELSE CAST(FLOOR((c_nationkey - 0.0) / 5.0) AS INT) END AS bucket_y
-        |  FROM customer WHERE c_acctbal >= -1000.0 AND c_acctbal <= 10000.0
-        |    AND c_nationkey >= 0.0 AND c_nationkey <= 25.0) b
-        |GROUP BY bucket_x, bucket_y""".stripMargin,
-    // closed-form 2×2 eigen from the same exact-decimal moments and the
-    // same operation order as Projections.pca2Project
-    "pca_projection" ->
-      """WITH m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(p_size AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-        |  CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-        |  CAST(SUM(CAST(p_size AS DECIMAL(18,2)) * CAST(p_size AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
-        |  CAST(SUM(CAST(p_size AS DECIMAL(18,2)) * CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS sxy,
-        |  CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2)) * CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS syy
-        |  FROM part),
-        |e AS (SELECT sxx/n - (sx/n)*(sx/n) AS a, sxy/n - (sx/n)*(sy/n) AS c,
-        |  syy/n - (sy/n)*(sy/n) AS b FROM m),
-        |l AS (SELECT a, b, c, (a+b)/2 + sqrt((a-b)*(a-b)/4 + c*c) AS l0 FROM e),
-        |ev AS (SELECT CASE WHEN abs(c) > 1e-12 THEN c WHEN a >= b THEN 1.0 ELSE 0.0 END AS e0,
-        |  CASE WHEN abs(c) > 1e-12 THEN l0 - a WHEN a >= b THEN 0.0 ELSE 1.0 END AS e1 FROM l),
-        |vn AS (SELECT e0 / sqrt(e0*e0 + e1*e1) AS v0, e1 / sqrt(e0*e0 + e1*e1) AS v1 FROM ev),
-        |vs AS (SELECT CASE WHEN v0 < 0 OR (v0 = 0 AND v1 < 0) THEN -v0 ELSE v0 END AS v0,
-        |  CASE WHEN v0 < 0 OR (v0 = 0 AND v1 < 0) THEN -v1 ELSE v1 END AS v1 FROM vn),
-        |w AS (SELECT v0, v1,
-        |  CASE WHEN -v1 < 0 OR (-v1 = 0 AND v0 < 0) THEN v1 ELSE -v1 END AS w0,
-        |  CASE WHEN -v1 < 0 OR (-v1 = 0 AND v0 < 0) THEN -v0 ELSE v0 END AS w1 FROM vs)
-        |SELECT p_partkey, round(p_size * v0 + p_retailprice * v1, 4) AS pc0,
-        |  round(p_size * w0 + p_retailprice * w1, 4) AS pc1
-        |FROM part CROSS JOIN w""".stripMargin,
-    // LAMP per-row closed form on the 4 pinned corner controls: every
-    // step of the UDF (inverse-square weights, weighted centroids, the
-    // 2×2 cross-covariance SVD via its eigen decomposition, the
-    // orthogonal map) is plain double arithmetic replayed here with the
-    // IDENTICAL expression grouping and accumulation order — lateral
-    // column aliases keep the chain readable. sqrt is IEEE-stable; the
-    // engine's hypot was rewritten to sqrt(t²+g01²) for exactly this.
-    "lamp_projection" ->
-      """SELECT p_partkey, round(p0, 4) AS lamp_x, round(p1, 4) AS lamp_y FROM (
-        |SELECT p_partkey,
-        |  CAST(p_size AS DOUBLE) AS x, p_retailprice AS y,
-        |  1.0/(1e-9 + (x - 1.0)*(x - 1.0) + (y - 900.0)*(y - 900.0)) AS a1,
-        |  1.0/(1e-9 + (x - 50.0)*(x - 50.0) + (y - 900.0)*(y - 900.0)) AS a2,
-        |  1.0/(1e-9 + (x - 1.0)*(x - 1.0) + (y - 2000.0)*(y - 2000.0)) AS a3,
-        |  1.0/(1e-9 + (x - 50.0)*(x - 50.0) + (y - 2000.0)*(y - 2000.0)) AS a4,
-        |  a1 + a2 + a3 + a4 AS asum,
-        |  (a1*1.0 + a2*50.0 + a3*1.0 + a4*50.0)/asum AS cbx,
-        |  (a1*900.0 + a2*900.0 + a3*2000.0 + a4*2000.0)/asum AS cby,
-        |  (a2 + a4)/asum AS y0,
-        |  (a3 + a4)/asum AS y1,
-        |  a1*(1.0 - cbx)*(0.0 - y0) + a2*(50.0 - cbx)*(1.0 - y0) + a3*(1.0 - cbx)*(0.0 - y0) + a4*(50.0 - cbx)*(1.0 - y0) AS bx0,
-        |  a1*(900.0 - cby)*(0.0 - y0) + a2*(900.0 - cby)*(1.0 - y0) + a3*(2000.0 - cby)*(0.0 - y0) + a4*(2000.0 - cby)*(1.0 - y0) AS by0,
-        |  a1*(1.0 - cbx)*(0.0 - y1) + a2*(50.0 - cbx)*(0.0 - y1) + a3*(1.0 - cbx)*(1.0 - y1) + a4*(50.0 - cbx)*(1.0 - y1) AS bx1,
-        |  a1*(900.0 - cby)*(0.0 - y1) + a2*(900.0 - cby)*(0.0 - y1) + a3*(2000.0 - cby)*(1.0 - y1) + a4*(2000.0 - cby)*(1.0 - y1) AS by1,
-        |  bx0*bx0 + by0*by0 AS g00,
-        |  bx0*bx1 + by0*by1 AS g01,
-        |  bx1*bx1 + by1*by1 AS g11,
-        |  g00 + g11 AS tr, g00*g11 - g01*g01 AS det,
-        |  sqrt(GREATEST(tr*tr/4 - det, 0.0)) AS disc,
-        |  GREATEST(tr/2 + disc, 1e-9) AS l0,
-        |  GREATEST(tr/2 - disc, 1e-9) AS l1,
-        |  l0 - g11 AS tt, sqrt(tt*tt + g01*g01) AS nn,
-        |  CASE WHEN abs(g01) > 1e-9 THEN tt/nn ELSE 1.0 END AS v00,
-        |  CASE WHEN abs(g01) > 1e-9 THEN g01/nn ELSE 0.0 END AS v10,
-        |  -v10 AS v01, v00 AS v11,
-        |  sqrt(l0) AS s0, sqrt(l1) AS s1,
-        |  x - cbx AS xr0, y - cby AS xr1,
-        |  xr0*bx0 + xr1*by0 AS xb0,
-        |  xr0*bx1 + xr1*by1 AS xb1,
-        |  xb0*v00 + xb1*v10 AS t0, xb0*v01 + xb1*v11 AS t1,
-        |  t0/s0 AS u0, t1/s1 AS u1,
-        |  u0*v00 + u1*v01 + y0 AS p0,
-        |  u0*v10 + u1*v11 + y1 AS p1
-        |FROM part)""".stripMargin,
-    "hist_singleton_1d" ->
-      """SELECT LEAST(CAST(FLOOR((p_retailprice - 900.0) / ((2000.0 - 900.0) / 40.0)) AS INT), 39) AS bucket,
-        |count(*) AS cnt, CASE WHEN count(*) = 1 THEN min(p_partkey) END AS singleton
-        |FROM part GROUP BY 1""".stripMargin,
-    "shuffle_rows" ->
-      """SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT),
-        |  CAST(doc_id AS VARCHAR)) AS INT) AS shuffle_rank
-        |FROM documents""".stripMargin,
-    "train_test_split" ->
-      """SELECT doc_id, CASE WHEN
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80
-        |  THEN 'train' ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-    // stage-major global rank == engine's (stage, bucket) offsets +
-    // per-bucket ranks (bucket is monotone in h, so the orders agree)
-    "curriculum_order" ->
-      """WITH t AS (SELECT doc_id, len(string_split(text, ' ')) AS n FROM documents),
-        |s AS (SELECT doc_id,
-        |    CASE WHEN n < 25 THEN 0 WHEN n < 45 THEN 1 ELSE 2 END AS stage,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM t)
-        |SELECT doc_id, stage, CAST(ROW_NUMBER() OVER (
-        |  ORDER BY stage, h, CAST(doc_id AS VARCHAR)) AS INT) AS curriculum_rank
-        |FROM s""".stripMargin,
-    "batch_by_length" ->
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM documents),
-        |b AS (SELECT doc_id, n, h, n // 10 AS bin,
-        |    CAST(h // 72057594037927936 AS INT) AS shard FROM t),
-        |r AS (SELECT bin, shard, n,
-        |    (ROW_NUMBER() OVER (PARTITION BY bin, shard
-        |       ORDER BY h, CAST(doc_id AS VARCHAR)) - 1) // 8 AS batch
-        |  FROM b)
-        |SELECT bin, shard, batch, CAST(count(*) AS BIGINT) AS n_seqs,
-        |  max(n) AS max_tokens, CAST(sum(n) AS BIGINT) AS sum_tokens,
-        |  CAST(count(*) * max(n) - sum(n) AS BIGINT) AS pad_tokens
-        |FROM r GROUP BY 1, 2, 3""".stripMargin,
-    "sample_rows_hash" ->
-      """SELECT l_orderkey, l_linenumber FROM lineitem
-        |WHERE CAST(('0x' || substr(md5(
-        |  CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)
-        |  ), 1, 15)) AS BIGINT) % 10000 < 100""".stripMargin,
-    "sample_per_source" ->
-      """SELECT doc_id, text, lang, source, n_chars, rank FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY source ORDER BY
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT),
-        |    CAST(doc_id AS VARCHAR)) AS INT) AS rank
-        |  FROM documents) WHERE rank <= 5""".stripMargin,
-    "corpus_mix" ->
-      """WITH t AS (SELECT doc_id, text, lang, source, n_chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-        |  FROM documents WHERE source IN ('src0', 'src1', 'src2')),
-        |b AS (SELECT *, CASE source WHEN 'src0' THEN 800 WHEN 'src1' THEN 600
-        |    ELSE 2000000 END AS bud FROM t),
-        |c AS (SELECT *, CAST(sum(n_toks) OVER (PARTITION BY source
-        |    ORDER BY h, CAST(doc_id AS VARCHAR)
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum FROM b)
-        |SELECT doc_id, text, lang, source, n_chars, n_toks, cum AS cum_tokens
-        |FROM c WHERE cum <= bud""".stripMargin,
-    "pack_sequences" ->
-      """SELECT doc_id, source, n_tokens,
-        |CAST(FLOOR((CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) - n_tokens) / 2048.0) AS BIGINT) AS bin
-        |FROM (SELECT doc_id, source,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents)""".stripMargin,
-    // MERGE INTO replay: the same key-modulo feed, latest-wins per key
-    // (seq DESC; (key,seq) unique by construction), tombstone deletes,
-    // untouched base rows pass through
-    "cdc_merge_apply" -> (cdcFeedSql +
-      """,
-        |w AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey
-        |    ORDER BY seq DESC) AS rn FROM feed),
-        |winners AS (SELECT * FROM w WHERE rn = 1)
-        |SELECT o.o_orderkey, o.o_custkey, o.o_orderstatus, o.o_totalprice,
-        |  o.o_orderdate, o.o_orderpriority
-        |FROM orders o LEFT JOIN winners ww ON o.o_orderkey = ww.o_orderkey
-        |WHERE ww.o_orderkey IS NULL
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |  o_orderdate, o_orderpriority
-        |FROM winners WHERE op <> 'D'""".stripMargin),
-    // the evolved read replayed from the raw table: the narrow shard's
-    // values round-trip through their v1 types (REAL→DOUBLE is the
-    // exact float widening; INT→BIGINT exact), the missing column
-    // null-fills, the wide shard passes through
-    "schema_evolution_read" ->
-      """SELECT o_orderkey, CAST(o_custkey AS BIGINT) AS o_custkey,
-        |  CAST(CAST(o_totalprice AS REAL) AS DOUBLE) AS o_totalprice,
-        |  CAST(NULL AS VARCHAR) AS o_channel
-        |FROM orders WHERE o_orderkey % 2 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_totalprice, 'web'
-        |FROM orders WHERE o_orderkey % 2 = 1""".stripMargin,
-    // SCD2 replay: base as version 0, lead(seq) closes each interval
-    // (a tombstone closes the last one without opening a new row)
-    "cdc_scd2_history" -> (cdcFeedSql +
-      """,
-        |base0 AS (SELECT o_orderkey, o_custkey, o_orderstatus,
-        |    o_totalprice, o_orderdate, o_orderpriority,
-        |    'I' AS op, CAST(0 AS BIGINT) AS seq FROM orders),
-        |allr AS (SELECT * FROM base0 UNION ALL SELECT * FROM feed),
-        |iv AS (SELECT *, lead(seq) OVER (PARTITION BY o_orderkey
-        |    ORDER BY seq) AS valid_to FROM allr)
-        |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-        |  o_orderdate, o_orderpriority, seq AS valid_from, valid_to,
-        |  (valid_to IS NULL) AS is_current
-        |FROM iv WHERE op <> 'D'""".stripMargin),
-    "pipeline_end2end" ->
-      """WITH t AS (
-        |  SELECT doc_id, text, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'and')) AS en_c,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x = 'der' OR x = 'die' OR x = 'das' OR x = 'und')) AS de_c,
-        |    len(list_filter(string_split(lower(text), ' '), x -> x = 'le' OR x = 'la' OR x = 'les' OR x = 'et')) AS fr_c
-        |  FROM documents),
-        |f AS (SELECT doc_id, text, n_tokens FROM t
-        |  WHERE n_tokens >= 20 AND en_c >= de_c AND en_c >= fr_c AND en_c > 0),
-        |k AS (SELECT doc_id, n_tokens,
-        |  ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn FROM f),
-        |s AS (SELECT doc_id, n_tokens,
-        |  CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80
-        |    THEN 'train' ELSE 'test' END AS split
-        |  FROM k WHERE rn = 1)
-        |SELECT doc_id, split, n_tokens,
-        |  CAST(FLOOR((CAST(SUM(n_tokens) OVER (PARTITION BY split ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) - n_tokens) / 2048.0) AS BIGINT) AS bin
-        |FROM s""".stripMargin,
-    "merge_concat" ->
-      """SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderpriority = '1-URGENT'
-        |UNION ALL
-        |SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderpriority = '5-LOW'
-        |UNION ALL
-        |SELECT o_orderkey, o_orderpriority FROM orders WHERE o_orderkey % 1000 = 0""".stripMargin,
-    "geo_tag" ->
-      """SELECT CASE r_name WHEN 'AFRICA' THEN 'south' WHEN 'AMERICA' THEN 'west'
-        |  WHEN 'ASIA' THEN 'east' WHEN 'EUROPE' THEN 'north'
-        |  WHEN 'MIDDLE EAST' THEN 'central' END AS zone,
-        |count(*) AS n_customers
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1""".stripMargin,
-    // the oracle states each convex polygon's edge half-planes
-    // (simplified cross products — identical truth values on the integer
-    // coordinate grid); polygons are disjoint so CASE order is immaterial
-    "geo_polygon_tag" ->
-      """WITH p AS (SELECT CAST(c_custkey % 97 AS DOUBLE) AS px,
-        |  CAST((c_custkey // 97) % 97 AS DOUBLE) AS py FROM customer),
-        |t AS (SELECT CASE
-        |  WHEN py >= 0 AND px >= 0 AND px + py <= 48 THEN 'southwest'
-        |  WHEN py >= 0 AND py <= 96 AND px >= 49 AND px <= 96 THEN 'east'
-        |  WHEN py >= 49 AND (-24*(py-49) - 47*(px-48)) >= 0
-        |    AND (-24*(py-96) + 47*(px-24)) >= 0 THEN 'north'
-        |  END AS poly FROM p)
-        |SELECT poly, count(*) AS n_points FROM t WHERE poly IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    // hole-aware twin: inside donut = inside the outer box (boundary
-    // incl.) AND NOT strictly inside the hole (hole boundary belongs to
-    // the feature) — even-odd across rings on axis-aligned integers
-    "geo_polygon_holes" ->
-      """WITH p AS (SELECT CAST(c_custkey % 97 AS DOUBLE) AS px,
-        |  CAST((c_custkey // 97) % 97 AS DOUBLE) AS py FROM customer),
-        |t AS (SELECT CASE
-        |  WHEN px >= 5 AND px <= 90 AND py >= 0 AND py <= 90
-        |    AND NOT (px > 30 AND px < 60 AND py > 5 AND py < 40) THEN 'donut'
-        |  WHEN px >= 92 AND px <= 96 AND py >= 0 AND py <= 96 THEN 'plate'
-        |  END AS poly FROM p)
-        |SELECT poly, count(*) AS n_points FROM t WHERE poly IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    // shapefile-loaded twin of geo_polygon_tag: same features, same
-    // grid — the oracle region predicate is identical (ray cast and
-    // half-plane tests agree on convex polygons, boundary-inclusive)
-    "geo_shapefile_tag" ->
-      """WITH p AS (SELECT CAST(c_custkey % 97 AS DOUBLE) AS px,
-        |  CAST((c_custkey // 97) % 97 AS DOUBLE) AS py FROM customer),
-        |t AS (SELECT CASE
-        |  WHEN py >= 0 AND px >= 0 AND px + py <= 48 THEN 'southwest'
-        |  WHEN py >= 0 AND py <= 96 AND px >= 49 AND px <= 96 THEN 'east'
-        |  WHEN py >= 49 AND (-24*(py-49) - 47*(px-48)) >= 0
-        |    AND (-24*(py-96) + 47*(px-24)) >= 0 THEN 'north'
-        |  END AS poly FROM p)
-        |SELECT poly, count(*) AS n_points FROM t WHERE poly IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    // the L-shape is the union of two closed axis-aligned rectangles —
-    // on the integer grid the even-odd rule plus inclusive boundary
-    // equals this region predicate exactly
-    "geo_polygon_concave" ->
-      """WITH p AS (SELECT CAST(c_custkey % 97 AS DOUBLE) AS px,
-        |  CAST((c_custkey // 97) % 97 AS DOUBLE) AS py FROM customer),
-        |t AS (SELECT CASE
-        |  WHEN (px BETWEEN 0 AND 48 AND py BETWEEN 0 AND 24)
-        |    OR (px BETWEEN 0 AND 24 AND py BETWEEN 24 AND 96) THEN 'lshape'
-        |  WHEN px >= 49 AND px <= 96 AND py >= 0 AND py <= 96 THEN 'east'
-        |  END AS poly FROM p)
-        |SELECT poly, count(*) AS n_points FROM t WHERE poly IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    "asof_join" ->
-      """SELECT l.event_id, l.user_id, r.view_id, r.view_value
-        |FROM (SELECT * FROM events WHERE event_type = 'click') l
-        |ASOF LEFT JOIN (
-        |  SELECT user_id, ts, max(event_id) AS view_id,
-        |    arg_max(value, event_id) AS view_value
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2) r
-        |ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-    "sink_zorder" ->
-      """SELECT event_type, count(*) AS cnt,
-        |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1""".stripMargin,
-    // half-open session windows: a gap of exactly 30min starts a new
-    // session (>=), unlike the lag form's strict >
-    "events_sessions_native" ->
-      """WITH x AS (SELECT user_id, value, epoch_ms(ts) AS ms,
-        |  lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms FROM events),
-        |y AS (SELECT user_id, value,
-        |  CASE WHEN prev_ms IS NULL OR ms - prev_ms >= 1800000 THEN 1 ELSE 0 END AS new_session FROM x)
-        |SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events,
-        |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM y GROUP BY 1 ORDER BY 1""".stripMargin,
-    "events_sessions" ->
-      """WITH x AS (SELECT user_id, value, epoch_ms(ts) AS ms,
-        |  lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ms FROM events),
-        |y AS (SELECT user_id, value,
-        |  CASE WHEN prev_ms IS NULL OR ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_session FROM x)
-        |SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events,
-        |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM y GROUP BY 1 ORDER BY 1""".stripMargin
-  )
-
-  /** Gating spec per declared rows-only query (every `queries` key with
-    * no `oracleSql` entry): which test asserts its correctness and what
-    * the gate checks. Verify dumps this as gates.json next to
-    * oracle_sql.json so the correctness artifact carries the
-    * non-oracled queries' gates as structured fields, not prose. */
-  /** Gates for rows-only queries. The PQ serve queries are ORACLED
-    * whenever the session holds a trained quantizer (the normal Verify
-    * path — every query runs before the dump) and fall back to their
-    * property gates only when it doesn't, so a query never carries both
-    * an oracle and a gate at the same time (the OperatorSpec rule).
-    */
-  def rowsOnlyGates: Map[String, String] = rowsOnlyGatesStatic ++
-    (if (graft.ann.PqIndex.lastSide.isEmpty ||
-         graft.ann.PqIndex.sideConflict) Map(
-      "ann_pq_topk" -> "PropertySpec 'PQ ANN: recall vs brute force, determinism, 32x compression' — recall@10 >= 0.7, run-to-run bit equality",
-      "ann_ivfpq_topk" -> "PropertySpec 'IVF-PQ ANN: recall with cell probing, scans only probed cells' — recall@10 >= 0.5 + PartitionFilters plan gate")
-     else Map.empty) ++
-    (if (compactionSinkDir.isEmpty) Map(
-      "sink_compaction_plan" -> "LayoutSpec 'compaction plan bins files by cumulative size in name order' — hand-sized fixture bins + at-most-one-file overshoot")
-     else Map.empty) ++
-    (if (graft.ann.PqIndex.lastFoldedSide.isEmpty ||
-         graft.ann.PqIndex.foldedConflict) Map(
-      "ann_pq_topk_folded" -> "PipelineSpec 'folded PQ index artifact: fold == append serve parity, provenance' — fold-vs-rebuilt-index result parity + fold provenance")
-     else Map.empty) ++
-    (if (graft.ann.Similarity.lastIvfCentroids.isEmpty ||
-         graft.ann.Similarity.ivfConflict) Map(
-      "ann_ivf_topk" -> "PipelineSpec 'IVF topk: self-cell recall includes exact top-1 for most queries' — seeded centroids, deterministic")
-     else Map.empty)
-
-  private def rowsOnlyGatesStatic: Map[String, String] = Map(
-    "bucket_quantiles_approx" -> "PropertySpec 'approx bucket quantiles within tolerance of exact, bounded-state plan' — rank error <= 1/accuracy vs ORACLED bucket_quantiles twin",
-    "hist2d_quantiles_approx" -> "PropertySpec 'approx 2-D bucket quantiles within tolerance, bounded-state plan' — same gate, 2-D; ORACLED hist2d_quantiles twin",
-    "quantiles_approx" -> "PropertySpec 'approx quantiles within relative error of exact' vs ORACLED quantiles_exact twin",
-    "cluster_health" -> "engine introspection (executor/memory rows from the live session — no external ground truth exists); OperatorSpec all-queries smoke asserts shape + rows > 0",
-    "corpus_sketch_report" -> "PropertySpec 'theta sketch: exact regime, split bit-parity, sampled error bounds' — k exceeds verify-scale distincts so carried exact columns must equal estimates",
-    "decontaminate_bloom" -> "PropertySpec 'bloom decontamination flags a superset of the exact join, FPs bounded' + PlanSpec 'probes without any corpus-side join'",
-    "dp_noisy_cdf" -> "PropertySpec 'dyadic noisy CDF: deterministic, monotone, O(log T) noise variables'",
-    "dp_noisy_distinct" -> "PropertySpec 'noisy distinct: zero noise equals the bare sketch; radius composes' — zero-noise twin equals ORACLED hll path",
-    "dp_noisy_heatmap" -> "PropertySpec 'dyadic noisy heatmap: deterministic, exact counts, O(logTx*logTy) vars'",
-    "dp_noisy_hist" -> "PropertySpec 'laplace noise: zero scale is exact' + 'laplace noise distribution: mean ~0, mean|x| ~scale over buckets'; zero-noise twin dp_quantized_hist ORACLED",
-    "dp_noisy_hist_budgeted" -> "same gates as dp_noisy_hist; scale comes from PrivacySchema.noiseScale (unit-tested budget lookup)",
-    "dp_noisy_nextk" -> "PropertySpec 'dp_noisy_nextk: page equals zero-noise twin, noise keyed + deterministic' — page rows equal ORACLED dp_quantized_nextk; one shared keyed TotalCount noise",
-    "dp_sample_quantile" -> "PropertySpec 'dp_sample_quantile lands within N/res of the exact quantized twin' — exact twin dp_quantized_quantile ORACLED",
-    "embedding_kmeans" -> "PipelineSpec 'kmeans assigns every vector to its argmax-cosine centroid' + PlanSpec narrow-map gate; integer twin embedding_kmeans_exact ORACLED",
-    "heavy_sampled" -> "PropertySpec 'MG + exact verify equals exact heavy hitters on random data' family — sampled HH must contain every true heavy hitter at verify scale",
-    "hll_distinct" -> "PropertySpec 'approx distinct count within HLL error of exact'",
-    "hll_group_distinct" -> "PropertySpec 'grouped HLL distinct within 5% of exact per group'",
-    "multimodal_jpeg_features" -> "StreamingSpec 'jpeg decode: dims exact, mean inside the DC-preservation band'; exact fixture twin multimodal_jpeg_features_exact ORACLED",
-    "quality_probe_train" -> "PipelineSpec 'logistic probe: converging loss, separable accuracy, correct signs'; calibration-curve consumer ORACLED",
-    "row_at_position_sampled" -> "PropertySpec 'sampled row-at-position lands within N/res of the target rank'; exact twin row_at_position ORACLED",
-    "sample_distinct_rows" -> "PropertySpec 'seeded sample size concentrates around rate and is deterministic'; carried exact distinct rows are the in-row ground truth",
-    "sample_rows" -> "PropertySpec 'seeded sample size concentrates around rate and is deterministic'; hash-membership twin sample_rows_hash ORACLED",
-    "sample_weighted" -> "PipelineSpec 'weighted sample is deterministic, sized, and weight-biased' + PlanSpec 'weighted sample plans TakeOrderedAndProject'",
-    "sketch_bloom_rollup" -> "PropertySpec 'bloom sketch: no false negatives, FP bound, split bit-parity'; in-row exact_* columns are the ground truth",
-    "sketch_distinct_rollup" -> "PropertySpec 'hll sketch: <=5% error, partition-merge == whole-corpus sketch, deterministic'; in-row exact_distinct ground truth",
-    "sketch_quantile_rollup" -> "PropertySpec 'kll sketch: rank error <= 3% at the quartiles, under any split'; in-row exact_q* ground truth",
-    "stratified_sample" -> "PropertySpec 'stratified sample: per-stratum proportions near fractions, deterministic'")
+  private[graft] val registry = new Registry(Relational.specs ++ Sketches.specs ++
+    Similarity.specs ++ Hygiene.specs ++ WebIngest.specs ++ Media.specs ++
+    Sources.specs ++ Training.specs)
+
+  /** Every named query's builder, built once. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.queries
+
+  /** DuckDB oracle SQL per value-matched query. A def: the session-state
+    * checks render when the dump runs, after the queries they replay. */
+  def oracleSql: Map[String, String] = registry.oracleSql
+
+  /** The gate (the test asserting correctness) per rows-only query;
+    * Verify dumps it as gates.json next to oracle_sql.json. */
+  def rowsOnlyGates: Map[String, String] = registry.rowsOnlyGates
 }

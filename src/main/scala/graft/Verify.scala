@@ -11,13 +11,21 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = engine.Sessions.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // each query's dir is cleared first, so a query that throws leaves a
+    // _FAILED marker (check.py reports it) and never an earlier run's output
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      val dir = new java.io.File(outDir, name)
+      engine.Artifacts.deleteRecursively(dir)
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        dir.mkdirs()
+        Files.writeString(dir.toPath.resolve("_FAILED"), String.valueOf(e.getMessage))
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -41,6 +49,8 @@ object Verify {
     val gates = SparkEntry.rowsOnlyGates
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/gates.json"), gates)
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.toSeq.sorted.mkString(", ")}")
     spark.stop()
   }
 }

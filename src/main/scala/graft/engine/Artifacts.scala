@@ -231,6 +231,21 @@ object Artifacts {
     f.delete(); ()
   }
 
+  /** The per-JVM scratch root under `java.io.tmpdir`; one shutdown hook
+    * deletes it, so the temp dirs queries and mains stage under it
+    * (stream inputs, sinks, fixtures, scale tiers) never outlive the run. */
+  private[graft] lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_scratch_")
+    sys.addShutdownHook(deleteRecursively(root.toFile))
+    root
+  }
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A fresh, empty directory under the per-JVM scratch root. */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createDirectory(
+      scratchRoot.resolve(prefix + scratchSeq.incrementAndGet()))
+
   /** File-listing identity of one parquet table (name, length, mtime of
     * every part file, sorted) — the per-input component of artifact
     * fingerprints. */

@@ -536,7 +536,7 @@ object Events {
       val schema = spark.read.parquet(s"$dir/events.parquet").schema
       // the streaming file source requires a directory: stage the single
       // parquet file into a temp dir
-      val streamDir = java.nio.file.Files.createTempDirectory("graft_stream")
+      val streamDir = graft.engine.Artifacts.scratchDir("graft_stream")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$dir/events.parquet"),
         streamDir.resolve("events.parquet"))
@@ -560,7 +560,7 @@ object Events {
   def runHourlyStreamToFiles(spark: SparkSession, dir: String): DataFrame =
     withNanosAsLong(spark) {
       val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = java.nio.file.Files.createTempDirectory("graft_stream")
+      val streamDir = graft.engine.Artifacts.scratchDir("graft_stream")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$dir/events.parquet"),
         streamDir.resolve("events.parquet"))
@@ -569,7 +569,7 @@ object Events {
         if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
           raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
         else raw
-      val out = java.nio.file.Files.createTempDirectory("graft_stream_out")
+      val out = graft.engine.Artifacts.scratchDir("graft_stream_out")
       val q = hourlyAggStream(stream).writeStream
         .outputMode("append").format("parquet")
         .option("path", s"$out/data")
@@ -625,7 +625,7 @@ object Events {
       value: Column, sink: String)(stream: DataFrame => DataFrame): DataFrame =
     withNanosAsLong(spark) {
       val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val streamDir = java.nio.file.Files.createTempDirectory(s"${sink}_stream")
+      val streamDir = graft.engine.Artifacts.scratchDir(s"${sink}_stream")
       spark.read.parquet(s"$dir/events.parquet")
         .repartition(4).write.mode("overwrite").parquet(streamDir.toString)
       val raw = spark.readStream.schema(schema)
@@ -810,7 +810,7 @@ object Events {
     */
   def runDedupStreamOnce(spark: SparkSession, dir: String): Long = {
     val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_dedup_stream")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_dedup_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       streamDir.resolve("documents.parquet"))
@@ -858,7 +858,7 @@ object Events {
       threshold: Double = 0.5): DataFrame = {
     val all = spark.read.parquet(s"$dir/documents.parquet")
     val corpus = all.filter(pmod(col("doc_id"), lit(10L)) =!= 0L)
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_ingest")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_ingest")
     // two delta files -> two micro-batches under maxFilesPerTrigger=1
     all.filter(pmod(col("doc_id"), lit(10L)) === 0L)
       .filter(col("doc_id") < 250L).coalesce(1)
@@ -1247,7 +1247,7 @@ object Events {
   def runDedupStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val all = spark.read.parquet(s"$dir/documents.parquet")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_dedup_stream")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_dedup_stream")
     all.repartition(4).write.mode("overwrite").parquet(streamDir.toString)
     val raw = spark.readStream.schema(all.schema)
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
@@ -1304,7 +1304,7 @@ object Events {
       budgets: Map[String, Long], defaultBudget: Long): DataFrame = {
     import spark.implicits._
     val all = spark.read.parquet(s"$dir/documents.parquet")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_tok_stream")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_tok_stream")
     all.repartition(4).write.mode("overwrite").parquet(streamDir.toString)
     val raw = spark.readStream.schema(all.schema)
       .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)

@@ -45,7 +45,7 @@ class FixturesSpec extends SparkSpec {
   test("every resource in the fixture build stamps is on the classpath") {
     // Artifacts.classStamp skips a missing resource silently, so a stale
     // name would freeze fixture inputs materialized under the old rows
-    (Fixtures.buildStamp ++ SparkEntry.boilerplateStamp).foreach { r =>
+    (Fixtures.buildStamp ++ queries.WebIngest.boilerplateStamp).foreach { r =>
       assert(getClass.getResource(r) != null, r)
     }
   }

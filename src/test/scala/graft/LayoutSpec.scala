@@ -40,7 +40,7 @@ class LayoutSpec extends SparkSpec {
   test("sink_compaction_plan reuses one per-JVM sink outside the artifact root") {
     def run(): String = {
       SparkEntry.queries("sink_compaction_plan")(spark, sf).collect()
-      SparkEntry.compactionSinkDir.get
+      queries.Sources.compactionSinkDir.get
     }
     val first = run()
     assert(run() == first)
@@ -52,6 +52,14 @@ class LayoutSpec extends SparkSpec {
     val files = sink.toFile.listFiles.filter(_.getName.startsWith("lang="))
       .flatMap(_.listFiles).filter(_.getName.endsWith(".parquet"))
     assert(files.nonEmpty && files.forall(f => oracle.contains(f.getName)))
+  }
+
+  test("sink_zorder stages its sink under the per-JVM scratch root") {
+    val files = SparkEntry.queries("sink_zorder")(spark, sf).inputFiles
+    val root = graft.engine.Artifacts.scratchRoot
+    assert(files.nonEmpty && files.forall(f =>
+      java.nio.file.Paths.get(new java.net.URI(f)).startsWith(root)),
+      s"$root: ${files.mkString(", ")}")
   }
 
   test("bucketed tables join without a shuffle") {

@@ -1068,7 +1068,7 @@ class PipelineSpec extends SparkSpec {
 
   test("wordpiece greedy: longest-first, restart, unk trap, doc stats") {
     import spark.implicits._
-    val vocab = SparkEntry.wordpieceVocab
+    val vocab = queries.WebIngest.wordpieceVocab
     def seg(w: String): (Long, Boolean, String) = {
       val r = Seq(w).toDF("word")
         .select(graft.functions.WordPieceTokenizer.wordpiece_segment(

@@ -629,7 +629,7 @@ class PlanSpec extends SparkSpec {
   test("model score is one narrow codegen'd map (literal vocab, no join)") {
     val df = Tables.documents(spark, sf).select(col("doc_id"),
       graft.text.TextAnalysis.modelScore(col("text"),
-        graft.SparkEntry.modelVocab, -1.0).as("raw_score"))
+        graft.queries.WebIngest.modelVocab, -1.0).as("raw_score"))
     val p = plan(df)
     assert(!p.contains("Exchange"), p)
     assert(!p.contains("Join"), p)
@@ -876,7 +876,7 @@ class PlanSpec extends SparkSpec {
 
   test("wordpiece serve: distinct-word split broadcasts back to the corpus") {
     val df = graft.text.TextAnalysis.wordpieceStats(
-      Tables.documents(spark, sf), SparkEntry.wordpieceVocab)
+      Tables.documents(spark, sf), queries.WebIngest.wordpieceVocab)
     val p = plan(df)
     assert(p.contains("BroadcastHashJoin"), p)
     // the executed-plan string elides the deep Project carrying the

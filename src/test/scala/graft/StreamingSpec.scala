@@ -1447,7 +1447,7 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     val batch = gestures(docs).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_js_stream")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_js_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       streamDir.resolve("documents.parquet"))
