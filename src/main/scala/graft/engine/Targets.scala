@@ -131,8 +131,15 @@ class TargetRegistry(val spark: SparkSession) {
   }
 
   // ── map gestures → child targets (FilterMap, ProjectMap, …) ─────────
+  // Each gesture's display string and transform live in its `*Impl`,
+  // which the redo-log replay calls with the recorded id. Expression
+  // gestures take their recorded SQL text as the replayable arg.
   def filter(id: String, pred: Column): Target =
-    mapGesture(id, s"filter:$pred", "filter", Seq(sqlOf(pred)))(_.filter(pred))
+    filterImpl(id, pred, sqlOf(pred), None)
+
+  private def filterImpl(id: String, pred: Column, sql: String,
+      forcedId: Option[String]): Target =
+    mapGesture(id, s"filter:$pred", "filter", Seq(sql), forcedId)(_.filter(pred))
 
   def project(id: String, cols: Seq[String]): Target =
     projectImpl(id, cols, None)
@@ -146,42 +153,64 @@ class TargetRegistry(val spark: SparkSession) {
       rid = p.rid.map(_.select((RowIdCol +: cols).map(F.col): _*)))
   }
 
-  def withColumn(id: String, name: String, c: Column): Target = {
+  def withColumn(id: String, name: String, c: Column): Target =
+    withColumnImpl(id, name, c, sqlOf(c), None)
+
+  private def withColumnImpl(id: String, name: String, c: Column, sql: String,
+      forcedId: Option[String]): Target = {
     require(name != RowIdCol, s"$RowIdCol is reserved")
-    mapGesture(id, s"col:$name=$c", "col", Seq(name, sqlOf(c)))(
+    mapGesture(id, s"col:$name=$c", "col", Seq(name, sql), forcedId)(
       _.withColumn(name, c))
   }
 
   /** RenameColumnMap.java gesture. */
-  def rename(id: String, from: String, to: String): Target = {
+  def rename(id: String, from: String, to: String): Target =
+    renameImpl(id, from, to, None)
+
+  private def renameImpl(id: String, from: String, to: String,
+      forcedId: Option[String]): Target = {
     require(from != RowIdCol && to != RowIdCol, s"$RowIdCol is reserved")
-    mapGesture(id, s"rename:$from->$to", "rename", Seq(from, to))(
+    mapGesture(id, s"rename:$from->$to", "rename", Seq(from, to), forcedId)(
       _.withColumnRenamed(from, to))
   }
 
   /** ConvertColumnMap.java gesture (cast in place). */
   def convert(id: String, column: String, toType: String): Target =
+    convertImpl(id, column, toType, None)
+
+  private def convertImpl(id: String, column: String, toType: String,
+      forcedId: Option[String]): Target =
     mapGesture(id, s"convert:$column:$toType", "convert",
-      Seq(column, toType))(df => df.withColumn(column,
+      Seq(column, toType), forcedId)(df => df.withColumn(column,
         org.apache.spark.sql.functions.col(column).cast(toType)))
 
   /** CreateIntervalColumnMap.java gesture (TableTarget.java:648-653):
     * two numeric columns → one Interval column. */
   def createInterval(id: String, name: String, a: String, b: String): Target =
+    createIntervalImpl(id, name, a, b, None)
+
+  private def createIntervalImpl(id: String, name: String, a: String, b: String,
+      forcedId: Option[String]): Target =
     mapGesture(id, s"interval:$name=[$a,$b]", "interval",
-      Seq(name, a, b))(df => df.withColumn(name, graft.operators.Intervals.make(
+      Seq(name, a, b), forcedId)(df => df.withColumn(name, graft.operators.Intervals.make(
         org.apache.spark.sql.functions.col(a),
         org.apache.spark.sql.functions.col(b))))
 
   /** CreateColumnJSMap.java gesture: a JS-subset `function map(row)`
     * compiled to Columns; the SOURCE TEXT is the replayable arg. */
   def jsColumn(id: String, name: String, js: String): Target =
-    mapGesture(id, s"jscol:$name", "jscol", Seq(name, js))(
+    jsColumnImpl(id, name, js, None)
+
+  private def jsColumnImpl(id: String, name: String, js: String,
+      forcedId: Option[String]): Target =
+    mapGesture(id, s"jscol:$name", "jscol", Seq(name, js), forcedId)(
       graft.functions.JsGesture.withJsColumn(_, name, js))
 
   /** JSFilterDescription gesture (TableTarget.java:705-711). */
-  def jsFilter(id: String, js: String): Target =
-    mapGesture(id, "jsfilter", "jsfilter", Seq(js))(
+  def jsFilter(id: String, js: String): Target = jsFilterImpl(id, js, None)
+
+  private def jsFilterImpl(id: String, js: String, forcedId: Option[String]): Target =
+    mapGesture(id, "jsfilter", "jsfilter", Seq(js), forcedId)(
       graft.functions.JsGesture.jsFilter(_, js))
 
   /** SetOperationMap.java gesture (TableTarget.java:665-674): set
@@ -393,35 +422,21 @@ object TargetRegistry {
         case "load" =>
           reg.loadImpl(args(0), args(1), Some(id))
         case "filter" =>
-          val p = expr(args(0))
-          reg.mapGesture(parent.get, s"filter:$p", op, args,
-            Some(id))(_.filter(p))
+          reg.filterImpl(parent.get, expr(args(0)), args(0), Some(id))
         case "project" =>
           reg.projectImpl(parent.get, args, Some(id))
         case "col" =>
-          val c = expr(args(1))
-          reg.mapGesture(parent.get, s"col:${args(0)}=$c", op, args,
-            Some(id))(_.withColumn(args(0), c))
+          reg.withColumnImpl(parent.get, args(0), expr(args(1)), args(1), Some(id))
         case "rename" =>
-          reg.mapGesture(parent.get, s"rename:${args(0)}->${args(1)}", op,
-            args, Some(id))(_.withColumnRenamed(args(0), args(1)))
+          reg.renameImpl(parent.get, args(0), args(1), Some(id))
         case "convert" =>
-          reg.mapGesture(parent.get, s"convert:${args(0)}:${args(1)}", op,
-            args, Some(id))(df => df.withColumn(args(0),
-              org.apache.spark.sql.functions.col(args(0)).cast(args(1))))
+          reg.convertImpl(parent.get, args(0), args(1), Some(id))
         case "interval" =>
-          reg.mapGesture(parent.get,
-            s"interval:${args(0)}=[${args(1)},${args(2)}]", op, args,
-            Some(id))(df => df.withColumn(args(0),
-              graft.operators.Intervals.make(
-                org.apache.spark.sql.functions.col(args(1)),
-                org.apache.spark.sql.functions.col(args(2)))))
+          reg.createIntervalImpl(parent.get, args(0), args(1), args(2), Some(id))
         case "jscol" =>
-          reg.mapGesture(parent.get, s"jscol:${args(0)}", op, args,
-            Some(id))(graft.functions.JsGesture.withJsColumn(_, args(0), args(1)))
+          reg.jsColumnImpl(parent.get, args(0), args(1), Some(id))
         case "jsfilter" =>
-          reg.mapGesture(parent.get, "jsfilter", op, args,
-            Some(id))(graft.functions.JsGesture.jsFilter(_, args(0)))
+          reg.jsFilterImpl(parent.get, args(0), Some(id))
         case "setop" =>
           reg.setOpImpl(parent.get, args(1), args(0), Some(id))
         case "merge" =>

@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.graftshim
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, DoubleType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType}
 
 /** Persistable mergeable BLOOM FILTER — the membership member of the
   * storable-sketch family (HLL: distinct counts; MG: heavy hitters;
@@ -33,12 +30,9 @@ object BloomSketch {
   val DefaultK = 6
 
   def bloom_build(c: Column, mBits: Int = DefaultBits, k: Int = DefaultK): Column =
-    graftshim.exprToColumn(
-      BloomBuildAgg(graftshim.columnToExpr(c), mBits, k).toAggregateExpression())
+    Sketch.build(c, Bloom(mBits, k))
 
-  def bloom_merge(c: Column): Column =
-    graftshim.exprToColumn(
-      BloomMergeAgg(graftshim.columnToExpr(c)).toAggregateExpression())
+  def bloom_merge(c: Column): Column = Sketch.merge(c, Bloom(DefaultBits, DefaultK))
 
   def bloom_might_contain(blob: Column, v: Column): Column =
     graftshim.exprToColumn(BloomMightContain(
@@ -119,83 +113,29 @@ object BloomSketch {
   }
 }
 
-/** `bloom_build(value[, mBits, k])`: aggregate rows into a Bloom blob. */
-case class BloomBuildAgg(
-    child: Expression, mBits: Int, k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
+/** The Bloom family as a [[Sketch]]: an mBits/k filter over
+  * [[BloomSketch.valueHash]]. The buffer is the blob itself. The merge
+  * side starts from an empty sentinel that adopts (a copy of) the first
+  * folded blob's geometry; a merge of no blobs yields an empty filter.
+  */
+case class Bloom(mBits: Int, k: Int) extends Sketch[Array[Byte]] {
+  def name: String = "bloom"
+  def zero: Array[Byte] = BloomSketch.empty(mBits, k)
+  override def mergeZero: Array[Byte] = Array.emptyByteArray
 
-  override def createAggregationBuffer(): Array[Byte] =
-    BloomSketch.empty(mBits, k)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null)
-      BloomSketch.addHash(buf, BloomSketch.valueHash(v, child.dataType))
+  def add(buf: Array[Byte], value: Any, dt: DataType): Array[Byte] = {
+    BloomSketch.addHash(buf, BloomSketch.valueHash(value, dt))
     buf
   }
 
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    BloomSketch.orInto(a, b); a
-  }
-
-  override def eval(buf: Array[Byte]): Any = buf
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "bloom_build"
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomBuildAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomBuildAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BloomBuildAgg =
-    copy(child = newChild)
-}
-
-/** `bloom_merge(blob)`: OR already-built blobs (re-merge of stored
-  * shards). Geometry is adopted from the first folded blob. */
-case class BloomMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
-
-  // empty sentinel (length 0) adopts the first blob's geometry — the
-  // same untouched-buffer discipline as ThetaMergeAgg's UntouchedK
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  private def fold(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
     if (b.isEmpty) a
     else if (a.isEmpty) b.clone()
     else { BloomSketch.orInto(a, b); a }
 
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buf else fold(buf, v.asInstanceOf[Array[Byte]])
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = fold(a, b)
-
-  override def eval(buf: Array[Byte]): Any =
-    if (buf.isEmpty) BloomSketch.empty(BloomSketch.DefaultBits, BloomSketch.DefaultK)
-    else buf
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "bloom_merge"
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BloomMergeAgg =
-    copy(child = newChild)
+  def serialize(buf: Array[Byte]): Array[Byte] = buf
+  def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
+  override def result(buf: Array[Byte]): Array[Byte] = if (buf.isEmpty) zero else buf
 }
 
 /** `bloom_might_contain(blob, value)`: one-sided membership. Evaluated

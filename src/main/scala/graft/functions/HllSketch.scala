@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Persistable, mergeable HyperLogLog sketches as binary columns.
   *
@@ -34,13 +31,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 object HllSketch {
   val DefaultP = 12
 
-  def hll_build(c: Column, p: Int = DefaultP): Column =
-    graftshim.exprToColumn(
-      HllBuildAgg(graftshim.columnToExpr(c), p).toAggregateExpression())
+  def hll_build(c: Column, p: Int = DefaultP): Column = Sketch.build(c, Hll(p))
 
-  def hll_merge(c: Column): Column =
-    graftshim.exprToColumn(
-      HllMergeAgg(graftshim.columnToExpr(c)).toAggregateExpression())
+  def hll_merge(c: Column): Column = Sketch.merge(c, Hll(DefaultP))
 
   def hll_estimate(c: Column): Column =
     graftshim.exprToColumn(HllEstimate(graftshim.columnToExpr(c)))
@@ -88,86 +81,30 @@ object HllSketch {
   }
 }
 
-/** `hll_build(value, p)`: aggregate rows into a 2^p-register sketch. */
-case class HllBuildAgg(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
-
+/** The HLL family as a [[Sketch]]: 2^p registers, values routed by
+  * xxhash64 seed 42. The merge side starts from an empty sentinel that
+  * adopts (a copy of) the first folded sketch, so merging never fixes a
+  * precision of its own; a merge of no sketches yields empty 2^p
+  * registers.
+  */
+case class Hll(p: Int) extends Sketch[Array[Byte]] {
   require(p >= 4 && p <= 18, s"hll precision p=$p outside [4, 18]")
 
-  override def createAggregationBuffer(): Array[Byte] =
-    HllSketch.emptyRegisters(p)
+  def name: String = "hll"
+  def zero: Array[Byte] = HllSketch.emptyRegisters(p)
+  override def mergeZero: Array[Byte] = Array.emptyByteArray
 
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      HllSketch.addHash(buf, XxHash64Function.hash(v, child.dataType, 42L))
-    }
+  def add(buf: Array[Byte], value: Any, dt: DataType): Array[Byte] = {
+    HllSketch.addHash(buf, XxHash64Function.hash(value, dt, 42L))
     buf
   }
 
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    HllSketch.maxMerge(a, b)
+  def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    if (b.isEmpty) a else if (a.isEmpty) b.clone() else HllSketch.maxMerge(a, b)
 
-  override def eval(buf: Array[Byte]): Any = buf
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "hll_build"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllBuildAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllBuildAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllBuildAgg =
-    copy(child = newChild)
-}
-
-/** `hll_merge(sketch)`: max-merge already-built binary sketches. */
-case class HllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
-
-  // empty sentinel until the first sketch fixes the register count
-  override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val sk = v.asInstanceOf[Array[Byte]]
-      if (buf.isEmpty) sk.clone()
-      else HllSketch.maxMerge(buf, sk)
-    }
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (a.isEmpty) b else if (b.isEmpty) a else HllSketch.maxMerge(a, b)
-
-  override def eval(buf: Array[Byte]): Any =
-    if (buf.isEmpty) HllSketch.emptyRegisters(HllSketch.DefaultP) else buf
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "hll_merge"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllMergeAgg =
-    copy(child = newChild)
+  def serialize(buf: Array[Byte]): Array[Byte] = buf
+  def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
+  override def result(buf: Array[Byte]): Array[Byte] = if (buf.isEmpty) zero else buf
 }
 
 /** `hll_estimate(sketch)`: distinct-count estimate of a binary sketch.

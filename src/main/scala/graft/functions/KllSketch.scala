@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
@@ -30,13 +27,9 @@ import scala.collection.mutable.ArrayBuffer
 object KllSketch {
   val DefaultK = 200
 
-  def kll_build(c: Column, k: Int = DefaultK): Column =
-    graftshim.exprToColumn(
-      KllBuildAgg(graftshim.columnToExpr(c), k).toAggregateExpression())
+  def kll_build(c: Column, k: Int = DefaultK): Column = Sketch.build(c, Kll(k))
 
-  def kll_merge(c: Column): Column =
-    graftshim.exprToColumn(
-      KllMergeAgg(graftshim.columnToExpr(c)).toAggregateExpression())
+  def kll_merge(c: Column): Column = Sketch.merge(c, Kll(DefaultK))
 
   /** Quantile of a sketch blob at fraction q ∈ [0, 1]. */
   def kll_quantile(c: Column, q: Double): Column =
@@ -179,90 +172,34 @@ object KllSketch {
   }
 }
 
-/** `kll_build(value, k)`: aggregate numeric rows into a KLL blob. */
-case class KllBuildAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllSketch.Buf]
-  with UnaryLike[Expression] {
-
+/** The KLL family as a [[Sketch]]: numeric values as doubles into a
+  * k-sized buffer. An empty buffer adopts whatever it merges with, so
+  * the merge side needs no sentinel of its own.
+  */
+case class Kll(k: Int) extends Sketch[KllSketch.Buf] {
   require(k >= 8, s"kll k=$k too small")
 
-  override def createAggregationBuffer(): KllSketch.Buf = KllSketch.emptyBuf(k)
+  def name: String = "kll"
+  def zero: KllSketch.Buf = KllSketch.emptyBuf(k)
 
-  override def update(buf: KllSketch.Buf, input: InternalRow): KllSketch.Buf = {
-    val v = child.eval(input)
-    if (v != null) {
-      val d = v match {
-        case x: Double              => x
-        case x: Float               => x.toDouble
-        case x: Long                => x.toDouble
-        case x: Int                 => x.toDouble
-        case x: Short               => x.toDouble
-        case x: Byte                => x.toDouble
-        case x: org.apache.spark.sql.types.Decimal => x.toDouble
-        case x                      => x.toString.toDouble
-      }
-      KllSketch.add(buf, d)
+  def add(buf: KllSketch.Buf, value: Any, dt: DataType): KllSketch.Buf = {
+    val d = value match {
+      case x: Double  => x
+      case x: Float   => x.toDouble
+      case x: Long    => x.toDouble
+      case x: Int     => x.toDouble
+      case x: Short   => x.toDouble
+      case x: Byte    => x.toDouble
+      case x: Decimal => x.toDouble
+      case x          => x.toString.toDouble
     }
+    KllSketch.add(buf, d)
     buf
   }
 
-  override def merge(a: KllSketch.Buf, b: KllSketch.Buf): KllSketch.Buf =
-    KllSketch.mergeBufs(a, b)
-
-  override def eval(buf: KllSketch.Buf): Any = KllSketch.serialize(buf)
-  override def serialize(buf: KllSketch.Buf): Array[Byte] = KllSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): KllSketch.Buf = KllSketch.deserialize(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "kll_build"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllBuildAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllBuildAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllBuildAgg =
-    copy(child = newChild)
-}
-
-/** `kll_merge(sketch)`: combine already-built KLL blobs. */
-case class KllMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllSketch.Buf]
-  with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): KllSketch.Buf =
-    KllSketch.emptyBuf(KllSketch.DefaultK)
-
-  override def update(buf: KllSketch.Buf, input: InternalRow): KllSketch.Buf = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else KllSketch.mergeBufs(buf, KllSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-  }
-
-  override def merge(a: KllSketch.Buf, b: KllSketch.Buf): KllSketch.Buf =
-    KllSketch.mergeBufs(a, b)
-
-  override def eval(buf: KllSketch.Buf): Any = KllSketch.serialize(buf)
-  override def serialize(buf: KllSketch.Buf): Array[Byte] = KllSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): KllSketch.Buf = KllSketch.deserialize(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "kll_merge"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllMergeAgg =
-    copy(child = newChild)
+  def merge(a: KllSketch.Buf, b: KllSketch.Buf): KllSketch.Buf = KllSketch.mergeBufs(a, b)
+  def serialize(buf: KllSketch.Buf): Array[Byte] = KllSketch.serialize(buf)
+  def deserialize(bytes: Array[Byte]): KllSketch.Buf = KllSketch.deserialize(bytes)
 }
 
 /** `kll_quantile(sketch, q)` → double. CodegenFallback: sketch-sized

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.types._
@@ -33,13 +32,9 @@ import scala.collection.mutable
   * Blob layout: [n:int][len:int key-utf8 count:long]*n.
   */
 object MgSketch {
-  def mg_build(c: Column, cap: Int): Column =
-    graftshim.exprToColumn(
-      MgBuildAgg(graftshim.columnToExpr(c), cap).toAggregateExpression())
+  def mg_build(c: Column, cap: Int): Column = Sketch.build(c, Mg(cap))
 
-  def mg_merge(c: Column, cap: Int): Column =
-    graftshim.exprToColumn(
-      MgMergeAgg(graftshim.columnToExpr(c), cap).toAggregateExpression())
+  def mg_merge(c: Column, cap: Int): Column = Sketch.merge(c, Mg(cap))
 
   def mg_entries(c: Column): Column =
     graftshim.exprToColumn(MgEntries(graftshim.columnToExpr(c)))
@@ -104,94 +99,28 @@ object MgSketch {
   }
 }
 
-/** `mg_build(key, cap)`: aggregate string keys into a ≤cap-entry MG
-  * summary blob.
+/** The Misra-Gries family as a [[Sketch]]: a ≤cap-entry summary of
+  * string keys (each value's `toString`). Both sides start empty and
+  * merge by [[MgSketch.combine]] at the same cap.
   */
-case class MgBuildAgg(
-    child: Expression,
-    cap: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
-  with UnaryLike[Expression] {
-
+case class Mg(cap: Int) extends Sketch[mutable.HashMap[String, Long]] {
   require(cap >= 1, s"mg cap=$cap must be positive")
 
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
+  def name: String = "mg"
+  def zero: mutable.HashMap[String, Long] = mutable.HashMap.empty
 
-  override def update(
-      buf: mutable.HashMap[String, Long], input: InternalRow): mutable.HashMap[String, Long] = {
-    val v = child.eval(input)
-    if (v != null) MgSketch.add(buf, v.toString, cap)(identity)
+  def add(buf: mutable.HashMap[String, Long], value: Any,
+      dt: DataType): mutable.HashMap[String, Long] = {
+    MgSketch.add(buf, value.toString, cap)(identity)
     buf
   }
 
-  override def merge(
-      a: mutable.HashMap[String, Long],
+  def merge(a: mutable.HashMap[String, Long],
       b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] =
     MgSketch.combine(a, b, cap)
 
-  override def eval(buf: mutable.HashMap[String, Long]): Any =
-    MgSketch.serialize(buf)
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] =
-    MgSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] =
-    MgSketch.deserialize(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "mg_build"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MgBuildAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MgBuildAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): MgBuildAgg =
-    copy(child = newChild)
-}
-
-/** `mg_merge(sketch, cap)`: combine already-built MG summary blobs. */
-case class MgMergeAgg(
-    child: Expression,
-    cap: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
-  with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty
-
-  override def update(
-      buf: mutable.HashMap[String, Long], input: InternalRow): mutable.HashMap[String, Long] = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else MgSketch.combine(buf, MgSketch.deserialize(v.asInstanceOf[Array[Byte]]), cap)
-  }
-
-  override def merge(
-      a: mutable.HashMap[String, Long],
-      b: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] =
-    MgSketch.combine(a, b, cap)
-
-  override def eval(buf: mutable.HashMap[String, Long]): Any =
-    MgSketch.serialize(buf)
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] =
-    MgSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] =
-    MgSketch.deserialize(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "mg_merge"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MgMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MgMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): MgMergeAgg =
-    copy(child = newChild)
+  def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] = MgSketch.serialize(buf)
+  def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = MgSketch.deserialize(bytes)
 }
 
 /** Misra-Gries over a key TUPLE, the one-pass half of heavy hitters:

@@ -3,11 +3,9 @@ package graft.functions
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 
@@ -46,13 +44,9 @@ object ThetaSketch {
     * compares below it and the sketch is exhaustive (exact). */
   val MaxTheta: Long = Long.MaxValue
 
-  def theta_build(c: Column, k: Int = DefaultK): Column =
-    graftshim.exprToColumn(
-      ThetaBuildAgg(graftshim.columnToExpr(c), k).toAggregateExpression())
+  def theta_build(c: Column, k: Int = DefaultK): Column = Sketch.build(c, Theta(k))
 
-  def theta_merge(c: Column): Column =
-    graftshim.exprToColumn(
-      ThetaMergeAgg(graftshim.columnToExpr(c)).toAggregateExpression())
+  def theta_merge(c: Column): Column = Sketch.merge(c, Theta(DefaultK))
 
   def theta_estimate(c: Column): Column =
     graftshim.exprToColumn(ThetaEstimate(graftshim.columnToExpr(c)))
@@ -170,101 +164,37 @@ object ThetaSketch {
   }
 }
 
-/** `theta_build(value[, k])`: aggregate rows into a theta sketch. */
-case class ThetaBuildAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaSketch.Buf]
-  with UnaryLike[Expression] {
-
+/** The theta family as a [[Sketch]]: the k smallest xxhash64 (seed 42)
+  * hashes, masked to 63 bits so θ arithmetic stays in the positive Long
+  * range. The merge side starts at [[ThetaSketch.UntouchedK]], so the
+  * min-k union adopts the first folded blob's k; a merge of no blobs
+  * yields an empty DefaultK sketch rather than leaking the sentinel.
+  * The result is the canonical blob.
+  */
+case class Theta(k: Int) extends Sketch[ThetaSketch.Buf] {
   require(k >= 16 && k <= 65536, s"theta sketch k=$k outside [16, 65536]")
 
-  override def createAggregationBuffer(): ThetaSketch.Buf =
-    ThetaSketch.emptyBuf(k)
+  def name: String = "theta"
+  def zero: ThetaSketch.Buf = ThetaSketch.emptyBuf(k)
+  override def mergeZero: ThetaSketch.Buf = ThetaSketch.emptyBuf(ThetaSketch.UntouchedK)
 
-  override def update(buf: ThetaSketch.Buf, input: InternalRow): ThetaSketch.Buf = {
-    val v = child.eval(input)
-    if (v != null) {
-      // mask to 63 bits so θ arithmetic stays in the positive Long range
-      buf.addHash(XxHash64Function.hash(v, child.dataType, 42L) & Long.MaxValue)
-    }
+  def add(buf: ThetaSketch.Buf, value: Any, dt: DataType): ThetaSketch.Buf = {
+    buf.addHash(XxHash64Function.hash(value, dt, 42L) & Long.MaxValue)
     buf
   }
 
-  override def merge(a: ThetaSketch.Buf, b: ThetaSketch.Buf): ThetaSketch.Buf = {
-    ThetaSketch.foldInto(a, b.k, b.theta,
-      b.set.iterator.asScala.map(_.longValue))
+  def merge(a: ThetaSketch.Buf, b: ThetaSketch.Buf): ThetaSketch.Buf = {
+    ThetaSketch.foldInto(a, b.k, b.theta, b.set.iterator.asScala.map(_.longValue))
     a
   }
 
-  override def eval(buf: ThetaSketch.Buf): Any = ThetaSketch.canonical(buf)
-  override def serialize(buf: ThetaSketch.Buf): Array[Byte] = ThetaSketch.ser(buf)
-  override def deserialize(bytes: Array[Byte]): ThetaSketch.Buf =
-    ThetaSketch.deserToBuf(bytes)
+  def serialize(buf: ThetaSketch.Buf): Array[Byte] = ThetaSketch.ser(buf)
+  def deserialize(bytes: Array[Byte]): ThetaSketch.Buf = ThetaSketch.deserToBuf(bytes)
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "theta_build"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaBuildAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaBuildAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ThetaBuildAgg =
-    copy(child = newChild)
-}
-
-/** `theta_merge(sketch)`: union already-built theta sketch blobs. */
-case class ThetaMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaSketch.Buf]
-  with UnaryLike[Expression] {
-
-  // UntouchedK: min-k union semantics then adopt the FIRST folded
-  // blob's k naturally (min(UntouchedK, k) = k) in both update and
-  // merge — no special-casing, and k>DefaultK blobs are not truncated.
-  override def createAggregationBuffer(): ThetaSketch.Buf =
-    ThetaSketch.emptyBuf(ThetaSketch.UntouchedK)
-
-  override def update(buf: ThetaSketch.Buf, input: InternalRow): ThetaSketch.Buf = {
-    val v = child.eval(input)
-    if (v != null) {
-      val blob = ThetaSketch.deser(v.asInstanceOf[Array[Byte]])
-      ThetaSketch.foldInto(buf, blob.k, blob.theta, blob.vs.iterator)
-    }
-    buf
-  }
-
-  override def merge(a: ThetaSketch.Buf, b: ThetaSketch.Buf): ThetaSketch.Buf = {
-    ThetaSketch.foldInto(a, b.k, b.theta,
-      b.set.iterator.asScala.map(_.longValue))
-    a
-  }
-
-  override def eval(buf: ThetaSketch.Buf): Any = {
-    // merge over zero non-null blobs: emit a DefaultK empty sketch
-    // rather than leaking the sentinel into the wire format
+  override def result(buf: ThetaSketch.Buf): Array[Byte] = {
     if (buf.k == ThetaSketch.UntouchedK) buf.k = ThetaSketch.DefaultK
     ThetaSketch.canonical(buf)
   }
-  override def serialize(buf: ThetaSketch.Buf): Array[Byte] = ThetaSketch.ser(buf)
-  override def deserialize(bytes: Array[Byte]): ThetaSketch.Buf =
-    ThetaSketch.deserToBuf(bytes)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "theta_merge"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ThetaMergeAgg =
-    copy(child = newChild)
 }
 
 /** `theta_estimate(sketch)`: distinct-count estimate (exact while the

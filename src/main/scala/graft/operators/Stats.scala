@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.engine.Num
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -152,22 +151,22 @@ object Stats {
     * decimal string form (identical in both engines for DECIMAL
     * columns), so 0.052 audits as 5. One scan, 9-row output. */
   def benfordAudit(df: DataFrame, value: Column): DataFrame = {
-    val expected = Seq(1 -> 3010L, 2 -> 1760L, 3 -> 1249L, 4 -> 969L,
-      5 -> 791L, 6 -> 669L, 7 -> 579L, 8 -> 511L, 9 -> 457L)
-    val expectedCol = expected.foldLeft(lit(0L)) { case (acc, (d, e)) =>
-      when(col("first_digit") === d.toLong, e).otherwise(acc)
+    val expected = Seq(3010L, 1760L, 1249L, 969L, 791L, 669L, 579L, 511L, 457L)
+    val fd = col("__fd")
+    // the nine digit counts and the total in one no-group aggregation,
+    // then one row per digit that occurs
+    val digits = expected.zipWithIndex.map { case (e, i) =>
+      struct(lit(i + 1L).as("first_digit"), col(s"__n${i + 1}").as("n"),
+        lit(e).as("__exp_e4"))
     }
-    // the total is a window over the ≤9-row aggregate, so the scan and
-    // the per-row regexp extract run once
     df.filter(value > 0)
       .select(regexp_extract(value.cast("string"), "[1-9]", 0).as("__fd"))
-      .filter(col("__fd") =!= "")
-      .groupBy(col("__fd").cast("long").as("first_digit"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("__t", sum(col("n")).over(
-        Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .agg(count(when(fd =!= "", 1)).as("__t"),
+        (1 to 9).map(d => count(when(fd === d.toString, 1)).as(s"__n$d")): _*)
+      .select(col("__t"), explode(array(digits: _*)).as("__d"))
+      .select(col("__t"), col("__d.*"))
+      .filter(col("n") > 0)
       .withColumn("__share_e4", expr("n * 10000 div __t"))
-      .withColumn("__exp_e4", expectedCol)
       .select(col("first_digit"), col("n"),
         (col("__share_e4") / lit(10000.0)).as("share"),
         (col("__exp_e4") / lit(10000.0)).as("expected_share"),

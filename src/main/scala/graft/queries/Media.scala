@@ -121,18 +121,11 @@ object Media {
     // re-derive from filenames, the decoder runs over `content` — the
     // plumbing every image/audio corpus ingest starts with (at scale:
     // the same source over an object store, maxFilesPerTrigger for the
-    // streaming form). Scratch dir cleared first: stale files from a
-    // different-scale run must not leak into the listing.
+    // streaming form). Each call stages into a fresh scratch dir, so no
+    // stale or concurrent run's files can leak into the listing.
     QuerySpec("binaryfile_ingest", (s, d) => {
       import s.implicits._
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_binfiles")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(dir.toFile)
-      java.nio.file.Files.createDirectories(dir)
+      val dir = graft.engine.Artifacts.scratchDir("graft_binfiles")
       docs(s, d).orderBy(col("doc_id")).limit(16)
         .select(col("doc_id"), col("text")).collect().foreach { r =>
           val id = r.getLong(0)

@@ -652,155 +652,64 @@ object Events {
       .select(col("shard"), col("user_id"), col("lower_bound"))
   }
 
-  final case class HllRow(shard: Int, key: Long)
-  final case class HllState(regs: Array[Byte], seen: Long)
-  final case class HllOut(shard: Int, regs: Array[Byte], version: Long)
-
-  /** Streaming distinct-count via HLL register state — the streaming twin
-    * of the storable [[graft.functions.HllSketch]]. Per-shard state is
-    * the fixed 2^p-byte register array, updated per micro-batch with the
-    * SAME xxhash64/seed-42 routing as the batch `hll_build`; because the
-    * register merge is an idempotent, commutative max, the shard split is
-    * purely for parallelism (a key may hit any shard) and the final
-    * merged registers equal the batch sketch of the same rows BIT FOR
-    * BIT — gated in StreamingSpec, a stronger contract than the MG
-    * twin's order-dependent candidates.
+  /** The streaming twin of a storable [[graft.functions.Sketch]], driven
+    * through [[runShardedStream]]. Per-shard state is the serialized
+    * buffer; each micro-batch folds its non-null `value`s in with the
+    * same `add` the batch `*_build` runs, and the shards' latest buffers
+    * are combined with the sketch's `merge`. Where the family's merge is
+    * order-insensitive (HLL registers, theta's k smallest hashes) the
+    * result equals the batch sketch of the same rows BIT FOR BIT; where
+    * it is not (KLL compaction coins), only the error bound carries over.
+    * Both contracts are gated in StreamingSpec.
     */
-  def distinctStream(events: Dataset[HllRow], p: Int): Dataset[HllOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState[HllState, HllOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (shard, rows, state: GroupState[HllState]) =>
-          val st = state.getOption.getOrElse(
-            HllState(graft.functions.HllSketch.emptyRegisters(p), 0L))
-          val regs = st.regs.clone()
-          var seen = st.seen
-          rows.foreach { r =>
-            seen += 1
-            graft.functions.HllSketch.addHash(regs,
-              org.apache.spark.sql.catalyst.expressions.XxHash64Function
-                .hash(r.key, org.apache.spark.sql.types.LongType, 42L))
+  private def sketchStream[B](spark: SparkSession, dir: String, shards: Int,
+      value: Column, sink: String, sketch: graft.functions.Sketch[B]): B = {
+    import spark.implicits._
+    runShardedStream(spark, dir, shards, value.as("v"), sink) { rows =>
+      val dt = rows.schema("v").dataType
+      rows.groupByKey(_.getInt(0))
+        .flatMapGroupsWithState[(Array[Byte], Long), (Int, Array[Byte], Long)](
+          OutputMode.Update, GroupStateTimeout.NoTimeout) { (shard, rs, state) =>
+          var (buf, seen) = state.getOption
+            .map { case (blob, n) => (sketch.deserialize(blob), n) }
+            .getOrElse((sketch.zero, 0L))
+          rs.foreach { r =>
+            seen += 1 // cumulative row count: a monotone version per shard
+            if (!r.isNullAt(1)) buf = sketch.add(buf,
+              org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(r.get(1)), dt)
           }
-          state.update(HllState(regs, seen))
-          Iterator.single(HllOut(shard, regs, seen))
-      }
+          val blob = sketch.serialize(buf)
+          state.update((blob, seen))
+          Iterator.single((shard, blob, seen))
+        }
+        .toDF("shard", "blob", "version")
+    }.select(col("blob")).collect().toSeq
+      .map(r => sketch.deserialize(r.getAs[Array[Byte]](0)))
+      .reduce(sketch.merge(_, _))
   }
 
-  /** Drive distinctStream through [[runShardedStream]] and return the
-    * final merged register array.
-    */
+  /** Streaming distinct count: the HLL twin of `hll_build`. Returns the
+    * merged registers, equal to the batch sketch of the same rows. */
   def runDistinctStream(
       spark: SparkSession, dir: String, p: Int, shards: Int): Array[Byte] = {
-    import spark.implicits._
-    val finals = runShardedStream(spark, dir, shards,
-        col("user_id").as("key"), "graft_hll")(
-        rows => distinctStream(rows.as[HllRow], p).toDF())
-      .select(col("regs")).collect().map(_.getAs[Array[Byte]](0))
-    finals.reduce { (a, b) =>
-      graft.functions.HllSketch.maxMerge(a.clone(), b)
-    }
+    val hll = graft.functions.Hll(p)
+    hll.result(sketchStream(spark, dir, shards, col("user_id"), "graft_hll", hll))
   }
 
-  final case class ThetaRow(shard: Int, key: Long)
-  final case class ThetaState(blob: Array[Byte], seen: Long)
-  final case class ThetaOut(shard: Int, blob: Array[Byte], version: Long)
-
-  /** Streaming theta sketch — the set-algebra member of the
-    * streaming-twin family (MG candidates, HLL registers, KLL buffers,
-    * this). Per-shard state is the serialized k-smallest-unique-hash
-    * buffer; "the k smallest of a union" is order-insensitive and
-    * deterministic, so the shard-merged canonical blob equals the batch
-    * `theta_build` of the same rows BIT FOR BIT — the same strength of
-    * contract as the HLL twin, gated in StreamingSpec.
-    */
-  def thetaStream(events: Dataset[ThetaRow], k: Int): Dataset[ThetaOut] = {
-    import events.sparkSession.implicits._
-    import graft.functions.ThetaSketch
-    events
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState[ThetaState, ThetaOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (shard, rows, state: GroupState[ThetaState]) =>
-          val buf = state.getOption
-            .map(s => ThetaSketch.deserToBuf(s.blob))
-            .getOrElse(ThetaSketch.emptyBuf(k))
-          var seen = state.getOption.map(_.seen).getOrElse(0L)
-          rows.foreach { r =>
-            seen += 1
-            buf.addHash(org.apache.spark.sql.catalyst.expressions
-              .XxHash64Function.hash(r.key,
-                org.apache.spark.sql.types.LongType, 42L) & Long.MaxValue)
-          }
-          val blob = ThetaSketch.ser(buf)
-          state.update(ThetaState(blob, seen))
-          Iterator.single(ThetaOut(shard, blob, seen))
-      }
-  }
-
-  /** Drive thetaStream through [[runShardedStream]] and return the
-    * final canonical merged blob. */
+  /** Streaming theta sketch: the set-algebra twin of `theta_build`.
+    * Returns the canonical merged blob, equal to the batch sketch. */
   def runThetaStream(
       spark: SparkSession, dir: String, k: Int, shards: Int): Array[Byte] = {
-    import spark.implicits._
-    import graft.functions.ThetaSketch
-    val finals = runShardedStream(spark, dir, shards,
-        col("user_id").as("key"), "graft_theta")(
-        rows => thetaStream(rows.as[ThetaRow], k).toDF())
-      .select(col("blob")).collect().map(_.getAs[Array[Byte]](0))
-    val acc = ThetaSketch.deserToBuf(finals.head)
-    finals.tail.foreach { b =>
-      val blob = ThetaSketch.deser(b)
-      ThetaSketch.foldInto(acc, blob.k, blob.theta, blob.vs.iterator)
-    }
-    ThetaSketch.canonical(acc)
+    val theta = graft.functions.Theta(k)
+    theta.result(sketchStream(spark, dir, shards, col("user_id"), "graft_theta", theta))
   }
 
-  final case class KllRow(shard: Int, v: Double)
-  final case class KllState(blob: Array[Byte], seen: Long)
-  final case class KllOut(shard: Int, blob: Array[Byte], version: Long)
-
-  /** Streaming quantile sketch — the KLL member of the streaming-twin
-    * set (MG candidates, HLL registers, this). Per-shard state is the
-    * serialized KLL buffer; each micro-batch folds its rows in and
-    * re-serializes. Unlike HLL the merged bytes are not canonical
-    * (compaction coins depend on arrival order), so the contract is the
-    * rank-error bound of the shard-merged sketch, gated in StreamingSpec
-    * against the exact batch ranks.
-    */
-  def quantileStream(events: Dataset[KllRow], k: Int): Dataset[KllOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState[KllState, KllOut](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (shard, rows, state: GroupState[KllState]) =>
-          val buf = state.getOption match {
-            case Some(st) => graft.functions.KllSketch.deserialize(st.blob)
-            case None     => graft.functions.KllSketch.emptyBuf(k)
-          }
-          var seen = state.getOption.map(_.seen).getOrElse(0L)
-          rows.foreach { r => seen += 1; graft.functions.KllSketch.add(buf, r.v) }
-          val blob = graft.functions.KllSketch.serialize(buf)
-          state.update(KllState(blob, seen))
-          Iterator.single(KllOut(shard, blob, seen))
-      }
-  }
-
-  /** Drive quantileStream through [[runShardedStream]] and return the
-    * final shard-merged KLL buffer.
-    */
+  /** Streaming quantile sketch: the KLL twin of `kll_build` over the
+    * events' `value` as double. Returns the shard-merged buffer. */
   def runQuantileStream(
-      spark: SparkSession, dir: String, k: Int, shards: Int): graft.functions.KllSketch.Buf = {
-    import spark.implicits._
-    val finals = runShardedStream(spark, dir, shards,
-        col("value").cast("double").as("v"), "graft_kll")(
-        rows => quantileStream(rows.filter(col("v").isNotNull).as[KllRow], k).toDF())
-      .select(col("blob")).collect()
-      .map(r => graft.functions.KllSketch.deserialize(r.getAs[Array[Byte]](0)))
-    finals.reduce(graft.functions.KllSketch.mergeBufs)
-  }
+      spark: SparkSession, dir: String, k: Int, shards: Int): graft.functions.KllSketch.Buf =
+    sketchStream(spark, dir, shards, col("value").cast("double"), "graft_kll",
+      graft.functions.Kll(k))
 
   /** Streaming exact dedup: first occurrence of each content hash passes
     * through, later duplicates are dropped — `dropDuplicates` keeps

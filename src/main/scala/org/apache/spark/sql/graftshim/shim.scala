@@ -31,6 +31,13 @@ package object graftshim {
   def normalizeFloats(e: Expression): Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
+  /** Register the functions `ext` injects into an already-built
+    * session, as a session built with the extensions registers them. */
+  def registerFunctions(ext: SparkSessionExtensions, spark: SparkSession): Unit = {
+    ext.registerFunctions(spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry)
+    ()
+  }
+
   def experimentalStrategies(spark: SparkSession): ExperimentalMethods =
     spark.asInstanceOf[classic.SparkSession].experimental
 }

@@ -13,7 +13,7 @@ class GreenplumSpec extends SparkSpec {
     // hand-written dump with MULTIPLE split files per segment (the
     // dump-greenplum.sh `split -l` layout): per-segment position must
     // run across file boundaries in name order
-    val dir = java.nio.file.Files.createTempDirectory("gp_spec").toString
+    val dir = graft.engine.Artifacts.scratchDir("gp_spec").toString
     def write(name: String, lines: Seq[String]): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
         lines.mkString("\n").getBytes("UTF-8"))
@@ -28,7 +28,7 @@ class GreenplumSpec extends SparkSpec {
     assert(rows.toSeq == Seq((0, 0L, 1L), (0, 1L, 2L), (0, 2L, 3L), (1, 0L, 4L)))
     // incremental attach: a second dump of ONE new column, positions
     // aligned across the same segment/split layout
-    val dir2 = java.nio.file.Files.createTempDirectory("gp_spec2").toString
+    val dir2 = graft.engine.Artifacts.scratchDir("gp_spec2").toString
     def write2(name: String, lines: Seq[String]): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(dir2, name),
         lines.mkString("\n").getBytes("UTF-8"))
@@ -43,7 +43,7 @@ class GreenplumSpec extends SparkSpec {
     assert(Greenplum.loadDump(spark, dir, sch).count() == 4)
     // writeDump → loadDumpAligned round-trip preserves every row
     val df = spark.range(0, 100).selectExpr("id AS k", "CAST(id * 1.5 AS DOUBLE) AS v")
-    val dir3 = java.nio.file.Files.createTempDirectory("gp_spec3").toString
+    val dir3 = graft.engine.Artifacts.scratchDir("gp_spec3").toString
     Greenplum.writeDump(df, dir3, Seq("k"), 4)
     val back = Greenplum.loadDumpAligned(spark, dir3, sch)
     assert(back.count() == 100)
@@ -59,7 +59,7 @@ class GreenplumSpec extends SparkSpec {
       (1L, Option("plain"), Option(2.5)),
       (2L, Option("a,b \"quoted\""), None),
       (3L, None, Option(7.0))).toDF("k", "s", "v")
-    val dir4 = java.nio.file.Files.createTempDirectory("gp_spec4").toString
+    val dir4 = graft.engine.Artifacts.scratchDir("gp_spec4").toString
     Greenplum.writeDump(messy, dir4, Seq("k"), 2)
     val mSch = StructType(Seq(StructField("k", LongType),
       StructField("s", StringType), StructField("v", DoubleType)))
@@ -71,7 +71,7 @@ class GreenplumSpec extends SparkSpec {
       (2L, Some("a,b \"quoted\""), None),
       (3L, None, Some(7.0))), got.toSeq.toString)
     // single-column incremental dump with a null: positions hold
-    val dir5 = java.nio.file.Files.createTempDirectory("gp_spec5").toString
+    val dir5 = graft.engine.Artifacts.scratchDir("gp_spec5").toString
     Greenplum.writeDump(messy, dir5, Seq("k"), 2, lineCols = Seq("s"))
     val sOnly = Greenplum.loadDumpAligned(spark, dir5,
       StructType(Seq(StructField("s", StringType))))
@@ -89,7 +89,7 @@ class GreenplumSpec extends SparkSpec {
     // a dump big enough to split: 2 segments × (2 + 1) files, 2000
     // rows per file of ~20 bytes ⇒ ~40 KB files; maxSplitBytes = 4096
     // forces ~10 tasks per file
-    val dir = java.nio.file.Files.createTempDirectory("gp_split").toString
+    val dir = graft.engine.Artifacts.scratchDir("gp_split").toString
     def mk(seg: Int, split: String, from: Int, n: Int): Seq[String] =
       (from until from + n).map(i => s"${seg * 1000000 + i},s${seg}v$i")
     def write(name: String, lines: Seq[String]): Unit =
@@ -139,7 +139,7 @@ class GreenplumSpec extends SparkSpec {
       (1L, "before\nafter", 1.0),
       (2L, "cr\rhere", 2.0),
       (3L, "plain", 3.0)).toDF("k", "s", "v")
-    val dir = java.nio.file.Files.createTempDirectory("gp_nl").toString
+    val dir = graft.engine.Artifacts.scratchDir("gp_nl").toString
     Greenplum.writeDump(df, dir, Seq("k"), 2)
     val sch = StructType(Seq(StructField("k", LongType),
       StructField("s", StringType), StructField("v", DoubleType)))

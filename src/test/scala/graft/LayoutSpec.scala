@@ -14,7 +14,7 @@ class LayoutSpec extends SparkSpec {
     // bins 0,0,0 and f4 (cum-before 9k) in bin 1; partition b's single
     // big file is alone in bin 0 (a bin exceeds the target by at most
     // one file — the contract)
-    val root = java.nio.file.Files.createTempDirectory("graft_compact")
+    val root = graft.engine.Artifacts.scratchDir("graft_compact")
     def put(part: String, name: String, size: Int): Unit = {
       val pd = new java.io.File(root.toFile, part); pd.mkdirs()
       java.nio.file.Files.write(new java.io.File(pd, name).toPath,
@@ -96,21 +96,11 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("GraftExtensions registers SQL functions") {
-    // injectFunction on an existing session is not possible; register the
-    // same builders through the session's registry to prove them out
-    val reg = spark.sessionState.functionRegistry
-    new GraftExtensions()
-      .asInstanceOf[org.apache.spark.sql.SparkSessionExtensions => Unit]
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", es => graft.functions.FloatVecDot(es(0), es(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", es => graft.functions.SimHash60(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_set", es => graft.functions.ShingleHashSet(es(0),
-        es(1).eval().asInstanceOf[Int]), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      es => graft.functions.SortedIntersectSize(es(0), es(1)), "scala_udf")
+    // the session already exists, so apply the extensions to a fresh
+    // SparkSessionExtensions and register what they inject into it
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions()(ext)
+    org.apache.spark.sql.graftshim.registerFunctions(ext, spark)
     val r = spark.sql(
       "SELECT vec_dot(array(cast(1.0 as float), cast(2.0 as float)), " +
         "array(cast(3.0 as float), cast(4.0 as float))) AS d, " +
@@ -127,26 +117,9 @@ class LayoutSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("array<bigint>"), err.getMessage)
     // the storable-sketch SQL surface: build + merge + read end-to-end
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_build", es => graft.functions.HllBuildAgg(es.head, 10)
-        .toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_merge", es => graft.functions.HllMergeAgg(es.head)
-        .toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_estimate", es => graft.functions.HllEstimate(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_build", es => graft.functions.KllBuildAgg(es.head, 200)
-        .toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantile", es => graft.functions.KllQuantile(es.head,
-        es(1).eval() match {
-          case d: org.apache.spark.sql.types.Decimal => d.toDouble
-          case n: Number                              => n.doubleValue
-        }), "scala_udf")
     val sk = spark.sql(
       """SELECT hll_estimate(hll_merge(sk)) AS est FROM (
-        |  SELECT id % 4 AS g, hll_build(id) AS sk FROM range(1000) GROUP BY 1)""".stripMargin)
+        |  SELECT id % 4 AS g, hll_build(id, 10) AS sk FROM range(1000) GROUP BY 1)""".stripMargin)
       .head()
     assert(math.abs(sk.getDouble(0) - 1000.0) <= 100.0, s"hll est ${sk.getDouble(0)}")
     val kq = spark.sql(
@@ -154,15 +127,6 @@ class LayoutSpec extends SparkSpec {
       .head()
     assert(math.abs(kq.getDouble(0) - 5000.0) <= 300.0, s"kll median ${kq.getDouble(0)}")
     // theta set algebra from SQL: exhaustive regime -> exact answers
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_build", es => graft.functions.ThetaBuildAgg(es.head, 1024)
-        .toAggregateExpression(), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_intersect",
-      es => graft.functions.ThetaIntersectEst(es(0), es(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_jaccard",
-      es => graft.functions.ThetaJaccardEst(es(0), es(1)), "scala_udf")
     val th = spark.sql(
       """SELECT theta_intersect(a.sk, b.sk) AS i, theta_jaccard(a.sk, b.sk) AS j
         |FROM (SELECT theta_build(id) AS sk FROM range(0, 300)) a,
@@ -170,6 +134,25 @@ class LayoutSpec extends SparkSpec {
       .head()
     assert(th.getDouble(0) == 100.0, s"theta intersect ${th.getDouble(0)}")
     assert(th.getDouble(1) == 0.2, s"theta jaccard ${th.getDouble(1)}")
+    // every family by SQL name: per-group build -> merge -> reader
+    def merged(build: String, read: String): org.apache.spark.sql.Row =
+      spark.sql(
+        s"""SELECT $read FROM (
+           |  SELECT id % 4 AS g, $build AS sk FROM range(1000) GROUP BY 1)""".stripMargin)
+        .head()
+    val km = merged("kll_build(cast(id AS double))", "kll_quantile(kll_merge(sk), 0.5)")
+    assert(math.abs(km.getDouble(0) - 500.0) <= 50.0, s"kll merged median ${km.getDouble(0)}")
+    val tm = merged("theta_build(id)", "theta_estimate(theta_merge(sk))")
+    assert(tm.getDouble(0) == 1000.0, s"theta merged estimate ${tm.getDouble(0)}")
+    val bm = merged("bloom_build(id)",
+      "bloom_might_contain(bloom_merge(sk), 7L), bloom_might_contain(bloom_merge(sk), 999L), " +
+        "bloom_fill(bloom_merge(sk))")
+    assert(bm.getBoolean(0) && bm.getBoolean(1), s"bloom merged lost a member: $bm")
+    assert(bm.getDouble(2) > 0.0 && bm.getDouble(2) < 0.5, s"bloom merged fill $bm")
+    val mm = merged("mg_build(cast(id % 3 AS string), 4)", "mg_entries(mg_merge(sk, 4))")
+      .getSeq[org.apache.spark.sql.Row](0)
+    assert(mm.map(e => e.getString(0) -> e.getLong(1)) ==
+      Seq("0" -> 334L, "1" -> 333L, "2" -> 333L), s"mg merged entries $mm")
   }
 
   test("type-inference lattice promotes correctly") {
@@ -192,8 +175,8 @@ class LayoutSpec extends SparkSpec {
     // 16-bit bucket ids on both dimensions
     val xa = pmod(col("user_id"), lit(65536L))
     val xb = pmod(floor(col("value") * 100).cast("long"), lit(65536L))
-    val zDir = java.nio.file.Files.createTempDirectory("zord").toString
-    val sDir = java.nio.file.Files.createTempDirectory("sorted").toString
+    val zDir = graft.engine.Artifacts.scratchDir("zord").toString
+    val sDir = graft.engine.Artifacts.scratchDir("sorted").toString
     graft.engine.Layout.writeZOrdered(ev, xa, xb, zDir, 16)
     ev.withColumn("__a", xa).repartitionByRange(16, col("__a"))
       .sortWithinPartitions(col("__a")).drop("__a")

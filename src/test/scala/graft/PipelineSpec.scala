@@ -85,7 +85,7 @@ class PipelineSpec extends SparkSpec {
 
   test("cluster-map artifact: mines once, serves reads, re-mines on stale input") {
     import java.nio.file.{Files, Paths}
-    val inDir = Files.createTempDirectory("graft_cmap_in").toString
+    val inDir = graft.engine.Artifacts.scratchDir("graft_cmap_in").toString
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val nd = (1 to 38).map(i => s"w$i").mkString(" ") + " q1 q2"
     val far = (200 to 240).map(i => s"u$i").mkString(" ")
@@ -155,7 +155,7 @@ class PipelineSpec extends SparkSpec {
   private def writeShardDirsOf(df: org.apache.spark.sql.DataFrame,
       parts: Int, tag: String): Seq[String] = {
     import java.nio.file.Files
-    val root = Files.createTempDirectory(s"graft_fold_$tag").toString
+    val root = graft.engine.Artifacts.scratchDir(s"graft_fold_$tag").toString
     (0 until parts).map { i =>
       val sd = s"$root/shard_$i"
       df.filter(col("doc_id") % parts === i)
@@ -346,7 +346,7 @@ class PipelineSpec extends SparkSpec {
         i % 3)
     }
     val df = vecs.toDF("vec_id", "embedding", "label")
-    val root = java.nio.file.Files.createTempDirectory("graft_pqfold").toString
+    val root = graft.engine.Artifacts.scratchDir("graft_pqfold").toString
     val shards = (0 until 3).map { i =>
       val sd = s"$root/shard_$i"
       df.filter(col("vec_id") % 3 === i)
@@ -374,8 +374,7 @@ class PipelineSpec extends SparkSpec {
     val all = shards
       .map(sd => spark.read.parquet(s"$sd/embeddings.parquet"))
       .reduce(_ unionByName _)
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_pqfold_ref").toString
+    val dir2 = graft.engine.Artifacts.scratchDir("graft_pqfold_ref").toString
     graft.ann.PqIndex.build(base, dir2, m = 4, ksub = 4, nlist = 4)
     graft.ann.PqIndex.append(
       spark.read.parquet(s"${shards(2)}/embeddings.parquet"), dir2)
@@ -417,7 +416,7 @@ class PipelineSpec extends SparkSpec {
   test("artifact GC grace period runs from supersession, not publication") {
     import graft.engine.Artifacts
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gc_spec").toString
+    val dir = graft.engine.Artifacts.scratchDir("graft_gc_spec").toString
     def dataDir(fp: String) =
       new java.io.File(dir, s"map_${Artifacts.md5Hex(fp)}.parquet")
     def build = Seq((1L, "x")).toDF("id", "v")
@@ -454,7 +453,7 @@ class PipelineSpec extends SparkSpec {
       "retention, GC honors retained versions, invalidate clears") {
     import graft.engine.Artifacts
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_snap_spec").toString
+    val dir = graft.engine.Artifacts.scratchDir("graft_snap_spec").toString
     def md5(fp: String) = Artifacts.md5Hex(fp)
     def build(v: Long) = Seq((v, s"v$v")).toDF("id", "v")
     try {
@@ -1897,7 +1896,7 @@ class PipelineSpec extends SparkSpec {
     val dd = graft.engine.Tables.documents(spark, sf)
     val hist = dd.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
     val delta = dd.filter(pmod(col("doc_id"), lit(5L)) === 0L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sketch_store")
+    val dir = graft.engine.Artifacts.scratchDir("graft_sketch_store")
     hist.groupBy(col("source"))
       .agg(HllSketch.hll_build(col("text")).as("hll"),
         MgSketch.mg_build(col("lang"), 16).as("mg"),
@@ -2515,8 +2514,7 @@ class PipelineSpec extends SparkSpec {
     assert(Sources.widenedType(StringType, StringType) == StringType)
     intercept[IllegalArgumentException] {
       Sources.widenedType(StringType, LongType) }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_evolve").toString
+    val root = graft.engine.Artifacts.scratchDir("graft_evolve").toString
     Seq((1L, 10, 1.5f)).toDF("k", "n", "x")
       .write.parquet(s"$root/a.parquet")
     Seq((2L, 20L, 2.5d, "w")).toDF("k", "n", "x", "c")

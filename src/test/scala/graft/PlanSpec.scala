@@ -58,7 +58,7 @@ class PlanSpec extends SparkSpec {
     import graft.engine.Skipping
     val dd = Tables.documents(spark, sf)
       .withColumn("batch", floor(col("doc_id") / 50).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("zm_test").toString
+    val dir = graft.engine.Artifacts.scratchDir("zm_test").toString
     dd.write.mode("overwrite").partitionBy("batch").parquet(dir)
     val zm = Skipping.buildZoneMap(dd, "batch", Seq("doc_id"))
     // only batches 2..5 can hold doc_id in [100,299]
@@ -88,7 +88,7 @@ class PlanSpec extends SparkSpec {
     // of "src1".."src19z" excludes nothing (every lang has spread
     // sources) while "zz".."zzz" excludes everything
     val dd2 = Tables.documents(spark, sf)
-    val dir2 = java.nio.file.Files.createTempDirectory("zm_str").toString
+    val dir2 = graft.engine.Artifacts.scratchDir("zm_str").toString
     dd2.write.mode("overwrite").partitionBy("lang").parquet(dir2)
     val zm2 = Skipping.buildZoneMap(dd2, "lang", Seq("source"))
     val some = Skipping.readWithSkipping(spark, dir2, zm2, "lang", "source",

@@ -311,7 +311,7 @@ class PropertySpec extends SparkSpec {
     assert(math.abs(overMedian - 1000) < 100, s"median split $overMedian/2000")
     // persisted key: generated once, then every loader sees the SAME
     // key — noise survives a session restart (reference KeyLoader)
-    val kf = java.nio.file.Files.createTempDirectory("graft_dpkey").resolve("key")
+    val kf = graft.engine.Artifacts.scratchDir("graft_dpkey").resolve("key")
     val p1 = new PersistedKeyLoader(kf).key
     val p2 = new PersistedKeyLoader(kf).key
     assert(p1.sameElements(p2) && p1.length == 32)
@@ -447,7 +447,7 @@ class PropertySpec extends SparkSpec {
     val feats = Seq(
       ("lshape", Seq((0.0, 0.0), (8.0, 0.0), (8.0, 4.0), (4.0, 4.0), (4.0, 8.0), (0.0, 8.0))),
       ("tri", Seq((1.0, 1.0), (7.0, 2.0), (3.0, 7.0))))
-    val base = java.nio.file.Files.createTempDirectory("shp_spec")
+    val base = graft.engine.Artifacts.scratchDir("shp_spec")
       .resolve("f").toString
     Shapefile.writePolygons(base, feats)
     // byte-level round-trip: names from the .dbf, rings reopened (the
@@ -462,7 +462,7 @@ class PropertySpec extends SparkSpec {
     assert(tags(Shapefile.readPolygons(spark, base)) ==
       tags(graft.geo.Geo.polygonSet(spark, feats)))
     // malformed inputs are refused loudly, not half-loaded
-    val junk = java.nio.file.Files.createTempDirectory("shp_junk").resolve("j")
+    val junk = graft.engine.Artifacts.scratchDir("shp_junk").resolve("j")
     java.nio.file.Files.write(junk.resolveSibling("j.shp"),
       "not a shapefile at all........".getBytes)
     intercept[IllegalArgumentException] { Shapefile.parsePolygons(junk.toString) }
@@ -512,7 +512,7 @@ class PropertySpec extends SparkSpec {
     // multi-part shapefile record round-trips rings grouped, and the
     // shapefile-loaded frame tags identically to the inline frame
     import graft.geo.Shapefile
-    val base = java.nio.file.Files.createTempDirectory("shp_rings")
+    val base = graft.engine.Artifacts.scratchDir("shp_rings")
       .resolve("f").toString
     Shapefile.writeFeatures(base, feats)
     assert(Shapefile.parseFeatures(base) == feats)
@@ -934,7 +934,7 @@ class PropertySpec extends SparkSpec {
   test("persisted PQ index: serve == in-memory path, empty-batch guard") {
     val emb = graft.engine.Tables.embeddings(spark, sf)
     val qs = Seq(0L, 1L, 2L, 3L, 4L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_spec").toString
+    val dir = graft.engine.Artifacts.scratchDir("graft_pq_spec").toString
     graft.ann.PqIndex.build(emb, dir).collect()
     // training is deterministic (hash-strided seeds), so the persisted
     // index must reproduce the in-memory results EXACTLY: flat serve ==
@@ -969,13 +969,13 @@ class PropertySpec extends SparkSpec {
     // corpus (delete-and-rewrite vs append must be indistinguishable)
     val half = emb.filter(col("vec_id") % 2 === 0)
     val rest = emb.filter(col("vec_id") % 2 =!= 0)
-    val dirInc = java.nio.file.Files.createTempDirectory("graft_pq_inc").toString
+    val dirInc = graft.engine.Artifacts.scratchDir("graft_pq_inc").toString
     graft.ann.PqIndex.build(half, dirInc).collect()
     graft.ann.PqIndex.append(rest, dirInc)
     val served = graft.ann.PqIndex.serve(emb, dirInc, qs, 10, nprobe = 6)
       .collect().map(_.toString)
     // expected: encode the FULL corpus with the half-trained artifacts
-    val dirFull = java.nio.file.Files.createTempDirectory("graft_pq_inc2").toString
+    val dirFull = graft.engine.Artifacts.scratchDir("graft_pq_inc2").toString
     graft.ann.PqIndex.build(half, dirFull).collect()
     graft.ann.PqIndex.append(emb.filter(col("vec_id") % 2 =!= 0), dirFull)
     val served2 = graft.ann.PqIndex.serve(emb, dirFull, qs, 10, nprobe = 6)
@@ -1092,20 +1092,15 @@ class PropertySpec extends SparkSpec {
     assert(ex.getMessage.contains("geometry") ||
       Option(ex.getCause).exists(_.getMessage.contains("geometry")))
     // storability: blobs survive parquet cold and the SQL surface agrees
-    val tmp = java.nio.file.Files.createTempDirectory("bloom_store").toString
+    val tmp = graft.engine.Artifacts.scratchDir("bloom_store").toString
     df.agg(bloom_build(col("v")).as("bf")).write.mode("overwrite").parquet(tmp)
     val cold = spark.read.parquet(tmp).head.getAs[Array[Byte]]("bf")
     assert(cold.sameElements(blob))
-    // SQL surface: injectFunction needs a fresh session, so register the
-    // same builders into this session's registry (LayoutSpec pattern)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_build", es => graft.functions.BloomBuildAgg(es.head,
-        graft.functions.BloomSketch.DefaultBits,
-        graft.functions.BloomSketch.DefaultK).toAggregateExpression(),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      es => graft.functions.BloomMightContain(es(0), es(1)), "scala_udf")
+    // SQL surface: the session already exists, so register what
+    // GraftExtensions injects into it (LayoutSpec pattern)
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.GraftExtensions()(ext)
+    org.apache.spark.sql.graftshim.registerFunctions(ext, spark)
     df.createOrReplaceTempView("bloom_src")
     val viaSql = spark.sql(
       "SELECT bloom_might_contain(bloom_build(v), 'member_7') FROM bloom_src")
@@ -1200,7 +1195,7 @@ class PropertySpec extends SparkSpec {
     assert(nullRow.getDouble(2) == 0.0) // empty/empty Jaccard defined as 0
     // the storable contract end-to-end: per-source blobs through parquet
     // cold, re-read, pairwise ops unchanged vs in-memory
-    val tmp = java.nio.file.Files.createTempDirectory("theta_store").toString
+    val tmp = graft.engine.Artifacts.scratchDir("theta_store").toString
     val toks = dd.select(col("source"),
         explode(split(lower(col("text")), " ")).as("tok"))
       .filter(col("tok") =!= "")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * within-replica structure. */
 class ScaleTierSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private val n = 3
-  private lazy val root = java.nio.file.Files.createTempDirectory("graft_tier").toFile
+  private lazy val root = graft.engine.Artifacts.scratchDir("graft_tier").toFile
   private lazy val tier: String = {
     val dir = s"$root/x$n"
     ScaleProbe.writeTier(spark, sf, n, dir)

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSession {
   lazy val spark: SparkSession = {
     System.setProperty("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      graft.engine.Artifacts.scratchDir("graft_wh").toString)
     engine.Sessions.local(4)
   }
   val sf = "/root/testdata/sf0.001"

@@ -93,7 +93,7 @@ class StreamingSpec extends SparkSpec {
     // earlier batches), and the final manifest must equal the one-pass
     // build over all data — including the per-partition theta blobs
     val docs = Tables.documents(spark, sf)
-    val streamDir = java.nio.file.Files.createTempDirectory("zm_stream").toString
+    val streamDir = graft.engine.Artifacts.scratchDir("zm_stream").toString
     docs.repartition(4).write.mode("overwrite").parquet(streamDir)
     val schema = docs.schema
     val raw = spark.readStream.schema(schema)
@@ -768,7 +768,7 @@ class StreamingSpec extends SparkSpec {
       Events.Ev(1L, java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 2.0),
       Events.Ev(1L, java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), 3.0),
       Events.Ev(2L, java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 4.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess")
+    val dir = graft.engine.Artifacts.scratchDir("graft_sess")
     evs.toDS().write.mode("overwrite").parquet(dir.toString)
     val stream = spark.readStream
       .schema(evs.toDS().schema).parquet(dir.toString).as[Events.Ev]
@@ -793,7 +793,7 @@ class StreamingSpec extends SparkSpec {
       Events.AttEv(5L, ts(50), 7L, "purchase"),  // still click@20
       Events.AttEv(6L, ts(60), 9L, "click"),
       Events.AttEv(7L, ts(60), 9L, "purchase"))  // same-instant tie
-    val dir = java.nio.file.Files.createTempDirectory("graft_att")
+    val dir = graft.engine.Artifacts.scratchDir("graft_att")
     // two files → two micro-batches, split at ts 40 (in-order arrival)
     evs.take(4).toDS().coalesce(1).write.mode("append").parquet(dir.toString)
     Thread.sleep(1100)
@@ -831,7 +831,7 @@ class StreamingSpec extends SparkSpec {
       // batch 2 starts here; 5 is within 5s of 4 ACROSS the batch line
       Events.BurstEv(5L, ts(123), 7L, "click"),
       Events.BurstEv(6L, ts(124), 8L, "click"))  // other user: kept
-    val dir = java.nio.file.Files.createTempDirectory("graft_burst")
+    val dir = graft.engine.Artifacts.scratchDir("graft_burst")
     evs.take(4).toDS().coalesce(1).write.mode("append").parquet(dir.toString)
     Thread.sleep(1100)
     evs.drop(4).toDS().coalesce(1).write.mode("append").parquet(dir.toString)
@@ -869,7 +869,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("id"), col("ahash")).cache()
     corpusHashes.count()
     // stage the delta as 2 parquet files → 2 micro-batches
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_img_ingest")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_img_ingest")
     delta.toDF().repartition(2).write.mode("overwrite")
       .parquet(streamDir.toString)
     val stream = spark.readStream.schema(delta.toDF().schema)
@@ -900,7 +900,7 @@ class StreamingSpec extends SparkSpec {
     val terms = Seq("slow", "low", "slow join", "qqq", "spark")
     val docs = graft.engine.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_bl_ingest")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_bl_ingest")
     docs.repartition(3).write.mode("overwrite").parquet(streamDir.toString)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -936,7 +936,7 @@ class StreamingSpec extends SparkSpec {
     // gate caches corpus hashes
     val model = graft.text.TextAnalysis.bigramModel(docs).cache()
     model.count()
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_lm_ingest")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_lm_ingest")
     docs.repartition(3).write.mode("overwrite").parquet(streamDir.toString)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -969,7 +969,7 @@ class StreamingSpec extends SparkSpec {
     val (s3, s2, s1, oov) =
       graft.text.TextAnalysis.trigramBackoffModel(train)
     Seq(s3, s2, s1).foreach { m => m.cache(); m.count() }
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_bo_ingest")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_bo_ingest")
     arriving.repartition(3).write.mode("overwrite").parquet(streamDir.toString)
     val stream = spark.readStream.schema(arriving.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -1005,7 +1005,7 @@ class StreamingSpec extends SparkSpec {
       (9800011L, "быстрый поиск дубликатов в корпусе данных", "ru", "s", 41L),
       (9800012L, "한국어 토큰 분석 테스트 문서 집합", "en", "s", 17L))
       .toDF("doc_id", "text", "lang", "source", "n_chars"))
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_lid_ingest")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_lid_ingest")
     arriving.repartition(3).write.mode("overwrite").parquet(streamDir.toString)
     val stream = spark.readStream.schema(arriving.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -1043,7 +1043,7 @@ class StreamingSpec extends SparkSpec {
       (201L, "describe the spark shuffle machinery", "en", "s", 1L),
       (202L, "list three kinds of window functions", "en", "s", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rouge_ingest")
+    val dir = graft.engine.Artifacts.scratchDir("graft_rouge_ingest")
     b1.coalesce(1).write.mode("append").parquet(dir.toString)
     Thread.sleep(1100) // distinct mtimes pin file→batch order
     b2.coalesce(1).write.mode("append").parquet(dir.toString)
@@ -1102,7 +1102,7 @@ class StreamingSpec extends SparkSpec {
       (21L, "p one ### ee ff gg", "en", "s", 1L),      // 10000 tie, higher id
       (22L, "p two ### hh ii jj kk", "en", "s", 1L))   // 10000
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpo_ingest")
+    val dir = graft.engine.Artifacts.scratchDir("graft_dpo_ingest")
     b1.coalesce(1).write.mode("append").parquet(dir.toString)
     Thread.sleep(1100)
     b2.coalesce(1).write.mode("append").parquet(dir.toString)
@@ -1139,7 +1139,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val docs = graft.engine.Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_doremi_ingest")
+    val dir = graft.engine.Artifacts.scratchDir("graft_doremi_ingest")
     // three arrival shards in a scrambled order
     (0 to 2).foreach { i =>
       docs.filter(pmod(col("doc_id") + 1, lit(3)) === i)
@@ -1178,10 +1178,9 @@ class StreamingSpec extends SparkSpec {
       (1L, "a b c a b"), (2L, "c d e"), (3L, "a b x"),
       (4L, "y z a b"), (5L, "d e f"), (6L, "q r s"))
       .toDF("doc_id", "text")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_lmfold_in")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_lmfold_in")
     docs.repartition(3).write.mode("overwrite").parquet(streamDir.toString)
-    val shardRoot = java.nio.file.Files
-      .createTempDirectory("graft_lmfold_shards").toString
+    val shardRoot = graft.engine.Artifacts.scratchDir("graft_lmfold_shards").toString
     val name = "spec_lmgate_" + System.nanoTime()
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -1229,7 +1228,7 @@ class StreamingSpec extends SparkSpec {
     // detect once in batch, cache the model-sized list
     val boiler = graft.text.TextAnalysis.boilerplateLines(docs, 2).cache()
     boiler.count()
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_bp_ingest")
+    val streamDir = graft.engine.Artifacts.scratchDir("graft_bp_ingest")
     docs.repartition(3).write.mode("overwrite").parquet(streamDir.toString)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -1346,8 +1345,8 @@ class StreamingSpec extends SparkSpec {
       (3L, ts("2024-01-01 01:00:00"), 1.0)). // no view at all
       toDF("user_id", "ts", "value")
     val (vDir, cDir) = (
-      java.nio.file.Files.createTempDirectory("graft_v").toString,
-      java.nio.file.Files.createTempDirectory("graft_c").toString)
+      graft.engine.Artifacts.scratchDir("graft_v").toString,
+      graft.engine.Artifacts.scratchDir("graft_c").toString)
     views.write.mode("overwrite").parquet(vDir)
     clicks.write.mode("overwrite").parquet(cDir)
     val q = graft.streaming.Events.viewClickJoinStream(
@@ -1368,7 +1367,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("grok-style log reader extracts typed columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_log")
+    val dir = graft.engine.Artifacts.scratchDir("graft_log")
     java.nio.file.Files.writeString(dir.resolve("app.log"),
       """2024-01-01 10:00:01 INFO  starting up
         |2024-01-01 10:00:02 ERROR disk full
@@ -1396,7 +1395,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("parse errors sketch counts corrupt JSON records") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json")
+    val dir = graft.engine.Artifacts.scratchDir("graft_json")
     java.nio.file.Files.writeString(dir.resolve("data.json"),
       """{"a": 1, "b": "x"}
         |not valid json at all
@@ -1413,7 +1412,7 @@ class StreamingSpec extends SparkSpec {
   test("csv round-trip preserves data") {
     val li = Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_quantity", "l_returnflag").limit(100)
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = graft.engine.Artifacts.scratchDir("graft_csv").toString
     graft.sources.Sources.writeCsv(li, dir)
     val back = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
     assert(back.count() == 100)

@@ -194,7 +194,7 @@ class TargetsSpec extends SparkSpec {
     // persist, replay into a FRESH registry (fresh-session stand-in: the
     // replayed frames rebuild from the table dir, sharing nothing with
     // the original targets' DataFrames), and resolve the SAME id
-    val log = java.nio.file.Files.createTempDirectory("graft_redo")
+    val log = graft.engine.Artifacts.scratchDir("graft_redo")
       .resolve("hillview.redo").toString
     reg.saveRedoLog(log)
     val restored = TargetRegistry.replay(spark, log)
@@ -222,7 +222,7 @@ class TargetsSpec extends SparkSpec {
     assert(again.get(converted.id).df.count() ==
       reg.get(converted.id).df.count())
     // bookmark: one view's chain only, replayable on its own
-    val bm = java.nio.file.Files.createTempDirectory("graft_bm")
+    val bm = graft.engine.Artifacts.scratchDir("graft_bm")
       .resolve("view.bookmark").toString
     reg.saveBookmark(filtered.id, bm)
     val view = TargetRegistry.replay(spark, bm)
@@ -270,7 +270,7 @@ class TargetsSpec extends SparkSpec {
       df.groupBy(col("band")).agg(count(lit(1)).as("n")))
     assert(before.nonEmpty)
     // redo log round-trip: every widened op replays with ORIGINAL ids
-    val log = java.nio.file.Files.createTempDirectory("graft_redo2")
+    val log = graft.engine.Artifacts.scratchDir("graft_redo2")
       .resolve("hillview.redo").toString
     reg.saveRedoLog(log)
     val restored = TargetRegistry.replay(spark, log)
@@ -287,7 +287,7 @@ class TargetsSpec extends SparkSpec {
     assert(after.toSeq == before.toSeq)
     assert(Memo.hits == hitsBefore + 1)
     // a bookmark of a set-op view carries BOTH parents' chains
-    val bm = java.nio.file.Files.createTempDirectory("graft_bm2")
+    val bm = graft.engine.Artifacts.scratchDir("graft_bm2")
       .resolve("setop.bookmark").toString
     reg.saveBookmark(both.id, bm)
     val view = TargetRegistry.replay(spark, bm)
@@ -327,7 +327,7 @@ class TargetsSpec extends SparkSpec {
     Seq(union, inter, minus).foreach(t =>
       assert(!t.df.columns.contains(TargetRegistry.RowIdCol)))
     // replay through the redo log keeps row-identity semantics
-    val log = java.nio.file.Files.createTempDirectory("graft_redo_rid")
+    val log = graft.engine.Artifacts.scratchDir("graft_redo_rid")
       .resolve("hillview.redo").toString
     reg.saveRedoLog(log)
     val restored = TargetRegistry.replay(spark, log)
@@ -455,7 +455,7 @@ class TargetsSpec extends SparkSpec {
     import spark.implicits._
     Memo.clear()
     val dirs = Seq(Seq(1L, 2L, 3L), Seq(1L, 2L, 3L, 4L, 5L)).map { xs =>
-      val d = java.nio.file.Files.createTempDirectory("graft_memo").resolve("t").toString
+      val d = graft.engine.Artifacts.scratchDir("graft_memo").resolve("t").toString
       xs.toDF("x").write.parquet(d)
       d
     }
@@ -507,7 +507,7 @@ class TargetsSpec extends SparkSpec {
     // casting out threes: the loop filter must equal o_orderkey % 3 == 0
     assert(jsF.df.count() ==
       Tables.orders(spark, sf).filter(col("o_orderkey") % 3 === 0).count())
-    val log = java.nio.file.Files.createTempDirectory("graft_redo3")
+    val log = graft.engine.Artifacts.scratchDir("graft_redo3")
       .resolve("hillview.redo").toString
     reg.saveRedoLog(log)
     val restored = TargetRegistry.replay(spark, log)
