@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
   * (AQE, skew-join handling, modest shuffle parallelism overridden by the
   * cluster submit) carry over. Reference behavior being reproduced:
   * vmware/hillview's engine never shuffles (sketch monoids merge at the
-  * root); our Spark translation leans on AQE + partial aggregation to get
-  * the same "bounded data to the driver" property.
+  * root). Sketch gestures get the same property from [[SketchExec]]: one
+  * job runs Catalyst's partial aggregate and its buffers are merged on
+  * the driver, without the exchange or AQE's extra job.
   *
   * Both factories register [[ParamLiterals]], so whole-stage code does
   * not depend on literal values and a repeated gesture shape reuses
@@ -39,7 +40,16 @@ object Sessions {
       // so an 8k-key hash map is ≤ ~megabytes; past that the sort
       // fallback still protects memory.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "8192")
+      // An interactive session cycles through more generated classes
+      // than Spark's 100-entry codegen cache holds (every gesture shape's
+      // stages plus SketchExec's driver-side merge projections); past
+      // that, warm gestures evict each other's classes and recompile.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
+      // managed tables (bucketed joins) go to a per-JVM scratch dir
+      // unless the JVM names one, never into the working directory
+      .config("spark.sql.warehouse.dir", sys.props.getOrElse("spark.sql.warehouse.dir",
+        Artifacts.scratchRoot.resolve("spark-warehouse").toString))
       .withExtensions(ParamLiterals.inject)
 
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {

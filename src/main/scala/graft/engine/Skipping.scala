@@ -77,8 +77,7 @@ object Skipping {
     def load(sd: String) = Tables.documents(spark, sd)
       .withColumn(partCol, expr(partSql))
     val shardFps = Artifacts.shardFingerprints(shardDirs, "documents")
-    val stamp = Artifacts.classStamp(Seq(
-      "/graft/engine/Skipping$.class", "/graft/engine/Skipping.class"))
+    val stamp = Artifacts.classStamp(zoneMapStamp)
     Artifacts.serveFoldedShards(spark, dir, params, stamp, shardFps)(
       buildZoneMap(shardDirs.map(load).reduce(_ union _), partCol, statCols)) {
       (oldMap, _, deltaDirs) =>
@@ -87,6 +86,13 @@ object Skipping {
           partCol)
     }
   }
+
+  /** The classes whose bytecode names a folded zone map's build: the
+    * zone-map builder and merge, and the theta sketch they store and
+    * union. */
+  val zoneMapStamp: Seq[String] = Seq("graft/engine/Skipping", "graft/functions/ThetaSketch",
+    "graft/functions/Theta", "graft/functions/Sketch", "graft/functions/SketchAgg")
+    .flatMap(c => Seq(s"/$c$$.class", s"/$c.class"))
 
   /** Whether a [[zoneMapArtifactFolded]] lineage is published. */
   def zoneMapFoldedExists(name: String, partCol: String, partSql: String,

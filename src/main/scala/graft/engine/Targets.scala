@@ -309,13 +309,14 @@ class TargetRegistry(val spark: SparkSession) {
   }
 
   /** Abort a [[sketchIn]] group — the unsubscribe RPC. Cancels active
-    * jobs AND bars future ones in the group: a multi-job gesture (AQE
-    * re-plans issue several sequential jobs per collect) whose
-    * cancellation lands in the gap between two of its jobs must still
-    * abort, not silently run its remaining jobs to completion — group
-    * ids are per-gesture, so the permanent bar is exactly the
-    * unsubscribe contract. Safe to call whether or not anything is
-    * running. */
+    * jobs AND bars future ones in the group. A partial/final sketch runs
+    * as one job ([[SketchExec]]), but other gestures still run several
+    * (an adaptive collect runs one job per query stage, a saturated
+    * heavy-hitters summary is followed by its verify scan), and a
+    * cancellation that lands between two of them must still abort, not
+    * silently run the rest to completion — group ids are per-gesture,
+    * so the permanent bar is exactly the unsubscribe contract. Safe to
+    * call whether or not anything is running. */
   def cancelSketch(group: String): Unit =
     spark.sparkContext.cancelJobGroupAndFutureJobs(group)
 

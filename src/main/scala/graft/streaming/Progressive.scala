@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.SketchExec
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, OneRowRelation, Range => RangeRelation}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -11,81 +12,45 @@ import scala.collection.mutable
   * model (dataset/api/PartialResult.java, ParallelDataSet.java:133-173:
   * every sketch streams monotonically improving partials to the UI).
   *
-  * Spark translation: aggregate growing ranges of partitions (each
-  * partition exactly once), merge the per-partition buffers into a
-  * running monoid accumulator, and emit each partial. Because the
-  * aggregations are monoid-shaped, each step is a correct partial
-  * result and the last step equals the one-shot answer. Cancellation =
+  * Spark translation: [[SketchExec]] runs the sketch frame's partial
+  * aggregate as one job, folds each finished partition's buffers into a
+  * running monoid state on the driver and emits a partial as the count
+  * of finished partitions crosses each of `steps` cuts. Each partition
+  * is read once, each partial is a correct result over the partitions
+  * done, and the last one equals the one-shot answer. Cancellation =
   * cancelJobGroup.
   */
 object Progressive {
 
   final case class Partial[T](fractionDone: Double, value: T)
 
-  /** True incremental progressive execution — the faithful analog of the
-    * reference's sketch protocol (ISketch.create per leaf + monoid add up
-    * the tree, PartialResult streamed per completed leaf): every
-    * partition is aggregated exactly ONCE via `runJob` over partition
-    * ranges, per-partition buffers are merged into a running monoid
-    * accumulator, and a partial is emitted after each chunk. Cumulative
-    * cost = one full pass over the data (never a re-read of a prefix),
-    * so progressive mode costs the same as one-shot mode plus `steps`
-    * job launches.
-    *
-    * `zero` is a thunk so mutable buffers are never shared across
-    * partitions; `seqOp`/`merge` mirror ISketch.increment/add.
-    */
-  def runIncremental[B: scala.reflect.ClassTag, R](
-      df: DataFrame, steps: Int, jobGroup: String = "graft-progressive")(
-      zero: () => B,
-      seqOp: (B, org.apache.spark.sql.Row) => B,
-      merge: (B, B) => B,
-      finish: B => R)(
-      emit: Partial[R] => Unit): R = {
-    val rdd = df.rdd
-    val n = math.max(rdd.getNumPartitions, 1)
-    val sc = df.sparkSession.sparkContext
-    sc.setJobGroup(jobGroup, s"progressive over $n partitions", interruptOnCancel = true)
-    try {
-      val cuts = (1 to steps).map(i => math.max(1, n * i / steps)).distinct
-      var acc = zero()
-      var done = 0
-      cuts.foreach { cut =>
-        val parts = (done until cut).toArray
-        if (parts.nonEmpty) {
-          val bufs = sc.runJob(rdd,
-            (it: Iterator[org.apache.spark.sql.Row]) => it.foldLeft(zero())(seqOp),
-            parts.toIndexedSeq)
-          acc = bufs.foldLeft(acc)(merge)
-          done = cut
-        }
-        emit(Partial(done.toDouble / n, finish(acc)))
-      }
-      finish(acc)
-    } finally sc.clearJobGroup()
+  /** Collect the aggregate frame `agg` progressively in job group
+    * `jobGroup` (interrupt on cancel): `emit` sees up to `steps` partials
+    * on the caller's thread, the last one at fraction 1.0 with the
+    * returned rows. */
+  def run(agg: DataFrame, steps: Int, jobGroup: String = "graft-progressive")(
+      emit: Partial[Array[Row]] => Unit): Array[Row] = {
+    val sc = agg.sparkSession.sparkContext
+    sc.setJobGroup(jobGroup, s"progressive in $steps steps", interruptOnCancel = true)
+    try SketchExec.progressive(agg, steps)((f, rows) => emit(Partial(f, rows)))
+    finally sc.clearJobGroup()
   }
 
   /** Time-bounded partial emission — the reference's latency contract
     * (ParallelDataSet.java:133-173: partial results are BUNDLED and
     * flushed at most once per bundling window, 300 ms by default, so a
-    * fast source cannot flood the consumer). Chunks are still
-    * aggregated exactly once ([[runIncremental]] underneath); `emit`
-    * fires for the first partial, then only when at least `bundleMs`
-    * has elapsed since the previous flush — except the FINAL partial,
-    * which always flushes so the consumer ends at fractionDone = 1 with
-    * the exact result. A slow consumer therefore sees
-    * O(runtime / bundleMs) callbacks regardless of partition count.
+    * fast source cannot flood the consumer). `emit` fires for the first
+    * partial, then only when at least `bundleMs` has elapsed since the
+    * previous flush — except the FINAL partial, which always flushes so
+    * the consumer ends at fractionDone = 1 with the exact result. A slow
+    * consumer therefore sees O(runtime / bundleMs) callbacks regardless
+    * of partition count.
     */
-  def runBundled[B: scala.reflect.ClassTag, R](
-      df: DataFrame, steps: Int, bundleMs: Long = 300L,
+  def runBundled(agg: DataFrame, steps: Int, bundleMs: Long = 300L,
       jobGroup: String = "graft-progressive")(
-      zero: () => B,
-      seqOp: (B, org.apache.spark.sql.Row) => B,
-      merge: (B, B) => B,
-      finish: B => R)(
-      emit: Partial[R] => Unit): R = {
+      emit: Partial[Array[Row]] => Unit): Array[Row] = {
     var lastFlush = Long.MinValue
-    runIncremental(df, steps, jobGroup)(zero, seqOp, merge, finish) { p =>
+    run(agg, steps, jobGroup) { p =>
       val now = System.nanoTime()
       if (p.fractionDone >= 1.0 || lastFlush == Long.MinValue ||
           now - lastFlush >= bundleMs * 1000000L) {
@@ -101,12 +66,8 @@ object Progressive {
     */
   def groupedCount(df: DataFrame, bucket: String, steps: Int)(
       emit: Partial[Map[Any, Long]] => Unit): Map[Any, Long] = {
-    runIncremental[scala.collection.mutable.Map[Any, Long], Map[Any, Long]](
-      df.select(bucket), steps)(
-      () => scala.collection.mutable.Map.empty[Any, Long],
-      (m, r) => { val k = r.get(0); m.update(k, m.getOrElse(k, 0L) + 1L); m },
-      (a, b) => { b.foreach { case (k, v) => a.update(k, a.getOrElse(k, 0L) + v) }; a },
-      _.toMap)(emit)
+    def counts(rows: Array[Row]) = rows.map(r => r.get(0) -> r.getLong(1)).toMap
+    counts(run(df.groupBy(bucket).count(), steps)(p => emit(Partial(p.fractionDone, counts(p.value)))))
   }
 
   /** Cancel a running progressive computation (RemoteDataSet
@@ -211,7 +172,7 @@ object Memo {
   def collectMemoized(df: DataFrame): Array[org.apache.spark.sql.Row] = {
     val key = (if (enabled) this.key(df) else None) match {
       case Some(k) => k
-      case None => return df.collect()
+      case None => return SketchExec.collect(df)
     }
     cache.synchronized {
       cache.remove(key) match {
@@ -220,7 +181,7 @@ object Memo {
         case None => ()
       }
     }
-    val r = df.collect() // OUTSIDE the lock: a slow job must not block hits
+    val r = SketchExec.collect(df) // OUTSIDE the lock: a slow job must not block hits
     val bytes = estimateBytes(r)
     cache.synchronized {
       // an entry alone bigger than the whole budget is not cached at

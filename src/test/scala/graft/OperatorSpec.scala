@@ -320,37 +320,54 @@ class OperatorSpec extends SparkSpec {
     assert(mg == exact)
   }
 
-  test("heavy hitters MG reads its input once when the summary is exact, twice when saturated") {
+  /** Feeds `on` the listener events of every job `body` runs. A marker
+    * job posted after `body` ends the wait, since the listener bus
+    * delivers in order; the marker's own events are not passed on. */
+  private def observe(body: => Any)(on: org.apache.spark.scheduler.SparkListenerEvent => Unit): Unit = {
     import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
     import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val markerJob = new AtomicLong(-1L)
+    val done = new AtomicBoolean
+    val listener = new org.apache.spark.SparkFirehoseListener {
+      override def onEvent(e: SparkListenerEvent): Unit = e match {
+        case j: SparkListenerJobStart
+            if Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == "scan-gate") =>
+          markerJob.set(j.jobId)
+        case j: SparkListenerJobEnd if j.jobId == markerJob.get => done.set(true)
+        case _ if markerJob.get < 0 => on(e)
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup("scan-gate", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!done.get && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(done.get, "marker job never ended")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def jobCount(body: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    observe(body) { case _: org.apache.spark.scheduler.SparkListenerJobStart => n.incrementAndGet(); case _ => () }
+    n.get
+  }
+
+  test("heavy hitters MG reads its input once when the summary is exact, twice when saturated") {
     val li = Tables.lineitem(spark, sf)
     val n = li.count()
-    val sc = spark.sparkContext
-    // input records over every task `body` runs; a marker job posted
-    // after it ends the count, since the listener bus delivers in order
-    def inputRecords(body: => Unit): Long = {
-      val read = new AtomicLong
-      val markerJob = new AtomicLong(-1L)
-      val done = new AtomicBoolean
-      val listener = new SparkListener {
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == "scan-gate"))
-            markerJob.set(j.jobId)
-        override def onJobEnd(j: SparkListenerJobEnd): Unit =
-          if (j.jobId == markerJob.get) done.set(true)
+    // input records over every task `body` runs
+    def inputRecords(body: => Any): Long = {
+      val read = new java.util.concurrent.atomic.AtomicLong
+      observe(body) {
+        case e: org.apache.spark.scheduler.SparkListenerTaskEnd if e.taskMetrics != null =>
+          read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+        case _ => ()
       }
-      sc.addSparkListener(listener)
-      try {
-        body
-        sc.setJobGroup("scan-gate", "marker")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        val deadline = System.currentTimeMillis() + 30000
-        while (!done.get && System.currentTimeMillis() < deadline) Thread.sleep(10)
-        assert(done.get, "marker job never ended")
-        read.get
-      } finally sc.removeSparkListener(listener)
+      read.get
     }
     // 3 distinct (returnflag, linestatus) keys, cap 40: exact summary
     assert(inputRecords(DistinctAndFrequency.heavyHittersMG(
@@ -358,6 +375,29 @@ class OperatorSpec extends SparkSpec {
     // far more orderkeys than cap 200: the verify scan runs
     assert(inputRecords(DistinctAndFrequency.heavyHittersMG(
       li, Seq("l_orderkey"), 0.01).collect()) == 2 * n)
+  }
+
+  test("a sketch gesture runs as one Spark job; a window over the aggregate falls back") {
+    import graft.engine.SketchExec
+    import graft.streaming.Progressive
+    val li = Tables.lineitem(spark, sf)
+    val c = "l_extendedprice"
+    assert(jobCount(SketchExec.collect(Stats.dataRange(li, c))) == 1)
+    assert(jobCount(SketchExec.collect(Stats.rowCount(li))) == 1)
+    // the exact summary's build is the one job; its result is a local relation
+    assert(jobCount(SketchExec.collect(DistinctAndFrequency.heavyHittersMG(
+      li, Seq("l_returnflag", "l_linestatus"), 0.05))) == 1)
+    // eight partitions in four steps: four partials, one job
+    val buckets = spark.range(0, 4000, 1, 8).select((col("id") % 10).as("b"))
+    var fracs = Vector.empty[Double]
+    assert(jobCount(Progressive.groupedCount(buckets, "b", 4)(p => fracs :+= p.fractionDone)) == 1)
+    assert(fracs == Vector(0.25, 0.5, 0.75, 1.0), fracs)
+    // histogramWithCdf puts a window over the aggregate: collected as it
+    // is (adaptive execution, more than one job), with the same rows
+    val hist = Histograms.histogramWithCdf(li, Histograms.numericBucket(col(c), 0.0, 110000.0, 22))
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobCount { rows = SketchExec.collect(hist) } > 1)
+    assert(rows.toSet == hist.collect().toSet && rows.nonEmpty)
   }
 
   test("set ops view algebra consistent with except/intersect") {

@@ -413,6 +413,18 @@ class PipelineSpec extends SparkSpec {
       Seq("doc_id")).exists(_.startsWith("fold +1 shard(s) onto 2")))
   }
 
+  test("the folded zone-map stamp covers the builder and the theta classes") {
+    import graft.engine.Skipping
+    import graft.functions.{Sketch, SketchAgg, Theta, ThetaSketch}
+    // a change to any of these changes the stored blobs or their merge,
+    // so it must re-mine a published zone map
+    val covered = Seq(Skipping.getClass, ThetaSketch.getClass, classOf[Theta],
+      classOf[Sketch[_]], classOf[SketchAgg[_]]).map(c => "/" + c.getName.replace('.', '/') + ".class")
+    assert(covered.forall(Skipping.zoneMapStamp.contains), covered.diff(Skipping.zoneMapStamp))
+    // Artifacts.classStamp skips a missing resource silently
+    Skipping.zoneMapStamp.foreach(r => assert(getClass.getResource(r) != null, r))
+  }
+
   test("artifact GC grace period runs from supersession, not publication") {
     import graft.engine.Artifacts
     import spark.implicits._

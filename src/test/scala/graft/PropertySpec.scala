@@ -646,7 +646,7 @@ class PropertySpec extends SparkSpec {
 
   test("schema file round-trip") {
     val li = graft.engine.Tables.lineitem(spark, sf)
-    val tmp = java.nio.file.Files.createTempFile("graft_schema", ".schema")
+    val tmp = graft.engine.Artifacts.scratchDir("graft_schema").resolve("lineitem.schema")
     graft.sources.Sources.writeSchemaFile(li.schema, tmp.toString)
     val back = graft.sources.Sources.readSchemaFile(tmp.toString)
     assert(back.fields.map(_.name).sameElements(li.schema.fields.map(_.name)))
@@ -2771,5 +2771,57 @@ class PropertySpec extends SparkSpec {
     assert(out(9400004L) == ((2L, 7L, 9333L, true)))
     // novel instruction stays far under θ
     assert(!out(9400005L)._4 && out(9400005L)._3 < 3000L)
+  }
+
+  test("SketchExec equals collect() over partition counts, special floats and empty input") {
+    import graft.engine.SketchExec
+    import graft.functions.{HllSketch, MgTupleAgg}
+    import graft.streaming.Progressive
+    import org.apache.spark.sql.{DataFrame, Row, graftshim}
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("k", DoubleType), StructField("s", StringType),
+      StructField("v", DoubleType), StructField("d", DecimalType(12, 2))))
+    val floats = Seq[Any](null, Double.NaN, 0.0, -0.0, 1.5, -1.5)
+    val data = (0 until 300).map(i => Row(floats(i % 6), if (i % 7 == 0) null else s"s${i % 5}",
+      floats((i / 6) % 6), if (i % 11 == 0) null else BigDecimal(i * 37 - 4000, 2).bigDecimal))
+    // a row as comparable text: binary by content, MG summaries as their
+    // entry sets (their byte order follows merge order, not content)
+    def canon(r: Row): String = r.toSeq.map {
+      case b: Array[Byte] if r.schema.fieldNames.contains("mg") =>
+        MgTupleAgg.decode(b, 2).map { case (k, c) => k.getBytes.mkString(",") + s"=$c" }.sorted.mkString(";")
+      case b: Array[Byte] => b.mkString(",")
+      case x => String.valueOf(x)
+    }.mkString("|")
+    def sketches(df: DataFrame): Seq[DataFrame] = {
+      val keys = df.select("s", "k")
+      val mg = MgTupleAgg(graftshim.analyzedPlan(keys).output, 64).toAggregateExpression()
+      Seq(
+        df.agg(min("v"), max("v"), count("v"), count(lit(1)), sum("d")),
+        df.groupBy("k").agg(min("v"), max("v"), count(lit(1)), sum("d")),
+        df.groupBy("s", "k").count(),
+        df.groupBy("k").agg(sum("d").as("t")).select(col("k"), (col("t") * 2).as("t2")),
+        df.select("s", "k").distinct(),
+        df.agg(HllSketch.hll_build(col("s"), 12).as("hll")),
+        keys.agg(graftshim.exprToColumn(mg).as("mg")))
+    }
+    for (parts <- Seq(1, 4, 200); rows <- Seq(data, Seq.empty[Row])) {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+      sketches(df).foreach { q =>
+        val want = q.collect()
+        val got = SketchExec.collect(q)
+        val ctx = s"parts=$parts rows=${rows.size} plan=${q.queryExecution.optimizedPlan.simpleString(5)}"
+        assert(got.map(canon).sorted.toSeq == want.map(canon).sorted.toSeq, ctx)
+        assert(got.map(_.schema).distinct.toSeq == want.map(_.schema).distinct.toSeq, ctx)
+        var fracs = Vector.empty[Double]
+        val fin = Progressive.run(q, 4)(p => fracs :+= p.fractionDone)
+        assert(fin.map(canon).sorted.toSeq == want.map(canon).sorted.toSeq, ctx)
+        assert(fracs == fracs.sorted && fracs.last == 1.0 && fracs.size <= 4, s"$ctx $fracs")
+      }
+      // with no input a no-group aggregate has its one row, a grouped one none
+      if (rows.isEmpty) {
+        assert(SketchExec.collect(df.agg(count(lit(1)))).toSeq == Seq(Row(0L)))
+        assert(SketchExec.collect(df.groupBy("k").count()).isEmpty)
+      }
+    }
   }
 }

@@ -189,25 +189,13 @@ class StreamingSpec extends SparkSpec {
     // — a visible convergence guarantee the UI can rely on — and the
     // final registers equal the one-shot batch sketch exactly.
     import org.apache.spark.sql.functions._
-    import org.apache.spark.unsafe.types.UTF8String
     val docs = Tables.documents(spark, sf).select("text").repartition(8)
     var ests = List.empty[Double]
     val p = 12
-    val finalRegs = Progressive.runIncremental[Array[Byte], Array[Byte]](
-      docs, 4)(
-      () => graft.functions.HllSketch.emptyRegisters(p),
-      (regs, row) => {
-        if (!row.isNullAt(0)) {
-          graft.functions.HllSketch.addHash(regs,
-            org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-              UTF8String.fromString(row.getString(0)),
-              org.apache.spark.sql.types.StringType, 42L))
-        }
-        regs
-      },
-      (a, b) => graft.functions.HllSketch.maxMerge(a, b),
-      identity)(part =>
-        ests ::= graft.functions.HllSketch.estimate(part.value))
+    val sk = docs.agg(graft.functions.HllSketch.hll_build(col("text"), p).as("sk"))
+    val finalRegs = Progressive.run(sk, 4) { part =>
+      ests ::= graft.functions.HllSketch.estimate(part.value.head.getAs[Array[Byte]](0))
+    }.head.getAs[Array[Byte]](0)
     assert(ests.reverse == ests.reverse.sorted, s"partials not monotone: ${ests.reverse}")
     val batch = Tables.documents(spark, sf)
       .agg(graft.functions.HllSketch.hll_build(col("text"), p).as("sk"))
@@ -218,19 +206,17 @@ class StreamingSpec extends SparkSpec {
   test("bundled partials: wide window collapses to first+final flush; final exact") {
     val li = Tables.lineitem(spark, sf).repartition(8)
     var fracs = List.empty[Double]
-    val fin = Progressive.runBundled[Long, Long](
-      li.select("l_orderkey"), 8, bundleMs = 60000L)(
-      () => 0L, (b, _) => b + 1, _ + _, identity)(p => fracs ::= p.fractionDone)
+    val n = li.agg(count(lit(1)))
+    val fin = Progressive.runBundled(n, 8, bundleMs = 60000L)(p => fracs ::= p.fractionDone)
     // first partial flushes immediately (the consumer sees progress
     // start), intermediates bundle away, the final ALWAYS flushes exact
     assert(fracs.length == 2, fracs)
     assert(fracs.head == 1.0 && fracs.last < 1.0, fracs)
-    assert(fin == li.count())
-    // bundleMs = 0 degrades to per-chunk emission (runIncremental cadence)
-    var n = 0
-    Progressive.runBundled[Long, Long](li.select("l_orderkey"), 8, 0L)(
-      () => 0L, (b, _) => b + 1, _ + _, identity)(_ => n += 1)
-    assert(n == 8, n)
+    assert(fin.head.getLong(0) == li.count())
+    // bundleMs = 0 degrades to one flush per step (Progressive.run cadence)
+    var flushes = 0
+    Progressive.runBundled(n, 8, 0L)(_ => flushes += 1)
+    assert(flushes == 8, flushes)
   }
 
   test("progressive cancellation: cancelJobGroup mid-stream stops cleanly") {
@@ -238,15 +224,14 @@ class StreamingSpec extends SparkSpec {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     import spark.implicits._
-    // 8 chunks × (8 rows × 200 ms) each — cancel lands mid-chunk 1/2
+    // 8 partitions × (8 rows × 200 ms) each — cancel lands mid-partition
     val slow = (1 to 64).toDF("x").repartition(8)
     @volatile var emitted = 0
     val group = "graft-progressive-cancel-spec"
+    val nap = org.apache.spark.sql.functions.udf { (x: Int) => Thread.sleep(200); x }
     val fut = Future {
-      Progressive.runIncremental[Long, Long](slow, 8, group)(
-        () => 0L,
-        (b, _) => { Thread.sleep(200); b + 1 },
-        _ + _, identity)(_ => emitted += 1)
+      Progressive.run(slow.agg(org.apache.spark.sql.functions.sum(nap($"x"))), 8, group)(
+        _ => emitted += 1)
     }
     Thread.sleep(700)
     Progressive.cancel(spark, group)
@@ -1380,7 +1365,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("schema file reader maps hillview kinds") {
-    val tmp = java.nio.file.Files.createTempFile("graft", ".schema")
+    val tmp = graft.engine.Artifacts.scratchDir("graft_schema").resolve("kinds.schema")
     java.nio.file.Files.writeString(tmp,
       """[{"name":"c1","kind":"Integer"},{"name":"c2","kind":"String"},{"name":"c3","kind":"Date"}]""")
     val st = graft.sources.Sources.readSchemaFile(tmp.toString)
