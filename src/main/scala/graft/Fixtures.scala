@@ -1,7 +1,6 @@
 package graft
 
 import graft.engine.{Artifacts, Tables}
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,8 +45,8 @@ object Fixtures {
     /** [[df]] materialized once as a `documents.parquet` input dir, so
       * folded-artifact queries can shard it. */
     def inputDir(s: SparkSession, d: String): String =
-      materializeOnce(s"docs_$tag", d, "documents")(
-        Seq("documents.parquet" -> df(s, d)))
+      Artifacts.Lineage(s"docs_$tag", d, buildStamp)
+        .serveSet("v1", d, "documents")(Seq("documents.parquet" -> df(s, d)))
   }
 
   private def nChars(t: String): Long = t.codePointCount(0, t.length).toLong
@@ -412,42 +411,17 @@ object Fixtures {
     * (odd keys): the wide originals plus a NEW o_channel column. The
     * evolved-read query widens them back into one table. */
   def evolvedShards(s: SparkSession, d: String): Seq[String] = {
-    val dir = materializeOnce("evolved_orders", d, "orders") {
-      val o = Tables.orders(s, d)
-      Seq(
-        "shard_v1.parquet" -> o.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_custkey").cast("int"),
-            col("o_totalprice").cast("float")),
-        "shard_v2.parquet" -> o.filter(col("o_orderkey") % 2 === 1)
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_totalprice"), lit("web").as("o_channel")))
-    }
-    Seq(s"$dir/shard_v1.parquet", s"$dir/shard_v2.parquet")
-  }
-
-  /** Publish `datasets` ONCE as a stable scratch input set under the
-    * lineage dir (`prefix`, `d`). Fingerprint = the source table's
-    * listing + [[buildStamp]]; the marker is written last, and a set
-    * whose marker matches is served without building anything. */
-  private def materializeOnce(prefix: String, d: String, table: String)(
-      datasets: => Seq[(String, DataFrame)]): String = {
-    val root = Artifacts.lineageDir(prefix, d)
-    val fp = Artifacts.md5Hex("v1|" + Artifacts.classStamp(buildStamp) + "|" +
-      Artifacts.tableListing(new java.io.File(d, s"$table.parquet")))
-    val setDir = Paths.get(root, s"set_$fp")
-    this.synchronized {
-      val marker = Paths.get(root, "_FINGERPRINT")
-      val fresh = Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8") == fp &&
-        Files.exists(setDir)
-      if (!fresh) {
-        Files.createDirectories(setDir)
-        datasets.foreach { case (name, df) =>
-          Artifacts.publishDataset(root, setDir.resolve(name), df)
-        }
-        Artifacts.publishMarker(root, fp)
+    val dir = Artifacts.Lineage("evolved_orders", d, buildStamp)
+      .serveSet("v1", d, "orders") {
+        val o = Tables.orders(s, d)
+        Seq(
+          "shard_v1.parquet" -> o.filter(col("o_orderkey") % 2 === 0)
+            .select(col("o_orderkey"), col("o_custkey").cast("int"),
+              col("o_totalprice").cast("float")),
+          "shard_v2.parquet" -> o.filter(col("o_orderkey") % 2 === 1)
+            .select(col("o_orderkey"), col("o_custkey"),
+              col("o_totalprice"), lit("web").as("o_channel")))
       }
-    }
-    setDir.toString
+    Seq(s"$dir/shard_v1.parquet", s"$dir/shard_v2.parquet")
   }
 }

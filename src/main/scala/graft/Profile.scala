@@ -61,13 +61,6 @@ object Profile {
       }
     })
 
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(rdd => try rdd.unpersist(blocking = true) catch { case _: Throwable => () })
-      System.gc()
-    }
-
     val showStages = sys.props.get("graft.profile.stages").contains("true")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
@@ -80,7 +73,7 @@ object Profile {
               println(s"$name FAILED: ${e.getMessage}"); false }
           if (!warmOk) () else {
           val measured = (1 to runs).map { _ =>
-            quiesce()
+            Bench.quiesce(spark)
             stages.clear(); jobs.clear(); jobStarts.clear()
             val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
             val t0 = System.nanoTime()

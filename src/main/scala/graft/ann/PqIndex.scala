@@ -290,8 +290,8 @@ object PqIndex {
     }
 
   /** The PQ index maintained as a FOLDED artifact over an append-only
-    * list of EMBEDDINGS shards — the SIXTH stored model, and the one
-    * with a custom layout: the quantizer (one `map_…` side dataset
+    * list of EMBEDDINGS shards, the one stored model with a custom
+    * layout: the quantizer (one `map_…` side dataset
     * holding codebooks + coarse centroids) trains once per FULL build;
     * each shard's codes are an IMMUTABLE `codes_…` dataset addressed by
     * (shard fingerprint, quantizer identity) and hive-partitioned by
@@ -300,9 +300,9 @@ object PqIndex {
     * [[append]] contract, delta-sized work, append-vs-rebuild serve
     * parity spec-gated — while a mutated shard, changed params, or a
     * recompiled build re-trains and re-encodes everything. Marker-last
-    * atomic publication throughout; `_PROVENANCE` records which path
-    * ran. Serving reads the published side dataset + the per-shard
-    * code datasets and runs the standard [[adcServe]].
+    * atomic publication throughout; the provenance receipt records
+    * which path ran. Serving reads the published side dataset + the
+    * per-shard code datasets and runs the standard [[adcServe]].
     *
     * This is deliberately NOT routed through
     * [[graft.engine.Artifacts.serveFoldedShards]]: there the marker
@@ -313,8 +313,9 @@ object PqIndex {
     * build) — so head construction and the fold decision are mutually
     * recursive. It composes the shared codec/decision/publication
     * primitives ([[graft.engine.Artifacts.foldMarkerContent]],
-    * [[graft.engine.Artifacts.canFoldShards]], publishDataset/Marker,
-    * gcSuperseded) so the format and fold rule still cannot drift.
+    * [[graft.engine.Artifacts.canFoldShards]], publishDataset) and takes
+    * its dir, build stamp, lock, marker and commit from its
+    * [[foldedLineage]], so the format and fold rule still cannot drift.
     */
   def foldedIndexServe(spark: SparkSession, name: String,
       shardDirs: Seq[String], queryIds: Seq[Long], k: Int,
@@ -323,14 +324,12 @@ object PqIndex {
     import java.nio.file.{Files, Paths}
     import graft.engine.Artifacts
     val params = s"m$m-k$ksub-n$nlist-r$refineIters"
-    val dir = Artifacts.lineageDir("pq_index_fold", name + "|" + params)
-    Files.createDirectories(Paths.get(dir))
+    val lineage = foldedLineage(name, m, ksub, nlist, refineIters)
+    val dir = lineage.dir
     def loadEmb(sd: String) =
       graft.engine.Tables.table(spark, sd, "embeddings")
     val shardFps = Artifacts.shardFingerprints(shardDirs, "embeddings")
-    val stamp = Artifacts.classStamp(Seq(
-      "/graft/ann/PqIndex$.class", "/graft/ann/PqIndex.class",
-      "/graft/ann/Similarity$.class", "/graft/ann/Similarity.class"))
+    val stamp = lineage.buildStamp
     val headPrefix = s"v1 params=$params build=$stamp side="
     def codePath(sd: String, fp: String, side: String) = Paths.get(dir,
       s"codes_${Artifacts.md5Hex(s"$sd|$fp|$side")}.parquet")
@@ -338,11 +337,8 @@ object PqIndex {
     // call just published or verified) — re-reading the marker after
     // unlocking could observe a concurrent JVM's publication under a
     // DIFFERENT build stamp, whose head this build cannot parse
-    val side = this.synchronized {
-      val marker = Paths.get(dir, "_FINGERPRINT")
-      val old = if (Files.exists(marker))
-        Some(new String(Files.readAllBytes(marker), "UTF-8")) else None
-      val (oldHead, oldShards) = Artifacts.parseFoldMarker(old)
+    val side = lineage.locked {
+      val (oldHead, oldShards) = Artifacts.parseFoldMarker(lineage.marker)
       val oldSide = oldHead
         .filter(_.startsWith(headPrefix)).map(_.stripPrefix(headPrefix))
       def allPublished(side: String, fps: Seq[(String, String)]) =
@@ -388,13 +384,10 @@ object PqIndex {
               encode(Similarity.l2normalize(loadEmb(sd)), Some(cents), cbs),
               partitionBy = Seq("cell"))
         }
-        Artifacts.publishMarker(dir,
-          Artifacts.foldMarkerContent(headPrefix + side, shardFps))
-        Artifacts.gcSuperseded(dir, Paths.get(dir, side) +:
-          shardFps.map { case (sd, f) => codePath(sd, f, side) })
-        Files.write(Paths.get(dir, "_PROVENANCE"),
-          Artifacts.foldProvenance(canFold, oldShards.size, shardFps.size)
-            .getBytes("UTF-8"))
+        lineage.commit(Artifacts.foldMarkerContent(headPrefix + side, shardFps),
+          Paths.get(dir, side) +:
+            shardFps.map { case (sd, f) => codePath(sd, f, side) },
+          canFold, oldShards.size, shardFps.size)
         side
       }
     }
@@ -424,31 +417,13 @@ object PqIndex {
     (cbs.map(_.toArray), cents)
   }
 
-  /** Whether a [[foldedIndexServe]] lineage is published. */
-  def foldedIndexExists(name: String, m: Int = 8, ksub: Int = 32,
-      nlist: Int = 16, refineIters: Int = 1): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(
-      graft.engine.Artifacts.lineageDir("pq_index_fold",
-        name + s"|m$m-k$ksub-n$nlist-r$refineIters"), "_FINGERPRINT"))
-
-  /** Last publication's provenance for a folded-index lineage. */
-  def foldedIndexProvenance(name: String, m: Int = 8, ksub: Int = 32,
-      nlist: Int = 16, refineIters: Int = 1): Option[String] = {
-    val p = java.nio.file.Paths.get(
-      graft.engine.Artifacts.lineageDir("pq_index_fold",
-        name + s"|m$m-k$ksub-n$nlist-r$refineIters"), "_PROVENANCE")
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    else None
-  }
-
-  /** Drop a [[foldedIndexServe]] lineage (marker + datasets) so the
-    * next call re-trains and re-encodes from scratch — the operational
-    * rebuild knob and the probe harness's build-cost lever. */
-  def foldedIndexInvalidate(name: String, m: Int = 8, ksub: Int = 32,
-      nlist: Int = 16, refineIters: Int = 1): Unit =
-    graft.engine.Artifacts.invalidate(graft.engine.Artifacts.lineageDir(
-      "pq_index_fold", name + s"|m$m-k$ksub-n$nlist-r$refineIters"))
+  /** The lineage of [[foldedIndexServe]] for corpus `name`. */
+  def foldedLineage(name: String, m: Int = 8, ksub: Int = 32,
+      nlist: Int = 16, refineIters: Int = 1): graft.engine.Artifacts.Lineage =
+    graft.engine.Artifacts.Lineage("pq_index_fold",
+      name + s"|m$m-k$ksub-n$nlist-r$refineIters", Seq(
+        "/graft/ann/PqIndex$.class", "/graft/ann/PqIndex.class",
+        "/graft/ann/Similarity$.class", "/graft/ann/Similarity.class"))
 
   /** Load the driver-side index artifacts (kilobytes). */
   private def loadSide(spark: SparkSession, dir: String)

@@ -668,24 +668,34 @@ object Dedup {
     * match ⇒ one parquet read, no mining at all. Publication is atomic
     * (fingerprint-addressed data dir, marker written last), so concurrent
     * JVMs (bench + verify, parallel CI) can never observe a half-written
-    * map: see [[publishArtifact]].
+    * map: see [[graft.engine.Artifacts]].
     */
   def clusterMapArtifact(spark: org.apache.spark.sql.SparkSession,
       inputDir: String, n: Int = 3,
-      k: Int = 64, bands: Int = 32, threshold: Double = 0.5): DataFrame = {
-    val docs = graft.engine.Tables.documents(spark, inputDir)
-    val params = s"n$n-k$k-b$bands-t$threshold"
-    val dir = graft.engine.Artifacts.lineageDir("cluster_map",
-      inputDir + "|" + params)
+      k: Int = 64, bands: Int = 32, threshold: Double = 0.5): DataFrame =
     // freshness re-checked on every call (a file stat + tiny md5 —
     // nanoseconds against any query): an input mutated even mid-session
     // re-mines instead of serving the stale map
-    val fp = md5Hex(s"$params|$buildStamp|" +
-      tableListing(new java.io.File(inputDir, "documents.parquet")))
-    serveOrBuild(spark, dir, fp) {
-      connectedComponents(minhashLshPairs(docs, n, k, bands, threshold))
+    clusterMapLineage(inputDir, n, k, bands, threshold).serve(spark,
+        params(n, k, bands, threshold), inputDir, "documents") {
+      connectedComponents(minhashLshPairs(
+        graft.engine.Tables.documents(spark, inputDir), n, k, bands, threshold))
     }
-  }
+
+  /** The lineage of [[clusterMapArtifact]] over `inputDir`. */
+  def clusterMapLineage(inputDir: String, n: Int = 3, k: Int = 64,
+      bands: Int = 32, threshold: Double = 0.5): graft.engine.Artifacts.Lineage =
+    graft.engine.Artifacts.Lineage("cluster_map",
+      inputDir + "|" + params(n, k, bands, threshold), miningClasses)
+
+  /** The lineage of [[clusterMapArtifactFolded]] for corpus `name`. */
+  def clusterMapFoldLineage(name: String, n: Int = 3, k: Int = 64,
+      bands: Int = 32, threshold: Double = 0.5): graft.engine.Artifacts.Lineage =
+    graft.engine.Artifacts.Lineage("cluster_map_fold",
+      name + "|" + params(n, k, bands, threshold), miningClasses)
+
+  private def params(n: Int, k: Int, bands: Int, threshold: Double): String =
+    s"n$n-k$k-b$bands-t$threshold"
 
   /** INCREMENTAL cluster-map maintenance (r15): the fold step that turns
     * the write-once artifact into a month-over-month subsystem. Given
@@ -789,8 +799,8 @@ object Dedup {
       name: String, shardDirs: Seq[String], n: Int = 3, k: Int = 64,
       bands: Int = 32, threshold: Double = 0.5): DataFrame = {
     import java.nio.file.Paths
-    val params = s"n$n-k$k-b$bands-t$threshold"
-    val dir = foldedArtifactDir(name, params)
+    val lineage = clusterMapFoldLineage(name, n, k, bands, threshold)
+    val dir = lineage.dir
     def load(sd: String) = graft.engine.Tables.documents(spark, sd)
     val shardFps = graft.engine.Artifacts.shardFingerprints(
       shardDirs, "documents")
@@ -806,14 +816,14 @@ object Dedup {
     // Freshness, fold eligibility, ensure-exists publication, and GC of
     // the index ride the generic's perShard hook.
     def bandPath(sd: String, fp: String) = Paths.get(dir,
-      s"bands_${md5Hex(s"$sd|$fp|n$n-k$k-b$bands")}.parquet")
+      s"bands_${graft.engine.Artifacts.md5Hex(s"$sd|$fp|n$n-k$k-b$bands")}.parquet")
     def bandsOf(dirs: Seq[String]): DataFrame =
       dirs.map(sd => spark.read.parquet(bandPath(sd, fpByDir(sd)).toString))
         .reduce(_ unionByName _)
     val bandIndex = graft.engine.Artifacts.ShardDataset(
       bandPath, sd => bandFrame(load(sd), n, k, bands))
-    graft.engine.Artifacts.serveFoldedShards(spark, dir, params, buildStamp,
-      shardFps, Seq(bandIndex)) {
+    lineage.serveFolded(spark, params(n, k, bands, threshold), shardFps,
+      Seq(bandIndex)) {
       val all = shardDirs.map(load).reduce(_ union _)
       // full mine reuses the published per-shard indexes for candidate
       // generation (a band self-join over the flat band table), so
@@ -834,43 +844,6 @@ object Dedup {
         corpusBands = Some(bandsOf(corpusDirs)))
     }
   }
-
-  /** Drop [[clusterMapArtifact]]'s published lineage for `inputDir`
-    * (marker AND fingerprint-addressed data dirs) so the next call
-    * re-mines from scratch — the operational "rebuild this model" knob
-    * (and the probe harness's build-cost lever). Marker first: a crash
-    * mid-delete leaves an unreferenced data dir, never a marker
-    * pointing at missing data. This is an explicit operator action —
-    * unlike re-publication it does delete bytes an in-flight reader of
-    * the SAME lineage could be scanning.
-    */
-  def clusterMapInvalidate(inputDir: String, n: Int = 3, k: Int = 64,
-      bands: Int = 32, threshold: Double = 0.5): Unit =
-    graft.engine.Artifacts.invalidate(graft.engine.Artifacts.lineageDir(
-      "cluster_map", inputDir + "|" + s"n$n-k$k-b$bands-t$threshold"))
-
-  /** True iff a published map exists for this folded-artifact lineage —
-    * callers use it to seed a base map only on first contact instead of
-    * regressing an already-folded artifact to a subset.
-    */
-  def foldedArtifactExists(name: String, n: Int = 3, k: Int = 64,
-      bands: Int = 32, threshold: Double = 0.5): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(
-      foldedArtifactDir(name, s"n$n-k$k-b$bands-t$threshold"), "_FINGERPRINT"))
-
-  /** Last publication's provenance line for a folded-artifact lineage
-    * ("fold +k shard(s) onto m" / "full mine of n shard(s)"), if any. */
-  def foldedArtifactProvenance(name: String, n: Int = 3, k: Int = 64,
-      bands: Int = 32, threshold: Double = 0.5): Option[String] = {
-    val p = java.nio.file.Paths.get(
-      foldedArtifactDir(name, s"n$n-k$k-b$bands-t$threshold"), "_PROVENANCE")
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    else None
-  }
-
-  private def foldedArtifactDir(name: String, params: String): String =
-    graft.engine.Artifacts.lineageDir("cluster_map_fold", name + "|" + params)
 
   /** Materialize the documents table of `inputDir` as `parts` scratch
     * shard directories (doc_id mod `parts`), each a `documents.parquet`
@@ -893,77 +866,21 @@ object Dedup {
   private def ensureTableShards(spark: org.apache.spark.sql.SparkSession,
       inputDir: String, parts: Int, table: String,
       idCol: String): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    val root = graft.engine.Artifacts.lineageDir(
-      if (table == "documents") "doc_shards" else s"${table}_shards",
-      inputDir + "|p" + parts)
-    val fp = md5Hex(s"v1|p$parts|" +
-      tableListing(new java.io.File(inputDir, s"$table.parquet")))
-    val setDir = Paths.get(root, s"set_$fp")
-    this.synchronized {
-      val marker = Paths.get(root, "_FINGERPRINT")
-      val fresh = Files.exists(marker) &&
-        new String(Files.readAllBytes(marker), "UTF-8") == fp &&
-        Files.exists(setDir)
-      if (!fresh) {
-        val docs = graft.engine.Tables.table(spark, inputDir, table)
-        val nonce = java.lang.Long.toHexString(System.nanoTime())
-        val tmp = Paths.get(root, s".tmp_$nonce")
-        (0 until parts).foreach { i =>
-          docs.filter(col(idCol) % parts === i)
-            .write.mode("overwrite")
-            .parquet(Paths.get(tmp.toString, s"shard_$i", s"$table.parquet").toString)
-        }
-        try Files.move(tmp, setDir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          // same contract as Artifacts.publishDataset: rename(2) onto a
-          // populated dir can surface as FileAlreadyExists,
-          // DirectoryNotEmpty, OR a plain FileSystemException — if the
-          // slot exists, a concurrent same-fingerprint publisher won;
-          // serve its copy. Anything else is a real failure.
-          case e: java.nio.file.FileSystemException if Files.exists(setDir) =>
-            deleteRecursively(tmp.toFile)
-          case e: java.nio.file.FileSystemException =>
-            deleteRecursively(tmp.toFile); throw e
-        }
-        val mtmp = Paths.get(root, s".marker_$nonce")
-        Files.write(mtmp, fp.getBytes("UTF-8"))
-        Files.move(mtmp, marker,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val set = graft.engine.Artifacts.Lineage(
+        if (table == "documents") "doc_shards" else s"${table}_shards",
+        inputDir + "|p" + parts, Nil)
+      .serveSet(s"v1|p$parts", inputDir, table) {
+        val rows = graft.engine.Tables.table(spark, inputDir, table)
+        (0 until parts).map(i =>
+          s"shard_$i/$table.parquet" -> rows.filter(col(idCol) % parts === i))
       }
-    }
-    (0 until parts).map(i => Paths.get(setDir.toString, s"shard_$i").toString)
+    (0 until parts).map(i => java.nio.file.Paths.get(set, s"shard_$i").toString)
   }
 
-  // artifact plumbing shared with the other stored models — see
-  // graft.engine.Artifacts for the mine-once / atomic-publish /
-  // cross-JVM contracts
-  private def serveOrBuild(spark: org.apache.spark.sql.SparkSession,
-      dir: String, fp: String)(build: => DataFrame): DataFrame =
-    graft.engine.Artifacts.serveOrBuild(spark, dir, fp)(build)
-
-  private def publishArtifact(dir: String, data: java.nio.file.Path,
-      fp: String, build: => DataFrame): Unit =
-    graft.engine.Artifacts.publish(dir, data, fp, build)
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.engine.Artifacts.deleteRecursively(f)
-
-  private def tableListing(table: java.io.File): String =
-    graft.engine.Artifacts.tableListing(table)
-
-  private def md5Hex(s: String): String =
-    graft.engine.Artifacts.md5Hex(s)
-
-  /** Engine build stamp for the cluster-map fingerprints: md5 of the
-    * MINING CLASSES' bytecode (this object and the MinHash kernels) —
-    * see [[graft.engine.Artifacts.classStamp]] for why bytecode, not a
-    * codeSource mtime.
-    */
-  private lazy val buildStamp: String =
-    graft.engine.Artifacts.classStamp(Seq(
-      "/graft/dedup/Dedup$.class", "/graft/dedup/Dedup.class",
-      "/graft/functions/MinHashExpression$.class",
-      "/graft/functions/MinHashExpression.class"))
+  /** The MINING CLASSES whose bytecode stamps the cluster-map builds:
+    * this object and the MinHash kernels. */
+  private val miningClasses: Seq[String] = Seq(
+    "/graft/dedup/Dedup$.class", "/graft/dedup/Dedup.class",
+    "/graft/functions/MinHashExpression$.class",
+    "/graft/functions/MinHashExpression.class")
 }

@@ -2,17 +2,19 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The engine's write-once artifact layer — shared plumbing behind every
-  * stored model (the dedup cluster map, the boilerplate line list; the
-  * PQ/IVF index uses the same posture with its own layout). An artifact
-  * is a parquet dataset that is EXPENSIVE to mine and cheap to serve;
-  * the layer guarantees:
+/** The engine's write-once artifact layer. Every stored model (the dedup
+  * cluster map, the LM and boilerplate models, the folded states, the PQ
+  * index, the fixture and shard input sets) is declared as one
+  * [[Artifacts.Lineage]], and only this object knows the lineage dir
+  * layout, the fingerprint format, the build stamps and the marker and
+  * provenance files. An artifact is a parquet dataset that is EXPENSIVE
+  * to mine and cheap to serve; the layer guarantees:
   *
-  *  - **mine once per identity**: the caller supplies a fingerprint
-  *    covering the input's file listing, the mining parameters, and a
-  *    BYTECODE stamp of every class that shapes the builder closure
-  *    ([[classStamp]]) — so a mutated input, changed params, or a
-  *    recompiled mining algorithm re-mines, and nothing else does;
+  *  - **mine once per identity**: a fingerprint covers the input's file
+  *    listing, the mining parameters, and a BYTECODE stamp of every class
+  *    that shapes the builder closure — so a mutated input, changed
+  *    params, or a recompiled mining algorithm re-mines, and nothing
+  *    else does;
   *  - **atomic publication**: data is written to a hidden temp dir and
   *    ATOMIC_MOVEd into a fingerprint-addressed slot, and the
   *    `_FINGERPRINT` marker is written LAST (itself via temp +
@@ -22,8 +24,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - **cross-JVM safety**: fingerprint-addressed data dirs mean a
   *    concurrent builder of a DIFFERENT fingerprint never touches bytes
   *    a reader is scanning, and a same-fingerprint race is resolved by
-  *    the atomic move (the loser serves the winner's copy). Superseded
-  *    datasets are GC'd best-effort with a grace period.
+  *    the atomic move (the loser serves the winner's copy). Within a JVM
+  *    every serve holds this object's monitor. Superseded datasets and
+  *    sets are GC'd best-effort with a grace period.
   *
   * The artifact root ([[graft.sources.Sources.rtDir]]) is configurable
   * via SPARK_GRAFT_RT_DIR — on a real cluster it must point at the
@@ -38,10 +41,8 @@ object Artifacts {
       build: => DataFrame): DataFrame = {
     val data = java.nio.file.Paths.get(dir, s"map_${md5Hex(fp)}.parquet")
     this.synchronized {
-      val marker = java.nio.file.Paths.get(dir, "_FINGERPRINT")
-      val fresh = java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fp &&
-        java.nio.file.Files.exists(data)
+      val fresh = readIfExists(java.nio.file.Paths.get(dir, "_FINGERPRINT"))
+        .contains(fp) && java.nio.file.Files.exists(data)
       if (!fresh) publish(dir, data, fp, build)
     }
     spark.read.parquet(data.toString)
@@ -49,12 +50,12 @@ object Artifacts {
 
   /** The atomic publication protocol (see the object doc) for a
     * single-dataset artifact. Multi-dataset artifacts (e.g. the folded
-    * cluster map's map + signature table) compose the pieces:
-    * [[publishDataset]] for each dataset, then [[publishMarker]] LAST,
-    * then [[gcSuperseded]] — a crash anywhere before the marker leaves
+    * cluster map's map + band indexes) compose the pieces:
+    * [[publishDataset]] for each dataset, then the marker LAST
+    * ([[Lineage.commit]]) — a crash anywhere before the marker leaves
     * the previous publication intact.
     */
-  def publish(dir: String, data: java.nio.file.Path, fp: String,
+  private def publish(dir: String, data: java.nio.file.Path, fp: String,
       build: => DataFrame): Unit = {
     publishDataset(dir, data, build)
     publishMarker(dir, fp)
@@ -66,12 +67,18 @@ object Artifacts {
     * dataset (e.g. the folded PQ index's per-cell code layout — the
     * partition pruning survives the atomic move). */
   def publishDataset(dir: String, data: java.nio.file.Path,
-      build: => DataFrame, partitionBy: Seq[String] = Nil): Unit = {
+      build: => DataFrame, partitionBy: Seq[String] = Nil): Unit =
+    publishSlot(dir, data)(tmp => build.write.mode("overwrite")
+      .partitionBy(partitionBy: _*).parquet(tmp.toString))
+
+  /** Run `write` into a hidden temp dir, then ATOMIC_MOVE it into the
+    * fingerprint-addressed slot `data`. */
+  private def publishSlot(dir: String, data: java.nio.file.Path)(
+      write: java.nio.file.Path => Unit): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val nonce = java.lang.Long.toHexString(System.nanoTime())
     val tmp = Paths.get(dir, s".tmp_$nonce")
-    build.write.mode("overwrite").partitionBy(partitionBy: _*)
-      .parquet(tmp.toString)
+    write(tmp)
     try Files.move(tmp, data, StandardCopyOption.ATOMIC_MOVE)
     catch {
       // the fingerprint-addressed slot is already populated (concurrent
@@ -89,7 +96,7 @@ object Artifacts {
 
   /** Marker-last publication step (temp file + ATOMIC_MOVE), plus the
     * snapshot-log append ([[snapshotLog]]). */
-  def publishMarker(dir: String, fp: String): Unit = {
+  private def publishMarker(dir: String, fp: String): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val mtmp = Paths.get(dir, s".marker_${java.lang.Long.toHexString(System.nanoTime())}")
     Files.write(mtmp, fp.getBytes("UTF-8"))
@@ -101,7 +108,9 @@ object Artifacts {
   /** How many SUPERSEDED publications the GC retains per lineage for
     * time travel, beyond the current one (default 0 = grace-window-only,
     * the pre-snapshot behavior). Configurable via
-    * SPARK_GRAFT_RETAIN_SNAPSHOTS on a shared store. */
+    * SPARK_GRAFT_RETAIN_SNAPSHOTS on a shared store. Time travel reads
+    * map datasets only; a superseded input set always gets just the
+    * grace window. */
   @volatile private[graft] var retainOverride: Option[Int] = None
   private def retainSnapshots: Int = retainOverride.getOrElse(
     sys.env.getOrElse("SPARK_GRAFT_RETAIN_SNAPSHOTS", "0").toInt)
@@ -142,12 +151,8 @@ object Artifacts {
   }
 
   /** The full marker content of a logged version, if recorded. */
-  def snapshotMarker(dir: String, md5: String): Option[String] = {
-    val p = java.nio.file.Paths.get(dir, "_snapshots", md5)
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    else None
-  }
+  def snapshotMarker(dir: String, md5: String): Option[String] =
+    readIfExists(java.nio.file.Paths.get(dir, "_snapshots", md5))
 
   /** Time travel: read a logged version's map dataset if it still
     * exists (current, inside the GC grace window, or within the
@@ -161,13 +166,13 @@ object Artifacts {
   }
 
   /** Dataset dirs the GC/invalidate sweeps recognize: fingerprint-
-    * addressed maps and per-shard band indexes, plus the pre-r15
-    * fixed-name map (so upgraded artifact roots don't carry it
-    * forever). */
+    * addressed maps, per-shard band and code indexes and published
+    * input sets, plus the pre-r15 fixed-name map (so upgraded artifact
+    * roots don't carry it forever). */
   private def isDatasetDir(f: java.io.File): Boolean =
     f.isDirectory && (f.getName.startsWith("map_") ||
       f.getName.startsWith("bands_") || f.getName.startsWith("codes_") ||
-      f.getName == "map.parquet")
+      f.getName.startsWith("set_") || f.getName == "map.parquet")
 
   /** GC superseded dataset dirs not in `keep`, with a grace period
     * measured from SUPERSESSION (not publication): the first publish
@@ -217,14 +222,115 @@ object Artifacts {
       .foreach(deleteRecursively)
   }
 
-  /** The canonical scratch location of an artifact lineage: one dir
-    * per (prefix, logical key) under the artifact root — the single
-    * definition every stored model shares (cluster map, folded states,
-    * materialized fixture inputs). */
-  def lineageDir(prefix: String, key: String): String =
-    graft.sources.Sources.rtDir(prefix + "_" +
+  /** One stored model's lineage: one dir under the artifact root per
+    * (`prefix`, logical `key`), and the class files (`/pkg/Cls.class`
+    * resource paths) whose bytecode stamps its builds. A model declares
+    * itself once as a Lineage and serves through one of its three
+    * forms — one dataset ([[serve]]), a folded artifact
+    * ([[serveFolded]]) or a set of named datasets ([[serveSet]]) — and
+    * never sees the fingerprint format, the dir layout or the marker
+    * and provenance files. */
+  final case class Lineage(prefix: String, key: String, stamp: Seq[String]) {
+
+    lazy val dir: String = graft.sources.Sources.rtDir(prefix + "_" +
       java.lang.Long.toHexString(scala.util.hashing.MurmurHash3
         .stringHash(key).toLong & 0xffffffffL))
+
+    /** The bytecode stamp of `stamp`, hashed once per JVM. An empty
+      * `stamp` (a set that is a plain copy of its input) stamps
+      * nothing. */
+    def buildStamp: String =
+      if (stamp.isEmpty) "" else buildStamps.computeIfAbsent(stamp, classStamp(_))
+
+    private def file(name: String) = java.nio.file.Paths.get(dir, name)
+
+    /** The current publication's marker content, if published. */
+    def marker: Option[String] = readIfExists(file("_FINGERPRINT"))
+
+    /** True iff the lineage has a publication. */
+    def exists: Boolean = java.nio.file.Files.exists(file("_FINGERPRINT"))
+
+    /** True iff the current publication is a folded one that a serve
+      * over `shardDirs` by this build can extend: its marker head names
+      * [[buildStamp]] and every published shard is in `shardDirs`. A
+      * publication by other bytecode, or over other shards, is mined
+      * again in full. */
+    def foldsOnto(shardDirs: Seq[String]): Boolean = {
+      val (head, published) = parseFoldMarker(marker)
+      head.exists(_.split(' ').contains(s"build=$buildStamp")) &&
+        published.nonEmpty &&
+        published.forall { case (sd, _) => shardDirs.contains(sd) }
+    }
+
+    /** The last folded publication's provenance line ("fold +k shard(s)
+      * onto m" / "full mine of n shard(s)"), if any. */
+    def provenance: Option[String] = readIfExists(file("_PROVENANCE"))
+
+    /** Drop every publication (marker first, then data) so the next
+      * serve re-mines from scratch — the operational rebuild knob. */
+    def invalidate(): Unit = Artifacts.invalidate(dir)
+
+    /** The identity of a dataset mined under `params` from the `table`
+      * of `inputDir`: md5 over params, build stamp and the table's file
+      * listing. */
+    def fingerprint(params: String, inputDir: String, table: String): String =
+      md5Hex((params +: Seq(buildStamp).filter(_.nonEmpty) :+
+        tableListing(new java.io.File(inputDir, s"$table.parquet")))
+        .mkString("|"))
+
+    /** One dataset, mined by `build` once per [[fingerprint]]. */
+    def serve(spark: SparkSession, params: String, inputDir: String,
+        table: String)(build: => DataFrame): DataFrame =
+      serveOrBuild(spark, dir, fingerprint(params, inputDir, table))(build)
+
+    /** A folded artifact over `shardFps` ([[shardFingerprints]]); see
+      * [[serveFoldedShards]]. */
+    def serveFolded(spark: SparkSession, params: String,
+        shardFps: Seq[(String, String)], perShard: Seq[ShardDataset] = Nil)(
+        full: => DataFrame)(
+        fold: (DataFrame, Seq[String], Seq[String]) => DataFrame): DataFrame =
+      serveFoldedShards(spark, dir, params, buildStamp, shardFps,
+        perShard)(full)(fold)
+
+    /** A set of named datasets (relative paths such as
+      * `shard_0/documents.parquet`) derived from the `table` of
+      * `inputDir`, published once per [[fingerprint]] as one
+      * `set_<fp>` dir, marker last; a superseded set is collected like
+      * any superseded dataset. Returns the set's dir. */
+    def serveSet(params: String, inputDir: String, table: String)(
+        datasets: => Seq[(String, DataFrame)]): String = {
+      val fp = fingerprint(params, inputDir, table)
+      val set = file(s"set_$fp")
+      locked {
+        if (!(marker.contains(fp) && java.nio.file.Files.exists(set))) {
+          publishSlot(dir, set)(tmp => datasets.foreach { case (name, df) =>
+            df.write.mode("overwrite").parquet(tmp.resolve(name).toString)
+          })
+          publishMarker(dir, fp)
+          gcSuperseded(dir, Seq(set))
+        }
+      }
+      set.toString
+    }
+
+    /** Run `body` under the one publisher lock every serve holds — for
+      * a model that makes its own fold decision. */
+    def locked[T](body: => T): T = Artifacts.synchronized(body)
+
+    /** Commit a folded publication whose datasets are all in place:
+      * marker last, GC of every dataset not in `keep`, provenance. */
+    def commit(content: String, keep: Seq[java.nio.file.Path],
+        folded: Boolean, nOld: Int, nNew: Int): Unit =
+      commitFold(dir, content, keep, folded, nOld, nNew)
+  }
+
+  private val buildStamps =
+    new java.util.concurrent.ConcurrentHashMap[Seq[String], String]()
+
+  private def readIfExists(p: java.nio.file.Path): Option[String] =
+    if (java.nio.file.Files.exists(p))
+      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    else None
 
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(deleteRecursively)
@@ -249,7 +355,7 @@ object Artifacts {
   /** File-listing identity of one parquet table (name, length, mtime of
     * every part file, sorted) — the per-input component of artifact
     * fingerprints. */
-  def tableListing(table: java.io.File): String = {
+  private def tableListing(table: java.io.File): String = {
     val files =
       if (table.isDirectory)
         Option(table.listFiles).toSeq.flatten.sortBy(_.getName)
@@ -270,7 +376,7 @@ object Artifacts {
     * resources contribute nothing (e.g. a `$`-less companion that was
     * never emitted).
     */
-  def classStamp(resources: Seq[String]): String = {
+  private def classStamp(resources: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     resources.foreach { name =>
       val in = getClass.getResourceAsStream(name)
@@ -319,7 +425,7 @@ object Artifacts {
       oldShards.size < newShards.size
 
   /** The provenance receipt line for a fold/full publication. */
-  def foldProvenance(folded: Boolean, nOld: Int, nNew: Int): String =
+  private def foldProvenance(folded: Boolean, nOld: Int, nNew: Int): String =
     if (folded) s"fold +${nNew - nOld} shard(s) onto $nOld"
     else s"full mine of $nNew shard(s)"
 
@@ -388,9 +494,7 @@ object Artifacts {
       fps.forall { case (sd, f) =>
         perShard.forall(p => Files.exists(p.path(sd, f))) }
     this.synchronized {
-      val marker = Paths.get(dir, "_FINGERPRINT")
-      val old = if (Files.exists(marker))
-        Some(new String(Files.readAllBytes(marker), "UTF-8")) else None
+      val old = readIfExists(Paths.get(dir, "_FINGERPRINT"))
       if (!(old.contains(content) && Files.exists(data) &&
           allShardDatasets(shardFps))) {
         val (oldHead, oldShards) = parseFoldMarker(old)
@@ -410,27 +514,22 @@ object Artifacts {
               shardFps.map(_._1).filterNot(oldSet.contains))
           } else full
         publishDataset(dir, data, built)
-        publishMarker(dir, content)
-        gcSuperseded(dir, data +: (for (p <- perShard; (sd, f) <- shardFps)
-          yield p.path(sd, f)))
-        Files.write(Paths.get(dir, "_PROVENANCE"),
-          foldProvenance(canFold, oldShards.size, shardFps.size)
-            .getBytes("UTF-8"))
+        commitFold(dir, content, data +: (for (p <- perShard;
+          (sd, f) <- shardFps) yield p.path(sd, f)),
+          canFold, oldShards.size, shardFps.size)
       }
     }
     spark.read.parquet(data.toString)
   }
 
-  /** True iff a folded-shards lineage under `dir` has a publication. */
-  def foldedShardsExists(dir: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "_FINGERPRINT"))
-
-  /** Last publication's provenance line under `dir`, if any. */
-  def foldedShardsProvenance(dir: String): Option[String] = {
-    val p = java.nio.file.Paths.get(dir, "_PROVENANCE")
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    else None
+  /** The marker-last commit both folded forms share: marker, GC of
+    * every dataset not in `keep`, then the `_PROVENANCE` receipt. */
+  private def commitFold(dir: String, content: String,
+      keep: Seq[java.nio.file.Path], folded: Boolean, nOld: Int,
+      nNew: Int): Unit = {
+    publishMarker(dir, content)
+    gcSuperseded(dir, keep)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_PROVENANCE"),
+      foldProvenance(folded, nOld, nNew).getBytes("UTF-8"))
   }
 }

@@ -60,9 +60,9 @@ object Skipping {
   }
 
   /** The zone-map manifest as an incrementally-maintained FOLDED
-    * artifact over an append-only shard list — the FIFTH model on the
-    * [[Artifacts.serveFoldedShards]] pattern, and the one that IS a
-    * table format's metadata layer (Delta/Iceberg keep exactly this
+    * artifact over an append-only shard list
+    * ([[Artifacts.serveFoldedShards]]), and the one stored model that IS
+    * a table format's metadata layer (Delta/Iceberg keep exactly this
     * stats file beside the data): a new ingest shard folds in by
     * building ONLY its own mini-manifest ([[buildZoneMap]]) and
     * merging ([[mergeZoneMaps]] — min/min, max/max, count-sum; gated
@@ -72,13 +72,11 @@ object Skipping {
   def zoneMapArtifactFolded(spark: SparkSession, name: String,
       shardDirs: Seq[String], partCol: String, partSql: String,
       statCols: Seq[String]): DataFrame = {
-    val params = s"part=$partCol<-$partSql stats=${statCols.mkString("+")}"
-    val dir = zoneMapFoldDir(name, params)
     def load(sd: String) = Tables.documents(spark, sd)
       .withColumn(partCol, expr(partSql))
-    val shardFps = Artifacts.shardFingerprints(shardDirs, "documents")
-    val stamp = Artifacts.classStamp(zoneMapStamp)
-    Artifacts.serveFoldedShards(spark, dir, params, stamp, shardFps)(
+    zoneMapFoldLineage(name, partCol, partSql, statCols).serveFolded(spark,
+        zoneMapParams(partCol, partSql, statCols),
+        Artifacts.shardFingerprints(shardDirs, "documents"))(
       buildZoneMap(shardDirs.map(load).reduce(_ union _), partCol, statCols)) {
       (oldMap, _, deltaDirs) =>
         mergeZoneMaps(oldMap +:
@@ -94,20 +92,15 @@ object Skipping {
     "graft/functions/Theta", "graft/functions/Sketch", "graft/functions/SketchAgg")
     .flatMap(c => Seq(s"/$c$$.class", s"/$c.class"))
 
-  /** Whether a [[zoneMapArtifactFolded]] lineage is published. */
-  def zoneMapFoldedExists(name: String, partCol: String, partSql: String,
-      statCols: Seq[String]): Boolean =
-    Artifacts.foldedShardsExists(zoneMapFoldDir(name,
-      s"part=$partCol<-$partSql stats=${statCols.mkString("+")}"))
+  /** The lineage of [[zoneMapArtifactFolded]] for corpus `name`. */
+  def zoneMapFoldLineage(name: String, partCol: String, partSql: String,
+      statCols: Seq[String]): Artifacts.Lineage =
+    Artifacts.Lineage("zonemap_fold",
+      name + "|" + zoneMapParams(partCol, partSql, statCols), zoneMapStamp)
 
-  /** Last publication's provenance for a zone-map fold lineage. */
-  def zoneMapFoldedProvenance(name: String, partCol: String, partSql: String,
-      statCols: Seq[String]): Option[String] =
-    Artifacts.foldedShardsProvenance(zoneMapFoldDir(name,
-      s"part=$partCol<-$partSql stats=${statCols.mkString("+")}"))
-
-  private def zoneMapFoldDir(name: String, params: String): String =
-    Artifacts.lineageDir("zonemap_fold", name + "|" + params)
+  private def zoneMapParams(partCol: String, partSql: String,
+      statCols: Seq[String]): String =
+    s"part=$partCol<-$partSql stats=${statCols.mkString("+")}"
 
   /** Partition values whose zones MIGHT contain a row with
     * `statCol ∈ [lo, hi]` — the driver-side skip decision (zone-map

@@ -22,7 +22,7 @@ object Hygiene {
   // repeated builds reuse the same path instead of leaking a fresh
   // temp tree per bench iteration
   private[graft] def pqScratch(d: String): String =
-    graft.engine.Artifacts.lineageDir("pq_index", d)
+    graft.engine.Artifacts.Lineage("pq_index", d, Nil).dir
   private def pqIndexDir(s: SparkSession, d: String): String =
     pqIndexDirs.computeIfAbsent(d, _ => {
       val dir = pqScratch(d)
@@ -1104,7 +1104,7 @@ object Hygiene {
           graft.ann.PqIndex.sideConflict).map(_._2),
         "PropertySpec 'IVF-PQ ANN: recall with cell probing, scans only probed cells' — recall@10 >= 0.5 + PartitionFilters plan gate")),
     // the PQ index maintained as a FOLDED ARTIFACT over embedding
-    // shards (sixth stored model, custom layout): base index trained
+    // shards (custom layout): base index trained
     // and encoded over shards {0,1} on first contact; shard 2 folds in
     // by encoding ONLY its vectors under the PUBLISHED quantizer (the
     // append contract) — delta-sized work, per-shard immutable code
@@ -1114,13 +1114,9 @@ object Hygiene {
     QuerySpec("ann_pq_topk_folded", (s, d) => {
       val shards = graft.dedup.Dedup.ensureEmbShards(s, d, 3)
       val name = "emb_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.ann.PqIndex.foldedIndexExists(name))
-        // Seq(-1L) resolves no query vector, so the bootstrap publishes
-        // the base index without paying a throwaway ADC serve
-        graft.ann.PqIndex.foldedIndexServe(s, name, shards.take(2),
-          Seq(-1L), 1).count()
-      graft.ann.PqIndex.foldedIndexServe(s, name, shards,
-        Seq(0L, 1L, 2L, 3L, 4L), 10, nprobe = 6)
+      seededFold(graft.ann.PqIndex.foldedLineage(name), shards)(
+        graft.ann.PqIndex.foldedIndexServe(s, name, _,
+          Seq(0L, 1L, 2L, 3L, 4L), 10, nprobe = 6))
     },
       // the folded-index serve renders from ITS OWN stash — the folded
       // quantizer trains on the shard union and need not be bit-equal

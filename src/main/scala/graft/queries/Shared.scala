@@ -15,6 +15,18 @@ object Shared {
   private[queries] def emb(s: SparkSession, d: String)  = Tables.embeddings(s, d)
   private[queries] def ev(s: SparkSession, d: String)   = Tables.events(s, d)
 
+  /** `serve(shards)` for a folded model, its base published over the
+    * first two shards whenever `lineage` holds nothing the full list
+    * can fold onto (first contact, or a publication by other bytecode),
+    * so the result never depends on what the artifact root held before:
+    * the PQ quantizer, for one, is trained on the base shards. Folded
+    * serves publish before they return, so the seed is never read. */
+  private[queries] def seededFold[T](lineage: graft.engine.Artifacts.Lineage,
+      shards: Seq[String])(serve: Seq[String] => T): T = {
+    if (!lineage.foldsOnto(shards)) serve(shards.take(2))
+    serve(shards)
+  }
+
   private[queries] val sumQty  = "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)"
   private[queries] val sumPrice = "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)"
   // Greedy longest-match subword counts per doc (recursive CTE): tokens

@@ -504,10 +504,8 @@ object Similarity {
     QuerySpec("dedup_clusters_incremental", (s, d) => {
       val shards = graft.dedup.Dedup.ensureDocShards(s, d, 3)
       val name = "docs_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.dedup.Dedup.foldedArtifactExists(name))
-        graft.dedup.Dedup.clusterMapArtifactFolded(s, name, shards.take(2))
-          .count()
-      graft.dedup.Dedup.clusterMapArtifactFolded(s, name, shards)
+      seededFold(graft.dedup.Dedup.clusterMapFoldLineage(name), shards)(
+        graft.dedup.Dedup.clusterMapArtifactFolded(s, name, _))
     },
       // fold ≡ full-mine: the incrementally-folded map over the 3-shard
       // split must equal CC over the WHOLE table's pair mining — the
@@ -515,7 +513,7 @@ object Similarity {
       // (lost cross-shard pair, stale stored edge) breaks the value hash
       Oracle((ccCte +
       "\nSELECT node AS doc_id, cluster_id FROM cc"))),
-    // the SECOND folded model (r15): the line-dedup state maintained
+    // the line-dedup state as a folded model (r15), maintained
     // incrementally over a 3-shard split of the NL-PLANTED corpus (the
     // planted boilerplate lines span all three doc_id-mod-3 residues,
     // so the fold genuinely merges cross-shard censuses) — base state
@@ -526,10 +524,8 @@ object Similarity {
     QuerySpec("text_boilerplate_folded", (s, d) => {
       val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.nl.inputDir(s, d), 3)
       val name = "docsnl_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.text.TextAnalysis.boilerplateFoldedExists(name))
-        graft.text.TextAnalysis.boilerplateStateArtifactFolded(
-          s, name, shards.take(2)).count()
-      graft.text.TextAnalysis.boilerplateStateArtifactFolded(s, name, shards)
+      seededFold(graft.text.TextAnalysis.boilerplateFoldLineage(name), shards)(
+        graft.text.TextAnalysis.boilerplateStateArtifactFolded(s, name, _))
         .filter(col("n_docs") >= 2)
     },
       // folded line state ≡ the whole nl-corpus census (the
@@ -554,11 +550,9 @@ object Similarity {
     QuerySpec("dedup_survivors_incremental", (s, d) => {
       val shards = graft.dedup.Dedup.ensureDocShards(s, d, 3)
       val name = "docs_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.dedup.Dedup.foldedArtifactExists(name))
-        graft.dedup.Dedup.clusterMapArtifactFolded(s, name, shards.take(2))
-          .count()
       graft.dedup.Dedup.survivorsFromClusters(docs(s, d),
-        graft.dedup.Dedup.clusterMapArtifactFolded(s, name, shards))
+        seededFold(graft.dedup.Dedup.clusterMapFoldLineage(name), shards)(
+          graft.dedup.Dedup.clusterMapArtifactFolded(s, name, _)))
         .select(col("doc_id"))
     },
       // served from the FOLDED incremental map: fold ≡ full-mine, so the

@@ -215,9 +215,8 @@ object Sources {
       Oracle("""SELECT lang, count(*) AS cnt, CAST(sum(n_chars) AS BIGINT) AS total_chars
         |FROM documents WHERE doc_id BETWEEN 100 AND 299
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
-    // the zone-map manifest maintained as a FOLDED ARTIFACT (fifth
-    // stored model — the Delta/Iceberg stats-file posture made
-    // incremental): per-shard mini-manifests fold by the exact
+    // the zone-map manifest maintained as a FOLDED ARTIFACT (the
+    // Delta/Iceberg stats-file posture made incremental): per-shard mini-manifests fold by the exact
     // (min, max, count-sum) merge, never rescanning published shards;
     // the skip decision reads the STORED manifest. Conservative skip ⇒
     // hash-equals the full scan — the zonemap_skip oracle verbatim
@@ -226,11 +225,11 @@ object Sources {
       val shards = graft.dedup.Dedup.ensureDocShards(s, d, 3)
       val name = "docs_mod3_" + Integer.toHexString(d.hashCode)
       val partSql = "CAST(floor(doc_id / 200) AS BIGINT)"
-      if (!Skipping.zoneMapFoldedExists(name, "batch", partSql, Seq("doc_id")))
-        Skipping.zoneMapArtifactFolded(s, name, shards.take(2), "batch",
-          partSql, Seq("doc_id")).count()
-      val zm = Skipping.zoneMapArtifactFolded(s, name, shards, "batch",
-        partSql, Seq("doc_id"))
+      val zm = seededFold(
+          Skipping.zoneMapFoldLineage(name, "batch", partSql, Seq("doc_id")),
+          shards)(
+        Skipping.zoneMapArtifactFolded(s, name, _, "batch", partSql,
+          Seq("doc_id")))
       val parts = Skipping.candidatePartitions(zm, "batch", "doc_id",
         lit(100L), lit(299L))
       val dd = shards.map(sd => graft.engine.Tables.documents(s, sd))

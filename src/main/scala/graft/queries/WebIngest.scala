@@ -79,16 +79,11 @@ object WebIngest {
     "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class") ++
     Fixtures.buildStamp
 
-  private def boilerplateListArtifact(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.engine.Artifacts.lineageDir("boilerplate_list",
-      d + "|min2-raw")
-    val stamp = graft.engine.Artifacts.classStamp(boilerplateStamp)
-    val fp = graft.engine.Artifacts.md5Hex("min2-raw|" + stamp + "|" +
-      graft.engine.Artifacts.tableListing(
-        new java.io.File(d, "documents.parquet")))
-    graft.engine.Artifacts.serveOrBuild(s, dir, fp)(
-      graft.text.TextAnalysis.boilerplateLines(Fixtures.nl.df(s, d), 2))
-  }
+  private def boilerplateListArtifact(s: SparkSession, d: String): DataFrame =
+    graft.engine.Artifacts.Lineage("boilerplate_list", d + "|min2-raw",
+        boilerplateStamp)
+      .serve(s, "min2-raw", d, "documents")(
+        graft.text.TextAnalysis.boilerplateLines(Fixtures.nl.df(s, d), 2))
 
   // the domains `text_url_filter` blocks in the planted url fixture
   private[graft] val blockedDomains =
@@ -820,11 +815,9 @@ object WebIngest {
     QuerySpec("text_strip_boilerplate_folded", (s, d) => {
       val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.nl.inputDir(s, d), 3)
       val name = "docsnl_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.text.TextAnalysis.boilerplateFoldedExists(name))
-        graft.text.TextAnalysis.boilerplateStateArtifactFolded(
-          s, name, shards.take(2)).count()
       graft.text.TextAnalysis.stripKnownBoilerplate(Fixtures.nl.df(s, d),
-        graft.text.TextAnalysis.boilerplateStateArtifactFolded(s, name, shards)
+        seededFold(graft.text.TextAnalysis.boilerplateFoldLineage(name), shards)(
+          graft.text.TextAnalysis.boilerplateStateArtifactFolded(s, name, _))
           .filter(col("n_docs") >= 2))
     },
       // served from the FOLDED line state (folded census ≡ whole-corpus
@@ -1337,7 +1330,7 @@ object WebIngest {
       // whole table directly — equality IS the storable-state claim
       Oracle(lmModelTrainSql)),
     // the LM count state maintained as a FOLDED ARTIFACT over the
-    // 3-shard split (serveFoldedShards, third stored model): base state
+    // 3-shard split (serveFoldedShards): base state
     // over shards {0,1} on first contact, shard 2's counts folded in by
     // exact sum — only the delta is ever scanned; the model derives
     // from the SERVED state, bit-equal to batch training on the union,
@@ -1346,11 +1339,9 @@ object WebIngest {
     QuerySpec("lm_model_folded", (s, d) => {
       val shards = graft.dedup.Dedup.ensureDocShards(s, d, 3)
       val name = "docs_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.text.TextAnalysis.bigramFoldedExists(name))
-        graft.text.TextAnalysis.bigramStateArtifactFolded(s, name,
-          shards.take(2)).count()
       graft.text.TextAnalysis.bigramModelFromStates(Seq(
-        graft.text.TextAnalysis.bigramStateArtifactFolded(s, name, shards)))
+        seededFold(graft.text.TextAnalysis.bigramFoldLineage(name), shards)(
+          graft.text.TextAnalysis.bigramStateArtifactFolded(s, name, _))))
     },
       // folded-artifact form: fold ≡ union-train, same batch oracle
       Oracle(lmModelTrainSql)),
@@ -2023,7 +2014,7 @@ object WebIngest {
       // the fold is associative+commutative, so shard-split training
       // equals batch counting over the seed — the oracle is the batch
       Oracle(langidModelTrainSql)),
-    // the langid model state as a FOLDED ARTIFACT (fourth stored model):
+    // the langid model state as a FOLDED ARTIFACT:
     // the ml corpus materialized once as an input dir, sharded mod 3;
     // base state over shards {0,1}, shard 2's seed counts folded by
     // exact sum; the seed predicate is part of the artifact identity
@@ -2032,11 +2023,9 @@ object WebIngest {
     QuerySpec("langid_model_folded", (s, d) => {
       val shards = graft.dedup.Dedup.ensureDocShards(s, Fixtures.ml.inputDir(s, d), 3)
       val name = "docsml_mod3_" + Integer.toHexString(d.hashCode)
-      if (!graft.text.TextAnalysis.langidFoldedExists(name, langidSeedSql))
-        graft.text.TextAnalysis.langidStateArtifactFolded(s, name,
-          shards.take(2), langidSeedSql).count()
-      graft.text.TextAnalysis.langidStateArtifactFolded(s, name, shards,
-        langidSeedSql)
+      seededFold(graft.text.TextAnalysis.langidFoldLineage(name, langidSeedSql),
+        shards)(graft.text.TextAnalysis.langidStateArtifactFolded(s, name, _,
+          langidSeedSql))
     },
       // folded-artifact form: same equality claim, same batch oracle —
       // any fold error (double-counted shard, stale stored state, lost

@@ -252,8 +252,8 @@ object Sources {
     * same published model; the default driver-local tmpdir is only
     * right for single-node use. Artifact writers publish atomically
     * (data moved into a fingerprint-addressed dir first, marker written
-    * last — see Dedup.publishArtifact), so a crash mid-write can never
-    * leave a readable-but-partial artifact behind the marker.
+    * last — see [[graft.engine.Artifacts]]), so a crash mid-write can
+    * never leave a readable-but-partial artifact behind the marker.
     */
   def rtDir(name: String): String = {
     val root = sys.env.getOrElse("SPARK_GRAFT_RT_DIR",

@@ -832,7 +832,7 @@ object Events {
     * ([[graft.text.TextAnalysis.bigramStateArtifactFolded]]) is
     * re-served over the grown list — the stored artifact folds in
     * JUST the new shard (delta-sized work per batch, never a re-scan
-    * of published data; the `_PROVENANCE` receipt proves it), and
+    * of published data; the lineage's provenance receipt proves it), and
     * `onState` sees the SERVED state after each batch, bit-equal to
     * batch counting over everything ingested so far (the fold
     * contract, gated in StreamingSpec).

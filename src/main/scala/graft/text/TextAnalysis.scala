@@ -2602,14 +2602,11 @@ object TextAnalysis {
     * serve nor poison the raw-table model. */
   def trigramModelArtifact(spark: org.apache.spark.sql.SparkSession,
       inputDir: String): (DataFrame, DataFrame, DataFrame, Long) = {
-    val dir = graft.engine.Artifacts.lineageDir("lm_backoff",
-      inputDir + "|trigram-v1")
-    val stamp = graft.engine.Artifacts.classStamp(Seq(
-      "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class"))
-    val fp = "trigram-v1|" + stamp + "|" + graft.engine.Artifacts
-      .tableListing(new java.io.File(inputDir, "documents.parquet"))
+    val lineage = graft.engine.Artifacts.Lineage("lm_backoff",
+      inputDir + "|trigram-v1", modelClasses)
+    val fp = lineage.fingerprint("trigram-v1", inputDir, "documents")
     val nullS = lit(null).cast("string")
-    val art = graft.engine.Artifacts.serveOrBuild(spark, dir, fp) {
+    val art = lineage.serve(spark, "trigram-v1", inputDir, "documents") {
       val (s3, s2, s1, oov) = trigramBackoffModel(
         graft.engine.Tables.documents(spark, inputDir), materialize = false)
       s3.select(lit(3).as("level"), col("w1"), col("w2"), col("w3"),
@@ -2641,6 +2638,11 @@ object TextAnalysis {
   private val trigramOovMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
+  /** The class files whose bytecode stamps every model this object
+    * mines. */
+  private val modelClasses: Seq[String] =
+    Seq("/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class")
+
   /** CCNet head/middle/tail selection (the bucketing step that follows
     * the perplexity filter, Wenzek et al. 2020): split each language's
     * documents into surprisal tertiles — "head" = most fluent third,
@@ -2667,17 +2669,12 @@ object TextAnalysis {
     * `inputDir` (the structural-contract rule all model artifacts
     * follow). */
   def bigramModelArtifact(spark: org.apache.spark.sql.SparkSession,
-      inputDir: String): DataFrame = {
-    val dir = graft.engine.Artifacts.lineageDir("ccnet_lm",
-      inputDir + "|bigram-model-v1")
-    val stamp = graft.engine.Artifacts.classStamp(Seq(
-      "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class"))
-    val fp = "bigram-model-v1|" + stamp + "|" + graft.engine.Artifacts
-      .tableListing(new java.io.File(inputDir, "documents.parquet"))
-    graft.engine.Artifacts.serveOrBuild(spark, dir, fp) {
-      bigramModel(graft.engine.Tables.documents(spark, inputDir))
-    }
-  }
+      inputDir: String): DataFrame =
+    graft.engine.Artifacts.Lineage("ccnet_lm", inputDir + "|bigram-model-v1",
+        modelClasses)
+      .serve(spark, "bigram-model-v1", inputDir, "documents") {
+        bigramModel(graft.engine.Tables.documents(spark, inputDir))
+      }
 
   /** [[ccnetBuckets]] under a caller-supplied frozen bigram model (the
     * artifact-served form; scoring + tertile selection unchanged). */
@@ -3372,10 +3369,10 @@ object TextAnalysis {
         min(col("keeper")).as("keeper"))
 
   /** The line-dedup state as an INCREMENTALLY-MAINTAINED folded
-    * artifact over an append-only shard list — the second model on the
-    * [[graft.engine.Artifacts.serveFoldedShards]] pattern (beside the
-    * cluster map): the published state is maintained by scanning ONLY
-    * newly-arrived shards and merging their states into the stored one
+    * artifact over an append-only shard list
+    * ([[graft.engine.Artifacts.serveFoldedShards]]): the published state
+    * is maintained by scanning ONLY newly-arrived shards and merging
+    * their states into the stored one
     * ((sum, sum, min) per line key — exact for disjoint shards, the
     * ingest-sharding contract), never re-scanning published data.
     * Consumers filter `n_docs >= minDocs` for the boilerplate list.
@@ -3385,15 +3382,10 @@ object TextAnalysis {
   def boilerplateStateArtifactFolded(spark: org.apache.spark.sql.SparkSession,
       name: String, shardDirs: Seq[String],
       normalized: Boolean = false): DataFrame = {
-    val params = s"norm$normalized"
-    val dir = boilerplateFoldDir(name, params)
     def load(sd: String) = graft.engine.Tables.documents(spark, sd)
-    val shardFps = graft.engine.Artifacts.shardFingerprints(
-      shardDirs, "documents")
-    val stamp = graft.engine.Artifacts.classStamp(Seq(
-      "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class"))
-    graft.engine.Artifacts.serveFoldedShards(spark, dir, params, stamp,
-      shardFps)(
+    boilerplateFoldLineage(name, normalized).serveFolded(spark,
+        s"norm$normalized",
+        graft.engine.Artifacts.shardFingerprints(shardDirs, "documents"))(
       boilerplateState(shardDirs.map(load).reduce(_ union _), normalized)) {
       (oldState, _, deltaDirs) =>
         mergeBoilerplateStates(oldState +:
@@ -3401,27 +3393,16 @@ object TextAnalysis {
     }
   }
 
-  /** Whether a [[boilerplateStateArtifactFolded]] lineage is published —
-    * callers seed a base state only on first contact. */
-  def boilerplateFoldedExists(name: String,
-      normalized: Boolean = false): Boolean =
-    graft.engine.Artifacts.foldedShardsExists(
-      boilerplateFoldDir(name, s"norm$normalized"))
-
-  /** Last publication's provenance for a boilerplate fold lineage. */
-  def boilerplateFoldedProvenance(name: String,
-      normalized: Boolean = false): Option[String] =
-    graft.engine.Artifacts.foldedShardsProvenance(
-      boilerplateFoldDir(name, s"norm$normalized"))
-
-  private def boilerplateFoldDir(name: String, params: String): String =
-    graft.engine.Artifacts.lineageDir("boilerplate_state_fold",
-      name + "|" + params)
+  /** The lineage of [[boilerplateStateArtifactFolded]] for corpus
+    * `name`. */
+  def boilerplateFoldLineage(name: String,
+      normalized: Boolean = false): graft.engine.Artifacts.Lineage =
+    graft.engine.Artifacts.Lineage("boilerplate_state_fold",
+      s"$name|norm$normalized", modelClasses)
 
   /** The bigram-LM count state as an incrementally-maintained folded
-    * artifact over an append-only shard list — the THIRD model on the
-    * [[graft.engine.Artifacts.serveFoldedShards]] pattern (after the
-    * cluster map and the boilerplate line state): a new corpus shard
+    * artifact over an append-only shard list
+    * ([[graft.engine.Artifacts.serveFoldedShards]]): a new corpus shard
     * folds in by scanning ONLY the delta ([[bigramCountState]]) and
     * merging counts by exact sum ([[mergeBigramStates]]), never
     * re-scanning published shards. [[bigramModelFromStates]] over the
@@ -3430,14 +3411,9 @@ object TextAnalysis {
     */
   def bigramStateArtifactFolded(spark: org.apache.spark.sql.SparkSession,
       name: String, shardDirs: Seq[String]): DataFrame = {
-    val dir = lmFoldDir(name)
     def load(sd: String) = graft.engine.Tables.documents(spark, sd)
-    val shardFps = graft.engine.Artifacts.shardFingerprints(
-      shardDirs, "documents")
-    val stamp = graft.engine.Artifacts.classStamp(Seq(
-      "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class"))
-    graft.engine.Artifacts.serveFoldedShards(spark, dir, "bigram-v1", stamp,
-      shardFps)(
+    bigramFoldLineage(name).serveFolded(spark, "bigram-v1",
+        graft.engine.Artifacts.shardFingerprints(shardDirs, "documents"))(
       bigramCountState(shardDirs.map(load).reduce(_ union _))) {
       (oldState, _, deltaDirs) =>
         mergeBigramStates(oldState +:
@@ -3445,20 +3421,14 @@ object TextAnalysis {
     }
   }
 
-  /** Whether a [[bigramStateArtifactFolded]] lineage is published. */
-  def bigramFoldedExists(name: String): Boolean =
-    graft.engine.Artifacts.foldedShardsExists(lmFoldDir(name))
-
-  /** Last publication's provenance for an LM-state fold lineage. */
-  def bigramFoldedProvenance(name: String): Option[String] =
-    graft.engine.Artifacts.foldedShardsProvenance(lmFoldDir(name))
-
-  private def lmFoldDir(name: String): String =
-    graft.engine.Artifacts.lineageDir("lm_state_fold", name + "|bigram-v1")
+  /** The lineage of [[bigramStateArtifactFolded]] for corpus `name`. */
+  def bigramFoldLineage(name: String): graft.engine.Artifacts.Lineage =
+    graft.engine.Artifacts.Lineage("lm_state_fold", name + "|bigram-v1",
+      modelClasses)
 
   /** The langid-model count state as an incrementally-maintained folded
-    * artifact — the FOURTH folded model: per-shard (lang, gram, c) seed
-    * counts fold by exact sum ([[langidModelFromStates]]); the seed
+    * artifact: per-shard (lang, gram, c) seed counts fold by exact sum
+    * ([[langidModelFromStates]]); the seed
     * predicate (which rows are TRUSTED labels) is part of the artifact
     * identity, so changing the trust contract re-mines. Derived scorers
     * over the served state are bit-equal to batch training by
@@ -3466,15 +3436,10 @@ object TextAnalysis {
     */
   def langidStateArtifactFolded(spark: org.apache.spark.sql.SparkSession,
       name: String, shardDirs: Seq[String], seedSql: String): DataFrame = {
-    val params = "langid-v1 seed=" + seedSql
-    val dir = langidFoldDir(name, params)
     def load(sd: String) = graft.engine.Tables.documents(spark, sd)
-    val shardFps = graft.engine.Artifacts.shardFingerprints(
-      shardDirs, "documents")
-    val stamp = graft.engine.Artifacts.classStamp(Seq(
-      "/graft/text/TextAnalysis$.class", "/graft/text/TextAnalysis.class"))
-    graft.engine.Artifacts.serveFoldedShards(spark, dir, params, stamp,
-      shardFps)(
+    langidFoldLineage(name, seedSql).serveFolded(spark,
+        "langid-v1 seed=" + seedSql,
+        graft.engine.Artifacts.shardFingerprints(shardDirs, "documents"))(
       langidCountState(shardDirs.map(load).reduce(_ union _), expr(seedSql))) {
       (oldState, _, deltaDirs) =>
         langidModelFromStates(oldState +:
@@ -3482,18 +3447,12 @@ object TextAnalysis {
     }
   }
 
-  /** Whether a [[langidStateArtifactFolded]] lineage is published. */
-  def langidFoldedExists(name: String, seedSql: String): Boolean =
-    graft.engine.Artifacts.foldedShardsExists(
-      langidFoldDir(name, "langid-v1 seed=" + seedSql))
-
-  /** Last publication's provenance for a langid-state fold lineage. */
-  def langidFoldedProvenance(name: String, seedSql: String): Option[String] =
-    graft.engine.Artifacts.foldedShardsProvenance(
-      langidFoldDir(name, "langid-v1 seed=" + seedSql))
-
-  private def langidFoldDir(name: String, params: String): String =
-    graft.engine.Artifacts.lineageDir("langid_state_fold", name + "|" + params)
+  /** The lineage of [[langidStateArtifactFolded]] for corpus `name`
+    * under seed predicate `seedSql`. */
+  def langidFoldLineage(name: String,
+      seedSql: String): graft.engine.Artifacts.Lineage =
+    graft.engine.Artifacts.Lineage("langid_state_fold",
+      name + "|langid-v1 seed=" + seedSql, modelClasses)
 
   /** Strip KNOWN boilerplate lines — the serve half of the line-dedup
     * train/serve split (detection: [[boilerplateLines]]). Unlike the

@@ -62,6 +62,25 @@ class LayoutSpec extends SparkSpec {
       s"$root: ${files.mkString(", ")}")
   }
 
+  test("only engine/Artifacts.scala names the artifact files and identity rules") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val owner = root.resolve("graft/engine/Artifacts.scala")
+    val names = Seq("_FINGERPRINT", "_PROVENANCE", "classStamp", "tableListing",
+      "lineageDir")
+    val files = java.nio.file.Files.walk(root)
+    val offenders =
+      try files.iterator.asScala
+        .filter(p => p.toString.endsWith(".scala") && p != owner)
+        .flatMap { p =>
+          val src = java.nio.file.Files.readString(p)
+          names.filter(src.contains).map(n => s"$p: $n")
+        }.toList
+      finally files.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("bucketed tables join without a shuffle") {
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val o = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")

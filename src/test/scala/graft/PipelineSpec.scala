@@ -180,13 +180,13 @@ class PipelineSpec extends SparkSpec {
     // the cross-shard chain {3,4,5} must have collapsed to one cluster
     assert(Set(3L, 4L, 5L).map(id => folded.find(_._1 == id).map(_._2))
       .flatten == Set(3L))
-    val prov = Dedup.foldedArtifactProvenance(name, 3, 16, 8, 0.5)
+    val prov = Dedup.clusterMapFoldLineage(name, 3, 16, 8, 0.5).provenance
     assert(prov.exists(_.startsWith("fold +1 shard(s) onto 2")), prov)
     // serving again is a pure read: provenance unchanged, same map
     val again = Dedup.clusterMapArtifactFolded(spark, name, shards, 3, 16, 8, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(again == folded &&
-      Dedup.foldedArtifactProvenance(name, 3, 16, 8, 0.5) == prov)
+      Dedup.clusterMapFoldLineage(name, 3, 16, 8, 0.5).provenance == prov)
   }
 
   test("3-shard fold is order-independent: any base pair + folded third " +
@@ -226,7 +226,7 @@ class PipelineSpec extends SparkSpec {
           order.map(shards))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
-      assert(TextAnalysis.boilerplateFoldedProvenance(name)
+      assert(TextAnalysis.boilerplateFoldLineage(name).provenance
         .exists(_.startsWith("fold +1 shard(s) onto 2")))
       m
     }
@@ -248,7 +248,7 @@ class PipelineSpec extends SparkSpec {
         TextAnalysis.bigramStateArtifactFolded(spark, name, shards)))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(folded == batch && folded.nonEmpty)
-    assert(TextAnalysis.bigramFoldedProvenance(name)
+    assert(TextAnalysis.bigramFoldLineage(name).provenance
       .exists(_.startsWith("fold +1 shard(s) onto 2")))
   }
 
@@ -268,7 +268,7 @@ class PipelineSpec extends SparkSpec {
     val batch = TextAnalysis.bigramCountState(docsDF(texts))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(m == batch && m.nonEmpty)
-    assert(TextAnalysis.bigramFoldedProvenance(name)
+    assert(TextAnalysis.bigramFoldLineage(name).provenance
       .exists(_.startsWith("full mine of 3")))
   }
 
@@ -294,12 +294,12 @@ class PipelineSpec extends SparkSpec {
       .langidStateArtifactFolded(spark, name, shards, seed)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(folded == batch && folded.nonEmpty)
-    assert(TextAnalysis.langidFoldedProvenance(name, seed)
+    assert(TextAnalysis.langidFoldLineage(name, seed).provenance
       .exists(_.startsWith("fold +1 shard(s) onto 2")))
     // the untrusted row's grams must not be in the model
     assert(!folded.exists(_._1 == "xx"))
     // a DIFFERENT seed predicate is a different lineage — no publication
-    assert(!TextAnalysis.langidFoldedExists(name, "lang = 'en'"))
+    assert(!TextAnalysis.langidFoldLineage(name, "lang = 'en'").exists)
   }
 
   test("dedup threshold curve and source matrix conserve the pair set") {
@@ -363,8 +363,8 @@ class PipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .toSet
     assert(folded.nonEmpty)
-    assert(graft.ann.PqIndex.foldedIndexProvenance(name, m = 4, ksub = 4,
-      nlist = 4).exists(_.startsWith("fold +1 shard(s) onto 2")))
+    assert(graft.ann.PqIndex.foldedLineage(name, m = 4, ksub = 4,
+      nlist = 4).provenance.exists(_.startsWith("fold +1 shard(s) onto 2")))
     // parity with the classic build+append path over the same shards:
     // train on the base union, append the delta, serve — same quantizer
     // identity, same codes, same decisions
@@ -409,8 +409,8 @@ class PipelineSpec extends SparkSpec {
     // the mod-3 shards interleave every batch, so the fold genuinely
     // merges min/max/count across shard mini-manifests
     assert(folded == batch && folded.nonEmpty)
-    assert(Skipping.zoneMapFoldedProvenance(name, "batch", partSql,
-      Seq("doc_id")).exists(_.startsWith("fold +1 shard(s) onto 2")))
+    assert(Skipping.zoneMapFoldLineage(name, "batch", partSql,
+      Seq("doc_id")).provenance.exists(_.startsWith("fold +1 shard(s) onto 2")))
   }
 
   test("the folded zone-map stamp covers the builder and the theta classes") {
@@ -557,7 +557,7 @@ class PipelineSpec extends SparkSpec {
       Dedup.minhashLshPairs(docsDF(texts), 3, 16, 8, 0.5))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(m == full)
-    assert(Dedup.foldedArtifactProvenance(name, 3, 16, 8, 0.5)
+    assert(Dedup.clusterMapFoldLineage(name, 3, 16, 8, 0.5).provenance
       .exists(_.startsWith("full mine of 3")))
   }
 

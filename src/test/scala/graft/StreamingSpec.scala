@@ -1197,7 +1197,7 @@ class StreamingSpec extends SparkSpec {
     assert(snaps.last.nonEmpty)
     // the ingest path FOLDED (delta-sized) rather than re-mined: the
     // final publication's provenance says fold, not full
-    assert(graft.text.TextAnalysis.bigramFoldedProvenance(name)
+    assert(graft.text.TextAnalysis.bigramFoldLineage(name).provenance
       .exists(_.startsWith("fold +1 shard(s) onto 2")))
   }
 
