@@ -852,7 +852,10 @@ object Dedup {
     * fingerprint, parts): the shard set is fingerprint-addressed and
     * published marker-last, so repeated calls are a file stat and
     * re-runs never churn shard mtimes (which would needlessly invalidate
-    * downstream folded artifacts).
+    * downstream folded artifacts). The shard lineage is keyed by the
+    * input's stable part ([[graft.engine.Artifacts.stableInput]]), so
+    * the shards of a superseded input set are superseded, and collected,
+    * with it.
     */
   def ensureDocShards(spark: org.apache.spark.sql.SparkSession,
       inputDir: String, parts: Int): Seq[String] =
@@ -868,7 +871,7 @@ object Dedup {
       idCol: String): Seq[String] = {
     val set = graft.engine.Artifacts.Lineage(
         if (table == "documents") "doc_shards" else s"${table}_shards",
-        inputDir + "|p" + parts, Nil)
+        graft.engine.Artifacts.stableInput(inputDir) + "|p" + parts, Nil)
       .serveSet(s"v1|p$parts", inputDir, table) {
         val rows = graft.engine.Tables.table(spark, inputDir, table)
         (0 until parts).map(i =>

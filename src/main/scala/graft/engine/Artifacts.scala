@@ -295,8 +295,10 @@ object Artifacts {
     /** A set of named datasets (relative paths such as
       * `shard_0/documents.parquet`) derived from the `table` of
       * `inputDir`, published once per [[fingerprint]] as one
-      * `set_<fp>` dir, marker last; a superseded set is collected like
-      * any superseded dataset. Returns the set's dir. */
+      * `set_<fp>` dir, marker last. A superseded set is collected like
+      * any superseded dataset, except that every serve sweeps, not only
+      * a publication, so a set whose grace window has passed goes at
+      * the next serve. Returns the set's dir. */
     def serveSet(params: String, inputDir: String, table: String)(
         datasets: => Seq[(String, DataFrame)]): String = {
       val fp = fingerprint(params, inputDir, table)
@@ -307,8 +309,8 @@ object Artifacts {
             df.write.mode("overwrite").parquet(tmp.resolve(name).toString)
           })
           publishMarker(dir, fp)
-          gcSuperseded(dir, Seq(set))
         }
+        gcSuperseded(dir, Seq(set))
       }
       set.toString
     }
@@ -322,6 +324,17 @@ object Artifacts {
     def commit(content: String, keep: Seq[java.nio.file.Path],
         folded: Boolean, nOld: Int, nNew: Int): Unit =
       commitFold(dir, content, keep, folded, nOld, nNew)
+  }
+
+  /** The part of an input path that outlives a new publication: a
+    * [[Lineage.serveSet]] result's `set_<fp>` dir stands for its
+    * lineage's dir, where a newer set replaces it; any other path is
+    * itself. A model derived from a set keys its own lineage by this,
+    * so its copy over a superseded set is superseded in turn. */
+  def stableInput(inputDir: String): String = {
+    val p = java.nio.file.Paths.get(inputDir)
+    if (p.getParent != null && p.getFileName.toString.startsWith("set_")) p.getParent.toString
+    else inputDir
   }
 
   private val buildStamps =

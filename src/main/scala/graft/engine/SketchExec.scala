@@ -1,30 +1,36 @@
 package graft.engine
 
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{MutableProjection, NamedExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, InterpretedOrdering, MutableProjection, NamedExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Final, Partial, PartialMerge}
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
-import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec, graftexec}
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec, graftexec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortBasedAggregationIterator}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{WindowEvaluatorFactory, WindowExec}
 import scala.collection.mutable
 
 /** Hillview's sketch protocol on Catalyst's own partial aggregates: a
   * sketch per leaf, merged by its monoid at the root, with no shuffle
   * (SURVEY §0; Hillview VLDB 2019 §7.1).
   *
-  * A sketch frame whose physical plan is `[Project]*` over a final
-  * aggregate over one exchange over a partial aggregate runs its partial
-  * side as ONE Spark job, planned without adaptive execution. Each
-  * finished partition's buffer rows reach the driver, where Spark's own
-  * merge code folds them into one buffer row per group (partial-merge
-  * mode while folding, final mode when a result is read), so driver
-  * state is O(groups) and the exchange, and AQE's second job, are never
-  * run. The result equals `df.collect()` as a multiset of rows with the
-  * same schema. A plan of any other shape is collected as it is.
+  * A sketch frame whose physical plan is a tail of projections and
+  * windows over a final aggregate over one exchange over a partial
+  * aggregate runs its partial side as ONE Spark job, planned without
+  * adaptive execution. Each finished partition's buffer rows reach the
+  * driver, where Spark's own merge code folds them into one buffer row
+  * per group (partial-merge mode while folding, final mode when a result
+  * is read), so driver state is O(groups) and the exchange, and AQE's
+  * second job, are never run. The tail runs on the driver over the final
+  * rows, as hillview's root finishes a histogram's CDF: a window sorts
+  * them by its own required order and evaluates with Spark's window
+  * evaluator, so the sort and exchange planned below it are skipped. The
+  * result equals `df.collect()` as a multiset of rows with the same
+  * schema. A plan of any other shape is collected as it is.
   */
 object SketchExec {
 
@@ -53,7 +59,9 @@ object SketchExec {
     }
   }
 
-  private final case class Shape(projects: Seq[ProjectExec], fin: BaseAggregateExec,
+  /** `tail` holds the projections and windows above `fin`, outermost
+    * first. */
+  private final case class Shape(tail: Seq[SparkPlan], fin: BaseAggregateExec,
       side: SparkPlan)
 
   private def unwrap(p: SparkPlan): SparkPlan = p match {
@@ -67,7 +75,9 @@ object SketchExec {
   // Grouping keys must be binary-stable, as the fold groups their bytes.
   private def split(plan: SparkPlan, prepared: Boolean): Option[Shape] = unwrap(plan) match {
     case p: ProjectExec if p.subqueries.isEmpty =>
-      split(p.child, prepared).map(s => s.copy(projects = p +: s.projects))
+      split(p.child, prepared).map(s => s.copy(tail = p +: s.tail))
+    case w: WindowExec if w.subqueries.isEmpty =>
+      split(belowWindow(w.child), prepared).map(s => s.copy(tail = w +: s.tail))
     case f: BaseAggregateExec if f.requiredChildDistributionExpressions.isDefined &&
         f.aggregateExpressions.forall(_.mode == Final) && f.subqueries.isEmpty &&
         f.groupingExpressions.forall(g => UnsafeRowUtils.isBinaryStable(g.dataType)) =>
@@ -77,6 +87,13 @@ object SketchExec {
       }
       side.collect { case s if isPartial(unwrap(s)) => Shape(Nil, f, s) }
     case _ => None
+  }
+
+  // what a window's input is sorted and moved by; the driver sorts itself
+  private def belowWindow(p: SparkPlan): SparkPlan = unwrap(p) match {
+    case s: SortExec => belowWindow(s.child)
+    case e: ShuffleExchangeExec => belowWindow(e.child)
+    case q => q
   }
 
   private def isPartial(p: SparkPlan): Boolean = p match {
@@ -89,7 +106,7 @@ object SketchExec {
       emit: (Double, Array[Row]) => Unit): Array[Row] = {
     val rdd = s.side.execute()
     val n = rdd.getNumPartitions
-    val fold = new Fold(s)
+    val fold = new Fold(s, df.sparkSession.sparkContext)
     val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
     def result(done: Int): Array[Row] = {
       val rows = fold.result().map(toRow)
@@ -120,8 +137,11 @@ object SketchExec {
   }
 
   /** The aggregate's state on the driver: one partial-format buffer row
-    * per group, folded by `SortBasedAggregationIterator`. */
-  private final class Fold(s: Shape) {
+    * per group, folded by `SortBasedAggregationIterator`, and the tail
+    * that turns it into result rows. The mutable projections the merge
+    * asks for, and the tail's steps, are built once per fold; only the
+    * iterator's own key and output projections are built per partition. */
+  private final class Fold(s: Shape, sc: SparkContext) {
     private val fin = s.fin
     // the final aggregate's merge expressions name its own copies of the
     // buffer attributes, so its input binds by position (SPARK-31620)
@@ -131,13 +151,15 @@ object SketchExec {
     }
     private val keys = UnsafeProjection.create(fin.groupingExpressions, input)
     private val merging = fin.aggregateExpressions.map(_.copy(mode = PartialMerge))
+    private val projections = mutable.HashMap.empty[(Seq[Expression], Seq[Attribute]), MutableProjection]
     private var state = Array.empty[InternalRow]
 
     private def aggregate(rows: Iterator[InternalRow], aggs: Seq[AggregateExpression],
         out: Seq[NamedExpression]) =
       new SortBasedAggregationIterator(0, fin.groupingExpressions, input, rows, aggs,
         fin.aggregateAttributes, fin.initialInputBufferOffset, out,
-        MutableProjection.create(_, _), fin.longMetric("numOutputRows"))
+        (e, a) => projections.getOrElseUpdate((e, a), MutableProjection.create(e, a)),
+        fin.longMetric("numOutputRows"))
 
     /** Merge one partition's buffers in. The iterator merges runs of
       * equal keys, so rows are first clustered by their key bytes. */
@@ -150,7 +172,26 @@ object SketchExec {
         fin.groupingExpressions.map(_.toAttribute)).map(_.copy()).toArray
     }
 
-    /** The final rows over the state, through the projections above the
+    // the tail, innermost step first: a projection maps each row; a
+    // window sorts the rows by its required order and evaluates them as
+    // one task's partition on the caller's thread
+    private val tail: Seq[Array[InternalRow] => Array[InternalRow]] = s.tail.reverse.map {
+      case p: ProjectExec =>
+        val proj = UnsafeProjection.create(p.projectList, p.child.output)
+        (in: Array[InternalRow]) => {
+          proj.initialize(0)
+          in.map(r => proj(r).copy())
+        }
+      case w: WindowExec =>
+        val order = new InterpretedOrdering(w.requiredChildOrdering.head, w.child.output)
+        val window = new WindowEvaluatorFactory(w.windowExpression, w.partitionSpec,
+          w.orderSpec, w.child.output, w.longMetric("spillSize"))
+        (in: Array[InternalRow]) => graftexec.onDriverTask(sc) {
+          window.createEvaluator().eval(0, in.sorted(order).iterator).map(_.copy()).toArray
+        }
+    }
+
+    /** The final rows over the state, through the tail above the
       * aggregate. With no input, a no-group aggregate still has its row. */
     def result(): Array[InternalRow] = {
       def it = aggregate(state.iterator, fin.aggregateExpressions, fin.resultExpressions)
@@ -158,14 +199,7 @@ object SketchExec {
         if (state.nonEmpty) it.map(_.copy()).toArray
         else if (fin.groupingExpressions.isEmpty) Array(it.outputForEmptyGroupingKeyWithoutInput())
         else Array.empty
-      s.projects.foldRight(rows) { (p, in) =>
-        if (in.isEmpty) in
-        else {
-          val proj = UnsafeProjection.create(p.projectList, p.child.output)
-          proj.initialize(0)
-          in.map(r => proj(r).copy())
-        }
-      }
+      tail.foldLeft(rows)((in, step) => if (in.isEmpty) in else step(in))
     }
   }
 }

@@ -309,14 +309,16 @@ class TargetRegistry(val spark: SparkSession) {
   }
 
   /** Abort a [[sketchIn]] group — the unsubscribe RPC. Cancels active
-    * jobs AND bars future ones in the group. A partial/final sketch runs
-    * as one job ([[SketchExec]]), but other gestures still run several
-    * (an adaptive collect runs one job per query stage, a saturated
-    * heavy-hitters summary is followed by its verify scan), and a
-    * cancellation that lands between two of them must still abort, not
-    * silently run the rest to completion — group ids are per-gesture,
-    * so the permanent bar is exactly the unsubscribe contract. Safe to
-    * call whether or not anything is running. */
+    * jobs AND bars future ones in the group. A partial/final sketch,
+    * with any projections or windows over it (histogram+CDF), runs as
+    * one job ([[SketchExec]]), but other gestures still run several (a
+    * limit over the aggregate, as in nextK, is an adaptive collect of
+    * one job per query stage; a saturated heavy-hitters summary is
+    * followed by its verify scan), and a cancellation that lands
+    * between two of them must still abort, not silently run the rest
+    * to completion — group ids are per-gesture, so the permanent bar is
+    * exactly the unsubscribe contract. Safe to call whether or not
+    * anything is running. */
   def cancelSketch(group: String): Unit =
     spark.sparkContext.cancelJobGroupAndFutureJobs(group)
 

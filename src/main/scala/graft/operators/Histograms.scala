@@ -96,7 +96,10 @@ object Histograms {
   /** Histogram + CDF in one result (DataWithCDFSketch): bucket counts
     * plus running cumulative sum. The window runs over O(#buckets) rows
     * post-aggregation — a driver-sized frame, not a data-sized one, so
-    * the single-partition window is safe at any scale.
+    * the single-partition window is safe at any scale. Collected through
+    * [[graft.engine.SketchExec]], the window runs on the driver over the
+    * merged histogram, as hillview's root sums the CDF, and the gesture
+    * is one Spark job.
     */
   def histogramWithCdf(df: DataFrame, bucket: Column): DataFrame =
     histogram1D(df, bucket).withColumn(

@@ -46,6 +46,32 @@ class ArtifactsSpec extends SparkSpec {
     assert(!l.exists && !new File(current).exists)
   }
 
+  test("shards of a superseded input set are superseded with it; " +
+      "one shard set remains after the grace window") {
+    val src = Artifacts.scratchDir("graft_art_docs").toString
+    spark.range(9).toDF("doc_id").write.parquet(s"$src/documents.parquet")
+    val in = lineage("spec_docs")
+    def serveInput(): String = in.serveSet("v1", src, "documents")(
+      Seq("documents.parquet" -> spark.read.parquet(s"$src/documents.parquet")))
+    def shardSet(input: String): File =
+      new File(graft.dedup.Dedup.ensureDocShards(spark, input, 3).head).getParentFile
+    val first = shardSet(serveInput())
+    new File(s"$src/documents.parquet").listFiles
+      .foreach(f => assert(f.setLastModified(f.lastModified + 5000)))
+    val input = serveInput()
+    val second = shardSet(input)
+    assert(second != first && second.getParentFile == first.getParentFile,
+      "a new input set must supersede the shard set in its own lineage")
+    new File(first, ".graft_superseded").setLastModified(System.currentTimeMillis() - 11 * 60 * 1000L)
+    assert(shardSet(input) == second)
+    val sets = Seq(first, second).map(_.getParentFile).distinct
+      .flatMap(_.listFiles).filter(_.getName.startsWith("set_"))
+    assert(sets.toSeq == Seq(second), sets.mkString(", "))
+    assert(ids(spark.read.parquet(s"$second/shard_1/documents.parquet")) == Seq(1L, 4L, 7L))
+    in.invalidate()
+    Artifacts.deleteRecursively(second.getParentFile)
+  }
+
   test("a crash between data write and marker: the previous publication " +
       "serves, and the next serve commits over the surviving slot") {
     import spark.implicits._

@@ -62,23 +62,32 @@ class LayoutSpec extends SparkSpec {
       s"$root: ${files.mkString(", ")}")
   }
 
-  test("only engine/Artifacts.scala names the artifact files and identity rules") {
+  /** Asserts that no file in `src/main/scala` but `owner` (relative to
+    * it) contains any of `names`. */
+  private def onlyOwnerNames(owner: String, names: Seq[String]): Unit = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
-    val owner = root.resolve("graft/engine/Artifacts.scala")
-    val names = Seq("_FINGERPRINT", "_PROVENANCE", "classStamp", "tableListing",
-      "lineageDir")
+    assert(java.nio.file.Files.isRegularFile(root.resolve(owner)), root.toAbsolutePath)
     val files = java.nio.file.Files.walk(root)
     val offenders =
       try files.iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") && p != owner)
+        .filter(p => p.toString.endsWith(".scala") && p != root.resolve(owner))
         .flatMap { p =>
           val src = java.nio.file.Files.readString(p)
           names.filter(src.contains).map(n => s"$p: $n")
         }.toList
       finally files.close()
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("only engine/Artifacts.scala names the artifact files and identity rules") {
+    onlyOwnerNames("graft/engine/Artifacts.scala",
+      Seq("_FINGERPRINT", "_PROVENANCE", "classStamp", "tableListing", "lineageDir"))
+  }
+
+  test("only the graftexec shim installs a task context or a task memory manager") {
+    onlyOwnerNames("org/apache/spark/sql/execution/graftexec.scala",
+      Seq("TaskContextImpl", "TaskContext.setTaskContext", "TaskMemoryManager"))
   }
 
   test("bucketed tables join without a shuffle") {

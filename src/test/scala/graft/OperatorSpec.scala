@@ -377,7 +377,7 @@ class OperatorSpec extends SparkSpec {
       li, Seq("l_orderkey"), 0.01).collect()) == 2 * n)
   }
 
-  test("a sketch gesture runs as one Spark job; a window over the aggregate falls back") {
+  test("a sketch gesture and a window over it run as one Spark job; a limit falls back") {
     import graft.engine.SketchExec
     import graft.streaming.Progressive
     val li = Tables.lineitem(spark, sf)
@@ -392,12 +392,17 @@ class OperatorSpec extends SparkSpec {
     var fracs = Vector.empty[Double]
     assert(jobCount(Progressive.groupedCount(buckets, "b", 4)(p => fracs :+= p.fractionDone)) == 1)
     assert(fracs == Vector(0.25, 0.5, 0.75, 1.0), fracs)
-    // histogramWithCdf puts a window over the aggregate: collected as it
-    // is (adaptive execution, more than one job), with the same rows
+    // histogramWithCdf puts a window over the aggregate: the driver
+    // evaluates it over the folded rows, in the same one job
     val hist = Histograms.histogramWithCdf(li, Histograms.numericBucket(col(c), 0.0, 110000.0, 22))
     var rows = Array.empty[org.apache.spark.sql.Row]
-    assert(jobCount { rows = SketchExec.collect(hist) } > 1)
+    assert(jobCount { rows = SketchExec.collect(hist) } == 1)
     assert(rows.toSet == hist.collect().toSet && rows.nonEmpty)
+    // nextK puts a limit over the aggregate: collected as it is
+    // (adaptive execution, more than one job), with the same rows
+    val next = NextK.nextK(li, Seq(NextK.Order("l_returnflag"), NextK.Order("l_linestatus")), 3)
+    assert(jobCount { rows = SketchExec.collect(next) } > 1)
+    assert(rows.toSeq == next.collect().toSeq && rows.nonEmpty)
   }
 
   test("set ops view algebra consistent with except/intersect") {

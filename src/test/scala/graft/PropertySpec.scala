@@ -2824,4 +2824,76 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  test("SketchExec's driver-side window tail equals collect(), in one job, and leaves no task context") {
+    import graft.engine.SketchExec
+    import graft.operators.Histograms
+    import graft.streaming.Progressive
+    import org.apache.spark.TaskContext
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types._
+    val sc = spark.sparkContext
+    val schema = StructType(Seq(StructField("k", DoubleType), StructField("v", DoubleType)))
+    val floats = Seq[Any](null, Double.NaN, 0.0, -0.0, 1.5, -1.5, 7.25)
+    val data = (0 until 300).map(i => Row(floats(i % 7), floats((i / 7) % 7)))
+    def canon(rows: Array[Row]): Seq[String] = rows.map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    // the Spark jobs `body` runs, counted by a fresh job group
+    def jobs(body: => Any): Int = {
+      val g = "window-tail-" + System.nanoTime()
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(g).length
+    }
+    def cdf(df: DataFrame) = Histograms.histogramWithCdf(df, Histograms.numericBucket(col("v"), -1.5, 7.25, 5))
+    def frames(df: DataFrame): Seq[DataFrame] = {
+      // k is a group key, so every window order below is total
+      val byK = df.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s"))
+      val w = Window.partitionBy(col("n") % 2).orderBy(col("k"))
+      Seq(
+        cdf(df), // null v lands in bucket -1
+        byK.withColumn("run", sum("n").over(Window.orderBy("k")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))),
+        byK.select(col("k"), col("n"), rank().over(w).as("r"), lag(col("s"), 1).over(w).as("prev")),
+        df.agg(count(lit(1)).as("n")).withColumn("c", sum("n").over(Window.orderBy("n"))))
+    }
+    for (parts <- Seq(1, 4, 200); rows <- Seq(data, Seq.empty[Row])) {
+      val df = spark.createDataFrame(sc.parallelize(rows, parts), schema)
+      frames(df).foreach { q =>
+        val want = q.collect()
+        var got = Array.empty[Row]
+        val ctx = s"parts=$parts rows=${rows.size} plan=${q.queryExecution.optimizedPlan.simpleString(5)}"
+        assert(jobs { got = SketchExec.collect(q) } == 1, ctx)
+        assert(canon(got) == canon(want), ctx)
+        assert(got.map(_.schema).distinct.toSeq == want.map(_.schema).distinct.toSeq, ctx)
+        assert(TaskContext.get() == null, ctx)
+      }
+      var fracs = Vector.empty[Double]
+      val fin = Progressive.run(cdf(df), 4)(p => fracs :+= p.fractionDone)
+      assert(canon(fin) == canon(cdf(df).collect()) && fracs == fracs.sorted && fracs.last == 1.0,
+        s"parts=$parts rows=${rows.size} $fracs")
+    }
+    // a tail that throws (a long sum that overflows) leaves no context
+    val overflow = spark.range(0, 8, 1, 2)
+      .select((col("id") % 4).as("k"), (lit(Long.MaxValue) - col("id")).as("x"))
+      .groupBy("k").agg(max("x").as("m"))
+      .withColumn("t", sum("m").over(Window.orderBy("k")))
+    assert(jobs(intercept[ArithmeticException](SketchExec.collect(overflow))) == 1)
+    assert(TaskContext.get() == null)
+    // nor does a collect cancelled mid-job
+    val slow = udf { (x: Long) => Thread.sleep(5); x % 3 }
+    val slowCdf = Histograms.histogramWithCdf(spark.range(0, 4000, 1, 4).toDF(), slow(col("id")))
+    val g = "window-tail-cancel"
+    val canceller = new Thread(() => {
+      val deadline = System.currentTimeMillis() + 60000
+      while (sc.statusTracker.getJobIdsForGroup(g).isEmpty && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      sc.cancelJobGroup(g)
+    })
+    sc.setJobGroup(g, g, interruptOnCancel = true)
+    canceller.start()
+    try intercept[Exception](SketchExec.collect(slowCdf)) finally sc.clearJobGroup()
+    canceller.join()
+    assert(TaskContext.get() == null)
+  }
 }
