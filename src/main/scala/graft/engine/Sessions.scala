@@ -104,11 +104,30 @@ object Sessions {
     * PREVIOUS pool assignment is restored on exit — nulling it would
     * silently drop an outer per-user pool after any nested use.
     */
-  def inPool[T](spark: SparkSession, pool: String)(body: => T): T = {
-    val prev = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
+  def inPool[T](spark: SparkSession, pool: String)(body: => T): T =
+    withLocal(spark, "spark.scheduler.pool" -> pool)(body)
+
+  /** Run `body`'s jobs in job group `group`, interrupted on cancel: the
+    * reference's subscription, which [[cancelGroup]] ends. The caller's
+    * previous group id, description and interrupt flag are restored on
+    * exit, by the same rule as [[inPool]]. */
+  def inGroup[T](spark: SparkSession, group: String)(body: => T): T =
+    withLocal(spark, "spark.jobGroup.id" -> group, "spark.job.description" -> s"graft:$group",
+      "spark.job.interruptOnCancel" -> "true")(body)
+
+  /** Unsubscribe (RemoteDataSet.java:285-296): cancel the group's active
+    * jobs and bar its future ones, so a gesture of several jobs (nextK's
+    * adaptive stages, a saturated heavy-hitters verify scan) cannot run
+    * its next job after the cancel. Safe whether or not anything runs. */
+  def cancelGroup(spark: SparkSession, group: String): Unit =
+    spark.sparkContext.cancelJobGroupAndFutureJobs(group)
+
+  private def withLocal[T](spark: SparkSession, props: (String, String)*)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = props.map { case (k, _) => k -> sc.getLocalProperty(k) }
+    props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     try body
-    finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", prev)
+    finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 }
 

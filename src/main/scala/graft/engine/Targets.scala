@@ -21,6 +21,12 @@ import scala.collection.mutable
   * [[Memo]], so gesture replay is a cache hit keyed by the canonicalized
   * optimized plan (stronger than the reference's operation-bytes key:
   * two textually different but plan-equal gestures share an entry).
+  *
+  * Unsubscribe (RemoteDataSet.java:285-296) is a job group: a gesture run
+  * as `Sessions.inGroup(spark, g)(reg.sketch(id)(agg))`, `nextK` included,
+  * is aborted mid-flight by `Sessions.cancelGroup(spark, g)`. The collect
+  * then throws, and as [[Memo]] records only a completed result, the next
+  * identical gesture computes afresh and from then on memo-hits.
   */
 class TargetRegistry(val spark: SparkSession) {
   import TargetRegistry.RowIdCol
@@ -275,52 +281,11 @@ class TargetRegistry(val spark: SparkSession) {
 
   // ── sketch gestures → memoized bounded results (runSketch) ──────────
   /** Generic sketch: any bounded-result aggregation of the target's
-    * frame, collected through the memo cache.
+    * frame, collected through the memo cache. Run it under
+    * `Sessions.inGroup` to make it cancellable.
     */
   def sketch(id: String)(agg: DataFrame => DataFrame): Array[Row] =
     Memo.collectMemoized(agg(get(id).df))
-
-  /** Cancellable sketch — the reference's unsubscribe semantics
-    * (RemoteDataSet.java:285-296: an unsubscribed observer sends a
-    * cancellation up to the server, which kills the running sketch).
-    * The gesture's Spark jobs run in `group` (interrupt-on-cancel), so
-    * a concurrent [[cancelSketch]] aborts them MID-FLIGHT: the collect
-    * throws, and because [[graft.streaming.Memo.collectMemoized]] only
-    * records a COMPLETED collect, a cancelled gesture can never poison
-    * the memo cache — the next identical gesture computes fresh,
-    * returns the exact result, and from then on memo-hits as if the
-    * abort never happened (spec-pinned in TargetsSpec). The previous
-    * job-group assignment is restored on exit, not nulled, for the
-    * same reason Sessions.inPool restores the outer pool.
-    */
-  def sketchIn(id: String, group: String)(
-      agg: DataFrame => DataFrame): Array[Row] = {
-    val sc = spark.sparkContext
-    val prevGroup = sc.getLocalProperty("spark.jobGroup.id")
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    val prevInterrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
-    sc.setJobGroup(group, s"sketch:$group", interruptOnCancel = true)
-    try sketch(id)(agg)
-    finally {
-      sc.setLocalProperty("spark.jobGroup.id", prevGroup)
-      sc.setLocalProperty("spark.job.description", prevDesc)
-      sc.setLocalProperty("spark.job.interruptOnCancel", prevInterrupt)
-    }
-  }
-
-  /** Abort a [[sketchIn]] group — the unsubscribe RPC. Cancels active
-    * jobs AND bars future ones in the group. A partial/final sketch,
-    * with any projections or windows over it (histogram+CDF), runs as
-    * one job ([[SketchExec]]), but other gestures still run several (a
-    * limit over the aggregate, as in nextK, is an adaptive collect of
-    * one job per query stage; a saturated heavy-hitters summary is
-    * followed by its verify scan), and a cancellation that lands
-    * between two of them must still abort, not silently run the rest
-    * to completion — group ids are per-gesture, so the permanent bar is
-    * exactly the unsubscribe contract. Safe to call whether or not
-    * anything is running. */
-  def cancelSketch(group: String): Unit =
-    spark.sparkContext.cancelJobGroupAndFutureJobs(group)
 
   /** Entry-point B's gesture (TableTarget.getNextK). */
   def nextK(id: String, order: Seq[NextK.Order], k: Int,

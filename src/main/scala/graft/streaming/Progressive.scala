@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.engine.SketchExec
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, OneRowRelation, Range => RangeRelation}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -12,53 +12,18 @@ import scala.collection.mutable
   * model (dataset/api/PartialResult.java, ParallelDataSet.java:133-173:
   * every sketch streams monotonically improving partials to the UI).
   *
-  * Spark translation: [[SketchExec]] runs the sketch frame's partial
-  * aggregate as one job, folds each finished partition's buffers into a
-  * running monoid state on the driver and emits a partial as the count
-  * of finished partitions crosses each of `steps` cuts. Each partition
-  * is read once, each partial is a correct result over the partitions
-  * done, and the last one equals the one-shot answer. Cancellation =
-  * cancelJobGroup.
+  * A sketch frame runs through [[Memo.collectMemoized]], the one path:
+  * a memo hit emits once, at fraction 1.0; a miss runs [[SketchExec]],
+  * which folds each finished partition's buffers into a running monoid
+  * state on the driver and emits at most `steps` partials, however many
+  * partitions there are. Each partition is read once, each partial is a
+  * correct result over the partitions done, and the last one equals the
+  * one-shot answer. A gesture is cancelled by running it under
+  * `Sessions.inGroup` and ending that group with `Sessions.cancelGroup`.
   */
 object Progressive {
 
   final case class Partial[T](fractionDone: Double, value: T)
-
-  /** Collect the aggregate frame `agg` progressively in job group
-    * `jobGroup` (interrupt on cancel): `emit` sees up to `steps` partials
-    * on the caller's thread, the last one at fraction 1.0 with the
-    * returned rows. */
-  def run(agg: DataFrame, steps: Int, jobGroup: String = "graft-progressive")(
-      emit: Partial[Array[Row]] => Unit): Array[Row] = {
-    val sc = agg.sparkSession.sparkContext
-    sc.setJobGroup(jobGroup, s"progressive in $steps steps", interruptOnCancel = true)
-    try SketchExec.progressive(agg, steps)((f, rows) => emit(Partial(f, rows)))
-    finally sc.clearJobGroup()
-  }
-
-  /** Time-bounded partial emission — the reference's latency contract
-    * (ParallelDataSet.java:133-173: partial results are BUNDLED and
-    * flushed at most once per bundling window, 300 ms by default, so a
-    * fast source cannot flood the consumer). `emit` fires for the first
-    * partial, then only when at least `bundleMs` has elapsed since the
-    * previous flush — except the FINAL partial, which always flushes so
-    * the consumer ends at fractionDone = 1 with the exact result. A slow
-    * consumer therefore sees O(runtime / bundleMs) callbacks regardless
-    * of partition count.
-    */
-  def runBundled(agg: DataFrame, steps: Int, bundleMs: Long = 300L,
-      jobGroup: String = "graft-progressive")(
-      emit: Partial[Array[Row]] => Unit): Array[Row] = {
-    var lastFlush = Long.MinValue
-    run(agg, steps, jobGroup) { p =>
-      val now = System.nanoTime()
-      if (p.fractionDone >= 1.0 || lastFlush == Long.MinValue ||
-          now - lastFlush >= bundleMs * 1000000L) {
-        emit(p)
-        lastFlush = now
-      }
-    }
-  }
 
   /** Progressive grouped count (the histogram shape) over any bucket
     * column — partials stream in as partitions complete, final result
@@ -67,21 +32,18 @@ object Progressive {
   def groupedCount(df: DataFrame, bucket: String, steps: Int)(
       emit: Partial[Map[Any, Long]] => Unit): Map[Any, Long] = {
     def counts(rows: Array[Row]) = rows.map(r => r.get(0) -> r.getLong(1)).toMap
-    counts(run(df.groupBy(bucket).count(), steps)(p => emit(Partial(p.fractionDone, counts(p.value)))))
+    counts(Memo.collectMemoized(df.groupBy(bucket).count(), steps)(p =>
+      emit(Partial(p.fractionDone, counts(p.value)))))
   }
-
-  /** Cancel a running progressive computation (RemoteDataSet
-    * unsubscribe → here Spark job-group cancellation).
-    */
-  def cancel(spark: SparkSession, group: String): Unit =
-    spark.sparkContext.cancelJobGroup(group)
 }
 
 /** Result memoization keyed by canonicalized plan plus the identity of
   * the data under each leaf (see [[Memo.fingerprint]]) — the Spark analog of
   * HillviewServer's MemoizedResults (dataset/remoting/HillviewServer
   * .java:105-120, MemoizedResults.java:31-90): repeated gestures over the
-  * same view hit the cache instead of the cluster.
+  * same view hit the cache instead of the cluster. Every sketch frame,
+  * one-shot or progressive, is collected by [[collectMemoized]], and only
+  * a completed result is recorded.
   */
 object Memo {
   private final case class Entry(rows: Array[org.apache.spark.sql.Row],
@@ -169,19 +131,36 @@ object Memo {
       64L + sample.map(rowBytes).sum / sample.length * rows.length
     }
 
-  def collectMemoized(df: DataFrame): Array[org.apache.spark.sql.Row] = {
-    val key = (if (enabled) this.key(df) else None) match {
-      case Some(k) => k
-      case None => return SketchExec.collect(df)
+  /** `df.collect()` in one step. */
+  def collectMemoized(df: DataFrame): Array[Row] = collectMemoized(df, 1)(_ => ())
+
+  /** Collect `df` through the cache. A hit emits its rows once, at
+    * fraction 1.0, and starts no job. A miss runs
+    * [[SketchExec.progressive]] in `steps` steps and records the result
+    * only when the run completes, so a cancelled or failed run leaves no
+    * entry and the next identical call computes afresh. */
+  def collectMemoized(df: DataFrame, steps: Int)(
+      emit: Progressive.Partial[Array[Row]] => Unit): Array[Row] = {
+    val key = if (enabled) this.key(df) else None
+    key.flatMap(lookup) match {
+      case Some(rows) =>
+        emit(Progressive.Partial(1.0, rows))
+        rows
+      case None =>
+        // OUTSIDE the lock: a slow job must not block hits
+        val r = SketchExec.progressive(df, steps)((f, rows) => emit(Progressive.Partial(f, rows)))
+        key.foreach(record(_, r))
+        r
     }
-    cache.synchronized {
-      cache.remove(key) match {
-        case Some(e) => // LRU touch: reinsert at the tail
-          cache.update(key, e); hitCount += 1; return e.rows
-        case None => ()
-      }
+  }
+
+  private def lookup(key: String): Option[Array[Row]] = cache.synchronized {
+    cache.remove(key).map { e => // LRU touch: reinsert at the tail
+      cache.update(key, e); hitCount += 1; e.rows
     }
-    val r = SketchExec.collect(df) // OUTSIDE the lock: a slow job must not block hits
+  }
+
+  private def record(key: String, r: Array[Row]): Unit = {
     val bytes = estimateBytes(r)
     cache.synchronized {
       // an entry alone bigger than the whole budget is not cached at
@@ -196,7 +175,6 @@ object Memo {
         }
       }
     }
-    r
   }
 
   def setEnabled(on: Boolean): Unit = enabled = on

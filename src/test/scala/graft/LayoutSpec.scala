@@ -90,6 +90,11 @@ class LayoutSpec extends SparkSpec {
       Seq("TaskContextImpl", "TaskContext.setTaskContext", "TaskMemoryManager"))
   }
 
+  test("only engine/Sessions.scala scopes and cancels job groups") {
+    onlyOwnerNames("graft/engine/Sessions.scala",
+      Seq("setJobGroup", "clearJobGroup", "cancelJobGroup", "spark.jobGroup.id"))
+  }
+
   test("bucketed tables join without a shuffle") {
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val o = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")

@@ -320,42 +320,6 @@ class OperatorSpec extends SparkSpec {
     assert(mg == exact)
   }
 
-  /** Feeds `on` the listener events of every job `body` runs. A marker
-    * job posted after `body` ends the wait, since the listener bus
-    * delivers in order; the marker's own events are not passed on. */
-  private def observe(body: => Any)(on: org.apache.spark.scheduler.SparkListenerEvent => Unit): Unit = {
-    import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val markerJob = new AtomicLong(-1L)
-    val done = new AtomicBoolean
-    val listener = new org.apache.spark.SparkFirehoseListener {
-      override def onEvent(e: SparkListenerEvent): Unit = e match {
-        case j: SparkListenerJobStart
-            if Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == "scan-gate") =>
-          markerJob.set(j.jobId)
-        case j: SparkListenerJobEnd if j.jobId == markerJob.get => done.set(true)
-        case _ if markerJob.get < 0 => on(e)
-        case _ => ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("scan-gate", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!done.get && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(done.get, "marker job never ended")
-    } finally sc.removeSparkListener(listener)
-  }
-
-  private def jobCount(body: => Any): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    observe(body) { case _: org.apache.spark.scheduler.SparkListenerJobStart => n.incrementAndGet(); case _ => () }
-    n.get
-  }
-
   test("heavy hitters MG reads its input once when the summary is exact, twice when saturated") {
     val li = Tables.lineitem(spark, sf)
     val n = li.count()
@@ -387,7 +351,9 @@ class OperatorSpec extends SparkSpec {
     // the exact summary's build is the one job; its result is a local relation
     assert(jobCount(SketchExec.collect(DistinctAndFrequency.heavyHittersMG(
       li, Seq("l_returnflag", "l_linestatus"), 0.05))) == 1)
-    // eight partitions in four steps: four partials, one job
+    // eight partitions in four steps: four partials, one job (a memo
+    // hit from an earlier identical frame would start none)
+    graft.streaming.Memo.clear()
     val buckets = spark.range(0, 4000, 1, 8).select((col("id") % 10).as("b"))
     var fracs = Vector.empty[Double]
     assert(jobCount(Progressive.groupedCount(buckets, "b", 4)(p => fracs :+= p.fractionDone)) == 1)

@@ -2776,7 +2776,6 @@ class PropertySpec extends SparkSpec {
   test("SketchExec equals collect() over partition counts, special floats and empty input") {
     import graft.engine.SketchExec
     import graft.functions.{HllSketch, MgTupleAgg}
-    import graft.streaming.Progressive
     import org.apache.spark.sql.{DataFrame, Row, graftshim}
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("k", DoubleType), StructField("s", StringType),
@@ -2813,7 +2812,7 @@ class PropertySpec extends SparkSpec {
         assert(got.map(canon).sorted.toSeq == want.map(canon).sorted.toSeq, ctx)
         assert(got.map(_.schema).distinct.toSeq == want.map(_.schema).distinct.toSeq, ctx)
         var fracs = Vector.empty[Double]
-        val fin = Progressive.run(q, 4)(p => fracs :+= p.fractionDone)
+        val fin = SketchExec.progressive(q, 4)((f, _) => fracs :+= f)
         assert(fin.map(canon).sorted.toSeq == want.map(canon).sorted.toSeq, ctx)
         assert(fracs == fracs.sorted && fracs.last == 1.0 && fracs.size <= 4, s"$ctx $fracs")
       }
@@ -2828,7 +2827,6 @@ class PropertySpec extends SparkSpec {
   test("SketchExec's driver-side window tail equals collect(), in one job, and leaves no task context") {
     import graft.engine.SketchExec
     import graft.operators.Histograms
-    import graft.streaming.Progressive
     import org.apache.spark.TaskContext
     import org.apache.spark.sql.{DataFrame, Row}
     import org.apache.spark.sql.expressions.Window
@@ -2869,7 +2867,7 @@ class PropertySpec extends SparkSpec {
         assert(TaskContext.get() == null, ctx)
       }
       var fracs = Vector.empty[Double]
-      val fin = Progressive.run(cdf(df), 4)(p => fracs :+= p.fractionDone)
+      val fin = SketchExec.progressive(cdf(df), 4)((f, _) => fracs :+= f)
       assert(canon(fin) == canon(cdf(df).collect()) && fracs == fracs.sorted && fracs.last == 1.0,
         s"parts=$parts rows=${rows.size} $fracs")
     }

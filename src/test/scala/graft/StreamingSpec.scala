@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.Tables
+import graft.engine.{Cluster, Sessions, Tables}
 import graft.multimodal.Multimodal
 import graft.streaming.{Events, Memo, Progressive}
 import org.apache.spark.sql.functions._
@@ -166,6 +166,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("incremental progressive: one pass, monotone partials, exact final") {
+    Memo.clear()
     val li = Tables.lineitem(spark, sf).repartition(8)
     val expected = li.groupBy("l_returnflag").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -189,11 +190,12 @@ class StreamingSpec extends SparkSpec {
     // — a visible convergence guarantee the UI can rely on — and the
     // final registers equal the one-shot batch sketch exactly.
     import org.apache.spark.sql.functions._
+    Memo.clear()
     val docs = Tables.documents(spark, sf).select("text").repartition(8)
     var ests = List.empty[Double]
     val p = 12
     val sk = docs.agg(graft.functions.HllSketch.hll_build(col("text"), p).as("sk"))
-    val finalRegs = Progressive.run(sk, 4) { part =>
+    val finalRegs = Memo.collectMemoized(sk, 4) { part =>
       ests ::= graft.functions.HllSketch.estimate(part.value.head.getAs[Array[Byte]](0))
     }.head.getAs[Array[Byte]](0)
     assert(ests.reverse == ests.reverse.sorted, s"partials not monotone: ${ests.reverse}")
@@ -201,22 +203,6 @@ class StreamingSpec extends SparkSpec {
       .agg(graft.functions.HllSketch.hll_build(col("text"), p).as("sk"))
       .head.getAs[Array[Byte]]("sk")
     assert(finalRegs.sameElements(batch), "progressive final != batch sketch")
-  }
-
-  test("bundled partials: wide window collapses to first+final flush; final exact") {
-    val li = Tables.lineitem(spark, sf).repartition(8)
-    var fracs = List.empty[Double]
-    val n = li.agg(count(lit(1)))
-    val fin = Progressive.runBundled(n, 8, bundleMs = 60000L)(p => fracs ::= p.fractionDone)
-    // first partial flushes immediately (the consumer sees progress
-    // start), intermediates bundle away, the final ALWAYS flushes exact
-    assert(fracs.length == 2, fracs)
-    assert(fracs.head == 1.0 && fracs.last < 1.0, fracs)
-    assert(fin.head.getLong(0) == li.count())
-    // bundleMs = 0 degrades to one flush per step (Progressive.run cadence)
-    var flushes = 0
-    Progressive.runBundled(n, 8, 0L)(_ => flushes += 1)
-    assert(flushes == 8, flushes)
   }
 
   test("progressive cancellation: cancelJobGroup mid-stream stops cleanly") {
@@ -230,11 +216,13 @@ class StreamingSpec extends SparkSpec {
     val group = "graft-progressive-cancel-spec"
     val nap = org.apache.spark.sql.functions.udf { (x: Int) => Thread.sleep(200); x }
     val fut = Future {
-      Progressive.run(slow.agg(org.apache.spark.sql.functions.sum(nap($"x"))), 8, group)(
-        _ => emitted += 1)
+      Sessions.inGroup(spark, group) {
+        Memo.collectMemoized(slow.agg(org.apache.spark.sql.functions.sum(nap($"x"))), 8)(
+          _ => emitted += 1)
+      }
     }
     Thread.sleep(700)
-    Progressive.cancel(spark, group)
+    Sessions.cancelGroup(spark, group)
     // the run surfaces the cancellation as an exception (unsubscribe
     // semantics: RemoteDataSet drops the subscription, work stops)
     intercept[Exception] { Await.result(fut, 60.seconds) }
@@ -249,6 +237,44 @@ class StreamingSpec extends SparkSpec {
     val q1 = Memo.collectMemoized(li.groupBy("l_returnflag").count())
     val q2 = Memo.collectMemoized(li.groupBy("l_returnflag").count())
     assert(Memo.size == 1 && q1.sameElements(q2))
+  }
+
+  test("memo with progression: a cancelled run records nothing, the next " +
+      "runs as one progressive job, the third memo-hits without a job") {
+    // eight one-row partitions; every row from partition 2 on waits at
+    // the gate, so the first partial (two partitions done) comes first
+    val gated = udf { (id: Long) =>
+      if (id >= 2) StreamingSpec.gate.await(60, java.util.concurrent.TimeUnit.SECONDS); id }
+    val df = spark.range(0, 8, 1, 8).select(gated(col("id")).as("id"))
+      .groupBy((col("id") % 3).as("b")).count()
+    Memo.clear()
+    val group = "spec-memo-progression"
+    intercept[Exception] {
+      Sessions.inGroup(spark, group) {
+        Memo.collectMemoized(df, 4)(_ => Sessions.cancelGroup(spark, group))
+      }
+    }
+    assert(Memo.size == 0, s"cancelled run left ${Memo.size} memo entries")
+    StreamingSpec.gate.countDown()
+    var fracs = Vector.empty[Double]
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobCount { rows = Memo.collectMemoized(df, 4)(p => fracs :+= p.fractionDone) } == 1)
+    assert(fracs == Vector(0.25, 0.5, 0.75, 1.0), fracs)
+    assert(rows.toSet == df.collect().toSet && rows.nonEmpty)
+    assert(Memo.size == 1)
+    var hits = Vector.empty[Progressive.Partial[Array[org.apache.spark.sql.Row]]]
+    val h0 = Memo.hits
+    assert(jobCount(Memo.collectMemoized(df, 4)(hits :+= _)) == 0)
+    assert(hits.map(_.fractionDone) == Vector(1.0) && hits.head.value.toSet == rows.toSet)
+    assert(Memo.hits == h0 + 1)
+    Memo.clear()
+    Cluster.setMemoization(false)
+    try {
+      fracs = Vector.empty
+      Memo.collectMemoized(df, 4)(p => fracs :+= p.fractionDone)
+      assert(fracs == Vector(0.25, 0.5, 0.75, 1.0), fracs)
+      assert(Memo.size == 0, "disabled memo recorded an entry")
+    } finally Cluster.setMemoization(true)
   }
 
   test("multimodal pipeline: real decoded features + chunk sampling") {
@@ -1481,4 +1507,10 @@ class StreamingSpec extends SparkSpec {
     }
     assert(got.last == Set((1L, "a2"), (2L, "b2"), (9L, "new")))
   }
+}
+
+object StreamingSpec {
+  /** Holds the gated rows of the memo-with-progression spec; tasks of a
+    * local master share the driver JVM, so they see the same latch. */
+  val gate = new java.util.concurrent.CountDownLatch(1)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{Tables, TargetRegistry}
+import graft.engine.{Sessions, Tables, TargetRegistry}
 import graft.operators.{Histograms, NextK, Stats}
 import graft.operators.NextK.{AggSpec, Order, SumAgg}
 import graft.streaming.Memo
@@ -48,7 +48,7 @@ class TargetsSpec extends SparkSpec {
       df.select(sum(slow(col("text"))).as("n"))
     Memo.clear()
     val group = "spec-unsubscribe"
-    val running = Future(reg.sketchIn(docsId, group)(slowAgg))
+    val running = Future(Sessions.inGroup(spark, group)(reg.sketch(docsId)(slowAgg)))
     // wait until the gesture's jobs are actually active, then unsubscribe
     val tracker = spark.sparkContext.statusTracker
     val deadline = System.currentTimeMillis() + 60000
@@ -57,7 +57,7 @@ class TargetsSpec extends SparkSpec {
     assert(!running.isCompleted,
       s"slow sketch finished/failed before the abort: ${running.value}")
     assert(tracker.getJobIdsForGroup(group).nonEmpty, "sketch never started")
-    reg.cancelSketch(group)
+    Sessions.cancelGroup(spark, group)
     val aborted = intercept[Exception] { Await.result(running, 120.seconds) }
     assert(aborted.getMessage != null)
     // memo not poisoned: the aborted gesture recorded NOTHING
@@ -106,6 +106,29 @@ class TargetsSpec extends SparkSpec {
       assert(sc.getLocalProperty("spark.scheduler.pool") == "userA")
     }
     assert(sc.getLocalProperty("spark.scheduler.pool") == null)
+  }
+
+  test("nested inGroup restores the outer group on exit; a cancelled inner " +
+      "group leaves the outer one running") {
+    val sc = spark.sparkContext
+    val props = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    def current = props.map(sc.getLocalProperty)
+    val before = current
+    Sessions.inGroup(spark, "spec-outer") {
+      val outer = current
+      assert(outer.head == "spec-outer")
+      Sessions.inGroup(spark, "spec-inner") {
+        assert(sc.getLocalProperty("spark.jobGroup.id") == "spec-inner")
+        Sessions.cancelGroup(spark, "spec-inner")
+      }
+      // clearing instead of restoring would drop the outer group, its
+      // description and its interrupt flag for the rest of the thread
+      assert(current == outer)
+      assert(spark.range(0, 10, 1, 2).count() == 10)
+      assert(sc.statusTracker.getJobIdsForGroup("spec-outer").nonEmpty,
+        "the later job did not run in the outer group")
+    }
+    assert(current == before)
   }
 
   test("Entry-B chain: load → filter → getNextK, replay hits the memo") {
