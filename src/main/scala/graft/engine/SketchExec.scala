@@ -5,10 +5,10 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, InterpretedOrdering, MutableProjection, NamedExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, InterpretedOrdering, MutableProjection, NamedExpression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Final, Partial, PartialMerge}
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
-import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec, graftexec}
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SortExec, SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec, graftexec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortBasedAggregationIterator}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.{WindowEvaluatorFactory, WindowExec}
@@ -28,9 +28,20 @@ import scala.collection.mutable
   * second job, are never run. The tail runs on the driver over the final
   * rows, as hillview's root finishes a histogram's CDF: a window sorts
   * them by its own required order and evaluates with Spark's window
-  * evaluator, so the sort and exchange planned below it are skipped. The
-  * result equals `df.collect()` as a multiset of rows with the same
-  * schema. A plan of any other shape is collected as it is.
+  * evaluator, so the sort and exchange planned below it are skipped.
+  *
+  * A limit whose order is the grouping keys' (hillview's NextKSketch, SURVEY
+  * §2.5) may sit on top of the final aggregate. No two groups tie under
+  * such an order, so a group is among the K first overall only if it is
+  * among the K first of every partition that holds it: each task returns
+  * only the buffer rows of its partition's K smallest keys, the driver
+  * keeps the K smallest after each fold, and driver state is O(K). The
+  * limit then sorts, takes and projects the final rows on the driver.
+  *
+  * The result equals `df.collect()` with the same schema: as a multiset
+  * of rows, and row for row in order under a limit. A plan of any other
+  * shape (a limit ordered by an aggregate value, with an offset, or over
+  * anything but the aggregate) is collected as it is.
   */
 object SketchExec {
 
@@ -59,10 +70,11 @@ object SketchExec {
     }
   }
 
-  /** `tail` holds the projections and windows above `fin`, outermost
-    * first. */
+  /** `tail` holds the steps above `fin`, outermost first. `first` is set
+    * when the tail is a limit ordered by the grouping keys: its count and
+    * that order, on the keys themselves. */
   private final case class Shape(tail: Seq[SparkPlan], fin: BaseAggregateExec,
-      side: SparkPlan)
+      side: SparkPlan, first: Option[(Int, Seq[SortOrder])] = None)
 
   private def unwrap(p: SparkPlan): SparkPlan = p match {
     case w: WholeStageCodegenExec => unwrap(w.child)
@@ -78,6 +90,11 @@ object SketchExec {
       split(p.child, prepared).map(s => s.copy(tail = p +: s.tail))
     case w: WindowExec if w.subqueries.isEmpty =>
       split(belowWindow(w.child), prepared).map(s => s.copy(tail = w +: s.tail))
+    case t: TakeOrderedAndProjectExec if t.offset == 0 && t.subqueries.isEmpty =>
+      for {
+        s <- split(t.child, prepared) if s.tail.isEmpty
+        order <- keyOrder(t.sortOrder, s.fin)
+      } yield s.copy(tail = Seq(t), first = Some((t.limit, order)))
     case f: BaseAggregateExec if f.requiredChildDistributionExpressions.isDefined &&
         f.aggregateExpressions.forall(_.mode == Final) && f.subqueries.isEmpty &&
         f.groupingExpressions.forall(g => UnsafeRowUtils.isBinaryStable(g.dataType)) =>
@@ -87,6 +104,45 @@ object SketchExec {
       }
       side.collect { case s if isPartial(unwrap(s)) => Shape(Nil, f, s) }
     case _ => None
+  }
+
+  // A limit's order moved onto the grouping keys, when each of its
+  // expressions is a key and every key is among them.
+  private def keyOrder(order: Seq[SortOrder], fin: BaseAggregateExec): Option[Seq[SortOrder]] = {
+    val keys = fin.groupingExpressions.map(_.toAttribute)
+    val named = fin.resultExpressions.map(e => e.exprId -> e).toMap
+    def key(e: Expression): Option[Attribute] = e match {
+      case a: Attribute => named.get(a.exprId).map {
+        case Alias(c, _) => c
+        case n => n
+      }.collect { case k: Attribute if keys.exists(_.semanticEquals(k)) => k }
+      case _ => None
+    }
+    val onKeys = order.flatMap(o => key(o.child).map(k => o.copy(child = k, sameOrderExpressions = Nil)))
+    Some(onKeys).filter(o => o.size == order.size &&
+      keys.forall(k => o.exists(_.child.semanticEquals(k))))
+  }
+
+  /** The rows whose keys are among the `k` smallest under `order`, in
+    * that order, copied; rows of one key all stay, as a partial
+    * aggregate may emit a key more than once. O(n log k). */
+  private[graft] def smallest(rows: Iterator[InternalRow], k: Int,
+      order: Ordering[InternalRow]): Array[InternalRow] = {
+    val kept = new java.util.TreeMap[InternalRow, mutable.ArrayBuffer[InternalRow]](order)
+    rows.foreach { r =>
+      if (kept.size < k || (k > 0 && order.lteq(r, kept.lastKey))) {
+        val c = r.copy()
+        val same = kept.get(c)
+        if (same != null) same += c
+        else {
+          kept.put(c, mutable.ArrayBuffer(c))
+          if (kept.size > k) kept.pollLastEntry()
+        }
+      }
+    }
+    val out = mutable.ArrayBuffer.empty[InternalRow]
+    kept.values.forEach(out ++= _)
+    out.toArray
   }
 
   // what a window's input is sorted and moved by; the driver sorts itself
@@ -118,8 +174,7 @@ object SketchExec {
     val arrived = new LinkedBlockingQueue[Array[InternalRow]]()
     // the result handler runs on the scheduler's event thread: it only
     // hands the buffers over, and the fold runs here
-    val job = df.sparkSession.sparkContext.submitJob(rdd,
-      (it: Iterator[InternalRow]) => it.map(_.copy()).toArray, 0 until n,
+    val job = df.sparkSession.sparkContext.submitJob(rdd, fold.keep, 0 until n,
       (_: Int, rows: Array[InternalRow]) => arrived.put(rows), ())
     try {
       var done = 0
@@ -137,9 +192,10 @@ object SketchExec {
   }
 
   /** The aggregate's state on the driver: one partial-format buffer row
-    * per group, folded by `SortBasedAggregationIterator`, and the tail
-    * that turns it into result rows. The mutable projections the merge
-    * asks for, and the tail's steps, are built once per fold; only the
+    * per group (per group among the K first under a key-ordered limit),
+    * folded by `SortBasedAggregationIterator`, and the tail that turns it
+    * into result rows. The mutable projections the merge asks for, the
+    * key order and the tail's steps are built once per fold; only the
     * iterator's own key and output projections are built per partition. */
   private final class Fold(s: Shape, sc: SparkContext) {
     private val fin = s.fin
@@ -153,6 +209,17 @@ object SketchExec {
     private val merging = fin.aggregateExpressions.map(_.copy(mode = PartialMerge))
     private val projections = mutable.HashMap.empty[(Seq[Expression], Seq[Attribute]), MutableProjection]
     private var state = Array.empty[InternalRow]
+
+    /** What a task returns of its partition's buffer rows, and what the
+      * state keeps after a fold: every row, or under a key-ordered limit
+      * the rows of the K smallest keys. It captures no fold, as tasks
+      * run it. */
+    val keep: Iterator[InternalRow] => Array[InternalRow] = s.first match {
+      case Some((k, order)) =>
+        val onBuffers = new InterpretedOrdering(order, input)
+        rows => smallest(rows, k, onBuffers)
+      case None => rows => rows.map(_.copy()).toArray
+    }
 
     private def aggregate(rows: Iterator[InternalRow], aggs: Seq[AggregateExpression],
         out: Seq[NamedExpression]) =
@@ -168,13 +235,14 @@ object SketchExec {
       (state.iterator ++ rows.iterator).foreach { r =>
         groups.getOrElseUpdate(keys(r).copy(), mutable.ArrayBuffer.empty) += r
       }
-      state = aggregate(groups.valuesIterator.flatMap(_.iterator), merging,
-        fin.groupingExpressions.map(_.toAttribute)).map(_.copy()).toArray
+      state = keep(aggregate(groups.valuesIterator.flatMap(_.iterator), merging,
+        fin.groupingExpressions.map(_.toAttribute)))
     }
 
     // the tail, innermost step first: a projection maps each row; a
     // window sorts the rows by its required order and evaluates them as
-    // one task's partition on the caller's thread
+    // one task's partition on the caller's thread; a limit sorts, takes
+    // and projects
     private val tail: Seq[Array[InternalRow] => Array[InternalRow]] = s.tail.reverse.map {
       case p: ProjectExec =>
         val proj = UnsafeProjection.create(p.projectList, p.child.output)
@@ -188,6 +256,13 @@ object SketchExec {
           w.orderSpec, w.child.output, w.longMetric("spillSize"))
         (in: Array[InternalRow]) => graftexec.onDriverTask(sc) {
           window.createEvaluator().eval(0, in.sorted(order).iterator).map(_.copy()).toArray
+        }
+      case t: TakeOrderedAndProjectExec =>
+        val order = new InterpretedOrdering(t.sortOrder, t.child.output)
+        val proj = UnsafeProjection.create(t.projectList, t.child.output)
+        (in: Array[InternalRow]) => {
+          proj.initialize(0)
+          in.sorted(order).take(t.limit).map(r => proj(r).copy())
         }
     }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.engine.SketchExec
 import graft.functions.MgTupleAgg
+import graft.streaming.Memo
 import org.apache.spark.sql.{Column, DataFrame, graftshim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, CreateStruct,
@@ -72,7 +72,8 @@ object DistinctAndFrequency {
     * (MGFreqKSketch → ExactFreqSketch, web RPC `checkHeavy`). One
     * aggregation runs the tuple-keyed MG summary ([[MgTupleAgg]],
     * bounded state per partition, merged like any sketch) beside the
-    * exact row count n, as one Spark job ([[SketchExec]]). When the
+    * exact row count n, as one Spark job collected through [[Memo]], so
+    * a replayed gesture finds the summary there and scans nothing. When the
     * summary's counts sum to n, no counter was ever cut, so the summary IS the exact frequency table: the
     * result is built on the driver from its ≤cap entries, with no second
     * scan, and collecting it starts no Spark job. Only a saturated
@@ -93,7 +94,7 @@ object DistinctAndFrequency {
           "whose equal values can differ in bytes; cast it to a binary-stable type")
     }
     val mg = MgTupleAgg(keyAttrs, cap).toAggregateExpression()
-    val summary = SketchExec.collect(keys.agg(graftshim.exprToColumn(mg), count(lit(1)))).head
+    val summary = Memo.collectMemoized(keys.agg(graftshim.exprToColumn(mg), count(lit(1)))).head
     val entries = MgTupleAgg.decode(summary.getAs[Array[Byte]](0), cols.size)
     val n = summary.getLong(1)
     val minCnt = math.ceil(epsilon * n).toLong

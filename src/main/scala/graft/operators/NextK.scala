@@ -10,10 +10,14 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape: filter(seek) → groupBy(sortCols) → agg → orderBy →
   * limit K. Catalyst plans partial+final HashAggregate (the monoid merge
-  * of the reference) and TakeOrderedAndProject (distributed top-K: only K
-  * rows per partition reach the driver — exactly the bounded-result
-  * property hillview's paper §7.1 credits for beating a naive Spark
-  * baseline). No full sort ever materializes, at any scale.
+  * of the reference) under a TakeOrderedAndProject. A plain `collect()`
+  * shuffles every partial group to the final aggregate and takes K
+  * there. Collected through [[graft.engine.SketchExec]] (as every
+  * gesture is, via `Memo`), the order is the grouping keys', so the
+  * frame runs as one job with no exchange: each partition returns only
+  * the buffers of its K smallest keys and the driver keeps the K
+  * smallest — the bounded result hillview's paper §7.1 credits for
+  * beating a naive Spark baseline. No full sort ever materializes.
   */
 object NextK {
 

@@ -321,6 +321,8 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("heavy hitters MG reads its input once when the summary is exact, twice when saturated") {
+    // an earlier identical summary would be served by the memo
+    graft.streaming.Memo.clear()
     val li = Tables.lineitem(spark, sf)
     val n = li.count()
     // input records over every task `body` runs
@@ -344,6 +346,8 @@ class OperatorSpec extends SparkSpec {
   test("a sketch gesture and a window over it run as one Spark job; a limit falls back") {
     import graft.engine.SketchExec
     import graft.streaming.Progressive
+    // a memo hit from an earlier identical frame would start no job
+    graft.streaming.Memo.clear()
     val li = Tables.lineitem(spark, sf)
     val c = "l_extendedprice"
     assert(jobCount(SketchExec.collect(Stats.dataRange(li, c))) == 1)
@@ -351,9 +355,7 @@ class OperatorSpec extends SparkSpec {
     // the exact summary's build is the one job; its result is a local relation
     assert(jobCount(SketchExec.collect(DistinctAndFrequency.heavyHittersMG(
       li, Seq("l_returnflag", "l_linestatus"), 0.05))) == 1)
-    // eight partitions in four steps: four partials, one job (a memo
-    // hit from an earlier identical frame would start none)
-    graft.streaming.Memo.clear()
+    // eight partitions in four steps: four partials, one job
     val buckets = spark.range(0, 4000, 1, 8).select((col("id") % 10).as("b"))
     var fracs = Vector.empty[Double]
     assert(jobCount(Progressive.groupedCount(buckets, "b", 4)(p => fracs :+= p.fractionDone)) == 1)
@@ -364,11 +366,28 @@ class OperatorSpec extends SparkSpec {
     var rows = Array.empty[org.apache.spark.sql.Row]
     assert(jobCount { rows = SketchExec.collect(hist) } == 1)
     assert(rows.toSet == hist.collect().toSet && rows.nonEmpty)
-    // nextK puts a limit over the aggregate: collected as it is
+    // nextK puts a limit ordered by the grouping keys over the aggregate:
+    // each task returns its K first keys' buffers, in one job that
+    // shuffles nothing, and the driver takes the K first
+    val order = Seq(NextK.Order("l_returnflag"), NextK.Order("l_linestatus"))
+    for (pivot <- Seq(None, Some(Seq[Any]("N", "F")))) {
+      val next = NextK.nextK(li, order, 3, pivot)
+      val jobs, shuffled = new java.util.concurrent.atomic.AtomicLong
+      observe { rows = SketchExec.collect(next) } {
+        case _: org.apache.spark.scheduler.SparkListenerJobStart => jobs.incrementAndGet()
+        case e: org.apache.spark.scheduler.SparkListenerTaskEnd if e.taskMetrics != null =>
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        case _ => ()
+      }
+      assert(jobs.get == 1 && shuffled.get == 0, s"pivot=$pivot")
+      assert(rows.toSeq == next.collect().toSeq && rows.nonEmpty, s"pivot=$pivot")
+    }
+    // a limit ordered by an aggregate value is collected as it is
     // (adaptive execution, more than one job), with the same rows
-    val next = NextK.nextK(li, Seq(NextK.Order("l_returnflag"), NextK.Order("l_linestatus")), 3)
-    assert(jobCount { rows = SketchExec.collect(next) } > 1)
-    assert(rows.toSeq == next.collect().toSeq && rows.nonEmpty)
+    val top = li.groupBy("l_returnflag").count()
+      .orderBy(desc("count"), col("l_returnflag")).limit(2)
+    assert(jobCount { rows = SketchExec.collect(top) } > 1)
+    assert(rows.toSeq == top.collect().toSeq && rows.nonEmpty)
   }
 
   test("set ops view algebra consistent with except/intersect") {

@@ -2894,4 +2894,79 @@ class PropertySpec extends SparkSpec {
     canceller.join()
     assert(TaskContext.get() == null)
   }
+
+  test("SketchExec's top-K tail equals collect()") {
+    import graft.engine.SketchExec
+    import graft.operators.NextK
+    import graft.operators.NextK.{AggSpec, AvgAgg, MaxAgg, MinAgg, Order, SumAgg}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
+      InterpretedOrdering, NullsFirst, NullsLast, SortOrder}
+    import org.apache.spark.sql.types._
+    val sc = spark.sparkContext
+    val schema = StructType(Seq(StructField("k", DoubleType), StructField("s", StringType),
+      StructField("v", DoubleType), StructField("m", DoubleType)))
+    val floats = Gen.oneOf[Any](null, Double.NaN, 0.0, -0.0, 1.5, -1.5, 7.25)
+    // about as many (k, s) pairs as rows, so a partition holds few of
+    // them: its first values of one key alone are not its first groups
+    val rowGen = for {
+      k <- floats
+      s <- Gen.oneOf[Any](null +: ('a' to 'x').map(_.toString))
+      v <- Gen.frequency(1 -> Gen.const[Any](null), 5 -> Gen.chooseNum(-50000, 50000).map(_ / 100.0))
+      m <- floats
+    } yield Row(k, s, v, m)
+    val aggs = Seq(AggSpec(SumAgg, "v", "sum_v"), AggSpec(AvgAgg, "v", "avg_v"),
+      AggSpec(MinAgg, "m", "min_m"), AggSpec(MaxAgg, "m", "max_m"))
+    val orders = for (ak <- Seq(true, false); as <- Seq(true, false); kFirst <- Seq(true, false))
+      yield if (kFirst) Seq(Order("k", ak), Order("s", as)) else Seq(Order("s", as), Order("k", ak))
+    val data = samples(Gen.listOfN(240, rowGen), 1).head
+    for (parts <- Seq(1, 3, 8)) {
+      val df = spark.createDataFrame(sc.parallelize(data, parts), schema)
+      val groups = df.select("k", "s").distinct().count().toInt
+      for (order <- orders; k <- Seq(1, 3, groups, groups + 5)) {
+        val q = NextK.nextK(df, order, k, aggs = aggs)
+        val want = q.collect()
+        var got = Array.empty[Row]
+        val ctx = s"parts=$parts order=$order k=$k"
+        assert(jobCount { got = SketchExec.collect(q) } == 1, ctx)
+        assert(got.toSeq == want.toSeq, ctx)
+        assert(got.map(_.schema).distinct.toSeq == want.map(_.schema).distinct.toSeq, ctx)
+        var last = Array.empty[Row]
+        var fracs = Vector.empty[Double]
+        SketchExec.progressive(q, 3) { (f, rows) => fracs :+= f; last = rows }
+        assert(last.toSeq == want.toSeq && fracs.last == 1.0, s"$ctx $fracs")
+      }
+      // an order led by an aggregate value, or one that leaves a key out,
+      // is no key order: collected as it is (adaptive, more than one job)
+      val counts = df.groupBy("k", "s").count()
+      val byCount = counts.orderBy(col("count").desc, col("k").asc_nulls_last,
+        col("s").asc_nulls_last).limit(3)
+      var got = Array.empty[Row]
+      assert(jobCount { got = SketchExec.collect(byCount) } > 1, s"parts=$parts")
+      assert(got.toSeq == byCount.collect().toSeq, s"parts=$parts")
+      assert(jobCount(SketchExec.collect(counts.orderBy(col("k").asc_nulls_last).limit(3))) > 1,
+        s"parts=$parts")
+    }
+    // Spark's partial aggregates here emit each key once per partition,
+    // but one that spills or skips partial aggregation need not: the
+    // per-partition cut keeps every row of its k smallest keys, on rows
+    // that repeat keys
+    samples(Gen.listOfN(60, Gen.zip(Gen.option(Gen.chooseNum(0, 9)), Gen.chooseNum(0L, 99L))), 20)
+      .zipWithIndex.foreach { case (pairs, i) =>
+        val rows = pairs.map { case (key, x) => InternalRow(key.map(Int.box).orNull, x) }
+        val asc = i % 2 == 0
+        val order = new InterpretedOrdering(Seq(SortOrder(BoundReference(0, IntegerType, nullable = true),
+          if (asc) Ascending else Descending, if (asc) NullsLast else NullsFirst, Nil)))
+        for (k <- Seq(0, 1, 3, 11)) {
+          val firstKeys = rows.sorted(order).map(_.get(0, IntegerType)).distinct.take(k).toSet
+          val got = SketchExec.smallest(rows.iterator, k, order)
+          def pairsOf(rs: Seq[InternalRow]) =
+            rs.map(r => (Option(r.get(0, IntegerType)), r.getLong(1))).sortBy(_.toString)
+          assert(pairsOf(got.toSeq) == pairsOf(rows.filter(r => firstKeys(r.get(0, IntegerType)))),
+            s"sample=$i k=$k")
+          assert(got.toSeq == got.toSeq.sorted(order), s"sample=$i k=$k")
+        }
+      }
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.engine.{Sessions, Tables, TargetRegistry}
-import graft.operators.{Histograms, NextK, Stats}
+import graft.operators.{DistinctAndFrequency, Histograms, NextK, Stats}
 import graft.operators.NextK.{AggSpec, Order, SumAgg}
 import graft.streaming.Memo
 import org.apache.spark.sql.functions._
@@ -174,6 +174,21 @@ class TargetsSpec extends SparkSpec {
     reg.histogramCdf(inRange.id, bucket)
     reg.dataRange(root.id, "l_extendedprice")
     assert(Memo.hits == hitsBefore + 2)
+  }
+
+  test("an identical heavy-hitters replay starts no Spark job, exact or saturated") {
+    Memo.clear()
+    val reg = new TargetRegistry(spark)
+    val root = reg.loadTable(sf, "lineitem")
+    // three (returnflag, linestatus) keys under cap 40: the summary is
+    // the answer; far more orderkeys than cap 200: a verify scan follows
+    for ((cols, eps) <- Seq((Seq("l_returnflag", "l_linestatus"), 0.05), (Seq("l_orderkey"), 0.01))) {
+      def gesture() = reg.sketch(root.id)(DistinctAndFrequency.heavyHittersMG(_, cols, eps))
+      var first, replay = Array.empty[org.apache.spark.sql.Row]
+      assert(jobCount { first = gesture() } >= 1, cols)
+      assert(jobCount { replay = gesture() } == 0, cols)
+      assert(replay.toSeq == first.toSeq, cols)
+    }
   }
 
   test("a repeated gesture shape with new literals compiles no new code") {
